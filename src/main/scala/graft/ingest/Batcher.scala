@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 
 /** S6–S10: count-based tumbling batch windows (reference
   * consumer/consumer.py:37-94): buffer the stream, emit one batch per
@@ -23,8 +23,9 @@ import org.apache.spark.sql.types.StructType
   *      shuffle — arrival order is partition-major, exactly the reference's
   *      "order the consumer happened to see".
   *   3. [[streamBatches]] — the streaming form: foreachBatch + a running
-  *      row-count offset (the consumer's buffer counter), AvailableNow
-  *      trigger = the reference's drain-then-stop idle timeout.
+  *      row-count offset (the consumer's buffer counter), one staging
+  *      write per micro-batch, AvailableNow trigger = the reference's
+  *      drain-then-stop idle timeout.
   */
 object Batcher {
 
@@ -119,6 +120,19 @@ object Batcher {
     * end-of-stream flush); rows past the cap are always discarded
     * (consumer.py:60,80-82).
     *
+    * Staging a micro-batch costs ONE Spark job: the staging write itself
+    * assigns `seq` = per-partition base + partition-local arrival index
+    * and counts its rows through an [[org.apache.spark.sql.Observation]].
+    * A micro-batch with more than one input partition first runs a
+    * per-partition count job to learn the bases; a one-partition
+    * micro-batch (one topic file per trigger) needs no count. Nothing is
+    * persisted: foreachBatch hands over a fixed RDD over a replayable
+    * source, so the count and the write read the same partitions, and the
+    * write's observed row count and per-partition ranges are checked
+    * against the count. A source that reads differently a second time
+    * fails the micro-batch (its staged dir is removed) instead of leaving
+    * `seq` gaps or collisions.
+    *
     * The sink is IDEMPOTENT per micro-batch: each batchId writes its own
     * subdirectory with overwrite semantics, so a checkpoint replay after a
     * crash between the staging write and the offset commit re-writes the
@@ -135,6 +149,10 @@ object Batcher {
     import org.apache.hadoop.fs.Path
     val hconf = spark.sparkContext.hadoopConfiguration
     val stagingPath = new Path(stagingDir)
+    // explicit schemas: no schema-inference job on any read below
+    val stagedSchema = schema.add("seq", LongType)
+    def readStaged(paths: Seq[String]): DataFrame =
+      spark.read.schema(stagedSchema).parquet(paths: _*)
     // committed (= _SUCCESS-marked) staged micro-batches, by batchId
     def committed(): Seq[(Long, Path)] = {
       val fs = stagingPath.getFileSystem(hconf)
@@ -158,41 +176,35 @@ object Batcher {
         val fs = stagingPath.getFileSystem(hconf)
         if (!recovered) {
           committed().filter(_._1 < bid).foreach { case (id, p) =>
-            counts(id) = spark.read.parquet(p.toString).count()
+            counts(id) = readStaged(Seq(p.toString)).count()
           }
           recovered = true
         }
         val dir = new Path(stagingPath, s"mb=$bid")
-        if (fs.exists(new Path(dir, "_SUCCESS"))) {
-          // replayed batch already fully staged: no-op (keep its count)
-          counts(bid) = spark.read.parquet(dir.toString).count()
-        } else {
-          // seq base = rows committed before this batchId; overwrite makes
-          // a partial dir from a mid-write crash harmless on replay
-          val base = counts.view.filterKeys(_ < bid).values.sum
-          val res = assignBatchesArrivalOrder(mb, batchSize = Int.MaxValue,
-            maxBatches = 1)
-          res.batches
-            .withColumn("seq", col("seq") + base)
-            .drop("batch_id")
-            .write.mode("overwrite").parquet(dir.toString)
-          counts(bid) = res.totalRows
-          res.cleanup()
-        }
+        counts(bid) =
+          if (fs.exists(new Path(dir, "_SUCCESS")))
+            // replayed batch already fully staged: no-op (keep its count)
+            readStaged(Seq(dir.toString)).count()
+          else
+            // seq base = rows committed before this batchId; overwrite makes
+            // a partial dir from a mid-write crash harmless on replay
+            stageMicroBatch(mb, counts.view.filterKeys(_ < bid).values.sum, dir, fs)
         (): Unit
       }
       .start()
     graft.streaming.StreamQueries.awaitBounded(spark, query, "count_batcher")
 
-    val stagedDirs = committed().map(_._2.toString)
-    // derive from the committed dirs, not the in-memory map: a restart that
-    // drains zero new micro-batches never fires foreachBatch (parquet
-    // count() is footer-metadata only — cheap at any scale)
-    val rowsSeen =
-      if (stagedDirs.isEmpty) 0L else spark.read.parquet(stagedDirs: _*).count()
+    val stagedDirs = committed()
+    // rows seen = the counts this drain staged or recovered, plus a count
+    // of the committed dirs it never touched (a restart that drains zero
+    // new micro-batches never fires foreachBatch)
+    val untouched = stagedDirs.collect { case (id, p) if !counts.contains(id) => p.toString }
+    val rowsSeen = stagedDirs.flatMap { case (id, _) => counts.get(id) }.sum +
+      (if (untouched.isEmpty) 0L else readStaged(untouched).count())
     val staged =
-      (if (stagedDirs.isEmpty) spark.emptyDataFrame.withColumn("seq", lit(0L))
-       else spark.read.parquet(stagedDirs: _*))
+      (if (stagedDirs.isEmpty) spark.createDataFrame(
+         java.util.List.of[Row](), stagedSchema)
+       else readStaged(stagedDirs.map(_._2.toString)))
         .withColumn("batch_id", (col("seq") / batchSize).cast("int"))
     val capped = staged.filter(col("batch_id") < maxBatches)
     val fullOnly =
@@ -204,10 +216,46 @@ object Batcher {
       if (flushRemainder) (rowsSeen + batchSize - 1) / batchSize
       else rowsSeen / batchSize)
     BatchingResult(
-      batches = spark.read.parquet(outDir),
+      batches = spark.read.schema(stagedSchema.add("batch_id", IntegerType))
+        .parquet(outDir),
       remainderRows = rowsSeen - math.min(rowsSeen, written * batchSize),
       nBatches = written.toInt,
       totalRows = rowsSeen)
+  }
+
+  /** Stages one micro-batch to `dir` in one write job and returns its row
+    * count. `seq` = bounds(p) + the row's index within input partition p
+    * (the low 33 bits of `monotonically_increasing_id`). The bounds enter
+    * as one array literal indexed by `spark_partition_id()`, so the
+    * generated code is the same for every micro-batch. */
+  private def stageMicroBatch(mb: DataFrame, base: Long,
+      dir: org.apache.hadoop.fs.Path,
+      fs: org.apache.hadoop.fs.FileSystem): Long = {
+    val rdd = mb.queryExecution.toRdd
+    val counted = rdd.getNumPartitions > 1
+    // partition p owns seq range [bounds(p), bounds(p + 1))
+    val bounds: Array[Long] =
+      if (!counted) Array(base, Long.MaxValue)
+      else rdd.mapPartitionsWithIndex { case (i, it) => Iterator((i, it.size.toLong)) }
+        .collect().sortBy(_._1).map(_._2).scanLeft(base)(_ + _)
+    val (part, boundsLit) = (spark_partition_id(), typedLit(bounds))
+    val obs = org.apache.spark.sql.Observation()
+    mb.withColumn("seq", element_at(boundsLit, part + 1) +
+        monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1)))
+      .observe(obs, count(lit(1)).as("rows"),
+        count_if(col("seq") >= element_at(boundsLit, part + 2)).as("overflow"))
+      .write.mode("overwrite").parquet(dir.toString)
+    val observed = obs.get
+    val rows = observed("rows").asInstanceOf[Long]
+    val overflow = observed("overflow").asInstanceOf[Long]
+    if (counted && (rows != bounds.last - base || overflow != 0L)) {
+      fs.delete(dir, true)
+      throw new IllegalStateException(s"micro-batch $dir read differently on " +
+        s"its second pass: counted ${bounds.last - base} rows, wrote $rows " +
+        s"($overflow outside their partition's seq range); the source is " +
+        "not replayable")
+    }
+    rows
   }
 
   /** S10 CSV parity mode: materialize a batched frame (the

@@ -76,10 +76,10 @@ object Replay {
     val batches =
       new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Long)]()
     val seen = new java.util.concurrent.atomic.AtomicLong(0L)
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-paced").toString
     val q = transport.source(spark).writeStream
       .trigger(Trigger.ProcessingTime(s"$intervalMs milliseconds"))
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-paced").toString)
+      .option("checkpointLocation", ckpt)
       .foreachBatch { (df: DataFrame, id: Long) =>
         val n = df.count()
         if (n > 0) {
@@ -97,6 +97,7 @@ object Replay {
     } finally {
       try q.stop() catch { case _: Throwable => () }
       try q.awaitTermination(30000) catch { case _: Throwable => () }
+      graft.streaming.StreamQueries.deleteRecursively(ckpt)
     }
     import scala.jdk.CollectionConverters._
     batches.asScala.toSeq.sortBy(_._1)

@@ -257,7 +257,7 @@ object StreamQueries {
     else None
   }
 
-  private def deleteRecursively(dir: String): Unit =
+  private[graft] def deleteRecursively(dir: String): Unit =
     try {
       import scala.jdk.CollectionConverters._
       val p = java.nio.file.Paths.get(dir)

@@ -2,14 +2,44 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.ingest.{Batcher, FileJsonTransport, Replay}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
+import graft.ingest.{Batcher, FileJsonTransport, Replay, StreamTransport}
 import graft.schema.Schemas
+
+/** Drops the first row it sees after being armed: a source that reads
+  * differently the second time. */
+object DropFirstRowOnce {
+  val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
+}
 
 class IngestSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString
+
+  private val eventSchema =
+    StructType.fromDDL("event_id LONG, user_id LONG, value DOUBLE")
+
+  /** One topic file holding the 1000 events. */
+  private def oneFileTopic(prefix: String): FileJsonTransport = {
+    val t = new FileJsonTransport(tmp(prefix))
+    t.publish(Schemas.events(spark, sf)
+      .select($"event_id", $"user_id", $"value").coalesce(1))
+    t
+  }
+
+  /** Runs `body` with a split size small enough that one topic file
+    * becomes several input partitions; restores the settings after. */
+  private def withSmallSplits[T](body: => T): T = {
+    val settings = Seq("spark.sql.files.maxPartitionBytes" -> "8192",
+      "spark.sql.files.openCostInBytes" -> "1")
+    val prev = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
 
   test("F1 toFloatOrZero: numeric round-trip, invalid/empty/null -> 0.0") {
     val df = Seq("1.5", "-3", "abc", "", null, "  ", "2e2")
@@ -203,5 +233,93 @@ class IngestSpec extends SparkSpec {
     val afterSecond = spark.read.parquet(staging).count()
     assert(afterSecond == 500L, s"expected 500 staged rows, got $afterSecond " +
       "(re-reading already-committed offsets would give 800)")
+  }
+
+  test("S9 (3): a multi-partition micro-batch gets a dense seq in arrival order") {
+    val t = oneFileTopic("split-topic")
+    val staging = tmp("split-staging")
+    val (res, expected) = withSmallSplits {
+      val res = Batcher.streamBatches(spark, t, eventSchema, staging,
+        tmp("split-out"), batchSize = 300, maxBatches = 100,
+        checkpointDir = tmp("split-ckpt"))
+      // the same file read as a batch, under the same split size
+      val batch = t.sourceBatch(spark)
+        .select(from_json($"value", eventSchema).as("p"))
+        .filter($"p".isNotNull).select("p.*")
+      val arrival = Batcher.assignBatchesArrivalOrder(batch,
+        batchSize = Int.MaxValue, maxBatches = 1)
+      val order = arrival.batches.orderBy("seq").select("event_id").as[Long]
+        .collect().toSeq
+      arrival.cleanup()
+      (res, order)
+    }
+    val parts = new java.io.File(s"$staging/mb=0").listFiles()
+      .count(_.getName.startsWith("part-"))
+    assert(parts >= 2, s"the micro-batch had $parts input partitions")
+    assert(res.totalRows == 1000L && res.nBatches == 4)
+    val rows = res.batches.orderBy("seq").select("seq", "event_id").as[(Long, Long)]
+      .collect().toSeq
+    assert(rows.map(_._1) == (0L until 1000L), "seq is not dense over 0..999")
+    assert(rows.map(_._2).distinct.size == 1000)
+    assert(rows.map(_._2) == expected,
+      "seq order differs from assignBatchesArrivalOrder over the same file")
+  }
+
+  test("S9 (3): a restart with no new topic files returns the same batches") {
+    val topic = tmp("rerun-topic")
+    val staging = tmp("rerun-staging")
+    val ckpt = tmp("rerun-ckpt")
+    val t = new FileJsonTransport(topic)
+    val ev = Schemas.events(spark, sf).select($"event_id", $"user_id", $"value")
+    t.publish(ev.filter($"event_id" < 400))
+    t.publish(ev.filter($"event_id" >= 400))
+    def drain() = {
+      val res = Batcher.streamBatches(spark, t, eventSchema, staging,
+        tmp("rerun-out"), batchSize = 300, maxBatches = 3, checkpointDir = ckpt)
+      (res.totalRows, res.nBatches, res.remainderRows,
+        res.batches.orderBy("seq").collect().toSeq)
+    }
+    val first = drain()
+    assert(first._1 == 1000L && first._2 == 3 && first._3 == 100L)
+    assert(first._4.size == 900)
+    val second = drain()
+    assert(second == first)
+  }
+
+  test("S9 (3): a micro-batch that reads differently the second time fails closed") {
+    val t = oneFileTopic("flaky-topic")
+    val flaky = new StreamTransport {
+      def source(spark: SparkSession): DataFrame = t.source(spark)
+      def publish(df: DataFrame): Unit = t.publish(df)
+      override def typedSource(spark: SparkSession, schema: StructType): DataFrame = {
+        val keep = udf((_: Long) => !DropFirstRowOnce.armed.getAndSet(false))
+          .asNondeterministic()
+        super.typedSource(spark, schema).filter(keep($"event_id"))
+      }
+    }
+    val staging = tmp("flaky-staging")
+    DropFirstRowOnce.armed.set(true)
+    val err = withSmallSplits {
+      intercept[Exception](Batcher.streamBatches(spark, flaky, eventSchema,
+        staging, tmp("flaky-out"), batchSize = 300, maxBatches = 100,
+        checkpointDir = tmp("flaky-ckpt")))
+    }
+    val causes = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+    assert(causes.exists(e => String.valueOf(e.getMessage).contains("not replayable")),
+      s"unexpected failure: $err")
+    assert(!new java.io.File(s"$staging/mb=0").exists(),
+      "the inconsistent micro-batch was left staged")
+  }
+
+  test("S5: pacedReplay removes its checkpoint dir") {
+    val tmpRoot = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def pacedDirs() = tmpRoot.listFiles().map(_.getName)
+      .filter(_.startsWith("graft-paced")).toSet
+    val before = pacedDirs()
+    val t = new FileJsonTransport(tmp("paced-clean-topic"))
+    t.publish(spark.range(0L, 8L).toDF("id").coalesce(1))
+    val panel = Replay.pacedReplay(spark, t, intervalMs = 100L, expectRows = 8L)
+    assert(panel.map(_._2).sum == 8L)
+    assert((pacedDirs() -- before).isEmpty, "pacedReplay left its checkpoint behind")
   }
 }
