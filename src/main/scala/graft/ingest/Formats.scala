@@ -2,6 +2,7 @@ package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.schema.{IndexCache, Storage}
 
 /** Storage-format coverage beyond parquet: the same tables served
   * through Spark's ORC and JSON-lines sources — a lakehouse engine
@@ -22,59 +23,20 @@ import org.apache.spark.sql.functions._
   */
 object Formats {
 
-  private val dirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  // every temp dir ever created, for exit cleanup — survives clearCaches()
-  private val created =
-    java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      created.forEach { d =>
-        try {
-          import scala.jdk.CollectionConverters._
-          val p = java.nio.file.Paths.get(d)
-          if (java.nio.file.Files.exists(p))
-            java.nio.file.Files.walk(p).iterator().asScala.toSeq
-              .sortBy(-_.getNameCount)
-              .foreach(f => java.nio.file.Files.deleteIfExists(f))
-        } catch { case _: Throwable => () }
-      }
-    }, "graft-formats-cleanup"))
-  }
-
+  // Content-fingerprinted: a regenerated corpus at the SAME path gets a
+  // fresh conversion, so the converted copy can never silently serve stale
+  // data to source_orc_agg/source_jsonl_agg while the oracle reads the
+  // fresh parquet. The SUPERSEDED conversion's dir is deleted on the
+  // rebuild instead of lingering until JVM exit.
   private def materialized(spark: SparkSession, dir: String,
       table: String, fmt: String): String =
-    // content-fingerprinted key: a regenerated corpus at the SAME path
-    // gets a new cache key, so the converted copy can never silently
-    // serve stale data to source_orc_agg/source_jsonl_agg while the
-    // oracle reads the fresh parquet. The SUPERSEDED conversion's temp
-    // dir is deleted on the rebuild (evictingComputeIfAbsent) instead
-    // of lingering until JVM exit.
-    graft.schema.Schemas.evictingComputeIfAbsent(dirs,
-      s"$dir#$table#$fmt",
-      graft.schema.Schemas.fingerprint(s"$dir/$table.parquet"))({
-      val out = java.nio.file.Files
-        .createTempDirectory(s"graft-$fmt-$table").toString
-      created.add(out)
+    IndexCache(spark, "formats.copy", (dir, table, fmt),
+        Seq(s"$dir/$table.parquet")) {
+      val out = Storage.tempDir(s"graft-$fmt-$table")
       graft.schema.Schemas.table(spark, dir, table)
         .write.mode("overwrite").format(fmt).save(out)
       out
-    })({ stale =>
-      created.remove(stale)
-      import scala.jdk.CollectionConverters._
-      val p = java.nio.file.Paths.get(stale)
-      if (java.nio.file.Files.exists(p)) {
-        val walk = java.nio.file.Files.walk(p)
-        try walk.iterator().asScala.toSeq.sortBy(-_.getNameCount)
-          .foreach(f => java.nio.file.Files.deleteIfExists(f))
-        finally walk.close()
-      }
-    })
-
-  /** Drop all cached conversions (test/corpus-regeneration hook — the
-    * [[graft.query.Dedup.clearCaches]] convention). The temp copies
-    * themselves are reaped by the shutdown hook. */
-  def clearCaches(): Unit = dirs.clear()
+    }(Storage.delete)
 
   /** ORC source: date-filtered priority rollup over orders served from
     * ORC. The date predicate pushes into the ORC reader (stripe-level
@@ -99,12 +61,9 @@ object Formats {
     * per-file column absence is free (the reader fills nulls), so
     * evolution never forces a rewrite of old data. */
   def schemaEvolutionAgg(spark: SparkSession, dir: String): DataFrame = {
-    val evoDir = graft.schema.Schemas.evictingComputeIfAbsent(dirs,
-      s"$dir#orders#pqevo",
-      graft.schema.Schemas.fingerprint(s"$dir/orders.parquet"))({
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-pqevo-orders").toString
-      created.add(out)
+    val evoDir = IndexCache(spark, "formats.copy", (dir, "orders", "pqevo"),
+        Seq(s"$dir/orders.parquet")) {
+      val out = Storage.tempDir("graft-pqevo-orders")
       val orders = graft.schema.Schemas.table(spark, dir, "orders")
       orders.filter(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"), col("o_totalprice"))
@@ -114,17 +73,7 @@ object Formats {
           col("o_orderpriority"))
         .write.mode("append").parquet(out)
       out
-    })({ stale =>
-      created.remove(stale)
-      import scala.jdk.CollectionConverters._
-      val p = java.nio.file.Paths.get(stale)
-      if (java.nio.file.Files.exists(p)) {
-        val walk = java.nio.file.Files.walk(p)
-        try walk.iterator().asScala.toSeq.sortBy(-_.getNameCount)
-          .foreach(f => java.nio.file.Files.deleteIfExists(f))
-        finally walk.close()
-      }
-    })
+    }(Storage.delete)
     spark.read.option("mergeSchema", "true").parquet(evoDir)
       .groupBy(coalesce(col("o_orderpriority"), lit("<legacy>"))
         .as("priority"))

@@ -76,7 +76,7 @@ object Replay {
     val batches =
       new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Long)]()
     val seen = new java.util.concurrent.atomic.AtomicLong(0L)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-paced").toString
+    val ckpt = graft.schema.Storage.tempDir("graft-paced")
     val q = transport.source(spark).writeStream
       .trigger(Trigger.ProcessingTime(s"$intervalMs milliseconds"))
       .option("checkpointLocation", ckpt)
@@ -97,7 +97,7 @@ object Replay {
     } finally {
       try q.stop() catch { case _: Throwable => () }
       try q.awaitTermination(30000) catch { case _: Throwable => () }
-      graft.streaming.StreamQueries.deleteRecursively(ckpt)
+      graft.schema.Storage.delete(ckpt)
     }
     import scala.jdk.CollectionConverters._
     batches.asScala.toSeq.sortBy(_._1)

@@ -1,17 +1,17 @@
 package graft.ml
 
-import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.ml.PipelineModel
 import org.apache.spark.sql.SparkSession
+import graft.schema.{IndexCache, Storage}
 
 /** S13: the versioned model store (reference spark_models/ dir +
-  * api/api.py:24-37 eager load). Adds an in-process cache so serving-style
-  * queries (Q1–Q3) amortize one training/deserialization across requests —
-  * the reference's own deliberate optimization (eager startup load).
+  * api/api.py:24-37 eager load). Loaded models live in the session's
+  * [[IndexCache]] so serving-style queries (Q1–Q3) amortize one
+  * training/deserialization across requests — the reference's own
+  * deliberate optimization (eager startup load) — and a corpus
+  * regenerated under a long-lived server is retrained, not served stale.
   */
 object ModelStore {
-
-  private val cache = new ConcurrentHashMap[String, PipelineModel]()
 
   /** Count of actual fits (not disk loads) — lets specs prove the
     * persisted path short-circuits retraining. */
@@ -40,7 +40,7 @@ object ModelStore {
     * regenerated corpus never serves a stale persisted model and the
     * stale dir is identifiable. */
   private[graft] def modelsDir(dir: String): String = {
-    val fp = graft.schema.Schemas.fingerprint(s"$dir/events.parquet")
+    val fp = Storage.fingerprint(s"$dir/events.parquet")
     s"${sys.props("java.io.tmpdir")}/graft_spark_models/" +
       s"${dirKey(dir)}__${tok(fp)}"
   }
@@ -55,8 +55,7 @@ object ModelStore {
     val prefix = s"${dirKey(dir)}__"
     val stale = Option(root.listFiles()).getOrElse(Array.empty)
       .filter(f => f.getName.startsWith(prefix) && f.getName != keep.getName)
-    stale.foreach(f =>
-      org.apache.commons.io.FileUtils.deleteQuietly(f))
+    stale.foreach(f => Storage.delete(f.getPath))
   }
 
   /** On-disk home for (dir, version): the reference's
@@ -87,9 +86,12 @@ object ModelStore {
     * the persisted form, exactly the startup-load contract of
     * api/api.py:24-37. A warm persisted store (marker present) skips
     * training entirely, like an API restart against existing
-    * spark_models/. Thread-safe; one fit OR load per key per JVM. */
+    * spark_models/. Thread-safe; one fit OR load per (session, dir,
+    * version, events generation). Retiring an entry drops only the
+    * loaded instance: the persisted tree is the restart contract, and
+    * superseded trees go through [[evictSuperseded]]. */
   def forDir(spark: SparkSession, dir: String, version: Int): PipelineModel =
-    cache.computeIfAbsent(s"$dir#$version", { _ =>
+    IndexCache(spark, "model", (dir, version), Seq(s"$dir/events.parquet")) {
       val path = persistedPath(dir, version)
       val marker = new java.io.File(path, "_graft_complete")
       if (!marker.exists()) {
@@ -107,7 +109,7 @@ object ModelStore {
         marker.createNewFile()
       }
       load(path)
-    })
+    }(_ => ())
 
   /** Persist a model (same on-disk format PySpark reads/writes). */
   def save(model: PipelineModel, path: String): Unit =
@@ -115,7 +117,4 @@ object ModelStore {
 
   /** Load a persisted model. */
   def load(path: String): PipelineModel = PipelineModel.load(path)
-
-  /** Test hook. */
-  private[graft] def clear(): Unit = cache.clear()
 }

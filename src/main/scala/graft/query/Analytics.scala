@@ -2,6 +2,7 @@ package graft.query
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.schema.IndexCache
 import graft.schema.Schemas.table
 
 /** Graph, anomaly, sampling, and sketch-merge analytics — the round-5
@@ -347,51 +348,33 @@ object Analytics {
   }
 
   // Persisted co-purchase graph components (distinct edges, symmetric
-  // edges, degrees, degree-orientation), keyed on the OWNING SESSION
-  // OBJECT via WeakHashMap exactly like Dedup.sigCache: triangles and
-  // pagerank SHARE one materialized edge index per (session, dir)
-  // instead of each recomputing the two-distinct lineage per branch —
-  // the 100 TB deployment shape (build the graph once, run many graph
-  // queries against it), and entries drop with their session.
-  private val graphCache = new java.util.WeakHashMap[
-    SparkSession, java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
+  // edges, degrees, degree-orientation) in the session's IndexCache:
+  // triangles and pagerank SHARE one materialized edge index per
+  // (session, dir) instead of each recomputing the two-distinct lineage
+  // per branch — the 100 TB deployment shape (build the graph once, run
+  // many graph queries against it).
 
-  /** Graph-cache key prefix: every component derives from lineitem; the
-    * full key appends its content fingerprint — a corpus regenerated at
-    * the same path rebuilds the index instead of serving stale persisted
-    * blocks (the [[graft.schema.Schemas.fingerprint]] discipline), and
-    * the SUPERSEDED generation is unpersisted on the rebuild
-    * ([[graft.schema.Schemas.evictingComputeIfAbsent]]). */
+  /** Graph-cache key: `dir#component`. */
   private[query] def gkey(dir: String, suffix: String): String = s"$dir#$suffix"
 
   /** Build-once persisted component. The build is materialized (count)
-    * inside the insert so every later use reads warm blocks. Dependent
-    * components are resolved BEFORE their own computeIfAbsent — a
-    * recursive update of one ConcurrentHashMap is illegal.
+    * inside the cache build so every later use reads warm blocks.
     *
     * `srcTable` names the parquet table the frame DERIVES from — the
-    * eviction fingerprint hashes that file, so regenerating the actual
-    * source at the same path rebuilds the index (an embeddings-derived
-    * index keyed to lineitem would serve stale blocks silently after an
-    * embeddings-only regeneration). */
+    * cache fingerprints that table, so regenerating the actual source at
+    * the same path rebuilds the index and unpersists the superseded
+    * generation (an embeddings-derived index keyed to lineitem would
+    * serve stale blocks silently after an embeddings-only
+    * regeneration). */
   private[query] def cachedDf(spark: SparkSession, key: String,
       srcTable: String = "lineitem")
       (build: => DataFrame): DataFrame = {
-    val m = graphCache.synchronized {
-      var mm = graphCache.get(spark)
-      if (mm == null) {
-        mm = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-        graphCache.put(spark, mm)
-      }
-      mm
-    }
     val dir = key.takeWhile(_ != '#')
-    graft.schema.Schemas.evictingComputeIfAbsent(m, key,
-      graft.schema.Schemas.fingerprint(s"$dir/$srcTable.parquet"))({
+    IndexCache(spark, "graph", key, Seq(s"$dir/$srcTable.parquet")) {
       val df = build.persist()
       df.count()
       df
-    })(_.unpersist(false))
+    }(_.unpersist(false))
   }
 
   /** WEIGHTED undirected co-purchase edges (u < v, weight = number of
@@ -479,22 +462,15 @@ object Analytics {
     }
   }
 
-  // symmetric-edge-index row count per (dir, fingerprint) — the scalar
-  // the scale gates consult (graph_ego_betweenness's broadcast hints).
-  // ONE count job per corpus generation (over the already-persisted
-  // index, so it reads warm blocks); served from the map afterwards.
-  private val edgeCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  /** |E| of [[copurchaseEdgesSym]], fingerprint-keyed like every other
-    * shared component — a regenerated corpus re-counts instead of
-    * serving a stale scale decision. */
+  /** |E| of [[copurchaseEdgesSym]] — the scalar the scale gates consult
+    * (graph_ego_betweenness's broadcast hints). ONE count job per corpus
+    * generation (over the already-persisted index, so it reads warm
+    * blocks), fingerprint-keyed like every other shared component — a
+    * regenerated corpus re-counts instead of serving a stale scale
+    * decision. */
   private[graft] def symEdgeCount(spark: SparkSession, dir: String): Long =
-    graft.schema.Schemas.evictingComputeIfAbsent(
-      edgeCountCache, gkey(dir, "symcount"),
-      graft.schema.Schemas.fingerprint(s"$dir/lineitem.parquet"))(
-      java.lang.Long.valueOf(copurchaseEdgesSym(spark, dir).count()))(
-      _ => ()).longValue()
+    IndexCache(spark, "graph.symcount", dir, Seq(s"$dir/lineitem.parquet"))(
+      copurchaseEdgesSym(spark, dir).count())(_ => ())
 
   /** Broadcast-hint a vertex-bounded per-round frame (BFS/SSSP frontier,
     * reached set, label store) iff the graph's scale gate allows — the
@@ -512,18 +488,6 @@ object Analytics {
   private[query] def hintVertexScale(spark: SparkSession, dir: String,
       df: DataFrame, maxEdges: Long = 8L * 1000 * 1000): DataFrame =
     if (symEdgeCount(spark, dir) <= maxEdges) broadcast(df) else df
-
-  /** Unpersist and drop every cached graph component (all sessions). */
-  def clearCaches(): Unit = {
-    import scala.jdk.CollectionConverters._
-    graphCache.synchronized {
-      graphCache.values.asScala.flatMap(_.values.asScala).foreach { df =>
-        try df.unpersist(false) catch { case _: Throwable => () }
-      }
-      graphCache.clear()
-    }
-    edgeCountCache.clear()
-  }
 
   /** Most-frequent event_type per user (per-key mode) with a
     * deterministic count-desc, name-asc tiebreak — the categorical

@@ -3,6 +3,7 @@ package graft.query
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.schema.IndexCache
 import graft.schema.Schemas.table
 
 /** Round-13 analytics: ranking-quality evaluation (PR-AUC), graph link
@@ -1019,12 +1020,6 @@ object Analytics4 {
     * the histogram exact over retrieved neighborhoods. Ranks are
     * per-query bounded windows; the in-degree rollup and histogram are
     * map-side-combined counts. */
-  // (ids, flat matrix, dim) broadcasts per (dir, fingerprint) — pass 2
-  // of a bench run must not re-collect the corpus
-  private val hubMatCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (org.apache.spark.broadcast.Broadcast[Array[Long]],
-      org.apache.spark.broadcast.Broadcast[Array[Float]], Int)]()
-
   def embHubnessStats(spark: SparkSession, dir: String, k: Int = 5,
       matrixGateBytes: Long = 64L << 20): DataFrame = {
     graft.functions.FloatVecDot.register(spark)
@@ -1044,9 +1039,10 @@ object Analytics4 {
     // Spec hook: Round14Spec forces the fallback with gate 0 and proves
     // both paths byte-identical.
     val ranked = if (n * dim * 4L <= matrixGateBytes) {
-      val (bIds, bMat, _) = graft.schema.Schemas.evictingComputeIfAbsent(
-        hubMatCache, s"$dir/embeddings.parquet",
-        graft.schema.Schemas.fingerprint(s"$dir/embeddings.parquet")) {
+      // (ids, flat matrix) broadcasts per (session, dir, fingerprint) —
+      // pass 2 of a bench run must not re-collect the corpus
+      val (bIds, bMat) = IndexCache(spark, "hubness.matrix", dir,
+          Seq(s"$dir/embeddings.parquet")) {
         val rows = emb.collect()
         val ids = new Array[Long](rows.length)
         val mat = new Array[Float](rows.length * dim)
@@ -1059,8 +1055,8 @@ object Analytics4 {
           j += 1
         }
         (spark.sparkContext.broadcast(ids),
-          spark.sparkContext.broadcast(mat), dim)
-      } { case (i0, m0, _) => i0.destroy(); m0.destroy() }
+          spark.sparkContext.broadcast(mat))
+      } { case (i0, m0) => i0.destroy(); m0.destroy() }
       // temp-function builder closes over THIS corpus' broadcasts;
       // Datasets analyze eagerly on creation, so the select below binds
       // the current registration permanently — later re-registrations

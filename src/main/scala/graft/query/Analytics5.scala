@@ -278,8 +278,6 @@ object Analytics5 {
     * auto-broadcast under AQE) survivor set — never an edge self-join. */
   def graphKcore(spark: SparkSession, dir: String,
       rounds: Int = 3): DataFrame = {
-    // base indexes resolve OUTSIDE the cache thunk — a nested cachedDf
-    // lookup inside the build is a recursive ConcurrentHashMap update
     val sym0 = Analytics.copurchaseEdgesSym(spark, dir)
     val deg0 = Analytics.copurchaseDeg(spark, dir)
     // the decomposition is a derived graph INDEX (core membership +

@@ -2,6 +2,7 @@ package graft.query
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.schema.IndexCache
 import graft.schema.Schemas.table
 
 /** Round-6 corpus-curation operators: the decisions a training-data
@@ -164,42 +165,15 @@ object Curation {
           |  x -> CAST(round(CAST(x AS DOUBLE) * (127.0 / amax)) AS INT))
           |  AS qv""".stripMargin)
 
-  // Persisted PQ-assignment index per (session, dir, params) — the same
-  // build-once/probe-often pattern as Dedup.sigCache: the codes table IS
-  // the PQ index a production deployment materializes once per corpus
-  // version and serves every ADC query from. Weak session keys drop
-  // entries with their session.
-  private val pqCache = new java.util.WeakHashMap[SparkSession,
-    java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
-
-  /** Unpersist and drop every cached PQ index (all sessions) — the
-    * [[Dedup.clearCaches]] convention. */
-  def clearCaches(): Unit = {
-    import scala.jdk.CollectionConverters._
-    pqCache.synchronized {
-      pqCache.values.asScala.flatMap(_.values.asScala).foreach { df =>
-        try df.unpersist(false) catch { case _: Throwable => () }
-      }
-      pqCache.clear()
-    }
-  }
-
   /** Per-(vec, subspace) nearest codeword: (vec_id, m, b.dist, b.k) —
-    * persisted per (dir, params); both the code dump and every ADC
-    * probe read the same materialized index. */
+    * persisted per (session, dir, params, embeddings generation); both
+    * the code dump and every ADC probe read the same materialized index
+    * — the PQ index a production deployment materializes once per
+    * corpus version and serves every ADC query from. */
   private def pqAssign(spark: SparkSession, dir: String,
-      m: Int, k: Int, subDim: Int): DataFrame = {
-    val cache = pqCache.synchronized {
-      var c = pqCache.get(spark)
-      if (c == null) {
-        c = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-        pqCache.put(spark, c)
-      }
-      c
-    }
-    graft.schema.Schemas.evictingComputeIfAbsent(cache,
-      s"$dir#pq#$m#$k#$subDim",
-      graft.schema.Schemas.fingerprint(s"$dir/embeddings.parquet"))({
+      m: Int, k: Int, subDim: Int): DataFrame =
+    IndexCache(spark, "curation.pq", (dir, m, k, subDim),
+        Seq(s"$dir/embeddings.parquet")) {
       val q = pqQuantized(spark, dir)
       val codebook = pqCodebook(spark, m, k, subDim)
       val subs = q.select(col("vec_id"),
@@ -216,8 +190,7 @@ object Curation {
         .persist()
       best.count()
       best
-    })(_.unpersist(false))
-  }
+    }(_.unpersist(false))
 
   def embPqCodes(spark: SparkSession, dir: String,
       m: Int = 8, k: Int = 16, subDim: Int = 8): DataFrame = {

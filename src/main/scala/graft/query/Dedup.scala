@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.SimHash60
+import graft.schema.IndexCache
 import graft.schema.Schemas.table
 
 /** Deduplication operators for large-scale training-data pipelines, over
@@ -195,10 +196,8 @@ object Dedup {
       .filter(size(col("toks")) >= shingleSize)
     // identical key ⇒ the persisted signature index built by the
     // candidate machinery is served warm, never recomputed
-    val sig = graft.schema.Schemas.evictingComputeIfAbsent(
-      forSession(sigCache, spark),
-      s"$dir#$shingleSize#$nh",
-      graft.schema.Schemas.fingerprint(s"$dir/documents.parquet"))(
+    val sig = IndexCache(spark, "dedup.sig", (dir, shingleSize, nh),
+      Seq(s"$dir/documents.parquet"))(
       minhashSignatures(docs, "toks", "doc_id", shingleSize, nh).persist())(
       _.unpersist(false))
     candidates
@@ -329,10 +328,9 @@ object Dedup {
     // re-evaluate the signatures on BOTH branches (no cross-branch CSE in
     // Catalyst). At scale this is the standard persisted minhash index
     // (32 longs/doc), written once, probed often.
-    val sig = graft.schema.Schemas.evictingComputeIfAbsent(
-      forSession(sigCache, spark),
-      s"$dir#$shingleSize#${numBands * rowsPerBand}",
-      graft.schema.Schemas.fingerprint(s"$dir/documents.parquet"))(
+    val sig = IndexCache(spark, "dedup.sig",
+      (dir, shingleSize, numBands * rowsPerBand),
+      Seq(s"$dir/documents.parquet"))(
       minhashSignatures(docs, "toks", "doc_id",
         shingleSize, numBands * rowsPerBand).persist())(
       _.unpersist(false))
@@ -351,10 +349,9 @@ object Dedup {
     // this is the candidate table a dedup service materializes beside
     // the signature index — rebuild on corpus generation, probe per
     // policy. Fingerprint-keyed like every other index here.
-    val fp = graft.schema.Schemas.fingerprint(s"$dir/documents.parquet")
-    val candKey = s"$dir#cands#$shingleSize#$numBands#$rowsPerBand"
-    val candidates = graft.schema.Schemas.evictingComputeIfAbsent(
-      forSession(pairCache, spark), candKey, fp)({
+    val banding = (dir, shingleSize, numBands, rowsPerBand)
+    val candidates = IndexCache(spark, "dedup.cands", banding,
+        Seq(s"$dir/documents.parquet"))({
       val c = boundedSelfPairs(banded, Seq("band", "bucket"),
         "doc_id", "doc_a", "doc_b").persist()
       c.count() // materialize once; every verify tail reads warm blocks
@@ -373,9 +370,8 @@ object Dedup {
     // the candidate docs' hash sets are persisted beside the pair list
     // (same lifetime, same consumers): the tokenize+shingle+sort pass
     // over candidate docs would otherwise re-run per verify tail
-    val candSh = graft.schema.Schemas.evictingComputeIfAbsent(
-      forSession(pairCache, spark),
-      s"$dir#candsh#$shingleSize#$numBands#$rowsPerBand", fp)({
+    val candSh = IndexCache(spark, "dedup.candsh", banding,
+        Seq(s"$dir/documents.parquet"))({
       val candDocIds = candidates.select(col("doc_a").as("doc_id"))
         .unionAll(candidates.select(col("doc_b").as("doc_id"))).distinct()
       val s = docs.join(candDocIds, Seq("doc_id"))
@@ -475,7 +471,7 @@ object Dedup {
     * `near_dup_in_batch` beats `new`.
     *
     * Scale shape: the corpus's banded signature index is the SAME
-    * persisted index every LSH query shares (sigCache — in production,
+    * persisted index every LSH query shares (dedup.sig — in production,
     * the standing dedup index, built once per corpus version); the
     * delta computes signatures map-only and probes it with an equi-join
     * on (band, bucket) — candidates only, never all-pairs, shuffle
@@ -516,10 +512,8 @@ object Dedup {
           .select(col("doc_id"), col("text")), col("doc_id"))
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= shingleSize)
-    graft.schema.Schemas.evictingComputeIfAbsent(
-      forSession(sigCache, spark),
-      s"$dir#$shingleSize#$numHashes",
-      graft.schema.Schemas.fingerprint(s"$dir/documents.parquet"))(
+    IndexCache(spark, "dedup.sig", (dir, shingleSize, numHashes),
+      Seq(s"$dir/documents.parquet"))(
       minhashSignatures(docs, "toks", "doc_id",
         shingleSize, numHashes).persist())(
       _.unpersist(false))
@@ -578,6 +572,34 @@ object Dedup {
       .orderBy(col("doc_id"))
   }
 
+  // Persisted indexes in the session's IndexCache, per (dir, params)
+  // and documents/embeddings generation:
+  //   dedup.sig:  minhash signature index per (shingleSize, numHashes)
+  //   dedup.pairs: verified near-dup pair index — the distributed,
+  //     ids-only pair list a real dedup deployment materializes once and
+  //     clusters many times (same pattern as ModelStore / the IVF
+  //     quantizer). Rows stay in executors; the corpus never re-hashes
+  //     per clustering run.
+  //   dedup.cands / dedup.candsh: the candidate pair list per banding and
+  //     its candidate docs' shingle-hash sets
+  //   dedup.semassign: SemDeDup cell assignment — (vec_id, cell) longs;
+  //     the pair stage, the removal verdict, and the output all probe the
+  //     same persisted assignment instead of re-running the anchor
+  //     crossJoin + argmax aggregation per consumer (exchange reuse only
+  //     amortizes part of the duplicated subtree)
+  //   dedup.wins: positional substring-window table (doc_id, w, i, h) per
+  //     width set — the ONE tokenize→slide→hash pass the whole
+  //     substring-dedup family rides (r15 verdict #1: exact/multiscale/
+  //     maximal each re-tokenized the corpus from scratch).
+  //   dedup.wincensus: its repeated-class rollup (w, h, n_docs, n_occ,
+  //     min_doc, max_doc | n_docs ≥ 2) — the span blocklist itself,
+  //     probed directly by exact/multiscale and as maximal's coverage
+  //     filter.
+  /** Census-build counter (the ModelStore `trains` discipline): specs
+    * assert the whole substring family triggers exactly ONE window
+    * pass per (session, corpus, width set). */
+  private[graft] val censusBuilds = new java.util.concurrent.atomic.AtomicLong(0L)
+
   /** Duplicate-group assignment: connected components over the near-dup
     * pair graph, labeling every involved doc with the smallest doc_id
     * reachable from it (the canonical representative). This is the step
@@ -592,82 +614,10 @@ object Dedup {
     * alternating large-star/small-star for O(log n) rounds on adversarial
     * graphs — near-dup clusters are tiny in practice, so plain
     * propagation converges in 2–3 rounds). */
-  // Persisted index caches, keyed on the OWNING SESSION OBJECT via a
-  // WeakHashMap: a persisted DataFrame is bound to the SparkSession that
-  // created it, and an identity-hash string key could be reused after a
-  // stopped session is GC'd (handing a new session a plan bound to a dead
-  // one). Weak keys make the binding explicit and collision-free, and
-  // entries (with their persisted data, already freed by session stop)
-  // drop automatically once a session becomes unreachable — no JVM-lifetime
-  // accumulation. Inner maps: per-(dir, params) indexes for that session.
-  //   sigCache:  minhash signature index per (dir, shingleSize, numHashes)
-  //   pairCache: verified near-dup pair index per (sf dir) — the
-  //     distributed, ids-only pair list a real dedup deployment
-  //     materializes once and clusters many times (same pattern as
-  //     ModelStore / the IVF quantizer cache). Rows stay in executors;
-  //     the corpus never re-hashes per clustering run.
-  private type IndexMap = java.util.concurrent.ConcurrentHashMap[String, DataFrame]
-  private val sigCache =
-    new java.util.WeakHashMap[SparkSession, IndexMap]()
-  private val pairCache =
-    new java.util.WeakHashMap[SparkSession, IndexMap]()
-  //   semCache: SemDeDup cell assignment per (dir) — (vec_id, cell)
-  //     longs; the pair stage, the removal verdict, and the output all
-  //     probe the same persisted assignment instead of re-running the
-  //     anchor crossJoin + argmax aggregation per consumer (exchange
-  //     reuse only amortizes part of the duplicated subtree)
-  private val semCache =
-    new java.util.WeakHashMap[SparkSession, IndexMap]()
-  //   winCache: positional substring-window table (doc_id, w, i, h) per
-  //     (dir, width set) — the ONE tokenize→slide→hash pass the whole
-  //     substring-dedup family rides (r15 verdict #1: exact/multiscale/
-  //     maximal each re-tokenized the corpus from scratch).
-  //   winCensusCache: its repeated-class rollup (w, h, n_docs, n_occ,
-  //     min_doc, max_doc | n_docs ≥ 2) — the span blocklist itself,
-  //     probed directly by exact/multiscale and as maximal's coverage
-  //     filter.
-  private val winCache =
-    new java.util.WeakHashMap[SparkSession, IndexMap]()
-  private val winCensusCache =
-    new java.util.WeakHashMap[SparkSession, IndexMap]()
-  /** Census-build counter (the ModelStore `trains` discipline): specs
-    * assert the whole substring family triggers exactly ONE window
-    * pass per (session, corpus, width set). */
-  private[graft] val censusBuilds = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** The per-session index map (WeakHashMap is not thread-safe — all
-    * access goes through this synchronized accessor). */
-  private def forSession(cache: java.util.WeakHashMap[SparkSession, IndexMap],
-      spark: SparkSession): IndexMap = cache.synchronized {
-    var m = cache.get(spark)
-    if (m == null) { m = new IndexMap(); cache.put(spark, m) }
-    m
-  }
-
-  /** Unpersist and drop every cached index (both caches, all sessions).
-    * Call when a session is being stopped or tests want a cold start. */
-  def clearCaches(): Unit = {
-    import scala.jdk.CollectionConverters._
-    Seq(sigCache, pairCache, semCache, winCache, winCensusCache)
-      .foreach { cache =>
-      cache.synchronized {
-        cache.values.asScala.flatMap(_.values.asScala).foreach { df =>
-          try df.unpersist(false) catch { case _: Throwable => () }
-        }
-        cache.clear()
-      }
-    }
-  }
-
   def dedupGroups(spark: SparkSession, dir: String,
       maxIters: Int = 20, driverUnionFindMax: Long = 4000000L): DataFrame = {
-    // prefix is NAMESPACED ($dir#pairs, not bare $dir): the eviction
-    // sweep removes same-prefix keys with a stale fingerprint, and a
-    // bare-dir prefix would sweep the sibling candidate/shingle-set
-    // indexes of THIS generation on every cold dedup_groups call
-    val pairs = graft.schema.Schemas.evictingComputeIfAbsent(
-      forSession(pairCache, spark), s"$dir#pairs",
-      graft.schema.Schemas.fingerprint(s"$dir/documents.parquet"))({
+    val pairs = IndexCache(spark, "dedup.pairs", dir,
+        Seq(s"$dir/documents.parquet"))({
       val p = dedupMinhashLsh(spark, dir)
         .select(col("doc_a"), col("doc_b")).persist()
       p.count() // materialize the index once
@@ -848,9 +798,8 @@ object Dedup {
     // verdict, and the output frame all probe the same cached index —
     // at corpus scale re-running the anchor panel scan per consumer is
     // the dominant avoidable cost
-    val assigned = graft.schema.Schemas.evictingComputeIfAbsent(
-      forSession(semCache, spark), s"$dir#semassign",
-      graft.schema.Schemas.fingerprint(s"$dir/embeddings.parquet"))({
+    val assigned = IndexCache(spark, "dedup.semassign", dir,
+        Seq(s"$dir/embeddings.parquet"))({
       val nCells =
         math.max(16L, math.ceil(emb.count() / 32.0).toLong).toInt
       // Seed selection is FULLY distributed: each vector hashes to a
@@ -921,9 +870,8 @@ object Dedup {
   private def substringWins(spark: SparkSession, dir: String,
       widths: Seq[Int]): DataFrame = {
     val ws = widths.sorted
-    graft.schema.Schemas.evictingComputeIfAbsent(
-      forSession(winCache, spark), s"$dir#wins:${ws.mkString(",")}",
-      graft.schema.Schemas.fingerprint(s"$dir/documents.parquet"))({
+    IndexCache(spark, "dedup.wins", (dir, ws),
+        Seq(s"$dir/documents.parquet"))({
       censusBuilds.incrementAndGet()
       val docs = withPlantedNearDups(table(spark, dir, "documents"))
         .select(col("doc_id"), tokens(col("text")).as("toks"))
@@ -953,9 +901,8 @@ object Dedup {
   private def substringCensus(spark: SparkSession, dir: String,
       widths: Seq[Int]): DataFrame = {
     val ws = widths.sorted
-    graft.schema.Schemas.evictingComputeIfAbsent(
-      forSession(winCensusCache, spark), s"$dir#wincensus:${ws.mkString(",")}",
-      graft.schema.Schemas.fingerprint(s"$dir/documents.parquet"))({
+    IndexCache(spark, "dedup.wincensus", (dir, ws),
+        Seq(s"$dir/documents.parquet"))({
       val census = substringWins(spark, dir, ws)
         .groupBy(col("w"), col("h"))
         .agg(countDistinct(col("doc_id")).as("n_docs"),

@@ -3,6 +3,7 @@ package graft.query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.schema.IndexCache
 import graft.schema.Schemas.table
 
 /** Training-data pipeline operators beyond the reference surface (SURVEY
@@ -15,24 +16,14 @@ import graft.schema.Schemas.table
 object Pipeline {
 
   // Distinct (doc_id, gram-hash) index per (sf dir, n), persisted once per
-  // session — decontaminate's df filter, eval sizes, and collision join
-  // are three plan branches over the same grams, and Catalyst does no
-  // cross-branch CSE: without the index the corpus re-tokenizes and
-  // re-hashes per branch. Same WeakHashMap-on-session keying as Dedup's
-  // signature caches (collision-free; entries drop with the session).
-  private type IndexMap =
-    java.util.concurrent.ConcurrentHashMap[String, DataFrame]
-  private val gramCache = new java.util.WeakHashMap[SparkSession, IndexMap]()
-
+  // session and corpus generation — decontaminate's df filter, eval
+  // sizes, and collision join are three plan branches over the same
+  // grams, and Catalyst does no cross-branch CSE: without the index the
+  // corpus re-tokenizes and re-hashes per branch.
   private def cachedGrams(spark: SparkSession, dir: String,
-      n: Int): DataFrame = {
-    val perSession = gramCache.synchronized {
-      var m = gramCache.get(spark)
-      if (m == null) { m = new IndexMap(); gramCache.put(spark, m) }
-      m
-    }
-    perSession.computeIfAbsent(s"$dir#$n#" +
-      graft.schema.Schemas.fingerprint(s"$dir/documents.parquet"), { _ =>
+      n: Int): DataFrame =
+    IndexCache(spark, "pipeline.grams", (dir, n),
+        Seq(s"$dir/documents.parquet")) {
       val g = table(spark, dir, "documents")
         .select(col("doc_id"), Dedup.tokens(col("text")).as("t"))
         .filter(size(col("t")) >= n)
@@ -43,8 +34,7 @@ object Pipeline {
         .persist()
       g.count() // materialize the index once
       g
-    })
-  }
+    }(_.unpersist(false))
 
   /** Benchmark decontamination: find training documents sharing ≥
     * `minOverlap` distinct word n-grams with any eval-set document — the

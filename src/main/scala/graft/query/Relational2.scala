@@ -3,6 +3,7 @@ package graft.query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.schema.{IndexCache, Storage}
 import graft.schema.Schemas.table
 
 /** Second wave of relational operator coverage beyond SURVEY §2 (the
@@ -311,16 +312,16 @@ object Relational2 {
   def joinDppPruned(spark: SparkSession, dir: String): DataFrame = {
     // the dim must be a REAL relation with a filter on top — an inline
     // local relation constant-folds the predicate away and DPP sees no
-    // selective build side to subscribe the fact scan to
-    val dimPath = dppDimDirs.computeIfAbsent(dir, { _ =>
-      val tmp = java.nio.file.Files
-        .createTempDirectory("event_type_dim").toString
+    // selective build side to subscribe the fact scan to. The category
+    // dim is a constant, so one copy serves the whole session.
+    val dimPath = IndexCache(spark, "relational.dppDim", (), Nil) {
+      val tmp = Storage.tempDir("event_type_dim")
       val cat = Seq(("click", "engagement"), ("view", "engagement"),
         ("purchase", "revenue"), ("signup", "ops"), ("error", "ops"))
       spark.createDataFrame(cat).toDF("event_type", "category")
         .coalesce(1).write.mode("overwrite").parquet(tmp)
       tmp
-    })
+    }(Storage.delete)
     val dim = spark.read.parquet(dimPath)
     partitionedEvents(spark, dir)
       .join(dim.filter(col("category") === "engagement"), Seq("event_type"))
@@ -330,21 +331,16 @@ object Relational2 {
       .orderBy(col("event_type"))
   }
 
-  // one partitioned copy of events per (jvm, sf dir) — the "table layout"
-  private val partDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  // the event-category dim as a real parquet relation (see joinDppPruned)
-  private val dppDimDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+  // one partitioned copy of events per (session, sf dir, events
+  // generation) — the "table layout"
   private[query] def partitionedEvents(spark: SparkSession, dir: String): DataFrame = {
-    val out = partDirs.computeIfAbsent(dir, { _ =>
-      val tmp = java.nio.file.Files.createTempDirectory("events_by_type").toString
+    val out = IndexCache(spark, "relational.partitionedEvents", dir,
+        Seq(s"$dir/events.parquet")) {
+      val tmp = Storage.tempDir("events_by_type")
       graft.schema.Schemas.events(spark, dir)
         .write.mode("overwrite").partitionBy("event_type").parquet(tmp)
       tmp
-    })
+    }(Storage.delete)
     spark.read.parquet(out)
   }
 

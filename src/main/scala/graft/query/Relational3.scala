@@ -3,6 +3,7 @@ package graft.query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.schema.{IndexCache, Storage}
 import graft.schema.Schemas.table
 
 /** Round-3 relational operators: storage-layout co-located joins
@@ -12,34 +13,14 @@ import graft.schema.Schemas.table
   */
 object Relational3 {
 
-  // One bucketed copy of (orders, customer) per (session, sf dir) — the
-  // engine's "table layout" the way a warehouse would maintain it: paid
-  // once at load time, amortized over every co-located join after.
-  // Keyed on the session OBJECT (WeakHashMap: collision-free, entries drop
-  // when the session is unreachable — an identity-hash/string-hash key
-  // could collide or be reused and silently point two sessions at each
-  // other's catalog tables). Table-name suffixes come from a monotonic
-  // counter (never from hashCode), and temp layout dirs are deleted by a
-  // JVM shutdown hook.
-  private val bucketTables = new java.util.WeakHashMap[
-    SparkSession, java.util.concurrent.ConcurrentHashMap[String, (String, String)]]()
+  // One bucketed copy of (orders, customer) per (session, sf dir,
+  // source generation) — the engine's "table layout" the way a warehouse
+  // would maintain it: paid once at load time, amortized over every
+  // co-located join after. Table-name suffixes come from a monotonic
+  // counter (never from hashCode), so two sessions' catalog tables never
+  // point at each other; a superseded layout's tables are dropped and
+  // its dir deleted.
   private val bucketSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-  private val bucketDirs =
-    java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      bucketDirs.forEach { d =>
-        try {
-          import scala.jdk.CollectionConverters._
-          val p = java.nio.file.Paths.get(d)
-          if (java.nio.file.Files.exists(p))
-            java.nio.file.Files.walk(p).iterator().asScala.toSeq
-              .sortBy(-_.getNameCount)
-              .foreach(f => java.nio.file.Files.deleteIfExists(f))
-        } catch { case _: Throwable => () }
-      }
-    }, "graft-bucket-layout-cleanup"))
-  }
 
   /** Bucketed co-located join: orders and customer both bucketed (and
     * sort-ordered) on the join key into the same bucket count, so the
@@ -48,20 +29,11 @@ object Relational3 {
     * this is THE pattern for recurring fact-dim joins on a stable key:
     * the shuffle happens once at write time, not per query. */
   def joinBucketed(spark: SparkSession, dir: String): DataFrame = {
-    val perSession = bucketTables.synchronized {
-      var m = bucketTables.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-        bucketTables.put(spark, m)
-      }
-      m
-    }
-    val (ordersT, customerT) = perSession.computeIfAbsent(dir, { _ =>
+    val (ordersT, customerT, _) = IndexCache(spark, "relational.bucketed",
+        dir, Seq(s"$dir/orders.parquet", s"$dir/customer.parquet")) {
       val suffix = bucketSeq.incrementAndGet().toString
       val (to, tc) = (s"orders_bkt_$suffix", s"customer_bkt_$suffix")
-      val pO = java.nio.file.Files.createTempDirectory("graft_bkt_orders").toString
-      val pC = java.nio.file.Files.createTempDirectory("graft_bkt_customer").toString
-      bucketDirs.add(pO); bucketDirs.add(pC)
+      val base = Storage.tempDir("graft_bkt")
       // repartition on the bucket key first: each write task then holds
       // exactly one bucket (repartition and bucketBy share the murmur3
       // hash), giving ONE file per bucket — a multi-file bucket would
@@ -70,14 +42,17 @@ object Relational3 {
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
         .repartition(8, col("o_custkey"))
         .write.mode("overwrite").bucketBy(8, "o_custkey").sortBy("o_custkey")
-        .option("path", pO).saveAsTable(to)
+        .option("path", s"$base/orders").saveAsTable(to)
       table(spark, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"))
         .repartition(8, col("c_custkey"))
         .write.mode("overwrite").bucketBy(8, "c_custkey").sortBy("c_custkey")
-        .option("path", pC).saveAsTable(tc)
-      (to, tc)
-    })
+        .option("path", s"$base/customer").saveAsTable(tc)
+      (to, tc, base)
+    } { case (to, tc, base) =>
+      Seq(to, tc).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      Storage.delete(base)
+    }
     val o = spark.table(ordersT)
     val c = spark.table(customerT)
     // merge hint: exercise the bucketed sort-merge path (a broadcast

@@ -1,10 +1,10 @@
 package graft.query
 
-import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.schema.IndexCache
 import graft.schema.Schemas.table
 
 /** Similarity search over the `embeddings` table (unit-norm 64-dim float
@@ -24,42 +24,22 @@ import graft.schema.Schemas.table
   */
 object Similarity {
 
-  // Persisted (vec_id, embedding, ‖v‖²) index — the shared base every
-  // multi-scan embedding query rides so round k never re-reads parquet
-  // or re-computes self-dots (the Dedup sigCache discipline: per-session
-  // WeakHashMap, fingerprint-keyed so a regenerated corpus at the same
-  // path rebuilds instead of serving stale norms).
-  private val normCache =
-    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, DataFrame]]()
-  private def normForSession(spark: SparkSession): ConcurrentHashMap[String, DataFrame] =
-    normCache.synchronized {
-      var m = normCache.get(spark)
-      if (m == null) { m = new ConcurrentHashMap[String, DataFrame](); normCache.put(spark, m) }
-      m
-    }
-
   /** The persisted normed-embeddings index: columns `(vec_id, embedding,
-    * nrm = float_dot(e, e))`, built once per (session, corpus
-    * generation) and served warm to every caller. ~16 MB at sf0.1; at
+    * nrm = float_dot(e, e))` — the shared base every multi-scan embedding
+    * query rides so round k never re-reads parquet or re-computes
+    * self-dots. Built once per (session, corpus generation) and served
+    * warm to every caller. ~16 MB at sf0.1; at
     * cluster scale this is the canonical pre-computed auxiliary column
     * a vector table carries anyway. */
   def normedEmbeddings(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.FloatVecDot.register(spark)
-    graft.schema.Schemas.evictingComputeIfAbsent(
-      normForSession(spark), dir,
-      graft.schema.Schemas.fingerprint(s"$dir/embeddings.parquet"))(
+    IndexCache(spark, "similarity.norms", dir,
+      Seq(s"$dir/embeddings.parquet"))(
       table(spark, dir, "embeddings")
         .select(col("vec_id"), col("embedding"),
           call_function("float_dot", col("embedding"), col("embedding"))
             .as("nrm"))
         .persist())(_.unpersist(false))
-  }
-
-  /** Unpersist and drop the cached norm indexes (all sessions). */
-  def clearNormCache(): Unit = normCache.synchronized {
-    normCache.values().forEach(m => m.values().forEach(df =>
-      try df.unpersist(false) catch { case _: Throwable => () }))
-    normCache.clear()
   }
 
   /** Dot product in double, sequential fold (bit-reproducible). Kept as the
@@ -235,11 +215,11 @@ object Similarity {
       .orderBy(col("vec_id"))
   }
 
-  // one coarse quantizer per test dir (analogous to ModelStore)
-  private val kmeansCache = new ConcurrentHashMap[String, KMeansModel]()
-
+  // one coarse quantizer per (session, test dir, embeddings generation),
+  // analogous to ModelStore
   private def quantizer(spark: SparkSession, dir: String, nCells: Int): KMeansModel =
-    kmeansCache.computeIfAbsent(s"$dir#$nCells", { _ =>
+    IndexCache(spark, "similarity.kmeans", (dir, nCells),
+        Seq(s"$dir/embeddings.parquet")) {
       // Standard IVF practice: the coarse quantizer trains on a corpus
       // SAMPLE (deterministic hash-sample, ~2k vectors is plenty for 16
       // centroids), then the full corpus is assigned. Full-corpus
@@ -257,7 +237,7 @@ object Similarity {
         .setInitMode("random")
         .setFeaturesCol("features").setPredictionCol("cell")
         .fit(trainSet)
-    })
+    }(_ => ())
 
   /** LSH-bucketed top-k (oracle-exact ANN): every vector gets a
     * `numPlanes`-bit sign bucket from hash60-derived random hyperplanes

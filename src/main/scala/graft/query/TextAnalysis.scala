@@ -2,6 +2,7 @@ package graft.query
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.schema.IndexCache
 import graft.schema.Schemas.table
 
 /** Text-analysis operators for training-data pipelines over `documents`:
@@ -13,9 +14,6 @@ object TextAnalysis {
 
   // ---- shared corpus token statistics ------------------------------------
 
-  private val tokenTfCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   /** The corpus TERM-FREQUENCY INDEX: one row per (doc_id, tok) with its
     * in-doc count, persisted once per (dir, documents-content
     * fingerprint) and probed by every term-statistics consumer (TF-IDF,
@@ -26,21 +24,17 @@ object TextAnalysis {
     * and at 100 TB is a whole corpus scan — paying it once per corpus
     * GENERATION instead of once per query is the difference between an
     * index probe and a re-index. Superseded generations are unpersisted
-    * by the fingerprint-keyed eviction (same discipline as the MinHash
-    * signature index, [[Dedup]] sigCache). Derived statistics (per-doc
-    * length, document frequency, corpus size) are one tiny aggregate
-    * over this index; deriving dl as sum(tf) is EXACT — it equals the
-    * token count by construction. */
+    * by [[IndexCache]]. Derived statistics (per-doc length, document
+    * frequency, corpus size) are one tiny aggregate over this index;
+    * deriving dl as sum(tf) is EXACT — it equals the token count by
+    * construction. */
   private[graft] def tokenTf(spark: SparkSession, dir: String): DataFrame =
-    graft.schema.Schemas.evictingComputeIfAbsent(tokenTfCache,
-      s"$dir/token_tf",
-      graft.schema.Schemas.fingerprint(s"$dir/documents.parquet"))(
+    IndexCache(spark, "text.tokenTf", dir, Seq(s"$dir/documents.parquet"))(
       spreadDocs(spark, dir, "text")
         .select(col("doc_id"), explode(Dedup.tokens(col("text"))).as("tok"))
         .groupBy(col("doc_id"), col("tok"))
         .agg(count(lit(1)).as("tf"))
-        .persist())(
-      _.unpersist(false))
+        .persist())(_.unpersist(false))
 
   /** Per-doc token counts (dl) derived from [[tokenTf]]: Σ tf over the
     * doc's terms — exact, one map-side-combined aggregate on the
@@ -48,24 +42,18 @@ object TextAnalysis {
   private[graft] def docLengths(spark: SparkSession, dir: String): DataFrame =
     tokenTf(spark, dir).groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
 
-  // corpus scalar constants (N, avgdl) — two driver-side numbers every
-  // BM25-family call would otherwise re-fetch with two jobs over the
-  // index; fingerprint-keyed like the index itself, so a regenerated
-  // corpus recomputes (stale entries are never served, and at 16 bytes
-  // each never evicted)
-  private val constCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Double, Double)]()
-
-  /** (document count, average doc length) for the corpus at `dir`. */
+  /** (document count, average doc length) for the corpus at `dir` — two
+    * driver-side numbers every BM25-family call would otherwise re-fetch
+    * with two jobs over the index; fingerprint-keyed like the index
+    * itself, so a regenerated corpus recomputes. */
   private[graft] def corpusConstants(spark: SparkSession,
       dir: String): (Double, Double) =
-    constCache.computeIfAbsent(s"$dir#" +
-      graft.schema.Schemas.fingerprint(s"$dir/documents.parquet"), { _ =>
+    IndexCache(spark, "text.constants", dir, Seq(s"$dir/documents.parquet")) {
       val n = table(spark, dir, "documents").count().toDouble
       val a = docLengths(spark, dir)
         .agg(avg(col("dl")).as("avgdl")).head().getDouble(0)
       (n, a)
-    })
+    }(_ => ())
 
   /** The documents table, projected to (doc_id +: cols) and hash-spread
     * across the cores when the corpus file layout cannot feed them
@@ -99,14 +87,6 @@ object TextAnalysis {
       table(spark, dir, "documents")
         .select(("doc_id" +: cols).map(col): _*),
       col("doc_id"))
-
-  /** Drop the persisted token index (test/corpus-regeneration hook). */
-  def clearCaches(): Unit = {
-    tokenTfCache.forEach((_, df) =>
-      try df.unpersist(false) catch { case _: Throwable => () })
-    tokenTfCache.clear()
-    constCache.clear()
-  }
 
   /** Composite quality score in [0,1] of a text column (length, token,
     * word-shape ratios — the standard cheap pre-filter for LLM corpus
@@ -410,33 +390,17 @@ object TextAnalysis {
       spark.sparkContext.parallelize(rows.toIndexedSeq, 1), out.schema)
   }
 
-  private val bpeStateCache = new java.util.WeakHashMap[SparkSession,
-    java.util.concurrent.ConcurrentHashMap[String,
-      (Seq[(Int, String, String, Long)], DataFrame)]]()
-
   /** The trained-BPE state, computed ONCE per (session, dir, corpus
     * fingerprint, rounds) and shared by the train/vocab/fertility
-    * consumers — the same persisted-index discipline as [[tokenTfCache]]:
+    * consumers — the same persisted-index discipline as [[tokenTf]]:
     * the three declared queries otherwise each re-run the full 16-round
     * loop (measured ~2 s apiece at sf0.1; one training, three probes
-    * after this). Superseded generations retire via the
-    * fingerprint-keyed eviction. */
+    * after this). Superseded generations free their checkpoint. */
   private def trainBpeShared(spark: SparkSession, dir: String,
-      rounds: Int): (Seq[(Int, String, String, Long)], DataFrame) = {
-    val m = bpeStateCache.synchronized {
-      var mm = bpeStateCache.get(spark)
-      if (mm == null) {
-        mm = new java.util.concurrent.ConcurrentHashMap[String,
-          (Seq[(Int, String, String, Long)], DataFrame)]()
-        bpeStateCache.put(spark, mm)
-      }
-      mm
-    }
-    graft.schema.Schemas.evictingComputeIfAbsent(m, s"$dir#bpe#$rounds",
-      graft.schema.Schemas.fingerprint(s"$dir/documents.parquet"))(
-      trainBpe(spark, dir, rounds))(
-      p => try freeCheckpoint(p._2) catch { case _: Throwable => () })
-  }
+      rounds: Int): (Seq[(Int, String, String, Long)], DataFrame) =
+    IndexCache(spark, "text.bpe", (dir, rounds),
+      Seq(s"$dir/documents.parquet"))(trainBpe(spark, dir, rounds))(
+      p => freeCheckpoint(p._2))
 
   /** Release the storage behind a training-loop frame. `Dataset
     * .unpersist` only drops cache-manager entries, so for a

@@ -2,6 +2,7 @@ package graft.query
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.schema.IndexCache
 import graft.schema.Schemas.table
 
 /** Round-12 warehouse maintenance surface: snapshot diffing, file-layout
@@ -286,7 +287,7 @@ object Warehouse2 {
     * bounded by the schema, never O(n²); the brand-count margins are a
     * tiny broadcast; min-support prunes before ranking. */
   // Per-order distinct-brand BASKETS (one sorted array per order) —
-  // persisted once per lineitem generation: the affinity query probes
+  // persisted once per (lineitem, part) generation: the affinity query probes
   // the basket grain THREE ways (pair emission, margin counts, order
   // total) and Catalyst has no cross-branch CSE, so without the index
   // every probe re-runs the fact⨝dim join + dedup. Same discipline as
@@ -296,13 +297,9 @@ object Warehouse2 {
   // trick — one exchange replaces the old distinct + repartition
   // double shuffle), and the pair fanout becomes an in-row combination
   // explode instead of an orderkey hash self-join probing 500 k rows.
-  private val basketCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private def orderBrandIndex(spark: SparkSession, dir: String): DataFrame =
-    graft.schema.Schemas.evictingComputeIfAbsent(basketCache,
-      s"$dir/order_brand",
-      graft.schema.Schemas.fingerprint(s"$dir/lineitem.parquet"))({
+    IndexCache(spark, "warehouse.orderBrand", dir,
+        Seq(s"$dir/lineitem.parquet", s"$dir/part.parquet")) {
       val df = table(spark, dir, "lineitem")
         .join(broadcast(table(spark, dir, "part")
           .select(col("p_partkey"), col("p_brand"))),
@@ -313,14 +310,7 @@ object Warehouse2 {
         .persist()
       df.count()
       df
-    })(_.unpersist(false))
-
-  /** Drop the persisted basket index (test/corpus-regeneration hook). */
-  def clearCaches(): Unit = {
-    basketCache.forEach((_, df) =>
-      try df.unpersist(false) catch { case _: Throwable => () })
-    basketCache.clear()
-  }
+    }(_.unpersist(false))
 
   def sqlBasketAffinity(spark: SparkSession, dir: String,
       minSupport: Int = 20, k: Int = 30): DataFrame = {

@@ -48,66 +48,21 @@ object Schemas {
 
   // ---- test-table access -------------------------------------------------
 
-  // weak session key: a stopped test session's cached plans drop with it
-  private val relCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, DataFrame]]())
-
-  /** Content fingerprint (total size + max mtime) of a parquet file or
-    * directory — ~1 ms of Files.walk, vs the ~60 ms eager footer
-    * read + file listing `spark.read.parquet` pays per call. Public:
-    * every build-once/probe-often index cache (Dedup signatures,
-    * Curation PQ codes, the co-purchase graph, Pipeline gram index)
-    * keys on it too, so a corpus regenerated at the same path can never
-    * serve a stale persisted index. */
-  def fingerprint(path: String): String = {
-    import scala.jdk.CollectionConverters._
-    val p = java.nio.file.Paths.get(path)
-    // A concurrent regeneration can delete files between the walk and the
-    // stat — exactly the window this function guards. Any IO error
-    // degrades to a UNIQUE token, i.e. a cache miss (the next call after
-    // the regeneration settles re-fingerprints cleanly); it must never
-    // surface as a query crash. The nanoTime tail keeps two degraded
-    // tokens from ever colliding.
-    try {
-      if (!java.nio.file.Files.exists(p)) "absent"
-      else {
-        val walk = java.nio.file.Files.walk(p) // javadoc: must be closed
-        val (size, mtime) =
-          try {
-            val files = walk.iterator().asScala
-              .filter(java.nio.file.Files.isRegularFile(_)).toSeq
-            (files.map(java.nio.file.Files.size).sum,
-              files.map(java.nio.file.Files.getLastModifiedTime(_)
-                .toMillis).maxOption.getOrElse(0L))
-          } finally walk.close()
-        s"$size@$mtime"
-      }
-    } catch {
-      case _: java.io.IOException | _: java.io.UncheckedIOException =>
-        s"racing@${System.nanoTime()}"
-    }
-  }
-
   /** Read one driver-provided test table from an sf directory.
     *
-    * The resolved DataFrame is cached per (session, dir, table, content
-    * fingerprint): `spark.read.parquet` eagerly lists files and reads a
-    * footer for schema inference on EVERY call (~60 ms driver-side —
-    * measured by [[graft.tools.ConstProbe]]), which a 200-query loop
-    * pays hundreds of times for the same dozen tables. A production
-    * deployment gets the same amortization from the catalog's relation
-    * cache; here the fingerprint key keeps a regenerated corpus at the
-    * same path from serving a stale file listing (same discipline as
-    * [[graft.ingest.Formats]]). DataFrames are immutable plans, so
-    * reuse across queries in one session is safe; the session key
-    * keeps plans from crossing SparkSessions in tests. */
+    * The resolved DataFrame is cached in [[IndexCache]] per (session,
+    * path, content fingerprint): `spark.read.parquet` eagerly lists files
+    * and reads a footer for schema inference on EVERY call (~60 ms
+    * driver-side — measured by [[graft.tools.ConstProbe]]), which a
+    * 200-query loop pays hundreds of times for the same dozen tables. A
+    * production deployment gets the same amortization from the catalog's
+    * relation cache; here the fingerprint keeps a regenerated corpus at
+    * the same path from serving a stale file listing. DataFrames are
+    * immutable plans, so reuse across queries in one session is safe;
+    * the session key keeps plans from crossing SparkSessions in tests. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    evictingComputeIfAbsent(
-      relCache.computeIfAbsent(spark,
-        _ => new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()),
-      path, fingerprint(path))(
+    IndexCache(spark, "table", path, Seq(path))(
       normalizePhysicalTypes(name, spark.read.parquet(path)))(_ => ())
   }
 
@@ -178,57 +133,7 @@ object Schemas {
     }
   }
 
-  /** `computeIfAbsent` for fingerprint-keyed caches WITH eviction of the
-    * superseded generation: the cache key is `prefix#fp`; on a miss,
-    * entries under the same `prefix#` with a DIFFERENT fingerprint are
-    * removed and handed to `retire` (unpersist a DataFrame, delete a
-    * temp dir) before the new entry is built. Without this, every corpus
-    * regeneration in a long-lived session leaks the old generation's
-    * persisted blocks / on-disk copies until JVM exit. The trailing `#`
-    * in the prefix match keeps sibling prefixes (`/a/b` vs `/a/bc`)
-    * apart. Removal uses the map's atomic remove, so concurrent misses
-    * retire each stale entry at most once. */
-  def evictingComputeIfAbsent[V](
-      map: java.util.concurrent.ConcurrentHashMap[String, V],
-      prefix: String, fp: String)(build: => V)(retire: V => Unit): V = {
-    val key = s"$prefix#$fp"
-    val hit = map.get(key)
-    if (hit != null) hit
-    else {
-      import scala.jdk.CollectionConverters._
-      map.keySet().asScala.filter(k => k != key && k.startsWith(s"$prefix#"))
-        .foreach { stale =>
-          val v = map.remove(stale)
-          if (v != null) try retire(v) catch { case _: Throwable => () }
-        }
-      // build OUTSIDE the map's compute: a build thunk that resolves a
-      // BASE index through this same cache (derived-index composition)
-      // would otherwise be a recursive computeIfAbsent — which
-      // ConcurrentHashMap rejects with IllegalStateException("Recursive
-      // update") WHEN the two keys land in the same hash bin. The keys
-      // embed content fingerprints, so bin collisions arrive and vanish
-      // with testdata regenerations — a crash that appears "randomly"
-      // across corpus generations (observed: dedup_groups → minhash
-      // candidates). Cost of the non-reentrant form: two racing threads
-      // may both build; the loser's value is retired, the winner is
-      // served to both — builds here are idempotent persisted plans, so
-      // at-most-once was a nicety, recursion-safety is correctness.
-      val built = build
-      val prev = map.putIfAbsent(key, built)
-      if (prev != null) {
-        if (!prev.equals(built)) try retire(built) catch { case _: Throwable => () }
-        prev
-      } else built
-    }
-  }
-
-  /** Drop cached relations (test/corpus-regeneration hook). */
-  def clearCaches(): Unit = relCache.clear()
-
   // ---- scan-layout-aware spreading --------------------------------------
-
-  private val slicesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
 
   /** Upper bound on how many slices [[scanSlices]] ever reports — the
     * gate only compares against the core count, so anything past a few
@@ -244,36 +149,32 @@ object Schemas {
     * tokenization, shingling) then runs on one core of the whole
     * machine (guide §2.5 "input skew: one huge unsplittable file").
     *
-    * The walk goes through the Hadoop `FileSystem` API — Spark's own
-    * view of storage — so `hdfs://`/`s3a://` layouts are measured like
-    * local ones instead of failing open to "1 slice → always shuffle"
-    * the way a `java.nio` walk would (r20 verdict #2). Per-file slice
-    * counts are capped by the parquet footer's row-group count — a
-    * single-row-group file is ONE task however large, exactly the
-    * unsplittable pathology spread() targets (r20 advice) — with the
-    * footer read only when the size estimate says the file would split
-    * at all. Any storage error fails CLOSED to "plenty of slices": at
-    * scale the safe wrong answer is "add no exchange". Cached per
-    * (path, maxSplit, fingerprint). */
+    * The walk goes through [[Storage]] — Spark's own view of storage —
+    * so `hdfs://`/`s3a://` layouts are measured like local ones instead
+    * of failing open to "1 slice → always shuffle" the way a `java.nio`
+    * walk would (r20 verdict #2). Per-file slice counts are capped by the
+    * parquet footer's row-group count — a single-row-group file is ONE
+    * task however large, exactly the unsplittable pathology spread()
+    * targets (r20 advice) — with the footer read only when the size
+    * estimate says the file would split at all. Any storage error fails
+    * CLOSED to "plenty of slices": at scale the safe wrong answer is
+    * "add no exchange". Cached per (path, maxSplit, fingerprint). */
   def scanSlices(spark: SparkSession, sfDir: String, name: String): Int = {
     val path = s"$sfDir/$name.parquet"
     val maxSplit = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
       .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
       .getOrElse(128L * 1024 * 1024)
     val hconf = spark.sessionState.newHadoopConf()
-    evictingComputeIfAbsent(slicesCache, s"slices:$path:$maxSplit",
-      fingerprint(path)) {
+    IndexCache(spark, "slices", (path, maxSplit), Seq(path)) {
       val n =
         try {
-          val hpath = new org.apache.hadoop.fs.Path(path)
-          val fs = hpath.getFileSystem(hconf)
-          if (!fs.exists(hpath)) 1L
+          if (!Storage.exists(path)) 1L
           else {
-            val it = fs.listFiles(hpath, true)
+            val it = Storage.files(path)
             var total = 0L
             while (it.hasNext && total < slicesEnough) {
               val st = it.next()
-              if (st.isFile && !st.getPath.getName.startsWith("_")) {
+              if (!st.getPath.getName.startsWith("_")) {
                 val bySize = math.max(1L,
                   (st.getLen + maxSplit - 1) / maxSplit)
                 total +=
@@ -284,7 +185,7 @@ object Schemas {
             total
           }
         } catch { case _: Throwable => slicesEnough }
-      Integer.valueOf(math.min(n, Int.MaxValue.toLong).toInt)
+      math.min(n, Int.MaxValue.toLong).toInt
     }(_ => ())
   }
 

@@ -3,8 +3,9 @@ package graft.streaming
 import java.util.UUID
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamReader, GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types.StructType
+import graft.schema.{IndexCache, Storage}
 
 /** Structured-Streaming-native queries over the events stream. These run a
   * REAL streaming query (readStream → transform → memory sink) drained
@@ -20,25 +21,6 @@ import org.apache.spark.sql.types.StructType
   */
 object StreamQueries {
 
-  // temp store dirs for the foreachBatch upsert, deleted at JVM exit
-  // (the Relational3 bucket-layout convention)
-  private val upsertDirs =
-    java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      upsertDirs.forEach { d =>
-        try {
-          import scala.jdk.CollectionConverters._
-          val p = java.nio.file.Paths.get(d)
-          if (java.nio.file.Files.exists(p))
-            java.nio.file.Files.walk(p).iterator().asScala.toSeq
-              .sortBy(-_.getNameCount)
-              .foreach(f => java.nio.file.Files.deleteIfExists(f))
-        } catch { case _: Throwable => () }
-      }
-    }, "graft-upsert-store-cleanup"))
-  }
-
   /** Canonical events schema (`ts` as TIMESTAMP(MICROS) UTC): the probe
     * fallback for unreadable/empty paths, and the declared schema for
     * spec-written canonical dirs. */
@@ -51,20 +33,17 @@ object StreamQueries {
   // drifting the OTHER columns next (props/event_type as un-annotated
   // BINARY, integer ids at a different width). A streaming source must
   // declare its schema up front, so probe the FULL footer once per dir
-  // with a batch read and declare exactly what is stored — declaring a
+  // and events generation (a corpus regenerated at the same path with
+  // another physical shape re-probes) with a batch read and declare
+  // exactly what is stored — declaring a
   // hoped-for schema over drifted storage either errors or silently
   // corrupts (the round-10 ts incident: every window collapsed 1000×).
   // [[normalizeStreamEvents]] then casts the loaded columns to the
   // canonical logical types, mirroring Schemas.events/table on the
   // batch side.
-  private val eventsSchemaByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
   private def eventsStoredSchema(spark: SparkSession, dir: String): StructType =
-    // fingerprint-keyed like every build-once/probe-often cache (Schemas
-    // relCache, Dedup sigCache): a corpus regenerated at the same path
-    // with another physical shape must re-probe, not serve a stale schema
-    graft.schema.Schemas.evictingComputeIfAbsent(eventsSchemaByDir, dir,
-      graft.schema.Schemas.fingerprint(s"$dir/events.parquet")) {
+    IndexCache(spark, "stream.eventsSchema", dir,
+      Seq(s"$dir/events.parquet")) {
       // read the events path directly (works whether events.parquet is a
       // single file, as in the sf dirs, or a directory of part files, as
       // specs write). An unreadable/empty path — e.g. a 0-row write that
@@ -113,20 +92,7 @@ object StreamQueries {
       singleBatch: Boolean = false,
       filesPerTrigger: Option[Int] = None): DataFrame = {
     val stored = eventsStoredSchema(spark, dir)
-    // STORED LAYOUT is probed, like the stored types: the driver ships
-    // events.parquet as a single FILE, but a Spark-written corpus has it
-    // as a DIRECTORY of part files. The pathGlobFilter matches leaf file
-    // names, so pointing the glob form at a directory layout silently
-    // streams ZERO rows — the same silent-drift class as the ts-type
-    // regression, closed the same way (probe, then pick).
-    val evPath = java.nio.file.Paths.get(dir, "events.parquet")
-    val isDirLayout = java.nio.file.Files.isDirectory(evPath)
-    val reader0 = spark.readStream.schema(stored)
-    val reader =
-      if (isDirLayout) reader0
-      // FileStreamSource wants a directory: stream the sf dir, filtered to
-      // the events file (a Kafka source swaps in here via StreamTransport)
-      else reader0.option("pathGlobFilter", "events.parquet")
+    val reader = spark.readStream.schema(stored)
     // singleBatch pins the whole drain into ONE micro-batch (AvailableNow
     // otherwise splits multi-file input by maxFilesPerTrigger, advancing
     // the watermark between batches) — required where a query's
@@ -136,8 +102,7 @@ object StreamQueries {
       if (singleBatch) reader.option("maxFilesPerTrigger", Int.MaxValue)
       else filesPerTrigger.fold(reader)(n =>
         reader.option("maxFilesPerTrigger", n))
-    val src = paced.parquet(if (isDirLayout) evPath.toString else dir)
-    normalizeStreamEvents(src, stored)
+    normalizeStreamEvents(streamTable(paced, dir, "events"), stored)
     // Measured negative (r21 DrainProf): spreading the single-file scan
     // with a post-source repartition — the batch Schemas.spread recipe —
     // SLOWED every probed drain 15-45% (ohlc 1.37→1.99 s, two_level
@@ -145,6 +110,23 @@ object StreamQueries {
     // cheaper than the extra per-batch exchange of the full input. The
     // single scan task is not the drain floor; state-store commits and
     // per-batch fixed costs are.
+  }
+
+  /** Stream `dir/<table>.parquet` in whichever LAYOUT is stored, probed
+    * like the stored types: the sf testdata ships each table as one FILE,
+    * but a Spark-written corpus has it as a DIRECTORY of part files. The
+    * pathGlobFilter the file form needs matches leaf file names, so
+    * pointing it at a directory layout silently streams ZERO rows — the
+    * same silent-drift class as the ts-type regression, closed the same
+    * way (probe, then pick). The probe goes through [[Storage]], so a
+    * `file:`/`hdfs://` corpus is seen as the directory it is. */
+  private def streamTable(reader: DataStreamReader, dir: String,
+      table: String): DataFrame = {
+    val path = s"$dir/$table.parquet"
+    if (Storage.isDirectory(path)) reader.parquet(path)
+    // FileStreamSource wants a directory: stream the sf dir, filtered to
+    // the table file (a Kafka source swaps in here via StreamTransport)
+    else reader.option("pathGlobFilter", s"$table.parquet").parquet(dir)
   }
 
   /** Run `build(stream)` to completion (AvailableNow drain into a memory
@@ -223,7 +205,7 @@ object StreamQueries {
         spark.conf.set("spark.sql.shuffle.partitions", prev)
         spark.conf.set(
           "spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-        ckpt.foreach(deleteRecursively)
+        ckpt.foreach(Storage.delete)
       }
       spark.table(name)
     }
@@ -256,18 +238,6 @@ object StreamQueries {
       Some(shm.resolve(s"graft-ckpt-$name").toString)
     else None
   }
-
-  private[graft] def deleteRecursively(dir: String): Unit =
-    try {
-      import scala.jdk.CollectionConverters._
-      val p = java.nio.file.Paths.get(dir)
-      if (java.nio.file.Files.exists(p)) {
-        val walk = java.nio.file.Files.walk(p)
-        try walk.iterator().asScala.toSeq.sortBy(-_.getNameCount)
-          .foreach(f => java.nio.file.Files.deleteIfExists(f))
-        finally walk.close()
-      }
-    } catch { case _: Throwable => () }
 
   /** Event-time tumbling-window aggregation with a watermark — count and
     * sum of `value` per (hour window, event_type). Full-drain result ==
@@ -699,9 +669,7 @@ object StreamQueries {
   def streamForeachbatchUpsertFrom(spark: SparkSession, dir: String,
       rawEvents: Boolean, filesPerTrigger: Option[Int] = None): DataFrame =
     spark.synchronized {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft-upsert").toString
-      upsertDirs.add(base)
+      val base = Storage.tempDir("graft-upsert")
       def argmaxPerKey(df: DataFrame): DataFrame =
         df.groupBy(col("user_id"))
           .agg(max(struct(col("ts"), col("event_id"), col("value"))).as("m"))
@@ -711,22 +679,14 @@ object StreamQueries {
       // driver corpus gets the full footer probe + normalization
       val stored =
         if (rawEvents) eventsStoredSchema(spark, dir) else eventsSchemaMicros
-      // probe the stored LAYOUT like streamEvents does: a Spark-written
-      // corpus has events.parquet as a DIRECTORY of part files, and the
-      // leaf-name glob matches none of them — the x10 sweep caught this
-      // path silently draining zero batches
-      val evPath = java.nio.file.Paths.get(dir, "events.parquet")
-      val isDirLayout =
-        rawEvents && java.nio.file.Files.isDirectory(evPath)
       val reader0 = spark.readStream.schema(stored)
-      val reader1 =
-        if (rawEvents && !isDirLayout)
-          reader0.option("pathGlobFilter", "events.parquet")
-        else reader0
-      val reader = filesPerTrigger.fold(reader1)(n =>
-        reader1.option("maxFilesPerTrigger", n))
+      val reader = filesPerTrigger.fold(reader0)(n =>
+        reader0.option("maxFilesPerTrigger", n))
+      // the corpus layout is probed (the x10 sweep caught this path
+      // silently draining zero batches from a directory layout)
       val src = normalizeStreamEvents(
-        reader.parquet(if (isDirLayout) evPath.toString else dir), stored)
+        if (rawEvents) streamTable(reader, dir, "events")
+        else reader.parquet(dir), stored)
       @volatile var latest: Option[String] = None
       val upsertCkpt = tmpfsCheckpointDir(
         "upsert" + UUID.randomUUID().toString.replace("-", ""))
@@ -749,7 +709,7 @@ object StreamQueries {
       val q = upsertCkpt.map(c => w0.option("checkpointLocation", c))
         .getOrElse(w0).start()
       try awaitBounded(spark, q, "foreachbatch_upsert")
-      finally upsertCkpt.foreach(deleteRecursively)
+      finally upsertCkpt.foreach(Storage.delete)
       spark.read.parquet(latest.getOrElse(
         sys.error("upsert drain produced no batches")))
         .select(col("user_id"), unix_micros(col("ts")).as("last_ts_us"),
@@ -757,12 +717,6 @@ object StreamQueries {
           col("value").as("last_value"))
         .orderBy(col("user_id"))
     }
-
-  // staged two-file replays for the late-data query, one per source dir
-  // (rebuilt at most once per JVM; files are plain parquet any reader
-  // can inspect)
-  private val lateReplayDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Watermark late-data semantics: a three-phase replay where a
     * tranche of OLD events (`event_id % 7 = 0 AND ts < Jan 15` —
@@ -812,10 +766,11 @@ object StreamQueries {
     // LAST) holds only while the slice schedule stays below them
     require(bulkFiles <= 512, s"bulkFiles=$bulkFiles would collide with " +
       "the late tranche's fixed mtime and break its replays-last invariant")
-    val arrivals = lateReplayDirs.computeIfAbsent(s"$dir#$bulkFiles", _ => {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft-late-replay").toString
-      upsertDirs.add(base)
+    // the staged replay files, built once per (session, source dir,
+    // split, events generation); plain parquet any reader can inspect
+    val staged = IndexCache(spark, "stream.lateReplay", (dir, bulkFiles),
+        Seq(s"$dir/events.parquet")) {
+      val base = Storage.tempDir("graft-late-replay")
       val ev = graft.schema.Schemas.events(spark, dir)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
@@ -849,13 +804,13 @@ object StreamQueries {
         }
       }
       writeOne(ev.filter(late), "batch_2", 3000000L)
-      s"$base/arrivals"
-    })
+      base
+    }(Storage.delete)
     val s = spark.readStream
       .schema(StructType.fromDDL("event_id LONG, ts TIMESTAMP, " +
         "user_id LONG, event_type STRING, value DOUBLE"))
       .option("maxFilesPerTrigger", "1")
-      .parquet(arrivals)
+      .parquet(s"$staged/arrivals")
     val agg = s.withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -1127,15 +1082,9 @@ object StreamQueries {
       filesPerTrigger: Option[Int]): DataFrame = {
     val schema = StructType.fromDDL(
       "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
-    val docPath = java.nio.file.Paths.get(dir, "documents.parquet")
-    val isDirLayout = java.nio.file.Files.isDirectory(docPath)
-    val reader0 = spark.readStream.schema(schema)
-    val reader1 =
-      if (isDirLayout) reader0
-      else reader0.option("pathGlobFilter", "documents.parquet")
-    val reader = filesPerTrigger.fold(reader1)(n =>
-      reader1.option("maxFilesPerTrigger", n))
-    reader.parquet(if (isDirLayout) docPath.toString else dir)
+    val reader = spark.readStream.schema(schema)
+    streamTable(filesPerTrigger.fold(reader)(n =>
+      reader.option("maxFilesPerTrigger", n)), dir, "documents")
   }
 
   /** STREAMING incremental near-dup: the micro-batch twin of
@@ -1242,15 +1191,9 @@ object StreamQueries {
       filesPerTrigger: Option[Int]): DataFrame = {
     val schema = StructType.fromDDL(
       "vec_id LONG, embedding ARRAY<FLOAT>, label INT")
-    val embPath = java.nio.file.Paths.get(dir, "embeddings.parquet")
-    val isDirLayout = java.nio.file.Files.isDirectory(embPath)
-    val reader0 = spark.readStream.schema(schema)
-    val reader1 =
-      if (isDirLayout) reader0
-      else reader0.option("pathGlobFilter", "embeddings.parquet")
-    val reader = filesPerTrigger.fold(reader1)(n =>
-      reader1.option("maxFilesPerTrigger", n))
-    reader.parquet(if (isDirLayout) embPath.toString else dir)
+    val reader = spark.readStream.schema(schema)
+    streamTable(filesPerTrigger.fold(reader)(n =>
+      reader.option("maxFilesPerTrigger", n)), dir, "embeddings")
   }
 
   /** STREAMING IVF delta assignment — the micro-batch twin of
@@ -1895,14 +1838,8 @@ object StreamQueries {
   /** Streaming view of the embeddings table (file or directory layout,
     * probed like [[streamEvents]]). */
   private def streamEmbeddings(spark: SparkSession, dir: String): DataFrame = {
-    val p = java.nio.file.Paths.get(dir, "embeddings.parquet")
-    val isDir = java.nio.file.Files.isDirectory(p)
-    val reader0 = spark.readStream.schema(StructType.fromDDL(
-      "vec_id LONG, embedding ARRAY<FLOAT>, label INT"))
-    val reader =
-      if (isDir) reader0
-      else reader0.option("pathGlobFilter", "embeddings.parquet")
-    reader.parquet(if (isDir) p.toString else dir)
+    streamTable(spark.readStream.schema(StructType.fromDDL(
+      "vec_id LONG, embedding ARRAY<FLOAT>, label INT")), dir, "embeddings")
   }
 
   case class CalIn(bin: Int, scoreU: Long, pos: Long)
@@ -1993,14 +1930,8 @@ object StreamQueries {
     * stored o_orderdate physical type (DATE vs TIMESTAMP) varies by
     * generation, the ts-type lesson. */
   private def streamOrders(spark: SparkSession, dir: String): DataFrame = {
-    val p = java.nio.file.Paths.get(dir, "orders.parquet")
-    val isDir = java.nio.file.Files.isDirectory(p)
-    val reader0 = spark.readStream.schema(StructType.fromDDL(
-      "o_totalprice DOUBLE"))
-    val reader =
-      if (isDir) reader0
-      else reader0.option("pathGlobFilter", "orders.parquet")
-    reader.parquet(if (isDir) p.toString else dir)
+    streamTable(spark.readStream.schema(StructType.fromDDL(
+      "o_totalprice DOUBLE")), dir, "orders")
   }
 
   case class DigitIn(digit: Int, one: Long)

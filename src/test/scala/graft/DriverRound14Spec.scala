@@ -237,7 +237,7 @@ class DriverRound14Spec extends SparkSpec {
   test("ModelStore.forDir: every served model crosses the save→load " +
       "disk boundary, and a warm persisted store skips retraining") {
     import graft.ml.ModelStore
-    ModelStore.clear()
+    graft.schema.IndexCache.clear()
     val path = ModelStore.persistedPath(sf, 1)
     // force a COLD store: the persisted layout survives JVMs by design
     // (fingerprint-keyed), so a prior run may have left it warm
@@ -253,7 +253,7 @@ class DriverRound14Spec extends SparkSpec {
       .orderBy(col("event_id")).limit(1).drop("event_id")
     val p1 = m1.transform(req).select("prediction").head().getDouble(0)
     // API-restart simulation: cache cleared, store warm → load, no fit
-    ModelStore.clear()
+    graft.schema.IndexCache.clear()
     val t1 = ModelStore.trains.get()
     val m2 = ModelStore.forDir(spark, sf, 1)
     assert(ModelStore.trains.get() == t1,

@@ -15,7 +15,7 @@ class DriverRound15Spec extends SparkSpec {
   test("S14: training writes model_<v>_rf_feature_importances.json beside " +
       "the model dir — sorted desc, the 19 feature keys, sum ≈ 1 " +
       "(spark_trainer.py:87-99; docker-compose.yml:99 gates on it)") {
-    ModelStore.clear()
+    graft.schema.IndexCache.clear()
     val modelPath = new java.io.File(ModelStore.persistedPath(sf, 1))
     val art = new java.io.File(ModelStore.importancesPath(sf, 1))
     // force a COLD store so THIS call performs the artifact write
@@ -44,7 +44,7 @@ class DriverRound15Spec extends SparkSpec {
     }
     // warm-store restart (the compose sentinel's premise): artifact still
     // present, no retrain, no rewrite needed
-    ModelStore.clear()
+    graft.schema.IndexCache.clear()
     val t0 = ModelStore.trains.get()
     ModelStore.forDir(spark, sf, 1)
     assert(ModelStore.trains.get() == t0 && art.exists())
@@ -53,7 +53,7 @@ class DriverRound15Spec extends SparkSpec {
   test("ModelStore evicts superseded fingerprint generations of the same " +
       "dataset dir (regenerated corpora must not accumulate stale model " +
       "trees in tmpdir)") {
-    ModelStore.clear()
+    graft.schema.IndexCache.clear()
     val current = new java.io.File(ModelStore.modelsDir(sf))
     // a fake model tree from a superseded generation of the SAME dir
     val stale = new java.io.File(current.getParentFile,

@@ -13,7 +13,7 @@ class DriverRound16Spec extends SparkSpec {
   test("substring family shares ONE window-census build: exact + " +
       "multiscale + maximal trigger exactly one tokenize pass " +
       "(the ModelStore `trains` discipline)") {
-    Dedup.clearCaches()
+    graft.schema.IndexCache.clear()
     val b0 = Dedup.censusBuilds.get()
     Dedup.dedupExactSubstring(spark, sf).count()
     Dedup.dedupSubstringMultiscale(spark, sf).count()
@@ -162,7 +162,7 @@ class DriverRound16Spec extends SparkSpec {
 
   test("a non-family width falls back to its own cached pass (no " +
       "cross-width contamination of the shared index)") {
-    Dedup.clearCaches()
+    graft.schema.IndexCache.clear()
     val b0 = Dedup.censusBuilds.get()
     val w9 = Dedup.dedupExactSubstring(spark, sf, windowTokens = 9)
     assert(w9.count() > 0)

@@ -54,7 +54,7 @@ class EdgeCaseSpec extends org.scalatest.funsuite.AnyFunSuite {
       ((s, d) => graft.query.Curation2.corpusTemperatureMix(s, d)))
 
   test("empty corpus: every corpus-level operator returns a well-formed empty result") {
-    graft.query.Dedup.clearCaches()
+    graft.schema.IndexCache.clear()
     corpusOps.foreach { case (name, op) =>
       val out =
         try op(spark, emptyDir).collect()
@@ -62,7 +62,7 @@ class EdgeCaseSpec extends org.scalatest.funsuite.AnyFunSuite {
           fail(s"$name threw on the empty corpus: $e") }
       assert(out.isEmpty, s"$name returned rows on an empty corpus")
     }
-    graft.query.Dedup.clearCaches()
+    graft.schema.IndexCache.clear()
   }
 
   test("empty corpus: the round-14 eval/curation/embedding wave " +
@@ -165,7 +165,7 @@ class EdgeCaseSpec extends org.scalatest.funsuite.AnyFunSuite {
   }
 
   test("single-row corpus: no self-pairs, singletons kept, stats well-formed") {
-    graft.query.Dedup.clearCaches()
+    graft.schema.IndexCache.clear()
     // text near-dup ops PLANT a twin (doc_id+1000000) for doc_id<10 by
     // declared design — a singleton corpus must pair with its twin and
     // NOTHING else
@@ -191,7 +191,7 @@ class EdgeCaseSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(mix.length == 1 && mix.head.getLong(1) == 1L
       && mix.head.getLong(2) == 1L,
       "temperature mix must keep the only doc whole")
-    graft.query.Dedup.clearCaches()
+    graft.schema.IndexCache.clear()
   }
 
   /** Star-schema dir with EMPTY fact/dim tables (round-12 family). */
@@ -352,7 +352,7 @@ class EdgeCaseSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   test("round-14 family: empty star schema degrades to well-formed results") {
     import graft.query.{Analytics, Analytics4, Analytics5}
-    Analytics.clearCaches()
+    graft.schema.IndexCache.clear()
     assert(Analytics5.sampleWeighted(spark, emptyStarDir).collect().isEmpty)
     assert(Analytics5.aggWeightedMedian(spark, emptyStarDir)
       .collect().isEmpty)
@@ -404,7 +404,7 @@ class EdgeCaseSpec extends org.scalatest.funsuite.AnyFunSuite {
       .streamUserTopValues(spark, emptyStarDir).collect().isEmpty)
     assert(graft.streaming.StreamQueries
       .streamUserTypeCounts(spark, emptyStarDir).collect().isEmpty)
-    Analytics.clearCaches()
+    graft.schema.IndexCache.clear()
   }
 
   /** Star-schema dir with exactly ONE row per table. */
@@ -426,7 +426,7 @@ class EdgeCaseSpec extends org.scalatest.funsuite.AnyFunSuite {
   test("round-14 family: single-row star degrades to well-formed results") {
     import graft.query.{Analytics, Analytics5}
     import org.apache.spark.sql.functions._
-    Analytics.clearCaches()
+    graft.schema.IndexCache.clear()
     // one order, one customer: weighted sample of size 1, exact key
     val sw = Analytics5.sampleWeighted(spark, oneStarDir).collect()
     assert(sw.length == 1)
@@ -475,14 +475,14 @@ class EdgeCaseSpec extends org.scalatest.funsuite.AnyFunSuite {
       "a lone class IS the corpus distribution — TV must be 0")
     val fk = Analytics5.dqJoinProfile(spark, oneStarDir).collect()
     assert(fk.length == 2)
-    Analytics.clearCaches()
+    graft.schema.IndexCache.clear()
   }
 
   test("round-15 family: empty and single-row corpora degrade to " +
       "well-formed results") {
     import graft.query.{Analytics5, Multimodal, TextAnalysis, Analytics}
     import graft.streaming.StreamQueries
-    Analytics.clearCaches()
+    graft.schema.IndexCache.clear()
     // EMPTY corpus: recurrences, decompositions, spectra, moments, and
     // the graph/text/multimodal round-15 ops all return zero rows
     assert(Analytics5.anomalyAlertDebounce(spark, emptyStarDir)
@@ -504,7 +504,7 @@ class EdgeCaseSpec extends org.scalatest.funsuite.AnyFunSuite {
     val tt = Analytics5.aggTtestWelch(spark, emptyStarDir).collect()
     assert(tt.length <= 1)
     tt.foreach { r => assert(r.getLong(0) == 0L && r.getLong(1) == 0L) }
-    Analytics.clearCaches()
+    graft.schema.IndexCache.clear()
     // SINGLE-row corpus: the lone event is always admitted/alerted; the
     // one-hour series cannot fill a 25-row trend frame (null trend); a
     // single doc yields ≤3 keywords ranked from 1; a single part is its
@@ -541,13 +541,13 @@ class EdgeCaseSpec extends org.scalatest.funsuite.AnyFunSuite {
       && hits.head.getFloat(2) == 1.0f)
     val sc = Multimodal.multimodalSceneCuts(spark, oneStarDir).collect()
     assert(sc.length == 1 && sc.head.getLong(2) >= 1L)
-    Analytics.clearCaches()
+    graft.schema.IndexCache.clear()
   }
 
   test("round-15 second wave: empty corpus degrades to well-formed results") {
     import graft.query.{Analytics2, Analytics5, TextAnalysis, Warehouse2}
     import graft.streaming.StreamQueries
-    graft.query.Analytics.clearCaches()
+    graft.schema.IndexCache.clear()
     // empty-result family: no input rows → no output rows, never a crash
     assert(Warehouse2.sqlCustomerRfm(spark, emptyStarDir).collect().isEmpty)
     assert(Warehouse2.sqlAbcAnalysis(spark, emptyStarDir).collect().isEmpty)
@@ -576,7 +576,7 @@ class EdgeCaseSpec extends org.scalatest.funsuite.AnyFunSuite {
     val kap = Analytics5.evalCohensKappa(spark, emptyStarDir).collect()
     assert(kap.length <= 1)
     kap.foreach(r => assert(r.getLong(0) == 0L))
-    graft.query.Analytics.clearCaches()
+    graft.schema.IndexCache.clear()
   }
 
   test("round-15 third wave (driver round): empty corpus degrades to " +
@@ -602,13 +602,13 @@ class EdgeCaseSpec extends org.scalatest.funsuite.AnyFunSuite {
       .collect().isEmpty)
     assert(graft.streaming.StreamQueries.streamDqBenford(spark, emptyStarDir)
       .collect().isEmpty)
-    graft.query.Analytics.clearCaches()
+    graft.schema.IndexCache.clear()
   }
 
   test("round-16 family: empty corpus degrades to well-formed results") {
     import graft.query.Analytics6
     import graft.streaming.StreamQueries
-    graft.query.Analytics.clearCaches()
+    graft.schema.IndexCache.clear()
     // empty-result family: no rows in → no rows out, never a throw
     assert(Analytics6.evalCliffsDelta(spark, emptyStarDir)
       .collect().isEmpty)
@@ -645,13 +645,13 @@ class EdgeCaseSpec extends org.scalatest.funsuite.AnyFunSuite {
     // null over an empty histogram — auditable, not a crash)
     assert(Analytics6.privacyDpQuantile(spark, emptyStarDir)
       .collect().length == 3)
-    graft.query.Analytics.clearCaches()
+    graft.schema.IndexCache.clear()
   }
 
   test("round-17 family: empty and single-row corpora degrade to " +
       "well-formed results") {
     import graft.query.{Analytics7, Similarity}
-    graft.query.Analytics.clearCaches()
+    graft.schema.IndexCache.clear()
     // empty: no events → no DP releases / no BCa row (n_items > 0
     // gate); no embeddings → no quantizer, no cells; no lineitem → no
     // edges, no sources
@@ -663,7 +663,7 @@ class EdgeCaseSpec extends org.scalatest.funsuite.AnyFunSuite {
       .collect().isEmpty)
     assert(Analytics7.graphSsspWeighted(spark, emptyStarDir)
       .collect().isEmpty)
-    graft.query.Analytics.clearCaches()
+    graft.schema.IndexCache.clear()
     // singleton: one event releases one noisy row; the BCa epilogue
     // survives degenerate replicas (n_eff may be 0 — the statistic is
     // meaningless but the release is well-formed, never a crash); the
@@ -679,6 +679,6 @@ class EdgeCaseSpec extends org.scalatest.funsuite.AnyFunSuite {
       .collect().isEmpty)
     assert(Analytics7.graphSsspWeighted(spark, oneStarDir)
       .collect().isEmpty)
-    graft.query.Analytics.clearCaches()
+    graft.schema.IndexCache.clear()
   }
 }

@@ -227,10 +227,7 @@ class PartitionInvarianceSpec extends SparkSpec {
       // assignment, Formats conversions) so BOTH partition settings run
       // the full index-build lineage — a cached InMemoryTableScan from
       // the first run would short-circuit the second and prove nothing
-      graft.query.Dedup.clearCaches()
-      graft.query.Curation.clearCaches()
-      graft.query.Analytics.clearCaches()
-      graft.ingest.Formats.clearCaches()
+      graft.schema.IndexCache.clear()
       // fresh lineage per run; toString canonicalizes every column type
       build().collect().map(_.toString).toSeq
     } finally {

@@ -527,11 +527,11 @@ class PlanSpec extends SparkSpec {
   }
 
   test("graph_kcore: survivor-set semi-joins broadcast; edge list never re-shuffles") {
-    graft.query.Analytics.clearCaches()
+    graft.schema.IndexCache.clear()
     val p = graft.query.Analytics5.graphKcore(spark, sf)
       .queryExecution.executedPlan.toString
     assert(!p.contains("SortMergeJoin"), p)
-    graft.query.Analytics.clearCaches()
+    graft.schema.IndexCache.clear()
   }
 
   test("dedup_time_window + anomaly_rolling_z: ONE exchange each (the window shuffle)") {
@@ -548,7 +548,7 @@ class PlanSpec extends SparkSpec {
 
   test("graph_hits: top-k is TakeOrdered over the checkpointed vector; " +
       "the only join is the broadcast 1-row max") {
-    graft.query.Analytics.clearCaches()
+    graft.schema.IndexCache.clear()
     // rounds materialize eagerly via localCheckpoint, so the FINAL plan
     // holds only the normalization: checkpointed |parts|-row vector ⨯
     // broadcast 1-row max → TakeOrdered. The per-round broadcast-join
@@ -559,7 +559,7 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"), p)
     assert(p.contains("TakeOrderedAndProject"), p)
     assert(p.contains("BroadcastExchange"), p)
-    graft.query.Analytics.clearCaches()
+    graft.schema.IndexCache.clear()
   }
 
   test("agg_ttest_welch + agg_skew_kurtosis: single partial-aggregate pass, " +

@@ -276,7 +276,7 @@ class Round15Spec extends SparkSpec {
   }
 
   test("graph_modularity: Q_c bounds hold and masses reconcile with 2m") {
-    graft.query.Analytics.clearCaches()
+    graft.schema.IndexCache.clear()
     val rows = Analytics5.graphModularity(spark, sf).collect()
     assert(rows.nonEmpty)
     val twoM = rows.head.getLong(3)
@@ -289,7 +289,7 @@ class Round15Spec extends SparkSpec {
         "a community's intra-edge endpoints cannot exceed its degree mass")
       assert(r.getFloat(4) >= -0.26f && r.getFloat(4) <= 1.0f)
     }
-    graft.query.Analytics.clearCaches()
+    graft.schema.IndexCache.clear()
   }
 
   test("text_boilerplate_frac: fractions bounded, chunk counts match " +
@@ -360,7 +360,7 @@ class Round15Spec extends SparkSpec {
 
   test("graph_random_walks: every consecutive path pair is a real edge, " +
       "paths have steps+1 vertices, and walks are reproducible") {
-    graft.query.Analytics.clearCaches()
+    graft.schema.IndexCache.clear()
     val rows = Analytics5.graphRandomWalks(spark, sf).collect()
     assert(rows.nonEmpty)
     val edges = graft.schema.Schemas.table(spark, sf, "lineitem")
@@ -383,7 +383,7 @@ class Round15Spec extends SparkSpec {
     val again = Analytics5.graphRandomWalks(spark, sf).collect()
       .map(r => (r.getLong(0), r.getString(1)))
     assert(again.toSeq == rows.map(r => (r.getLong(0), r.getString(1))).toSeq)
-    graft.query.Analytics.clearCaches()
+    graft.schema.IndexCache.clear()
   }
 
   test("stream_windowed_distinct equals batch count(DISTINCT) per hour") {
@@ -402,7 +402,7 @@ class Round15Spec extends SparkSpec {
 
   test("graph_walk_cooccurrence: pair mass equals walks × window fanout, " +
       "and every pair is symmetric-present as (context, center)") {
-    graft.query.Analytics.clearCaches()
+    graft.schema.IndexCache.clear()
     val pairs = Analytics5.graphWalkCooccurrence(spark, sf).collect()
     val nWalks = Analytics5.graphRandomWalks(spark, sf).count()
     // per 4-vertex path with window ±2: positions contribute 2+3+3+2 pairs
@@ -413,7 +413,7 @@ class Round15Spec extends SparkSpec {
       (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     byPair.foreach { case ((c, x), n) =>
       assert(byPair.get((x, c)).contains(n), s"asymmetric pair ($c,$x)") }
-    graft.query.Analytics.clearCaches()
+    graft.schema.IndexCache.clear()
   }
 
   test("dq_pk_uniqueness: dimension keys are clean; the audit SURFACES " +
@@ -460,7 +460,7 @@ class Round15Spec extends SparkSpec {
 
   test("sql_basket_rules: confidences bounded by 1, lift consistent with " +
       "its factors, support descending") {
-    graft.query.Analytics.clearCaches()
+    graft.schema.IndexCache.clear()
     val rows = Analytics5.sqlBasketRules(spark, sf).collect()
     assert(rows.nonEmpty)
     val supports = rows.map(_.getLong(2))
@@ -470,7 +470,7 @@ class Round15Spec extends SparkSpec {
       assert(r.getFloat(4) > 0f && r.getFloat(4) <= 1f)
       assert(r.getFloat(5) > 0f)
     }
-    graft.query.Analytics.clearCaches()
+    graft.schema.IndexCache.clear()
   }
 
   test("derived-index cache survives a nested (recursive) resolve") {
@@ -480,7 +480,7 @@ class Round15Spec extends SparkSpec {
     // two keys landed in one hash bin (bin placement shifts with the
     // content fingerprint, so the crash tracked testdata regenerations).
     // Cleared caches force the nested cold path deterministically.
-    graft.query.Dedup.clearCaches()
+    graft.schema.IndexCache.clear()
     val g = graft.query.Dedup.dedupGroups(spark, sf).collect()
     assert(g.nonEmpty)
   }
