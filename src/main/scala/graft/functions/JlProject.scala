@@ -1,7 +1,6 @@
 package graft.functions
 
 import java.nio.charset.StandardCharsets
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -103,12 +102,6 @@ object JlProject {
 
   private def builder(exprs: Seq[Expression]): JlProject =
     JlProject(exprs.head, intLit(exprs))
-
-  /** Register `jl_project(emb, outDim)` (outDim an integer literal) in
-    * the session's function registry (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jl_project", builder, "scala_udf")
 
   /** FunctionDescription for SparkSessionExtensions.injectFunction. */
   def descriptor: (org.apache.spark.sql.catalyst.FunctionIdentifier,

@@ -1,7 +1,6 @@
 package graft.functions
 
 import java.nio.charset.StandardCharsets
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -104,12 +103,6 @@ object MinHashSig {
     MinHashSig(exprs.head,
       intLit(exprs, 1, "shingleSize"),
       intLit(exprs, 2, "numHashes"))
-
-  /** Register `minhash_sig(toks, n, k)` (n, k integer literals) in the
-    * session's function registry (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig", builder, "scala_udf")
 
   /** FunctionDescription for SparkSessionExtensions.injectFunction. */
   def descriptor: (org.apache.spark.sql.catalyst.FunctionIdentifier,

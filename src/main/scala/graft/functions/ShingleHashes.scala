@@ -1,7 +1,6 @@
 package graft.functions
 
 import java.nio.charset.StandardCharsets
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -151,11 +150,6 @@ object ShingleHashes {
   private def builder(exprs: Seq[Expression]): ShingleHashes =
     ShingleHashes(exprs.head, intLit(exprs, 1, "shingleSize"))
 
-  /** Register `shingle_hashes(toks, n)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_hashes", builder, "scala_udf")
-
   /** FunctionDescription for SparkSessionExtensions.injectFunction. */
   def descriptor: (org.apache.spark.sql.catalyst.FunctionIdentifier,
       org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
@@ -270,11 +264,6 @@ object Intersect3CountSortedExcl {
     Intersect3CountSortedExcl(exprs.head, exprs(1), exprs(2), exprs(3))
   }
 
-  /** Register `intersect3_count_sorted_excl(a, b, c, excl)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "intersect3_count_sorted_excl", builder, "scala_udf")
-
   /** FunctionDescription for SparkSessionExtensions.injectFunction. */
   def descriptor: (org.apache.spark.sql.catalyst.FunctionIdentifier,
       org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
@@ -294,11 +283,6 @@ object IntersectCountSorted {
     IntersectCountSorted(exprs.head, exprs(1))
   }
 
-  /** Register `intersect_count_sorted(a, b)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "intersect_count_sorted", builder, "scala_udf")
-
   /** FunctionDescription for SparkSessionExtensions.injectFunction. */
   def descriptor: (org.apache.spark.sql.catalyst.FunctionIdentifier,
       org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
@@ -316,11 +300,6 @@ object JaccardSorted {
       s"jaccard_sorted(a, b) takes 2 arguments, got ${exprs.size}")
     JaccardSorted(exprs.head, exprs(1))
   }
-
-  /** Register `jaccard_sorted(a, b)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaccard_sorted", builder, "scala_udf")
 
   /** FunctionDescription for SparkSessionExtensions.injectFunction. */
   def descriptor: (org.apache.spark.sql.catalyst.FunctionIdentifier,

@@ -1,7 +1,6 @@
 package graft.functions
 
 import java.nio.charset.StandardCharsets
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -111,12 +110,6 @@ object SignLshSigs {
     SignLshSigs(exprs.head,
       intLit(exprs, 1, "numTables"),
       intLit(exprs, 2, "bits"))
-
-  /** Register `sign_lsh_sigs(emb, tables, bits)` (tables, bits integer
-    * literals) in the session's function registry (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sign_lsh_sigs", builder, "scala_udf")
 
   /** FunctionDescription for SparkSessionExtensions.injectFunction. */
   def descriptor: (org.apache.spark.sql.catalyst.FunctionIdentifier,

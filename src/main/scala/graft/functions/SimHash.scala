@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -130,12 +129,6 @@ case class SimHash60(child: Expression) extends UnaryExpression {
 }
 
 object SimHash60 {
-  /** Register `simhash60` in the session's function registry (idempotent),
-    * making it usable from `expr(...)` and SQL. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash60", exprs => SimHash60(exprs.head), "scala_udf")
-
   /** FunctionDescription for SparkSessionExtensions.injectFunction. */
   def descriptor: (org.apache.spark.sql.catalyst.FunctionIdentifier,
       org.apache.spark.sql.catalyst.expressions.ExpressionInfo,

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -104,11 +103,6 @@ case class FloatVecDot(left: Expression, right: Expression) extends BinaryExpres
 }
 
 object FloatVecDot {
-  /** Register `float_dot` in the session's function registry (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "float_dot", exprs => FloatVecDot(exprs(0), exprs(1)), "scala_udf")
-
   /** FunctionDescription for SparkSessionExtensions.injectFunction. */
   def descriptor: (org.apache.spark.sql.catalyst.FunctionIdentifier,
       org.apache.spark.sql.catalyst.expressions.ExpressionInfo,

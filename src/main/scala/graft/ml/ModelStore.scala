@@ -50,12 +50,12 @@ object ModelStore {
     * trees accumulate in tmpdir forever). Current generation untouched;
     * scoped to the EXACT dir via [[dirKey]], so a lossy-token collision
     * can never sweep a sibling dataset's live tree. */
-  private def evictSuperseded(dir: String, keep: java.io.File): Unit = {
-    val root = keep.getParentFile
+  private def evictSuperseded(dir: String, keep: String): Unit = {
+    val kept = new org.apache.hadoop.fs.Path(keep)
     val prefix = s"${dirKey(dir)}__"
-    val stale = Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith(prefix) && f.getName != keep.getName)
-    stale.foreach(f => Storage.delete(f.getPath))
+    Storage.list(kept.getParent.toString).map(_.getPath)
+      .filter(p => p.getName.startsWith(prefix) && p.getName != kept.getName)
+      .foreach(p => Storage.delete(p.toString))
   }
 
   /** On-disk home for (dir, version): the reference's
@@ -75,8 +75,7 @@ object ModelStore {
     val imps = Trainer.importancesInAssemblerOrder(model).sortBy(-_._2)
     val json = imps.map { case (n, v) => s"""    "$n": $v""" }
       .mkString("{\n", ",\n", "\n}")
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(path), json)
-    (): Unit
+    Storage.writeString(path, json)
   }
 
   /** Get the growing-window model for (test dir, version) FROM THE DISK
@@ -93,9 +92,9 @@ object ModelStore {
   def forDir(spark: SparkSession, dir: String, version: Int): PipelineModel =
     IndexCache(spark, "model", (dir, version), Seq(s"$dir/events.parquet")) {
       val path = persistedPath(dir, version)
-      val marker = new java.io.File(path, "_graft_complete")
-      if (!marker.exists()) {
-        evictSuperseded(dir, new java.io.File(modelsDir(dir)))
+      val marker = s"$path/_graft_complete"
+      if (!Storage.exists(marker)) {
+        evictSuperseded(dir, modelsDir(dir))
         val raw = Trainer.tripFrameFromEvents(spark, dir)
         val m = Trainer.fitVersion(raw, version, orderCol = "event_id")
         trains.incrementAndGet()
@@ -106,7 +105,7 @@ object ModelStore {
         // an incomplete dir that retrains, never a model without its
         // importances artifact
         writeImportances(m, importancesPath(dir, version))
-        marker.createNewFile()
+        Storage.writeString(marker, "")
       }
       load(path)
     }(_ => ())

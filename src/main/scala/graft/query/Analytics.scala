@@ -41,7 +41,7 @@ object Analytics {
     // ≤ |V| rows with orientation-bounded list lengths (≈√E̅ worst
     // case, the arboricity bound), broadcast here; partition both sides
     // by vertex when it outgrows executor memory.
-    graft.functions.IntersectCountSorted.register(spark)
+    graft.GraftExtensions.register(spark)
     val adj = oriented.groupBy(col("s"))
       .agg(sort_array(collect_list(col("t"))).as("nbrs"))
     val nTri = oriented

@@ -671,7 +671,7 @@ object Analytics3 {
     * folds into the expression as a literal. */
   def annL2TopK(spark: SparkSession, dir: String, queryId: Long = 0L,
       k: Int = 10): DataFrame = {
-    graft.functions.FloatVecDot.register(spark)
+    graft.GraftExtensions.register(spark)
     val base = table(spark, dir, "embeddings")
     // degrade to a well-formed empty result when the query vector is
     // absent (empty corpus / deleted id) instead of head() crashing

@@ -264,7 +264,7 @@ object Analytics4 {
   def embMatryoshkaRecall(spark: SparkSession, dir: String,
       dims: Seq[Int] = Seq(8, 16, 32), nQ: Int = 20,
       k: Int = 10): DataFrame = {
-    graft.functions.FloatVecDot.register(spark)
+    graft.GraftExtensions.register(spark)
     val emb = table(spark, dir, "embeddings")
     val q = emb.filter(col("vec_id") < nQ)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
@@ -442,7 +442,7 @@ object Analytics4 {
   def retrievalNdcg(spark: SparkSession, dir: String, nQ: Int = 20,
       k: Int = 10): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.FloatVecDot.register(spark)
+    graft.GraftExtensions.register(spark)
     val emb = table(spark, dir, "embeddings")
     val q = emb.filter(col("vec_id") < nQ)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"),
@@ -1022,7 +1022,7 @@ object Analytics4 {
     * map-side-combined counts. */
   def embHubnessStats(spark: SparkSession, dir: String, k: Int = 5,
       matrixGateBytes: Long = 64L << 20): DataFrame = {
-    graft.functions.FloatVecDot.register(spark)
+    graft.GraftExtensions.register(spark)
     val emb = table(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val dimRow = emb.select(size(col("embedding"))).limit(1).collect()

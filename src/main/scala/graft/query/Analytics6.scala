@@ -1025,7 +1025,7 @@ object Analytics6 {
         // envelope the 8M-edge gate already budgets), the courier rows
         // never exist, and the courier groupBy + left-join epilogue
         // collapse into one projected expression.
-        graft.functions.Intersect3CountSortedExcl.register(spark)
+        graft.GraftExtensions.register(spark)
         val adj = Analytics.copurchaseAdj(spark, dir)
         nonadj
           .join(broadcast(adj.select(col("u"), col("nbrs").as("nu"))),

@@ -68,7 +68,7 @@ object Curation {
     * corpus-wide `.distinct()` after explode would shuffle the raw
     * (doc, gram) pairs a second time for nothing. */
   def textNgramNovelty(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.ShingleHashes.register(spark)
+    graft.GraftExtensions.register(spark)
     val grams = graft.schema.Schemas.spread(spark, dir, "documents",
         table(spark, dir, "documents").select(col("doc_id"), col("text")),
         col("doc_id"))

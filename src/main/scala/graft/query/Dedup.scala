@@ -3,7 +3,6 @@ package graft.query
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.SimHash60
 import graft.schema.IndexCache
 import graft.schema.Schemas.table
 
@@ -96,7 +95,7 @@ object Dedup {
     * pipeline is verified by the hash-compare oracle, not just specs. */
   def minhashSignatures(docs: DataFrame, toksCol: String, idCol: String,
       shingleSize: Int, numHashes: Int): DataFrame = {
-    graft.functions.MinHashSig.register(docs.sparkSession)
+    graft.GraftExtensions.register(docs.sparkSession)
     docs.select(col(idCol),
       expr(s"minhash_sig($toksCol, $shingleSize, $numHashes)").as("sig"))
   }
@@ -365,8 +364,7 @@ object Dedup {
     // of two hash-set builds (array_intersect + array_union). Set
     // Jaccard over the md5-60-bit hashes equals set Jaccard over the
     // grams, and the oracle hashes identically.
-    graft.functions.ShingleHashes.register(spark)
-    graft.functions.JaccardSorted.register(spark)
+    graft.GraftExtensions.register(spark)
     // the candidate docs' hash sets are persisted beside the pair list
     // (same lifetime, same consumers): the tokenize+shingle+sort pass
     // over candidate docs would otherwise re-run per verify tail
@@ -399,7 +397,7 @@ object Dedup {
     * ~2× slower on the 16-band candidate volume, same result). */
   def dedupContainment(spark: SparkSession, dir: String,
       shingleSize: Int = 3, threshold: Double = 0.5): DataFrame = {
-    graft.functions.IntersectCountSorted.register(spark)
+    graft.GraftExtensions.register(spark)
     val (candidates, candSh) =
       lshCandidatesWithSets(spark, dir, shingleSize, numBands = 16,
         rowsPerBand = 2)
@@ -423,7 +421,7 @@ object Dedup {
     * buckets, no n². */
   def dedupSimhash(spark: SparkSession, dir: String,
       maxHamming: Int = 3): DataFrame = {
-    SimHash60.register(spark)
+    graft.GraftExtensions.register(spark)
     val docs = graft.schema.Schemas.spread(spark, dir, "documents",
         withPlantedNearDups(table(spark, dir, "documents"))
           .select(col("doc_id"), col("text")), col("doc_id"))
@@ -538,8 +536,7 @@ object Dedup {
   private[graft] def incrementalVerdict(spark: SparkSession, dir: String,
       cand0: DataFrame, shingleSize: Int,
       jaccardThreshold: Double): DataFrame = {
-    graft.functions.ShingleHashes.register(spark)
-    graft.functions.JaccardSorted.register(spark)
+    graft.GraftExtensions.register(spark)
     val allDocs = withPlantedNearDups(table(spark, dir, "documents"))
     val docs = allDocs
       .select(col("doc_id"), tokens(col("text")).as("toks"))
@@ -730,8 +727,7 @@ object Dedup {
   def dedupEmbeddingCosine(spark: SparkSession, dir: String,
       threshold: Double = 0.4, numTables: Int = 16,
       bucketTarget: Long = 32L): DataFrame = {
-    graft.functions.FloatVecDot.register(spark)
-    graft.functions.SignLshSigs.register(spark)
+    graft.GraftExtensions.register(spark)
     val base = table(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val n = base.count()
@@ -790,7 +786,7 @@ object Dedup {
     * below is the fine level unchanged. */
   def dedupSemantic(spark: SparkSession, dir: String,
       threshold: Double = 0.4): DataFrame = {
-    graft.functions.FloatVecDot.register(spark)
+    graft.GraftExtensions.register(spark)
     val emb = table(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     // assignment is computed ONCE per corpus content fingerprint and

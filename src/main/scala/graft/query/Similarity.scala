@@ -32,7 +32,7 @@ object Similarity {
     * cluster scale this is the canonical pre-computed auxiliary column
     * a vector table carries anyway. */
   def normedEmbeddings(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.FloatVecDot.register(spark)
+    graft.GraftExtensions.register(spark)
     IndexCache(spark, "similarity.norms", dir,
       Seq(s"$dir/embeddings.parquet"))(
       table(spark, dir, "embeddings")
@@ -60,7 +60,7 @@ object Similarity {
   /** Exact cosine top-k against the embedding of `queryId`. */
   def bruteForceTopK(spark: SparkSession, dir: String, queryId: Long = 0L,
       k: Int = 10): DataFrame = {
-    graft.functions.FloatVecDot.register(spark)
+    graft.GraftExtensions.register(spark)
     val q = array(queryVector(spark, dir, queryId).toIndexedSeq.map(lit): _*)
     table(spark, dir, "embeddings")
       .filter(col("vec_id") =!= queryId)
@@ -205,7 +205,7 @@ object Similarity {
     * prunes partitions first. */
   def annRadiusSearch(spark: SparkSession, dir: String, queryId: Long = 0L,
       tau: Double = 0.15): DataFrame = {
-    graft.functions.FloatVecDot.register(spark)
+    graft.GraftExtensions.register(spark)
     val q = array(queryVector(spark, dir, queryId).toIndexedSeq.map(lit): _*)
     table(spark, dir, "embeddings")
       .filter(col("vec_id") =!= queryId)
@@ -253,7 +253,7 @@ object Similarity {
     * corpus. */
   def lshTopK(spark: SparkSession, dir: String, queryId: Long = 0L,
       k: Int = 10, numPlanes: Int = 8, maxHamming: Int = 1): DataFrame = {
-    graft.functions.FloatVecDot.register(spark)
+    graft.GraftExtensions.register(spark)
     val dim = 64
     val planes: Seq[Array[Double]] = (0 until numPlanes).map(p =>
       Array.tabulate(dim)(i =>
@@ -317,7 +317,7 @@ object Similarity {
     * per-row argmax, no shuffle of embeddings at any scale. Ties break
     * on label asc (exact float compares make ties reproducible). */
   def centroidClassify(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.FloatVecDot.register(spark)
+    graft.GraftExtensions.register(spark)
     val centroidArrs = embeddingCentroids(spark, dir)
       .groupBy(col("label").as("c_label"))
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("centroid")))),
@@ -358,7 +358,7 @@ object Similarity {
         (i, s)
       }
       .sortBy(-_._2).take(nProbe).map(_._1)
-    graft.functions.FloatVecDot.register(spark)
+    graft.GraftExtensions.register(spark)
     val q = array(qv.toIndexedSeq.map(x => lit(x.toFloat)): _*)
     val assigned = model.transform(
       table(spark, dir, "embeddings")
@@ -401,7 +401,7 @@ object Similarity {
     * composite ([[Curation.annIvfPqTopk]]). */
   private[query] def detSeeds(spark: SparkSession, dir: String,
       nCells: Int): DataFrame = {
-    graft.functions.FloatVecDot.register(spark)
+    graft.GraftExtensions.register(spark)
     val emb = table(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     emb
@@ -473,7 +473,7 @@ object Similarity {
   def ivfLloydTopK(spark: SparkSession, dir: String, queryId: Long = 0L,
       k: Int = 10, nCells: Int = 16, nProbe: Int = 4,
       iters: Int = 2): DataFrame = {
-    graft.functions.FloatVecDot.register(spark)
+    graft.GraftExtensions.register(spark)
     val emb = table(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
 
@@ -537,7 +537,7 @@ object Similarity {
 
   def ivfDetTopK(spark: SparkSession, dir: String, queryId: Long = 0L,
       k: Int = 10, nCells: Int = 16, nProbe: Int = 4): DataFrame = {
-    graft.functions.FloatVecDot.register(spark)
+    graft.GraftExtensions.register(spark)
     val q = array(queryVector(spark, dir, queryId).toIndexedSeq.map(lit): _*)
     detCellAssignment(spark, dir, nCells)
       .join(broadcast(detProbes(spark, dir, queryId, nCells, nProbe)),
@@ -565,7 +565,7 @@ object Similarity {
     * no shuffle of scores. */
   def annFilteredTopK(spark: SparkSession, dir: String, queryId: Long = 0L,
       k: Int = 10): DataFrame = {
-    graft.functions.FloatVecDot.register(spark)
+    graft.GraftExtensions.register(spark)
     val q = array(queryVector(spark, dir, queryId).toIndexedSeq.map(lit): _*)
     table(spark, dir, "embeddings")
       .filter(col("vec_id") =!= queryId && pmod(col("label"), lit(2)) === 0)
@@ -592,7 +592,7 @@ object Similarity {
   def evalRetrievalMetrics(spark: SparkSession, dir: String,
       nQueries: Int = 20, k: Int = 10): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.FloatVecDot.register(spark)
+    graft.GraftExtensions.register(spark)
     val emb = table(spark, dir, "embeddings")
     val qs = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"),
@@ -644,7 +644,7 @@ object Similarity {
       queryId: Long = 0L, poolK: Int = 20, k: Int = 10,
       rrfK: Int = 60): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.FloatVecDot.register(spark)
+    graft.GraftExtensions.register(spark)
     // term statistics probe the shared persisted token index
     // ([[TextAnalysis.tokenTf]]) — the BM25 arm touches the query
     // terms' index rows plus one tiny dl aggregate, never re-tokenizing
@@ -735,8 +735,7 @@ object Similarity {
     * rank falls outside the candidate set (JL distortion). */
   def annJlTopK(spark: SparkSession, dir: String, queryId: Long = 0L,
       k: Int = 10, outDim: Int = 16, candMult: Int = 8): DataFrame = {
-    graft.functions.FloatVecDot.register(spark)
-    graft.functions.JlProject.register(spark)
+    graft.GraftExtensions.register(spark)
     val qv = queryVector(spark, dir, queryId)
     val planes = graft.functions.JlProjectImpl.planes(outDim, qv.length)
     val qProj = planes.map { p =>
@@ -779,8 +778,7 @@ object Similarity {
   def embJlRecall(spark: SparkSession, dir: String, outDim: Int = 16,
       nQueries: Int = 20, k: Int = 10): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.FloatVecDot.register(spark)
-    graft.functions.JlProject.register(spark)
+    graft.GraftExtensions.register(spark)
     val emb = table(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"),
         expr(s"jl_project(embedding, $outDim)").as("pe"))
@@ -816,7 +814,7 @@ object Similarity {
     * map-side-combined aggregate; the histogram is nCells rows. */
   def embCellBalance(spark: SparkSession, dir: String,
       nCells: Int = 16): DataFrame = {
-    graft.functions.FloatVecDot.register(spark)
+    graft.GraftExtensions.register(spark)
     val emb = table(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val seeds = emb
@@ -873,7 +871,7 @@ object Similarity {
     * cell-partitioned layout and each level reads its probed cells. */
   def annRecallCurve(spark: SparkSession, dir: String, k: Int = 10,
       nQueries: Int = 20, nCells: Int = 16): DataFrame = {
-    graft.functions.FloatVecDot.register(spark)
+    graft.GraftExtensions.register(spark)
     val emb = table(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     // deterministic Forgy anchors (the ivfDetTopK seed panel)
@@ -945,7 +943,7 @@ object Similarity {
     * [[lshTopK]] prunes the scan first. */
   def annHardNegatives(spark: SparkSession, dir: String,
       nAnchors: Long = 10L, k: Int = 5): DataFrame = {
-    graft.functions.FloatVecDot.register(spark)
+    graft.GraftExtensions.register(spark)
     val emb = table(spark, dir, "embeddings")
     val anchors = emb.filter(col("vec_id") < nAnchors)
       .select(col("vec_id").as("anchor_id"),
@@ -984,7 +982,7 @@ object Similarity {
     * the full vector prune the scan, MaxSim re-ranks survivors. */
   def retrievalColbertMaxsim(spark: SparkSession, dir: String,
       queryId: Long = 0L, k: Int = 10, nSub: Int = 8): DataFrame = {
-    graft.functions.FloatVecDot.register(spark)
+    graft.GraftExtensions.register(spark)
     val qArr = queryVector(spark, dir, queryId)
     val subDim = qArr.length / nSub
     def qSlice(i: Int): Column =
@@ -1018,7 +1016,7 @@ object Similarity {
     * buckets. */
   def annKnnGraphMutual(spark: SparkSession, dir: String,
       maxId: Long = 512L, k: Int = 5): DataFrame = {
-    graft.functions.FloatVecDot.register(spark)
+    graft.GraftExtensions.register(spark)
     val sub = table(spark, dir, "embeddings")
       .filter(col("vec_id") < maxId)
     val pairs = sub.select(col("vec_id").as("a"), col("embedding").as("ea"))
@@ -1068,7 +1066,7 @@ object Similarity {
     * min is bit-identical to the former min aggregate. */
   def sampleKcenterCoreset(spark: SparkSession, dir: String,
       k: Int = 8, seedId: Long = 0L): DataFrame = {
-    graft.functions.FloatVecDot.register(spark)
+    graft.GraftExtensions.register(spark)
     val base = normedEmbeddings(spark, dir)
     // EAGER by design: this function runs up to k Spark jobs (the seed
     // lookup + one TakeOrdered per round) BEFORE the caller executes
@@ -1150,7 +1148,7 @@ object Similarity {
     require(math.abs(lambda + mu - 1.0) < 1e-9,
       s"retrieval_mmr_topk: lambda ($lambda) + mu ($mu) must sum to 1 " +
         "— mu is the exact-literal form of 1-lambda, pass both together")
-    graft.functions.FloatVecDot.register(spark)
+    graft.GraftExtensions.register(spark)
     val emb = table(spark, dir, "embeddings")
     val pe = emb
       .join(broadcast(bruteForceTopK(spark, dir, queryId, pool)
@@ -1211,7 +1209,7 @@ object Similarity {
     * float_dot doubles; ranks break ties by dst id. */
   def annHnswLayers(spark: SparkSession, dir: String,
       maxLevel: Int = 3, m: Int = 4): DataFrame = {
-    graft.functions.FloatVecDot.register(spark)
+    graft.GraftExtensions.register(spark)
     val lv = table(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"),
         Dedup.hash60(col("vec_id").cast("string")).as("h"))
@@ -1330,7 +1328,7 @@ object Similarity {
     * epilogue. At 100 TB the delta batch is the only thing scanned. */
   def annIvfDeltaAssign(spark: SparkSession, dir: String,
       nCells: Int = 16): DataFrame = {
-    graft.functions.FloatVecDot.register(spark)
+    graft.GraftExtensions.register(spark)
     val seeds = ivfSeedPanel(spark, dir, nCells)
     val emb = table(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
@@ -1369,7 +1367,7 @@ object Similarity {
     * columns on a ≤nCells-row panel. */
   private[graft] def ivfOccReport(spark: SparkSession, dir: String,
       seeds: DataFrame, deltaOcc: DataFrame, nCells: Int): DataFrame = {
-    graft.functions.FloatVecDot.register(spark)
+    graft.GraftExtensions.register(spark)
     // the persisted standing index: per-cell corpus occupancy
     val corpusOcc = Analytics.cachedDf(spark,
         Analytics.gkey(dir, s"ivfocc$nCells"), srcTable = "embeddings") {

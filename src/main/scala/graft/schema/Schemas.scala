@@ -53,7 +53,7 @@ object Schemas {
     * The resolved DataFrame is cached in [[IndexCache]] per (session,
     * path, content fingerprint): `spark.read.parquet` eagerly lists files
     * and reads a footer for schema inference on EVERY call (~60 ms
-    * driver-side — measured by [[graft.tools.ConstProbe]]), which a
+    * driver-side — measured in round 8's per-query-constant probe), which a
     * 200-query loop pays hundreds of times for the same dozen tables. A
     * production deployment gets the same amortization from the catalog's
     * relation cache; here the fingerprint keeps a regenerated corpus at

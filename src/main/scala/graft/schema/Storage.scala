@@ -6,10 +6,10 @@ import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 
 /** The engine's one view of storage: existence, layout and content
-  * probes, recursive delete, and temp dirs removed at JVM exit — all
-  * through the Hadoop `FileSystem` API, Spark's own view of storage, so
-  * `file:`, `hdfs://` and `s3a://` paths are probed like bare local
-  * ones. (A `java.nio` probe answers "absent" for every path with a
+  * probes, listing, small writes, moves, recursive delete, and temp
+  * dirs removed at JVM exit — all through the Hadoop `FileSystem` API,
+  * Spark's own view of storage, so `file:`, `hdfs://` and `s3a://`
+  * paths are probed like bare local ones. (A `java.nio` probe answers "absent" for every path with a
   * scheme, which silently turns a layout or staleness check into a
   * constant.)
   *
@@ -56,6 +56,39 @@ object Storage {
   def files(path: String): Iterator[FileStatus] = {
     val (fs, p) = resolve(path)
     statusOf(fs, p).iterator.flatMap(walk(fs, _))
+  }
+
+  /** The direct children of a directory, in name order; empty when
+    * `path` is absent or a file. */
+  def list(path: String): Seq[FileStatus] = {
+    val (fs, p) = resolve(path)
+    statusOf(fs, p) match {
+      case Some(st) if st.isDirectory =>
+        fs.listStatus(p).toSeq.sortBy(_.getPath.getName)
+      case _ => Nil
+    }
+  }
+
+  /** Write `text` as UTF-8 to `path`, replacing any file there and
+    * creating missing parent directories. */
+  def writeString(path: String, text: String): Unit = {
+    val (fs, p) = resolve(path)
+    val out = fs.create(p, true)
+    try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+  }
+
+  /** Move the file `src` to `dst` (missing parents created) and give
+    * `dst` the modification time `mtime` (epoch ms): a file source
+    * orders its input by mtime, and not every file system's rename
+    * keeps it. */
+  def move(src: String, dst: String, mtime: Long): Unit = {
+    val (fs, s) = resolve(src)
+    val d = new Path(dst)
+    fs.mkdirs(d.getParent)
+    if (!fs.rename(s, d))
+      throw new java.io.IOException(s"could not move $src to $dst")
+    fs.setTimes(d, mtime, -1L)
   }
 
   /** Content fingerprint of a file or directory: total size @ newest

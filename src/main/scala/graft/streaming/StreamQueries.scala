@@ -103,7 +103,7 @@ object StreamQueries {
       else filesPerTrigger.fold(reader)(n =>
         reader.option("maxFilesPerTrigger", n))
     normalizeStreamEvents(streamTable(paced, dir, "events"), stored)
-    // Measured negative (r21 DrainProf): spreading the single-file scan
+    // Measured negative (r21 drain profile): spreading the single-file scan
     // with a post-source repartition — the batch Schemas.spread recipe —
     // SLOWED every probed drain 15-45% (ohlc 1.37→1.99 s, two_level
     // 1.98→2.31, left_join 2.59→2.91): a micro-batch's map side is far
@@ -163,11 +163,11 @@ object StreamQueries {
       // (offset/commit logs + per-partition state-store deltas, fsync'd
       // each micro-batch) is pure scratch, and on a contended host disk
       // /tmp turns those small synchronous writes into the drain's noise
-      // floor (StreamProbe: ~50 ms min / ~170 ms median per drain quiet;
-      // more under contention). A RESUMABLE production query must keep
-      // its checkpoint on durable storage — this shortcut is only valid
-      // because AvailableNow + memory sink makes the checkpoint
-      // single-use by construction.
+      // floor (r9 drain decomposition: ~50 ms min / ~170 ms median per
+      // drain quiet; more under contention). A RESUMABLE production query
+      // must keep its checkpoint on durable storage — this shortcut is
+      // only valid because AvailableNow + memory sink makes the
+      // checkpoint single-use by construction.
       val ckpt = tmpfsCheckpointDir(name)
       // The trailing NO-DATA micro-batch exists to advance the watermark
       // and flush finalized state into APPEND output after the last data
@@ -780,12 +780,10 @@ object StreamQueries {
       def writeOne(df: DataFrame, name: String, mtime: Long): Unit = {
         val stage = s"$base/stage_$name"
         df.coalesce(1).write.mode("overwrite").parquet(stage)
-        val part = new java.io.File(stage).listFiles()
+        val part = Storage.list(stage).map(_.getPath)
           .find(_.getName.endsWith(".parquet")).get
-        val dest = new java.io.File(s"$base/arrivals/$name.parquet")
-        dest.getParentFile.mkdirs()
-        java.nio.file.Files.move(part.toPath, dest.toPath)
-        dest.setLastModified(mtime) // FileStreamSource orders by mod time
+        // FileStreamSource orders by mod time
+        Storage.move(part.toString, s"$base/arrivals/$name.parquet", mtime)
       }
       if (bulkFiles <= 1) {
         writeOne(ev.filter(!late && !tail), "batch_0", 1000000L)
@@ -1223,7 +1221,7 @@ object StreamQueries {
       filesPerTrigger: Option[Int] = None): DataFrame = {
     import spark.implicits._
     import graft.query.Similarity
-    graft.functions.FloatVecDot.register(spark)
+    graft.GraftExtensions.register(spark)
     val provKey = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(provKey)
     spark.conf.set(provKey,

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Dev tool: Spark-vs-Spark BOTH-PATHS equivalence for the size-gated
   * operators at a scale where the DuckDB closure oracles stop being
@@ -21,25 +21,7 @@ object GateCheck {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val onlyNames = args.drop(1).toSet
-    val cpus = math.max(1, math.min(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt,
-      Runtime.getRuntime.availableProcessors())).toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // the forced-on paths allocate driver-side matrices/broadcasts by
-      // design; survive the long full-GC pauses they cause in local
-      // mode instead of dying of heartbeat starvation
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DevSession("graft-gatecheck")
 
     def canon(df: DataFrame): Seq[String] =
       df.collect().map(_.toSeq.map(String.valueOf).mkString("|"))

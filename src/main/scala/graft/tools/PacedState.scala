@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
@@ -27,19 +26,7 @@ object PacedState {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("target/scale/x10")
     val nFiles = args.lift(1).map(_.toInt).getOrElse(24)
-    val cpus = math.max(1, math.min(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt,
-      Runtime.getRuntime.availableProcessors())).toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-paced-state")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DevSession("graft-paced-state")
 
     // per-batch state curve: (batchId, stateRows, stateBytes)
     object curve extends StreamingQueryListener {
@@ -70,8 +57,7 @@ object PacedState {
     // time-ranged part files written SEQUENTIALLY (mod-time order is the
     // file source's replay order): an ingest pipeline's event-time-ordered
     // arrival, reconstructed from the batch corpus
-    val paced = java.nio.file.Files
-      .createTempDirectory("graft-paced-corpus").toString
+    val paced = graft.schema.Storage.tempDir("graft-paced-corpus")
     val ev = graft.schema.Schemas.events(spark, dir).cache()
     val bounds = ev.agg(min(col("ts")).cast("long").as("lo"),
       (max(col("ts")).cast("long") + 1).as("hi")).collect()(0)

@@ -1,32 +1,24 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-/** Formatted-plan dump for declared queries — the dev-loop half of the
-  * plan-audit discipline (the scaladocs claim shuffle/broadcast shapes;
-  * this prints the actual physical plan so the claim is checkable).
+/** Executed-plan dump for declared queries — the dev-loop half of the
+  * plan-audit discipline: runs each named query and prints its final
+  * adaptive plan (post-AQE, so coalesced shuffle reads, broadcast
+  * switches and skew splits show), which makes the shuffle / broadcast
+  * shapes the scaladocs claim checkable. The query runs with
+  * `collect()`: `count()` executes a column-pruned aggregate over it and
+  * leaves the query's own plan unexecuted (`isFinalPlan=false`).
   *
   * Usage: runMain graft.tools.PlanDump <sfDir> <query> [<query>…]
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val sfDir = args.head
-    val names = args.tail.toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    names.foreach { n =>
-      println(s"==== $n ====")
-      graft.SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+    require(args.length >= 2, "usage: PlanDump <sfDir> <query> [<query>…]")
+    val spark = DevSession("graft-plandump")
+    args.tail.foreach { n =>
+      val df = graft.SparkEntry.queries(n)(spark, args.head)
+      df.collect()
+      println(s"==== $n (executed/final) ====")
+      println(df.queryExecution.executedPlan.toString)
     }
     spark.stop()
   }

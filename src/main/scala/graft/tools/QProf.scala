@@ -1,18 +1,22 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
 import scala.collection.mutable
 
-/** Dev profiling main: per-query job/stage/task breakdown under the exact
-  * Bench session config. For each named query it reports best-of-2 wall
-  * time plus, for the warm pass, the number of Spark jobs the query
-  * triggers, per-job wall time, task counts and total shuffle bytes —
-  * the numbers that tell you whether a slow query is paying compute,
-  * shuffle, or per-job scheduling overhead (guide §1/§2).
+/** Dev profiling main: per-query job/stage/task breakdown. For each named
+  * query it reports cold and warm wall time plus, for the warm pass, the
+  * number of Spark jobs the query triggers, per-job wall time, task
+  * counts and total shuffle bytes — the numbers that tell you whether a
+  * slow query is paying compute, shuffle, or per-job scheduling overhead.
+  * Stream queries also print every micro-batch's `durationMs`
+  * decomposition (queryPlanning / addBatch / getBatch / walCommit /
+  * commitOffsets / triggerExecution) and per-operator state lines, which
+  * say whether a drain's floor is planning, state commits or envelope.
   *
-  * Usage: SPARK_GRAFT_CPUS=32 runMain graft.tools.QProf <sfDir> <name> [<name>…]
+  * Usage: [SPARK_GRAFT_CPUS=n] [QPROF_SUMMARY=1]
+  *   runMain graft.tools.QProf <sfDir> <name>|ALL [<name>…]
   */
 object QProf {
   def main(args: Array[String]): Unit = {
@@ -23,21 +27,7 @@ object QProf {
         graft.SparkEntry.queries.keys.toSeq.sorted
       else args.tail.toSeq
     val detail = !sys.env.contains("QPROF_SUMMARY")
-    val requested = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val cpus = math.max(1,
-      math.min(requested, Runtime.getRuntime.availableProcessors())).toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-qprof")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DevSession("graft-qprof")
 
     case class JobRec(id: Int, start: Long, var end: Long = 0L,
       var tasks: Int = 0, var taskTimeMs: Long = 0L,
@@ -68,6 +58,30 @@ object QProf {
         }
     }
 
+    val batches = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val streamListener = new StreamingQueryListener {
+      override def onQueryStarted(
+          e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(
+          e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(
+          e: StreamingQueryListener.QueryProgressEvent): Unit = {
+        val p = e.progress
+        def g(k: String): Long =
+          Option(p.durationMs.get(k)).map(_.longValue()).getOrElse(-1L)
+        batches.add(f"  batch ${p.batchId}%2d rows=${p.numInputRows}%7d " +
+          f"trigger=${g("triggerExecution")}%5d plan=${g("queryPlanning")}%5d " +
+          f"addBatch=${g("addBatch")}%5d getBatch=${g("getBatch")}%4d " +
+          f"latestOffset=${g("latestOffset")}%4d wal=${g("walCommit")}%4d " +
+          f"commit=${g("commitOffsets")}%4d " +
+          p.stateOperators.map(s =>
+            s"[${s.operatorName} upd=${s.allUpdatesTimeMs} " +
+            s"rm=${s.allRemovalsTimeMs} cmt=${s.commitTimeMs} " +
+            s"rows=${s.numRowsTotal} updated=${s.numRowsUpdated}]")
+            .mkString(" "))
+      }
+    }
+
     val qs = names.map(n => n -> graft.SparkEntry.queries(n))
     // untimed warm-up on the tiny fixture compiles the code paths
     qs.foreach { case (_, fn) =>
@@ -79,12 +93,16 @@ object QProf {
       try fn(spark, dir).count() catch { case _: Throwable => () }
       val cold = (System.nanoTime() - t0) / 1e9
       jobs.synchronized { jobs.clear(); stageToJob.clear() }
+      batches.clear()
       spark.sparkContext.addSparkListener(listener)
+      spark.streams.addListener(streamListener)
       val t1 = System.nanoTime()
-      try fn(spark, dir).count() catch { case _: Throwable => () }
+      try fn(spark, dir).count() catch { case t: Throwable =>
+        println(s"[qprof] $n failed: $t") }
       val warm = (System.nanoTime() - t1) / 1e9
       // let straggler listener events drain
       Thread.sleep(200)
+      spark.streams.removeListener(streamListener)
       spark.sparkContext.removeSparkListener(listener)
       val snap = jobs.synchronized { jobs.values.toSeq }
       if (detail) {
@@ -95,15 +113,16 @@ object QProf {
             f"taskTime=${j.taskTimeMs / 1e3}%8.2f s in=${j.inputB / 1e6}%8.1f MB " +
             f"shufR=${j.shufReadB / 1e6}%8.1f MB shufW=${j.shufWriteB / 1e6}%8.1f MB")
         }
+        batches.forEach(println(_))
       }
       val totWall = snap.filter(_.end > 0).map(j => j.end - j.start).sum / 1e3
       // wall spent in jobs whose whole work ran on ≤2 tasks — the
-      // unsplittable-scan signature this round hunts (guide §2.5)
+      // unsplittable-scan signature
       val narrowWall = snap.filter(j => j.end > 0 && j.tasks <= 2)
         .map(j => j.end - j.start).sum / 1e3
       println(f"[qprof] $n%-32s warm=$warm%6.2f jobs=${snap.size}%3d " +
-        f"jobWall=$totWall%6.2f narrowWall=$narrowWall%6.2f " +
-        f"gap=${warm - totWall}%6.2f")
+        f"batches=${batches.size}%3d jobWall=$totWall%6.2f " +
+        f"narrowWall=$narrowWall%6.2f gap=${warm - totWall}%6.2f")
     }
     spark.stop()
   }

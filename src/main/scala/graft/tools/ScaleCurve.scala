@@ -41,20 +41,7 @@ object ScaleCurve {
     // lastSpan assumed the requested size — silently skewing the
     // fitted exponent (r12 advice)
     val dstDir = s"target/scale/x$copies"
-    val cpus = math.max(1, math.min(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt,
-      Runtime.getRuntime.availableProcessors())).toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DevSession("graft-scale-curve")
 
     synthesize(spark, srcMid, dstDir, copies)
 
@@ -181,8 +168,8 @@ object ScaleCurve {
     * completion marker. */
   def synthesize(spark: SparkSession, srcDir: String, dstDir: String,
       copies: Int): Unit = {
-    val done = java.nio.file.Paths.get(s"$dstDir/_GRAFT_COMPLETE")
-    if (java.nio.file.Files.exists(done)) return
+    val done = s"$dstDir/_GRAFT_COMPLETE"
+    if (graft.schema.Storage.exists(done)) return
     def src(name: String): DataFrame =
       spark.read.parquet(s"$srcDir/$name.parquet")
     def write(df: DataFrame, name: String): Unit =
@@ -243,7 +230,7 @@ object ScaleCurve {
         col("event_type"), col("value"), col("props"))
     }.reduce(_ unionAll _), "events")
 
-    java.nio.file.Files.createFile(done)
+    graft.schema.Storage.writeString(done, "")
     println(s"[scale] synthesized ${copies}x corpus at $dstDir")
   }
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
@@ -16,21 +16,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
 object StreamX10 {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("target/scale/x10")
-    val cpus = math.max(1, math.min(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt,
-      Runtime.getRuntime.availableProcessors())).toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stream-x10")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DevSession("graft-stream-x10")
 
     // peak state bytes/rows across every progress event between resets;
     // memoryUsedBytes covers the HDFS-backed store, the rocksdb custom

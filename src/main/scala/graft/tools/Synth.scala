@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev main: build the ScaleCurve x-N synthetic corpus WITHOUT running
   * the timing families — the x10 oracle sweeps want the corpus alone.
   * Usage: runMain graft.tools.Synth [copies]  →  target/scale/x<copies>
@@ -9,20 +7,7 @@ import org.apache.spark.sql.SparkSession
 object Synth {
   def main(args: Array[String]): Unit = {
     val copies = args.headOption.map(_.toInt).getOrElse(10)
-    val cpus = math.max(1, math.min(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt,
-      Runtime.getRuntime.availableProcessors())).toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DevSession("graft-synth")
     ScaleCurve.synthesize(spark, "/root/testdata/sf0.1",
       s"target/scale/x$copies", copies)
     spark.stop()

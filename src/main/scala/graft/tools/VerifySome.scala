@@ -1,32 +1,19 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import graft.schema.Storage
 
 /** Dev main: [[graft.Verify]] for a subset of queries — fast iteration on
-  * one operator without dumping all 130.
+  * one operator without dumping all of them. Writes the named queries'
+  * parquet results and the COMPLETE `oracle_sql.json`, so partial runs
+  * into one directory assemble a full dump.
   * Usage: runMain graft.tools.VerifySome <sfDir> <outDir> <name> [<name>…]
   */
 object VerifySome {
   def main(args: Array[String]): Unit = {
+    require(args.length >= 3,
+      "usage: VerifySome <sfDir> <outDir> <name> [<name>…]")
     val sfDir = args(0); val outDir = args(1); val names = args.drop(2)
-    // default 8 preserves the historical footprint; x10 sweeps set
-    // SPARK_GRAFT_CPUS to use the full host
-    val cpus = math.max(1, math.min(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt,
-      Runtime.getRuntime.availableProcessors())).toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
+    val spark = DevSession("graft-verify-some")
     names.foreach { name =>
       graft.SparkEntry.queries.get(name) match {
         case Some(fn) =>
@@ -38,19 +25,7 @@ object VerifySome {
         case None => System.err.println(s"[verify-some] unknown query: $name")
       }
     }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = graft.SparkEntry.oracleSql
-      .filter { case (k, _) => names.contains(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Storage.writeString(s"$outDir/oracle_sql.json", graft.Verify.oracleJson)
     spark.stop()
   }
 }

@@ -135,6 +135,24 @@ class IndexCacheSpec extends SparkSpec {
     }
     assert(Storage.fingerprint(s"file://$dir/missing") == "absent")
     assert(!Storage.exists(s"file:$dir/missing"))
+    for ((p, i) <- Seq(dir, s"file:$dir").zipWithIndex) {
+      assert(Storage.list(s"$p/t.parquet").map(_.getPath.getName) ==
+        Seq("part-0", "part-1"), p)
+      assert(Storage.list(s"$p/missing").isEmpty, p)
+      assert(Storage.list(s"$p/t.parquet/part-0").isEmpty, p)
+      // writeString: UTF-8, parents created, replaces what is there
+      Storage.writeString(s"$p/w$i/note.json", "stale")
+      Storage.writeString(s"$p/w$i/note.json", "{\"ü\": 1}\n")
+      assert(Files.readString(java.nio.file.Paths.get(s"$dir/w$i/note.json"))
+        == "{\"ü\": 1}\n", p)
+      // move: parents created, content intact, the given mtime kept
+      val src = java.nio.file.Paths.get(s"$dir/w$i/note.json")
+      Storage.move(s"$p/w$i/note.json", s"$p/m$i/a/moved.json", 2000000L)
+      val moved = java.nio.file.Paths.get(s"$dir/m$i/a/moved.json")
+      assert(!Files.exists(src) && Files.readString(moved) == "{\"ü\": 1}\n", p)
+      assert(Files.getLastModifiedTime(moved).toMillis == 2000000L, p)
+      assert(Storage.list(s"$p/m$i").map(_.getPath.getName) == Seq("a"), p)
+    }
     Storage.delete(s"file://$dir")
     assert(!Files.exists(java.nio.file.Paths.get(dir)))
   }

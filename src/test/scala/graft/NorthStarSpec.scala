@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.SimHash60
 import graft.query.{Dedup, Multimodal, Similarity, TextAnalysis}
 
 class NorthStarSpec extends SparkSpec {
@@ -58,7 +57,7 @@ class NorthStarSpec extends SparkSpec {
   }
 
   test("simhash: chunk-bucket candidate generation is lossless for hamming<=3") {
-    SimHash60.register(spark)
+    GraftExtensions.register(spark)
     val docs = Dedup.withPlantedNearDups(
       graft.schema.Schemas.table(spark, sf, "documents"))
       .select($"doc_id", Dedup.tokens($"text").as("toks"))
@@ -77,7 +76,7 @@ class NorthStarSpec extends SparkSpec {
   }
 
   test("simhash expression: deterministic, order-insensitive-ish, distinct for distinct docs") {
-    SimHash60.register(spark)
+    GraftExtensions.register(spark)
     val df = Seq(
       ("a b c d e f g h i j k l m n o p"),
       ("a b c d e f g h i j k l m n o p"),
@@ -135,7 +134,7 @@ class NorthStarSpec extends SparkSpec {
 
   test("embedding cosine LSH: recall vs brute force ≥ 0.9; precision exact") {
     // brute-force ground truth at the declared threshold
-    graft.functions.FloatVecDot.register(spark)
+    GraftExtensions.register(spark)
     val emb = graft.schema.Schemas.table(spark, sf, "embeddings")
       .select($"vec_id", $"embedding")
     val truth = emb.as("a").join(emb.as("b"),
@@ -201,7 +200,7 @@ class NorthStarSpec extends SparkSpec {
   }
 
   test("langid: detects distinct languages on hand-made texts") {
-    SimHash60.register(spark)
+    GraftExtensions.register(spark)
     // run the same scoring logic on crafted inputs by swapping the table:
     // easiest through a temp view + the same column expressions
     val crafted = Seq(

@@ -13,7 +13,7 @@ import java.nio.file.{Files, Path, Paths}
   * whole-plan pins on the queries where plan drift costs the most.
   *
   * Streaming drains are excluded: their returned frame is a memory-sink
-  * scan; their physical work is pinned by StreamProbe decompositions
+  * scan; their physical work is pinned by the round-9 drain decompositions
   * and the drain==batch contracts instead.
   *
   * Regenerate after an INTENTIONAL plan change with:

@@ -553,8 +553,8 @@ class PlanSpec extends SparkSpec {
     // holds only the normalization: checkpointed |parts|-row vector ⨯
     // broadcast 1-row max → TakeOrdered. The per-round broadcast-join
     // shape is proven by the alternation-equivalence spec + the round
-    // cost measured in HitsProf; here we pin what the final plan may
-    // NOT contain.
+    // cost measured in round 15's HITS profile; here we pin what the
+    // final plan may NOT contain.
     val p = plan(graft.query.Analytics5.graphHits(spark, sf))
     assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"), p)
     assert(p.contains("TakeOrderedAndProject"), p)

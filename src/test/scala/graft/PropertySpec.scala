@@ -21,7 +21,7 @@ class PropertySpec extends SparkSpec {
     // cross-implementation check: the custom single-pass expression must
     // agree with explode → hash60 builtins → per-index min for every
     // random token array (the two paths share only the md5 primitive)
-    graft.functions.MinHashSig.register(spark)
+    GraftExtensions.register(spark)
     val tokGen = Gen.nonEmptyListOf(
       Gen.oneOf(Gen.alphaNumStr.map(_.take(8)), Gen.oneOf("a", "b", "cc", "")))
     val docs = samples(tokGen, 60).zipWithIndex
@@ -147,7 +147,7 @@ class PropertySpec extends SparkSpec {
     // projection is a fixed linear map: scaling the input by 2^k scales
     // every output coordinate by exactly 2^k (power-of-two products and
     // sums are IEEE-exact), and repeated evaluation is bit-stable
-    graft.functions.JlProject.register(spark)
+    GraftExtensions.register(spark)
     val vecGen = Gen.listOfN(64, Gen.chooseNum(-4.0f, 4.0f))
     samples(vecGen, 20).foreach { v =>
       val df = Seq((v, v.map(_ * 2.0f), v.map(_ * 0.25f)))

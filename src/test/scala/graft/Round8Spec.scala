@@ -134,7 +134,7 @@ class Round8Spec extends SparkSpec {
   }
 
   test("dedup_embedding_cosine: exact precision, pinned recall vs brute-force truth") {
-    graft.functions.FloatVecDot.register(spark)
+    GraftExtensions.register(spark)
     val base = Schemas.table(spark, sf01, "embeddings")
       .select($"vec_id", $"embedding")
     val truth = base.as("a").join(base.as("b"),
@@ -154,8 +154,7 @@ class Round8Spec extends SparkSpec {
   }
 
   test("dedup_minhash_lsh: exact precision, pinned recall vs all-pairs Jaccard truth") {
-    graft.functions.ShingleHashes.register(spark)
-    graft.functions.JaccardSorted.register(spark)
+    GraftExtensions.register(spark)
     val sh = graft.query.Dedup
       .withPlantedNearDups(Schemas.table(spark, sf01, "documents"))
       .select($"doc_id", graft.query.Dedup.tokens($"text").as("toks"))
@@ -181,7 +180,7 @@ class Round8Spec extends SparkSpec {
     // chunks, so at least one chunk matches — the bucketing provably
     // loses nothing; output must EQUAL the all-pairs answer, not
     // approximate it
-    graft.functions.SimHash60.register(spark)
+    GraftExtensions.register(spark)
     val docs = graft.query.Dedup
       .withPlantedNearDups(Schemas.table(spark, sf01, "documents"))
       .select($"doc_id", expr("simhash60(" +

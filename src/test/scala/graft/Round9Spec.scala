@@ -335,7 +335,7 @@ class Round9Spec extends SparkSpec {
   test("jl_project: one-hot input recovers the exact md5-derived plane column") {
     // projection is linear, so e_i in → column i of the plane matrix
     // out, bit-exact (single product against 1.0f, no summation error)
-    graft.functions.JlProject.register(spark)
+    GraftExtensions.register(spark)
     val oneHot = Array.tabulate(64)(i => if (i == 5) 1.0f else 0.0f)
     val out = spark.range(1)
       .select(typedLit(oneHot.toSeq).as("e"))
