@@ -1,13 +1,16 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.query.Analytics5
 
 /** Registry-integrity pins (driver round 12): the `sample_weighted`
   * shadowing incident — a duplicate map key silently replacing a whole
   * query — was found by a manual audit; these specs make recurrence
-  * impossible. Plus the degree-cap contract for the walk adjacency
-  * index (a 50k-degree synthetic hub stays bounded at the cap).
+  * impossible, and a source gate keeps the one registry the only one.
+  * Plus the degree-cap contract for the walk adjacency index (a
+  * 50k-degree synthetic hub stays bounded at the cap).
   */
 class RegistrySpec extends SparkSpec {
 
@@ -23,15 +26,50 @@ class RegistrySpec extends SparkSpec {
   test("registries build without duplicates and agree on keys: every query " +
       "has an oracle except the documented no-oracle allowlist; every " +
       "oracle has a query") {
-    // building them at all proves no within-map duplicate key exists
+    // building them at all proves no name is declared twice
     val q = SparkEntry.queries.keySet
     val o = SparkEntry.oracleSql.keySet
-    assert((q -- o) == SparkEntry.noOracleByDesign,
-      s"oracle-less queries beyond the documented allowlist: ${(q -- o -- SparkEntry.noOracleByDesign).toSeq.sorted}")
+    // written here, not read from main: main derives its no-oracle set
+    // from the defs, so only a literal in the spec can pin it
+    val noOracle = Set("q1_predict_duration", "q2_sensitivity_ml",
+      "q3_optimal_time_ml", "m6_growing_window_importances")
+    assert((q -- o) == noOracle,
+      s"oracle-less queries beyond the documented allowlist: ${(q -- o -- noOracle).toSeq.sorted}")
+    assert(SparkEntry.noOracleByDesign == noOracle,
+      s"noOracleByDesign drifted: ${SparkEntry.noOracleByDesign.toSeq.sorted}")
     assert((o -- q).isEmpty,
       s"orphaned oracles (no query): ${(o -- q).toSeq.sorted}")
-    assert(SparkEntry.noOracleByDesign.subsetOf(q),
-      "allowlist names a key that is not a declared query")
+  }
+
+  test("one registry: QueryDef declared only under registry/, reg(...) " +
+      "called only in SparkEntry.scala, one QueryDef per query") {
+    val root = Paths.get("src/main/scala/graft")
+    assert(Files.isDirectory(root), s"run from the repo root: $root missing")
+    def isComment(line: String): Boolean = {
+      val t = line.trim
+      t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
+    }
+    val lines = for {
+      p <- Files.walk(root).iterator().asScala.toSeq
+      if p.toString.endsWith(".scala")
+      file = root.relativize(p).toString.replace('\\', '/')
+      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
+      if !isComment(line)
+    } yield (file, i + 1, line)
+    val queryDef = """\bQueryDef\(""".r
+    val regCall = """\breg\(""".r
+    val bad = lines.collect {
+      case (f, n, l) if queryDef.findFirstIn(l).isDefined &&
+          !f.startsWith("registry/") => s"$f:$n: QueryDef outside registry/: ${l.trim}"
+      case (f, n, l) if regCall.findFirstIn(l).isDefined &&
+          f != "SparkEntry.scala" => s"$f:$n: reg(...) outside SparkEntry: ${l.trim}"
+    }
+    assert(bad.isEmpty, bad.mkString("\n", "\n", ""))
+    // not vacuous: every query is one literal QueryDef("...") site
+    val sites = lines.count { case (f, _, l) =>
+      f.startsWith("registry/") && l.contains("QueryDef(\"") }
+    assert(sites == SparkEntry.queries.size,
+      s"$sites QueryDef sites for ${SparkEntry.queries.size} queries")
   }
 
   test("every oracle is non-empty SQL and every query key is non-empty") {

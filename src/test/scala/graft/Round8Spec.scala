@@ -58,7 +58,7 @@ class Round8Spec extends SparkSpec {
   }
 
   test("session_window append finalizes a session whose end falls EXACTLY on the watermark") {
-    // ADVICE (SparkEntry stream_session_window oracle): the oracle emits
+    // ADVICE (StreamDefs stream_session_window oracle): the oracle emits
     // sessions with end <= watermark — pin that Spark's append-mode
     // eviction agrees at the tie, so a corpus regeneration can't
     // silently cross the boundary.
