@@ -1,9 +1,10 @@
 package graft.streaming
 
 import java.util.UUID
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamReader, GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 import graft.schema.{IndexCache, Storage}
 
@@ -88,21 +89,24 @@ object StreamQueries {
     }
   }
 
+  /** The events stream. `rawEvents = true` reads the sf dir's events
+    * file (probed stored types, normalized); `rawEvents = false` reads
+    * `dir` itself as a re-export of canonical micros-TIMESTAMP files,
+    * which specs split so a drain spans several micro-batches. */
   private def streamEvents(spark: SparkSession, dir: String,
       singleBatch: Boolean = false,
-      filesPerTrigger: Option[Int] = None): DataFrame = {
-    val stored = eventsStoredSchema(spark, dir)
-    val reader = spark.readStream.schema(stored)
+      filesPerTrigger: Option[Int] = None,
+      rawEvents: Boolean = true): DataFrame = {
+    val stored =
+      if (rawEvents) eventsStoredSchema(spark, dir) else eventsSchemaMicros
     // singleBatch pins the whole drain into ONE micro-batch (AvailableNow
     // otherwise splits multi-file input by maxFilesPerTrigger, advancing
     // the watermark between batches) — required where a query's
     // batch-equivalence contract assumes empty initial state, e.g.
     // dropDuplicatesWithinWatermark == SELECT DISTINCT.
-    val paced =
-      if (singleBatch) reader.option("maxFilesPerTrigger", Int.MaxValue)
-      else filesPerTrigger.fold(reader)(n =>
-        reader.option("maxFilesPerTrigger", n))
-    normalizeStreamEvents(streamTable(paced, dir, "events"), stored)
+    val paced = if (singleBatch) Some(Int.MaxValue) else filesPerTrigger
+    normalizeStreamEvents(streamTable(spark,
+      if (rawEvents) s"$dir/events.parquet" else dir, stored, paced), stored)
     // Measured negative (r21 drain profile): spreading the single-file scan
     // with a post-source repartition — the batch Schemas.spread recipe —
     // SLOWED every probed drain 15-45% (ohlc 1.37→1.99 s, two_level
@@ -112,132 +116,176 @@ object StreamQueries {
     // per-batch fixed costs are.
   }
 
-  /** Stream `dir/<table>.parquet` in whichever LAYOUT is stored, probed
-    * like the stored types: the sf testdata ships each table as one FILE,
-    * but a Spark-written corpus has it as a DIRECTORY of part files. The
+  /** Stream the parquet at `path` under the declared `schema`, at most
+    * `filesPerTrigger` files per micro-batch (all available when None),
+    * in whichever LAYOUT is stored, probed like the stored types: the sf
+    * testdata ships each table as one FILE, but a Spark-written corpus or
+    * a spec's re-export has it as a DIRECTORY of part files. The
     * pathGlobFilter the file form needs matches leaf file names, so
     * pointing it at a directory layout silently streams ZERO rows — the
     * same silent-drift class as the ts-type regression, closed the same
     * way (probe, then pick). The probe goes through [[Storage]], so a
     * `file:`/`hdfs://` corpus is seen as the directory it is. */
-  private def streamTable(reader: DataStreamReader, dir: String,
-      table: String): DataFrame = {
-    val path = s"$dir/$table.parquet"
+  private def streamTable(spark: SparkSession, path: String,
+      schema: StructType, filesPerTrigger: Option[Int]): DataFrame = {
+    val reader = filesPerTrigger.foldLeft(spark.readStream.schema(schema))(
+      (r, n) => r.option("maxFilesPerTrigger", n))
     if (Storage.isDirectory(path)) reader.parquet(path)
-    // FileStreamSource wants a directory: stream the sf dir, filtered to
-    // the table file (a Kafka source swaps in here via StreamTransport)
-    else reader.option("pathGlobFilter", s"$table.parquet").parquet(dir)
+    else {
+      // FileStreamSource wants a directory: stream the file's dir,
+      // filtered to the file (a Kafka source swaps in here via
+      // StreamTransport)
+      val file = new org.apache.hadoop.fs.Path(path)
+      reader.option("pathGlobFilter", file.getName)
+        .parquet(file.getParent.toString)
+    }
   }
 
-  /** Run `build(stream)` to completion (AvailableNow drain into a memory
-    * sink) and return the final result as a batch DataFrame.
+  /** Drain `streamed` to completion (AvailableNow into a memory sink)
+    * and return the final result as a batch DataFrame.
     *
-    * State-store partition count is fixed at query start from
-    * spark.sql.shuffle.partitions; every stateful operator keeps one
-    * store per partition and pays a per-partition commit each
-    * micro-batch. Size it to the stream's KEYSPACE (~150 users / ~100
-    * windows here), not the CPU-count batch default — with tiny per-key
-    * state, partition count IS the dominant commit cost. At production
-    * keyspaces this knob scales up with throughput, not down. */
+    * No caller picks the state settings: [[run]] derives them from the
+    * plan — the RocksDB store with 4 state partitions when it holds a
+    * transformWithState, the default HDFS-backed store with 8 otherwise.
+    * transformWithState needs RocksDB, every other stateful shape here
+    * (windowed aggs, joins, dedup, mapGroupsWithState) runs on the
+    * default store, and both counts are sized to the keyspace. Derived in
+    * one place, the choice is made under the session lock and cannot
+    * drift between copies.
+    *
+    * `eagerOutput` declares an Append query whose operators emit on
+    * arrival (stateless projections and joins, inner stream-stream joins,
+    * dropDuplicates*), so its output is complete without the trailing
+    * watermark flush batch. Finalize-on-watermark operators (windowed
+    * aggs in Append, outer joins' NULL side, session windows) must NOT set
+    * it: their rows only appear in that batch. */
   private def drain(spark: SparkSession, streamed: DataFrame,
-      mode: OutputMode, statePartitions: Int = 8,
-      eagerOutput: Boolean = false): DataFrame =
-    // serialize on the session: the shuffle-partition override below is
-    // session-global, so two interleaved drains could leave the session at
-    // the streaming setting (or plan one drain under the other's). The
-    // lock closes the drain-vs-drain race; an unrelated BATCH query racing
-    // a drain on the same session would still plan under the override —
-    // callers wanting full isolation pass a dedicated session.
+      mode: OutputMode, eagerOutput: Boolean = false): DataFrame = {
+    val name = "stream_" + UUID.randomUUID().toString.replace("-", "")
+    run(spark, streamed, mode, name, eagerOutput)(
+      _.format("memory").queryName(name))
+    spark.table(name)
+  }
+
+  /** The runner every drain and the resumable run go through (the
+    * upsert, which must keep the session's shuffle partitions, starts
+    * through [[startAndAwait]] alone): it starts `plan` AvailableNow into
+    * `sink` (the writer comes with `mode` set) and waits for it, with
+    * three session confs decided here from the plan, and nowhere else:
+    *
+    *  - state store: RocksDB iff the analyzed plan holds a
+    *    transformWithState (the HDFS-backed store does not implement its
+    *    column families), the default HDFS-backed store otherwise;
+    *  - state partitions (`spark.sql.shuffle.partitions`, fixed at query
+    *    start, one store per partition, each paying a commit every
+    *    micro-batch): 4 for RocksDB plans, 8 otherwise — sized to the
+    *    stream's KEYSPACE (~150 users / ~100 windows here), not the
+    *    CPU-count batch default, because with tiny per-key state the
+    *    partition count IS the dominant commit cost; at production
+    *    keyspaces it scales up with throughput, not down;
+    *  - the trailing no-data micro-batch, which exists to advance the
+    *    watermark and flush finalized state into APPEND output: off for
+    *    Complete and Update modes (they emit as state changes, so it is a
+    *    pure planning+commit round trip, ~0.1-0.2 s of the measured drain
+    *    floor) and for `eagerOutput` Append queries.
+    *
+    * The confs are session-global, so they are set, the query run and the
+    * confs restored all under the session lock: two interleaved runs can
+    * neither plan under each other's settings nor restore over them. An
+    * unrelated BATCH query racing a run on the same session would still
+    * plan under the override — callers wanting full isolation pass a
+    * dedicated session.
+    *
+    * `checkpoint` is a durable, resumable checkpoint the caller owns;
+    * when None the run makes a scratch one and deletes it afterwards.
+    * The `graft.stream.statePartitions` test hook overrides the partition
+    * count (PartitionInvarianceSpec proves the stateful queries
+    * byte-identical across partitionings) only for scratch checkpoints:
+    * a resumed query must keep its original count. */
+  private def run(spark: SparkSession, plan: DataFrame, mode: OutputMode,
+      what: String, eagerOutput: Boolean = false,
+      checkpoint: Option[String] = None)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit =
     spark.synchronized {
-      val name = "stream_" + UUID.randomUUID().toString.replace("-", "")
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      // test hook: `graft.stream.statePartitions` overrides the state-store
-      // partition count, so PartitionInvarianceSpec can prove the stateful
-      // queries byte-identical across partitionings (each drain starts a
-      // fresh checkpoint, so the count is free to vary between runs here;
-      // a RESUMED production query must keep its original count)
-      val sp = spark.conf.getOption("graft.stream.statePartitions")
-        .map(_.toInt).getOrElse(statePartitions)
-      spark.conf.set("spark.sql.shuffle.partitions", sp.toString)
-      // Checkpoint on tmpfs when available: a one-shot drain's checkpoint
-      // (offset/commit logs + per-partition state-store deltas, fsync'd
-      // each micro-batch) is pure scratch, and on a contended host disk
-      // /tmp turns those small synchronous writes into the drain's noise
-      // floor (r9 drain decomposition: ~50 ms min / ~170 ms median per
-      // drain quiet; more under contention). A RESUMABLE production query
-      // must keep its checkpoint on durable storage — this shortcut is
-      // only valid because AvailableNow + memory sink makes the
-      // checkpoint single-use by construction.
-      val ckpt = tmpfsCheckpointDir(name)
-      // The trailing NO-DATA micro-batch exists to advance the watermark
-      // and flush finalized state into APPEND output after the last data
-      // batch. Complete mode re-emits full state on every data batch and
-      // Update mode emits each change as it happens, so for those modes
-      // the extra batch is a pure planning+commit round trip (~0.1-0.2 s
-      // of the measured drain floor) with no observable output — skip it.
-      // Append drains keep it UNLESS the caller declares eagerOutput:
-      // operators that emit on arrival (stateless projections/joins,
-      // inner stream-stream joins, dropDuplicates*) produce their full
-      // output during the data batches — the trailing batch only evicts
-      // state. Finalize-on-watermark operators (windowed aggs in Append,
-      // outer joins' NULL side, session windows) must NOT set it: their
-      // rows only appear in that batch.
-      val prevNoData =
-        spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-      if (mode != OutputMode.Append() || eagerOutput)
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+      val rocksDb = plan.queryExecution.analyzed
+        .find(_.isInstanceOf[TransformWithState]).isDefined
+      val hook = checkpoint.fold(
+        spark.conf.getOption("graft.stream.statePartitions"))(_ => None)
+      val confs = Seq(
+        "spark.sql.shuffle.partitions" ->
+          hook.getOrElse(if (rocksDb) "4" else "8"),
+        "spark.sql.streaming.stateStore.providerClass" ->
+          ("org.apache.spark.sql.execution.streaming.state." +
+            (if (rocksDb) "RocksDB" else "HDFSBacked") + "StateStoreProvider"),
+        "spark.sql.streaming.noDataMicroBatches.enabled" ->
+          (mode == OutputMode.Append() && !eagerOutput).toString)
+      val prior = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
       try {
-        val w = streamed.writeStream
-          .outputMode(mode)
-          .format("memory")
-          .queryName(name)
-          .trigger(Trigger.AvailableNow())
-        val q = ckpt.map(c => w.option("checkpointLocation", c))
-          .getOrElse(w).start()
-        // Bounded wait, generous (15 min vs the ~1-2 s drain norm): an
-        // unbounded awaitTermination turns one wedged drain — a real
-        // failure mode on a heavily contended host — into a hung
-        // harness that zeroes the WHOLE verification run instead of
-        // failing one query. On timeout, stop the query and throw; the
-        // caller's per-query error handling records it and moves on.
-        awaitBounded(spark, q, name)
-      } finally {
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(
-          "spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-        ckpt.foreach(Storage.delete)
-      }
-      spark.table(name)
+        confs.foreach { case (k, v) => spark.conf.set(k, v) }
+        startAndAwait(spark,
+          sink(plan.writeStream.outputMode(mode)), what, checkpoint)
+      } finally prior.foreach { case (k, v) =>
+        v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
     }
+
+  /** The one place a streaming query starts: `w` AvailableNow on
+    * `checkpoint`, or on a scratch checkpoint deleted afterwards, then
+    * [[awaitBounded]]. The timeout is checked before the start, so a bad
+    * `graft.stream.drainTimeoutSec` fails closed with nothing running.
+    *
+    * Scratch checkpoints go on tmpfs when available: a one-shot drain's
+    * checkpoint (offset/commit logs + per-partition state-store deltas,
+    * fsync'd each micro-batch) is pure scratch, and on a contended host
+    * disk /tmp turns those small synchronous writes into the drain's noise
+    * floor (r9 drain decomposition: ~50 ms min / ~170 ms median per drain
+    * quiet; more under contention). A RESUMABLE production query must keep
+    * its checkpoint on durable storage — the shortcut is only valid
+    * because an AvailableNow run on a fresh checkpoint is single-use by
+    * construction. Without a writable /dev/shm Spark picks its own temp
+    * location (which it also deletes for memory-sink queries). */
+  private def startAndAwait(spark: SparkSession, w: DataStreamWriter[Row],
+      what: String, checkpoint: Option[String]): Unit = {
+    drainTimeoutSec(spark)
+    val shm = java.nio.file.Paths.get("/dev/shm")
+    val scratch =
+      if (checkpoint.isDefined || !java.nio.file.Files.isWritable(shm)) None
+      else Some(shm.resolve(s"graft-ckpt-${UUID.randomUUID()}").toString)
+    try {
+      val q = checkpoint.orElse(scratch)
+        .fold(w)(c => w.option("checkpointLocation", c))
+        .trigger(Trigger.AvailableNow()).start()
+      awaitBounded(spark, q, what)
+    } finally scratch.foreach(Storage.delete)
+  }
+
+  /** `graft.stream.drainTimeoutSec`, 900 by default; anything but a
+    * positive whole number of seconds throws. */
+  private def drainTimeoutSec(spark: SparkSession): Long = {
+    val sec = spark.conf.getOption("graft.stream.drainTimeoutSec")
+      .fold(900L)(_.trim.toLong)
+    require(sec > 0 && sec <= Long.MaxValue / 1000L,
+      s"graft.stream.drainTimeoutSec must be a positive number of " +
+        s"seconds, got $sec")
+    sec
+  }
 
   /** Bounded streaming wait, generous (15 min default vs the ~1-2 s
     * drain norm, tunable via `graft.stream.drainTimeoutSec`): an
     * unbounded awaitTermination turns one wedged drain — a real failure
     * mode on a heavily contended host — into a hung harness that zeroes
     * the WHOLE verification run instead of failing one query. On
-    * timeout the query is stopped and a TimeoutException thrown; the
-    * caller's per-query error handling records it and moves on. */
-  private[graft] def awaitBounded(spark: SparkSession,
-      q: org.apache.spark.sql.streaming.StreamingQuery,
-      what: String): Unit = {
-    val timeoutSec = spark.conf
-      .getOption("graft.stream.drainTimeoutSec").map(_.toLong)
-      .getOrElse(900L)
-    if (!q.awaitTermination(timeoutSec * 1000L)) {
-      try q.stop() catch { case _: Throwable => () }
-      throw new java.util.concurrent.TimeoutException(
-        s"streaming drain $what exceeded ${timeoutSec}s; stopped")
-    }
-  }
-
-  /** Scratch checkpoint dir on tmpfs, or None to let Spark pick its own
-    * temp location (which it also deletes for memory-sink queries). */
-  private def tmpfsCheckpointDir(name: String): Option[String] = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    if (java.nio.file.Files.isWritable(shm))
-      Some(shm.resolve(s"graft-ckpt-$name").toString)
-    else None
-  }
+    * timeout a TimeoutException is thrown; the caller's per-query error
+    * handling records it and moves on. Whatever the exit — timeout, a
+    * bad timeout conf, an interrupt — a query still active is stopped,
+    * so no run outlives its call (or its scratch checkpoint). */
+  private[graft] def awaitBounded(spark: SparkSession, q: StreamingQuery,
+      what: String): Unit =
+    try {
+      val timeoutSec = drainTimeoutSec(spark)
+      if (!q.awaitTermination(timeoutSec * 1000L))
+        throw new java.util.concurrent.TimeoutException(
+          s"streaming drain $what exceeded ${timeoutSec}s; stopped")
+    } finally if (q.isActive) try q.stop() catch { case _: Throwable => () }
 
   /** Event-time tumbling-window aggregation with a watermark — count and
     * sum of `value` per (hour window, event_type). Full-drain result ==
@@ -675,22 +723,14 @@ object StreamQueries {
           .agg(max(struct(col("ts"), col("event_id"), col("value"))).as("m"))
           .select(col("user_id"), col("m.ts").as("ts"),
             col("m.event_id").as("event_id"), col("m.value").as("value"))
-      // spec-written dirs (rawEvents=false) are always canonical; the
-      // driver corpus gets the full footer probe + normalization
-      val stored =
-        if (rawEvents) eventsStoredSchema(spark, dir) else eventsSchemaMicros
-      val reader0 = spark.readStream.schema(stored)
-      val reader = filesPerTrigger.fold(reader0)(n =>
-        reader0.option("maxFilesPerTrigger", n))
-      // the corpus layout is probed (the x10 sweep caught this path
-      // silently draining zero batches from a directory layout)
-      val src = normalizeStreamEvents(
-        if (rawEvents) streamTable(reader, dir, "events")
-        else reader.parquet(dir), stored)
+      // spec-written dirs (rawEvents=false) are always canonical; an sf
+      // corpus gets the full footer probe + normalization, and its
+      // layout is probed (the x10 sweep caught this path silently
+      // draining zero batches from a directory layout)
+      val src = streamEvents(spark, dir, filesPerTrigger = filesPerTrigger,
+        rawEvents = rawEvents)
       @volatile var latest: Option[String] = None
-      val upsertCkpt = tmpfsCheckpointDir(
-        "upsert" + UUID.randomUUID().toString.replace("-", ""))
-      val w0 = src
+      val w = src
         .select(col("user_id"), col("ts"), col("event_id"), col("value"))
         .writeStream
         .outputMode(OutputMode.Append())
@@ -705,11 +745,12 @@ object StreamQueries {
           merged.write.mode("overwrite").parquet(out)
           latest = Some(out)
         }
-        .trigger(Trigger.AvailableNow())
-      val q = upsertCkpt.map(c => w0.option("checkpointLocation", c))
-        .getOrElse(w0).start()
-      try awaitBounded(spark, q, "foreachbatch_upsert")
-      finally upsertCkpt.foreach(Storage.delete)
+      // Not through [[run]]: the plan is stateless, and the merges above
+      // are batch shuffles that must plan at the session's own
+      // spark.sql.shuffle.partitions — run would hold the session at its
+      // state-partition count (8) for the whole drain, and the stream's
+      // session, which the first merge plans on, is cloned at start.
+      startAndAwait(spark, w, "foreachbatch_upsert", checkpoint = None)
       spark.read.parquet(latest.getOrElse(
         sys.error("upsert drain produced no batches")))
         .select(col("user_id"), unix_micros(col("ts")).as("last_ts_us"),
@@ -804,12 +845,10 @@ object StreamQueries {
       writeOne(ev.filter(late), "batch_2", 3000000L)
       base
     }(Storage.delete)
-    val s = spark.readStream
-      .schema(StructType.fromDDL("event_id LONG, ts TIMESTAMP, " +
-        "user_id LONG, event_type STRING, value DOUBLE"))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$staged/arrivals")
-    val agg = s.withWatermark("ts", "1 hour")
+    val agg = streamTable(spark, s"$staged/arrivals",
+        StructType.fromDDL("event_id LONG, ts TIMESTAMP, " +
+          "user_id LONG, event_type STRING, value DOUBLE"), Some(1))
+      .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("value")).cast("float").as("sum_value"))
@@ -908,27 +947,20 @@ object StreamQueries {
   def streamUserTopValuesFrom(spark: SparkSession, dir: String,
       rawEvents: Boolean, filesPerTrigger: Option[Int]): DataFrame = {
     import spark.implicits._
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ds: Dataset[EvId] = twsSource(spark, dir, rawEvents, filesPerTrigger)
-        .select(col("event_id"), col("user_id"), col("value")).as[EvId]
-      val out = ds.groupByKey(_.user_id)
-        .transformWithState(new TopValuesProcessor(),
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Update())
-      drain(spark, out.toDF(), OutputMode.Update(), statePartitions = 4)
-        .groupBy(col("user_id"))
-        .agg(max(col("n_seen")).as("n_seen"),
-          max_by(col("v1"), col("n_seen")).as("v1"),
-          max_by(col("v2"), col("n_seen")).as("v2"),
-          max_by(col("v3"), col("n_seen")).as("v3"))
-        .orderBy(col("user_id"))
-    } finally {
-      prev.fold(spark.conf.unset(provKey))(v => spark.conf.set(provKey, v))
-    }
+    val ds: Dataset[EvId] = streamEvents(spark, dir,
+        filesPerTrigger = filesPerTrigger, rawEvents = rawEvents)
+      .select(col("event_id"), col("user_id"), col("value")).as[EvId]
+    val out = ds.groupByKey(_.user_id)
+      .transformWithState(new TopValuesProcessor(),
+        org.apache.spark.sql.streaming.TimeMode.None(),
+        OutputMode.Update())
+    drain(spark, out.toDF(), OutputMode.Update())
+      .groupBy(col("user_id"))
+      .agg(max(col("n_seen")).as("n_seen"),
+        max_by(col("v1"), col("n_seen")).as("v1"),
+        max_by(col("v2"), col("n_seen")).as("v2"),
+        max_by(col("v3"), col("n_seen")).as("v3"))
+      .orderBy(col("user_id"))
   }
 
   /** [[streamTransformWithState]] against a DURABLE checkpoint — the
@@ -939,41 +971,26 @@ object StreamQueries {
     * run's Update-mode emissions (fresh memory sink), which is exactly
     * what the resume spec needs to observe. The sink is foreachBatch →
     * parquet, NOT the memory sink: only fault-tolerant sinks may
-    * recover from a checkpoint. State-store partition count is pinned
-    * (a resumed query must keep its original count — the [[drain]]
-    * scaladoc rule, enforced here by construction). */
+    * recover from a checkpoint. The durable checkpoint makes [[run]]
+    * ignore the state-partition test hook: a resumed query must keep its
+    * original count. */
   def streamTransformWithStateResumable(spark: SparkSession, dir: String,
-      checkpoint: String, outDir: String): DataFrame = spark.synchronized {
+      checkpoint: String, outDir: String): DataFrame = {
     import spark.implicits._
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(provKey)
-    val prevSp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val ds: Dataset[Ev] = twsSource(spark, dir, rawEvents = false, None)
-        .select(col("user_id"), col("ts"), col("value")).as[Ev]
-      val out = ds.groupByKey(_.user_id)
-        .transformWithState(new RunningProfileProcessor(),
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Update())
-      val q = out.toDF().writeStream
-        .outputMode(OutputMode.Update())
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("append").parquet(outDir)
-        }
-        .option("checkpointLocation", checkpoint)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitBounded(spark, q, "transform_with_state_resumable")
-      spark.read.schema(
-        "user_id LONG, n_events LONG, sum_value DOUBLE, last_ts TIMESTAMP")
-        .parquet(outDir)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevSp)
-      prevProv.fold(spark.conf.unset(provKey))(v => spark.conf.set(provKey, v))
-    }
+    val ds: Dataset[Ev] = streamEvents(spark, dir, rawEvents = false)
+      .select(col("user_id"), col("ts"), col("value")).as[Ev]
+    val out = ds.groupByKey(_.user_id)
+      .transformWithState(new RunningProfileProcessor(),
+        org.apache.spark.sql.streaming.TimeMode.None(),
+        OutputMode.Update())
+    run(spark, out.toDF(), OutputMode.Update(),
+        "transform_with_state_resumable", checkpoint = Some(checkpoint))(
+      _.foreachBatch { (df: DataFrame, _: Long) =>
+        df.write.mode("append").parquet(outDir)
+      })
+    spark.read.schema(
+      "user_id LONG, n_events LONG, sum_value DOUBLE, last_ts TIMESTAMP")
+      .parquet(outDir)
   }
 
   case class EvId(event_id: Long, user_id: Long, value: Double)
@@ -1012,25 +1029,18 @@ object StreamQueries {
   def streamUserTypeCountsFrom(spark: SparkSession, dir: String,
       rawEvents: Boolean, filesPerTrigger: Option[Int]): DataFrame = {
     import spark.implicits._
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ds = twsSource(spark, dir, rawEvents, filesPerTrigger)
-        .select(col("user_id"), col("event_type"))
-        .as[(Long, String)]
-      val out = ds.groupByKey(_._1)
-        .transformWithState(new TypeCountsProcessor(),
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Update())
-      drain(spark, out.toDF(), OutputMode.Update(), statePartitions = 4)
-        .groupBy(col("user_id"), col("event_type"))
-        .agg(max(col("n")).as("n_events"))
-        .orderBy(col("user_id"), col("event_type"))
-    } finally {
-      prev.fold(spark.conf.unset(provKey))(v => spark.conf.set(provKey, v))
-    }
+    val ds = streamEvents(spark, dir,
+        filesPerTrigger = filesPerTrigger, rawEvents = rawEvents)
+      .select(col("user_id"), col("event_type"))
+      .as[(Long, String)]
+    val out = ds.groupByKey(_._1)
+      .transformWithState(new TypeCountsProcessor(),
+        org.apache.spark.sql.streaming.TimeMode.None(),
+        OutputMode.Update())
+    drain(spark, out.toDF(), OutputMode.Update())
+      .groupBy(col("user_id"), col("event_type"))
+      .agg(max(col("n")).as("n_events"))
+      .orderBy(col("user_id"), col("event_type"))
   }
 
   // ---- streaming incremental near-dup ------------------------------------
@@ -1074,17 +1084,6 @@ object StreamQueries {
     }
   }
 
-  /** Documents as a file stream (directory-layout aware, the
-    * [[streamEvents]] probe-then-pick discipline). */
-  private def streamDocuments(spark: SparkSession, dir: String,
-      filesPerTrigger: Option[Int]): DataFrame = {
-    val schema = StructType.fromDDL(
-      "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
-    val reader = spark.readStream.schema(schema)
-    streamTable(filesPerTrigger.fold(reader)(n =>
-      reader.option("maxFilesPerTrigger", n)), dir, "documents")
-  }
-
   /** STREAMING incremental near-dup: the micro-batch twin of
     * [[graft.query.Dedup.dedupIncrementalMinhash]] — delta documents
     * arrive as a stream, each micro-batch computes MinHash signatures
@@ -1111,48 +1110,42 @@ object StreamQueries {
       filesPerTrigger: Option[Int] = None): DataFrame = {
     import spark.implicits._
     import graft.query.Dedup
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val raw = streamDocuments(spark, dir, filesPerTrigger)
-      val planted = raw.filter(col("doc_id") < 10)
-        .withColumn("doc_id", col("doc_id") + 1000000L)
-        .withColumn("text",
-          concat(lit("planted near duplicate copy "), col("text")))
-      val deltaDocs = raw.unionByName(planted)
-        .filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id"), Dedup.tokens(col("text")).as("toks"))
-        .filter(size(col("toks")) >= shingleSize)
-      val deltaBanded = Dedup.bandedSignatures(
-        Dedup.minhashSignatures(deltaDocs, "toks", "doc_id",
-          shingleSize, numBands * rowsPerBand),
-        numBands, rowsPerBand)
-      // stream-static probe of the persisted corpus band index
-      val corpusB = Dedup.bandedSignatures(
-          Dedup.cachedSignatureIndex(spark, dir, shingleSize,
-            numBands * rowsPerBand), numBands, rowsPerBand)
-        .filter(col("doc_id") % 5 =!= 0)
-        .select(col("band"), col("bucket"), col("doc_id").as("match_id"))
-      val corpusCand = deltaBanded
-        .join(corpusB, Seq("band", "bucket"))
-        .select(col("doc_id").as("delta_id"), col("match_id"))
-      val batchCand = deltaBanded
-        .select(col("band"), col("bucket"), col("doc_id").as("delta_id"))
-        .as[BandKeyRow]
-        .groupByKey(r => (r.band, r.bucket))
-        .transformWithState(new BucketMembersProcessor(),
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Update())
-        .toDF()
-      val cand = drain(spark, corpusCand.unionByName(batchCand),
-        OutputMode.Update(), statePartitions = 4)
-      Dedup.incrementalVerdict(spark, dir, cand, shingleSize,
-        jaccardThreshold)
-    } finally {
-      prev.fold(spark.conf.unset(provKey))(v => spark.conf.set(provKey, v))
-    }
+    val raw = streamTable(spark, s"$dir/documents.parquet",
+      StructType.fromDDL("doc_id LONG, text STRING, lang STRING, " +
+        "source STRING, n_chars LONG"), filesPerTrigger)
+    val planted = raw.filter(col("doc_id") < 10)
+      .withColumn("doc_id", col("doc_id") + 1000000L)
+      .withColumn("text",
+        concat(lit("planted near duplicate copy "), col("text")))
+    val deltaDocs = raw.unionByName(planted)
+      .filter(col("doc_id") % 5 === 0)
+      .select(col("doc_id"), Dedup.tokens(col("text")).as("toks"))
+      .filter(size(col("toks")) >= shingleSize)
+    val deltaBanded = Dedup.bandedSignatures(
+      Dedup.minhashSignatures(deltaDocs, "toks", "doc_id",
+        shingleSize, numBands * rowsPerBand),
+      numBands, rowsPerBand)
+    // stream-static probe of the persisted corpus band index
+    val corpusB = Dedup.bandedSignatures(
+        Dedup.cachedSignatureIndex(spark, dir, shingleSize,
+          numBands * rowsPerBand), numBands, rowsPerBand)
+      .filter(col("doc_id") % 5 =!= 0)
+      .select(col("band"), col("bucket"), col("doc_id").as("match_id"))
+    val corpusCand = deltaBanded
+      .join(corpusB, Seq("band", "bucket"))
+      .select(col("doc_id").as("delta_id"), col("match_id"))
+    val batchCand = deltaBanded
+      .select(col("band"), col("bucket"), col("doc_id").as("delta_id"))
+      .as[BandKeyRow]
+      .groupByKey(r => (r.band, r.bucket))
+      .transformWithState(new BucketMembersProcessor(),
+        org.apache.spark.sql.streaming.TimeMode.None(),
+        OutputMode.Update())
+      .toDF()
+    val cand = drain(spark, corpusCand.unionByName(batchCand),
+      OutputMode.Update())
+    Dedup.incrementalVerdict(spark, dir, cand, shingleSize,
+      jaccardThreshold)
   }
 
   // ---- streaming IVF delta assignment ------------------------------------
@@ -1183,16 +1176,8 @@ object StreamQueries {
     }
   }
 
-  /** Embeddings as a file stream (directory-layout aware, the
-    * [[streamDocuments]] discipline). */
-  private def streamEmbeddings(spark: SparkSession, dir: String,
-      filesPerTrigger: Option[Int]): DataFrame = {
-    val schema = StructType.fromDDL(
-      "vec_id LONG, embedding ARRAY<FLOAT>, label INT")
-    val reader = spark.readStream.schema(schema)
-    streamTable(filesPerTrigger.fold(reader)(n =>
-      reader.option("maxFilesPerTrigger", n)), dir, "embeddings")
-  }
+  private val embeddingsSchema =
+    StructType.fromDDL("vec_id LONG, embedding ARRAY<FLOAT>, label INT")
 
   /** STREAMING IVF delta assignment — the micro-batch twin of
     * [[graft.query.Similarity.annIvfDeltaAssign]], continuous embedding
@@ -1222,37 +1207,29 @@ object StreamQueries {
     import spark.implicits._
     import graft.query.Similarity
     graft.GraftExtensions.register(spark)
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val seeds = Similarity.ivfSeedPanel(spark, dir, nCells)
-      // one static row: the seed panel as a cell-sorted struct array
-      val panel = seeds
-        .agg(sort_array(collect_list(struct(col("cell"), col("seed_e"))))
-          .as("panel"))
-      val assigned = streamEmbeddings(spark, dir, filesPerTrigger)
-        .filter(col("vec_id") % 5 === 0)
-        .crossJoin(broadcast(panel))
-        .select(expr(
-          """-array_max(transform(panel,
-            |  s -> named_struct(
-            |    'dp', float_dot(embedding, s.seed_e),
-            |    'negc', -s.cell))).negc""".stripMargin).as("cell"))
-        .as[CellArrival]
-      val counts = assigned.groupByKey(_.cell)
-        .transformWithState(new CellOccupancyProcessor(),
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Update())
-        .toDF()
-      val deltaOcc = drain(spark, counts, OutputMode.Update(),
-          statePartitions = 4)
-        .groupBy(col("cell")).agg(max(col("n_delta")).as("n_delta"))
-      Similarity.ivfOccReport(spark, dir, seeds, deltaOcc, nCells)
-    } finally {
-      prev.fold(spark.conf.unset(provKey))(v => spark.conf.set(provKey, v))
-    }
+    val seeds = Similarity.ivfSeedPanel(spark, dir, nCells)
+    // one static row: the seed panel as a cell-sorted struct array
+    val panel = seeds
+      .agg(sort_array(collect_list(struct(col("cell"), col("seed_e"))))
+        .as("panel"))
+    val assigned = streamTable(spark, s"$dir/embeddings.parquet",
+        embeddingsSchema, filesPerTrigger)
+      .filter(col("vec_id") % 5 === 0)
+      .crossJoin(broadcast(panel))
+      .select(expr(
+        """-array_max(transform(panel,
+          |  s -> named_struct(
+          |    'dp', float_dot(embedding, s.seed_e),
+          |    'negc', -s.cell))).negc""".stripMargin).as("cell"))
+      .as[CellArrival]
+    val counts = assigned.groupByKey(_.cell)
+      .transformWithState(new CellOccupancyProcessor(),
+        org.apache.spark.sql.streaming.TimeMode.None(),
+        OutputMode.Update())
+      .toDF()
+    val deltaOcc = drain(spark, counts, OutputMode.Update())
+      .groupBy(col("cell")).agg(max(col("n_delta")).as("n_delta"))
+    Similarity.ivfOccReport(spark, dir, seeds, deltaOcc, nCells)
   }
 
   case class IdleRow(user_id: Long, n_events: Long,
@@ -1325,23 +1302,15 @@ object StreamQueries {
   def streamIdleTimeout(spark: SparkSession, dir: String,
       gapMinutes: Int = 30, delayMinutes: Int = 10): DataFrame = {
     import spark.implicits._
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ds: Dataset[Ev] = streamEvents(spark, dir)
-        .withWatermark("ts", s"$delayMinutes minutes")
-        .select(col("user_id"), col("ts"), col("value")).as[Ev]
-      val out = ds.groupByKey(_.user_id)
-        .transformWithState(new IdleTimeoutProcessor(gapMinutes * 60000L),
-          org.apache.spark.sql.streaming.TimeMode.EventTime(),
-          OutputMode.Append())
-      drain(spark, out.toDF(), OutputMode.Append(), statePartitions = 4)
-        .orderBy(col("user_id"))
-    } finally {
-      prev.fold(spark.conf.unset(provKey))(v => spark.conf.set(provKey, v))
-    }
+    val ds: Dataset[Ev] = streamEvents(spark, dir)
+      .withWatermark("ts", s"$delayMinutes minutes")
+      .select(col("user_id"), col("ts"), col("value")).as[Ev]
+    val out = ds.groupByKey(_.user_id)
+      .transformWithState(new IdleTimeoutProcessor(gapMinutes * 60000L),
+        org.apache.spark.sql.streaming.TimeMode.EventTime(),
+        OutputMode.Append())
+    drain(spark, out.toDF(), OutputMode.Append())
+      .orderBy(col("user_id"))
   }
 
   /** Per-user running (count, sum, last-seen) via Spark 4's
@@ -1363,17 +1332,6 @@ object StreamQueries {
     streamTransformWithStateFrom(spark, dir, rawEvents = true,
       filesPerTrigger = None)
 
-  /** [[streamTransformWithState]] over an arbitrary parquet stream dir —
-    * the [[streamForeachbatchUpsertFrom]] convention: `rawEvents = true`
-    * reads the sf dir's events file (probed ts type); `rawEvents =
-    * false` reads micros-TIMESTAMP re-exports; `filesPerTrigger` forces
-    * a multi-micro-batch drain so specs can prove the ValueState
-    * carries across batches. */
-  /** Shared micro-batch source for the transformWithState family:
-    * `rawEvents = true` reads the sf dir's events file (probed ts
-    * type); `rawEvents = false` reads micros-TIMESTAMP re-exports,
-    * with `filesPerTrigger` forcing a multi-micro-batch drain so specs
-    * can prove state carries across batches. */
   case class RlOut(user_id: Long, event_id: Long, allowed: Boolean)
 
   case class AzOut(user_id: Long, event_id: Long, n_prior: Long)
@@ -1481,24 +1439,15 @@ object StreamQueries {
   def streamRateLimit(spark: SparkSession, dir: String,
       capacityTokens: Long = 2L, periodUs: Long = 43200000000L): DataFrame = {
     import spark.implicits._
-    // transformWithState needs multiple column families → RocksDB store
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ds = streamEvents(spark, dir, singleBatch = true)
-        .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"))
-        .as[(Long, Long, Long)]
-      val out = ds.groupByKey(_._1)
-        .transformWithState(new RateLimitProcessor(capacityTokens, periodUs),
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Update())
-      drain(spark, out.toDF(), OutputMode.Update(), statePartitions = 4)
-        .orderBy(col("user_id"), col("event_id"))
-    } finally {
-      prev.fold(spark.conf.unset(provKey))(v => spark.conf.set(provKey, v))
-    }
+    val ds = streamEvents(spark, dir, singleBatch = true)
+      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"))
+      .as[(Long, Long, Long)]
+    val out = ds.groupByKey(_._1)
+      .transformWithState(new RateLimitProcessor(capacityTokens, periodUs),
+        org.apache.spark.sql.streaming.TimeMode.None(),
+        OutputMode.Update())
+    drain(spark, out.toDF(), OutputMode.Update())
+      .orderBy(col("user_id"), col("event_id"))
   }
 
   /** Streaming z-score anomaly gate over [[AnomalyZProcessor]]: emits
@@ -1517,24 +1466,16 @@ object StreamQueries {
   def streamAnomalyZscore(spark: SparkSession, dir: String,
       tau2: Long = 9L, minN: Long = 10L): DataFrame = {
     import spark.implicits._
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ds = streamEvents(spark, dir, singleBatch = true)
-        .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"),
-          round(col("value") * lit(1000)).cast("long").as("v3"))
-        .as[(Long, Long, Long, Long)]
-      val out = ds.groupByKey(_._1)
-        .transformWithState(new AnomalyZProcessor(tau2, minN),
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Update())
-      drain(spark, out.toDF(), OutputMode.Update(), statePartitions = 4)
-        .orderBy(col("user_id"), col("event_id"))
-    } finally {
-      prev.fold(spark.conf.unset(provKey))(v => spark.conf.set(provKey, v))
-    }
+    val ds = streamEvents(spark, dir, singleBatch = true)
+      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"),
+        round(col("value") * lit(1000)).cast("long").as("v3"))
+      .as[(Long, Long, Long, Long)]
+    val out = ds.groupByKey(_._1)
+      .transformWithState(new AnomalyZProcessor(tau2, minN),
+        org.apache.spark.sql.streaming.TimeMode.None(),
+        OutputMode.Update())
+    drain(spark, out.toDF(), OutputMode.Update())
+      .orderBy(col("user_id"), col("event_id"))
   }
 
   case class KfOut(user_id: Long, event_id: Long, rn: Long, z: Double,
@@ -1587,25 +1528,17 @@ object StreamQueries {
   def streamKalmanFilter(spark: SparkSession, dir: String, q: Double = 1.0,
       r: Double = 4.0, maxUser: Long = 50L): DataFrame = {
     import spark.implicits._
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ds = streamEvents(spark, dir, singleBatch = true)
-        .filter(col("user_id") < maxUser)
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("ts")).as("us"), col("value"))
-        .as[(Long, Long, Long, Double)]
-      val out = ds.groupByKey(_._1)
-        .transformWithState(new Kalman1dProcessor(q, r),
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Update())
-      drain(spark, out.toDF(), OutputMode.Update(), statePartitions = 4)
-        .orderBy(col("user_id"), col("rn"))
-    } finally {
-      prev.fold(spark.conf.unset(provKey))(v => spark.conf.set(provKey, v))
-    }
+    val ds = streamEvents(spark, dir, singleBatch = true)
+      .filter(col("user_id") < maxUser)
+      .select(col("user_id"), col("event_id"),
+        unix_micros(col("ts")).as("us"), col("value"))
+      .as[(Long, Long, Long, Double)]
+    val out = ds.groupByKey(_._1)
+      .transformWithState(new Kalman1dProcessor(q, r),
+        org.apache.spark.sql.streaming.TimeMode.None(),
+        OutputMode.Update())
+    drain(spark, out.toDF(), OutputMode.Update())
+      .orderBy(col("user_id"), col("rn"))
   }
 
   case class DebOut(user_id: Long, event_id: Long, us: Long)
@@ -1653,27 +1586,19 @@ object StreamQueries {
   def streamAlertDebounce(spark: SparkSession, dir: String,
       gapUs: Long = 1800000000L): DataFrame = {
     import spark.implicits._
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ds = streamEvents(spark, dir, singleBatch = true)
-        .filter(col("event_type") === "error")
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("ts")).as("us"))
-        .as[(Long, Long, Long)]
-      val out = ds.groupByKey(_._1)
-        .transformWithState(new DebounceProcessor(gapUs),
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Update())
-      drain(spark, out.toDF(), OutputMode.Update(), statePartitions = 4)
-        .select(col("user_id"), col("event_id"),
-          timestamp_micros(col("us")).as("ts"))
-        .orderBy(col("user_id"), col("event_id"))
-    } finally {
-      prev.fold(spark.conf.unset(provKey))(v => spark.conf.set(provKey, v))
-    }
+    val ds = streamEvents(spark, dir, singleBatch = true)
+      .filter(col("event_type") === "error")
+      .select(col("user_id"), col("event_id"),
+        unix_micros(col("ts")).as("us"))
+      .as[(Long, Long, Long)]
+    val out = ds.groupByKey(_._1)
+      .transformWithState(new DebounceProcessor(gapUs),
+        org.apache.spark.sql.streaming.TimeMode.None(),
+        OutputMode.Update())
+    drain(spark, out.toDF(), OutputMode.Update())
+      .select(col("user_id"), col("event_id"),
+        timestamp_micros(col("us")).as("ts"))
+      .orderBy(col("user_id"), col("event_id"))
   }
 
   case class CusumOut(user_id: Long, event_id: Long, rn: Long,
@@ -1724,25 +1649,17 @@ object StreamQueries {
       target: Double = 50.0, slack: Double = 5.0, h: Double = 200.0,
       maxUser: Long = 50L): DataFrame = {
     import spark.implicits._
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ds = streamEvents(spark, dir, singleBatch = true)
-        .filter(col("user_id") < maxUser)
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("ts")).as("us"), col("value"))
-        .as[(Long, Long, Long, Double)]
-      val out = ds.groupByKey(_._1)
-        .transformWithState(new CusumTargetProcessor(target, slack, h),
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Update())
-      drain(spark, out.toDF(), OutputMode.Update(), statePartitions = 4)
-        .orderBy(col("user_id"), col("rn"))
-    } finally {
-      prev.fold(spark.conf.unset(provKey))(v => spark.conf.set(provKey, v))
-    }
+    val ds = streamEvents(spark, dir, singleBatch = true)
+      .filter(col("user_id") < maxUser)
+      .select(col("user_id"), col("event_id"),
+        unix_micros(col("ts")).as("us"), col("value"))
+      .as[(Long, Long, Long, Double)]
+    val out = ds.groupByKey(_._1)
+      .transformWithState(new CusumTargetProcessor(target, slack, h),
+        org.apache.spark.sql.streaming.TimeMode.None(),
+        OutputMode.Update())
+    drain(spark, out.toDF(), OutputMode.Update())
+      .orderBy(col("user_id"), col("rn"))
   }
 
   case class CrostonOut(user_id: Long, event_id: Long, rn: Long,
@@ -1800,44 +1717,18 @@ object StreamQueries {
   def streamCroston(spark: SparkSession, dir: String,
       alpha: Double = 0.1, maxUser: Long = 50L): DataFrame = {
     import spark.implicits._
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ds = streamEvents(spark, dir, singleBatch = true)
-        .filter(col("user_id") < maxUser
-          && col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("ts")).as("us"), col("value"))
-        .as[(Long, Long, Long, Double)]
-      val out = ds.groupByKey(_._1)
-        .transformWithState(new CrostonProcessor(alpha),
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Update())
-      drain(spark, out.toDF(), OutputMode.Update(), statePartitions = 4)
-        .orderBy(col("user_id"), col("rn"))
-    } finally {
-      prev.fold(spark.conf.unset(provKey))(v => spark.conf.set(provKey, v))
-    }
-  }
-
-  private def twsSource(spark: SparkSession, dir: String,
-      rawEvents: Boolean, filesPerTrigger: Option[Int]): DataFrame =
-    if (rawEvents) streamEvents(spark, dir)
-    else {
-      val reader1 = spark.readStream.schema(StructType.fromDDL(
-        "event_id LONG, ts TIMESTAMP, user_id LONG, " +
-          "event_type STRING, value DOUBLE, props STRING"))
-      filesPerTrigger.fold(reader1)(n =>
-        reader1.option("maxFilesPerTrigger", n)).parquet(dir)
-    }
-
-  /** Streaming view of the embeddings table (file or directory layout,
-    * probed like [[streamEvents]]). */
-  private def streamEmbeddings(spark: SparkSession, dir: String): DataFrame = {
-    streamTable(spark.readStream.schema(StructType.fromDDL(
-      "vec_id LONG, embedding ARRAY<FLOAT>, label INT")), dir, "embeddings")
+    val ds = streamEvents(spark, dir, singleBatch = true)
+      .filter(col("user_id") < maxUser
+        && col("event_type") === "purchase")
+      .select(col("user_id"), col("event_id"),
+        unix_micros(col("ts")).as("us"), col("value"))
+      .as[(Long, Long, Long, Double)]
+    val out = ds.groupByKey(_._1)
+      .transformWithState(new CrostonProcessor(alpha),
+        org.apache.spark.sql.streaming.TimeMode.None(),
+        OutputMode.Update())
+    drain(spark, out.toDF(), OutputMode.Update())
+      .orderBy(col("user_id"), col("rn"))
   }
 
   case class CalIn(bin: Int, scoreU: Long, pos: Long)
@@ -1888,15 +1779,11 @@ object StreamQueries {
     * epilogue, shared oracle). */
   def streamEvalEce(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
     val score = least(greatest(
       element_at(col("embedding"), 1).cast("double") * 2.0 + 0.5,
       lit(0.0)), lit(0.9999))
-    val ds = streamEmbeddings(spark, dir)
+    val ds = streamTable(spark, s"$dir/embeddings.parquet",
+        embeddingsSchema, None)
       .select(floor(score * 10).cast("int").as("bin"),
         round(score * lit(1e6)).cast("long").as("scoreU"),
         when(col("label") % 2 === 1, 1L).otherwise(0L).as("pos"))
@@ -1909,8 +1796,7 @@ object StreamQueries {
     // final state per bin is the per-column max of the Update emissions;
     // the micro-unit total converts back with the batch query's exact
     // one-division epilogue
-    val panel = drain(spark, out.toDF(), OutputMode.Update(),
-        statePartitions = 4)
+    val panel = drain(spark, out.toDF(), OutputMode.Update())
       .groupBy(col("bin"))
       .agg(max(col("n")).as("n"), max(col("sum_u")).as("su"),
         max(col("n_pos")).as("n_pos"))
@@ -1918,18 +1804,6 @@ object StreamQueries {
         (col("su").cast("double") / lit(1e6)).as("sum_score"),
         col("n_pos"))
     graft.query.Analytics3.eceFromBins(panel)
-    } finally {
-      prev.fold(spark.conf.unset(provKey))(v => spark.conf.set(provKey, v))
-    }
-  }
-
-  /** Streaming view of the orders table (file or directory layout).
-    * Declares only the needed column — parquet prunes by name, and the
-    * stored o_orderdate physical type (DATE vs TIMESTAMP) varies by
-    * generation, the ts-type lesson. */
-  private def streamOrders(spark: SparkSession, dir: String): DataFrame = {
-    streamTable(spark.readStream.schema(StructType.fromDDL(
-      "o_totalprice DOUBLE")), dir, "orders")
   }
 
   case class DigitIn(digit: Int, one: Long)
@@ -1963,32 +1837,27 @@ object StreamQueries {
     * alarms). Drain == batch bit-identically; shared oracle. */
   def streamDqBenford(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      // cents > 0, not raw price > 0 — the batch query's r15-advice
-      // fix, mirrored so drain == batch on ANY input (a price in
-      // (0, 0.005) rounds to digit 0 and a non-finite chi2_term)
-      val cents = round(col("o_totalprice") * lit(100.0)).cast("long")
-      val ds = streamOrders(spark, dir)
-        .filter(cents > 0)
-        .select(substring(cents.cast("string"), 1, 1).cast("int")
-          .as("digit"), lit(1L).as("one"))
-        .as[DigitIn]
-      val out = ds.groupByKey(_.digit)
-        .transformWithState(new BenfordProcessor(),
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Update())
-      val panel = drain(spark, out.toDF(), OutputMode.Update(),
-          statePartitions = 4)
-        .groupBy(col("digit"))
-        .agg(max(col("n_orders")).as("n_orders"))
-      graft.query.Analytics5.benfordFromPanel(panel)
-    } finally {
-      prev.fold(spark.conf.unset(provKey))(v => spark.conf.set(provKey, v))
-    }
+    // cents > 0, not raw price > 0 — the batch query's r15-advice
+    // fix, mirrored so drain == batch on ANY input (a price in
+    // (0, 0.005) rounds to digit 0 and a non-finite chi2_term)
+    val cents = round(col("o_totalprice") * lit(100.0)).cast("long")
+    // declares only the needed column — parquet prunes by name, and the
+    // stored o_orderdate physical type (DATE vs TIMESTAMP) varies by
+    // generation, the ts-type lesson
+    val ds = streamTable(spark, s"$dir/orders.parquet",
+        StructType.fromDDL("o_totalprice DOUBLE"), None)
+      .filter(cents > 0)
+      .select(substring(cents.cast("string"), 1, 1).cast("int")
+        .as("digit"), lit(1L).as("one"))
+      .as[DigitIn]
+    val out = ds.groupByKey(_.digit)
+      .transformWithState(new BenfordProcessor(),
+        org.apache.spark.sql.streaming.TimeMode.None(),
+        OutputMode.Update())
+    val panel = drain(spark, out.toDF(), OutputMode.Update())
+      .groupBy(col("digit"))
+      .agg(max(col("n_orders")).as("n_orders"))
+    graft.query.Analytics5.benfordFromPanel(panel)
   }
 
   case class PsiIn(bin: Long, a: Long, b: Long)
@@ -2029,11 +1898,6 @@ object StreamQueries {
   def streamDriftPsi(spark: SparkSession, dir: String,
       bins: Int = 10): DataFrame = {
     import spark.implicits._
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
     val sides = graft.schema.Schemas.events(spark, dir)
       .select(col("value"), (col("event_id") % 2 === 0).as("is_a"))
     val head = sides.agg(
@@ -2060,42 +1924,37 @@ object StreamQueries {
       .transformWithState(new PsiBinsProcessor(),
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Update())
-    val panel = drain(spark, out.toDF(), OutputMode.Update(),
-        statePartitions = 4)
+    val panel = drain(spark, out.toDF(), OutputMode.Update())
       .groupBy(col("bin"))
       .agg(max(col("ca")).as("ca"), max(col("cb")).as("cb"))
     val tot = panel.agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"))
     graft.query.Analytics.psiTermsFromPanel(
       panel.crossJoin(broadcast(tot)),
       col("na").cast("double"), col("nb").cast("double"))
-    } finally {
-      prev.fold(spark.conf.unset(provKey))(v => spark.conf.set(provKey, v))
-    }
   }
 
+  /** [[streamTransformWithState]] over an arbitrary parquet stream dir —
+    * the [[streamForeachbatchUpsertFrom]] convention: `rawEvents = true`
+    * reads the sf dir's events file (probed ts type); `rawEvents =
+    * false` reads micros-TIMESTAMP re-exports; `filesPerTrigger` forces
+    * a multi-micro-batch drain so specs can prove the ValueState
+    * carries across batches. */
   def streamTransformWithStateFrom(spark: SparkSession, dir: String,
       rawEvents: Boolean, filesPerTrigger: Option[Int]): DataFrame = {
     import spark.implicits._
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ds: Dataset[Ev] = twsSource(spark, dir, rawEvents, filesPerTrigger)
-        .select(col("user_id"), col("ts"), col("value")).as[Ev]
-      val out = ds.groupByKey(_.user_id)
-        .transformWithState(new RunningProfileProcessor(),
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Update())
-      drain(spark, out.toDF(), OutputMode.Update(), statePartitions = 4)
-        .groupBy(col("user_id"))
-        .agg(max(col("n_events")).as("n_events"),
-          max_by(col("sum_value"), col("n_events"))
-            .cast("float").as("sum_value"),
-          max(col("last_ts")).as("last_ts"))
-        .orderBy(col("user_id"))
-    } finally {
-      prev.fold(spark.conf.unset(provKey))(v => spark.conf.set(provKey, v))
-    }
+    val ds: Dataset[Ev] = streamEvents(spark, dir,
+        filesPerTrigger = filesPerTrigger, rawEvents = rawEvents)
+      .select(col("user_id"), col("ts"), col("value")).as[Ev]
+    val out = ds.groupByKey(_.user_id)
+      .transformWithState(new RunningProfileProcessor(),
+        org.apache.spark.sql.streaming.TimeMode.None(),
+        OutputMode.Update())
+    drain(spark, out.toDF(), OutputMode.Update())
+      .groupBy(col("user_id"))
+      .agg(max(col("n_events")).as("n_events"),
+        max_by(col("sum_value"), col("n_events"))
+          .cast("float").as("sum_value"),
+        max(col("last_ts")).as("last_ts"))
+      .orderBy(col("user_id"))
   }
 }

@@ -1,9 +1,10 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.{StateOperatorProgress, StreamingQueryListener}
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Dev profiling main: per-query job/stage/task breakdown. For each named
   * query it reports cold and warm wall time plus, for the warm pass, the
@@ -13,7 +14,8 @@ import scala.collection.mutable
   * Stream queries also print every micro-batch's `durationMs`
   * decomposition (queryPlanning / addBatch / getBatch / walCommit /
   * commitOffsets / triggerExecution) and per-operator state lines, which
-  * say whether a drain's floor is planning, state commits or envelope.
+  * say whether a drain's floor is planning, state commits or envelope,
+  * and which state partition count and store (rocksdb/hdfs) it ran on.
   *
   * Usage: [SPARK_GRAFT_CPUS=n] [QPROF_SUMMARY=1]
   *   runMain graft.tools.QProf <sfDir> <name>|ALL [<name>…]
@@ -58,6 +60,11 @@ object QProf {
         }
     }
 
+    // the state-store provider, told apart by its custom metrics
+    def storeKind(s: StateOperatorProgress): String =
+      if (s.customMetrics.keySet.asScala.exists(_.startsWith("rocksdb")))
+        "rocksdb"
+      else "hdfs"
     val batches = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val streamListener = new StreamingQueryListener {
       override def onQueryStarted(
@@ -75,7 +82,8 @@ object QProf {
           f"latestOffset=${g("latestOffset")}%4d wal=${g("walCommit")}%4d " +
           f"commit=${g("commitOffsets")}%4d " +
           p.stateOperators.map(s =>
-            s"[${s.operatorName} upd=${s.allUpdatesTimeMs} " +
+            s"[${s.operatorName} parts=${s.numShufflePartitions} " +
+            s"store=${storeKind(s)} upd=${s.allUpdatesTimeMs} " +
             s"rm=${s.allRemovalsTimeMs} cmt=${s.commitTimeMs} " +
             s"rows=${s.numRowsTotal} updated=${s.numRowsUpdated}]")
             .mkString(" "))
