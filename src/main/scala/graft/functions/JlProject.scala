@@ -85,23 +85,10 @@ case class JlProject(child: Expression, outDim: Int)
 }
 
 object JlProject {
-  private def intLit(exprs: Seq[Expression]): Int = {
-    if (exprs.size != 2) throw new IllegalArgumentException(
-      s"jl_project(emb, outDim) takes 2 arguments, got ${exprs.size}")
-    val e = exprs(1)
-    if (!e.foldable || e.dataType != org.apache.spark.sql.types.IntegerType)
-      throw new IllegalArgumentException(
-        "jl_project argument 1 (outDim) must be an INT literal, " +
-          s"got ${e.dataType.catalogString} (foldable=${e.foldable}): $e")
-    e.eval() match {
-      case i: Int => i
-      case null => throw new IllegalArgumentException(
-        "jl_project argument 1 (outDim) must not be NULL")
-    }
+  private def builder(exprs: Seq[Expression]): JlProject = {
+    Args.arity(exprs, 2, "jl_project(emb, outDim)")
+    JlProject(exprs.head, Args.intLit("jl_project", exprs, 1, "outDim"))
   }
-
-  private def builder(exprs: Seq[Expression]): JlProject =
-    JlProject(exprs.head, intLit(exprs))
 
   /** FunctionDescription for SparkSessionExtensions.injectFunction. */
   def descriptor: (org.apache.spark.sql.catalyst.FunctionIdentifier,

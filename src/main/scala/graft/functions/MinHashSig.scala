@@ -82,27 +82,12 @@ case class MinHashSig(child: Expression, shingleSize: Int, numHashes: Int)
 }
 
 object MinHashSig {
-  // analysis-time validation: a non-literal or non-int arg would otherwise
-  // surface as an opaque NPE/ClassCastException out of eval()
-  private def intLit(exprs: Seq[Expression], pos: Int, name: String): Int = {
-    if (exprs.size != 3) throw new IllegalArgumentException(
-      s"minhash_sig(toks, shingleSize, numHashes) takes 3 arguments, got ${exprs.size}")
-    val e = exprs(pos)
-    if (!e.foldable || e.dataType != org.apache.spark.sql.types.IntegerType)
-      throw new IllegalArgumentException(
-        s"minhash_sig argument $pos ($name) must be an INT literal, " +
-          s"got ${e.dataType.catalogString} (foldable=${e.foldable}): $e")
-    e.eval() match {
-      case i: Int => i
-      case null => throw new IllegalArgumentException(
-        s"minhash_sig argument $pos ($name) must not be NULL")
-    }
-  }
-
-  private def builder(exprs: Seq[Expression]): MinHashSig =
+  private def builder(exprs: Seq[Expression]): MinHashSig = {
+    Args.arity(exprs, 3, "minhash_sig(toks, shingleSize, numHashes)")
     MinHashSig(exprs.head,
-      intLit(exprs, 1, "shingleSize"),
-      intLit(exprs, 2, "numHashes"))
+      Args.intLit("minhash_sig", exprs, 1, "shingleSize"),
+      Args.intLit("minhash_sig", exprs, 2, "numHashes"))
+  }
 
   /** FunctionDescription for SparkSessionExtensions.injectFunction. */
   def descriptor: (org.apache.spark.sql.catalyst.FunctionIdentifier,

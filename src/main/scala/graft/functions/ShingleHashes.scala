@@ -132,23 +132,11 @@ case class ShingleHashes(child: Expression, shingleSize: Int)
 }
 
 object ShingleHashes {
-  private def intLit(exprs: Seq[Expression], pos: Int, name: String): Int = {
-    if (exprs.size != 2) throw new IllegalArgumentException(
-      s"shingle_hashes(toks, shingleSize) takes 2 arguments, got ${exprs.size}")
-    val e = exprs(pos)
-    if (!e.foldable || e.dataType != org.apache.spark.sql.types.IntegerType)
-      throw new IllegalArgumentException(
-        s"shingle_hashes argument $pos ($name) must be an INT literal, " +
-          s"got ${e.dataType.catalogString} (foldable=${e.foldable}): $e")
-    e.eval() match {
-      case i: Int => i
-      case null => throw new IllegalArgumentException(
-        s"shingle_hashes argument $pos ($name) must not be NULL")
-    }
+  private def builder(exprs: Seq[Expression]): ShingleHashes = {
+    Args.arity(exprs, 2, "shingle_hashes(toks, shingleSize)")
+    ShingleHashes(exprs.head,
+      Args.intLit("shingle_hashes", exprs, 1, "shingleSize"))
   }
-
-  private def builder(exprs: Seq[Expression]): ShingleHashes =
-    ShingleHashes(exprs.head, intLit(exprs, 1, "shingleSize"))
 
   /** FunctionDescription for SparkSessionExtensions.injectFunction. */
   def descriptor: (org.apache.spark.sql.catalyst.FunctionIdentifier,
@@ -258,9 +246,7 @@ case class Intersect3CountSortedExcl(first: Expression, second: Expression,
 
 object Intersect3CountSortedExcl {
   private def builder(exprs: Seq[Expression]): Intersect3CountSortedExcl = {
-    if (exprs.size != 4) throw new IllegalArgumentException(
-      "intersect3_count_sorted_excl(a, b, c, excl) takes 4 arguments, " +
-        s"got ${exprs.size}")
+    Args.arity(exprs, 4, "intersect3_count_sorted_excl(a, b, c, excl)")
     Intersect3CountSortedExcl(exprs.head, exprs(1), exprs(2), exprs(3))
   }
 
@@ -278,8 +264,7 @@ object Intersect3CountSortedExcl {
 
 object IntersectCountSorted {
   private def builder(exprs: Seq[Expression]): IntersectCountSorted = {
-    if (exprs.size != 2) throw new IllegalArgumentException(
-      s"intersect_count_sorted(a, b) takes 2 arguments, got ${exprs.size}")
+    Args.arity(exprs, 2, "intersect_count_sorted(a, b)")
     IntersectCountSorted(exprs.head, exprs(1))
   }
 
@@ -296,8 +281,7 @@ object IntersectCountSorted {
 
 object JaccardSorted {
   private def builder(exprs: Seq[Expression]): JaccardSorted = {
-    if (exprs.size != 2) throw new IllegalArgumentException(
-      s"jaccard_sorted(a, b) takes 2 arguments, got ${exprs.size}")
+    Args.arity(exprs, 2, "jaccard_sorted(a, b)")
     JaccardSorted(exprs.head, exprs(1))
   }
 

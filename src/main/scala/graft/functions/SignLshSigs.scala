@@ -91,25 +91,12 @@ case class SignLshSigs(child: Expression, numTables: Int, bits: Int)
 }
 
 object SignLshSigs {
-  private def intLit(exprs: Seq[Expression], pos: Int, name: String): Int = {
-    if (exprs.size != 3) throw new IllegalArgumentException(
-      s"sign_lsh_sigs(emb, tables, bits) takes 3 arguments, got ${exprs.size}")
-    val e = exprs(pos)
-    if (!e.foldable || e.dataType != org.apache.spark.sql.types.IntegerType)
-      throw new IllegalArgumentException(
-        s"sign_lsh_sigs argument $pos ($name) must be an INT literal, " +
-          s"got ${e.dataType.catalogString} (foldable=${e.foldable}): $e")
-    e.eval() match {
-      case i: Int => i
-      case null => throw new IllegalArgumentException(
-        s"sign_lsh_sigs argument $pos ($name) must not be NULL")
-    }
-  }
-
-  private def builder(exprs: Seq[Expression]): SignLshSigs =
+  private def builder(exprs: Seq[Expression]): SignLshSigs = {
+    Args.arity(exprs, 3, "sign_lsh_sigs(emb, tables, bits)")
     SignLshSigs(exprs.head,
-      intLit(exprs, 1, "numTables"),
-      intLit(exprs, 2, "bits"))
+      Args.intLit("sign_lsh_sigs", exprs, 1, "numTables"),
+      Args.intLit("sign_lsh_sigs", exprs, 2, "bits"))
+  }
 
   /** FunctionDescription for SparkSessionExtensions.injectFunction. */
   def descriptor: (org.apache.spark.sql.catalyst.FunctionIdentifier,

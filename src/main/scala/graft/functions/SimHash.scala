@@ -136,5 +136,5 @@ object SimHash60 {
     (org.apache.spark.sql.catalyst.FunctionIdentifier("simhash60"),
       new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
         classOf[SimHash60].getCanonicalName, "simhash60"),
-      exprs => SimHash60(exprs.head))
+      exprs => SimHash60(Args.arity(exprs, 1, "simhash60(toks)").head))
 }

@@ -110,5 +110,8 @@ object FloatVecDot {
     (org.apache.spark.sql.catalyst.FunctionIdentifier("float_dot"),
       new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
         classOf[FloatVecDot].getCanonicalName, "float_dot"),
-      exprs => FloatVecDot(exprs(0), exprs(1)))
+      exprs => {
+        Args.arity(exprs, 2, "float_dot(a, b)")
+        FloatVecDot(exprs(0), exprs(1))
+      })
 }

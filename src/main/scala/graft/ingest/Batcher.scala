@@ -1,10 +1,10 @@
 package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
+import graft.query.TwoLevel
 
 /** S6–S10: count-based tumbling batch windows (reference
   * consumer/consumer.py:37-94): buffer the stream, emit one batch per
@@ -45,29 +45,16 @@ object Batcher {
     * unique column). Cap: ranks past `maxBatches * batchSize` drop
     * (consumer.py:60,80-82).
     *
-    * Scale-safe global ranking without a single-partition sort: rows
-    * bucket by the VALUE range of `orderCol` (deterministic under any
-    * physical partitioning), a per-bucket histogram prefix-sums into
-    * bucket offsets (a window over n/bucketWidth tiny rows, broadcast
-    * back), and ranks are offset + within-bucket row_number (parallel
-    * windows, ≤ bucketWidth-ish rows each for dense-ish keys). */
+    * Scale-safe global ranking without a single-partition sort: the
+    * [[graft.query.TwoLevel]] rank, rows bucketed by the VALUE range of
+    * `orderCol` (deterministic under any physical partitioning). */
   def assignBatches(df: DataFrame, orderCol: String, batchSize: Int,
-      maxBatches: Int, bucketWidth: Long = 4096L): DataFrame = {
-    val bucketed = df.withColumn("__bucket",
-      floor(col(orderCol) / bucketWidth))
-    val offsets = bucketed.groupBy(col("__bucket"))
-      .agg(count(lit(1)).as("__bn"))
-      .withColumn("__off",
-        coalesce(sum(col("__bn")).over(Window.orderBy(col("__bucket"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("__bucket"), col("__off"))
-    val wLocal = Window.partitionBy(col("__bucket")).orderBy(col(orderCol))
-    bucketed.join(broadcast(offsets), Seq("__bucket"))
-      .withColumn("rn", col("__off") + row_number().over(wLocal))
+      maxBatches: Int, bucketWidth: Long = 4096L): DataFrame =
+    TwoLevel.rowNumber(df, floor(col(orderCol) / bucketWidth),
+        Seq(col(orderCol)), bucketDesc = false, "rn")
       .withColumn("batch_id", floor((col("rn") - 1) / batchSize).cast("int"))
       .filter(col("batch_id") < maxBatches)
-      .drop("rn", "__bucket", "__off")
-  }
+      .drop("rn")
 
   /** (2) Scale path: arrival-order (partition-major) batch assignment with
     * no global sort. Stage 1 counts rows per partition (driver receives

@@ -606,18 +606,15 @@ object Analytics {
     * produce the identical double.
     *
     * Scale shape: per-distinct-value cohort counts first (one
-    * well-distributed shuffle), then the empirical-CDF prefix sums use
-    * the house two-level trick ([[graft.query.Pipeline.packSequences]],
-    * s9): per-bucket subtotals → a prefix window over the ≤`buckets`-row
-    * HISTOGRAM (the only single-partition window — never the data) →
-    * broadcast offsets + within-bucket windows. The final reduce is a
-    * 1-row max. Bucket boundaries derive from driver-fetched min/max
-    * (query constants, the [[Similarity]] queryVector convention); the
-    * bucketing changes the execution shape only — the result equals the
-    * global-window definition, which IS the DuckDB oracle. */
+    * well-distributed shuffle), then the empirical-CDF prefix sums are a
+    * [[TwoLevel]] prefix over ≤`buckets` value-range buckets. The final
+    * reduce is a 1-row max. Bucket boundaries derive from driver-fetched
+    * min/max (query constants, the [[Similarity]] queryVector
+    * convention); the bucketing changes the execution shape only — the
+    * result equals the global-window definition, which IS the DuckDB
+    * oracle. */
   def driftKsValue(spark: SparkSession, dir: String,
       buckets: Int = 1024): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val sides = graft.schema.Schemas.events(spark, dir)
       .select(col("value"), (col("event_id") % 2 === 0).as("is_a"))
     val head = sides.agg(
@@ -644,21 +641,9 @@ object Analytics {
     val perValue = sides.groupBy(col("value"))
       .agg(sum(when(col("is_a"), 1L).otherwise(0L)).as("ca"),
         sum(when(col("is_a"), 0L).otherwise(1L)).as("cb"))
-      .withColumn("bucket", bucket)
-    val hist = perValue.groupBy(col("bucket"))
-      .agg(sum(col("ca")).as("ba"), sum(col("cb")).as("bb"))
-      .withColumn("offa", coalesce(sum(col("ba")).over(
-        Window.orderBy(col("bucket"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("offb", coalesce(sum(col("bb")).over(
-        Window.orderBy(col("bucket"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("bucket"), col("offa"), col("offb"))
-    val wLoc = Window.partitionBy(col("bucket")).orderBy(col("value"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    perValue.join(broadcast(hist), Seq("bucket"))
-      .select((abs((col("offa") + sum(col("ca")).over(wLoc)) * lit(nb)
-        - (col("offb") + sum(col("cb")).over(wLoc)) * lit(na)))
+    TwoLevel.prefix(perValue, bucket, Seq(col("value")),
+        sums = Seq("ca" -> "cum_a", "cb" -> "cum_b"))
+      .select(abs(col("cum_a") * lit(nb) - col("cum_b") * lit(na))
         .as("dnum"))
       .agg(max(col("dnum")).as("ks_num"))
       .select(lit(na).as("n_a"), lit(nb).as("n_b"), col("ks_num"),

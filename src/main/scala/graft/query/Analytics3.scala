@@ -498,16 +498,13 @@ object Analytics3 {
     *
     * Scale shape: NO window touches row grain. Rows reduce to the
     * distinct-score grain (map-side-combined (count, npos) aggregate),
-    * scores bucket by their fixed [0, 0.9999] range into ≤ 4097
-    * buckets, the per-bucket count histogram prefix-sums into rank
-    * offsets (the only unpartitioned window runs over that bounded
-    * histogram), and within-bucket prefix windows run in parallel.
+    * and the count of rows below each distinct score is a [[TwoLevel]]
+    * exclusive prefix over ≤ 4097 fixed [0, 0.9999] score-range buckets.
     * The rank-sum identity needs only Σ npos·avg_rank, and every
     * avg_rank is an exact multiple of 0.5 (exactly representable), so
     * the double sum is order-independent — bit-identical to the
     * single-window per-row form. */
   def evalAucRoc(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val score = least(greatest(
       element_at(col("embedding"), 1).cast("double") * 2.0 + 0.5,
       lit(0.0)), lit(0.9999))
@@ -516,19 +513,10 @@ object Analytics3 {
         when(col("label") % 2 === 1, 1L).otherwise(0L).as("y"))
       .groupBy(col("score"))
       .agg(count(lit(1)).as("c"), sum(col("y")).as("np"))
-      .withColumn("__bkt", floor(col("score") * lit(4096.0)).cast("long"))
-    val offs = g.groupBy(col("__bkt"))
-      .agg(sum(col("c")).as("__bc"))
-      .select(col("__bkt"),
-        coalesce(sum(col("__bc")).over(Window.orderBy(col("__bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)).as("__off"))
-    val wLocal = Window.partitionBy(col("__bkt")).orderBy(col("score"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val ranked = g.join(broadcast(offs), Seq("__bkt"))
-      .select(col("c"), col("np"),
-        // rows below this distinct score; avg rank = that + (c+1)/2
-        (col("__off") + coalesce(sum(col("c")).over(wLocal), lit(0L)))
-          .as("cb"))
+    // rows below this distinct score; avg rank = that + (c+1)/2
+    val ranked = TwoLevel.prefix(g,
+      floor(col("score") * lit(4096.0)).cast("long"), Seq(col("score")),
+      sums = Seq("c" -> "cb"), inclusive = false)
     ranked.agg(
       // coalesce: empty input must report ZERO counts with a null rate
       // (the count() semantics of the pre-two-level form — EdgeCaseSpec)
@@ -568,11 +556,13 @@ object Analytics3 {
     * epilogue on the single output row.
     *
     * Scale shape: one (score)-grain map-side-combined aggregate, then
-    * the same two-level bucketed prefix/suffix as [[evalAucRoc]] (the
-    * only unpartitioned windows run over the ≤ 4097-bucket score-range
-    * histogram, never the distinct-score grain), one 5-sum reduce. */
+    * ONE [[TwoLevel]] ascending prefix of (nn, np) over the
+    * [[evalAucRoc]] score buckets (the only unpartitioned window runs
+    * over the ≤ 4097-bucket histogram), one 6-sum reduce. The positives
+    * ABOVE a score are npos − (inclusive np prefix), so Σe² expands
+    * around npos in the 1-row epilogue instead of needing a second,
+    * descending prefix. */
   def evalAucDelong(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val score = least(greatest(
       element_at(col("embedding"), 1).cast("double") * 2.0 + 0.5,
       lit(0.0)), lit(0.9999))
@@ -581,36 +571,23 @@ object Analytics3 {
         when(col("label") % 2 === 1, 1L).otherwise(0L).as("y"))
       .groupBy(col("score"))
       .agg(sum(col("y")).as("np"), sum(lit(1L) - col("y")).as("nn"))
-    // two-level cumulative placement (distinct scores of a continuous
-    // model output scale with the eval set): scores bucket by their
-    // fixed [0, 0.9999] range (≤ 4097 buckets), the per-bucket (nn, np)
-    // histogram prefix-sums into offsets — the only unpartitioned
-    // windows run over that bounded histogram — and the within-bucket
-    // exclusive prefix/suffix windows run in parallel
-    val gb = g.withColumn("__bkt", floor(col("score") * lit(4096.0))
-      .cast("long"))
-    val offs = gb.groupBy(col("__bkt"))
-      .agg(sum(col("nn")).as("__bn"), sum(col("np")).as("__bp"))
-      .select(col("__bkt"),
-        coalesce(sum(col("__bn")).over(Window.orderBy(col("__bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
-          .as("__offneg"),
-        coalesce(sum(col("__bp")).over(Window.orderBy(col("__bkt").desc)
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
-          .as("__offpos"))
-    val w = gb.join(broadcast(offs), Seq("__bkt"))
-      .withColumn("cneg", col("__offneg") + coalesce(sum(col("nn")).over(
-        Window.partitionBy(col("__bkt")).orderBy(col("score"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("cpos", col("__offpos") + coalesce(sum(col("np")).over(
-        Window.partitionBy(col("__bkt")).orderBy(col("score").desc)
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-    val d = lit(2L) * col("cneg") + col("nn")
-    val e = lit(2L) * col("cpos") + col("np")
+    val w = TwoLevel.prefix(g,
+      floor(col("score") * lit(4096.0)).cast("long"), Seq(col("score")),
+      sums = Seq("nn" -> "nn_le", "np" -> "np_le"))
+    val d = lit(2L) * (col("nn_le") - col("nn")) + col("nn")
+    // e = 2·(npos − np_le) + np = x + 2·npos
+    val x = col("np") - lit(2L) * col("np_le")
     val a = w.agg(sum(col("np")).as("npos"), sum(col("nn")).as("nneg"),
       sum(col("np") * d).as("u2"),
       sum(col("np") * d * d).as("sum_d2"),
-      sum(col("nn") * e * e).as("sum_e2"))
+      sum(col("nn") * x).as("sum_x"),
+      sum(col("nn") * x * x).as("sum_x2"))
+      // Σ nn·(x + 2P)² = Σnn·x² + 4P·Σnn·x + 4P²·Σnn, exact in DECIMAL(38,0)
+      .withColumn("sum_e2", {
+        def dec(c: String): Column = col(c).cast("decimal(38,0)")
+        (dec("sum_x2") + lit(4L) * dec("npos") * dec("sum_x")
+          + lit(4L) * dec("npos") * dec("npos") * dec("nneg")).cast("long")
+      })
     val n1 = col("npos").cast("double")
     val n0 = col("nneg").cast("double")
     val auc = col("u2").cast("double") / (lit(2.0) * n1 * n0)

@@ -27,15 +27,11 @@ object Analytics4 {
     * companion of [[Analytics3.evalAucRoc]] — preferred on imbalanced
     * labels where ROC-AUC saturates.
     *
-    * Scale shape: the (score desc, vec_id) total order is ranked
-    * TWO-LEVEL — no unpartitioned window ever sees row grain: rows
-    * bucket by the fixed [0, 0.9999] score range (≤ 4097 buckets), a
-    * per-bucket (count, positives) histogram prefix-sums in descending
-    * bucket order into rank and true-positive offsets (the only
-    * unpartitioned window runs over that bounded histogram), and the
-    * within-bucket rank/cumsum windows run in parallel. Every per-row
-    * (k, tp) is identical to the single-window form, so the AP is
-    * bit-identical. */
+    * Scale shape: the (score desc, vec_id) total order is ranked by
+    * a [[TwoLevel]] descending prefix (rank and true positives) over
+    * ≤ 4097 fixed [0, 0.9999] score-range buckets — no unpartitioned
+    * window ever sees row grain. Every per-row (k, tp) is identical to
+    * the single-window form, so the AP is bit-identical. */
   def evalPrAuc(spark: SparkSession, dir: String): DataFrame = {
     val score = least(greatest(
       element_at(col("embedding"), 1).cast("double") * 2.0 + 0.5,
@@ -43,21 +39,12 @@ object Analytics4 {
     val s = table(spark, dir, "embeddings")
       .select(col("vec_id"), score.as("score"),
         when(col("label") % 2 === 1, 1).otherwise(0).as("y"))
-      .withColumn("__bkt", floor(col("score") * lit(4096.0)).cast("long"))
-    val offs = s.groupBy(col("__bkt"))
-      .agg(count(lit(1)).as("__bn"), sum(col("y")).as("__bp"))
-      .select(col("__bkt"),
-        coalesce(sum(col("__bn")).over(Window.orderBy(col("__bkt").desc)
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)).as("__offn"),
-        coalesce(sum(col("__bp")).over(Window.orderBy(col("__bkt").desc)
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)).as("__offp"))
-    val wLocal = Window.partitionBy(col("__bkt"))
-      .orderBy(col("score").desc, col("vec_id"))
-    val ranked = s.join(broadcast(offs), Seq("__bkt")).select(col("y"),
-      (col("__offn") + row_number().over(wLocal)).cast("double").as("k"),
-      (col("__offp") + sum(col("y")).over(
-        wLocal.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .cast("double").as("tp"))
+    val ranked = TwoLevel.prefix(s,
+        floor(col("score") * lit(4096.0)).cast("long"),
+        Seq(col("score").desc, col("vec_id")), bucketDesc = true,
+        rowNumber = Some("k"), sums = Seq("y" -> "tp"))
+      .select(col("y"), col("k").cast("double").as("k"),
+        col("tp").cast("double").as("tp"))
     ranked.filter(col("y") === 1)
       .agg(count(lit(1)).as("npos"),
         sum(col("tp") / col("k")).as("sprec"))
@@ -768,37 +755,19 @@ object Analytics4 {
     * cumulative sum could flip the boundary row between engines.
     *
     * Scale shape: one map-side-combined aggregate to per-part cents,
-    * then a TWO-LEVEL rank/cumsum over the part grain (part cardinality
-    * is itself unbounded, so no unpartitioned window may touch it):
-    * parts bucket by cents range, a per-bucket (count, weight) histogram
-    * prefix-sums in descending bucket order into rank and cumsum offsets
-    * (the only unpartitioned window runs over the ≤ value-range/4096
-    * histogram rows), offsets broadcast back, and the within-bucket
-    * rank/cumsum windows run in parallel. Ties (equal cents) share a
-    * bucket by construction, so ranks match the single-window form
-    * exactly. */
+    * then a [[TwoLevel]] descending rank/cumsum over the part grain
+    * (part cardinality is itself unbounded, so no unpartitioned window
+    * may touch it), parts bucketed by cents range. Ties (equal cents)
+    * share a bucket by construction, so ranks match the single-window
+    * form exactly. */
   def aggParetoConcentration(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val perPart = table(spark, dir, "lineitem")
       .groupBy(col("l_partkey"))
       .agg(sum(round(col("l_extendedprice") * 100).cast("long"))
         .as("cents"))
-      .withColumn("__bkt", floor(col("cents") / lit(4096L)))
-    val offs = perPart.groupBy(col("__bkt"))
-      .agg(count(lit(1)).as("__bn"), sum(col("cents")).as("__bs"))
-      .select(col("__bkt"),
-        coalesce(sum(col("__bn")).over(Window.orderBy(col("__bkt").desc)
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)).as("__offn"),
-        coalesce(sum(col("__bs")).over(Window.orderBy(col("__bkt").desc)
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)).as("__offs"))
-    val wLocal = Window.partitionBy(col("__bkt"))
-      .orderBy(col("cents").desc, col("l_partkey"))
-    val ranked = perPart.join(broadcast(offs), Seq("__bkt"))
-      .select(col("l_partkey"), col("cents"),
-        (col("__offn") + row_number().over(wLocal)).as("rk"),
-        (col("__offs") + sum(col("cents")).over(
-          wLocal.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-          .as("cum"))
+    val ranked = TwoLevel.prefix(perPart, floor(col("cents") / lit(4096L)),
+      Seq(col("cents").desc, col("l_partkey")), bucketDesc = true,
+      rowNumber = Some("rk"), sums = Seq("cents" -> "cum"))
     val tot = perPart.agg(sum(col("cents")).as("t"),
       count(lit(1)).as("p"))
     // a part is needed for the 80% budget when the revenue BEFORE it is
@@ -1136,31 +1105,19 @@ object Analytics4 {
     * ratio is one double division.
     *
     * Scale shape: per-part cents is a map-side-combined aggregate; the
-    * ascending rank is TWO-LEVEL over the part grain (part cardinality
-    * is unbounded — no unpartitioned window touches it): parts bucket
-    * by cents range, the per-bucket count histogram prefix-sums into
-    * rank offsets (the only unpartitioned window runs over the tiny
-    * histogram), and within-bucket row_number windows run in parallel.
-    * Equal cents share a bucket, so ranks match the single-window form
-    * exactly; the moment fold is one row. (Σ i·xᵢ can exceed 2⁶³ only
-    * past ~10¹⁰ parts·cents — cast to double at that scale, accepting
-    * float noise in the ratio.) */
+    * ascending rank is a [[TwoLevel]] row number over the part grain
+    * (part cardinality is unbounded — no unpartitioned window touches
+    * it), parts bucketed by cents range. Equal cents share a bucket, so
+    * ranks match the single-window form exactly; the moment fold is one
+    * row. (Σ i·xᵢ can exceed 2⁶³ only past ~10¹⁰ parts·cents — cast to
+    * double at that scale, accepting float noise in the ratio.) */
   def aggGiniCents(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val perPart = table(spark, dir, "lineitem")
       .groupBy(col("l_partkey"))
       .agg(sum(round(col("l_extendedprice") * 100).cast("long"))
         .as("cents"))
-      .withColumn("__bkt", floor(col("cents") / lit(4096L)))
-    val offs = perPart.groupBy(col("__bkt"))
-      .agg(count(lit(1)).as("__bn"))
-      .select(col("__bkt"),
-        coalesce(sum(col("__bn")).over(Window.orderBy(col("__bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)).as("__off"))
-    val ranked = perPart.join(broadcast(offs), Seq("__bkt"))
-      .select(col("cents"),
-        (col("__off") + row_number().over(Window.partitionBy(col("__bkt"))
-          .orderBy(col("cents"), col("l_partkey")))).cast("long").as("i"))
+    val ranked = TwoLevel.rowNumber(perPart, floor(col("cents") / lit(4096L)),
+      Seq(col("cents"), col("l_partkey")), bucketDesc = false, "i")
     ranked.agg(count(lit(1)).cast("long").as("n"),
         sum(col("cents")).as("sx"),
         sum(col("i") * col("cents")).as("six"))

@@ -697,33 +697,19 @@ object Analytics5 {
     * division — no real-valued step anywhere, bit-identical
     * cross-engine, and Σ multiplicity = n by construction.
     *
-    * Scale shape: the global cumulative sum is TWO-LEVEL (the
-    * [[graft.ingest.Batcher.assignBatches]] histogram trick): rows
-    * bucket by o_orderkey range, a per-bucket weight histogram is
-    * prefix-summed into bucket offsets (the only unpartitioned window
-    * runs over |orders|/4096 histogram rows, never the fact table),
-    * offsets broadcast back, and the within-bucket cumsum windows run
-    * in parallel (≤ 4096 keys each). Then a map-only multiplicity
-    * expression with the 1-row (W, a) panel broadcast. */
+    * Scale shape: the global cumulative sum is a [[TwoLevel]] prefix
+    * (bucket = o_orderkey range, so the only unpartitioned window runs
+    * over |orders|/4096 histogram rows, never the fact table). Then a
+    * map-only multiplicity expression with the 1-row (W, a) panel
+    * broadcast. */
   def samplePpsSystematic(spark: SparkSession, dir: String,
       n: Int = 20): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val bucketed = table(spark, dir, "orders")
+    val orders = table(spark, dir, "orders")
       .select(col("o_orderkey"),
         round(col("o_totalprice") * lit(100.0)).cast("long").as("w"))
-      .withColumn("__bkt", floor(col("o_orderkey") / lit(4096L)))
-    val offsets = bucketed.groupBy(col("__bkt"))
-      .agg(sum(col("w")).as("__bw"))
-      .withColumn("__off",
-        coalesce(sum(col("__bw")).over(Window.orderBy(col("__bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("__bkt"), col("__off"))
-    val wLocal = Window.partitionBy(col("__bkt")).orderBy(col("o_orderkey"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val o = bucketed.join(broadcast(offsets), Seq("__bkt"))
-      .withColumn("c_hi", col("__off") + sum(col("w")).over(wLocal))
+    val o = TwoLevel.prefix(orders, floor(col("o_orderkey") / lit(4096L)),
+        Seq(col("o_orderkey")), sums = Seq("w" -> "c_hi"))
       .withColumn("c_lo", col("c_hi") - col("w"))
-      .drop("__bkt", "__off")
     val tot = o.agg(max(col("c_hi")).as("big_w"))
       .select(col("big_w"),
         (Dedup.hash60(lit("pps:anchor")) % col("big_w")).as("a"))
@@ -818,13 +804,11 @@ object Analytics5 {
     * rationals, so D is bit-deterministic.
     *
     * Scale shape: one tiny-key pre-aggregation to DISTINCT pooled
-    * values, then a TWO-LEVEL prefix over the value grain (distinct
+    * values, then a [[TwoLevel]] prefix over the value grain (distinct
     * values of a continuous metric scale with the data, so no
     * unpartitioned window may touch them): values bucket by their
     * unit-width range (the [[Analytics.driftKsValue]] shape — bucket
-    * count is bounded by the metric's domain, not the corpus), the
-    * per-bucket histogram prefix-sums into CDF offsets, and the
-    * within-bucket prefix windows run in parallel. */
+    * count is bounded by the metric's domain, not the corpus). */
   def evalKsTest(spark: SparkSession, dir: String): DataFrame = {
     val e = graft.schema.Schemas.events(spark, dir)
       .filter(col("event_type").isin("click", "purchase"))
@@ -834,20 +818,9 @@ object Analytics5 {
           .as("na"),
         sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
           .as("nb"))
-      .withColumn("__bkt", floor(col("value")).cast("long"))
     val tot = perValue.agg(sum(col("na")).as("ta"), sum(col("nb")).as("tb"))
-    val offs = perValue.groupBy(col("__bkt"))
-      .agg(sum(col("na")).as("__ba"), sum(col("nb")).as("__bb"))
-      .select(col("__bkt"),
-        coalesce(sum(col("__ba")).over(Window.orderBy(col("__bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)).as("__offa"),
-        coalesce(sum(col("__bb")).over(Window.orderBy(col("__bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)).as("__offb"))
-    val w = Window.partitionBy(col("__bkt")).orderBy(col("value"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    perValue.join(broadcast(offs), Seq("__bkt"))
-      .select(col("value"), (col("__offa") + sum(col("na")).over(w)).as("ca"),
-        (col("__offb") + sum(col("nb")).over(w)).as("cb"))
+    TwoLevel.prefix(perValue, floor(col("value")).cast("long"),
+        Seq(col("value")), sums = Seq("na" -> "ca", "nb" -> "cb"))
       .crossJoin(broadcast(tot))
       // one-sided sample: KS is undefined (and ANSI 0/0 throws)
       .filter(col("ta") > 0 && col("tb") > 0)
@@ -893,31 +866,19 @@ object Analytics5 {
     * float), each reporting its positive rate and lift over the global
     * base rate — the campaign-targeting readout beside ROC/PR.
     *
-    * Scale shape: the (score desc, vec_id) rank is TWO-LEVEL (the
-    * [[Analytics4.evalPrAuc]] shape — rows bucket by the fixed score
-    * range, the per-bucket count histogram prefix-sums in descending
-    * bucket order into rank offsets, within-bucket row_number windows
-    * run in parallel; the only unpartitioned window runs over the
-    * ≤ 4097-row histogram), then a 10-key aggregate; the base rate is
-    * a broadcast 1-row aggregate. */
+    * Scale shape: the (score desc, vec_id) rank is the
+    * [[Analytics4.evalPrAuc]] [[TwoLevel]] descending row number, then
+    * a 10-key aggregate; the base rate is a broadcast 1-row aggregate. */
   def evalDecileLift(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val score = least(greatest(
       element_at(col("embedding"), 1).cast("double") * 2.0 + 0.5,
       lit(0.0)), lit(0.9999))
     val s = table(spark, dir, "embeddings")
       .select(col("vec_id"), score.as("score"),
         when(col("label") % 2 === 1, 1L).otherwise(0L).as("y"))
-      .withColumn("__bkt", floor(col("score") * lit(4096.0)).cast("long"))
-    val offs = s.groupBy(col("__bkt"))
-      .agg(count(lit(1)).as("__bn"))
-      .select(col("__bkt"),
-        coalesce(sum(col("__bn")).over(Window.orderBy(col("__bkt").desc)
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)).as("__offn"))
-    val wLocal = Window.partitionBy(col("__bkt"))
-      .orderBy(col("score").desc, col("vec_id"))
-    val ranked = s.join(broadcast(offs), Seq("__bkt"))
-      .select(col("y"), (col("__offn") + row_number().over(wLocal)).as("r"))
+    val ranked = TwoLevel.rowNumber(s,
+        floor(col("score") * lit(4096.0)).cast("long"),
+        Seq(col("score").desc, col("vec_id")), bucketDesc = true, "r")
       .crossJoin(broadcast(s.agg(count(lit(1)).as("n_total"),
         sum(col("y")).as("n_pos"))))
       .select((((col("r") - 1) * 10) / col("n_total")).cast("int")
@@ -1238,24 +1199,8 @@ object Analytics5 {
     * fact table; everything after is scalar arithmetic on a single
     * row. */
   def aggTtestWelch(spark: SparkSession, dir: String): DataFrame = {
-    val x3 = round(col("value") * lit(1000.0)).cast("long")
-    val isA = col("event_type") === "click"
-    val isB = col("event_type") === "purchase"
-    val g = graft.schema.Schemas.events(spark, dir)
-      .filter(isA || isB)
-      .agg(
-        count(when(isA, lit(1))).as("n1"),
-        sum(when(isA, x3)).as("s1a"),
-        sum(when(isA, x3 * x3)).as("s2a"),
-        count(when(isB, lit(1))).as("n2"),
-        sum(when(isB, x3)).as("s1b"),
-        sum(when(isB, x3 * x3)).as("s2b"))
-    val m1 = g("s1a").cast("double") / g("n1").cast("double")
-    val m2 = g("s1b").cast("double") / g("n2").cast("double")
-    val v1 = (g("s2a").cast("double") - g("s1a").cast("double") * m1) /
-      (g("n1") - lit(1)).cast("double")
-    val v2 = (g("s2b").cast("double") - g("s1b").cast("double") * m2) /
-      (g("n2") - lit(1)).cast("double")
+    val w = new WelchMoments(spark, dir)
+    import w._
     val se1 = v1 / g("n1").cast("double")
     val se2 = v2 / g("n2").cast("double")
     g.select(col("n1"), col("n2"),
@@ -1266,6 +1211,35 @@ object Analytics5 {
         (se1 * se1 / (g("n1") - lit(1)).cast("double") +
          se2 * se2 / (g("n2") - lit(1)).cast("double")))
         .cast("float").as("df"))
+  }
+
+  /** The click (group 1) vs purchase (group 2) moments every Welch-family
+    * test reads ([[aggTtestWelch]], [[Analytics6.evalCohensD]],
+    * [[Analytics6.evalMdePower]], [[Analytics6.evalTostEquivalence]]):
+    * `g` is ONE map-side-combined conditional aggregate row of per-group
+    * n, Σx, Σx² over ×1000-scaled BIGINT `value`s (n1, s1a, s2a, n2,
+    * s1b, s2b); the columns are the shared double epilogue terms on
+    * those exact integers — means, sums of squares (n−1)·s² = Σx² −
+    * Σx·mean, and variances. */
+  private[query] final class WelchMoments(spark: SparkSession, dir: String) {
+    private val x3 = round(col("value") * lit(1000.0)).cast("long")
+    private val isA = col("event_type") === "click"
+    private val isB = col("event_type") === "purchase"
+    val g: DataFrame = graft.schema.Schemas.events(spark, dir)
+      .filter(isA || isB)
+      .agg(
+        count(when(isA, lit(1))).as("n1"),
+        sum(when(isA, x3)).as("s1a"),
+        sum(when(isA, x3 * x3)).as("s2a"),
+        count(when(isB, lit(1))).as("n2"),
+        sum(when(isB, x3)).as("s1b"),
+        sum(when(isB, x3 * x3)).as("s2b"))
+    val m1: Column = g("s1a").cast("double") / g("n1").cast("double")
+    val m2: Column = g("s1b").cast("double") / g("n2").cast("double")
+    val ss1: Column = g("s2a").cast("double") - g("s1a").cast("double") * m1
+    val ss2: Column = g("s2b").cast("double") - g("s1b").cast("double") * m2
+    val v1: Column = ss1 / (g("n1") - lit(1)).cast("double")
+    val v2: Column = ss2 / (g("n2") - lit(1)).cast("double")
   }
 
   /** Discrete periodogram of the hourly event-value series at candidate
@@ -1785,6 +1759,29 @@ object Analytics5 {
     * projection and RE-EXPANDS every md5 into the predicate — measured
     * 2.6 s → 0.15 s at sf0.1 for this exact operator. */
   def evalKrippendorffAlpha(spark: SparkSession, dir: String): DataFrame = {
+    val s = (col("n0") * col("n0") + col("n1") * col("n1")
+      + col("n2") * col("n2"))
+    val n = col("n_ratings")
+    krippendorff(spark, dir,
+      // 2(m^2 - s)/(m-1): m=2 -> 2(4-s); m=3 -> 9-s
+      when(col("m") === 2, lit(2L) * (lit(4L) - s))
+        .when(col("m") === 3, lit(9L) - s).otherwise(0L),
+      n * n - (col("c0") * col("c0") + col("c1") * col("c1")
+        + col("c2") * col("c2")))
+  }
+
+  /** The Krippendorff rater simulation and exact-integer fold shared by
+    * [[evalKrippendorffAlpha]] and [[evalKrippendorffOrdinal]]: per
+    * event, 3 raters each rate (present unless hash60(id:presentR) % 4
+    * == 0) the true category (hash60(id:truecat) % 3) with probability
+    * 7/10, else a hashed alternative; per-item category counts n0..n2
+    * and m = n0+n1+n2. One aggregate row over the pairable (m ≥ 2)
+    * items: n_items, n_ratings, c0..c2, and do_num2 = Σ `doNum2` (the
+    * per-item 2·D/(m−1)); `deNum` (over n_ratings, c0..c2)
+    * is the expected-disagreement numerator, and α = 1 −
+    * do_num2·(n−1) / (2·deNum) is NULL when deNum = 0. */
+  private def krippendorff(spark: SparkSession, dir: String,
+      doNum2: Column, deNum: Column): DataFrame = {
     def h(salt: String): Column =
       graft.query.Dedup.hash60(concat(col("event_id").cast("string"),
         lit(salt)))
@@ -1803,8 +1800,6 @@ object Analytics5 {
           .reduce(_ + _).as(s"n$j")
       }: _*)
       .withColumn("m", col("n0") + col("n1") + col("n2"))
-      .withColumn("s", col("n0") * col("n0") + col("n1") * col("n1")
-        + col("n2") * col("n2"))
     val pairable = col("m") >= 2
     def sum0(c: Column): Column = coalesce(sum(c), lit(0L))
     val g = perItem.agg(
@@ -1813,13 +1808,8 @@ object Analytics5 {
       sum0(when(pairable, col("n0")).otherwise(0L)).as("c0"),
       sum0(when(pairable, col("n1")).otherwise(0L)).as("c1"),
       sum0(when(pairable, col("n2")).otherwise(0L)).as("c2"),
-      // 2(m^2 - s)/(m-1): m=2 -> 2(4-s); m=3 -> 9-s
-      sum0(when(col("m") === 2, lit(2L) * (lit(4L) - col("s")))
-        .when(col("m") === 3, lit(9L) - col("s"))
-        .otherwise(0L)).as("do_num2"))
+      sum0(doNum2).as("do_num2"))
     val n = col("n_ratings")
-    val deNum = n * n - (col("c0") * col("c0") + col("c1") * col("c1")
-      + col("c2") * col("c2"))
     g.select(col("n_items"), col("n_ratings"),
         col("c0"), col("c1"), col("c2"),
         col("do_num2"), deNum.as("de_num"),
@@ -1839,48 +1829,15 @@ object Analytics5 {
     * an exact BIGINT under the ×2/(mᵢ−1) scaling, so α is again ONE
     * double division. Same scan-bound shape as the nominal form. */
   def evalKrippendorffOrdinal(spark: SparkSession, dir: String): DataFrame = {
-    def h(salt: String): Column =
-      graft.query.Dedup.hash60(concat(col("event_id").cast("string"),
-        lit(salt)))
-    val base = h(":truecat") % 3
-    def present(r: Int): Column = h(s":present$r") % 4 =!= 0
-    def cat(r: Int): Column =
-      when(h(s":r$r") % 10 < 7, base).otherwise(h(s":alt$r") % 3)
-    val cats = graft.schema.Schemas.events(spark, dir)
-      .select(col("event_id"))
-      .select((1 to 3).map(r =>
-        when(present(r), cat(r)).as(s"c$r")): _*)
-    val perItem = cats
-      .select((0 until 3).map { j =>
-        (1 to 3).map(r => when(col(s"c$r") === j, 1L).otherwise(0L))
-          .reduce(_ + _).as(s"n$j")
-      }: _*)
-      .withColumn("m", col("n0") + col("n1") + col("n2"))
-      // ordered-pair squared-distance mass: 2*(n0n1 + 4 n0n2 + n1n2)
-      .withColumn("dsq", lit(2L) * (col("n0") * col("n1")
-        + lit(4L) * col("n0") * col("n2") + col("n1") * col("n2")))
-    val pairable = col("m") >= 2
-    def sum0(c: Column): Column = coalesce(sum(c), lit(0L))
-    val g = perItem.agg(
-      sum0(when(pairable, 1L).otherwise(0L)).as("n_items"),
-      sum0(when(pairable, col("m")).otherwise(0L)).as("n_ratings"),
-      sum0(when(pairable, col("n0")).otherwise(0L)).as("c0"),
-      sum0(when(pairable, col("n1")).otherwise(0L)).as("c1"),
-      sum0(when(pairable, col("n2")).otherwise(0L)).as("c2"),
+    // ordered-pair squared-distance mass: 2*(n0n1 + 4 n0n2 + n1n2)
+    val dsq = lit(2L) * (col("n0") * col("n1")
+      + lit(4L) * col("n0") * col("n2") + col("n1") * col("n2"))
+    krippendorff(spark, dir,
       // 2*dsq/(m-1): m=2 -> 2*dsq; m=3 -> dsq
-      sum0(when(col("m") === 2, lit(2L) * col("dsq"))
-        .when(col("m") === 3, col("dsq"))
-        .otherwise(0L)).as("do_num2"))
-    val n = col("n_ratings")
-    val deNum = lit(2L) * (col("c0") * col("c1")
-      + lit(4L) * col("c0") * col("c2") + col("c1") * col("c2"))
-    g.select(col("n_items"), col("n_ratings"),
-      col("c0"), col("c1"), col("c2"),
-      col("do_num2"), deNum.as("de_num"),
-      when(deNum > 0,
-        lit(1.0) - (col("do_num2") * (n - 1)).cast("double")
-          / (lit(2L) * deNum).cast("double"))
-        .cast("float").as("alpha"))
+      when(col("m") === 2, lit(2L) * dsq).when(col("m") === 3, dsq)
+        .otherwise(0L),
+      lit(2L) * (col("c0") * col("c1")
+        + lit(4L) * col("c0") * col("c2") + col("c1") * col("c2")))
   }
 
   /** Rank correlation between two per-document quality signals (token

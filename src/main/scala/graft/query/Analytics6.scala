@@ -39,13 +39,10 @@ object Analytics6 {
     * `na`/`nb` the row's own tie counts.
     *
     * Scale shape: one map-side-combined aggregate onto the DISTINCT
-    * value grain, then the [[Analytics5.evalKsTest]] two-level prefix —
-    * values bucket by their unit-width range (bucket count bounded by
-    * the metric's domain, not the corpus), the per-bucket histogram
-    * prefix-sums into offsets (the only unpartitioned window runs over
-    * the histogram), and within-bucket prefix windows run in parallel.
-    * The strictly-below counts subtract the row's own ties from the
-    * inclusive prefix — exact integers throughout. */
+    * value grain, then the [[Analytics5.evalKsTest]] [[TwoLevel]]
+    * exclusive prefix over unit-width value buckets (bucket count
+    * bounded by the metric's domain, not the corpus) — exact integers
+    * throughout. */
   private def pooledValueCdf(spark: SparkSession, dir: String): DataFrame = {
     val e = graft.schema.Schemas.events(spark, dir)
       .filter(col("event_type").isin("click", "purchase"))
@@ -55,22 +52,9 @@ object Analytics6 {
           .as("na"),
         sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
           .as("nb"))
-      .withColumn("__bkt", floor(col("value")).cast("long"))
-    val offs = perValue.groupBy(col("__bkt"))
-      .agg(sum(col("na")).as("__ba"), sum(col("nb")).as("__bb"))
-      .select(col("__bkt"),
-        coalesce(sum(col("__ba")).over(Window.orderBy(col("__bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
-          .as("__offa"),
-        coalesce(sum(col("__bb")).over(Window.orderBy(col("__bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
-          .as("__offb"))
-    val w = Window.partitionBy(col("__bkt")).orderBy(col("value"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    perValue.join(broadcast(offs), Seq("__bkt"))
-      .select(col("value"), col("na"), col("nb"),
-        (col("__offa") + sum(col("na")).over(w) - col("na")).as("ca_lt"),
-        (col("__offb") + sum(col("nb")).over(w) - col("nb")).as("cb_lt"))
+    TwoLevel.prefix(perValue, floor(col("value")).cast("long"),
+      Seq(col("value")), sums = Seq("na" -> "ca_lt", "nb" -> "cb_lt"),
+      inclusive = false)
   }
 
   /** Mann–Whitney U (Wilcoxon rank-sum) between the click and purchase
@@ -224,23 +208,8 @@ object Analytics6 {
     *
     * Scale shape: ONE map-side-combined conditional aggregate. */
   def evalCohensD(spark: SparkSession, dir: String): DataFrame = {
-    val x3 = round(col("value") * lit(1000.0)).cast("long")
-    val isA = col("event_type") === "click"
-    val isB = col("event_type") === "purchase"
-    val g = graft.schema.Schemas.events(spark, dir)
-      .filter(isA || isB)
-      .agg(
-        count(when(isA, lit(1))).as("n1"),
-        sum(when(isA, x3)).as("s1a"),
-        sum(when(isA, x3 * x3)).as("s2a"),
-        count(when(isB, lit(1))).as("n2"),
-        sum(when(isB, x3)).as("s1b"),
-        sum(when(isB, x3 * x3)).as("s2b"))
-    val m1 = g("s1a").cast("double") / g("n1").cast("double")
-    val m2 = g("s1b").cast("double") / g("n2").cast("double")
-    // (n−1)·s² = Σx² − Σx·mean, exact-integer-fed
-    val ss1 = g("s2a").cast("double") - g("s1a").cast("double") * m1
-    val ss2 = g("s2b").cast("double") - g("s1b").cast("double") * m2
+    val w = new Analytics5.WelchMoments(spark, dir)
+    import w._
     val sp = sqrt((ss1 + ss2) / (g("n1") + g("n2") - lit(2)).cast("double"))
     val d = (m1 - m2) / sp
     val j = lit(1.0) - lit(3.0) /
@@ -407,28 +376,10 @@ object Analytics6 {
     *
     * Scale shape: ONE map-side-combined conditional aggregate. */
   def evalMdePower(spark: SparkSession, dir: String): DataFrame = {
-    val x3 = round(col("value") * lit(1000.0)).cast("long")
-    val isA = col("event_type") === "click"
-    val isB = col("event_type") === "purchase"
-    val g = graft.schema.Schemas.events(spark, dir)
-      .filter(isA || isB)
-      .agg(
-        count(when(isA, lit(1))).as("n1"),
-        sum(when(isA, x3)).as("s1a"),
-        sum(when(isA, x3 * x3)).as("s2a"),
-        count(when(isB, lit(1))).as("n2"),
-        sum(when(isB, x3)).as("s1b"),
-        sum(when(isB, x3 * x3)).as("s2b"))
-    val m1 = g("s1a").cast("double") / g("n1").cast("double")
-    val m2 = g("s1b").cast("double") / g("n2").cast("double")
-    val v1 = (g("s2a").cast("double") - g("s1a").cast("double") * m1) /
-      (g("n1") - lit(1)).cast("double")
-    val v2 = (g("s2b").cast("double") - g("s1b").cast("double") * m2) /
-      (g("n2") - lit(1)).cast("double")
+    val w = new Analytics5.WelchMoments(spark, dir)
+    import w._
     val se = sqrt(v1 / g("n1").cast("double") + v2 / g("n2").cast("double"))
-    val sp = sqrt((g("s2a").cast("double") - g("s1a").cast("double") * m1
-      + (g("s2b").cast("double") - g("s1b").cast("double") * m2)) /
-      (g("n1") + g("n2") - lit(2)).cast("double"))
+    val sp = sqrt((ss1 + ss2) / (g("n1") + g("n2") - lit(2)).cast("double"))
     // z_{0.025} + z_{0.20}: 1.959963984540054 + 0.8416212335729143
     val zsum = lit(1.959963984540054 + 0.8416212335729143)
     g.select(col("n1"), col("n2"),
@@ -792,24 +743,8 @@ object Analytics6 {
     * fact table; everything after is scalar arithmetic on one row. */
   def evalTostEquivalence(spark: SparkSession, dir: String,
       margin: Double = 2.0): DataFrame = {
-    val x3 = round(col("value") * lit(1000.0)).cast("long")
-    val isA = col("event_type") === "click"
-    val isB = col("event_type") === "purchase"
-    val g = graft.schema.Schemas.events(spark, dir)
-      .filter(isA || isB)
-      .agg(
-        count(when(isA, lit(1))).as("n1"),
-        sum(when(isA, x3)).as("s1a"),
-        sum(when(isA, x3 * x3)).as("s2a"),
-        count(when(isB, lit(1))).as("n2"),
-        sum(when(isB, x3)).as("s1b"),
-        sum(when(isB, x3 * x3)).as("s2b"))
-    val m1 = g("s1a").cast("double") / g("n1").cast("double")
-    val m2 = g("s1b").cast("double") / g("n2").cast("double")
-    val v1 = (g("s2a").cast("double") - g("s1a").cast("double") * m1) /
-      (g("n1") - lit(1)).cast("double")
-    val v2 = (g("s2b").cast("double") - g("s1b").cast("double") * m2) /
-      (g("n2") - lit(1)).cast("double")
+    val w = new Analytics5.WelchMoments(spark, dir)
+    import w._
     val se = sqrt(v1 / g("n1").cast("double") + v2 / g("n2").cast("double"))
     val d = m1 - m2
     val m3 = lit(margin * 1000.0)

@@ -48,17 +48,13 @@ object Curation2 {
     * training.
     *
     * Scale shape: the global running sum over a score-DESC ordering is
-    * NOT a single-partition window — same two-level shape as
-    * [[graft.ingest.Batcher.assignBatches]]: bucket docs by score range
-    * (value-derived, partitioning-independent), aggregate a per-bucket
-    * (tokens, docs) histogram, prefix-sum THAT (a window over the tiny
-    * histogram, not the corpus), then rank inside each bucket in
-    * parallel and add the bucket's broadcast offset. Ties break on
-    * doc_id, so the schedule is total and deterministic. Every
-    * intermediate (`n_tok`, `cum_before`, `phase`) is explicit BIGINT
-    * arithmetic — the oracle side likewise CASTs its window sum and
-    * totals to BIGINT so no HUGEINT/double intermediate exists on
-    * either engine. */
+    * NOT a single-partition window — it is a [[TwoLevel]] exclusive
+    * prefix, docs bucketed by score range (value-derived,
+    * partitioning-independent). Ties break on doc_id, so the schedule
+    * is total and deterministic. Every intermediate (`n_tok`,
+    * `cum_before`, `phase`) is explicit BIGINT arithmetic — the oracle
+    * side likewise CASTs its window sum and totals to BIGINT so no
+    * HUGEINT/double intermediate exists on either engine. */
   def curriculumPhases(spark: SparkSession, dir: String,
       budgetTokens: Long = 2000L): DataFrame = {
     val docs = graft.schema.Schemas.spread(spark, dir, "documents",
@@ -67,21 +63,10 @@ object Curation2 {
       .select(col("doc_id"),
         org.apache.spark.sql.functions.size(Dedup.tokens(col("text")))
           .cast("long").as("n_tok"))
-      // bucket ascends as score DESCENDS: bucket = -ceil(n_tok/32)
-      .withColumn("bkt", -(col("n_tok") / lit(32L)).cast("long"))
-    val hist = docs.groupBy(col("bkt"))
-      .agg(sum(col("n_tok")).as("b_tok"), count(lit(1)).as("b_docs"))
-    val off = hist.select(col("bkt").as("o_bkt"),
-      (sum(col("b_tok")).over(Window.orderBy(col("bkt"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        - col("b_tok")).as("tok_off"))
-    val w = Window.partitionBy(col("bkt"))
-      .orderBy(col("n_tok").desc, col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    docs.join(broadcast(off), col("bkt") === col("o_bkt"))
-      .select(col("doc_id"), col("n_tok"),
-        (col("tok_off") + sum(col("n_tok")).over(w) - col("n_tok"))
-          .as("cum_before"))
+    // bucket ascends as score DESCENDS: bucket = -ceil(n_tok/32)
+    TwoLevel.prefix(docs, -(col("n_tok") / lit(32L)).cast("long"),
+        Seq(col("n_tok").desc, col("doc_id")),
+        sums = Seq("n_tok" -> "cum_before"), inclusive = false)
       .select(col("doc_id"), col("n_tok"),
         // pure-BIGINT integer division (`div`), never a double: both
         // operands are non-negative longs, so truncating and flooring

@@ -79,28 +79,17 @@ object Pipeline {
     * of an LLM training pipeline; a doc starts in the bin where its
     * running token offset lands. Per-bin stats out.
     *
-    * Scale design: the global running token sum uses the same two-level
-    * trick as s9BatchAssign — per-bucket token sums (bucket = doc_id
-    * value range), a prefix-sum window over the n/bucketWidth-row
-    * histogram (never the data), broadcast offsets, and parallel
-    * within-bucket windows bounded by bucketWidth rows. Bin assignment is
-    * integer division — exact on both engines at any magnitude. */
+    * Scale design: the global running token sum is a [[TwoLevel]]
+    * exclusive prefix (bucket = doc_id value range), so no window streams
+    * the corpus through one task. Bin assignment is integer division —
+    * exact on both engines at any magnitude. */
   def packSequences(spark: SparkSession, dir: String, budget: Long = 256L,
       bucketWidth: Long = 1024L): DataFrame = {
     val d = table(spark, dir, "documents")
       .select(col("doc_id"),
         size(Dedup.tokens(col("text"))).cast("long").as("tok"))
-      .withColumn("bucket", floor(col("doc_id") / bucketWidth))
-    val offsets = d.groupBy(col("bucket")).agg(sum(col("tok")).as("bt"))
-      .withColumn("off",
-        coalesce(sum(col("bt")).over(Window.orderBy(col("bucket"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("bucket"), col("off"))
-    val wLocal = Window.partitionBy(col("bucket")).orderBy(col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    d.join(broadcast(offsets), Seq("bucket"))
-      .withColumn("cum_excl",
-        col("off") + coalesce(sum(col("tok")).over(wLocal), lit(0L)))
+    TwoLevel.prefix(d, floor(col("doc_id") / bucketWidth), Seq(col("doc_id")),
+        sums = Seq("tok" -> "cum_excl"), inclusive = false)
       .withColumn("bin_id", expr(s"cum_excl div $budget"))
       .groupBy(col("bin_id"))
       .agg(count(lit(1)).as("n_docs"), sum(col("tok")).as("bin_tokens"),
@@ -442,12 +431,11 @@ object Pipeline {
     * (type, user)'s FIRST event (a min-struct aggregate, one shuffle) and
     * running-sums the flags.
     *
-    * Scale shape: the running sum itself uses the two-level trick — flags
-    * prefix-sum per (type, time-bucket) histogram (tiny, broadcast), plus
-    * parallel within-bucket windows — so no per-type window ever streams
-    * n/|types| rows through one task. Bucket order is consistent with
-    * (ts, event_id) order because the bucket is floor(ts), monotone in
-    * ts. Output bounded to event_id < maxId AFTER the global compute. */
+    * Scale shape: the running sum itself is a [[TwoLevel]] prefix per
+    * event_type over (ts, event_id), bucketed by
+    * floor(ts / bucketSeconds) — monotone in ts — so no per-type window ever streams n/|types| rows
+    * through one task. Output bounded to event_id < maxId AFTER the
+    * global compute. */
   def windowCumulativeDistinct(spark: SparkSession, dir: String,
       bucketSeconds: Long = 3600L, maxId: Long = 3000L): DataFrame = {
     val ev = graft.schema.Schemas.events(spark, dir)
@@ -458,21 +446,10 @@ object Pipeline {
     val marked = ev
       .join(firsts, Seq("event_id"), "left")
       .withColumn("ff", coalesce(col("first_flag"), lit(0L)))
-      .withColumn("bucket",
-        floor(unix_micros(col("ts")) / (bucketSeconds * 1000000L)))
-    val offsets = marked.groupBy(col("event_type"), col("bucket"))
-      .agg(sum(col("ff")).as("bf"))
-      .withColumn("off",
-        coalesce(sum(col("bf")).over(Window.partitionBy(col("event_type"))
-          .orderBy(col("bucket"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("event_type"), col("bucket"), col("off"))
-    val wLocal = Window.partitionBy(col("event_type"), col("bucket"))
-      .orderBy(col("ts"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    marked.join(broadcast(offsets), Seq("event_type", "bucket"))
-      .withColumn("cum_distinct_users",
-        col("off") + sum(col("ff")).over(wLocal))
+    TwoLevel.prefix(marked,
+        floor(unix_micros(col("ts")) / (bucketSeconds * 1000000L)),
+        Seq(col("ts"), col("event_id")), keys = Seq("event_type"),
+        sums = Seq("ff" -> "cum_distinct_users"))
       .filter(col("event_id") < maxId)
       .select(col("event_id"), col("event_type"), col("cum_distinct_users"))
       .orderBy(col("event_id"))

@@ -703,38 +703,22 @@ object Warehouse2 {
     * Determinism: revenue is exact cents; the cumulative window orders
     * by a TOTAL key (revenue desc, partkey); class boundaries compare
     * integer cross-products (cum·100 < total·80), never floating
-    * shares. Scale: one fact rollup to |parts|, then a TWO-LEVEL
-    * rank/cumsum (part cardinality is unbounded — the
-    * [[graft.query.Analytics4.aggParetoConcentration]] shape): parts
-    * bucket by revenue range, the per-bucket (count, cents) histogram
-    * prefix-sums in descending bucket order into offsets (the only
-    * unpartitioned window runs over that histogram), and within-bucket
-    * windows run in parallel. Equal revenues share a bucket, so ranks
+    * shares. Scale: one fact rollup to |parts|, then the
+    * [[graft.query.Analytics4.aggParetoConcentration]] [[TwoLevel]]
+    * descending rank/cumsum (part cardinality is unbounded), parts
+    * bucketed by revenue range. Equal revenues share a bucket, so ranks
     * match the single-window form exactly.
     */
   def sqlAbcAnalysis(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val rev = table(spark, dir, "lineitem")
       .groupBy(col("l_partkey").as("part_id"))
       .agg(sum(round(col("l_extendedprice") * 100).cast("long"))
         .as("revenue_cents"))
-      .withColumn("__bkt", floor(col("revenue_cents") / lit(4096L)))
     val tot = rev.agg(sum(col("revenue_cents")).as("total_cents"))
-    val offs = rev.groupBy(col("__bkt"))
-      .agg(count(lit(1)).as("__bn"), sum(col("revenue_cents")).as("__bs"))
-      .select(col("__bkt"),
-        coalesce(sum(col("__bn")).over(Window.orderBy(col("__bkt").desc)
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)).as("__offn"),
-        coalesce(sum(col("__bs")).over(Window.orderBy(col("__bkt").desc)
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)).as("__offs"))
-    val wLocal = Window.partitionBy(col("__bkt"))
-      .orderBy(col("revenue_cents").desc, col("part_id"))
-    rev.join(broadcast(offs), Seq("__bkt"))
-      .withColumn("rank",
-        (col("__offn") + row_number().over(wLocal)).cast("int"))
-      .withColumn("cum_cents", col("__offs") + sum(col("revenue_cents"))
-        .over(wLocal.rowsBetween(Window.unboundedPreceding,
-          Window.currentRow)))
+    TwoLevel.prefix(rev, floor(col("revenue_cents") / lit(4096L)),
+        Seq(col("revenue_cents").desc, col("part_id")), bucketDesc = true,
+        rowNumber = Some("rank"), sums = Seq("revenue_cents" -> "cum_cents"))
+      .withColumn("rank", col("rank").cast("int"))
       .crossJoin(broadcast(tot))
       .withColumn("abc_class",
         when(col("cum_cents") * 100 < col("total_cents") * 80, lit("A"))

@@ -61,9 +61,8 @@ final class ApiServer(spark: SparkSession, dir: String, port: Int = 0) {
   private def pyFloat(v: JsonNode): Option[Float] =
     if (v.isNumber) Some(v.floatValue())
     else if (v.isBoolean) Some(if (v.booleanValue()) 1.0f else 0.0f)
-    else if (v.isTextual)
-      try Some(v.asText().trim.toFloat)
-      catch { case _: NumberFormatException => None }
+    // a Python float stored in a FloatType column: parse, then narrow
+    else if (v.isTextual) ApiServer.pyParseFloat(v.asText()).map(_.toFloat)
     else None
 
   /** Python str repr: backslashes and control chars escape; quote
@@ -271,18 +270,10 @@ final class ApiServer(spark: SparkSession, dir: String, port: Int = 0) {
   private def pyDouble(v: JsonNode): Either[String, Double] =
     if (v.isNumber) Right(v.doubleValue())
     else if (v.isBoolean) Right(if (v.booleanValue()) 1.0 else 0.0)
-    else if (v.isTextual) {
-      val t = v.asText().trim
-      // Float.parseDouble accepts Java-isms CPython rejects (trailing
-      // d/f suffixes); strip those to ValueError before parsing
-      if (t.nonEmpty && "dDfF".contains(t.last))
-        Left(s"could not convert string to float: ${pyStrRepr(v.asText())}")
-      else
-        try Right(t.toDouble)
-        catch { case _: NumberFormatException =>
-          Left(s"could not convert string to float: ${pyStrRepr(v.asText())}")
-        }
-    } else Left(s"could not convert to float: ${pyRepr(v)}")
+    else if (v.isTextual)
+      ApiServer.pyParseFloat(v.asText()).toRight(
+        s"could not convert string to float: ${pyStrRepr(v.asText())}")
+    else Left(s"could not convert to float: ${pyRepr(v)}")
 
   /** Python `int(val)` (api/api.py:251): ints pass, floats TRUNCATE
     * toward zero (NaN → the CPython ValueError), integer STRINGS parse;
@@ -369,6 +360,39 @@ final class ApiServer(spark: SparkSession, dir: String, port: Int = 0) {
           e.put("within_target_range", true)
         }
         (200, o)
+    }
+  }
+}
+
+object ApiServer {
+
+  private val Decimal =
+    """[+-]?(?:(?:\d(?:_?\d)*)?\.\d(?:_?\d)*|\d(?:_?\d)*\.?)(?:[eE][+-]?\d(?:_?\d)*)?""".r
+  private val InfNan = """(?i)([+-]?)(inf|infinity|nan)""".r
+
+  /** CPython's `float(str)` grammar: Unicode whitespace around, Unicode
+    * decimal digits read as ASCII, an optional sign, then a decimal
+    * literal whose digits may be grouped by single underscores
+    * (`"1_000"`), or inf / infinity / nan in any case. None where CPython
+    * raises ValueError — including the Java literal forms
+    * `Double.parseDouble` accepts (`"2.5f"`, `"3d"`, `"0x1p3"`). Both
+    * round a decimal to the nearest double. */
+  private def pyParseFloat(s: String): Option[Double] = {
+    def space(c: Char): Boolean = Character.isWhitespace(c) ||
+      c == '\u0085' || c == '\u00a0' || c == '\u2007' || c == '\u202f'
+    val t = s.map(c =>
+        if (space(c)) ' '
+        else if (c > 127 && Character.isDigit(c))
+          ('0' + Character.digit(c, 10)).toChar
+        else c)
+      .dropWhile(_ == ' ').reverse.dropWhile(_ == ' ').reverse
+    t match {
+      case Decimal() => Some(t.replace("_", "").toDouble)
+      case InfNan(sign, word) =>
+        Some(if (word.equalsIgnoreCase("nan")) Double.NaN
+          else if (sign == "-") Double.NegativeInfinity
+          else Double.PositiveInfinity)
+      case _ => None
     }
   }
 }

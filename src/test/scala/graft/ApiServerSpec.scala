@@ -75,6 +75,23 @@ class ApiServerSpec extends SparkSpec {
     assert(c1 == 200 && c2 == 200, b1 + b2)
     assert(mapper.readTree(b1).get("predicted_duration").asDouble() ==
       mapper.readTree(b2).get("predicted_duration").asDouble())
+    // CPython float() grammar: digit-group underscores and inf/nan words
+    // parse; the Java literal forms (suffixes, hex) are ValueErrors
+    val (c5, b5) = post("/predict/duration/1", """{"Distance": " 1_000 "}""")
+    val (c6, b6) = post("/predict/duration/1", """{"Distance": 1000}""")
+    assert(c5 == 200 && c6 == 200, b5 + b6)
+    assert(mapper.readTree(b5).get("predicted_duration").asDouble() ==
+      mapper.readTree(b6).get("predicted_duration").asDouble())
+    for (ok <- Seq("nan", "inf", "-infinity", "+NaN", "1.", ".5e1")) {
+      val (c, b) = post("/predict/duration/1", s"""{"Distance": "$ok"}""")
+      assert(c == 200, s"$ok: $b")
+    }
+    for (bad <- Seq("2.5f", "3d", "0x1p3", "1__0", "_1", "1e", "infinit", ".")) {
+      val (c, b) = post("/predict/duration/1", s"""{"Distance": "$bad"}""")
+      assert(c == 400 && mapper.readTree(b).get("error").asText() ==
+        s"Invalid non-numeric values for features: {'Distance': '$bad'}",
+        s"$bad: $b")
+    }
     // api/api.py:85-86 `if not data:` — {} is falsy in Python
     val (c3, b3) = post("/predict/duration/1", "{}")
     assert(c3 == 400 &&
@@ -229,6 +246,24 @@ class ApiServerSpec extends SparkSpec {
     val (code3, body3) = post("/suggest/optimal-time/3", badMax)
     assert(code3 == 400 && mapper.readTree(body3).get("error").asText()
       .startsWith("Invalid type for target durations or minute"), body3)
+    // float("1_000") and float("-infinity") parse; the Java literal
+    // forms CPython rejects are the same ValueError 400
+    val grouped = s"""{"base_conditions": $canonicalJson,
+      "target_duration_max": "1_000", "target_duration_min": "-infinity",
+      "hours_to_evaluate": [9]}"""
+    val (code4, body4) = post("/suggest/optimal-time/3", grouped)
+    assert(code4 == 200, body4)
+    assert(mapper.readTree(body4).get("target_duration_max").asDouble() == 1000.0,
+      body4)
+    assert(mapper.readTree(body4).get("suggestions").size() == 1, body4)
+    for (bad <- Seq("2.5f", "3d", "0x1p3")) {
+      val p = s"""{"base_conditions": $canonicalJson,
+        "target_duration_max": "$bad", "hours_to_evaluate": [8]}"""
+      val (c, b) = post("/suggest/optimal-time/3", p)
+      assert(c == 400 && mapper.readTree(b).get("error").asText() ==
+        "Invalid type for target durations or minute: " +
+          s"could not convert string to float: '$bad'", s"$bad: $b")
+    }
   }
 
   test("optimal-time: CPython ValueError texts, boolean hours, repr escaping") {

@@ -60,6 +60,19 @@ class FunctionsSpec extends SparkSpec {
       """SELECT intersect_count_sorted(array(1L, 3L, 5L),
         |  array(3L, 4L, 5L)) AS c""".stripMargin).head()
     assert(ic.getLong(0) == 2L)
+    // a wrong argument count fails analysis with the signature named,
+    // not a raw IndexOutOfBounds / NoSuchElement, and never drops an arg
+    for ((call, sig) <- Seq(
+        "simhash60(array('a'), array('b'))" -> "simhash60(toks) takes 1 argument, got 2",
+        "simhash60()" -> "simhash60(toks) takes 1 argument, got 0",
+        "float_dot(array(CAST(1.0 AS FLOAT)))" -> "float_dot(a, b) takes 2 arguments, got 1",
+        "jl_project(array(CAST(1.0 AS FLOAT)))" ->
+          "jl_project(emb, outDim) takes 2 arguments, got 1")) {
+      val e = intercept[Exception](spark.sql(s"SELECT $call AS x").collect())
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      assert(causes.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+        c.getMessage.contains(sig)), s"$call: $e")
+    }
   }
 
   test("intersect3_count_sorted_excl: three-way merge count, exclusion, " +

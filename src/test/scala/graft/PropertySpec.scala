@@ -65,6 +65,32 @@ class PropertySpec extends SparkSpec {
         .map { case (k, i) => k -> i / 50 }.toMap
       assert(got == expected, s"width=$width")
     }
+    // the general TwoLevel.prefix shapes against a single-window reference:
+    // tied keys (broken by a unique id), descending order, inclusive and
+    // exclusive running sums, with and without a partition key
+    import org.apache.spark.sql.expressions.Window
+    val rows = samples(for {
+      g <- Gen.chooseNum(0L, 2L); k <- Gen.chooseNum(-200L, 200L)
+      v <- Gen.chooseNum(-50L, 1000L)
+    } yield (g, k, v), 300).zipWithIndex
+      .map { case ((g, k, v), id) => (id.toLong, g, k, v) }
+    val rdf = rows.toDF("id", "g", "k", "v").repartition(5)
+    for (width <- Seq(1L, 7L, 1000000L); desc <- Seq(false, true);
+         inclusive <- Seq(true, false); keys <- Seq(Nil, Seq("g"))) {
+      val order = Seq(if (desc) $"k".desc else $"k".asc, $"id")
+      val got = graft.query.TwoLevel.prefix(rdf, floor($"k" / width), order,
+          bucketDesc = desc, keys = keys, rowNumber = Some("rn"),
+          sums = Seq("v" -> "cv"), inclusive = inclusive)
+        .select($"id", $"rn", $"cv").as[(Long, Long, Long)].collect().toSet
+      val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
+      val cv = sum($"v").over(w.rowsBetween(Window.unboundedPreceding,
+        if (inclusive) Window.currentRow else -1L))
+      val want = rdf.select($"id", row_number().over(w).cast("long"),
+          if (inclusive) cv else coalesce(cv, lit(0L)))
+        .as[(Long, Long, Long)].collect().toSet
+      assert(got == want,
+        s"width=$width desc=$desc inclusive=$inclusive keys=$keys")
+    }
   }
 
   test("F1 totality: to_float_or_zero never throws and never nulls on arbitrary strings") {

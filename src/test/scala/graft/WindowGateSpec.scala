@@ -25,9 +25,11 @@ import org.apache.spark.sql.execution.window.WindowExec
   * A new query that reintroduces a global window fails (1) if it runs
   * over unreduced input, and fails (2) until its author writes down WHY
   * the window input is bounded — at which point the right fix is
-  * usually [[graft.query.TwoLevel.rowNumber]] instead. Stale allowlist
+  * usually [[graft.query.TwoLevel.prefix]] instead. Stale allowlist
   * entries (queries that no longer exhibit a global window) also fail,
-  * so the list stays the exact current inventory.
+  * so the list stays the exact current inventory. An entry justified as
+  * "two-level" must run its global windows over TwoLevel's own bucket
+  * histogram, so a hand-rolled copy of the algorithm fails too.
   */
 class WindowGateSpec extends SparkSpec {
 
@@ -90,6 +92,13 @@ class WindowGateSpec extends SparkSpec {
     "text_zipf_slope" -> "≤ topN TakeOrdered term panel",
     "ts_stl_decompose" -> "hourly grain (calendar-bounded)")
 
+  /** The entries justified as two-level: their global windows must be
+    * [[graft.query.TwoLevel]]'s histogram prefix. sql_cte_ranking spells
+    * the algorithm in SQL, so it cannot name the helper's column. */
+  private val twoLevel: Set[String] = boundedGlobalWindows.collect {
+    case (name, why) if why.contains("two-level") => name
+  }.toSet - "sql_cte_ranking"
+
   /** True when the subtree below an unpartitioned window provably
     * reduces grain before the window sees it — a STRUCTURAL heuristic;
     * the [[boundedGlobalWindows]] entry is the human-judged gate and
@@ -143,7 +152,7 @@ class WindowGateSpec extends SparkSpec {
             failures += (s"$name: unpartitioned WindowExec over UNREDUCED " +
               s"input (no aggregate/top-k/limit below it) — this moves the " +
               s"whole relation to one partition; use " +
-              s"graft.query.TwoLevel.rowNumber. Window: " +
+              s"graft.query.TwoLevel.prefix. Window: " +
               w.windowExpression.mkString(", "))
           }
           if (!boundedGlobalWindows.contains(name))
@@ -152,6 +161,16 @@ class WindowGateSpec extends SparkSpec {
               s"boundedGlobalWindows — prove the window input is bounded " +
               s"(bucket histogram / calendar grain / ≤k panel) or rewrite " +
               s"two-level")
+          if (twoLevel.contains(name))
+            globals.filterNot(w => w.orderSpec.headOption.exists(
+                _.child.references.exists(_.name == "__tl_bkt")))
+              .foreach { w =>
+                failures += (s"$name: justified as two-level, but its " +
+                  s"global window does not order by TwoLevel's bucket " +
+                  s"column __tl_bkt — a hand-rolled histogram prefix; use " +
+                  s"graft.query.TwoLevel.prefix. Window: " +
+                  w.windowExpression.mkString(", "))
+              }
         }
       }
     }
