@@ -432,10 +432,10 @@ object Pipeline {
     * running-sums the flags.
     *
     * Scale shape: the running sum itself is a [[TwoLevel]] prefix per
-    * event_type over (ts, event_id), bucketed by
-    * floor(ts / bucketSeconds) — monotone in ts — so no per-type window ever streams n/|types| rows
-    * through one task. Output bounded to event_id < maxId AFTER the
-    * global compute. */
+    * event_type over (ts, event_id), bucketed by floor(ts /
+    * bucketSeconds) — monotone in ts — so no per-type window ever
+    * streams n/|types| rows through one task. Output bounded to
+    * event_id < maxId AFTER the global compute. */
   def windowCumulativeDistinct(spark: SparkSession, dir: String,
       bucketSeconds: Long = 3600L, maxId: Long = 3000L): DataFrame = {
     val ev = graft.schema.Schemas.events(spark, dir)
