@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** 60-bit SimHash implementation shared by interpreted eval and generated
   * code. Each token is hashed to the first 60 bits of its md5 (identical
-  * to [[graft.query.Dedup.hash60]], which DuckDB reproduces as
+  * to [[graft.query.TokenHash.hash60]], which DuckDB reproduces as
   * `CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT)` — this is what makes
   * the SimHash dedup pipeline hash-compare oracle-able cross-engine);
   * each of the 60 bit positions casts a ±1 vote per token occurrence; the

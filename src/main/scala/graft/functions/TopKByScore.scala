@@ -13,7 +13,7 @@ import scala.collection.mutable.ArrayBuffer
   * across M map tasks, the window moves O(C) rows per group where this
   * aggregate moves O(k·M) partial rows — the difference between a
   * 400M-row sort and a 100k-row merge on the reverse-kNN workload
-  * ([[graft.query.Analytics4.embHubnessStats]]: measured 4.9 → ~2 s at
+  * ([[graft.query.Similarity.embHubnessStats]]: measured 4.9 → ~2 s at
   * sf0.1).
   *
   * Exactness/determinism: inserts trim against a total order

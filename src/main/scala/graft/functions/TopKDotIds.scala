@@ -22,7 +22,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   *
   * Scale gate: valid only while the corpus matrix broadcasts (the same
   * precondition the cross-join form already had via `broadcast(q)`);
-  * [[graft.query.Analytics4.embHubnessStats]] gates on matrix bytes and
+  * [[graft.query.Similarity.embHubnessStats]] gates on matrix bytes and
   * falls back to the map-side-combinable [[TopKByScore]] aggregation.
   * CodegenFallback is deliberate: the per-eval loop IS the hot loop —
   * there is no per-row expression chain left for codegen to fuse. */

@@ -2,13 +2,13 @@ package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.query.Dedup
+import graft.query.TokenHash
 import graft.schema.Schemas.table
 
 /** Training-data export: the curated corpus leaves the engine as hash-
   * sharded JSONL — the interchange format tokenizer/training jobs read.
   *
-  * Shards are assigned by the deterministic md5-derived [[Dedup.hash60]]
+  * Shards are assigned by the deterministic md5-derived [[TokenHash.hash60]]
   * of the doc id (never `rand()`, never round-robin): the same corpus
   * exports to the same shards on any cluster, any partitioning, any
   * retry — which is what makes a 100 TB export resumable and its
@@ -20,7 +20,7 @@ object Export {
 
   /** Deterministic shard id for each document. */
   private def shardCol(nShards: Int) =
-    pmod(Dedup.hash60(concat(col("doc_id").cast("string"), lit(":shard"))),
+    pmod(TokenHash.hash60(concat(col("doc_id").cast("string"), lit(":shard"))),
       lit(nShards.toLong))
 
   /** Write the documents table as `nShards` JSONL shard directories

@@ -1,8 +1,8 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.schema.IndexCache
 import graft.schema.Schemas.table
 
@@ -10,7 +10,7 @@ import graft.schema.Schemas.table
   * the `documents` table: exact dedup, the near-dup family (MinHash+LSH
   * banding, SimHash, n-gram Jaccard, embedding cosine), and duplicate-
   * group clustering. EVERY operator here is DuckDB-oracle hash-exact:
-  * all hashing is md5-derived ([[hash60]]) so the oracle replays
+  * all hashing is md5-derived ([[TokenHash.hash60]]) so the oracle replays
   * signatures, buckets, and verifies bit-identically — approximate in
   * recall by construction, but deterministic and cross-engine exact in
   * output.
@@ -22,39 +22,6 @@ import graft.schema.Schemas.table
   */
 object Dedup {
 
-  /** Canonical text normalization: collapse whitespace, trim, lowercase. */
-  def normText(c: Column): Column =
-    lower(trim(regexp_replace(c, "\\s+", " ")))
-
-  /** Whitespace tokens of normalized text. */
-  def tokens(c: Column): Column = split(normText(c), " ")
-
-  /** Word n-gram shingles from a token-array column. Empty when fewer than
-    * n tokens. */
-  def shinglesFromTokens(t: Column, n: Int): Column =
-    when(size(t) < n, array().cast("array<string>"))
-      .otherwise(transform(sequence(lit(0), size(t) - n),
-        i => concat_ws(" ", slice(t, i + 1, lit(n)))))
-
-  /** Word n-gram shingles as strings ("w1 w2 w3"). Empty when fewer than n
-    * tokens. */
-  def shingles(c: Column, n: Int): Column = shinglesFromTokens(tokens(c), n)
-
-  /** 60-bit hash from the first 15 hex chars of md5 — chosen over xxhash64
-    * because DuckDB reproduces it bit-identically
-    * (`CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)`), which is what makes
-    * the whole MinHash family hash-compare oracle-able cross-engine. 60
-    * bits keeps the value positive in a signed BIGINT on both engines.
-    * conv/substring/md5 are all codegen'd. */
-  def hash60(s: Column): Column =
-    conv(substring(md5(s), 1, 15), 16, 10).cast("long")
-
-  /** Second 60-bit hash from the SAME md5 (hex chars 17-31): DuckDB
-    * replays it as `CAST('0x' || substr(md5(s), 17, 15) AS BIGINT)`. The
-    * MinHash family derives h2 from this — one digest per gram, not two. */
-  def hash60lo(s: Column): Column =
-    conv(substring(md5(s), 17, 15), 16, 10).cast("long")
-
   /** Exact dedup (hash-groupBy): fingerprint = md5(normalized text); a doc
     * is kept iff it has the smallest doc_id in its fingerprint group.
     * One shuffle on the fingerprint — at 100 TB this is the standard
@@ -62,22 +29,10 @@ object Dedup {
   def dedupExact(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("fingerprint"))
     table(spark, dir, "documents")
-      .withColumn("fingerprint", md5(normText(col("text"))))
+      .withColumn("fingerprint", md5(TokenHash.normText(col("text"))))
       .withColumn("keep", col("doc_id") === min(col("doc_id")).over(w))
       .select(col("doc_id"), col("fingerprint"), col("keep"))
       .orderBy(col("doc_id"))
-  }
-
-  /** Documents plus deterministic planted near-duplicates: for doc_id < 10,
-    * a copy with a one-word prefix edit and doc_id+1000000. Derived from
-    * the table itself (no synthetic data source) so near-dup operators have
-    * non-degenerate output on the synthetic corpus, which has no natural
-    * near-pairs (measured 3-gram Jaccard p99 ≈ 0.015). */
-  def withPlantedNearDups(docs: DataFrame): DataFrame = {
-    val planted = docs.filter(col("doc_id") < 10)
-      .withColumn("doc_id", col("doc_id") + 1000000L)
-      .withColumn("text", concat(lit("planted near duplicate copy "), col("text")))
-    docs.unionByName(planted)
   }
 
   /** MinHash signature index: one row per doc with `numHashes` min-hashes.
@@ -85,14 +40,14 @@ object Dedup {
     * ONE narrow Project over the scan: the custom codegen'd
     * [[graft.functions.MinHashSig]] expression computes the full signature
     * per document row (Kirsch–Mitzenmacher double hashing over the 60-bit
-    * md5 [[hash60]]: h_i = (h1 + i·(h2 >> 5)) & (2^60−1)) — zero shuffle,
-    * embarrassingly parallel at 100 TB. Earlier formulations measured at
-    * bench scale: explode → window(lead) → 32 min aggregates shuffled
-    * every token twice and its multi-stage scheduling dominated the whole
-    * pipeline; `numHashes × array_min(transform(...))` (interpreted HOFs)
-    * was ~20× slower still. The hash is md5-derived (not xxhash64) so
-    * DuckDB replays the signature bit-identically — the MinHash/Jaccard
-    * pipeline is verified by the hash-compare oracle, not just specs. */
+    * md5 [[TokenHash.hash60]]: h_i = (h1 + i·(h2 >> 5)) & (2^60−1)) — zero
+    * shuffle, embarrassingly parallel at 100 TB. Earlier formulations measured
+    * at bench scale: explode → window(lead) → 32 min aggregates shuffled every
+    * token twice and its multi-stage scheduling dominated the whole pipeline;
+    * `numHashes × array_min(transform(...))` (interpreted HOFs) was ~20× slower
+    * still. The hash is md5-derived (not xxhash64) so DuckDB replays the
+    * signature bit-identically — the MinHash/Jaccard pipeline is verified by
+    * the hash-compare oracle, not just specs. */
   def minhashSignatures(docs: DataFrame, toksCol: String, idCol: String,
       shingleSize: Int, numHashes: Int): DataFrame = {
     graft.GraftExtensions.register(docs.sparkSession)
@@ -129,7 +84,7 @@ object Dedup {
     * of each pair drops — the pairwise keep-original rule, applied
     * only between documents both stages kept). Runs on the planted
     * corpus so the near stage has non-degenerate effect (the
-    * [[withPlantedNearDups]] rationale).
+    * [[TokenHash.withPlantedNearDups]] rationale).
     *
     * Scale shape: stage 1 is ONE shuffle on the fingerprint; stage 2
     * probes the SAME persisted signature/candidate indexes as
@@ -138,10 +93,10 @@ object Dedup {
     * aggregate. Nothing here is new corpus-scale work — that is the
     * point of reporting from the existing indexes. */
   def dedupCascadeReport(spark: SparkSession, dir: String): DataFrame = {
-    val base = withPlantedNearDups(table(spark, dir, "documents"))
+    val base = TokenHash.withPlantedNearDups(table(spark, dir, "documents"))
       .select(col("doc_id"), col("source"), col("text"))
     val exact = base
-      .withColumn("fp", md5(normText(col("text"))))
+      .withColumn("fp", md5(TokenHash.normText(col("text"))))
       .withColumn("keep_exact", col("doc_id") ===
         min(col("doc_id")).over(Window.partitionBy(col("fp"))))
       .select(col("doc_id"), col("source"), col("keep_exact"))
@@ -189,9 +144,9 @@ object Dedup {
       lshCandidatesWithSets(spark, dir, shingleSize, numBands, rowsPerBand)
     val nh = numBands * rowsPerBand
     val docs = graft.schema.Schemas.spread(spark, dir, "documents",
-        withPlantedNearDups(table(spark, dir, "documents"))
+        TokenHash.withPlantedNearDups(table(spark, dir, "documents"))
           .select(col("doc_id"), col("text")), col("doc_id"))
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
+      .select(col("doc_id"), TokenHash.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= shingleSize)
     // identical key ⇒ the persisted signature index built by the
     // candidate machinery is served warm, never recomputed
@@ -238,7 +193,7 @@ object Dedup {
     * expensive alternative for substring-level dedup). */
   def dedupLineLevel(spark: SparkSession, dir: String): DataFrame = {
     // the synthetic corpus has no sentence structure (one unbroken word
-    // stream, no '.'), so — same convention as [[withPlantedNearDups]]
+    // stream, no '.'), so — same convention as [[TokenHash.withPlantedNearDups]]
     // and text_scrub's planted PII — deterministic boilerplate is
     // planted from the table itself: a shared header on every 4th doc
     // and a per-source footer, exactly the template/syndication pattern
@@ -317,9 +272,9 @@ object Dedup {
   private def lshCandidatesWithSets(spark: SparkSession, dir: String,
       shingleSize: Int, numBands: Int, rowsPerBand: Int): (DataFrame, DataFrame) = {
     val docs = graft.schema.Schemas.spread(spark, dir, "documents",
-        withPlantedNearDups(table(spark, dir, "documents"))
+        TokenHash.withPlantedNearDups(table(spark, dir, "documents"))
           .select(col("doc_id"), col("text")), col("doc_id"))
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
+      .select(col("doc_id"), TokenHash.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= shingleSize)
     // the signature index is persisted ONCE per (dir, shingle size, width)
     // and shared by every banding configuration probing it (minhash-LSH,
@@ -414,7 +369,7 @@ object Dedup {
 
   /** SimHash near-dup: 60-bit fingerprints via the custom
     * [[graft.functions.SimHash60]] expression (md5-derived per-token hash
-    * = [[hash60]], so the DuckDB oracle replays the whole pipeline);
+    * = [[TokenHash.hash60]], so the DuckDB oracle replays the whole pipeline);
     * candidate pairs share at least one of four 15-bit fingerprint chunks
     * (pigeonhole: hamming distance ≤ 3 ⇒ some chunk identical), verified
     * by bit_count(xor). Join key is (chunk index, chunk value) — bounded
@@ -423,9 +378,9 @@ object Dedup {
       maxHamming: Int = 3): DataFrame = {
     graft.GraftExtensions.register(spark)
     val docs = graft.schema.Schemas.spread(spark, dir, "documents",
-        withPlantedNearDups(table(spark, dir, "documents"))
+        TokenHash.withPlantedNearDups(table(spark, dir, "documents"))
           .select(col("doc_id"), col("text")), col("doc_id"))
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
+      .select(col("doc_id"), TokenHash.tokens(col("text")).as("toks"))
       .withColumn("simhash", expr("simhash60(toks)"))
     val chunked = docs.select(col("doc_id"), col("simhash"),
       posexplode(array((0 until 4).map(i =>
@@ -461,7 +416,7 @@ object Dedup {
   /** Incremental NEAR-dup: a delta batch probed against the standing
     * corpus's MinHash band index — the production shape of continuous
     * ingest, where exact-fingerprint incremental dedup
-    * ([[Curation2.dedupIncremental]]) misses edited reposts. Delta =
+    * ([[dedupIncremental]]) misses edited reposts. Delta =
     * `doc_id % 5 = 0`, corpus = the rest (same deterministic arrival
     * stand-in as the exact variant). Each delta doc reports verified
     * (Jaccard ≥ threshold) matches into the corpus and against
@@ -506,9 +461,9 @@ object Dedup {
   private[graft] def cachedSignatureIndex(spark: SparkSession, dir: String,
       shingleSize: Int, numHashes: Int): DataFrame = {
     val docs = graft.schema.Schemas.spread(spark, dir, "documents",
-        withPlantedNearDups(table(spark, dir, "documents"))
+        TokenHash.withPlantedNearDups(table(spark, dir, "documents"))
           .select(col("doc_id"), col("text")), col("doc_id"))
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
+      .select(col("doc_id"), TokenHash.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= shingleSize)
     IndexCache(spark, "dedup.sig", (dir, shingleSize, numHashes),
       Seq(s"$dir/documents.parquet"))(
@@ -537,9 +492,9 @@ object Dedup {
       cand0: DataFrame, shingleSize: Int,
       jaccardThreshold: Double): DataFrame = {
     graft.GraftExtensions.register(spark)
-    val allDocs = withPlantedNearDups(table(spark, dir, "documents"))
+    val allDocs = TokenHash.withPlantedNearDups(table(spark, dir, "documents"))
     val docs = allDocs
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
+      .select(col("doc_id"), TokenHash.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= shingleSize)
     val cand = cand0.distinct()
     val candIds = cand.select(col("delta_id").as("doc_id"))
@@ -603,14 +558,15 @@ object Dedup {
     * that turns pairwise near-dup detection into an actual dedup decision
     * (keep one doc per group).
     *
-    * Distributed min-label propagation: labels start as doc_id; each
-    * round every node takes the min of its label and its neighbors'
-    * labels, until a fixpoint (driver checks a changed-count — one long,
-    * not rows). Converges in O(diameter) rounds; at 100 TB this is the
-    * standard iterative-join connected components (upgrade path:
-    * alternating large-star/small-star for O(log n) rounds on adversarial
-    * graphs — near-dup clusters are tiny in practice, so plain
-    * propagation converges in 2–3 rounds). */
+    * The verified near-dup edge list is orders of magnitude smaller than
+    * the corpus (it holds ONLY pairs that passed exact Jaccard — ~0.001%
+    * of docs at production dup rates), so it is labeled by the one
+    * size-gated [[GraphIndex.componentsOf]] kernel that graph components
+    * also call: at or under `driverUnionFindMax` edges (≤ 64 MB of ids) a
+    * driver union-find in one collect, above it distributed min-label
+    * propagation with pointer jumping, capped at `maxIters` rounds. Same
+    * labels either way (min reachable doc_id); NorthStarSpec pins both
+    * paths to the same output. */
   def dedupGroups(spark: SparkSession, dir: String,
       maxIters: Int = 20, driverUnionFindMax: Long = 4000000L): DataFrame = {
     val pairs = IndexCache(spark, "dedup.pairs", dir,
@@ -620,82 +576,10 @@ object Dedup {
       p.count() // materialize the index once
       p
     })(_.unpersist(false))
-    // The verified near-dup edge list is orders of magnitude smaller than
-    // the corpus (it holds ONLY pairs that passed exact Jaccard — ~0.001%
-    // of docs at production dup rates). Below `driverUnionFindMax` edges
-    // (16 bytes each → ≤64 MB) a driver union-find labels the whole graph
-    // in one pass — versus ~3 shuffle stages PER propagation round for
-    // the iterative join, which only wins once the edge list itself is
-    // too big to hold. Same labels either way (min reachable doc_id);
-    // DedupSpec pins both paths to the same output.
-    val nEdges = pairs.count() // cached: instant after materialization
-    if (nEdges <= driverUnionFindMax) return unionFindGroups(spark, pairs)
-    // symmetric edge list, persisted: probed every round
-    val edges = pairs
-      .unionAll(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .persist()
-    // round 0 seeds labels one propagation step ahead: min(self, direct
-    // neighbors) straight out of the first aggregate
-    var labels = edges
-      .groupBy(col("doc_a").as("doc_id"))
-      .agg(least(col("doc_a"), min(col("doc_b"))).as("label"))
-      .persist()
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIters) {
-      // ONE join per round: aggregate neighbor labels, fold in the old
-      // label, and carry a changed flag — the fixpoint check reuses the
-      // same materialization instead of a second join
-      val next = edges
-        .join(labels.select(col("doc_id").as("doc_b"),
-          col("label").as("nbr_label")), Seq("doc_b"))
-        .groupBy(col("doc_a").as("doc_id"))
-        .agg(min(col("nbr_label")).as("min_nbr"))
-        .join(labels, Seq("doc_id"))
-        .select(col("doc_id"),
-          least(col("label"), col("min_nbr")).as("label"),
-          (col("min_nbr") < col("label")).as("chg"))
-        .persist()
-      changed = next.filter(col("chg")).count()
-      labels.unpersist(false)
-      labels = next.drop("chg")
-      iter += 1
-    }
-    val out = labels.select(col("doc_id"), col("label").as("group_id"))
+    val e0 = pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
+    GraphIndex.componentsOf(spark, e0, maxIters, driverUnionFindMax)
+      .select(col("u").as("doc_id"), col("lbl").as("group_id"))
       .orderBy(col("doc_id"))
-    edges.unpersist(false)
-    out
-  }
-
-  /** Driver union-find over a collected (doc_a, doc_b) edge list: roots
-    * keyed by MIN id (union attaches the larger root under the smaller),
-    * so each node's root IS the smallest reachable doc_id — identical
-    * labels to the iterative min-propagation and the recursive-CTE
-    * oracle. Ids only ever cross the driver boundary; the result is
-    * parallelized back as a DataFrame. */
-  private def unionFindGroups(spark: SparkSession, pairs: DataFrame): DataFrame = {
-    import spark.implicits._
-    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-      // path compression
-      var c = x
-      while (parent.getOrElse(c, c) != r) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    // one collect job (toLocalIterator would run a job per partition);
-    // the size gate bounds this at ≤64 MB of ids
-    pairs.select(col("doc_a"), col("doc_b")).as[(Long, Long)]
-      .collect().foreach { case (a, b) =>
-        parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) {
-          if (ra < rb) parent(rb) = ra else parent(ra) = rb
-        }
-      }
-    val labels = parent.keys.toSeq.map(x => (x, find(x)))
-    labels.toDF("doc_id", "group_id").orderBy(col("doc_id"))
   }
 
   /** Embedding near-dup: cosine ≥ threshold via BANDED multi-table
@@ -766,7 +650,7 @@ object Dedup {
     *
     * The cluster stage is a deterministic quantizer in the
     * [[graft.query.Similarity.ivfDetTopK]] family: vectors hash into
-    * `nCells` buckets and each bucket's ([[hash60lo]], id)-argmin
+    * `nCells` buckets and each bucket's ([[TokenHash.hash60lo]], id)-argmin
     * member anchors it (distributed Forgy), then every vector assigns
     * by argmax dot against the anchor panel — so the DuckDB oracle
     * replays cells, pairs, and verdicts hash-exactly; the KMeans-cell
@@ -809,9 +693,9 @@ object Dedup {
       // the seeds that exist.
       val seeds = emb
         .withColumn("cell",
-          pmod(hash60(col("vec_id").cast("string")), lit(nCells.toLong)))
+          pmod(TokenHash.hash60(col("vec_id").cast("string")), lit(nCells.toLong)))
         .withColumn("skey", concat(
-          format_string("%019d", hash60lo(col("vec_id").cast("string"))),
+          format_string("%019d", TokenHash.hash60lo(col("vec_id").cast("string"))),
           format_string("%019d", col("vec_id"))))
         .groupBy(col("cell")).agg(min(col("skey")).as("k"))
         .select(col("cell"),
@@ -847,7 +731,7 @@ object Dedup {
 
   /** The width set the substring-dedup family shares one window pass
     * over; a non-member width falls back to its own (cached) pass. */
-  private[graft] val SubstringFamilyWidths: Seq[Int] = Seq(8, 16, 32)
+  private val SubstringFamilyWidths: Seq[Int] = Seq(8, 16, 32)
 
   private def familyWidthsFor(w: Int): Seq[Int] =
     if (SubstringFamilyWidths.contains(w)) SubstringFamilyWidths else Seq(w)
@@ -869,18 +753,18 @@ object Dedup {
     IndexCache(spark, "dedup.wins", (dir, ws),
         Seq(s"$dir/documents.parquet"))({
       censusBuilds.incrementAndGet()
-      val docs = withPlantedNearDups(table(spark, dir, "documents"))
-        .select(col("doc_id"), tokens(col("text")).as("toks"))
+      val docs = TokenHash.withPlantedNearDups(table(spark, dir, "documents"))
+        .select(col("doc_id"), TokenHash.tokens(col("text")).as("toks"))
         .filter(size(col("toks")) >= ws.min)
       val tagged = ws.map { w =>
-        transform(shinglesFromTokens(col("toks"), w),
+        transform(TokenHash.shinglesFromTokens(col("toks"), w),
           (s, p) => struct(lit(w).as("w"),
             (p + 1).cast("long").as("i"), s.as("win")))
       }
       val wins = docs
         .select(col("doc_id"), explode(flatten(array(tagged: _*))).as("ws"))
         .select(col("doc_id"), col("ws.w").as("w"), col("ws.i").as("i"),
-          hash60(col("ws.win")).as("h"))
+          TokenHash.hash60(col("ws.win")).as("h"))
         .persist()
       wins.count() // materialize the index once
       wins
@@ -914,7 +798,7 @@ object Dedup {
 
   /** Exact repeated-substring detection at fixed window granularity:
     * every `windowTokens`-token sliding window (stride 1) is hashed
-    * ([[hash60]] — cross-engine), and a window whose hash appears in
+    * ([[TokenHash.hash60]] — cross-engine), and a window whose hash appears in
     * ≥ 2 distinct documents is a repeated exact span — the
     * fixed-window reduction of suffix-array substring dedup (a
     * repeated substring of length ≥ L is detected by its length-L
@@ -1002,4 +886,161 @@ object Dedup {
         (col("n_windows") + lit(w.toLong) - 1L).as("span_len"))
       .orderBy(col("doc_id"), col("start_pos"))
   }
+
+  /** Prefix-duplicate groups: documents sharing their first `k`
+    * normalized tokens — the boilerplate-intro detector (template
+    * headers, scraped navigation preambles) that full-document hashing
+    * misses once bodies diverge. Groups keyed by the md5-60 hash of the
+    * joined prefix so the oracle replays the grouping bit-identically.
+    *
+    * Scale shape: one scan, map-side-combined count on the uniform
+    * prefix-hash key, groups-only output (HAVING > 1). */
+  def dedupPrefixGroups(spark: SparkSession, dir: String,
+      k: Int = 5): DataFrame = {
+    val docs = table(spark, dir, "documents")
+      .select(col("doc_id"), TokenHash.tokens(col("text")).as("t"))
+      .filter(size(col("t")) >= k)
+      .select(col("doc_id"),
+        TokenHash.hash60(concat_ws(" ", slice(col("t"), 1, k))).as("pfx"))
+    docs.groupBy(col("pfx"))
+      .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("first_doc"),
+        max(col("doc_id")).as("last_doc"))
+      .filter(col("n_docs") > 1)
+      .orderBy(col("pfx"))
+  }
+
+  // ---- calibration -------------------------------------------------------
+
+  /** Event-time batch deduplication: first event wins per (user, type,
+    * 10-minute tumbling window) — the batch twin of the watermarked
+    * streaming `dropDuplicatesWithinWatermark` path
+    * ([[graft.streaming.StreamQueries]]), used to compact replayed /
+    * at-least-once event logs before aggregation.
+    *
+    * Scale shape: one ranked window on the (user, type, window-bucket)
+    * composite — the dedup shuffle — then a filter; integer
+    * epoch-micros bucketing keeps window assignment exact. */
+  def dedupTimeWindow(spark: SparkSession, dir: String,
+      windowSec: Int = 600): DataFrame = {
+    val span = lit(windowSec * 1000000L)
+    val e = graft.schema.Schemas.events(spark, dir)
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        unix_micros(col("ts")).as("tus"))
+      // integer modulo, not a double division: exact at any epoch
+      .withColumn("win_start",
+        timestamp_micros(col("tus") - col("tus") % span))
+    val w = Window.partitionBy(col("user_id"), col("event_type"),
+      col("win_start")).orderBy(col("tus"), col("event_id"))
+    e.withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1)
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        col("win_start"))
+      .orderBy(col("event_id"))
+  }
+
+  // ---- stratified sampling ----------------------------------------------
+
+  /** Near-dup rate curve over verification thresholds: the SAME
+    * persisted MinHash candidate index probed at Jaccard ≥ {0.5 … 0.9},
+    * reporting surviving pair and distinct-document counts per cut —
+    * the "choose your dedup threshold" report a curation pipeline
+    * publishes before committing a corpus build (the marginal docs
+    * between 0.5 and 0.8 are exactly the judgment calls).
+    *
+    * Scale shape: probes [[dedupMinhashLsh]]'s persisted
+    * signature + candidate indexes (cache hits beside the other dedup
+    * queries — no new corpus-scale work); the curve is a ≤|pairs|×5
+    * explode with one tiny aggregate. Counts are exact integers.
+    *
+    * Ref: the reference has no dedup stage; this is the threshold
+    * governance its Kafka ingest would need before training. */
+  def dedupThresholdCurve(spark: SparkSession, dir: String,
+      thresholds: Seq[Double] = Seq(0.5, 0.6, 0.7, 0.8, 0.9))
+      : DataFrame = {
+    import spark.implicits._
+    val pairs = dedupMinhashLsh(spark, dir)
+    pairs.crossJoin(thresholds.toDF("threshold"))
+      .filter(col("jaccard") >= col("threshold"))
+      .select(col("threshold"), col("doc_a"), col("doc_b"))
+      .select(col("threshold"),
+        explode(array(col("doc_a"), col("doc_b"))).as("doc_id"),
+        col("doc_a"), col("doc_b"))
+      .groupBy(col("threshold"))
+      .agg((count(lit(1)) / 2).cast("long").as("n_pairs"),
+        countDistinct(col("doc_id")).as("n_docs"))
+      .orderBy(col("threshold"))
+  }
+
+  /** Canonical-representative selection per near-dup group: turn the
+    * pairwise dedup verdicts into the KEEP/DROP decision — per connected
+    * component keep the doc with the most normalized characters (tie:
+    * smallest doc_id), report what was dropped. This is the step that
+    * actually shrinks the corpus.
+    *
+    * Scale shape: group labels come from [[dedupGroups]] (cached
+    * pair index + union-find/min-propagation — see its doc); the labels
+    * table holds ONLY docs that appear in a verified near-dup pair
+    * (~0.001% of the corpus at production dup rates), so the argmax is
+    * an aggregation over a tiny table. The argmax is one `max(struct)`
+    * per group — never a window over the corpus. Exact integers
+    * throughout. */
+  def dedupKeepBest(spark: SparkSession, dir: String): DataFrame = {
+    val labels = dedupGroups(spark, dir)
+    val chars = TokenHash.withPlantedNearDups(table(spark, dir, "documents"))
+      .select(col("doc_id"),
+        length(TokenHash.normText(col("text"))).cast("long").as("chars"))
+    labels.join(chars, Seq("doc_id"))
+      .groupBy(col("group_id"))
+      .agg(count(lit(1)).as("n_docs"),
+        sum(col("chars")).as("chars_total"),
+        // max over (chars, -doc_id): most chars, then SMALLEST id
+        max(struct(col("chars"), (-col("doc_id")).as("negid"))).as("m"))
+      .select(col("group_id"),
+        (-col("m.negid")).as("kept_doc"),
+        col("n_docs"),
+        (col("chars_total") - col("m.chars")).as("chars_dropped"))
+      .orderBy(col("group_id"))
+  }
+
+  /** Incremental dedup: a delta batch (new crawl) checked against the
+    * standing corpus — each delta doc is a corpus duplicate, an
+    * intra-batch duplicate, or genuinely new. This is the shape every
+    * continuously-ingesting pipeline runs; the full-corpus re-dedup
+    * ([[dedupExact]]) is its bootstrap. Delta = `doc_id % 5 = 0`,
+    * corpus = the rest (a deterministic stand-in for arrival time).
+    *
+    * Scale shape: the corpus side reduces to its DISTINCT fingerprint
+    * set — at production dup rates a fraction of corpus size, stored
+    * once as the dedup index, not recomputed (here derived inline for
+    * the oracle's benefit). The delta⨝index semi-join shuffles 16-byte
+    * keys only, and a bloom filter of the index (the standard
+    * refinement) would prune most delta rows before the exchange.
+    * Intra-batch dedup is a groupBy-min over the (small) delta alone. */
+  def dedupIncremental(spark: SparkSession, dir: String): DataFrame = {
+    val fp = table(spark, dir, "documents")
+      .select(col("doc_id"), md5(TokenHash.normText(col("text"))).as("fp"))
+    val corpusFps = fp.filter(col("doc_id") % 5 =!= 0)
+      .select(col("fp")).distinct()
+      .withColumn("in_corpus", lit(true))
+    val delta = fp.filter(col("doc_id") % 5 === 0)
+    val firstInBatch = delta.groupBy(col("fp"))
+      .agg(min(col("doc_id")).as("first_id"))
+    delta.join(corpusFps, Seq("fp"), "left_outer")
+      .join(firstInBatch, Seq("fp"))
+      .select(col("doc_id"), col("fp").as("fingerprint"),
+        when(col("in_corpus").isNotNull, lit("dup_of_corpus"))
+          .when(col("doc_id") > col("first_id"), lit("dup_in_batch"))
+          .otherwise(lit("new")).as("status"))
+      .orderBy(col("doc_id"))
+  }
+
+  /** Cluster-size histogram over the near-dup groups: how many duplicate
+    * groups exist at each size — the dedup QA report (a spike at large
+    * sizes means boilerplate/template contamination in the corpus). */
+  def dedupClusterStats(spark: SparkSession, dir: String): DataFrame =
+    dedupGroups(spark, dir)
+      .groupBy(col("group_id")).agg(count(lit(1)).as("sz"))
+      .groupBy(col("sz").as("group_size"))
+      .agg(count(lit(1)).as("n_groups"))
+      .orderBy(col("group_size"))
 }

@@ -1,7 +1,7 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.schema.Schemas.table
 
 /** Multimodal-column plumbing: media as opaque `binary` payloads with typed
@@ -23,12 +23,12 @@ object Multimodal {
 
   /** STUB — deterministic fake feature extractor standing in for an image
     * decode+embed. Derives 4 doubles in [0,1) from the md5-based
-    * [[Dedup.hash60]] of the payload bytes at different seeds — DuckDB
+    * [[TokenHash.hash60]] of the payload bytes at different seeds — DuckDB
     * reproduces them bit-identically (md5 of the same byte sequence), so
     * the stub pipeline is hash-compare oracle-able. A real implementation
     * replaces this expression with a decoder call. */
   private def stubFeature(payload: org.apache.spark.sql.Column, seed: Int) =
-    (Dedup.hash60(concat(payload, encode(lit(s":$seed"), "UTF-8")))
+    (TokenHash.hash60(concat(payload, encode(lit(s":$seed"), "UTF-8")))
       % lit(1000000L)).cast("double") / lit(1000000.0)
 
   /** Binary payload pipeline over documents-as-media: encode text bytes as
@@ -45,9 +45,9 @@ object Multimodal {
         // pseudo-dimensions: DuckDB-reproducible, see stubFeature)
         struct(
           lit("image/stub").as("mime"),
-          (Dedup.hash60(concat(col("doc_id").cast("string"), lit(":w")))
+          (TokenHash.hash60(concat(col("doc_id").cast("string"), lit(":w")))
             % lit(1024L) + lit(256L)).cast("int").as("width"),
-          (Dedup.hash60(concat(col("doc_id").cast("string"), lit(":h")))
+          (TokenHash.hash60(concat(col("doc_id").cast("string"), lit(":h")))
             % lit(768L) + lit(256L)).cast("int").as("height"))
           .as("media_meta"),
         array((0 until 4).map(stubFeature(payload, _)): _*).as("stub_embedding"))
@@ -298,10 +298,10 @@ object Multimodal {
       .select(col("doc_id"), payload.as("payload"))
       // stub container-header probe: fps ∈ {24, 30}, duration 5–34 s
       .withColumn("fps",
-        when(Dedup.hash60(concat(col("doc_id").cast("string"), lit(":fps")))
+        when(TokenHash.hash60(concat(col("doc_id").cast("string"), lit(":fps")))
           % lit(2L) === 0, lit(24L)).otherwise(lit(30L)))
       .withColumn("duration_s",
-        Dedup.hash60(concat(col("doc_id").cast("string"), lit(":dur")))
+        TokenHash.hash60(concat(col("doc_id").cast("string"), lit(":dur")))
           % lit(30L) + lit(5L))
       .withColumn("n_frames", col("fps") * col("duration_s"))
       .withColumn("stride", expr("greatest(1L, (n_frames + 7) DIV 8)"))
@@ -310,7 +310,7 @@ object Multimodal {
           .as("frame_idx"),
         col("payload"))
       .withColumn("frame_fp",
-        Dedup.hash60(concat(col("payload"),
+        TokenHash.hash60(concat(col("payload"),
           encode(concat(lit(":f"), col("frame_idx").cast("string")),
             "UTF-8"))) % lit(1000000L))
       .select(col("doc_id"), col("n_frames"), col("frame_idx"),
@@ -488,7 +488,7 @@ object Multimodal {
     * Pure integer arithmetic on metadata — hash-exact, no shuffle. */
   def multimodalAudioWindows(spark: SparkSession, dir: String,
       sampleRate: Int = 16000, winMs: Int = 25, hopMs: Int = 10): DataFrame = {
-    val durationMs = (Dedup.hash60(concat(col("doc_id").cast("string"),
+    val durationMs = (TokenHash.hash60(concat(col("doc_id").cast("string"),
       lit(":dur"))) % lit(30000L) + lit(1000L)).as("duration_ms")
     val win = sampleRate.toLong * winMs / 1000   // 400 samples
     val hop = sampleRate.toLong * hopMs / 1000   // 160 samples
@@ -798,7 +798,7 @@ object Multimodal {
   /** Perceptual-hash image near-dup detection — the image-modality
     * member of the dedup family: synthesize a gradient PNG per document
     * plus a brightness-shifted planted copy for doc_id < 10 (the
-    * [[Dedup.withPlantedNearDups]] convention — dHash is
+    * [[TokenHash.withPlantedNearDups]] convention — dHash is
     * gradient-based, so a uniform brightness shift leaves the hash
     * IDENTICAL, which is exactly the near-dup class perceptual hashing
     * exists to catch and byte-level dedup cannot), run the REAL

@@ -1,99 +1,26 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import graft.schema.IndexCache
 import graft.schema.Schemas.table
 
-/** Text-analysis operators for training-data pipelines over `documents`:
-  * quality scoring, token counting, fingerprinting, language ID. All are
-  * per-row Projects over the scan — embarrassingly parallel, no shuffle,
+/** The text family: text-analysis and corpus-curation operators for
+  * training-data pipelines over `documents` — quality scoring, token
+  * statistics, fingerprinting, language ID, n-gram models, chunking,
+  * packing, decontamination and mixture planning. The per-row operators
+  * are Projects over the scan — embarrassingly parallel, no shuffle,
   * codegen'd built-ins only (no UDFs in the hot path).
   */
 object TextAnalysis {
-
-  // ---- shared corpus token statistics ------------------------------------
-
-  /** The corpus TERM-FREQUENCY INDEX: one row per (doc_id, tok) with its
-    * in-doc count, persisted once per (dir, documents-content
-    * fingerprint) and probed by every term-statistics consumer (TF-IDF,
-    * BM25, unigram LM, hybrid retrieval). This is the materialized
-    * inverted-index/corpus-statistics layer a production deployment
-    * maintains beside the corpus: the tokenize+explode+count pass is the
-    * expensive part of every one of those operators, identical in each,
-    * and at 100 TB is a whole corpus scan — paying it once per corpus
-    * GENERATION instead of once per query is the difference between an
-    * index probe and a re-index. Superseded generations are unpersisted
-    * by [[IndexCache]]. Derived statistics (per-doc length, document
-    * frequency, corpus size) are one tiny aggregate over this index;
-    * deriving dl as sum(tf) is EXACT — it equals the token count by
-    * construction. */
-  private[graft] def tokenTf(spark: SparkSession, dir: String): DataFrame =
-    IndexCache(spark, "text.tokenTf", dir, Seq(s"$dir/documents.parquet"))(
-      spreadDocs(spark, dir, "text")
-        .select(col("doc_id"), explode(Dedup.tokens(col("text"))).as("tok"))
-        .groupBy(col("doc_id"), col("tok"))
-        .agg(count(lit(1)).as("tf"))
-        .persist())(_.unpersist(false))
-
-  /** Per-doc token counts (dl) derived from [[tokenTf]]: Σ tf over the
-    * doc's terms — exact, one map-side-combined aggregate on the
-    * persisted index. */
-  private[graft] def docLengths(spark: SparkSession, dir: String): DataFrame =
-    tokenTf(spark, dir).groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-
-  /** (document count, average doc length) for the corpus at `dir` — two
-    * driver-side numbers every BM25-family call would otherwise re-fetch
-    * with two jobs over the index; fingerprint-keyed like the index
-    * itself, so a regenerated corpus recomputes. */
-  private[graft] def corpusConstants(spark: SparkSession,
-      dir: String): (Double, Double) =
-    IndexCache(spark, "text.constants", dir, Seq(s"$dir/documents.parquet")) {
-      val n = table(spark, dir, "documents").count().toDouble
-      val a = docLengths(spark, dir)
-        .agg(avg(col("dl")).as("avgdl")).head().getDouble(0)
-      (n, a)
-    }(_ => ())
-
-  /** The documents table, projected to (doc_id +: cols) and hash-spread
-    * across the cores when the corpus file layout cannot feed them
-    * ([[graft.schema.Schemas.spread]] gate — the driver testdata is one
-    * single-row-group parquet file per table, so the scan reads as ONE
-    * task and every tokenize/shingle/hash pipeline above it runs on one
-    * core). On a healthy multi-split layout this adds nothing.
-    *
-    * Multi-consumer caveat: a query whose plan consumes the spread
-    * frame from SEVERAL subtrees (separate broadcast builds each
-    * re-materialize the scan+exchange — column pruning differentiates
-    * the subtrees, so ReuseExchange does not collapse them) pays the
-    * narrow map side once PER subtree and can get slower; measured on
-    * cooccur_pmi / kneser_ney / llr / bigram_entropy_rate (0.46 →
-    * 0.91 s) — those stay on the direct scan.
-    *
-    * The tokenize-once variant (r21, measured and REVERTED): spreading
-    * the single tokenize pass and eagerly localCheckpointing the token
-    * stream + the (bounded) bigram/vocab count tables, with margins
-    * derived from the materialized bigram table, made all four SLOWER
-    * at sf0.1/32 — cooccur_pmi 0.52 → 0.78 s, llr 0.44 → 0.70,
-    * kneser_ney 0.39 → 0.59, bigram_entropy_rate 0.37 → 0.57. The
-    * multi-subtree single-task scans run CONCURRENTLY (Spark schedules
-    * the sibling broadcast/aggregate jobs in parallel), so the "6
-    * corpus passes" overlap on idle cores, while the checkpoint form
-    * pays 2-3 extra serialized jobs plus materialization. The direct
-    * scan stays. */
-  private def spreadDocs(spark: SparkSession, dir: String,
-      cols: String*): DataFrame =
-    graft.schema.Schemas.spread(spark, dir, "documents",
-      table(spark, dir, "documents")
-        .select(("doc_id" +: cols).map(col): _*),
-      col("doc_id"))
 
   /** Composite quality score in [0,1] of a text column (length, token,
     * word-shape ratios — the standard cheap pre-filter for LLM corpus
     * cleaning). All arithmetic in double; the operand order is fixed and
     * mirrored literally by the oracles, so the doubles are bit-identical
     * cross-engine (rankings on the score tie-break on doc_id anyway). */
-  def qualityScore(txt: Column): Column = {
+  private def qualityScore(txt: Column): Column = {
     val nChars = length(txt).cast("double")
     val nToks = size(split(txt, " ")).cast("double")
     val nSpaces = (length(txt) - length(regexp_replace(txt, " ", ""))).cast("double")
@@ -140,7 +67,7 @@ object TextAnalysis {
 
   /** Document fingerprinting: canonical md5 of normalized text (exact-dup
     * key) plus a winnowing-style robust fingerprint — the minimum of the
-    * 60-bit [[Dedup.hash60]] hashes of all word 4-grams (public winnowing
+    * 60-bit [[TokenHash.hash60]] hashes of all word 4-grams (public winnowing
     * scheme reduced to window=whole-doc: stable under local edits away
     * from the minimum; null for docs shorter than 4 tokens). Computed as
     * explode → codegen'd hash → map-side partial min (no interpreted HOF
@@ -148,11 +75,11 @@ object TextAnalysis {
   def textFingerprint(spark: SparkSession, dir: String): DataFrame = {
     val docs = table(spark, dir, "documents")
     val winnow = docs
-      .select(col("doc_id"), explode(Dedup.shingles(col("text"), 4)).as("g"))
+      .select(col("doc_id"), explode(TokenHash.shingles(col("text"), 4)).as("g"))
       .groupBy(col("doc_id"))
-      .agg(min(Dedup.hash60(col("g"))).as("fingerprint_winnow"))
+      .agg(min(TokenHash.hash60(col("g"))).as("fingerprint_winnow"))
     docs
-      .select(col("doc_id"), md5(Dedup.normText(col("text"))).as("fingerprint_md5"))
+      .select(col("doc_id"), md5(TokenHash.normText(col("text"))).as("fingerprint_md5"))
       .join(winnow, Seq("doc_id"), "left")
       .orderBy(col("doc_id"))
   }
@@ -161,7 +88,7 @@ object TextAnalysis {
     * function-word lists (the classic cheap n-gram/stopword LID). The
     * language with the highest hit ratio wins; ties and no-hits fall back
     * to 'und'. Lists are public high-frequency function words. */
-  val stopwords: Map[String, Seq[String]] = Map(
+  private val stopwords: Map[String, Seq[String]] = Map(
     "en" -> Seq("the", "a", "of", "and", "to", "in", "is", "that", "it", "for"),
     "es" -> Seq("el", "la", "de", "que", "y", "en", "un", "una", "es", "por"),
     "fr" -> Seq("le", "la", "de", "et", "les", "des", "un", "une", "est", "dans"),
@@ -197,8 +124,8 @@ object TextAnalysis {
     * slower here: slice+transform lambdas per gram); the count is
     * map-side-combined and the top-k is TakeOrdered, no global sort. */
   def textNgramCounts(spark: SparkSession, dir: String, k: Int = 50): DataFrame =
-    spreadDocs(spark, dir, "text")
-      .select(Dedup.tokens(col("text")).as("t"))
+    TokenHash.spreadDocs(spark, dir, "text")
+      .select(TokenHash.tokens(col("text")).as("t"))
       .filter(size(col("t")) >= 2)
       .select(col("t"), explode(sequence(lit(1), size(col("t")) - 1)).as("i"))
       .select(concat_ws(" ",
@@ -223,8 +150,8 @@ object TextAnalysis {
     * before the shuffle) → top-k TakeOrdered. All integer counts:
     * hash-exact in any engine. */
   def textBpePairs(spark: SparkSession, dir: String, k: Int = 50): DataFrame =
-    spreadDocs(spark, dir, "text")
-      .select(explode(Dedup.tokens(col("text"))).as("tok"))
+    TokenHash.spreadDocs(spark, dir, "text")
+      .select(explode(TokenHash.tokens(col("text"))).as("tok"))
       .filter(length(col("tok")) >= 2)
       .select(col("tok"), explode(sequence(lit(1), length(col("tok")) - 1)).as("i"))
       .select(expr("substring(tok, i, 2)").as("pair"))
@@ -252,8 +179,8 @@ object TextAnalysis {
   def textBpeEncode(spark: SparkSession, dir: String): DataFrame = {
     val merges = textBpePairs(spark, dir, 3).collect()
       .map(_.getString(0)).toSeq
-    val toks = spreadDocs(spark, dir, "text")
-      .select(col("doc_id"), explode(Dedup.tokens(col("text"))).as("tok"))
+    val toks = TokenHash.spreadDocs(spark, dir, "text")
+      .select(col("doc_id"), explode(TokenHash.tokens(col("text"))).as("tok"))
     val spaced = concat(lit(" "),
       regexp_replace(col("tok"), lit("(.)"), lit("$1 ")))
     val enc = merges.foldLeft(spaced) { (c, m) =>
@@ -366,8 +293,8 @@ object TextAnalysis {
     val (_, vocab) = trainBpeShared(spark, dir, rounds)
     val wordUnits = vocab.select(col("word"),
       size(split(trim(col("sp")), "  ")).cast("long").as("n_units"))
-    val langWords = spreadDocs(spark, dir, "text", "lang")
-      .select(col("lang"), explode(Dedup.tokens(col("text"))).as("word"))
+    val langWords = TokenHash.spreadDocs(spark, dir, "text", "lang")
+      .select(col("lang"), explode(TokenHash.tokens(col("text"))).as("word"))
       .groupBy(col("lang"), col("word"))
       .agg(count(lit(1)).as("n"))
     val out = langWords.join(wordUnits, Seq("word"), "left")
@@ -392,7 +319,7 @@ object TextAnalysis {
 
   /** The trained-BPE state, computed ONCE per (session, dir, corpus
     * fingerprint, rounds) and shared by the train/vocab/fertility
-    * consumers — the same persisted-index discipline as [[tokenTf]]:
+    * consumers — the same persisted-index discipline as [[TokenHash.tokenTf]]:
     * the three declared queries otherwise each re-run the full 16-round
     * loop (measured ~2 s apiece at sf0.1; one training, three probes
     * after this). Superseded generations free their checkpoint. */
@@ -425,7 +352,7 @@ object TextAnalysis {
   private def trainBpe(spark: SparkSession, dir: String,
       rounds: Int): (Seq[(Int, String, String, Long)], DataFrame) = {
     val vocab0 = table(spark, dir, "documents")
-      .select(explode(Dedup.tokens(col("text"))).as("word"))
+      .select(explode(TokenHash.tokens(col("text"))).as("word"))
       .filter(length(col("word")) >= 2)
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       .select(col("word"), col("freq"),
@@ -499,7 +426,7 @@ object TextAnalysis {
     * doubles and the REAL cast absorbs last-ulp libm differences. */
   def textTfidf(spark: SparkSession, dir: String): DataFrame = {
     val docs = table(spark, dir, "documents")
-    val tf = tokenTf(spark, dir)
+    val tf = TokenHash.tokenTf(spark, dir)
     val dfreq = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("n"))
     tf.join(dfreq, Seq("tok"))
@@ -536,7 +463,7 @@ object TextAnalysis {
   def textKeywordsTopk(spark: SparkSession, dir: String,
       k: Int = 3): DataFrame = {
     val docs = table(spark, dir, "documents")
-    val tf = tokenTf(spark, dir)
+    val tf = TokenHash.tokenTf(spark, dir)
     val dfreq = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("n"))
     val scored = tf.join(dfreq, Seq("tok"))
@@ -569,8 +496,8 @@ object TextAnalysis {
     * corpus itself. */
   def textBoilerplateFrac(spark: SparkSession, dir: String,
       chunkTokens: Int = 8, minDf: Int = 3): DataFrame = {
-    val chunks = spreadDocs(spark, dir, "text")
-      .select(col("doc_id"), Dedup.tokens(col("text")).as("t"))
+    val chunks = TokenHash.spreadDocs(spark, dir, "text")
+      .select(col("doc_id"), TokenHash.tokens(col("text")).as("t"))
       // sequence(0, -1) would generate a DESCENDING ramp, not empty —
       // short docs are excluded before the ramp is built
       .filter(size(col("t")) >= chunkTokens)
@@ -579,7 +506,7 @@ object TextAnalysis {
           (size(col("t")) / chunkTokens).cast("int") - 1)).as("ci"),
         col("t"))
       .select(col("doc_id"),
-        Dedup.hash60(concat_ws(" ",
+        TokenHash.hash60(concat_ws(" ",
           slice(col("t"), col("ci") * chunkTokens + lit(1),
             lit(chunkTokens)))).as("h"))
     val df = chunks.select(col("doc_id"), col("h")).distinct()
@@ -602,9 +529,9 @@ object TextAnalysis {
   def textBm25(spark: SparkSession, dir: String,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val docs = table(spark, dir, "documents")
-    val tf = tokenTf(spark, dir)
+    val tf = TokenHash.tokenTf(spark, dir)
     val dfreq = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    val dl = docLengths(spark, dir)
+    val dl = TokenHash.docLengths(spark, dir)
     val n = docs.agg(count(lit(1)).as("n"))
     val avgdl = dl.agg(avg(col("dl")).as("avgdl"))
     val idf = log((col("n") - col("df") + lit(0.5))
@@ -622,7 +549,7 @@ object TextAnalysis {
   }
 
   def textLangId(spark: SparkSession, dir: String): DataFrame = {
-    val toks = Dedup.tokens(col("text"))
+    val toks = TokenHash.tokens(col("text"))
     val scores = stopwords.toSeq.sortBy(_._1).map { case (lang, words) =>
       val wordArr = array(words.map(lit): _*)
       struct(
@@ -657,7 +584,7 @@ object TextAnalysis {
     * summation order is engine-dependent in the last double ulp and the
     * REAL cast absorbs it. */
   def unigramLogprob(spark: SparkSession, dir: String): DataFrame = {
-    val tf = tokenTf(spark, dir)
+    val tf = TokenHash.tokenTf(spark, dir)
     val vocab = tf.groupBy(col("tok")).agg(sum(col("tf")).as("cnt"))
     val total = vocab.agg(sum(col("cnt")).as("total"))
     tf.join(vocab, Seq("tok"))
@@ -688,7 +615,7 @@ object TextAnalysis {
     * first, Zipf-head collapse before the vocab join, 1-row totals
     * broadcast. */
   def textHeldoutPerplexity(spark: SparkSession, dir: String): DataFrame = {
-    val tf = tokenTf(spark, dir)
+    val tf = TokenHash.tokenTf(spark, dir)
     val vocab = tf.filter(col("doc_id") % 2 === 0)
       .groupBy(col("tok")).agg(sum(col("tf")).as("cnt"))
     val totals = vocab.agg(sum(col("cnt")).as("total"),
@@ -710,12 +637,12 @@ object TextAnalysis {
   /** Token-distribution Shannon entropy per document: H = ln n −
     * (Σ tf·ln tf)/n, in nats, plus the distinct-token count — low
     * entropy flags repetitive/templated text, complementing
-    * [[graft.query.Pipeline.textRepetition]]'s bigram view. One explode
+    * [[graft.query.TextAnalysis.textRepetition]]'s bigram view. One explode
     * + one (doc, token) aggregate + one per-doc aggregate; tokens never
     * leave their doc's partition group after the first combine. Double
     * math, float32 output (group-sum order absorbs in the cast). */
   def textEntropy(spark: SparkSession, dir: String): DataFrame =
-    tokenTf(spark, dir)
+    TokenHash.tokenTf(spark, dir)
       .groupBy(col("doc_id"))
       .agg(sum(col("tf")).as("n_tokens"),
         count(lit(1)).as("n_distinct"),
@@ -740,9 +667,9 @@ object TextAnalysis {
     // NOT spread: uni/bi/totals each re-consume `toks`, so a spread
     // exchange would re-run the narrow scan+shuffle per subtree —
     // measured 0.46 → 0.91 s at sf0.1 (the multi-consumer caveat on
-    // [[spreadDocs]])
+    // [[TokenHash.spreadDocs]])
     val toks = table(spark, dir, "documents")
-      .select(col("doc_id"), Dedup.tokens(col("text")).as("t"))
+      .select(col("doc_id"), TokenHash.tokens(col("text")).as("t"))
     val uni = toks.select(explode(col("t")).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("cu"))
     val totalUni = toks.select(size(col("t")).cast("long").as("n"))
@@ -781,7 +708,7 @@ object TextAnalysis {
       maxDoc: Long = 200L, minDf: Long = 3L, maxDf: Long = 150L): DataFrame =
     table(spark, dir, "documents")
       .filter(col("doc_id") < maxDoc)
-      .select(col("doc_id"), explode(Dedup.tokens(col("text"))).as("term"))
+      .select(col("doc_id"), explode(TokenHash.tokens(col("text"))).as("term"))
       .distinct()
       .groupBy(col("term"))
       .agg(count(lit(1)).as("df"),
@@ -793,7 +720,7 @@ object TextAnalysis {
   /** Top-n-gram coverage (the Gopher-style `rep_top_2gram` repetition
     * filter): per document, the single most frequent word bigram and
     * the fraction of the token stream / normalized characters it
-    * covers. Complements [[graft.query.Pipeline.textRepetition]]
+    * covers. Complements [[graft.query.TextAnalysis.textRepetition]]
     * (distinct/total ratio): a doc can have low overall repetition but
     * one pathologically dominant phrase — this is the filter that
     * catches boilerplate headers and SEO keyword stuffing.
@@ -805,14 +732,14 @@ object TextAnalysis {
     * [[graft.query.Warehouse]]. */
   def textTopNgramCoverage(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val toks = spreadDocs(spark, dir, "text")
+    val toks = TokenHash.spreadDocs(spark, dir, "text")
       .select(col("doc_id"),
-        length(Dedup.normText(col("text"))).cast("long").as("n_chars"),
-        Dedup.tokens(col("text")).as("t"))
+        length(TokenHash.normText(col("text"))).cast("long").as("n_chars"),
+        TokenHash.tokens(col("text")).as("t"))
       .filter(size(col("t")) >= 2)
     val counts = toks
       .select(col("doc_id"), col("n_chars"),
-        explode(Dedup.shinglesFromTokens(col("t"), 2)).as("g"))
+        explode(TokenHash.shinglesFromTokens(col("t"), 2)).as("g"))
       .groupBy(col("doc_id"), col("n_chars"), col("g"))
       .agg(count(lit(1)).as("cnt"))
     val byDoc = Window.partitionBy(col("doc_id"))
@@ -842,7 +769,7 @@ object TextAnalysis {
   def corpusDiversityStats(spark: SparkSession, dir: String): DataFrame = {
     table(spark, dir, "documents")
       .select(col("lang"), col("source"), col("doc_id"),
-        explode(Dedup.tokens(col("text"))).as("tok"))
+        explode(TokenHash.tokens(col("text"))).as("tok"))
       .groupBy(col("lang"), col("source"))
       .agg(countDistinct(col("doc_id")).as("n_docs"),
         count(lit(1)).as("n_tokens"),
@@ -891,7 +818,7 @@ object TextAnalysis {
     * aggregation on the ~16-value band key. */
   def contextLengthBands(spark: SparkSession, dir: String): DataFrame =
     table(spark, dir, "documents")
-      .select(size(Dedup.tokens(col("text"))).cast("long").as("n"))
+      .select(size(TokenHash.tokens(col("text"))).cast("long").as("n"))
       .select(col("n"), (length(bin(col("n"))) - 1).cast("int").as("band"))
       .groupBy(col("band"))
       .agg(count(lit(1)).as("n_docs"), min(col("n")).as("min_tokens"),
@@ -913,8 +840,8 @@ object TextAnalysis {
     * regardless of vocabulary size; the vocabulary scalar broadcasts. */
   def textBigramLogprob(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val grams = spreadDocs(spark, dir, "text")
-      .select(col("doc_id"), Dedup.tokens(col("text")).as("t"))
+    val grams = TokenHash.spreadDocs(spark, dir, "text")
+      .select(col("doc_id"), TokenHash.tokens(col("text")).as("t"))
       .filter(size(col("t")) >= 2)
       .select(col("doc_id"),
         explode(sequence(lit(1), size(col("t")) - 1)).as("i"), col("t"))
@@ -939,11 +866,11 @@ object TextAnalysis {
     * adapted to this corpus's flat word-soup text): token count, distinct
     * ratio, mean word length, top-token dominance, and stopword fraction,
     * plus the composite pass flag. All statistics are probes of the
-    * persisted [[tokenTf]] index — one small aggregate per doc, NO
+    * persisted [[TokenHash.tokenTf]] index — one small aggregate per doc, NO
     * re-tokenization scan; at 100 TB the rules read the maintained corpus
     * index, they never re-shingle the corpus per rule change. */
   def textGopherRules(spark: SparkSession, dir: String): DataFrame = {
-    val g = tokenTf(spark, dir).groupBy(col("doc_id"))
+    val g = TokenHash.tokenTf(spark, dir).groupBy(col("doc_id"))
       .agg(sum(col("tf")).cast("long").as("n_tokens"),
         count(lit(1)).cast("long").as("n_distinct"),
         max(col("tf")).cast("long").as("max_tf"),
@@ -982,7 +909,7 @@ object TextAnalysis {
     val lowered = lower(col("text"))
     val d = table(spark, dir, "documents")
       .select(col("doc_id"),
-        size(Dedup.tokens(col("text"))).cast("long").as("n_words"),
+        size(TokenHash.tokens(col("text"))).cast("long").as("n_words"),
         regexp_count(col("text"), lit("[.!?]+")).cast("long")
           .as("n_sentences"),
         regexp_count(lowered, lit("[aeiouy]+")).cast("long")
@@ -1006,7 +933,7 @@ object TextAnalysis {
     * boilerplate/generated corpora drift toward 0 or −2).
     *
     * Scale shape: term totals are one map-side-combined aggregate over
-    * the persisted [[tokenTf]] index; the fit reads only the top-N
+    * the persisted [[TokenHash.tokenTf]] index; the fit reads only the top-N
     * terms, so the vocabulary reduces to a ≤ topN PANEL first
     * (TakeOrdered — a per-partition heap, never a global sort or an
     * unpartitioned window over the vocabulary grain) and the rank
@@ -1015,7 +942,7 @@ object TextAnalysis {
   def textZipfSlope(spark: SparkSession, dir: String,
       topN: Int = 100): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val totals = tokenTf(spark, dir).groupBy(col("tok"))
+    val totals = TokenHash.tokenTf(spark, dir).groupBy(col("tok"))
       .agg(sum(col("tf")).cast("long").as("freq"))
     val ranked = totals
       .orderBy(col("freq").desc, col("tok")).limit(topN)
@@ -1048,7 +975,7 @@ object TextAnalysis {
   def textLlrCollocations(spark: SparkSession, dir: String,
       k: Int = 20): DataFrame = {
     val grams = table(spark, dir, "documents")
-      .select(Dedup.tokens(col("text")).as("t"))
+      .select(TokenHash.tokens(col("text")).as("t"))
       .filter(size(col("t")) >= 2)
       .select(explode(sequence(lit(1), size(col("t")) - 1)).as("i"), col("t"))
       .select(element_at(col("t"), col("i")).as("w1"),
@@ -1079,11 +1006,11 @@ object TextAnalysis {
     * vocabulary, and the token-mass share of the top-10 terms — the
     * vocabulary-health companion to [[textZipfSlope]] (a natural corpus
     * runs ~40-60% hapax; near 0% signals template/generated text).
-    * One aggregate over the persisted [[tokenTf]] index; the top-10
+    * One aggregate over the persisted [[TokenHash.tokenTf]] index; the top-10
     * mass reads a TakeOrdered ≤ 10-row panel (never a rank window over
     * the unbounded vocabulary grain). */
   def textHapaxStats(spark: SparkSession, dir: String): DataFrame = {
-    val totals = tokenTf(spark, dir).groupBy(col("tok"))
+    val totals = TokenHash.tokenTf(spark, dir).groupBy(col("tok"))
       .agg(sum(col("tf")).cast("long").as("freq"))
     val top10 = totals.orderBy(col("freq").desc, col("tok")).limit(10)
       .agg(coalesce(sum(col("freq")), lit(0L)).cast("long")
@@ -1112,20 +1039,20 @@ object TextAnalysis {
     * into byte-level tokens and blow up sequence length).
     *
     * Scale shape: vocabulary = one aggregate over the persisted
-    * [[tokenTf]] index + a global top-N PANEL (TakeOrdered, tiny,
+    * [[TokenHash.tokenTf]] index + a global top-N PANEL (TakeOrdered, tiny,
     * broadcasts — never a rank window over the unbounded vocabulary
     * grain); the per-doc pass is a broadcast anti-join of the SAME
     * index — the corpus text is never re-tokenized. */
   def textOovRate(spark: SparkSession, dir: String,
       vocabSize: Int = 256): DataFrame = {
-    val tf = tokenTf(spark, dir)
+    val tf = TokenHash.tokenTf(spark, dir)
     val vocab = tf.groupBy(col("tok"))
       .agg(sum(col("tf")).cast("long").as("freq"))
       .orderBy(col("freq").desc, col("tok")).limit(vocabSize)
       .select(col("tok"))
     val oov = tf.join(broadcast(vocab), Seq("tok"), "left_anti")
       .groupBy(col("doc_id")).agg(sum(col("tf")).cast("long").as("n_oov"))
-    docLengths(spark, dir)
+    TokenHash.docLengths(spark, dir)
       .join(oov, Seq("doc_id"), "left_outer")
       .select(col("doc_id"), col("dl").cast("long").as("n_tokens"),
         coalesce(col("n_oov"), lit(0L)).as("n_oov"),
@@ -1172,8 +1099,8 @@ object TextAnalysis {
   def textRareSpan(spark: SparkSession, dir: String,
       span: Int = 20): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val grams = spreadDocs(spark, dir, "text")
-      .select(col("doc_id"), Dedup.tokens(col("text")).as("t"))
+    val grams = TokenHash.spreadDocs(spark, dir, "text")
+      .select(col("doc_id"), TokenHash.tokens(col("text")).as("t"))
       .filter(size(col("t")) >= 2)
       .select(col("doc_id"),
         explode(sequence(lit(1), size(col("t")) - 1)).as("i"), col("t"))
@@ -1199,43 +1126,6 @@ object TextAnalysis {
       .orderBy(col("doc_id"))
   }
 
-  /** Pseudo-relevance-feedback query expansion (RM1/Rocchio shape): take
-    * the query's terms (here: document `queryDoc`'s vocabulary), rank
-    * the corpus by coordination-level match (how many query terms a doc
-    * contains, then their total tf — INTEGER scores, so the feedback
-    * set is exact cross-engine, unlike a float-sum ranking where a
-    * last-ulp flip would cascade into a different expansion set), keep
-    * the top `fb` feedback docs, and emit the top `k` non-query terms
-    * by (feedback-doc frequency, total tf) — the terms a retrieval
-    * stack appends to the query on the second pass.
-    *
-    * Scale shape: every stage is a probe of the persisted [[tokenTf]]
-    * index — the query-term set broadcasts (bounded by one doc's
-    * vocabulary), candidate scoring is one map-side-combined aggregate
-    * over the semi-joined postings, both top-k selections are
-    * TakeOrdered. Corpus postings never shuffle. */
-  def retrievalPrfExpansion(spark: SparkSession, dir: String,
-      queryDoc: Long = 0L, fb: Int = 10, k: Int = 10): DataFrame = {
-    val tf = tokenTf(spark, dir)
-    val qTerms = tf.filter(col("doc_id") === queryDoc)
-      .select(col("tok")).distinct()
-    // feedback docs: coordination-level match over the query terms
-    val fbDocs = tf
-      .join(broadcast(qTerms), Seq("tok"), "left_semi")
-      .filter(col("doc_id") =!= queryDoc)
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_terms"), sum(col("tf")).as("q_tf"))
-      .orderBy(col("n_terms").desc, col("q_tf").desc, col("doc_id"))
-      .limit(fb)
-    // expansion terms: frequency across the feedback set, query terms out
-    tf.join(broadcast(fbDocs.select(col("doc_id"))), Seq("doc_id"), "left_semi")
-      .join(broadcast(qTerms), Seq("tok"), "left_anti")
-      .groupBy(col("tok"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("tf")).as("total_tf"))
-      .orderBy(col("n_docs").desc, col("total_tf").desc, col("tok"))
-      .limit(k)
-  }
-
   /** Kneser–Ney smoothed bigram language model — THE classic LM
     * smoothing (the one n-gram toolkits default to): for every bigram
     * with count ≥ `minCount`,
@@ -1256,7 +1146,7 @@ object TextAnalysis {
   def textKneserNey(spark: SparkSession, dir: String,
       discount: Double = 0.75, minCount: Long = 5L): DataFrame = {
     val grams = table(spark, dir, "documents")
-      .select(Dedup.tokens(col("text")).as("t"))
+      .select(TokenHash.tokens(col("text")).as("t"))
       .filter(size(col("t")) >= 2)
       .select(explode(sequence(lit(1), size(col("t")) - 1)).as("i"), col("t"))
       .select(element_at(col("t"), col("i")).as("w1"),
@@ -1297,18 +1187,18 @@ object TextAnalysis {
     * [[unigramLogprob]]).
     *
     * Scale shape: the bucket distributions are two ≤`buckets`-row
-    * map-side-combined aggregates over the persisted [[tokenTf]] index,
-    * broadcast back onto it; the per-doc reduce is one doc-key
-    * aggregate. Nothing corpus-sized shuffles except that one
-    * doc-keyed combine. */
+    * map-side-combined aggregates over the persisted [[TokenHash.tokenTf]]
+    * index, broadcast back onto it; the per-doc reduce is one doc-key
+    * aggregate. Nothing corpus-sized shuffles except that one doc-keyed
+    * combine. */
   def corpusDsirWeights(spark: SparkSession, dir: String,
       targetLang: String = "en", buckets: Int = 64): DataFrame = {
     val docs = table(spark, dir, "documents")
       .select(col("doc_id"), col("lang"))
-    val tb = tokenTf(spark, dir)
+    val tb = TokenHash.tokenTf(spark, dir)
       .join(docs, Seq("doc_id"))
       .select(col("doc_id"), col("lang"),
-        pmod(Dedup.hash60(col("tok")), lit(buckets.toLong)).as("bucket"),
+        pmod(TokenHash.hash60(col("tok")), lit(buckets.toLong)).as("bucket"),
         col("tf"))
     val source = tb.groupBy(col("bucket"))
       .agg(sum(col("tf")).as("cs"))
@@ -1335,7 +1225,7 @@ object TextAnalysis {
 
   /** Content-defined chunking (Rabin-style): a chunk boundary falls
     * AFTER token i wherever the rolling 4-gram hash ending at i lands
-    * in a 1/32 bucket ([[Dedup.hash60]] % 32 = 0), plus a forced final
+    * in a 1/32 bucket ([[TokenHash.hash60]] % 32 = 0), plus a forced final
     * boundary at the document end — the dedup-friendly splitter
     * (backup dedup, RAG chunk stores, CAS blob stores) whose defining
     * property fixed-size chunking lacks: an edit near the front moves
@@ -1357,9 +1247,9 @@ object TextAnalysis {
          |  CAST(conv(substring(md5(concat_ws(' ', slice(t, i - 3, 4))),
          |    1, 15), 16, 10) AS BIGINT) % $modulus = 0))""".stripMargin
     graft.schema.Schemas.spread(spark, dir, "documents",
-        Dedup.withPlantedNearDups(table(spark, dir, "documents"))
+        TokenHash.withPlantedNearDups(table(spark, dir, "documents"))
           .select(col("doc_id"), col("text")), col("doc_id"))
-      .select(col("doc_id"), Dedup.tokens(col("text")).as("t"))
+      .select(col("doc_id"), TokenHash.tokens(col("text")).as("t"))
       .filter(size(col("t")) >= 1)
       .withColumn("ends", expr(endsExpr))
       .withColumn("starts", expr(
@@ -1372,7 +1262,7 @@ object TextAnalysis {
       .select(col("doc_id"), col("chunk_idx"),
         col("c.s").as("start_tok"),
         (col("c.e") - col("c.s") + 1).as("n_toks"),
-        Dedup.hash60(expr("concat_ws(' ', slice(t, c.s, c.e - c.s + 1))"))
+        TokenHash.hash60(expr("concat_ws(' ', slice(t, c.s, c.e - c.s + 1))"))
           .as("chunk_hash"))
       .orderBy(col("doc_id"), col("chunk_idx"))
   }
@@ -1380,7 +1270,7 @@ object TextAnalysis {
   /** Green-list watermark detection (the Kirchenbauer-et-al. scheme's
     * detector side): a token is "green" iff a hash SEEDED BY ITS
     * PREDECESSOR lands in the γ = 1/4 green partition of the
-    * vocabulary — here the [[Dedup.hash60]] of the bigram "prev cur"
+    * vocabulary — here the [[TokenHash.hash60]] of the bigram "prev cur"
     * mod 4 — and a document whose green fraction sits far above γ
     * carries the watermark. Emits per doc the scored-token count, the
     * green count, the green fraction, and the one-proportion z score
@@ -1404,10 +1294,10 @@ object TextAnalysis {
     // map-only by pinned contract (DriverRound13Spec): no exchange, the
     // green test runs inside the projection — the right 100 TB shape
     table(spark, dir, "documents")
-      .select(col("doc_id"), Dedup.tokens(col("text")).as("t"))
+      .select(col("doc_id"), TokenHash.tokens(col("text")).as("t"))
       .filter(size(col("t")) >= 2)
       .select(col("doc_id"),
-        Dedup.shinglesFromTokens(col("t"), 2).as("bg"))
+        TokenHash.shinglesFromTokens(col("t"), 2).as("bg"))
       .select(col("doc_id"),
         size(col("bg")).cast("long").as("n_scored"),
         expr(greenCount).cast("long").as("n_green"))
@@ -1421,185 +1311,6 @@ object TextAnalysis {
   }
 
   // ---- n-gram generation-eval metrics (BLEU / ROUGE-N) -------------------
-
-  /** Clipped n-gram overlap grain shared by [[evalRougeN]] and
-    * [[evalBleu]]: adjacent documents form (candidate = even doc_id,
-    * reference = odd doc_id = candidate + 1) pairs, and for each pair
-    * and each n in 1..maxN the CLIPPED overlap is
-    * Σ_g min(count_cand(g), count_ref(g)) — the multiset-intersection
-    * statistic BLEU's modified precision (Papineni et al. 2002) and
-    * ROUGE-N (Lin 2004) both reduce to; clipping is what stops a
-    * candidate from farming credit by repeating one reference gram.
-    *
-    * Scale shape: ONE corpus scan — per-doc gram explosion (fanout
-    * bounded by doc length × maxN, a data constant, no joins), one
-    * shuffle on the (pair, n, gram) key with map-side combine (the
-    * per-gram min collapses to two partial sums), then a tiny second
-    * aggregate on (pair, n). Pairing by key instead of self-joining
-    * texts means the two sides are never materialized together — at
-    * 100 TB of (generation, reference) rows this is the only shape
-    * that works: eval sets shuffle gram-grain rows, never documents.
-    * All-integer counts until the caller's final float casts. */
-  private def pairNgramOverlap(spark: SparkSession, dir: String,
-      maxN: Int, pairs: Int): DataFrame =
-    spreadDocs(spark, dir, "text")
-      .filter(col("doc_id") < lit(2L * pairs))
-      .select(expr("doc_id DIV 2").as("pair_id"),
-        (col("doc_id") % 2 === 0).as("is_cand"),
-        Dedup.tokens(col("text")).as("t"))
-      .select(col("pair_id"), col("is_cand"),
-        explode(array((1 to maxN).map(n =>
-          struct(lit(n).as("n"),
-            Dedup.shinglesFromTokens(col("t"), n).as("gs"))): _*)).as("x"))
-      .select(col("pair_id"), col("is_cand"), col("x.n").as("n"),
-        explode(col("x.gs")).as("gram"))
-      .groupBy(col("pair_id"), col("n"), col("gram"))
-      .agg(sum(when(col("is_cand"), 1L).otherwise(0L)).as("c"),
-        sum(when(col("is_cand"), 0L).otherwise(1L)).as("r"))
-      .groupBy(col("pair_id"), col("n"))
-      .agg(sum(least(col("c"), col("r"))).as("overlap"),
-        sum(col("c")).as("cand_ngrams"),
-        sum(col("r")).as("ref_ngrams"))
-
-  /** ROUGE-N over adjacent-document (candidate, reference) pairs: per
-    * (pair, n ∈ 1..maxN) the clipped-overlap precision, recall, and F1.
-    * ROUGE-1 F1 doubles as the SQuAD-style token-overlap F1. Ratios are
-    * computed in fixed-parenthesization double arithmetic off the exact
-    * integer grain and cast to float once at the end (the bm25
-    * discipline — the single narrowing cast absorbs any cross-engine
-    * ulp). A side with zero grams at some n yields 0.0 scores, not a
-    * division error; a pair where BOTH sides lack grams at n emits no
-    * row at that n (nothing was measured — the oracle's grain degrades
-    * identically). */
-  def evalRougeN(spark: SparkSession, dir: String, maxN: Int = 2,
-      pairs: Int = 200): DataFrame = {
-    val p = when(col("cand_ngrams") > 0,
-      col("overlap").cast("double") / col("cand_ngrams").cast("double"))
-      .otherwise(lit(0.0))
-    val r = when(col("ref_ngrams") > 0,
-      col("overlap").cast("double") / col("ref_ngrams").cast("double"))
-      .otherwise(lit(0.0))
-    pairNgramOverlap(spark, dir, maxN, pairs)
-      .select(col("pair_id"), col("n"), col("overlap"),
-        col("cand_ngrams"), col("ref_ngrams"),
-        p.cast("float").as("prec"), r.cast("float").as("rec"),
-        when(p + r > 0, lit(2.0) * p * r / (p + r))
-          .otherwise(lit(0.0)).cast("float").as("f1"))
-      .orderBy(col("pair_id"), col("n"))
-  }
-
-  /** BLEU-2 over the same adjacent-document pairs: modified (clipped)
-    * unigram and bigram precisions, the brevity penalty
-    * bp = min(1, e^(1 − ref_len/cand_len)), and
-    * bleu = bp · exp((ln p₁ + ln p₂)/2). Any zero clipped count sends
-    * the geometric mean — and BLEU — to exactly 0.0 (the standard
-    * uncomfortable smoothing-free definition), guarded so neither
-    * engine ever evaluates ln(0). The integer evidence columns
-    * (lengths, clips) ride along so the float scores are auditable;
-    * transcendentals are confined to the final float-cast columns. */
-  def evalBleu(spark: SparkSession, dir: String,
-      pairs: Int = 200): DataFrame = {
-    val o = pairNgramOverlap(spark, dir, 2, pairs)
-      .groupBy(col("pair_id"))
-      .agg(
-        coalesce(sum(when(col("n") === 1, col("overlap"))), lit(0L))
-          .as("clip1"),
-        coalesce(sum(when(col("n") === 1, col("cand_ngrams"))), lit(0L))
-          .as("cand_len"),
-        coalesce(sum(when(col("n") === 1, col("ref_ngrams"))), lit(0L))
-          .as("ref_len"),
-        coalesce(sum(when(col("n") === 2, col("overlap"))), lit(0L))
-          .as("clip2"),
-        coalesce(sum(when(col("n") === 2, col("cand_ngrams"))), lit(0L))
-          .as("cand_bigrams"))
-    val bp = when(col("cand_len") === 0, lit(0.0))
-      .when(col("cand_len") >= col("ref_len"), lit(1.0))
-      .otherwise(exp(lit(1.0) -
-        col("ref_len").cast("double") / col("cand_len").cast("double")))
-    val bleu = when(col("clip1") > 0 && col("clip2") > 0,
-      bp * exp((
-        log(col("clip1").cast("double") / col("cand_len").cast("double")) +
-        log(col("clip2").cast("double") / col("cand_bigrams").cast("double"))
-      ) / lit(2.0)))
-      .otherwise(lit(0.0))
-    o.select(col("pair_id"), col("cand_len"), col("ref_len"),
-        col("clip1"), col("clip2"), col("cand_bigrams"),
-        bp.cast("float").as("bp"), bleu.cast("float").as("bleu"))
-      .orderBy(col("pair_id"))
-  }
-
-  /** chrF2 (Popović 2015) over the same adjacent-document pairs: the
-    * CHARACTER n-gram F-score, n = 1..3 on whitespace-stripped
-    * normalized text — the eval surface that stays meaningful where
-    * word-level BLEU/ROUGE break down (morphology-rich languages, CJK
-    * text with no whitespace segmentation, near-miss spellings).
-    * chrP/chrR are the arithmetic means of the per-order clipped
-    * precisions/recalls (an order with no candidate — resp. reference —
-    * grams contributes 0, sacreBLEU's convention), and
-    * chrF2 = 5·P·R / (4·P + R) (β = 2: recall weighted double).
-    *
-    * Scale shape: identical to [[pairNgramOverlap]] but on the char
-    * grain — per-doc fanout is 3 × chars (a data constant), one
-    * map-side-combined shuffle on (pair, n, gram), a tiny per-pair
-    * pivot after. The 9 integer evidence columns ride beside the three
-    * float scores, so every score replays from its own row. */
-  def evalChrf(spark: SparkSession, dir: String,
-      pairs: Int = 200): DataFrame = {
-    val maxN = 3
-    val grams = spreadDocs(spark, dir, "text")
-      .filter(col("doc_id") < lit(2L * pairs))
-      .select(expr("doc_id DIV 2").as("pair_id"),
-        (col("doc_id") % 2 === 0).as("is_cand"),
-        call_function("replace", Dedup.normText(col("text")),
-          lit(" "), lit("")).as("s"))
-      .select(col("pair_id"), col("is_cand"),
-        explode(array((1 to maxN).map { n =>
-          struct(lit(n).as("n"),
-            when(length(col("s")) >= n,
-              expr(s"transform(sequence(1, length(s) - ${n - 1}), " +
-                s"i -> substring(s, i, $n))"))
-              .otherwise(array().cast("array<string>")).as("gs"))
-        }: _*)).as("x"))
-      .select(col("pair_id"), col("is_cand"), col("x.n").as("n"),
-        explode(col("x.gs")).as("gram"))
-    val byN = grams
-      .groupBy(col("pair_id"), col("n"), col("gram"))
-      .agg(sum(when(col("is_cand"), 1L).otherwise(0L)).as("c"),
-        sum(when(col("is_cand"), 0L).otherwise(1L)).as("r"))
-      .groupBy(col("pair_id"), col("n"))
-      .agg(sum(least(col("c"), col("r"))).as("overlap"),
-        sum(col("c")).as("cand_ngrams"),
-        sum(col("r")).as("ref_ngrams"))
-    def cell(n: Int, c: Column): Column =
-      coalesce(sum(when(col("n") === n, c)), lit(0L))
-    val piv = byN.groupBy(col("pair_id"))
-      .agg(cell(1, col("overlap")).as("clip1"),
-        cell(1, col("cand_ngrams")).as("cand1"),
-        cell(1, col("ref_ngrams")).as("ref1"),
-        cell(2, col("overlap")).as("clip2"),
-        cell(2, col("cand_ngrams")).as("cand2"),
-        cell(2, col("ref_ngrams")).as("ref2"),
-        cell(3, col("overlap")).as("clip3"),
-        cell(3, col("cand_ngrams")).as("cand3"),
-        cell(3, col("ref_ngrams")).as("ref3"))
-    def ratio(num: String, den: String): Column =
-      when(col(den) > 0,
-        col(num).cast("double") / col(den).cast("double"))
-        .otherwise(lit(0.0))
-    val p = (ratio("clip1", "cand1") + ratio("clip2", "cand2") +
-      ratio("clip3", "cand3")) / lit(3.0)
-    val r = (ratio("clip1", "ref1") + ratio("clip2", "ref2") +
-      ratio("clip3", "ref3")) / lit(3.0)
-    piv.select(col("pair_id"),
-        col("clip1"), col("cand1"), col("ref1"),
-        col("clip2"), col("cand2"), col("ref2"),
-        col("clip3"), col("cand3"), col("ref3"),
-        p.cast("float").as("chr_p"), r.cast("float").as("chr_r"),
-        when(lit(4.0) * p + r > 0,
-          lit(5.0) * p * r / (lit(4.0) * p + r))
-          .otherwise(lit(0.0)).cast("float").as("chrf2"))
-      .orderBy(col("pair_id"))
-  }
 
   /** Corpus entropy RATE: the conditional bigram entropy H(X₂|X₁) =
     * −Σ_ab p(ab)·ln p(b|a) next to the unigram entropy H(X) — their
@@ -1616,7 +1327,7 @@ object TextAnalysis {
     * combine; the prefix join runs at the collapsed (a, b) grain. */
   def textBigramEntropyRate(spark: SparkSession, dir: String): DataFrame = {
     val toks = table(spark, dir, "documents")
-      .select(Dedup.tokens(col("text")).as("t"))
+      .select(TokenHash.tokens(col("text")).as("t"))
     val bi = toks.filter(size(col("t")) >= 2)
       .select(col("t"),
         explode(sequence(lit(1), size(col("t")) - 1)).as("i"))
@@ -1664,7 +1375,7 @@ object TextAnalysis {
     * combine. At 100 TB the trained gram table is the persisted model
     * — training is one corpus pass, scoring joins against it. */
   def textLangidChargram(spark: SparkSession, dir: String): DataFrame = {
-    val stripped = call_function("replace", Dedup.normText(col("text")),
+    val stripped = call_function("replace", TokenHash.normText(col("text")),
       lit(" "), lit(""))
     def grams(c: Column): Column =
       when(length(c) >= 3,
@@ -1722,7 +1433,7 @@ object TextAnalysis {
       spanLen: Int = 3, tokensPerSpan: Int = 20): DataFrame = {
     val d = table(spark, dir, "documents")
       .select(col("doc_id"),
-        size(Dedup.tokens(col("text"))).cast("long").as("t"))
+        size(TokenHash.tokens(col("text"))).cast("long").as("t"))
       .withColumn("n_spans", expr(s"t DIV $tokensPerSpan"))
       .filter(col("n_spans") >= 1)
       .withColumn("seg", expr("t DIV n_spans"))
@@ -1731,7 +1442,7 @@ object TextAnalysis {
         explode(sequence(lit(0L), col("n_spans") - 1)).as("span_idx"))
       .withColumn("start",
         col("span_idx") * col("seg") + 1 +
-          Dedup.hash60(concat(col("doc_id").cast("string"), lit(":mask:"),
+          TokenHash.hash60(concat(col("doc_id").cast("string"), lit(":mask:"),
             col("span_idx").cast("string")))
             % (col("seg") - lit(spanLen.toLong) + 1))
       .select(col("doc_id"), col("n_tokens"), col("n_spans"),
@@ -1742,4 +1453,738 @@ object TextAnalysis {
           .as("masked_frac"))
       .orderBy(col("doc_id"), col("span_idx"))
   }
+
+  /** Jensen-Shannon divergence between each source's token distribution
+    * and the corpus-wide distribution — the bounded, symmetric "which
+    * source drifted" monitor for text (KL explodes on unseen tokens;
+    * JS never does). Distributions share the persisted token index;
+    * output is one row per source, ordered.
+    *
+    * Scale shape: per-source and corpus token totals are map-side
+    * combined over the index; the JS fold joins them ON TOKEN (uniform
+    * key) and rolls up per source. */
+  def textJsDivergence(spark: SparkSession, dir: String): DataFrame = {
+    val tf = TokenHash.tokenTf(spark, dir)
+    val docs = table(spark, dir, "documents")
+      .select(col("doc_id"), col("source"))
+    val bySrc = tf.join(docs, Seq("doc_id"))
+      .groupBy(col("source"), col("tok"))
+      .agg(sum(col("tf")).as("c"))
+    val srcTot = bySrc.groupBy(col("source")).agg(sum(col("c")).as("ct"))
+    val corpus = bySrc.groupBy(col("tok")).agg(sum(col("c")).as("g"))
+    val gTot = corpus.agg(sum(col("g")).as("gt"))
+    val joined = bySrc
+      .join(srcTot, Seq("source"))
+      .join(corpus, Seq("tok"))
+      .crossJoin(broadcast(gTot))
+      .select(col("source"),
+        (col("c").cast("double") / col("ct").cast("double")).as("p"),
+        (col("g").cast("double") / col("gt").cast("double")).as("q"))
+    // JS(p||q) = H(m) − (H(p)+H(q))/2 over the tokens present in p;
+    // absent-in-p tokens contribute only to the q half, folded via the
+    // per-source coverage term: compute with the pointwise form
+    // 0.5·Σ p·ln(2p/(p+q)) + 0.5·Σ q·ln(2q/(p+q)) restricted to the
+    // source's support plus the q-mass outside it (ln 2 weighted).
+    val inSupport = joined.groupBy(col("source"))
+      .agg(
+        sum(lit(0.5) * col("p")
+          * log(lit(2.0) * col("p") / (col("p") + col("q")))).as("pterm"),
+        sum(lit(0.5) * col("q")
+          * log(lit(2.0) * col("q") / (col("p") + col("q")))).as("qterm"),
+        sum(col("q")).as("qcov"))
+    inSupport
+      .select(col("source"),
+        (col("pterm") + col("qterm")
+          + lit(0.5) * (lit(1.0) - col("qcov")) * log(lit(2.0)))
+          .cast("float").as("js_divergence"))
+      .orderBy(col("source"))
+  }
+
+  // ---- rolling regression ------------------------------------------------
+
+  /** Proportional stratified corpus sample: per language stratum, keep
+    * ceil(10%) of documents selected by md5-hash order — the
+    * language-balance-preserving subsample a corpus-mix pipeline draws
+    * before expensive per-doc processing. Deterministic (hash-ranked,
+    * not random), so lineage is reproducible and the oracle replays it.
+    * Integer ceil — (n + 9) DIV 10 — sidesteps the n·0.1 float trap
+    * (10 · 0.1 rounds to 1.0000000000000002, and ceil flips).
+    *
+    * Scale shape: one rank window per stratum (the stratum key is the
+    * shuffle key) + one broadcast per-stratum count join; no global
+    * sort, no driver pass. */
+  def corpusSampleStratified(spark: SparkSession, dir: String): DataFrame = {
+    val d = table(spark, dir, "documents")
+      .select(col("doc_id"), col("lang"),
+        TokenHash.hash60(col("doc_id").cast("string")).as("h"))
+    val sizes = d.groupBy(col("lang"))
+      .agg(((count(lit(1)) + 9) / 10).cast("long").as("target"))
+    val w = Window.partitionBy(col("lang"))
+      .orderBy(col("h"), col("doc_id"))
+    d.withColumn("rn", row_number().over(w))
+      .join(broadcast(sizes), Seq("lang"))
+      .filter(col("rn") <= col("target"))
+      .select(col("doc_id"), col("lang"))
+      .orderBy(col("doc_id"))
+  }
+
+  // ---- anomaly detection -------------------------------------------------
+
+  /** Language-ID quality audit: confusion counts of detected vs labeled
+    * language over the corpus — the eval loop that decides whether the
+    * n-gram heuristic ([[TextAnalysis.textLangid]]) is good enough to
+    * gate ingestion on. Composes the langid operator unchanged, so the
+    * confusion matrix can never drift from what the filter actually
+    * does.
+    *
+    * Scale shape: whatever langid costs plus one tiny-key aggregate. */
+  def qualityLangConfusion(spark: SparkSession, dir: String): DataFrame =
+    textLangId(spark, dir)
+      .groupBy(col("lang_labeled"), col("lang_detected"))
+      .agg(count(lit(1)).as("n_docs"))
+      .orderBy(col("lang_labeled"), col("lang_detected"))
+
+  def corpusMixWeights(spark: SparkSession, dir: String): DataFrame = {
+    val perLang = table(spark, dir, "documents")
+      .groupBy(col("lang")).agg(count(lit(1)).as("n_docs"))
+    val tot = perLang.agg(sum(col("n_docs")).as("n_total"),
+      count(lit(1)).as("n_langs"))
+    perLang.crossJoin(broadcast(tot))
+      .select(col("lang"), col("n_docs"),
+        (col("n_docs").cast("double") / col("n_total").cast("double"))
+          .as("share"),
+        (col("n_total").cast("double") /
+          (col("n_langs") * col("n_docs")).cast("double")).as("weight"))
+      .orderBy(col("lang"))
+  }
+
+  /** Per-document n-gram novelty: the fraction of a doc's distinct
+    * 3-gram shingles whose FIRST appearance (smallest doc_id) is this
+    * doc — the corpus-level self-overlap measure curation uses to rank
+    * "how much new text does this document add" (near-1 = fresh, near-0
+    * = boilerplate).
+    *
+    * Scale shape: grams are fingerprinted to 60-bit ints BEFORE the
+    * shuffle ([[TokenHash.hash60]]), so the first-seen aggregation and the
+    * join back both key on fixed-width longs, never gram strings — at
+    * 100 TB the gram shuffle is the dominant cost and 8-byte keys vs
+    * ~30-byte strings is ~4× less wire. Both sides are map-side
+    * combined; the gram key is heavy-tailed (stop-grams), which the
+    * first-seen MIN aggregate absorbs (AQE skew split handles the
+    * join-back). Collisions in the 2^60 fingerprint space are
+    * vanishingly rare and — because the oracle replays the same md5
+    * fingerprints — cross-engine deterministic.
+    *
+    * The per-doc distinct gram-hash set comes from the codegen'd
+    * [[graft.functions.ShingleHashes]] expression (one md5 pass per
+    * gram, in-row sort+dedupe) — the interpreted transform+md5 HOF
+    * formulation of the same set measured ~5× slower, and a
+    * corpus-wide `.distinct()` after explode would shuffle the raw
+    * (doc, gram) pairs a second time for nothing. */
+  def textNgramNovelty(spark: SparkSession, dir: String): DataFrame = {
+    graft.GraftExtensions.register(spark)
+    val grams = graft.schema.Schemas.spread(spark, dir, "documents",
+        table(spark, dir, "documents").select(col("doc_id"), col("text")),
+        col("doc_id"))
+      .select(col("doc_id"), TokenHash.tokens(col("text")).as("toks"))
+      .select(col("doc_id"),
+        explode(expr("shingle_hashes(toks, 3)")).as("gh"))
+    val firstSeen = grams.groupBy(col("gh"))
+      .agg(min(col("doc_id")).as("first_doc"))
+    grams.join(firstSeen, Seq("gh"))
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_grams"),
+        sum(when(col("first_doc") === col("doc_id"), 1L).otherwise(0L))
+          .as("n_novel"))
+      .select(col("doc_id"), col("n_grams"), col("n_novel"),
+        (col("n_novel").cast("double") / col("n_grams"))
+          .cast("float").as("novelty"))
+      .orderBy(col("doc_id"))
+  }
+
+  /** The curation funnel: every document is assigned its FIRST failing
+    * gate — language, length, alphabetic ratio, exact-dup — or `kept`,
+    * and the output is the per-reason drop accounting (the number every
+    * corpus-curation run reports). Gate order is fixed, so each doc has
+    * exactly one reason and the counts partition the corpus.
+    *
+    * Scale shape: the language/length/alpha gates are map-only
+    * expressions over the scan; the dup gate is the one shuffle
+    * (fingerprint window, same key as [[Dedup.dedupExact]]); the
+    * rollup is a ≤5-row aggregate plus a 1-row total broadcast.
+    * Threshold compares happen on deterministic integer-ratio doubles,
+    * identical both engines. */
+  def corpusQualityGate(spark: SparkSession, dir: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val fpw = Window.partitionBy(col("fingerprint"))
+    val staged = table(spark, dir, "documents")
+      .withColumn("fingerprint", md5(TokenHash.normText(col("text"))))
+      .withColumn("is_canonical",
+        col("doc_id") === min(col("doc_id")).over(fpw))
+      .withColumn("n_ws", size(split(col("text"), " ")))
+      .withColumn("alpha_ratio",
+        length(regexp_replace(col("text"), "[^a-zA-Z]", "")).cast("double")
+          / length(col("text")))
+    val reason = when(col("lang") =!= "en", "non_en")
+      .when(col("n_ws") < 20, "too_short")
+      .when(col("alpha_ratio") < 0.78, "low_alpha")
+      .when(!col("is_canonical"), "exact_dup")
+      .otherwise("kept")
+    val counts = staged.select(reason.as("reason"))
+      .groupBy(col("reason")).agg(count(lit(1)).as("n_docs"))
+    val total = table(spark, dir, "documents").agg(count(lit(1)).as("total"))
+    counts.crossJoin(broadcast(total))
+      .select(col("reason"), col("n_docs"),
+        (col("n_docs").cast("double") / col("total")).cast("float")
+          .as("share"))
+      .orderBy(col("reason"))
+  }
+
+  /** Sliding context-window chunking: split each document's token stream
+    * into overlapping windows of `size` tokens every `stride` tokens —
+    * the RAG-indexing / LLM-pretraining chunker. Emits a deterministic
+    * md5 per chunk (the downstream dedup/index key), not the chunk text,
+    * so the output stays narrow.
+    *
+    * Scale shape: map-only — tokenize, generate the start offsets with
+    * `sequence`, `posexplode`, `slice`; no shuffle anywhere, fanout is
+    * ~n_tokens/stride per doc and bounded by doc length. At 100 TB this
+    * runs at scan speed and partitions inherit the input's. */
+  def chunkSliding(spark: SparkSession, dir: String,
+      size: Int = 32, stride: Int = 16): DataFrame =
+    table(spark, dir, "documents")
+      .select(col("doc_id"), TokenHash.tokens(col("text")).as("toks"))
+      .select(col("doc_id"), col("toks"),
+        posexplode(sequence(lit(1),
+          greatest(org.apache.spark.sql.functions.size(col("toks")), lit(1)),
+          lit(stride))).as(Seq("chunk_idx", "st")))
+      .select(col("doc_id"), col("chunk_idx"),
+        org.apache.spark.sql.functions.size(
+          slice(col("toks"), col("st"), lit(size))).as("n_tok"),
+        md5(concat_ws(" ", slice(col("toks"), col("st"), lit(size))))
+          .as("chunk_hash"))
+      .orderBy(col("doc_id"), col("chunk_idx"))
+
+  /** Curriculum scheduling: order documents by a quality score (token
+    * count here — any exact score plugs in), then cut the ordered corpus
+    * into phases of ~`budgetTokens` tokens each; report per-phase volume
+    * and score range. This is the data-ordering step of curriculum
+    * training.
+    *
+    * Scale shape: the global running sum over a score-DESC ordering is
+    * NOT a single-partition window — it is a [[TwoLevel]] exclusive
+    * prefix, docs bucketed by score range (value-derived,
+    * partitioning-independent). Ties break on doc_id, so the schedule
+    * is total and deterministic. Every intermediate (`n_tok`,
+    * `cum_before`, `phase`) is explicit BIGINT arithmetic — the oracle
+    * side likewise CASTs its window sum and totals to BIGINT so no
+    * HUGEINT/double intermediate exists on either engine. */
+  def curriculumPhases(spark: SparkSession, dir: String,
+      budgetTokens: Long = 2000L): DataFrame = {
+    val docs = graft.schema.Schemas.spread(spark, dir, "documents",
+        table(spark, dir, "documents").select(col("doc_id"), col("text")),
+        col("doc_id"))
+      .select(col("doc_id"),
+        org.apache.spark.sql.functions.size(TokenHash.tokens(col("text")))
+          .cast("long").as("n_tok"))
+    // bucket ascends as score DESCENDS: bucket = -ceil(n_tok/32)
+    TwoLevel.prefix(docs, -(col("n_tok") / lit(32L)).cast("long"),
+        Seq(col("n_tok").desc, col("doc_id")),
+        sums = Seq("n_tok" -> "cum_before"), inclusive = false)
+      .select(col("doc_id"), col("n_tok"),
+        // pure-BIGINT integer division (`div`), never a double: both
+        // operands are non-negative longs, so truncating and flooring
+        // division agree, and no engine-version double→int rounding
+        // rule can touch the phase id
+        expr(s"cum_before div ${budgetTokens}L").as("phase"))
+      .groupBy(col("phase"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("tokens"),
+        min(col("n_tok")).as("min_tok"), max(col("n_tok")).as("max_tok"))
+      .orderBy(col("phase"))
+  }
+
+  /** Temperature-weighted (α = 0.5) multi-group corpus mixing — the
+    * standard LM rebalancing pass: each group's keep rate is
+    * sqrt(n_min/n_group), so the smallest group passes whole (rate 1,
+    * deterministically: its hash threshold clears the full 60-bit
+    * range) and larger groups downsample SUBLINEARLY to an effective
+    * count of sqrt(n_group · n_min) — exactly the α = 0.5 temperature
+    * counts. The keep decision is a per-doc deterministic hash compare,
+    * cross-multiplied so both sides stay in IEEE-exact operations
+    * (double multiply + sqrt are correctly rounded; no pow, whose libm
+    * rounding varies across engines): keep ⇔
+    * hash60(doc) · sqrt(n_group) < 2^60 · sqrt(n_min).
+    *
+    * Scale shape: one map-side-combined count per group, the tiny
+    * (group, n) panel broadcast back, then a map-only filter over the
+    * corpus — no data shuffle at all beyond the count's. Per-group
+    * summary out; the same `kept` predicate inlines into any
+    * downstream corpus scan. */
+  def corpusTemperatureMix(spark: SparkSession, dir: String): DataFrame = {
+    val d = table(spark, dir, "documents")
+      .select(col("doc_id"), col("lang"))
+    val n = d.groupBy(col("lang")).agg(count(lit(1)).as("n_docs"))
+    val nmin = n.agg(min(col("n_docs")).as("n_min"))
+    d.join(broadcast(n), Seq("lang"))
+      .crossJoin(broadcast(nmin))
+      .withColumn("kept",
+        TokenHash.hash60(concat(col("doc_id").cast("string"), lit(":tm")))
+            .cast("double") * sqrt(col("n_docs").cast("double")) <
+          lit(1152921504606846976.0) * sqrt(col("n_min").cast("double")))
+      .groupBy(col("lang"), col("n_docs"))
+      .agg(sum(when(col("kept"), 1L).otherwise(0L)).as("n_kept"))
+      .select(col("lang"), col("n_docs"), col("n_kept"))
+      .orderBy(col("lang"))
+  }
+
+  /** Epoch-repetition materialization — [[corpusTemperatureMix]]'s
+    * UPSAMPLING complement: small sources get repeated toward balance
+    * when the training epoch is assembled. Per source the repetition
+    * factor is f = min(√(n_max/n_src), cap) (α = 0.5 temperature, the
+    * cap stops a tiny source from exploding); each doc is emitted
+    * ⌊f⌋ times plus one more iff its PRF residual clears the
+    * fractional part — so a source's expected copy count is exactly
+    * f·n_src, and WHICH docs get the extra copy is a property of the
+    * doc alone (any engine, any partitioning replays it).
+    *
+    * Exactness: n_max/n_src (one correctly-rounded double divide),
+    * √ (correctly rounded), ⌊·⌋ and the subtraction are exact, and the
+    * extra-copy test is the INTEGER compare
+    * hash60(doc:epoch) < ⌊frac(f)·2⁶⁰⌋ — no pow, no accumulated
+    * rounding, bit-identical cross-engine (the temperature-mix
+    * discipline).
+    *
+    * Scale shape: one map-side-combined count per source, the tiny
+    * (source, n) panel broadcast back, then a MAP-ONLY explode whose
+    * fanout is ≤ cap — no shuffle beyond the count's. At 100 TB the
+    * epoch table is written straight from the map side, and the same
+    * n_copies expression inlines into any downstream pack/split
+    * stage. */
+  def corpusEpochRepeat(spark: SparkSession, dir: String,
+      cap: Double = 4.0): DataFrame = {
+    val d = table(spark, dir, "documents")
+      .select(col("doc_id"), col("source"))
+    val n = d.groupBy(col("source")).agg(count(lit(1)).as("n_src"))
+    val nmax = n.agg(max(col("n_src")).as("n_max"))
+    val factor = least(
+      sqrt(col("n_max").cast("double") / col("n_src").cast("double")),
+      lit(cap))
+    d.join(broadcast(n), Seq("source"))
+      .crossJoin(broadcast(nmax))
+      .withColumn("factor", factor)
+      .withColumn("n_copies",
+        floor(col("factor")).cast("long") +
+          when(TokenHash.hash60(concat(col("doc_id").cast("string"),
+              lit(":epoch"))) <
+            floor((col("factor") - floor(col("factor"))) *
+              lit(1152921504606846976.0)).cast("long"), 1L)
+            .otherwise(0L))
+      .select(col("doc_id"), col("source"), col("n_src"),
+        col("factor").cast("float").as("factor"),
+        explode(sequence(lit(1L), col("n_copies"))).as("copy_idx"))
+      .orderBy(col("doc_id"), col("copy_idx"))
+  }
+
+  /** Exact token-length percentiles per language (p50/p90/p99) — the
+    * context-budget planning numbers beside the log2 bands: how long a
+    * sequence budget each language actually needs. percentile_disc
+    * semantics (the value AT rank ⌈q·n⌉, an integer PICK — never an
+    * interpolated float), rank ties broken by doc_id.
+    *
+    * Scale shape: one per-lang rank window (at corpus scale the
+    * two-level range-partitioned rank, the curriculum_phases note) and
+    * a 3-pick rollup; everything integer. */
+  def corpusLengthPercentiles(spark: SparkSession, dir: String): DataFrame = {
+    val d = table(spark, dir, "documents")
+      .select(col("lang"),
+        size(TokenHash.tokens(col("text"))).cast("long").as("len"),
+        col("doc_id"))
+    val n = d.groupBy(col("lang")).agg(count(lit(1)).as("n_docs"))
+    val ranked = d
+      .withColumn("rk", row_number().over(
+        Window.partitionBy(col("lang")).orderBy(col("len"), col("doc_id"))))
+      .join(broadcast(n), Seq("lang"))
+    def target(q: Int): org.apache.spark.sql.Column =
+      greatest(lit(1L), expr(s"(n_docs * $q + 99) DIV 100"))
+    ranked.groupBy(col("lang"))
+      .agg(first(col("n_docs")).as("n_docs"),
+        max(when(col("rk") === target(50), col("len"))).as("p50_tokens"),
+        max(when(col("rk") === target(90), col("len"))).as("p90_tokens"),
+        max(when(col("rk") === target(99), col("len"))).as("p99_tokens"),
+        max(col("len")).as("max_tokens"))
+      .orderBy(col("lang"))
+  }
+
+  /** Source-mix entropy per language: the Shannon entropy of each
+    * language's source distribution and its exponential — the
+    * EFFECTIVE number of sources (5 equal sources → 5.0; one dominant
+    * source → just above 1.0) — the one-number mix-diversity gauge a
+    * curation dashboard tracks per language release over release.
+    * Counts are BIGINTs; the Σ −p·ln p fold runs in double with the
+    * REAL cast absorbing group-order ulps (the agg_entropy_by_key
+    * rule).
+    *
+    * Scale shape: one (lang, source) map-side-combined count, one
+    * per-lang rollup — both shuffles share the lang prefix. */
+  def corpusMixEntropy(spark: SparkSession, dir: String): DataFrame = {
+    val c = table(spark, dir, "documents")
+      .groupBy(col("lang"), col("source"))
+      .agg(count(lit(1)).as("n"))
+    val tot = c.groupBy(col("lang"))
+      .agg(sum(col("n")).as("n_docs"), count(lit(1)).as("n_sources"))
+    c.join(tot, Seq("lang"))
+      .select(col("lang"), col("n_docs"), col("n_sources"),
+        (col("n").cast("double") / col("n_docs").cast("double")).as("p"))
+      .groupBy(col("lang"))
+      .agg(first(col("n_docs")).as("n_docs"),
+        first(col("n_sources")).as("n_sources"),
+        sum(negate(col("p") * log(col("p")))).as("h"))
+      .select(col("lang"), col("n_docs"), col("n_sources"),
+        col("h").cast("float").as("source_entropy"),
+        exp(col("h")).cast("float").as("effective_sources"))
+      .orderBy(col("lang"))
+  }
+
+  /** Pairwise source vocabulary overlap — the "how redundant are my
+    * sources" curation signal (two crawls with Jaccard ≈ 1 vocabularies
+    * are the same corpus twice; a mix budget should know). For every
+    * unordered source pair: distinct-token counts, the shared-token
+    * count, and the Jaccard ratio.
+    *
+    * Scale shape: the ONLY corpus-scale pass is one (token)-grain
+    * aggregate that ORs each token's source-membership BITMASK
+    * (bit_or map-side combines); every pair statistic then reads off
+    * the ≤ 2^|sources| mask histogram crossed with the tiny pair panel
+    * — pair count never touches the data again, so 10 pairs or 10 000
+    * cost the same single shuffle. Sources are capped at 16 mask bits
+    * (alphabetical), the mix-budget grain in practice.
+    *
+    * Exactness: BIGINT counts, ONE double division per pair. */
+  def corpusSourceOverlap(spark: SparkSession, dir: String,
+      maxSources: Int = 16): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    // tokenize+explode ONCE (spread across cores — the single-file scan
+    // gate, [[graft.schema.Schemas.spread]]); the source panel reads the
+    // RAW table — which is exactly what the DuckDB oracle does (its `si`
+    // CTE is `SELECT DISTINCT source FROM documents`), so the idx
+    // assignment agrees even for a source whose only docs have NULL
+    // text: both engines keep it in the panel (consuming an idx bit)
+    // while dropping its rows from the token stream (tokens(NULL) is
+    // NULL and explode emits nothing; DuckDB's unnest(string_split(
+    // NULL)) likewise)
+    val d = graft.schema.Schemas.spread(spark, dir, "documents",
+        table(spark, dir, "documents").select(col("doc_id"), col("source"),
+          col("text")), col("doc_id"))
+      .select(col("source"), explode(TokenHash.tokens(col("text"))).as("tok"))
+    val srcIdx = table(spark, dir, "documents")
+      .select(col("source")).distinct()
+      .withColumn("idx",
+        (row_number().over(Window.orderBy(col("source"))) - 1).cast("int"))
+      .filter(col("idx") < maxSources)
+    val masks = d.join(broadcast(srcIdx), Seq("source"))
+      .groupBy(col("tok"))
+      .agg(bit_or(expr("shiftleft(1L, idx)")).as("mask"))
+      .groupBy(col("mask")).agg(count(lit(1)).as("cnt"))
+    val pairs = srcIdx.select(col("source").as("source_a"),
+        col("idx").as("ia"))
+      .crossJoin(srcIdx.select(col("source").as("source_b"),
+        col("idx").as("ib")))
+      .filter(col("source_a") < col("source_b"))
+    val inA = expr("(shiftright(mask, ia) & 1L) = 1L")
+    val inB = expr("(shiftright(mask, ib) & 1L) = 1L")
+    val stats = masks.crossJoin(broadcast(pairs))
+      .groupBy(col("source_a"), col("source_b"))
+      .agg(
+        sum(when(inA, col("cnt")).otherwise(0L)).as("n_a"),
+        sum(when(inB, col("cnt")).otherwise(0L)).as("n_b"),
+        sum(when(inA && inB, col("cnt")).otherwise(0L)).as("n_common"))
+    stats.select(col("source_a"), col("source_b"),
+        col("n_a"), col("n_b"), col("n_common"),
+        (col("n_common").cast("double") /
+          (col("n_a") + col("n_b") - col("n_common")).cast("double"))
+          .cast("float").as("jaccard"))
+      .orderBy(col("source_a"), col("source_b"))
+  }
+
+  def corpusCcnetBuckets(spark: SparkSession, dir: String): DataFrame = {
+    val tf = TokenHash.tokenTf(spark, dir)
+    val vocab = tf.groupBy(col("tok")).agg(sum(col("tf")).as("cnt"))
+    val scored = tf.join(vocab, Seq("tok"))
+      .groupBy(col("doc_id"))
+      .agg(sum(col("tf")).as("n_tokens"),
+        sum(col("tf") * col("cnt")).as("s_freq"))
+      .withColumn("familiarity",
+        (col("s_freq").cast("double") / col("n_tokens").cast("double"))
+          .cast("float"))
+    table(spark, dir, "documents").select(col("doc_id"), col("lang"))
+      .join(scored, Seq("doc_id"))
+      .withColumn("bucket",
+        ntile(3).over(Window.partitionBy(col("lang"))
+          .orderBy(col("familiarity").desc, col("doc_id"))))
+      .select(col("doc_id"), col("lang"), col("n_tokens"), col("s_freq"),
+        col("familiarity"), col("bucket"))
+      .orderBy(col("doc_id"))
+  }
+
+  /** DSIR importance weights (Xie et al. 2023, arXiv:2302.03169): score
+    * every document by the log-likelihood ratio of a TARGET unigram
+    * model (here the lang='en' slice — the "high-quality domain") over
+    * the RAW corpus model, both over hashed token features (hash60 mod
+    * `buckets`, add-1 smoothed) — the published cheap proxy for "how
+    * target-like is this document", used to importance-resample raw
+    * corpora toward a quality domain. Output per doc: feature count and
+    * the log weight (float epilogue over double log arithmetic, the
+    * [[textBigramLogprob]] exactness precedent).
+    *
+    * REASSOCIATION BOUND (ADVICE r18): the per-doc groupBy sums double
+    * log terms in nondeterministic order; each |term| ≤ ln(corpus) ≈ 40,
+    * so a t-token doc's sum reassociates within ~t·40·2⁻⁵² ≈ t·9e-15
+    * absolute. The float cast absorbs that while the sum's unit-last-place
+    * exceeds it — |sum| ≥ t·9e-15 / 2⁻²⁴ ⇒ safe whenever the mean
+    * per-token |LLR| exceeds t·1.5e-7, i.e. up to ~million-token docs at
+    * this corpus's observed per-token LLR ~0.1–3. The driver corpus tops
+    * out near 10³ tokens/doc — five orders inside the bound (x10-swept
+    * exact); a corpus of book-length docs with near-zero mean LLR is
+    * where a wider epilogue (or a doc-keyed sorted sum) would be due.
+    *
+    * Scale shape: the token stream is computed once; both per-bucket
+    * counts (target hits, all hits) attach as ONE window pass
+    * partitioned by bucket — no join of the stream against its own
+    * aggregation — then one groupBy(doc) closes the score. The two
+    * model normalizers are a 1-row broadcast. Corpus shuffles exactly
+    * twice (bucket, then doc), independent of vocabulary size. */
+  def textDsirImportance(spark: SparkSession, dir: String,
+      buckets: Int = 4096, targetLang: String = "en"): DataFrame = {
+    val toks = table(spark, dir, "documents")
+      .select(col("doc_id"), col("lang"),
+        explode(TokenHash.tokens(col("text"))).as("tok"))
+      .select(col("doc_id"), col("lang"),
+        pmod(TokenHash.hash60(col("tok")), lit(buckets.toLong)).as("bucket"))
+    val norms = toks.agg(
+      sum(when(col("lang") === targetLang, 1L).otherwise(0L)).as("ct"),
+      count(lit(1)).as("cr"))
+    val w = Window.partitionBy(col("bucket"))
+    toks
+      .withColumn("n_tgt",
+        sum(when(col("lang") === targetLang, 1L).otherwise(0L)).over(w))
+      .withColumn("n_all", count(lit(1)).over(w))
+      .crossJoin(broadcast(norms))
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_tokens"),
+        sum(log((col("n_tgt").cast("double") + lit(1.0))
+            / (col("ct").cast("double") + lit(buckets.toDouble)))
+          - log((col("n_all").cast("double") + lit(1.0))
+            / (col("cr").cast("double") + lit(buckets.toDouble))))
+          .cast("float").as("log_weight"))
+      .orderBy(col("doc_id"))
+  }
+
+  /** Feature hashing (the "hashing trick"): tokens bucketed into a fixed
+    * 256-dim index space by the oracle-replayable md5 hash — the
+    * vocabulary-free featurizer for training pipelines (no dictionary
+    * build, no OOV, map-side only until the final count). */
+  def textFeatureHashing(spark: SparkSession, dir: String,
+      dim: Int = 256): DataFrame =
+    table(spark, dir, "documents")
+      .filter(col("doc_id") < 100)
+      .select(col("doc_id"), explode(TokenHash.tokens(col("text"))).as("tok"))
+      .select(col("doc_id"), (TokenHash.hash60(col("tok")) % dim).as("feature_idx"))
+      .groupBy(col("doc_id"), col("feature_idx"))
+      .agg(count(lit(1)).as("n"))
+      .orderBy(col("doc_id"), col("feature_idx"))
+
+  // Distinct (doc_id, gram-hash) index per (sf dir, n), persisted once per
+  // session and corpus generation — decontaminate's df filter, eval
+  // sizes, and collision join are three plan branches over the same
+  // grams, and Catalyst does no cross-branch CSE: without the index the
+  // corpus re-tokenizes and re-hashes per branch.
+  private def cachedGrams(spark: SparkSession, dir: String,
+      n: Int): DataFrame =
+    IndexCache(spark, "pipeline.grams", (dir, n),
+        Seq(s"$dir/documents.parquet")) {
+      val g = table(spark, dir, "documents")
+        .select(col("doc_id"), TokenHash.tokens(col("text")).as("t"))
+        .filter(size(col("t")) >= n)
+        .select(col("doc_id"),
+          explode(TokenHash.shinglesFromTokens(col("t"), n)).as("g"))
+        .select(col("doc_id"), TokenHash.hash60(col("g")).as("h"))
+        .distinct()
+        .persist()
+      g.count() // materialize the index once
+      g
+    }(_.unpersist(false))
+
+  /** Benchmark decontamination: find training documents sharing ≥
+    * `minOverlap` distinct word n-grams with any eval-set document — the
+    * standard n-gram-collision contamination check run before every
+    * training run (eval set here: doc_id % 37 == 0, a stand-in for a
+    * benchmark suite).
+    *
+    * Scale design: documents explode to (doc_id, gram-hash60) longs —
+    * the join key is the 60-bit gram hash, uniform by construction. Grams
+    * with training document-frequency > `maxDf` are dropped first
+    * (stop-gram filter): frequent grams carry no contamination signal and
+    * are exactly the keys whose join fanout would blow up O(df_train ×
+    * df_eval) — the filter bounds per-key work at any corpus size. The
+    * df aggregate, the stop-gram semi-join, and the train↔eval join all
+    * hash-partition on the same gram-hash column, so the exchange is
+    * reused; only (doc_id, h) longs ever shuffle, never text. */
+  def decontaminate(spark: SparkSession, dir: String, n: Int = 3,
+      maxDf: Long = 50L, minOverlap: Long = 2L): DataFrame = {
+    val grams = cachedGrams(spark, dir, n)
+    val isEval = col("doc_id") % 37 === 0
+    val trainG = grams.filter(!isEval)
+    val evalG = grams.filter(isEval)
+    val keep = trainG.groupBy(col("h"))
+      .agg(count(lit(1)).as("ndocs"))
+      .filter(col("ndocs") <= maxDf)
+      .select(col("h"))
+    val evalSizes = evalG.groupBy(col("doc_id").as("eval_doc"))
+      .agg(count(lit(1)).as("ng"))
+    trainG.join(keep, Seq("h"))
+      .join(evalG.withColumnRenamed("doc_id", "eval_doc"), Seq("h"))
+      .groupBy(col("doc_id").as("train_doc"), col("eval_doc"))
+      .agg(count(lit(1)).as("n_shared"))
+      .filter(col("n_shared") >= minOverlap)
+      .join(broadcast(evalSizes), Seq("eval_doc"))
+      .select(col("train_doc"), col("eval_doc"), col("n_shared"),
+        (col("n_shared").cast("double") / col("ng")).as("eval_frac"))
+      .orderBy(col("train_doc"), col("eval_doc"))
+  }
+
+  /** Greedy contiguous sequence packing: assign documents (in doc_id
+    * order) to fixed token-budget bins — the context-window packing step
+    * of an LLM training pipeline; a doc starts in the bin where its
+    * running token offset lands. Per-bin stats out.
+    *
+    * Scale design: the global running token sum is a [[TwoLevel]]
+    * exclusive prefix (bucket = doc_id value range), so no window streams
+    * the corpus through one task. Bin assignment is integer division —
+    * exact on both engines at any magnitude. */
+  def packSequences(spark: SparkSession, dir: String, budget: Long = 256L,
+      bucketWidth: Long = 1024L): DataFrame = {
+    val d = table(spark, dir, "documents")
+      .select(col("doc_id"),
+        size(TokenHash.tokens(col("text"))).cast("long").as("tok"))
+    TwoLevel.prefix(d, floor(col("doc_id") / bucketWidth), Seq(col("doc_id")),
+        sums = Seq("tok" -> "cum_excl"), inclusive = false)
+      .withColumn("bin_id", expr(s"cum_excl div $budget"))
+      .groupBy(col("bin_id"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("tok")).as("bin_tokens"),
+        min(col("doc_id")).as("first_doc"), max(col("doc_id")).as("last_doc"))
+      .orderBy(col("bin_id"))
+  }
+
+  /** Quality-based selection: the top `k` documents per language by the
+    * composite [[qualityScore]] — the "keep the best N per
+    * bucket" curation stage. Rank ties break on doc_id (scores are
+    * bit-identical cross-engine, but equal scores would otherwise order
+    * arbitrarily). Per-language windows: one shuffle on lang, bounded
+    * groups, and the rank filter cuts each partition to k rows before
+    * anything global. */
+  def qualityTopkPerLang(spark: SparkSession, dir: String,
+      k: Int = 10): DataFrame = {
+    val w = Window.partitionBy(col("lang"))
+      .orderBy(col("score").desc, col("doc_id"))
+    table(spark, dir, "documents")
+      .select(col("doc_id"), col("lang"),
+        qualityScore(col("text")).as("score"))
+      .withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= k)
+      .select(col("lang"), col("rnk"), col("doc_id"), col("score"))
+      .orderBy(col("lang"), col("rnk"))
+  }
+
+  /** Corpus-mix curation under a token budget: per source, keep documents
+    * in quality order until the source's cumulative token count exceeds
+    * `budget` — how a training mix caps each source's contribution. One
+    * window pass per source partition (rank + running token sum, both
+    * ordered by (score desc, doc_id) for determinism); the budget filter
+    * is exact integer arithmetic. */
+  def corpusMixBudget(spark: SparkSession, dir: String,
+      budget: Long = 1000L): DataFrame = {
+    val w = Window.partitionBy(col("source"))
+      .orderBy(col("score").desc, col("doc_id"))
+    table(spark, dir, "documents")
+      .select(col("doc_id"), col("source"),
+        size(TokenHash.tokens(col("text"))).cast("long").as("tok"),
+        qualityScore(col("text")).as("score"))
+      .withColumn("rnk", row_number().over(w))
+      .withColumn("cum_tok",
+        sum(col("tok")).over(w.rowsBetween(Window.unboundedPreceding,
+          Window.currentRow)))
+      .filter(col("cum_tok") <= budget)
+      .select(col("source"), col("doc_id"), col("rnk"), col("cum_tok"))
+      .orderBy(col("source"), col("rnk"))
+  }
+
+  /** First-fit-decreasing bin packing of documents into fixed-capacity
+    * context windows, per source: sort a group's docs by token count
+    * descending, place each into the lowest-indexed bin it fits, open a
+    * new bin when none fits (an oversize doc opens its own bin). FFD
+    * packs within 11/9·OPT + 1 bins — materially tighter than
+    * [[packSequences]]' contiguous greedy when doc lengths vary, which
+    * is why sequence-packing pipelines that care about padding waste
+    * use it.
+    *
+    * FFD is inherently sequential (each placement depends on ALL prior
+    * placements), so like the Kadane/debounce recurrences it rides
+    * `flatMapSortedGroups`: one exchange on the group key, engine-side
+    * sort by (tokens desc, doc_id), O(#bins) state per group. At 100 TB
+    * the packing GROUP is the parallelism unit — shard sources into
+    * packing partitions (source, hash-bucket) and pack within each; the
+    * bound degrades only by the shards' tail items. The in-group
+    * first-fit scan here is the textbook O(n·bins) form; the classic
+    * O(n log n) segment-tree variant drops in when groups are huge.
+    *
+    * HOT-SOURCE CONTRACT (the `anomaly_alert_debounce` precedent): a
+    * single gigantic source serializes into one task — cost is
+    * bounded by the LARGEST GROUP, not the corpus, and is O(k·bins)
+    * time / O(bins) state for a k-doc source (a 20k-doc hot source is
+    * pinned bounded by DriverRound13Spec). At 100 TB a source above ~10⁶
+    * docs should be pre-sharded with the (source, hash-bucket) scheme
+    * above before packing; this operator deliberately does not shard
+    * implicitly, because silently splitting a group changes the
+    * packing the oracle replays.
+    * The oracle replays the identical recurrence as a recursive CTE
+    * carrying the bin-load list. Integer-exact throughout. */
+  def packBinFfd(spark: SparkSession, dir: String,
+      capacity: Long = 256L): DataFrame = {
+    import spark.implicits._
+    val d = graft.schema.Schemas.table(spark, dir, "documents")
+      .select(col("doc_id"), col("source"),
+        size(TokenHash.tokens(col("text"))).cast("long").as("n_tokens"))
+      .as[(Long, String, Long)]
+    d.groupByKey(_._2)
+      .flatMapSortedGroups(col("n_tokens").desc, col("doc_id")) {
+        (src, it) =>
+          val bins = scala.collection.mutable.ArrayBuffer.empty[Long]
+          it.map { case (id, _, t) =>
+            val i = bins.indexWhere(_ + t <= capacity)
+            val bin =
+              if (i >= 0) { bins(i) += t; i }
+              else { bins += t; bins.length - 1 }
+            (id, src, t, bin.toLong)
+          }
+      }
+      .toDF("doc_id", "source", "n_tokens", "bin")
+      .orderBy(col("source"), col("doc_id"))
+  }
+
+  /** Intra-document repetition score: 1 − distinct/total word bigrams —
+    * the boilerplate/degenerate-text detector (high repetition ⇒ template
+    * or generation-loop content). One explode + one per-doc aggregate;
+    * grams never leave their doc's partition group. */
+  def textRepetition(spark: SparkSession, dir: String): DataFrame =
+    table(spark, dir, "documents")
+      .select(col("doc_id"), TokenHash.tokens(col("text")).as("t"))
+      .filter(size(col("t")) >= 2)
+      .select(col("doc_id"),
+        explode(TokenHash.shinglesFromTokens(col("t"), 2)).as("g"))
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_bigrams"),
+        countDistinct(col("g")).as("n_distinct"))
+      .withColumn("repetition",
+        lit(1.0) - col("n_distinct").cast("double") / col("n_bigrams"))
+      .orderBy(col("doc_id"))
 }

@@ -1,6 +1,6 @@
 package graft.registry
 
-import graft.query.{Analytics3, Analytics4, Curation, Similarity, TextAnalysis}
+import graft.query.Similarity
 
 /** The ann family, 36 queries: nearest-neighbour search, embeddings
   * and retrieval, `ann_`, `emb_`, `embedding_`, `retrieval_`. */
@@ -318,7 +318,7 @@ object AnnDefs {
         |SELECT k.a, k.b, k.cosine FROM knn k
         |JOIN knn m ON m.a = k.b AND m.b = k.a
         |WHERE k.a < k.b ORDER BY k.a, k.b""".stripMargin)),
-    QueryDef("retrieval_prf_expansion", TextAnalysis.retrievalPrfExpansion(_, _), Some(
+    QueryDef("retrieval_prf_expansion", Similarity.retrievalPrfExpansion(_, _), Some(
       """WITH toks AS (
         |  SELECT doc_id, unnest(string_split(
         |    lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS tok
@@ -339,7 +339,7 @@ object AnnDefs {
         |WHERE t.tok NOT IN (SELECT tok FROM qt)
         |GROUP BY t.tok
         |ORDER BY n_docs DESC, total_tf DESC, tok LIMIT 10""".stripMargin)),
-    QueryDef("ann_l2_topk", Analytics3.annL2TopK(_, _), Some(
+    QueryDef("ann_l2_topk", Similarity.annL2TopK(_, _), Some(
       """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qe
         |  FROM embeddings WHERE vec_id = 0)
         |SELECT vec_id,
@@ -406,7 +406,7 @@ object AnnDefs {
         |  CAST(cosine AS REAL) AS best_cosine,
         |  label = c_label AS correct
         |FROM ranked WHERE rn = 1 ORDER BY vec_id""".stripMargin)),
-    QueryDef("emb_quantize_int8", Curation.embQuantizeInt8 _, Some(
+    QueryDef("emb_quantize_int8", Similarity.embQuantizeInt8 _, Some(
       """WITH a AS (
         |  SELECT vec_id, embedding,
         |    list_max(list_transform(embedding,
@@ -501,7 +501,7 @@ object AnnDefs {
         |    (SELECT e FROM emb WHERE vec_id = 0)) AS cosine
         |FROM cand c JOIN emb e USING (vec_id)
         |ORDER BY cosine DESC, vec_id LIMIT 10""".stripMargin)),
-    QueryDef("emb_pq_codes", Curation.embPqCodes(_, _), Some(
+    QueryDef("emb_pq_codes", Similarity.embPqCodes(_, _), Some(
       """WITH a AS (
         |  SELECT vec_id, embedding,
         |    list_max(list_transform(embedding,
@@ -546,7 +546,7 @@ object AnnDefs {
         |  CAST(sum(dist) AS BIGINT) AS l1_err
         |FROM best WHERE rn = 1
         |GROUP BY vec_id ORDER BY vec_id""".stripMargin)),
-    QueryDef("ann_pq_adc_topk", Curation.annPqAdcTopk(_, _), Some(
+    QueryDef("ann_pq_adc_topk", Similarity.annPqAdcTopk(_, _), Some(
       """WITH a AS (
         |  SELECT vec_id, embedding,
         |    list_max(list_transform(embedding,
@@ -598,7 +598,7 @@ object AnnDefs {
         |  AND list_dot_product(CAST(embedding AS DOUBLE[]),
         |    (SELECT CAST(qe AS DOUBLE[]) FROM q)) >= 0.15
         |ORDER BY vec_id""".stripMargin)),
-    QueryDef("emb_matryoshka_recall", Analytics4.embMatryoshkaRecall(_, _), Some(
+    QueryDef("emb_matryoshka_recall", Similarity.embMatryoshkaRecall(_, _), Some(
       """WITH q AS (
         |  SELECT vec_id AS qid, embedding AS qe FROM embeddings
         |  WHERE vec_id < 20
@@ -640,7 +640,7 @@ object AnnDefs {
         |UNION ALL
         |SELECT CAST(32 AS INTEGER), h32 / truth FROM h
         |ORDER BY dim""".stripMargin)),
-    QueryDef("retrieval_ndcg", Analytics4.retrievalNdcg(_, _), Some(
+    QueryDef("retrieval_ndcg", Similarity.retrievalNdcg(_, _), Some(
       """WITH q AS (
         |  SELECT vec_id AS qid, embedding AS qe, label AS qlabel
         |  FROM embeddings WHERE vec_id < 20
@@ -671,7 +671,7 @@ object AnnDefs {
         |SELECT qid, n_rel, CAST(dcg AS REAL) AS dcg,
         |  CAST(idcg AS REAL) AS idcg, CAST(dcg / idcg AS REAL) AS ndcg
         |FROM g ORDER BY qid""".stripMargin)),
-    QueryDef("emb_power_iteration", Analytics4.embPowerIteration(_, _), Some(
+    QueryDef("emb_power_iteration", Similarity.embPowerIteration(_, _), Some(
       """WITH x AS (
         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS x FROM embeddings
         |), v0 AS (
@@ -723,7 +723,7 @@ object AnnDefs {
         |FROM v3 CROSS JOIN lam,
         |  LATERAL (SELECT unnest(generate_series(1, 64)) AS j) t
         |ORDER BY dim""".stripMargin)),
-    QueryDef("emb_dim_stats", Analytics4.embDimStats _, Some(
+    QueryDef("emb_dim_stats", Similarity.embDimStats _, Some(
       """WITH e AS (
         |  SELECT j AS dim, CAST(embedding[j] AS DOUBLE) AS v
         |  FROM embeddings,
@@ -736,7 +736,7 @@ object AnnDefs {
         |      * (sum(v) / CAST(count(*) AS DOUBLE)) AS REAL) AS variance,
         |  CAST(min(v) AS REAL) AS vmin, CAST(max(v) AS REAL) AS vmax
         |FROM e GROUP BY dim ORDER BY dim""".stripMargin)),
-    QueryDef("emb_hubness_stats", Analytics4.embHubnessStats(_, _), Some(
+    QueryDef("emb_hubness_stats", Similarity.embHubnessStats(_, _), Some(
       """WITH p AS (
         |  SELECT q.vec_id AS qid, e.vec_id,
         |    list_dot_product(CAST(e.embedding AS DOUBLE[]),
@@ -994,7 +994,7 @@ object AnnDefs {
     // IVFADC composite: probed cells × PQ code index, all-deterministic
     // IVFADC = the ann_ivf_det_topk cell CTEs ∘ the ann_pq_adc_topk
     // code CTEs, joined on the probed cells
-    QueryDef("ann_ivf_pq_topk", Curation.annIvfPqTopk(_, _), Some(
+    QueryDef("ann_ivf_pq_topk", Similarity.annIvfPqTopk(_, _), Some(
       """WITH emb AS (
         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
         |), seeds AS (
@@ -1066,7 +1066,7 @@ object AnnDefs {
         |ORDER BY adc_dist, c.vec_id LIMIT 10""".stripMargin)),
     // exact-rational covariance matrix (whitening/PCA input)
     // exact BIGINT moments; ONE double division at the end
-    QueryDef("emb_covariance_int", Analytics4.embCovarianceInt(_, _), Some(
+    QueryDef("emb_covariance_int", Similarity.embCovarianceInt(_, _), Some(
       """WITH q AS (
         |  SELECT list_transform(embedding[1:8],
         |    x -> CAST(round(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))
@@ -1092,7 +1092,7 @@ object AnnDefs {
     // exact mean pairwise intra-label dot via the sum-vector identity
     // sum-vector identity: sum_{i!=j} xi.xj = |Sx|^2 - sum|x|^2, exact
     // on x1000-quantized BIGINTs; one division, de-scaled by 1e6
-    QueryDef("emb_label_cohesion", Analytics4.embLabelCohesion _, Some(
+    QueryDef("emb_label_cohesion", Similarity.embLabelCohesion _, Some(
       """WITH q AS (
         |  SELECT label, list_transform(embedding,
         |    e -> CAST(round(CAST(e AS DOUBLE) * 1000.0) AS BIGINT)) AS v
@@ -1118,7 +1118,7 @@ object AnnDefs {
         |WHERE sq.n >= 2 ORDER BY sq.label""".stripMargin)),
     // exact mean cross-label dot (Sa.Sb) per label pair
     // cross-label: sum_{i in a, j in b} xi.xj = Sa.Sb, exact
-    QueryDef("emb_label_separation", Analytics4.embLabelSeparation _, Some(
+    QueryDef("emb_label_separation", Similarity.embLabelSeparation _, Some(
       """WITH q AS (
         |  SELECT label, list_transform(embedding,
         |    e -> CAST(round(CAST(e AS DOUBLE) * 1000.0) AS BIGINT)) AS v

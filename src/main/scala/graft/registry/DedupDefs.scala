@@ -1,7 +1,6 @@
 package graft.registry
 
-import graft.query.{Analytics4, Analytics5, Analytics6, Curation, Curation2,
-  Dedup, Relational3}
+import graft.query.Dedup
 
 /** The dedup family, 21 queries: `dedup_`. */
 object DedupDefs {
@@ -172,7 +171,7 @@ object DedupDefs {
        |SELECT a AS doc_id, min(b) AS group_id
        |FROM reach GROUP BY a ORDER BY doc_id""".stripMargin
 
-  /** [[graft.query.Curation.dedupKeepBest]]: the dedup_groups recursive
+  /** [[graft.query.Dedup.dedupKeepBest]]: the dedup_groups recursive
     * CTE extended with per-doc normalized char counts and a per-group
     * (chars desc, doc_id asc) argmax via max-of-struct — the same
     * deterministic tiebreak the Spark side computes. */
@@ -404,7 +403,7 @@ object DedupDefs {
         |    / count(*) AS dup_frac
         |FROM sents s JOIN fpd f USING (fp)
         |GROUP BY s.doc_id ORDER BY doc_id""".stripMargin)),
-    QueryDef("dedup_cluster_stats", Relational3.dedupClusterStats _, Some(
+    QueryDef("dedup_cluster_stats", Dedup.dedupClusterStats _, Some(
       s"""WITH RECURSIVE ${minhashPairsCtes(8, 4, "0.5")},
          |edges AS (
          |  SELECT doc_a AS a, doc_b AS b FROM pairs
@@ -427,8 +426,8 @@ object DedupDefs {
     // round 6: curation decisions, exact-decimal finance, layout,
     // interval joins, retention, robust outliers, frame sampling
     // round 6
-    QueryDef("dedup_keep_best", Curation.dedupKeepBest _, Some(dedupKeepBestOracleSql)),
-    QueryDef("dedup_incremental", Curation2.dedupIncremental _, Some(
+    QueryDef("dedup_keep_best", Dedup.dedupKeepBest _, Some(dedupKeepBestOracleSql)),
+    QueryDef("dedup_incremental", Dedup.dedupIncremental _, Some(
       """WITH fp AS (
         |  SELECT doc_id, md5(lower(trim(
         |    regexp_replace(text, '\s+', ' ', 'g')))) AS fp
@@ -451,7 +450,7 @@ object DedupDefs {
     // round-7: delta-vs-corpus NEAR-dup via the shared MinHash band index
     QueryDef("dedup_incremental_minhash", Dedup.dedupIncrementalMinhash(_, _),
       Some(incrementalMinhashOracleSql)),
-    QueryDef("dedup_prefix_groups", Analytics4.dedupPrefixGroups(_, _), Some(
+    QueryDef("dedup_prefix_groups", Dedup.dedupPrefixGroups(_, _), Some(
       """WITH toks AS (
         |  SELECT doc_id, string_split(lower(trim(
         |    regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS t
@@ -465,7 +464,7 @@ object DedupDefs {
         |SELECT pfx, CAST(count(*) AS BIGINT) AS n_docs,
         |  min(doc_id) AS first_doc, max(doc_id) AS last_doc
         |FROM p GROUP BY pfx HAVING count(*) > 1 ORDER BY pfx""".stripMargin)),
-    QueryDef("dedup_time_window", Analytics5.dedupTimeWindow(_, _), Some(
+    QueryDef("dedup_time_window", Dedup.dedupTimeWindow(_, _), Some(
       """WITH e AS (
         |  SELECT event_id, user_id, event_type, epoch_us(ts) AS tus,
         |    make_timestamp(epoch_us(ts) - epoch_us(ts) % 600000000)
@@ -580,7 +579,7 @@ object DedupDefs {
     QueryDef("dedup_cascade_report", Dedup.dedupCascadeReport(_, _), Some(dedupCascadeOracleSql)),
     // round 16: dup-rate curve over Jaccard cuts off the pair index
     // the minhash pair index probed at five verification cuts
-    QueryDef("dedup_threshold_curve", Analytics6.dedupThresholdCurve(_, _), Some(
+    QueryDef("dedup_threshold_curve", Dedup.dedupThresholdCurve(_, _), Some(
       s"""WITH ${minhashPairsCtes(8, 4, "0.5")},
         |th AS (
         |  SELECT CAST(x AS DOUBLE) AS threshold

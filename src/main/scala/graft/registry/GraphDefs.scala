@@ -1,12 +1,11 @@
 package graft.registry
 
-import graft.query.{Analytics, Analytics3, Analytics4, Analytics5, Analytics6,
-  Analytics7, Curation2}
+import graft.query.Graph
 
 /** The graph family, 28 queries: `graph_`, `path_`. */
 object GraphDefs {
 
-  /** The [[graft.query.Analytics6.graphEgoBetweenness]] oracle,
+  /** The [[graft.query.Graph.graphEgoBetweenness]] oracle,
     * parametrized by the center-cohort modulus: %64 is the declared
     * query; %512 is the x10-replayable sampled cohort (r18 verdict
     * #7 — the %64 courier join exceeds DuckDB temp disk at x10).
@@ -46,7 +45,7 @@ object GraphDefs {
         |    AS ego_betweenness
         |FROM sig GROUP BY z ORDER BY part""".stripMargin
 
-  /** The [[graft.query.Analytics7.graphSsspWeighted]] oracle: the
+  /** The [[graft.query.Graph.graphSsspWeighted]] oracle: the
     * Bellman-Ford relaxation UNROLLED into `rounds` MATERIALIZED
     * min-combine stages over the length-carrying symmetric co-purchase
     * edges (frontier-pruned Spark rounds produce exactly the full
@@ -119,7 +118,7 @@ object GraphDefs {
        |FROM pr$iters WHERE u <= 100 ORDER BY part""".stripMargin
   }
 
-  /** [[graft.query.Analytics6.graphKatzCentrality]]: x⁰ = 1, xⁱ(v) =
+  /** [[graft.query.Graph.graphKatzCentrality]]: x⁰ = 1, xⁱ(v) =
     * 1 + α·Σ_{u∼v} xⁱ⁻¹(u), `iters` rounds unrolled over the same
     * co-purchase edge CTEs as [[pagerankOracleSql]] (no degree
     * division — Katz counts walks, not a stochastic process). */
@@ -146,7 +145,7 @@ object GraphDefs {
   }
 
   val defs: Seq[QueryDef] = Seq(
-    QueryDef("graph_node2vec_transitions", Analytics5.graphNode2vecTransitions(_, _), Some(
+    QueryDef("graph_node2vec_transitions", Graph.graphNode2vecTransitions(_, _), Some(
       """WITH li AS (
         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
         |), e0 AS (
@@ -178,7 +177,7 @@ object GraphDefs {
         |SELECT prev, cur, next, w,
         |  w / sum(w) OVER (PARTITION BY prev, cur) AS prob
         |FROM wt ORDER BY prev, cur, next""".stripMargin)),
-    QueryDef("graph_closeness_sampled", Analytics.graphClosenessSampled(_, _), Some(
+    QueryDef("graph_closeness_sampled", Graph.graphClosenessSampled(_, _), Some(
       """WITH RECURSIVE li AS (
         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
         |), e0 AS (
@@ -207,7 +206,7 @@ object GraphDefs {
         |    + CAST(n3 AS DOUBLE) / 3.0 + CAST(n4 AS DOUBLE) / 4.0 AS harmonic
         |FROM c ORDER BY v""".stripMargin)),
     // probes the same persisted BFS index as graph_closeness_sampled
-    QueryDef("graph_effective_diameter", Analytics.graphEffectiveDiameter(_, _), Some(
+    QueryDef("graph_effective_diameter", Graph.graphEffectiveDiameter(_, _), Some(
       """WITH RECURSIVE li AS (
         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
         |), e0 AS (
@@ -243,7 +242,7 @@ object GraphDefs {
     // calibration, L2 ANN, warehouse maintenance, TPC-H Q2/Q9/Q16 shapes
     // round 12 — unbounded recursive CTE = the fixpoint the engine's
     // pointer-jumping min-label loop converges to
-    QueryDef("graph_connected_components", Analytics3.graphConnectedComponents(_, _), Some(
+    QueryDef("graph_connected_components", Graph.graphConnectedComponents(_, _), Some(
       """WITH RECURSIVE li AS (
         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
         |), pair_orders AS (
@@ -262,7 +261,7 @@ object GraphDefs {
         |), comp AS (SELECT u, min(lbl) AS component FROM r GROUP BY u)
         |SELECT component, count(*) AS n_members, max(u) AS max_member
         |FROM comp GROUP BY component ORDER BY component""".stripMargin)),
-    QueryDef("graph_triangles", Analytics.graphTriangles _, Some(
+    QueryDef("graph_triangles", Graph.graphTriangles _, Some(
       """WITH li AS MATERIALIZED (
         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
         |), edges AS MATERIALIZED (
@@ -296,7 +295,7 @@ object GraphDefs {
         |  CAST(3.0 * n_triangles / (SELECT sum((deg * (deg - 1)) // 2)
         |    FROM deg) AS REAL) AS clustering_coeff
         |FROM tri""".stripMargin)),
-    QueryDef("graph_pagerank", Analytics.graphPagerank(_, _), Some(pagerankOracleSql(3))),
+    QueryDef("graph_pagerank", Graph.graphPagerank(_, _), Some(pagerankOracleSql(3))),
     // Deeper variant with lineage truncation every 3 rounds — the
     // iterate-to-fixpoint shape (plan size stays constant per round).
     // Registered at 6 rounds: the bench pays per-round cost ×iters with
@@ -306,9 +305,9 @@ object GraphDefs {
     // Round8Spec ("constant per-round plan size") and
     // PartitionInvarianceSpec's 10-round accumulation check.
     QueryDef("graph_pagerank_deep",
-      Analytics.graphPagerank(_, _, iters = 6, checkpointEvery = 3),
+      Graph.graphPagerank(_, _, iters = 6, checkpointEvery = 3),
       Some(pagerankOracleSql(6))),
-    QueryDef("graph_communities_lpa", Analytics.graphCommunitiesLpa(_, _), Some(
+    QueryDef("graph_communities_lpa", Graph.graphCommunitiesLpa(_, _), Some(
       """WITH li AS (
         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
         |), e0 AS (
@@ -334,7 +333,7 @@ object GraphDefs {
         |)
         |SELECT u AS part, lbl AS community FROM l2
         |WHERE u <= 100 ORDER BY part""".stripMargin)),
-    QueryDef("path_transitions", Curation2.pathTransitions _, Some(
+    QueryDef("path_transitions", Graph.pathTransitions _, Some(
       """WITH ev AS (
         |  SELECT user_id, ts, event_id, event_type FROM events
         |), l AS (
@@ -353,7 +352,7 @@ object GraphDefs {
         |FROM pairs ORDER BY prev_type, next_type""".stripMargin)),
     // bounded recursion: Spark runs frontier-delta rounds, the oracle the
     // equivalent recursive CTE; min(dist) = BFS distance on both sides
-    QueryDef("graph_reachability", Analytics.graphReachability(_, _), Some(
+    QueryDef("graph_reachability", Graph.graphReachability(_, _), Some(
       """WITH RECURSIVE li AS (
         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
         |), e0 AS (
@@ -370,7 +369,7 @@ object GraphDefs {
         |)
         |SELECT u AS part, CAST(min(dist) AS INT) AS hops
         |FROM r GROUP BY u ORDER BY part""".stripMargin)),
-    QueryDef("graph_common_neighbors", Analytics4.graphCommonNeighbors(_, _), Some(
+    QueryDef("graph_common_neighbors", Graph.graphCommonNeighbors(_, _), Some(
       """WITH li AS (
         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
         |), edges AS (
@@ -395,7 +394,7 @@ object GraphDefs {
         |    / CAST(du.deg + dv.deg - cn AS DOUBLE) AS REAL) AS jaccard
         |FROM na JOIN deg du ON du.x = na.u2 JOIN deg dv ON dv.x = na.v2
         |ORDER BY cn DESC, u, v LIMIT 20""".stripMargin)),
-    QueryDef("graph_assortativity", Analytics4.graphAssortativity _, Some(
+    QueryDef("graph_assortativity", Graph.graphAssortativity _, Some(
       """WITH li AS (
         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
         |), edges AS (
@@ -418,7 +417,7 @@ object GraphDefs {
         |    / (sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy)) AS REAL)
         |    AS assortativity
         |FROM a""".stripMargin)),
-    QueryDef("graph_local_clustering", Analytics4.graphLocalClustering(_, _), Some(
+    QueryDef("graph_local_clustering", Graph.graphLocalClustering(_, _), Some(
       """WITH li AS (
         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
         |), edges AS (
@@ -449,7 +448,7 @@ object GraphDefs {
         |FROM alln LEFT JOIN closed USING (x)
         |JOIN deg ON deg.x = alln.x
         |ORDER BY vertex""".stripMargin)),
-    QueryDef("graph_copurchase_weights", Analytics4.graphCopurchaseWeights(_, _), Some(
+    QueryDef("graph_copurchase_weights", Graph.graphCopurchaseWeights(_, _), Some(
       """WITH li AS (
         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
         |)
@@ -464,7 +463,7 @@ object GraphDefs {
     // reference inlining re-evaluated the pair self-join a combinatorial
     // number of times and exhausted temp disk at x10; materialization
     // evaluates each peel once
-    QueryDef("graph_kcore", Analytics5.graphKcore(_, _), Some(
+    QueryDef("graph_kcore", Graph.graphKcore(_, _), Some(
       """WITH li AS MATERIALIZED (
         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
         |), edges AS MATERIALIZED (
@@ -489,7 +488,7 @@ object GraphDefs {
         |  WHERE u IN (SELECT u FROM a3) AND v IN (SELECT u FROM a3))
         |SELECT u AS vertex, CAST(count(*) AS BIGINT) AS core_degree
         |FROM e3 GROUP BY u ORDER BY vertex""".stripMargin)),
-    QueryDef("graph_two_hop_reach", Analytics5.graphTwoHopReach _, Some(
+    QueryDef("graph_two_hop_reach", Graph.graphTwoHopReach _, Some(
       """WITH li AS (
         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
         |), edges AS (
@@ -506,7 +505,7 @@ object GraphDefs {
         |SELECT src, CAST(count(DISTINCT reach) AS BIGINT) AS reach_2hop
         |FROM (SELECT * FROM hop1 UNION ALL SELECT * FROM hop2)
         |GROUP BY src ORDER BY src""".stripMargin)),
-    QueryDef("graph_degree_bands", Analytics5.graphDegreeBands _, Some(
+    QueryDef("graph_degree_bands", Graph.graphDegreeBands _, Some(
       """WITH li AS (
         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
         |), edges AS (
@@ -525,7 +524,7 @@ object GraphDefs {
     // integer-exact HITS on the bipartite order↔part graph. Registered at
     // iters=2 (each round is TWO joins — the 3-round shape costs ~2×
     // pagerank-3 at bench scale and is pinned by Round15Spec instead)
-    QueryDef("graph_hits", Analytics5.graphHits(_, _, iters = 2), Some(
+    QueryDef("graph_hits", Graph.graphHits(_, _, iters = 2), Some(
       """WITH li AS (
         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
         |), a1 AS (
@@ -544,7 +543,7 @@ object GraphDefs {
     // graph_communities_lpa's LPA chain, extended with the modularity
     // tail (exact BIGINT edge/degree masses; one double expression per
     // community)
-    QueryDef("graph_modularity", Analytics5.graphModularity _, Some(
+    QueryDef("graph_modularity", Graph.graphModularity _, Some(
       """WITH li AS MATERIALIZED (
         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
         |), e0 AS MATERIALIZED (
@@ -588,7 +587,7 @@ object GraphDefs {
     // incremental CC oracle: FULL-graph recursive-CTE components,
     // restricted to components containing a delta-order endpoint — the
     // engine's contract-and-merge path must land on exactly these rows
-    QueryDef("graph_cc_incremental", Analytics3.graphCcIncremental(_, _), Some(
+    QueryDef("graph_cc_incremental", Graph.graphCcIncremental(_, _), Some(
       """WITH RECURSIVE li AS (
         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
         |), pair_orders AS (
@@ -615,7 +614,7 @@ object GraphDefs {
         |FROM comp WHERE component IN (SELECT component FROM touched)
         |GROUP BY component ORDER BY component""".stripMargin)),
     // replayable DeepWalk-style sampling over the graph index
-    QueryDef("graph_random_walks", Analytics5.graphRandomWalks(_, _), Some(
+    QueryDef("graph_random_walks", Graph.graphRandomWalks(_, _), Some(
       """WITH li AS (
         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
         |), e0 AS (
@@ -664,7 +663,7 @@ object GraphDefs {
         |FROM w3 ORDER BY walk_id""".stripMargin)),
     // skip-gram pair counts over the walk corpus (DeepWalk step 2)
     // graph_random_walks' walk CTE chain, exploded into ±2 skip-gram pairs
-    QueryDef("graph_walk_cooccurrence", Analytics5.graphWalkCooccurrence(_, _), Some(
+    QueryDef("graph_walk_cooccurrence", Graph.graphWalkCooccurrence(_, _), Some(
       """WITH li AS (
         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
         |), e0 AS (
@@ -718,7 +717,7 @@ object GraphDefs {
     // Adamic-Adar link prediction (1/ln(deg) wedge weights)
     // the common-neighbors wedge machinery with 1/ln(center degree)
     // weights; top-k still ranked on the INTEGER count
-    QueryDef("graph_adamic_adar", Analytics4.graphAdamicAdar(_, _), Some(
+    QueryDef("graph_adamic_adar", Graph.graphAdamicAdar(_, _), Some(
       """WITH li AS (
         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
         |), edges AS (
@@ -746,11 +745,11 @@ object GraphDefs {
         |SELECT u2 AS u, v2 AS v, cn, adamic_adar FROM na
         |ORDER BY cn DESC, u, v LIMIT 20""".stripMargin)),
     // round 16: attenuated-path centrality on the co-purchase graph
-    QueryDef("graph_katz_centrality", Analytics6.graphKatzCentrality(_, _),
+    QueryDef("graph_katz_centrality", Graph.graphKatzCentrality(_, _),
       Some(katzOracleSql(3, "0.05"))),
     // round 16: Everett–Borgatti ego betweenness (brokerage centrality)
     // Σ 1/σ over non-adjacent neighbor pairs; couriers by 3-way join
-    QueryDef("graph_ego_betweenness", Analytics6.graphEgoBetweenness(_, _),
+    QueryDef("graph_ego_betweenness", Graph.graphEgoBetweenness(_, _),
       Some(egoBetweennessOracleSql(64))),
     // round 19: the %512 sampled center cohort — same plan, 8× fewer
     // centers, which is what makes the x10 oracle replay disk-feasible
@@ -758,11 +757,11 @@ object GraphDefs {
     // form whose x10 DuckDB replay fits in temp disk (the full %64
     // courier stream measured ~300 M rows > 78 GB twice at x10)
     QueryDef("graph_ego_betweenness_s512",
-      Analytics6.graphEgoBetweenness(_, _, cohortMod = 512),
+      Graph.graphEgoBetweenness(_, _, cohortMod = 512),
       Some(egoBetweennessOracleSql(512))),
     // round 16: do hubs trade with hubs (panel of degree cuts)
     // exact club counts off the same co-purchase edge/degree CTEs
-    QueryDef("graph_rich_club", Analytics6.graphRichClub(_, _), Some(
+    QueryDef("graph_rich_club", Graph.graphRichClub(_, _), Some(
       """WITH li AS (
         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
         |), e0 AS (
@@ -793,6 +792,6 @@ object GraphDefs {
         |FROM nk LEFT JOIN ek USING (k) ORDER BY k""".stripMargin)),
     // round 17: weighted shortest paths (frontier-pruned Bellman-Ford)
     // round 17: unrolled Bellman-Ford (frontier-pruned == full rounds)
-    QueryDef("graph_sssp_weighted", Analytics7.graphSsspWeighted(_, _), Some(ssspOracleSql(4, 4))),
+    QueryDef("graph_sssp_weighted", Graph.graphSsspWeighted(_, _), Some(ssspOracleSql(4, 4))),
   )
 }

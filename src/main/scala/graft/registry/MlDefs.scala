@@ -1,7 +1,8 @@
 package graft.registry
 
-import graft.query.{Analytics3, Analytics4, Analytics5, Analytics6,
-  Analytics7, Curation2, Endpoints, Pipeline, Similarity, TextAnalysis}
+import graft.query.Endpoints
+import graft.query.ml.{Agreement, Calibration, Features, Preference, Ranking,
+  Scoring, Significance, TextMetrics}
 
 /** The ml family, 50 queries: the four RandomForest programs
   * (`q1_predict_duration`, `q2_sensitivity_ml`, `q3_optimal_time_ml`,
@@ -11,7 +12,7 @@ import graft.query.{Analytics3, Analytics4, Analytics5, Analytics6,
   * `pref_`, `pareto_`. */
 object MlDefs {
 
-  /** The [[graft.query.Analytics5.evalBradleyTerry]] oracle: the MM
+  /** The [[graft.query.ml.Preference.evalBradleyTerry]] oracle: the MM
     * fixpoint unrolled into `iters` CTE layers over the 20-cell win
     * matrix, each layer the IDENTICAL fixed-parenthesization scalar
     * expressions the Spark column layers evaluate — the
@@ -19,7 +20,7 @@ object MlDefs {
     * bit-identical. Generated, not hand-written: both sides derive
     * from the same slot/iteration loop shape. */
   private def btOracleSql(iters: Int): String = {
-    val k = Analytics5.btSlots
+    val k = Preference.btSlots
     val slots = 0 until k
     def others(a: Int) = slots.filter(_ != a)
     val cells = (for (a <- slots; b <- slots if a != b) yield
@@ -90,12 +91,12 @@ object MlDefs {
        |FROM f JOIN t USING (idx) ORDER BY model""".stripMargin
   }
 
-  /** The [[graft.query.Analytics5.evalTopkAgreement]] oracle: prefix
+  /** The [[graft.query.ml.Ranking.evalTopkAgreement]] oracle: prefix
     * overlaps from the cumulative histogram of max(rank_a, rank_b),
     * the SHARED truncated-RBO weight literals per depth. */
   private def topkAgreementOracleSql(k: Int): String = {
     val rows = (1 to k).map { d =>
-      val w = Analytics5.rboWeights(d - 1)
+      val w = Ranking.rboWeights(d - 1)
       // literals go through DOUBLE explicitly: a bare decimal parses
       // as DECIMAL in DuckDB and CAST(DECIMAL AS REAL) can round to
       // the adjacent float vs the double->float path Spark takes
@@ -139,14 +140,14 @@ object MlDefs {
     * subsample between the paired frame and the replica fanout: mod =
     * ⌈N/t⌉ recomputed IN SQL from the same events count the Spark plan
     * probes, so both engines draw the identical subsample (the
-    * [[graft.query.Analytics7.evalBootstrapBcaSampled]] contract). The
+    * [[graft.query.ml.Significance.evalBootstrapBcaSampled]] contract). The
     * splice text carries `|` margins and is interpolated BEFORE the
     * single stripMargin call — the one-stripMargin discipline the NOTE
     * below pins (a pre-stripped splice whose lines open with `||`
     * would be corrupted by the outer strip). */
   private def pairedBootCtesFrom(reps: Int,
       sampledTarget: Option[Long]): String = {
-    val t = Analytics5.poissonThresh60
+    val t = Significance.poissonThresh60
     // margin-carrying splice: starts with a newline, ends at `|)` so the
     // outer template's `|)$subCtes, r AS (` reads as s-close → mq → ss →
     // r-open after the ONE stripMargin
@@ -207,7 +208,7 @@ object MlDefs {
   // NOTE both consumers CONCATENATE the prefix (never re-interpolate it
   // into another stripMargin template: the prefix contains `||` at line
   // starts, which a second stripMargin would corrupt)
-  /** The [[graft.query.Analytics5.evalPairedBootstrap]] oracle: the
+  /** The [[graft.query.ml.Significance.evalPairedBootstrap]] oracle: the
     * same McNemar paired-classifier CTEs, fanned out ×reps with the
     * SHARED 2⁶⁰-scaled Poisson-CDF thresholds inlined as literals —
     * both engines evaluate identical integer compares. */
@@ -224,10 +225,10 @@ object MlDefs {
        |FROM a ORDER BY replica""".stripMargin
   }
 
-  /** The [[graft.query.Analytics7.evalBootstrapBca]] oracle: the shared
+  /** The [[graft.query.ml.Significance.evalBootstrapBca]] oracle: the shared
     * replica CTEs, the exact d∈{−1,0,1} tallies, HUGEINT jackknife
     * moments (Spark holds DECIMAL(38,0)), and the Φ⁻¹ grid inlined as a
-    * VALUES table from the SAME [[graft.query.Analytics7.invNormGrid]]
+    * VALUES table from the SAME [[graft.query.ml.Significance.invNormGrid]]
     * literals the Spark plan carries — neither engine evaluates a
     * normal quantile at query time, and the percentile index is the
     * grid-threshold count (⌈Φ(w)·B⌉ = 1 + #{k : Φ⁻¹(k/B) < w}). */
@@ -235,14 +236,14 @@ object MlDefs {
     bcaOracleSqlFrom(reps, sampledTarget = None)
 
   /** `sampledTarget = Some(t)` → the oracle for
-    * [[graft.query.Analytics7.evalBootstrapBcaSampled]]: identical BCa
+    * [[graft.query.ml.Significance.evalBootstrapBcaSampled]]: identical BCa
     * tail over the `ss` subsample CTE, plus the √(N/n_sub) widening
     * columns — every splice margin-carrying under the ONE stripMargin. */
   private def bcaOracleSqlFrom(reps: Int,
       sampledTarget: Option[Long]): String = {
-    val tz = Analytics7.invNormGrid(reps)
-    val zLo = Analytics7.invNormCdf(0.025)
-    val zHi = Analytics7.invNormCdf(0.975)
+    val tz = Significance.invNormGrid(reps)
+    val zLo = Significance.invNormCdf(0.025)
+    val zHi = Significance.invNormCdf(0.975)
     val zgRows = tz.zipWithIndex
       .map { case (z, i) => s"(${i + 1}, CAST($z AS DOUBLE))" }
       .mkString(", ")
@@ -405,7 +406,7 @@ object MlDefs {
     QueryDef("q1_predict_duration", Endpoints.q1Predict(_, _), oracle = None),
     QueryDef("q2_sensitivity_ml", Endpoints.q2Sensitivity(_, _), oracle = None),
     QueryDef("q3_optimal_time_ml", Endpoints.q3OptimalTime(_, _), oracle = None),
-    QueryDef("feature_woe_iv", Pipeline.featureWoeIv(_, _), Some(
+    QueryDef("feature_woe_iv", Features.featureWoeIv(_, _), Some(
       """WITH ev AS (
         |  SELECT event_type,
         |    CASE WHEN value > 50.0 THEN 1 ELSE 0 END AS y
@@ -428,7 +429,7 @@ object MlDefs {
         |FROM c2, g ORDER BY event_type""".stripMargin)),
     // skyline: the declarative NOT EXISTS dominance definition; the
     // engine's bucket-prefilter + survivor anti-join must equal it
-    QueryDef("pareto_frontier", Analytics3.paretoFrontier(_, _), Some(
+    QueryDef("pareto_frontier", Preference.paretoFrontier(_, _), Some(
       """WITH m AS (
         |  SELECT l_partkey AS p_partkey, sum(l_quantity) AS total_qty,
         |    min(l_extendedprice / l_quantity) AS min_unit_price
@@ -445,7 +446,7 @@ object MlDefs {
     // via count(CASE) so both sides emit BIGINT, not DuckDB HUGEINT
     // score mass on the ×10⁶ micro-unit grid (raw double sums of the
     // 0.9999-clamped score drifted at x10), one division back
-    QueryDef("eval_calibration_bins", Analytics3.evalCalibrationBins _, Some(
+    QueryDef("eval_calibration_bins", Calibration.evalCalibrationBins _, Some(
       """WITH s AS (
         |  SELECT vec_id,
         |    least(greatest(CAST(embedding[1] AS DOUBLE) * 2.0 + 0.5, 0.0),
@@ -457,7 +458,7 @@ object MlDefs {
         |    / 1000000.0 AS sum_score,
         |  count(CASE WHEN label % 2 = 1 THEN 1 END) AS n_pos
         |FROM s GROUP BY 1 ORDER BY 1""".stripMargin)),
-    QueryDef("eval_auc_roc", Analytics3.evalAucRoc _, Some(
+    QueryDef("eval_auc_roc", Scoring.evalAucRoc _, Some(
       """WITH s AS (
         |  SELECT least(greatest(CAST(embedding[1] AS DOUBLE) * 2.0 + 0.5,
         |    0.0), 0.9999) AS score,
@@ -480,7 +481,7 @@ object MlDefs {
         |      / 2.0)
         |    / (CAST(npos AS DOUBLE) * CAST(nneg AS DOUBLE)) AS REAL) AS auc
         |FROM agg""".stripMargin)),
-    QueryDef("train_test_split", Pipeline.trainTestSplit _, Some(
+    QueryDef("train_test_split", Features.trainTestSplit _, Some(
       """WITH d AS (
         |  SELECT doc_id, CAST(len(string_split(
         |    lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' '))
@@ -496,7 +497,7 @@ object MlDefs {
         |  CAST(sum(tok) AS BIGINT) AS n_tokens,
         |  CAST(CAST(sum(tok) AS DOUBLE) / count(*) AS REAL) AS avg_tokens
         |FROM d GROUP BY split ORDER BY split""".stripMargin)),
-    QueryDef("class_weights", Pipeline.classWeights _, Some(
+    QueryDef("class_weights", Features.classWeights _, Some(
       """WITH cc AS (
         |  SELECT event_type, count(*) AS n_class FROM events
         |  GROUP BY event_type
@@ -511,7 +512,7 @@ object MlDefs {
         |FROM events e JOIN cc ON cc.event_type = e.event_type, tot
         |WHERE e.event_id < 100
         |ORDER BY e.event_id""".stripMargin)),
-    QueryDef("feature_binning", Pipeline.featureBinning(_, _), Some(
+    QueryDef("feature_binning", Features.featureBinning(_, _), Some(
       """WITH bs AS (
         |  SELECT quantile_cont(value,
         |    [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS b
@@ -525,7 +526,7 @@ object MlDefs {
     // leave-one-out target encoding with additive smoothing, exact rationals
     // one exact integer numerator/denominator, ONE double division —
     // same assembly order as the Spark side
-    QueryDef("feature_target_encode", Pipeline.featureTargetEncode(_, _), Some(
+    QueryDef("feature_target_encode", Features.featureTargetEncode(_, _), Some(
       """WITH e AS (
         |  SELECT event_id, event_type,
         |    CAST(round(value * 1000000.0) AS BIGINT) AS v6
@@ -546,7 +547,7 @@ object MlDefs {
         |FROM e JOIN g ON e.event_type = g.event_type CROSS JOIN t
         |WHERE e.event_id < 2000
         |ORDER BY e.event_id""".stripMargin)),
-    QueryDef("eval_confusion", Pipeline.evalConfusion _, Some(
+    QueryDef("eval_confusion", Scoring.evalConfusion _, Some(
       """WITH types AS (
         |  SELECT event_type,
         |    CAST(row_number() OVER (ORDER BY event_type) - 1 AS BIGINT)
@@ -572,7 +573,7 @@ object MlDefs {
         |SELECT label, pred, n,
         |  CAST(n AS DOUBLE) / sum(n) OVER (PARTITION BY label) AS row_frac
         |FROM cells ORDER BY label, pred""".stripMargin)),
-    QueryDef("eval_retrieval_metrics", Similarity.evalRetrievalMetrics(_, _), Some(
+    QueryDef("eval_retrieval_metrics", Ranking.evalRetrievalMetrics(_, _), Some(
       """WITH qs AS (
         |  SELECT vec_id AS qid, embedding AS qe, label AS qlabel
         |  FROM embeddings WHERE vec_id < 20
@@ -596,7 +597,7 @@ object MlDefs {
         |  CAST(avg(CAST(hits AS DOUBLE) / 10) AS REAL) AS precision_at_k,
         |  CAST(avg(coalesce(1.0 / first_hit, 0.0)) AS REAL) AS mrr
         |FROM pq""".stripMargin)),
-    QueryDef("eval_pr_auc", Analytics4.evalPrAuc _, Some(
+    QueryDef("eval_pr_auc", Scoring.evalPrAuc _, Some(
       """WITH s AS (
         |  SELECT vec_id, least(greatest(CAST(embedding[1] AS DOUBLE) * 2.0
         |      + 0.5, 0.0), 0.9999) AS score,
@@ -614,7 +615,7 @@ object MlDefs {
         |  CAST(sum(tp / k) / CAST(count(*) AS DOUBLE) AS REAL)
         |    AS avg_precision
         |FROM r WHERE y = 1""".stripMargin)),
-    QueryDef("eval_brier_decomp", Analytics4.evalBrierDecomp _, Some(
+    QueryDef("eval_brier_decomp", Calibration.evalBrierDecomp _, Some(
       """WITH s AS (
         |  SELECT least(greatest(CAST(embedding[1] AS DOUBLE) * 2.0 + 0.5,
         |      0.0), 0.9999) AS p,
@@ -643,7 +644,7 @@ object MlDefs {
         |  CAST(res / n AS REAL) AS resolution,
         |  CAST((sumy / n) * (1.0 - sumy / n) AS REAL) AS uncertainty
         |FROM d""".stripMargin)),
-    QueryDef("eval_silhouette_centroid", Analytics4.evalSilhouetteCentroid _, Some(
+    QueryDef("eval_silhouette_centroid", Scoring.evalSilhouetteCentroid _, Some(
       """WITH x AS (
         |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS x
         |  FROM embeddings
@@ -670,7 +671,7 @@ object MlDefs {
         |SELECT label, CAST(count(*) AS BIGINT) AS n_points,
         |  CAST(avg((b - a) / greatest(a, b)) AS REAL) AS mean_silhouette
         |FROM ab GROUP BY label ORDER BY label""".stripMargin)),
-    QueryDef("eval_ks_test", Analytics5.evalKsTest _, Some(
+    QueryDef("eval_ks_test", Significance.evalKsTest _, Some(
       """WITH pv AS (
         |  SELECT value,
         |    sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS na,
@@ -691,7 +692,7 @@ object MlDefs {
         |  max(abs(CAST(ca AS DOUBLE) / CAST(ta AS DOUBLE)
         |    - CAST(cb AS DOUBLE) / CAST(tb AS DOUBLE))) AS ks_stat
         |FROM c, t GROUP BY ta, tb""".stripMargin)),
-    QueryDef("eval_decile_lift", Analytics5.evalDecileLift _, Some(
+    QueryDef("eval_decile_lift", Scoring.evalDecileLift _, Some(
       """WITH s AS (
         |  SELECT vec_id,
         |    least(greatest(
@@ -716,7 +717,7 @@ object MlDefs {
         |       / (SELECT CAST(nt AS DOUBLE) FROM t)) AS REAL) AS lift
         |FROM d GROUP BY decile ORDER BY decile""".stripMargin)),
     // chance-corrected inter-rater agreement (deterministic raters)
-    QueryDef("eval_cohens_kappa", Analytics5.evalCohensKappa _, Some(
+    QueryDef("eval_cohens_kappa", Agreement.evalCohensKappa _, Some(
       """WITH e AS (
         |  SELECT event_id, event_type,
         |    CAST(round(value * 1000.0) AS BIGINT) AS v3
@@ -752,7 +753,7 @@ object MlDefs {
         |FROM q""".stripMargin)),
     // McNemar's paired discordant test between the two labelers
     // McNemar: exact BIGINT contingency cells; continuity-corrected chi2
-    QueryDef("eval_mcnemar", Analytics5.evalMcnemar _, Some(
+    QueryDef("eval_mcnemar", Significance.evalMcnemar _, Some(
       """WITH e AS (
         |  SELECT event_id, event_type,
         |    CAST(round(value * 1000.0) AS BIGINT) AS v3
@@ -794,7 +795,7 @@ object MlDefs {
         |FROM c""".stripMargin)),
     // Fleiss' kappa: 3-rater 3-category chance-corrected agreement
     // Fleiss: latent cat + 3 PRF raters (7/10 agree); exact BIGINT sums
-    QueryDef("eval_fleiss_kappa", Analytics5.evalFleissKappa _, Some(
+    QueryDef("eval_fleiss_kappa", Agreement.evalFleissKappa _, Some(
       """WITH r AS (
         |  SELECT event_id,
         |    CAST('0x' || substr(md5(CAST(event_id AS VARCHAR)
@@ -853,7 +854,7 @@ object MlDefs {
     // Spearman rho + Kendall tau-b between two quality signals, per lang
     // rank corr: doubled avg ranks -> exact Long moments; Kendall P/Q by
     // the O(n^2) pair join (the engine's inversion count must equal it)
-    QueryDef("eval_rank_corr", Analytics5.evalRankCorr _, Some(
+    QueryDef("eval_rank_corr", Ranking.evalRankCorr _, Some(
       """WITH tf AS (
         |  SELECT doc_id, tok, count(*) AS tf FROM (
         |    SELECT doc_id, unnest(string_split(
@@ -926,10 +927,10 @@ object MlDefs {
         |JOIN ty USING (lang) JOIN txy USING (lang)
         |ORDER BY lang""".stripMargin)),
     // Bradley-Terry arena ratings: 8 unrolled MM rounds, bit-identical
-    QueryDef("eval_bradley_terry", Analytics5.evalBradleyTerry(_, _), Some(btOracleSql(8))),
+    QueryDef("eval_bradley_terry", Preference.evalBradleyTerry(_, _), Some(btOracleSql(8))),
     // Krippendorff's alpha: 3 raters with 25% PRF missingness, nominal
     // Krippendorff: 2nDo and n(n-1)De as exact BIGINTs, ONE division
-    QueryDef("eval_krippendorff_alpha", Analytics5.evalKrippendorffAlpha _, Some(
+    QueryDef("eval_krippendorff_alpha", Agreement.evalKrippendorffAlpha _, Some(
       """WITH r AS (
         |  SELECT event_id,
         |    CAST('0x' || substr(md5(CAST(event_id AS VARCHAR)
@@ -995,7 +996,7 @@ object MlDefs {
     // DeLong AUC variance + 95% CI (tie-aware integer placements)
     // DeLong: doubled tie-aware placements per distinct score; all
     // moments BIGINT; variance a fixed-paren double epilogue
-    QueryDef("eval_auc_delong", Analytics3.evalAucDelong _, Some(
+    QueryDef("eval_auc_delong", Scoring.evalAucDelong _, Some(
       """WITH s AS (
         |  SELECT least(greatest(CAST(embedding[1] AS DOUBLE) * 2.0 + 0.5,
         |    0.0), 0.9999) AS score,
@@ -1046,12 +1047,12 @@ object MlDefs {
         |  CAST(1.96 * sqrt(var_auc) AS REAL) AS ci95_half
         |FROM v""".stripMargin)),
     // 50-replica deterministic Poisson bootstrap of the paired delta
-    QueryDef("eval_paired_bootstrap", Analytics5.evalPairedBootstrap(_, _),
+    QueryDef("eval_paired_bootstrap", Significance.evalPairedBootstrap(_, _),
       Some(pairedBootstrapOracleSql(50))),
     // pairwise win rates + Wilson 95% bounds per model matchup
     // win-rate matrix: BIGINT wins/games per pair; Wilson bounds as a
     // fixed-paren double epilogue (z = 1.96, z2 spelled 1.96 * 1.96)
-    QueryDef("eval_win_rate_matrix", Analytics5.evalWinRateMatrix _, Some(
+    QueryDef("eval_win_rate_matrix", Preference.evalWinRateMatrix _, Some(
       """WITH e AS (
         |  SELECT event_id, event_type,
         |    CAST(round(value * 1000.0) AS BIGINT) AS v3
@@ -1094,7 +1095,7 @@ object MlDefs {
     // DPO prep: (chosen, rejected) + margin per 4-doc candidate group
     // DPO pairs: chosen = (score DESC, id ASC) pick, rejected =
     // (score ASC, id DESC) pick — distinct docs whenever n_cands >= 2
-    QueryDef("pref_pair_margin", Curation2.prefPairMargin(_, _), Some(
+    QueryDef("pref_pair_margin", Preference.prefPairMargin(_, _), Some(
       """WITH d AS (
         |  SELECT doc_id, CAST(n_chars AS BIGINT) AS score,
         |    doc_id // 4 AS group_id
@@ -1118,7 +1119,7 @@ object MlDefs {
     // the pass@k estimator in its stable product form
     // pass@k in the stable product form; NULL below k trials, exact 1.0
     // when fewer than k failures exist
-    QueryDef("eval_pass_at_k", Analytics4.evalPassAtK(_, _), Some(
+    QueryDef("eval_pass_at_k", Ranking.evalPassAtK(_, _), Some(
       """WITH t AS (
         |  SELECT user_id, CAST(count(*) AS BIGINT) AS n,
         |    CAST(sum(CASE WHEN value >= 50.0 THEN 1 ELSE 0 END)
@@ -1140,7 +1141,7 @@ object MlDefs {
     // ROUGE-N clipped-overlap P/R/F1 over adjacent-doc pairs
     // clipped n-gram overlap pair grain shared by ROUGE-N and BLEU;
     // exact BIGINT counts, ratios double then ONE cast to REAL
-    QueryDef("eval_rouge_n", TextAnalysis.evalRougeN(_, _), Some(
+    QueryDef("eval_rouge_n", TextMetrics.evalRougeN(_, _), Some(
       """WITH toks AS (
         |  SELECT doc_id // 2 AS pair_id, doc_id % 2 = 0 AS is_cand,
         |    string_split(
@@ -1190,7 +1191,7 @@ object MlDefs {
         |FROM agg ORDER BY pair_id, n""".stripMargin)),
     // BLEU-2 modified precisions + brevity penalty, same pair grain
     // BLEU-2: same clipped grain pivoted per pair; zero clip => 0.0
-    QueryDef("eval_bleu", TextAnalysis.evalBleu(_, _), Some(
+    QueryDef("eval_bleu", TextMetrics.evalBleu(_, _), Some(
       """WITH toks AS (
         |  SELECT doc_id // 2 AS pair_id, doc_id % 2 = 0 AS is_cand,
         |    string_split(
@@ -1249,7 +1250,7 @@ object MlDefs {
     // chrF2: character 1..3-gram F-score (β=2), whitespace-stripped
     // chrF2: char 1..3-gram clipped overlaps on whitespace-stripped
     // text; per-order P/R averaged (empty order contributes 0), beta=2
-    QueryDef("eval_chrf", TextAnalysis.evalChrf(_, _), Some(
+    QueryDef("eval_chrf", TextMetrics.evalChrf(_, _), Some(
       """WITH toks AS (
         |  SELECT doc_id // 2 AS pair_id, doc_id % 2 = 0 AS is_cand,
         |    replace(
@@ -1333,7 +1334,7 @@ object MlDefs {
         |FROM sc ORDER BY pair_id""".stripMargin)),
     // per-cell mutual-information contributions (never pre-summed)
     // exact joint/marginal counts; one ln per cell, REAL-cast
-    QueryDef("feature_mutual_info_terms", Pipeline.featureMutualInfoTerms(_, _), Some(
+    QueryDef("feature_mutual_info_terms", Features.featureMutualInfoTerms(_, _), Some(
       """WITH ev AS (
         |  SELECT event_type AS x,
         |    CAST(floor(value / 25.0) AS INT) AS y
@@ -1354,7 +1355,7 @@ object MlDefs {
     // fitted_i = max_{a<=i} min_{b>=i} weighted interval mean — the
     // minimax closed form of PAV; every mean is one double division of
     // exact integer sums
-    QueryDef("ml_isotonic_calibration", Analytics3.mlIsotonicCalibration(_, _), Some(
+    QueryDef("ml_isotonic_calibration", Calibration.mlIsotonicCalibration(_, _), Some(
       """WITH s AS (
         |  SELECT least(greatest(CAST(embedding[1] AS DOUBLE) * 2.0 + 0.5,
         |      0.0), 0.9999) AS score, label
@@ -1385,9 +1386,9 @@ object MlDefs {
         |ORDER BY b.bin""".stripMargin)),
     // expected / maximum calibration error over the reliability bins
     // ECE: per-bin terms pivoted to 10 fixed columns, left-assoc sum
-    QueryDef("eval_ece", Analytics3.evalEce _, Some(eceOracleSql)),
+    QueryDef("eval_ece", Calibration.evalEce _, Some(eceOracleSql)),
     // Matthews correlation + balanced accuracy + Youden's J
-    QueryDef("eval_mcc", Analytics5.evalMcc _, Some(
+    QueryDef("eval_mcc", Scoring.evalMcc _, Some(
       """WITH e AS (
         |  SELECT event_id, event_type,
         |    CAST(round(value * 1000.0) AS BIGINT) AS v3
@@ -1436,7 +1437,7 @@ object MlDefs {
         |    END AS REAL) AS youden_j
         |FROM g""".stripMargin)),
     // round 15: continuous-rating reliability (2-way random effects)
-    QueryDef("eval_icc", Analytics5.evalIcc(_, _), Some(
+    QueryDef("eval_icc", Agreement.evalIcc(_, _), Some(
       """WITH r AS (
         |  SELECT
         |    CAST('0x' || substr(md5(event_id || ':icclat'), 1, 15)
@@ -1496,7 +1497,7 @@ object MlDefs {
         |FROM m""".stripMargin)),
     // ordinal (squared-distance) Krippendorff for graded annotations
     // ordinal alpha: squared-distance pair mass, weights {1, 4, 1}
-    QueryDef("eval_krippendorff_ordinal", Analytics5.evalKrippendorffOrdinal _, Some(
+    QueryDef("eval_krippendorff_ordinal", Agreement.evalKrippendorffOrdinal _, Some(
       """WITH r AS (
         |  SELECT event_id,
         |    CAST('0x' || substr(md5(CAST(event_id AS VARCHAR)
@@ -1568,11 +1569,11 @@ object MlDefs {
         |    END AS REAL) AS alpha
         |FROM g""".stripMargin)),
     // truncated RBO: top-weighted agreement of two document rankers
-    QueryDef("eval_topk_agreement", Analytics5.evalTopkAgreement(_, _),
+    QueryDef("eval_topk_agreement", Ranking.evalTopkAgreement(_, _),
       Some(topkAgreementOracleSql(10))),
     // round 16: tie-corrected two-sample rank-sum (2×-integer ranks)
     // 2×-integer mid-ranks (2C+t+1), exact tie term, continuity-corrected z
-    QueryDef("eval_mann_whitney_u", Analytics6.evalMannWhitneyU _, Some(
+    QueryDef("eval_mann_whitney_u", Significance.evalMannWhitneyU _, Some(
       """WITH pv AS (
         |  SELECT value,
         |    sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS na,
@@ -1612,7 +1613,7 @@ object MlDefs {
         |FROM z""".stripMargin)),
     // round 16: ordinal effect size beside the rank-test p-value
     // exact integer dominance numerator; Romano magnitude bands
-    QueryDef("eval_cliffs_delta", Analytics6.evalCliffsDelta _, Some(
+    QueryDef("eval_cliffs_delta", Significance.evalCliffsDelta _, Some(
       """WITH pv AS (
         |  SELECT value,
         |    sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS na,
@@ -1646,7 +1647,7 @@ object MlDefs {
         |FROM k""".stripMargin)),
     // round 16: paired signed-rank on per-user activity-count deltas
     // paired counts → integer d; ×48-scaled exact variance
-    QueryDef("eval_wilcoxon_signed_rank", Analytics6.evalWilcoxonSignedRank _, Some(
+    QueryDef("eval_wilcoxon_signed_rank", Significance.evalWilcoxonSignedRank _, Some(
       """WITH d AS (
         |  SELECT user_id,
         |    sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
@@ -1684,7 +1685,7 @@ object MlDefs {
         |FROM k""".stripMargin)),
     // round 16: TOST — the test that can conclude "equivalent"
     // the agg_ttest_welch moment CTEs with the ±margin one-sided pair
-    QueryDef("eval_tost_equivalence", Analytics6.evalTostEquivalence(_, _), Some(
+    QueryDef("eval_tost_equivalence", Significance.evalTostEquivalence(_, _), Some(
       """WITH g AS (
         |  SELECT
         |    CAST(count(CASE WHEN event_type = 'click' THEN 1 END)
@@ -1732,7 +1733,7 @@ object MlDefs {
         |FROM t""".stripMargin)),
     // round 16: prevalence-stable agreement beside Cohen's kappa
     // same confusion cells as eval_cohens_kappa; AC1 chance term
-    QueryDef("eval_gwet_ac1", Analytics6.evalGwetAc1 _, Some(
+    QueryDef("eval_gwet_ac1", Agreement.evalGwetAc1 _, Some(
       """WITH tm AS (
         |  SELECT event_type,
         |    CAST(sum(CAST(round(value * 1000.0) AS BIGINT)) AS BIGINT)
@@ -1768,7 +1769,7 @@ object MlDefs {
         |FROM k""".stripMargin)),
     // round 16: standardized effect size beside the t/TOST verdicts
     // pooled-SD effect size from the same Welch moment CTEs
-    QueryDef("eval_cohens_d", Analytics6.evalCohensD _, Some(
+    QueryDef("eval_cohens_d", Significance.evalCohensD _, Some(
       """WITH g AS (
         |  SELECT
         |    CAST(count(CASE WHEN event_type = 'click' THEN 1 END)
@@ -1813,7 +1814,7 @@ object MlDefs {
         |FROM k""".stripMargin)),
     // round 16: minimum detectable effect at the observed sample sizes
     // Welch SE epilogue with the two-z MDE constant
-    QueryDef("eval_mde_power", Analytics6.evalMdePower _, Some(
+    QueryDef("eval_mde_power", Significance.evalMdePower _, Some(
       """WITH g AS (
         |  SELECT
         |    CAST(count(CASE WHEN event_type = 'click' THEN 1 END)
@@ -1858,7 +1859,7 @@ object MlDefs {
     // round 16: repeated-measures k-system test + rater concordance
     // complete blocks (absent types count 0), 2×-integer mid-ranks,
     // the scipy tie-corrected χ² on exact integer inputs
-    QueryDef("eval_friedman_kendall_w", Analytics6.evalFriedmanKendallW _, Some(
+    QueryDef("eval_friedman_kendall_w", Significance.evalFriedmanKendallW _, Some(
       """WITH types AS (SELECT DISTINCT event_type FROM events),
         |users AS (SELECT DISTINCT user_id FROM events),
         |counts AS (
@@ -1903,10 +1904,10 @@ object MlDefs {
         |FROM f""".stripMargin)),
     // round 17: BCa interval over the deterministic bootstrap replicas
     // round 17: BCa over the shared replica CTEs, Φ⁻¹ grid literals
-    QueryDef("eval_bootstrap_bca", Analytics7.evalBootstrapBca(_, _), Some(bcaOracleSql(50))),
+    QueryDef("eval_bootstrap_bca", Significance.evalBootstrapBca(_, _), Some(bcaOracleSql(50))),
     // round 19: the 100 TB form — replicas over a deterministic
     // hash-threshold subsample, √(N/n) widening emitted beside the CI
-    QueryDef("eval_bootstrap_bca_sampled", Analytics7.evalBootstrapBcaSampled(_, _),
+    QueryDef("eval_bootstrap_bca_sampled", Significance.evalBootstrapBcaSampled(_, _),
       Some(bcaOracleSqlFrom(50, sampledTarget = Some(4096L)))),
   )
 }

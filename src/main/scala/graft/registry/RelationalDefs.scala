@@ -1,8 +1,7 @@
 package graft.registry
 
 import graft.functions.ScalarFunctions
-import graft.query.{Analytics, Analytics2, Analytics4, Analytics5, Analytics6,
-  Pipeline, Relational, Relational2, Relational3}
+import graft.query.Relational
 
 /** The relational family, 127 queries: the SURVEY §2 operator ids
   * (`q1_agg`, `q2_sensitivity_skeleton`, `q3_optimal_time`, `s*`, `t*`,
@@ -453,14 +452,14 @@ object RelationalDefs {
         |  list_sort(embedding)[1] AS min_component,
         |  list_sort(embedding)[-1] AS max_component
         |FROM embeddings ORDER BY vec_id""".stripMargin)),
-    // second-wave relational coverage (Relational2, all oracle-backed)
-    QueryDef("agg_cube", Relational2.aggCube _, Some(
+    // second-wave relational coverage (all oracle-backed)
+    QueryDef("agg_cube", Relational.aggCube _, Some(
       """SELECT l_returnflag, l_linestatus,
         |  CAST(GROUPING(l_returnflag, l_linestatus) AS INT) AS gid,
         |  count(*) AS n_rows, CAST(sum(l_quantity) AS REAL) AS sum_qty
         |FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
         |ORDER BY gid, l_returnflag, l_linestatus""".stripMargin)),
-    QueryDef("agg_count_distinct", Relational2.aggCountDistinct _, Some(
+    QueryDef("agg_count_distinct", Relational.aggCountDistinct _, Some(
       """SELECT l_returnflag,
         |  count(DISTINCT l_partkey) AS n_parts,
         |  count(DISTINCT l_suppkey) AS n_supps,
@@ -468,20 +467,20 @@ object RelationalDefs {
         |    || CAST(l_suppkey AS VARCHAR)) AS n_part_supp,
         |  count(*) AS n_rows
         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
-    QueryDef("agg_min_max_by", Relational2.aggMinMaxBy _, Some(
+    QueryDef("agg_min_max_by", Relational.aggMinMaxBy _, Some(
       """SELECT event_type,
         |  arg_max(user_id, event_id) AS latest_user,
         |  arg_min(user_id, event_id) AS first_user,
         |  arg_max(value, event_id) AS latest_value,
         |  max(event_id) AS max_event_id
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
-    QueryDef("agg_string_concat", Relational2.aggStringConcat _, Some(
+    QueryDef("agg_string_concat", Relational.aggStringConcat _, Some(
       """SELECT l_returnflag,
         |  string_agg(DISTINCT l_linestatus, ',' ORDER BY l_linestatus)
         |    AS statuses,
         |  count(DISTINCT l_linestatus) AS n_statuses
         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
-    QueryDef("agg_conditional", Relational2.aggConditional _, Some(
+    QueryDef("agg_conditional", Relational.aggConditional _, Some(
       """SELECT event_type,
         |  CAST(count_if(value > 50) AS BIGINT) AS n_gt50,
         |  bool_and(value >= 0) AS all_nonneg,
@@ -489,7 +488,7 @@ object RelationalDefs {
         |  CAST(sum(CASE WHEN value > 50 THEN value ELSE 0.0 END) AS REAL)
         |    AS sum_gt50
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
-    QueryDef("window_ranking", Relational2.windowRanking _, Some(
+    QueryDef("window_ranking", Relational.windowRanking _, Some(
       """SELECT o_orderkey, o_orderpriority,
         |  CAST(rank() OVER w AS INT) AS rnk,
         |  CAST(dense_rank() OVER w AS INT) AS drnk,
@@ -500,7 +499,7 @@ object RelationalDefs {
         |WINDOW w AS (PARTITION BY o_orderpriority
         |  ORDER BY o_totalprice DESC, o_orderkey)
         |ORDER BY o_orderkey""".stripMargin)),
-    QueryDef("window_frames", Relational2.windowFrames _, Some(
+    QueryDef("window_frames", Relational.windowFrames _, Some(
       """SELECT event_id, user_id,
         |  CAST(sum(value) OVER (PARTITION BY user_id ORDER BY event_id
         |    ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS REAL) AS sum_3,
@@ -513,18 +512,18 @@ object RelationalDefs {
         |WINDOW wa AS (PARTITION BY user_id ORDER BY event_id
         |  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
         |ORDER BY event_id""".stripMargin)),
-    QueryDef("join_null_safe", Relational2.joinNullSafe _, Some(
+    QueryDef("join_null_safe", Relational.joinNullSafe _, Some(
       """WITH n AS (SELECT nullif(n_regionkey, 2) AS k, count(*) AS n_nations
         |  FROM nation GROUP BY nullif(n_regionkey, 2)),
         |r AS (SELECT nullif(r_regionkey, 2) AS rk, r_name FROM region)
         |SELECT n.k, r.r_name, n.n_nations
         |FROM n LEFT JOIN r ON n.k IS NOT DISTINCT FROM r.rk
         |ORDER BY n.k, r.r_name""".stripMargin)),
-    QueryDef("join_cross_small", Relational2.joinCrossSmall _, Some(
+    QueryDef("join_cross_small", Relational.joinCrossSmall _, Some(
       """SELECT r_name, o_orderstatus
         |FROM region CROSS JOIN (SELECT DISTINCT o_orderstatus FROM orders)
         |ORDER BY r_name, o_orderstatus""".stripMargin)),
-    QueryDef("subq_correlated", Relational2.subqCorrelated _, Some(
+    QueryDef("subq_correlated", Relational.subqCorrelated _, Some(
       """SELECT c_custkey, c_name,
         |  (SELECT max(o_totalprice) FROM orders o
         |    WHERE o.o_custkey = c.c_custkey) AS max_total,
@@ -534,19 +533,19 @@ object RelationalDefs {
         |FROM customer c
         |WHERE c_custkey IN (SELECT o_custkey FROM orders)
         |ORDER BY c_custkey""".stripMargin)),
-    QueryDef("f_map_struct", Relational2.fMapStruct _, Some(
+    QueryDef("f_map_struct", Relational.fMapStruct _, Some(
       """SELECT o_orderkey,
         |  CASE o_orderstatus WHEN 'F' THEN 1 WHEN 'O' THEN 2
         |    WHEN 'P' THEN 3 END AS status_code,
         |  o_orderpriority AS prio_via_struct,
         |  o_orderstatus AS status_key
         |FROM orders ORDER BY o_orderkey""".stripMargin)),
-    QueryDef("f_json_nested", Relational2.fJsonNested _, Some(
+    QueryDef("f_json_nested", Relational.fJsonNested _, Some(
       """SELECT o_orderkey, o_orderstatus AS status_rt,
         |  o_orderpriority AS prio_rt, o_custkey AS custkey_rt,
         |  CAST(1 AS INT) AS n_ks
         |FROM orders ORDER BY o_orderkey""".stripMargin)),
-    QueryDef("unpivot_metrics", Relational2.unpivotMetrics _, Some(
+    QueryDef("unpivot_metrics", Relational.unpivotMetrics _, Some(
       """SELECT l_returnflag, 'sum_qty' AS metric,
         |  CAST(sum(l_quantity) AS REAL) AS value
         |FROM lineitem GROUP BY l_returnflag
@@ -557,17 +556,17 @@ object RelationalDefs {
         |SELECT l_returnflag, 'n_rows', CAST(count(*) AS REAL)
         |FROM lineitem GROUP BY l_returnflag
         |ORDER BY l_returnflag, metric""".stripMargin)),
-    QueryDef("o3_limit_offset", Relational2.o3LimitOffset _, Some(
+    QueryDef("o3_limit_offset", Relational.o3LimitOffset _, Some(
       """SELECT o_orderkey, o_totalprice FROM orders
         |ORDER BY o_totalprice DESC, o_orderkey
         |LIMIT 20 OFFSET 10""".stripMargin)),
-    QueryDef("lateral_explode", Relational2.lateralExplode _, Some(
+    QueryDef("lateral_explode", Relational.lateralExplode _, Some(
       """SELECT doc_id, CAST(ii.i - 1 AS INT) AS pos, d.toks[ii.i] AS tok
         |FROM (SELECT doc_id, string_split(text, ' ') AS toks
         |      FROM documents WHERE doc_id < 50) d,
         |  LATERAL (SELECT unnest(generate_series(1, len(d.toks))) AS i) ii
         |ORDER BY doc_id, pos""".stripMargin)),
-    QueryDef("agg_bitwise", Relational2.aggBitwise _, Some(
+    QueryDef("agg_bitwise", Relational.aggBitwise _, Some(
       """SELECT event_type,
         |  bit_and(user_id) AS uid_and,
         |  bit_or(user_id) AS uid_or,
@@ -618,12 +617,12 @@ object RelationalDefs {
         |  xor(user_id, event_id) AS uid_xor_eid,
         |  CAST(bit_count(user_id) AS INT) AS uid_bits
         |FROM events ORDER BY event_id""".stripMargin)),
-    QueryDef("typed_pipeline", Relational2.typedPipeline _, Some(
+    QueryDef("typed_pipeline", Relational.typedPipeline _, Some(
       """SELECT event_type, count(*) AS n_high, max(event_id) AS max_event_id,
         |  CAST(count(DISTINCT user_id) AS INT) AS n_users
         |FROM events WHERE value > 10
         |GROUP BY event_type ORDER BY event_type""".stripMargin)),
-    QueryDef("window_range_frame", Relational2.windowRangeFrame _, Some(
+    QueryDef("window_range_frame", Relational.windowRangeFrame _, Some(
       """SELECT event_id, user_id,
         |  count(*) OVER w AS n_trailing_10m,
         |  CAST(sum(value) OVER w AS REAL) AS sum_trailing_10m
@@ -631,7 +630,7 @@ object RelationalDefs {
         |WINDOW w AS (PARTITION BY user_id ORDER BY sec
         |  RANGE BETWEEN 600 PRECEDING AND CURRENT ROW)
         |ORDER BY event_id""".stripMargin)),
-    QueryDef("join_skew_salted", Relational2.joinSkewSalted(_, _), Some(
+    QueryDef("join_skew_salted", Relational.joinSkewSalted(_, _), Some(
       """SELECT c_mktsegment, count(*) AS n,
         |  CAST(sum(value) AS REAL) AS sum_value
         |FROM (SELECT CASE WHEN event_id % 10 < 7 THEN 1
@@ -640,36 +639,36 @@ object RelationalDefs {
         |JOIN customer ON f.k = c_custkey
         |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)),
     // approximate sketches, reshaped for the oracle: exact values plus
-    // boolean within-5% contract columns (Relational2.aggApproxSketch)
+    // boolean within-5% contract columns (Relational.aggApproxSketch)
     // — hash-exact in CORRECTNESS, not part of the rows-only allowlist
-    QueryDef("agg_approx_sketch", Relational2.aggApproxSketch _, Some(
+    QueryDef("agg_approx_sketch", Relational.aggApproxSketch _, Some(
       """SELECT event_type,
         |  count(DISTINCT user_id) AS exact_users,
         |  TRUE AS approx_users_ok,
         |  CAST(quantile_cont(value, 0.5) AS REAL) AS exact_p50,
         |  TRUE AS approx_p50_ok
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
-    QueryDef("agg_grouping_sets", Relational2.aggGroupingSets _, Some(
+    QueryDef("agg_grouping_sets", Relational.aggGroupingSets _, Some(
       """SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
         |  CAST(sum(l_extendedprice) AS REAL) AS sum_price
         |FROM lineitem
         |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
         |ORDER BY l_returnflag, l_linestatus""".stripMargin)),
-    QueryDef("o4_sort_nulls", Relational2.o4SortNulls _, Some(
+    QueryDef("o4_sort_nulls", Relational.o4SortNulls _, Some(
       """SELECT o_orderkey, nullif(o_orderpriority, '3-MEDIUM') AS prio_n,
         |  o_orderstatus
         |FROM orders
         |ORDER BY prio_n ASC NULLS FIRST, o_orderstatus DESC NULLS LAST,
         |  o_orderkey
         |LIMIT 200""".stripMargin)),
-    QueryDef("t10_distinct", Relational2.t10Distinct _, Some(
+    QueryDef("t10_distinct", Relational.t10Distinct _, Some(
       """SELECT DISTINCT lang, source FROM documents
         |ORDER BY lang, source""".stripMargin)),
-    QueryDef("agg_having", Relational2.aggHaving _, Some(
+    QueryDef("agg_having", Relational.aggHaving _, Some(
       """SELECT o_custkey, count(*) AS n_orders
         |FROM orders GROUP BY o_custkey
         |HAVING count(*) >= 3 ORDER BY o_custkey""".stripMargin)),
-    QueryDef("join_self_nextline", Relational2.joinSelfNextline _, Some(
+    QueryDef("join_self_nextline", Relational.joinSelfNextline _, Some(
       """SELECT a.l_orderkey, a.l_linenumber, a.l_quantity,
         |  b.l_quantity AS next_quantity
         |FROM lineitem a JOIN lineitem b
@@ -687,12 +686,12 @@ object RelationalDefs {
         |  regexp_extract(url, '^https?://[^/?#]+(/[^?#]*)', 1) AS path,
         |  regexp_extract(url, '\?([^#]*)', 1) AS query
         |FROM u ORDER BY doc_id""".stripMargin)),
-    QueryDef("window_ratio_to_report", Relational2.windowRatioToReport _, Some(
+    QueryDef("window_ratio_to_report", Relational.windowRatioToReport _, Some(
       """SELECT event_id, event_type,
         |  CAST(value / CAST(CAST(sum(value) OVER
         |    (PARTITION BY event_type) AS REAL) AS DOUBLE) AS REAL) AS share
         |FROM events ORDER BY event_id""".stripMargin)),
-    QueryDef("set_ops_union_by_name", Relational2.setOpsUnionByName _, Some(
+    QueryDef("set_ops_union_by_name", Relational.setOpsUnionByName _, Some(
       """SELECT r_name AS name, 'region' AS kind,
         |  r_regionkey AS region_key, CAST(NULL AS INT) AS nation_key
         |FROM region
@@ -700,7 +699,7 @@ object RelationalDefs {
         |SELECT n_name, 'nation', CAST(NULL AS INT), n_nationkey
         |FROM nation
         |ORDER BY kind, name""".stripMargin)),
-    QueryDef("window_gaps_islands", Relational2.windowGapsIslands _, Some(
+    QueryDef("window_gaps_islands", Relational.windowGapsIslands _, Some(
       """WITH g AS (
         |  SELECT user_id, event_type,
         |    row_number() OVER (PARTITION BY user_id ORDER BY event_id)
@@ -717,12 +716,12 @@ object RelationalDefs {
         |ORDER BY user_id, event_type""".stripMargin)),
     // round 3: layout-aware joins, merge, windows, sampling, fuzzy match
     // round 3 additions
-    QueryDef("join_bucketed", Relational3.joinBucketed _, Some(
+    QueryDef("join_bucketed", Relational.joinBucketed _, Some(
       """SELECT c_mktsegment, count(*) AS n_orders,
         |  CAST(sum(o_totalprice) AS REAL) AS sum_price
         |FROM orders JOIN customer ON o_custkey = c_custkey
         |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)),
-    QueryDef("window_distribution", Relational3.windowDistribution _, Some(
+    QueryDef("window_distribution", Relational.windowDistribution _, Some(
       """SELECT l_orderkey, l_linenumber,
         |  percent_rank() OVER w AS pr,
         |  cume_dist() OVER w AS cd,
@@ -737,7 +736,7 @@ object RelationalDefs {
         |    ORDER BY l_linenumber, l_partkey, l_suppkey, l_quantity
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
         |ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey""".stripMargin)),
-    QueryDef("f_fuzzy_match", Relational3.fuzzyNameMatch(_, _), Some(
+    QueryDef("f_fuzzy_match", Relational.fuzzyNameMatch(_, _), Some(
       """WITH p AS (
         |  SELECT p_partkey, p_brand, p_size, p_name,
         |    CAST(floor(strlen(p_name) / 8) AS BIGINT) AS band
@@ -759,7 +758,7 @@ object RelationalDefs {
         |JOIN p b ON b.p_partkey = c.part_b
         |WHERE levenshtein(a.p_name, b.p_name) <= 18
         |ORDER BY part_a, part_b""".stripMargin)),
-    QueryDef("window_funnel", Relational3.windowFunnel(_, _), Some(
+    QueryDef("window_funnel", Relational.windowFunnel(_, _), Some(
       """WITH ev AS (SELECT user_id, event_type, ts FROM events),
         |t1 AS (SELECT user_id, min(ts) AS t1 FROM ev
         |       WHERE event_type = 'view' GROUP BY user_id),
@@ -779,14 +778,14 @@ object RelationalDefs {
         |LEFT JOIN t2 USING (user_id)
         |LEFT JOIN t3 USING (user_id)
         |GROUP BY 1 ORDER BY funnel_stage""".stripMargin)),
-    QueryDef("window_fill_forward", Relational3.windowFillForward _, Some(
+    QueryDef("window_fill_forward", Relational.windowFillForward _, Some(
       """SELECT event_id, user_id,
         |  CASE WHEN value > 50 THEN value END AS good,
         |  last_value(CASE WHEN value > 50 THEN value END IGNORE NULLS)
         |    OVER (PARTITION BY user_id ORDER BY event_id
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS filled
         |FROM events ORDER BY event_id""".stripMargin)),
-    QueryDef("window_cumulative_distinct", Pipeline.windowCumulativeDistinct(_, _), Some(
+    QueryDef("window_cumulative_distinct", Relational.windowCumulativeDistinct(_, _), Some(
       """WITH marked AS (
         |  SELECT event_id, event_type, ts,
         |    CASE WHEN row_number() OVER (PARTITION BY event_type, user_id
@@ -801,14 +800,14 @@ object RelationalDefs {
         |)
         |SELECT event_id, event_type, cum_distinct_users FROM cum
         |WHERE event_id < 3000 ORDER BY event_id""".stripMargin)),
-    QueryDef("window_rolling_median", Analytics.rollingMedian(_, _), Some(
+    QueryDef("window_rolling_median", Relational.rollingMedian(_, _), Some(
       """SELECT event_id, user_id, value,
         |  CAST(quantile_cont(value, 0.5) OVER (
         |    PARTITION BY user_id ORDER BY ts, event_id
         |    ROWS BETWEEN 6 PRECEDING AND CURRENT ROW) AS REAL)
         |    AS rolling_median
         |FROM events WHERE user_id < 40 ORDER BY event_id""".stripMargin)),
-    QueryDef("window_ewma", Analytics.windowEwma(_, _), Some(
+    QueryDef("window_ewma", Relational.windowEwma(_, _), Some(
       """WITH f AS (
         |  SELECT event_id, user_id, value,
         |    list(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
@@ -820,7 +819,7 @@ object RelationalDefs {
         |      FROM (SELECT unnest(generate_series(1, len(frame))) AS i))
         |    / (2.0 - pow(0.5, len(frame) - 1)) AS REAL) AS ewma
         |FROM f ORDER BY event_id""".stripMargin)),
-    QueryDef("agg_sketch_merge", Analytics.aggSketchMerge _, Some(
+    QueryDef("agg_sketch_merge", Relational.aggSketchMerge _, Some(
       """WITH pn AS (
         |  SELECT n.n_regionkey, c.c_nationkey,
         |    count(DISTINCT c.c_custkey) AS n_exact
@@ -832,7 +831,7 @@ object RelationalDefs {
         |  TRUE AS est_within_8pct
         |FROM pn JOIN region r ON r.r_regionkey = pn.n_regionkey
         |GROUP BY r.r_name ORDER BY r.r_name""".stripMargin)),
-    QueryDef("agg_mode_per_key", Analytics.aggModePerKey(_, _), Some(
+    QueryDef("agg_mode_per_key", Relational.aggModePerKey(_, _), Some(
       """WITH c AS (
         |  SELECT user_id, event_type, count(*) AS n FROM events
         |  WHERE user_id < 200 GROUP BY 1, 2
@@ -845,14 +844,14 @@ object RelationalDefs {
         |)
         |SELECT user_id, n_types, event_type AS mode_type, n AS mode_n
         |FROM r WHERE rn = 1 ORDER BY user_id""".stripMargin)),
-    QueryDef("agg_decimal_exact", Analytics2.aggDecimalExact _, Some(
+    QueryDef("agg_decimal_exact", Relational.aggDecimalExact _, Some(
       """SELECT l_returnflag, l_linestatus, count(*) AS n,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)))
         |    AS DECIMAL(28,2)) AS sum_price,
         |  CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
         |    AS DECIMAL(18,4))) AS DECIMAL(28,4)) AS sum_net
         |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
-    QueryDef("agg_countmin_freq", Analytics2.aggCountminFreq(_, _), Some(
+    QueryDef("agg_countmin_freq", Relational.aggCountminFreq(_, _), Some(
       """WITH ev AS (SELECT user_id FROM events),
         |cells AS (
         |  SELECT r, CAST('0x' || substr(md5('cm' || r || ':'
@@ -874,7 +873,7 @@ object RelationalDefs {
         |FROM probes JOIN cells USING (r, b)
         |GROUP BY user_id, n
         |ORDER BY n DESC, user_id""".stripMargin)),
-    QueryDef("agg_linreg_by_group", Analytics4.aggLinregByGroup _, Some(
+    QueryDef("agg_linreg_by_group", Relational.aggLinregByGroup _, Some(
       """WITH a AS (
         |  SELECT l_returnflag AS rf, CAST(count(*) AS DOUBLE) AS n,
         |    sum(CAST(l_quantity AS DOUBLE)) AS sx,
@@ -894,7 +893,7 @@ object RelationalDefs {
         |  CAST(((n * sxy - sx * sy) * (n * sxy - sx * sy))
         |    / ((n * sxx - sx * sx) * (n * syy - sy * sy)) AS REAL) AS r2
         |FROM a ORDER BY rf""".stripMargin)),
-    QueryDef("join_asof_nearest", Analytics4.joinAsofNearest _, Some(
+    QueryDef("join_asof_nearest", Relational.joinAsofNearest _, Some(
       """WITH e AS (
         |  SELECT user_id, ts, event_id, event_type FROM events
         |  WHERE event_type IN ('purchase', 'error')
@@ -929,7 +928,7 @@ object RelationalDefs {
     // frame lists + explicit sequential folds on BOTH sides (the ewma
     // discipline): the closed-form slope cancels catastrophically at
     // epoch-hour magnitudes, so only bit-identical op order agrees
-    QueryDef("window_rolling_slope", Analytics4.windowRollingSlope(_, _), Some(
+    QueryDef("window_rolling_slope", Relational.windowRollingSlope(_, _), Some(
       """WITH f AS (
         |  SELECT event_id, user_id,
         |    list(CAST(epoch_us(ts) AS DOUBLE) / 3600000000.0)
@@ -955,14 +954,14 @@ object RelationalDefs {
         |    THEN (n * sxy - sx * sy) / (n * sxx - sx * sx)
         |    ELSE NULL END AS REAL) AS slope_per_hour
         |FROM s ORDER BY event_id""".stripMargin)),
-    QueryDef("window_drawdown", Analytics4.windowDrawdown(_, _), Some(
+    QueryDef("window_drawdown", Relational.windowDrawdown(_, _), Some(
       """SELECT event_id, user_id, CAST(value AS REAL) AS value,
         |  CAST(max(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
         |    ROWS UNBOUNDED PRECEDING) AS REAL) AS peak,
         |  CAST(max(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
         |    ROWS UNBOUNDED PRECEDING) - value AS REAL) AS drawdown
         |FROM events WHERE user_id < 100 ORDER BY event_id""".stripMargin)),
-    QueryDef("agg_pareto_concentration", Analytics4.aggParetoConcentration _, Some(
+    QueryDef("agg_pareto_concentration", Relational.aggParetoConcentration _, Some(
       """WITH pp AS (
         |  SELECT l_partkey,
         |    CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
@@ -984,7 +983,7 @@ object RelationalDefs {
         |      THEN cents ELSE 0 END) AS DOUBLE) / CAST(t.t AS DOUBLE)
         |    AS top_decile_share
         |FROM r CROSS JOIN t GROUP BY t.t, t.p""".stripMargin)),
-    QueryDef("join_asof_tolerance", Analytics4.joinAsofTolerance(_, _), Some(
+    QueryDef("join_asof_tolerance", Relational.joinAsofTolerance(_, _), Some(
       """WITH e AS (
         |  SELECT user_id, ts, event_id, event_type FROM events
         |  WHERE event_type IN ('purchase', 'error')
@@ -1005,7 +1004,7 @@ object RelationalDefs {
         |    AS gap_us
         |FROM n WHERE event_type = 'purchase'
         |ORDER BY user_id, event_id""".stripMargin)),
-    QueryDef("agg_gini_cents", Analytics4.aggGiniCents _, Some(
+    QueryDef("agg_gini_cents", Relational.aggGiniCents _, Some(
       """WITH pp AS (
         |  SELECT l_partkey,
         |    CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
@@ -1023,12 +1022,12 @@ object RelationalDefs {
         |  - (CAST(count(*) AS DOUBLE) + 1.0) / CAST(count(*) AS DOUBLE)
         |    AS gini
         |FROM r""".stripMargin)),
-    QueryDef("join_dpp_pruned", Relational2.joinDppPruned _, Some(
+    QueryDef("join_dpp_pruned", Relational.joinDppPruned _, Some(
       """SELECT event_type, count(*) AS n,
         |  CAST(sum(value) AS REAL) AS sum_value
         |FROM events WHERE event_type IN ('click', 'view')
         |GROUP BY event_type ORDER BY event_type""".stripMargin)),
-    QueryDef("agg_entropy_by_key", Analytics4.aggEntropyByKey _, Some(
+    QueryDef("agg_entropy_by_key", Relational.aggEntropyByKey _, Some(
       """WITH c AS (
         |  SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS n
         |  FROM events GROUP BY 1, 2
@@ -1043,14 +1042,14 @@ object RelationalDefs {
         |    AS entropy_nats
         |FROM c JOIN t USING (user_id)
         |GROUP BY c.user_id, t.n_types ORDER BY user_id""".stripMargin)),
-    QueryDef("agg_bitmap_distinct", Analytics4.aggBitmapDistinct _, Some(
+    QueryDef("agg_bitmap_distinct", Relational.aggBitmapDistinct _, Some(
       """SELECT n_regionkey,
         |  CAST(count(DISTINCT c_custkey) AS BIGINT) AS n_customers_exact,
         |  CAST(count(DISTINCT c_custkey) AS BIGINT) AS n_customers_bitmap,
         |  TRUE AS bitmap_is_exact
         |FROM customer JOIN nation ON c_nationkey = n_nationkey
         |GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin)),
-    QueryDef("agg_weighted_median", Analytics5.aggWeightedMedian _, Some(
+    QueryDef("agg_weighted_median", Relational.aggWeightedMedian _, Some(
       """WITH li AS (
         |  SELECT l_returnflag AS rf, l_quantity AS q,
         |    CAST(round(l_extendedprice * 100) AS BIGINT) AS w_cents,
@@ -1071,14 +1070,14 @@ object RelationalDefs {
     // the oracle is the brute-force all-pairs truth over the DISTINCT
     // name vocabulary; matching it proves the FastSS deletion-
     // neighborhood candidate generation is complete
-    QueryDef("join_edit_distance", Analytics5.joinEditDistance(_, _), Some(
+    QueryDef("join_edit_distance", Relational.joinEditDistance(_, _), Some(
       """WITH n AS (SELECT DISTINCT p_name AS name FROM part)
         |SELECT a.name AS name_a, b.name AS name_b,
         |  CAST(levenshtein(a.name, b.name) AS INT) AS dist
         |FROM n a JOIN n b ON a.name < b.name
         |WHERE levenshtein(a.name, b.name) <= 2
         |ORDER BY name_a, name_b""".stripMargin)),
-    QueryDef("f_variant_json", Analytics5.fVariantJson _, Some(
+    QueryDef("f_variant_json", Relational.fVariantJson _, Some(
       """SELECT event_type,
         |  CAST(count(CAST(props->>'$.k' AS INT)) AS BIGINT) AS n_with_k,
         |  CAST(sum(CAST(props->>'$.k' AS INT)) AS BIGINT) AS sum_k,
@@ -1087,7 +1086,7 @@ object RelationalDefs {
         |  CAST(sum(CAST(props->>'$.k' AS INT)) AS DOUBLE)
         |    / CAST(count(CAST(props->>'$.k' AS INT)) AS DOUBLE) AS avg_k
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
-    QueryDef("agg_histogram_quantiles", Analytics5.aggHistogramQuantiles(_, _), Some(
+    QueryDef("agg_histogram_quantiles", Relational.aggHistogramQuantiles(_, _), Some(
       """WITH x AS (SELECT l_extendedprice AS x FROM lineitem),
         |ext AS (SELECT min(x) AS lo, max(x) AS hi FROM x),
         |c AS (
@@ -1115,7 +1114,7 @@ object RelationalDefs {
         |    AS REAL) AS estimate
         |FROM t JOIN cum ON k > cum_before AND k <= cum_before + n
         |ORDER BY q""".stripMargin)),
-    QueryDef("agg_dow_hour_grid", Analytics5.aggDowHourGrid _, Some(
+    QueryDef("agg_dow_hour_grid", Relational.aggDowHourGrid _, Some(
       """WITH e AS (
         |  SELECT epoch_us(ts) AS us, user_id FROM events
         |)
@@ -1124,7 +1123,7 @@ object RelationalDefs {
         |  CAST(count(*) AS BIGINT) AS n_events,
         |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
         |FROM e GROUP BY 1, 2 ORDER BY dow, hour""".stripMargin)),
-    QueryDef("join_asof_forward", Analytics5.joinAsofForward(_, _), Some(
+    QueryDef("join_asof_forward", Relational.joinAsofForward(_, _), Some(
       """WITH e AS (
         |  SELECT user_id, ts, event_id, event_type FROM events
         |  WHERE event_type IN ('purchase', 'error')
@@ -1146,7 +1145,7 @@ object RelationalDefs {
         |FROM n WHERE event_type = 'error'
         |ORDER BY user_id, event_id""".stripMargin)),
     // Welch's two-sample t-test from exact scaled-integer moments
-    QueryDef("agg_ttest_welch", Analytics5.aggTtestWelch _, Some(
+    QueryDef("agg_ttest_welch", Relational.aggTtestWelch _, Some(
       """WITH g AS (
         |  SELECT
         |    CAST(count(CASE WHEN event_type = 'click' THEN 1 END)
@@ -1189,7 +1188,7 @@ object RelationalDefs {
         |     + se2 * se2 / CAST(n2 - 1 AS DOUBLE)) AS REAL) AS df
         |FROM v""".stripMargin)),
     // exact distribution-shape moments via DECIMAL(38) power sums
-    QueryDef("agg_skew_kurtosis", Analytics5.aggSkewKurtosis _, Some(
+    QueryDef("agg_skew_kurtosis", Relational.aggSkewKurtosis _, Some(
       """WITH x AS (
         |  SELECT event_type,
         |    CAST(CAST(round(value * 1000.0) AS BIGINT) AS HUGEINT) AS x
@@ -1222,7 +1221,7 @@ object RelationalDefs {
         |FROM c ORDER BY event_type""".stripMargin)),
     // Kadane best-streak per user (sorted-group sequential recurrence)
     // Kadane's recurrence as a recursive CTE on ×n-scaled integers
-    QueryDef("window_max_subarray", Analytics5.windowMaxSubarray _, Some(
+    QueryDef("window_max_subarray", Relational.windowMaxSubarray _, Some(
       """WITH RECURSIVE ev AS (
         |  SELECT user_id, event_id, epoch_us(ts) AS us,
         |    CAST(round(value * 1000000.0) AS BIGINT) AS v6
@@ -1256,7 +1255,7 @@ object RelationalDefs {
     // AMS F2 frequency-moment sketch beside its exact companion
     // 16 ±1-hashed counters over per-user counts; all-integer until the
     // final relative-error division
-    QueryDef("agg_ams_f2", Analytics4.aggAmsF2(_, _), Some(
+    QueryDef("agg_ams_f2", Relational.aggAmsF2(_, _), Some(
       """WITH f AS (
         |  SELECT user_id, CAST(count(*) AS BIGINT) AS f
         |  FROM events GROUP BY user_id
@@ -1280,7 +1279,7 @@ object RelationalDefs {
     // rolling mean ± 2σ envelope with integer-exact breakout verdicts
     // BIGINT rolling sums (order-independent under segment-tree sliding
     // windows); breakout verdicts cross-multiplied onto exact integers
-    QueryDef("window_bollinger_bands", Analytics4.windowBollingerBands(_, _), Some(
+    QueryDef("window_bollinger_bands", Relational.windowBollingerBands(_, _), Some(
       """WITH ev AS (
         |  SELECT user_id, ts, event_id, value,
         |    CAST(round(value * 1000.0) AS BIGINT) AS v3
@@ -1309,7 +1308,7 @@ object RelationalDefs {
     // median/MAD are picks from sorted ×10³ integers; DuckDB's vals[4]
     // is NULL when the frame has < 4 rows (user with ≤ 3 events), and
     // the Spark side when-guards its element_at to the same NULL
-    QueryDef("window_hampel_filter", Analytics4.windowHampelFilter(_, _), Some(
+    QueryDef("window_hampel_filter", Relational.windowHampelFilter(_, _), Some(
       """WITH ev AS (
         |  SELECT user_id, ts, event_id, value,
         |    CAST(round(value * 1000.0) AS BIGINT) AS v3
@@ -1342,7 +1341,7 @@ object RelationalDefs {
     // heavy-tail-robust mean (median of 16 hash-bucket means)
     // 16 hash-bucket means (exact-rational divisions), median of the
     // sorted 16 (average of the two middle picks)
-    QueryDef("agg_median_of_means", Analytics4.aggMedianOfMeans(_, _), Some(
+    QueryDef("agg_median_of_means", Relational.aggMedianOfMeans(_, _), Some(
       """WITH ev AS (
         |  SELECT CAST(round(value * 1000.0) AS BIGINT) AS v3,
         |    CAST('0x' || substr(md5(CAST(event_id AS VARCHAR) || ':mom'),
@@ -1371,7 +1370,7 @@ object RelationalDefs {
         |FROM ms, tot""".stripMargin)),
     // round 16: rolling autocorrelation regime monitor
     // the Bollinger integer-moment discipline on (x, lag(x)) pairs
-    QueryDef("window_rolling_autocorr", Analytics6.windowRollingCorr(_, _), Some(
+    QueryDef("window_rolling_autocorr", Relational.windowRollingCorr(_, _), Some(
       """WITH e AS (
         |  SELECT user_id, ts, event_id,
         |    CAST(round(value * 1000.0) AS BIGINT) AS x
@@ -1404,7 +1403,7 @@ object RelationalDefs {
         |FROM m ORDER BY user_id, event_id""".stripMargin)),
     // round 16: decomposable inequality beside the Lorenz pair
     // cross-multiplied integer-fed x·ln(x) terms; REAL absorbs fold order
-    QueryDef("agg_theil_index", Analytics6.aggTheilIndex _, Some(
+    QueryDef("agg_theil_index", Relational.aggTheilIndex _, Some(
       """WITH o AS (
         |  SELECT o_orderpriority AS priority,
         |    CAST(round(o_totalprice * 100) AS BIGINT) AS cents

@@ -1,8 +1,7 @@
 package graft.registry
 
-import graft.query.{Analytics, Analytics2, Analytics3, Analytics4, Analytics5,
-  Analytics6, Analytics7, Curation, Curation2, Pipeline, Relational2,
-  Relational3, Similarity, Warehouse2}
+import graft.query.stats.{Anomaly, Drift, Privacy, Quality, Sampling,
+  TimeSeries}
 
 /** The stats family, 62 queries: `anomaly_`, `drift_`, `ts_`,
   * `privacy_`, `sample_`, `heavy_`, `histogram_`, `winsorized_`,
@@ -66,11 +65,11 @@ object StatsDefs {
 
   /** Oracle for `privacy_budget_ledger`: the VALUES panel and the two
     * composition epilogues are rendered from the SAME Scala inventory
-    * ([[Analytics7.defaultDpReleases]]) and constants the engine uses,
+    * ([[Privacy.defaultDpReleases]]) and constants the engine uses,
     * so no libm exp/ln runs in either engine and every sum is an exact
     * BIGINT — only fixed-paren double epilogues remain. */
   private lazy val privacyLedgerOracleSql: String = {
-    val rows = Analytics7.defaultDpReleases
+    val rows = Privacy.defaultDpReleases
       .map(r => s"('${r.release}', '${r.mechanism}', " +
         s"'${r.privacy_model}', ${r.n_draws}, ${r.eps_u}, ${r.lin_n})")
       .mkString(",\n      |    ")
@@ -97,7 +96,7 @@ object StatsDefs {
       |UNION ALL
       |SELECT 'zz_composition_advanced', 'advanced_composition',
       |  'central+local', n, CAST(NULL AS BIGINT),
-      |  CAST(sqrt(2.0 * ${Analytics7.lnInvDelta}
+      |  CAST(sqrt(2.0 * ${Privacy.lnInvDelta}
       |      * (CAST(ssq AS DOUBLE) / 1000000000000.0))
       |    + CAST(sl AS DOUBLE) / 1000000000.0 AS REAL)
       |FROM t
@@ -170,7 +169,7 @@ object StatsDefs {
         |SELECT user_id, event_id, rn, z, k AS k_gain, x AS x_filt
         |FROM st ORDER BY user_id, rn""".stripMargin
 
-  /** [[graft.query.Analytics6.tsCroston]] and its streaming twin: the
+  /** [[graft.query.stats.TimeSeries.tsCroston]] and its streaming twin: the
     * two-EWMA intermittent-demand recurrence replayed per purchase in
     * (ts, event_id) order; the gap precomputes via lag so only the
     * smoothers live in the recursion. */
@@ -199,7 +198,7 @@ object StatsDefs {
         |  zh AS z_hat, qh AS q_hat, zh / qh AS forecast
         |FROM st ORDER BY user_id, rn""".stripMargin
 
-  /** [[graft.query.Analytics6.tsCusumTarget]] and its streaming twin:
+  /** [[graft.query.stats.TimeSeries.tsCusumTarget]] and its streaming twin:
     * the clamped Page recurrence S⁺ᵢ = max(0, S⁺ᵢ₋₁ + (v − 50 − 5))
     * replayed per user in (ts, event_id) order — the
     * [[kalmanRecurrenceSql]] recursive-CTE discipline, identical
@@ -226,12 +225,12 @@ object StatsDefs {
         |FROM st ORDER BY user_id, rn""".stripMargin
 
   val defs: Seq[QueryDef] = Seq(
-    QueryDef("sample_hash_det", Relational2.sampleHashDet _, Some(
+    QueryDef("sample_hash_det", Sampling.sampleHashDet _, Some(
       """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
         |WHERE CAST('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 15)
         |  AS BIGINT) % 10 = 0
         |ORDER BY o_orderkey""".stripMargin)),
-    QueryDef("ts_gapfill", Relational2.tsGapfill _, Some(
+    QueryDef("ts_gapfill", TimeSeries.tsGapfill _, Some(
       """WITH ev AS (
         |  SELECT date_trunc('hour', ts) AS h, event_type, value FROM events
         |), hourly AS (
@@ -251,7 +250,7 @@ object StatsDefs {
         |FROM grid LEFT JOIN hourly
         |  ON grid.h = hourly.h AND grid.event_type = hourly.event_type
         |ORDER BY grid.h, grid.event_type""".stripMargin)),
-    QueryDef("ts_mann_kendall", Analytics4.tsMannKendall(_, _), Some(
+    QueryDef("ts_mann_kendall", TimeSeries.tsMannKendall(_, _), Some(
       """WITH ev AS (
         |  SELECT user_id, epoch_us(ts) AS us, event_id,
         |    CAST(round(value * 1000000.0) AS BIGINT) AS v6
@@ -297,7 +296,7 @@ object StatsDefs {
         |  sen.sen_slope
         |FROM s JOIN ties t USING (user_id) JOIN sen USING (user_id)
         |ORDER BY user_id""".stripMargin)),
-    QueryDef("dq_benford_test", Warehouse2.dqBenfordTest _, Some(
+    QueryDef("dq_benford_test", Quality.dqBenfordTest _, Some(
       """WITH d AS (
         |  SELECT CAST(substr(CAST(CAST(round(o_totalprice * 100) AS BIGINT)
         |    AS VARCHAR), 1, 1) AS INT) AS digit
@@ -319,7 +318,7 @@ object StatsDefs {
     // greedy farthest-point selection: k map-only scans, no libm
     // the greedy farthest-point unroll, one CTE pair per pick — the
     // same generated-unroll discipline as retrieval_mmr_topk
-    QueryDef("sample_kcenter_coreset", Similarity.sampleKcenterCoreset(_, _), Some(
+    QueryDef("sample_kcenter_coreset", Sampling.sampleKcenterCoreset(_, _), Some(
       {
       val ctes = (2 to 8).map { i =>
         val prevUnion = (1 until i)
@@ -355,7 +354,7 @@ object StatsDefs {
     })),
     // per-column UNION ALL is the oracle spelling; the engine computes
     // the same numbers in ONE multi-distinct scan
-    QueryDef("profile_table_stats", Analytics3.profileTableStats _, Some(
+    QueryDef("profile_table_stats", Quality.profileTableStats _, Some(
       """SELECT 'l_discount' AS col, count(*) AS n_rows,
         |  count(l_discount) AS n_nonnull, count(DISTINCT l_discount) AS ndv,
         |  CAST(min(l_discount) AS DOUBLE) AS min_v,
@@ -376,7 +375,7 @@ object StatsDefs {
     // categorical drift: per-category chi-square terms (the PSI-terms
     // precedent — emit terms, sum is the statistic); identical double
     // expression tree on both sides, REAL cast
-    QueryDef("drift_chi2_terms", Analytics3.driftChi2Terms _, Some(
+    QueryDef("drift_chi2_terms", Drift.driftChi2Terms _, Some(
       """WITH s AS (
         |  SELECT event_type AS cat,
         |    CASE WHEN event_id % 2 = 0 THEN 1 ELSE 0 END AS isa
@@ -406,7 +405,7 @@ object StatsDefs {
         |FROM g CROSS JOIN tot ORDER BY cat""".stripMargin)),
     // ordered-frame folds on both sides → identical doubles; REAL casts
     // as the documented float-noise backstop
-    QueryDef("ts_cusum_changepoint", Analytics3.tsCusumChangepoint(_, _), Some(
+    QueryDef("ts_cusum_changepoint", TimeSeries.tsCusumChangepoint(_, _), Some(
       """WITH e AS (
         |  SELECT user_id, epoch_us(ts) AS t, event_id, value FROM events
         |  WHERE user_id < 50
@@ -433,7 +432,7 @@ object StatsDefs {
         |    ORDER BY abs(cusum) DESC, t, event_id) AS rnk
         |  FROM s)
         |GROUP BY user_id ORDER BY user_id""".stripMargin)),
-    QueryDef("anomaly_spc_runs", Analytics3.anomalySpcRuns(_, _), Some(
+    QueryDef("anomaly_spc_runs", Anomaly.anomalySpcRuns(_, _), Some(
       """WITH e AS (
         |  SELECT user_id, epoch_us(ts) AS t, event_id, value FROM events
         |  WHERE user_id < 50
@@ -465,7 +464,7 @@ object StatsDefs {
         |  CAST(count(CASE WHEN sgn <> 0 AND run_len >= 8 THEN 1 END)
         |    AS BIGINT) AS n_alert_runs
         |FROM runs GROUP BY user_id ORDER BY user_id""".stripMargin)),
-    QueryDef("dq_constraint_report", Warehouse2.dqConstraintReport _, Some(
+    QueryDef("dq_constraint_report", Quality.dqConstraintReport _, Some(
       """SELECT 'lineitem_orderkey_fk' AS constraint_name,
         |  CAST(count(*) AS BIGINT) AS n_checked,
         |  CAST(count(CASE WHEN o.o_orderkey IS NULL THEN 1 END) AS BIGINT)
@@ -487,7 +486,7 @@ object StatsDefs {
         |SELECT 'part_partkey_unique', CAST(count(*) AS BIGINT),
         |  CAST(count(*) - count(DISTINCT p_partkey) AS BIGINT) FROM part
         |ORDER BY constraint_name""".stripMargin)),
-    QueryDef("sample_stratified", Relational3.sampleStratified _, Some(
+    QueryDef("sample_stratified", Sampling.sampleStratified _, Some(
       """SELECT event_id, event_type, value FROM events
         |WHERE CASE
         |  WHEN event_type = 'click' THEN
@@ -498,14 +497,14 @@ object StatsDefs {
         |      AS BIGINT) % 4 = 0
         |  ELSE TRUE END
         |ORDER BY event_id""".stripMargin)),
-    QueryDef("skew_profile", Pipeline.skewProfile _, Some(
+    QueryDef("skew_profile", Quality.skewProfile _, Some(
       """WITH kc AS (SELECT user_id, count(*) AS n FROM events
         |  GROUP BY user_id)
         |SELECT CAST(length(bin(n)) - 1 AS INT) AS band,
         |  count(*) AS n_keys, min(n) AS min_count, max(n) AS max_count,
         |  CAST(sum(n) AS BIGINT) AS n_rows
         |FROM kc GROUP BY 1 ORDER BY band""".stripMargin)),
-    QueryDef("sample_topk_per_group", Pipeline.sampleTopkPerGroup(_, _), Some(
+    QueryDef("sample_topk_per_group", Sampling.sampleTopkPerGroup(_, _), Some(
       """WITH h AS (
         |  SELECT event_type, event_id,
         |    CAST('0x' || substr(md5(CAST(event_id AS VARCHAR) || ':smp'),
@@ -518,7 +517,7 @@ object StatsDefs {
         |)
         |SELECT event_type, rn, event_id FROM ranked
         |WHERE rn <= 20 ORDER BY event_type, rn""".stripMargin)),
-    QueryDef("anomaly_zscore", Analytics.anomalyZscore(_, _), Some(
+    QueryDef("anomaly_zscore", Anomaly.anomalyZscore(_, _), Some(
       """WITH s AS (
         |  SELECT event_type, avg(value) AS mean, stddev_samp(value) AS sd
         |  FROM events GROUP BY 1
@@ -533,7 +532,7 @@ object StatsDefs {
     // divided once — identical doubles either engine. The oracle uses the
     // plain global-window ECDF; the Spark side's bucketed two-level
     // prefix sum is an execution-shape choice with the same result.
-    QueryDef("drift_ks_value", Analytics.driftKsValue(_, _), Some(
+    QueryDef("drift_ks_value", Drift.driftKsValue(_, _), Some(
       """WITH s AS (
         |  SELECT value,
         |    CASE WHEN event_id % 2 = 0 THEN 1 ELSE 0 END AS isa
@@ -563,17 +562,17 @@ object StatsDefs {
     // rounds to the same double the Spark side precomputes; proportions
     // are exact-integer divisions; ln is libm on identical doubles with
     // the REAL cast absorbing the last ulp
-    QueryDef("drift_psi_value", Analytics.driftPsiValue(_, _), Some(psiTermsOracleSql)),
+    QueryDef("drift_psi_value", Drift.driftPsiValue(_, _), Some(psiTermsOracleSql)),
     // value-proportional Bernoulli sample (P[keep] = value/max) — distinct
     // from the Efraimidis–Spirakis weighted RESERVOIR in `sample_weighted`
-    QueryDef("sample_prop_value", Analytics.sampleWeighted _, Some(
+    QueryDef("sample_prop_value", Sampling.samplePropValue _, Some(
       """WITH mx AS (SELECT max(value) AS vmax FROM events)
         |SELECT event_id, value FROM events, mx
         |WHERE CAST(CAST('0x' || substr(md5(CAST(event_id AS VARCHAR)
         |    || ':w'), 1, 15) AS BIGINT) AS DOUBLE) / 1152921504606846976.0
         |  < value / vmax
         |ORDER BY event_id""".stripMargin)),
-    QueryDef("ts_resample_interp", Analytics.tsResampleInterp(_, _), Some(
+    QueryDef("ts_resample_interp", TimeSeries.tsResampleInterp(_, _), Some(
       """WITH ev AS (
         |  SELECT user_id, epoch_us(ts) AS t, value, event_id FROM events
         |  WHERE user_id < 5
@@ -610,7 +609,7 @@ object StatsDefs {
         |    ELSE pv + (nv - pv) * (CAST(t - pt AS DOUBLE) / (nt - pt)) END
         |    AS REAL) AS value_interp
         |FROM w WHERE is_grid = 1 ORDER BY user_id, grid_us""".stripMargin)),
-    QueryDef("heavy_hitters", Curation.heavyHitters(_, _), Some(
+    QueryDef("heavy_hitters", Quality.heavyHitters(_, _), Some(
       """WITH c AS (
         |  SELECT lang, source, count(*) AS n FROM documents
         |  GROUP BY 1, 2
@@ -619,7 +618,7 @@ object StatsDefs {
         |  CAST(CAST(n AS DOUBLE) / total AS REAL) AS share
         |FROM c, t WHERE n > total * 0.02
         |ORDER BY n DESC, lang, source""".stripMargin)),
-    QueryDef("anomaly_mad", Analytics2.anomalyMad(_, _), Some(
+    QueryDef("anomaly_mad", Anomaly.anomalyMad(_, _), Some(
       """WITH ev AS (
         |  SELECT event_id, event_type, value FROM events
         |), med AS (
@@ -635,7 +634,7 @@ object StatsDefs {
         |FROM ev e JOIN mad USING (event_type)
         |WHERE abs(CAST((value - med) / (1.4826 * mad) AS REAL)) > 3.5
         |ORDER BY event_id""".stripMargin)),
-    QueryDef("ts_interval_overlap", Analytics2.tsIntervalOverlap _, Some(
+    QueryDef("ts_interval_overlap", TimeSeries.tsIntervalOverlap _, Some(
       """WITH ev AS (
         |  SELECT user_id, epoch_us(ts) AS t, event_id FROM events
         |), l AS (
@@ -671,7 +670,7 @@ object StatsDefs {
         |FROM sb JOIN w USING (wb)
         |WHERE s < (wb + 1) * 21600000000 AND e >= wb * 21600000000
         |GROUP BY wb ORDER BY w_start""".stripMargin)),
-    QueryDef("ts_seasonal_baseline", Analytics2.tsSeasonalBaseline(_, _), Some(
+    QueryDef("ts_seasonal_baseline", TimeSeries.tsSeasonalBaseline(_, _), Some(
       """WITH ev AS (
         |  SELECT event_id, value,
         |    (epoch_us(ts) // 3600000000) % 168 AS how
@@ -685,7 +684,7 @@ object StatsDefs {
         |FROM ev JOIN b USING (how)
         |WHERE abs(CAST((value - mean) / sd AS REAL)) > 3.0
         |ORDER BY event_id""".stripMargin)),
-    QueryDef("winsorized_stats", Curation2.winsorizedStats _, Some(
+    QueryDef("winsorized_stats", Quality.winsorizedStats _, Some(
       """WITH li AS (
         |  SELECT l_returnflag AS f, l_extendedprice AS p FROM lineitem
         |), k AS (
@@ -712,7 +711,7 @@ object StatsDefs {
         |  count(*) AS n
         |FROM li JOIN thr ON li.f = thr.f
         |GROUP BY 1 ORDER BY 1""".stripMargin)),
-    QueryDef("histogram_equiwidth", Curation2.histogramEquiWidth(_, _), Some(
+    QueryDef("histogram_equiwidth", Quality.histogramEquiWidth(_, _), Some(
       """SELECT
         |  CAST(least(greatest(floor((o_totalprice - 0.0) / 25000.0), 0),
         |    19) AS BIGINT) AS bin,
@@ -725,7 +724,7 @@ object StatsDefs {
     // the oracle replays the fold as a recursive CTE, where the
     // recursive term reads the previous ROW's columns — standard SQL
     // semantics, bit-identical to Spark's aggregate() fold
-    QueryDef("ts_holt_forecast", Analytics4.tsHoltForecast _, Some(
+    QueryDef("ts_holt_forecast", TimeSeries.tsHoltForecast _, Some(
       """WITH RECURSIVE o AS (
         |  SELECT user_id, list(value ORDER BY ts, event_id) AS vals
         |  FROM events WHERE value IS NOT NULL GROUP BY user_id
@@ -743,13 +742,13 @@ object StatsDefs {
         |  CAST(l AS REAL) AS level, CAST(b AS REAL) AS trend,
         |  CAST(l + 3.0 * b AS REAL) AS forecast_3
         |FROM r WHERE i = len(vals) ORDER BY user_id""".stripMargin)),
-    QueryDef("privacy_k_anonymity", Warehouse2.privacyKAnonymity(_, _), Some(
+    QueryDef("privacy_k_anonymity", Privacy.privacyKAnonymity(_, _), Some(
       """SELECT c_nationkey AS nation,
         |  CAST(year(o_orderdate) AS INT) AS order_year,
         |  count(*) AS class_size, count(*) < 10 AS at_risk
         |FROM orders JOIN customer ON o_custkey = c_custkey
         |GROUP BY 1, 2 ORDER BY nation, order_year""".stripMargin)),
-    QueryDef("ts_autocorr_lag1", Analytics4.tsAutocorrLag1(_, _), Some(
+    QueryDef("ts_autocorr_lag1", TimeSeries.tsAutocorrLag1(_, _), Some(
       """WITH l AS (
         |  SELECT user_id, value AS y,
         |    lag(value, 1) OVER (PARTITION BY user_id
@@ -770,7 +769,7 @@ object StatsDefs {
         |FROM a ORDER BY user_id""".stripMargin)),
     // same recursive-CTE replay as ts_holt_forecast, with the error
     // accumulators carried beside the Holt state
-    QueryDef("ts_holt_backtest", Analytics4.tsHoltBacktest _, Some(
+    QueryDef("ts_holt_backtest", TimeSeries.tsHoltBacktest _, Some(
       """WITH RECURSIVE o AS (
         |  SELECT user_id, list(value ORDER BY ts, event_id) AS vals
         |  FROM events WHERE value IS NOT NULL GROUP BY user_id
@@ -796,7 +795,7 @@ object StatsDefs {
         |  CAST(naivesum / CAST(len(vals) - 1 AS DOUBLE) AS REAL)
         |    AS mae_naive
         |FROM r WHERE i = len(vals) ORDER BY user_id""".stripMargin)),
-    QueryDef("privacy_l_diversity", Warehouse2.privacyLDiversity(_, _), Some(
+    QueryDef("privacy_l_diversity", Privacy.privacyLDiversity(_, _), Some(
       """SELECT c_nationkey AS nation,
         |  CAST(year(o_orderdate) AS INT) AS order_year,
         |  count(*) AS class_size,
@@ -804,7 +803,7 @@ object StatsDefs {
         |  count(DISTINCT o_orderpriority) < 3 AS below_l
         |FROM orders JOIN customer ON o_custkey = c_custkey
         |GROUP BY 1, 2 ORDER BY nation, order_year""".stripMargin)),
-    QueryDef("dq_freshness_lag", Warehouse2.dqFreshnessLag _, Some(
+    QueryDef("dq_freshness_lag", Quality.dqFreshnessLag _, Some(
       """WITH g AS (SELECT max(ts) AS gmax FROM events)
         |SELECT event_type, count(*) AS n_events, max(ts) AS newest,
         |  CAST((epoch_us((SELECT gmax FROM g)) - epoch_us(max(ts)))
@@ -812,7 +811,7 @@ object StatsDefs {
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
     // Efraimidis–Spirakis keys from the md5-derived uniform: DuckDB
     // replays the same hash60 bits, so the sample is bit-identical
-    QueryDef("sample_weighted", Analytics5.sampleWeighted(_, _), Some(
+    QueryDef("sample_weighted", Sampling.sampleWeighted(_, _), Some(
       """WITH k AS (
         |  SELECT o_orderkey, o_totalprice,
         |    -ln((CAST('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 15)
@@ -822,7 +821,7 @@ object StatsDefs {
         |)
         |SELECT o_orderkey, o_totalprice, CAST(es_key AS REAL) AS es_key
         |FROM k ORDER BY k.es_key, o_orderkey LIMIT 100""".stripMargin)),
-    QueryDef("ts_interval_union", Analytics5.tsIntervalUnion(_, _), Some(
+    QueryDef("ts_interval_union", TimeSeries.tsIntervalUnion(_, _), Some(
       """WITH e AS (
         |  SELECT user_id, epoch_us(ts) AS s,
         |    epoch_us(ts) + 300000000 AS en, event_id
@@ -848,7 +847,7 @@ object StatsDefs {
         |SELECT user_id, CAST(count(*) AS BIGINT) AS n_islands,
         |  CAST(sum(is_end - is_start) AS BIGINT) AS covered_micros
         |FROM isl GROUP BY user_id ORDER BY user_id""".stripMargin)),
-    QueryDef("drift_psi", Analytics5.driftPsi(_, _), Some(
+    QueryDef("drift_psi", Drift.driftPsi(_, _), Some(
       """WITH e AS (
         |  SELECT epoch_us(ts) AS tus, value FROM events
         |), ext AS (SELECT min(tus) AS lo, max(tus) AS hi FROM e),
@@ -869,7 +868,7 @@ object StatsDefs {
         |    * ln(((n_early + 1.0) / (te + 10.0))
         |        / ((n_late + 1.0) / (tl + 10.0))) AS REAL) AS psi_term
         |FROM c, t ORDER BY bin""".stripMargin)),
-    QueryDef("dq_join_profile", Analytics5.dqJoinProfile _, Some(
+    QueryDef("dq_join_profile", Quality.dqJoinProfile _, Some(
       """WITH ck AS (SELECT DISTINCT c_custkey AS pk FROM customer),
         |pk AS (SELECT DISTINCT p_partkey AS pk FROM part),
         |r1 AS (
@@ -895,7 +894,7 @@ object StatsDefs {
         |)
         |SELECT * FROM r1 UNION ALL SELECT * FROM r2
         |ORDER BY relationship""".stripMargin)),
-    QueryDef("anomaly_rolling_z", Analytics5.anomalyRollingZ(_, _), Some(
+    QueryDef("anomaly_rolling_z", Anomaly.anomalyRollingZ(_, _), Some(
       """WITH w AS (
         |  SELECT event_id, user_id, value,
         |    count(value) OVER f AS n,
@@ -914,7 +913,7 @@ object StatsDefs {
         |FROM v WHERE variance > 0
         |  AND abs((value - mean) / sqrt(variance)) > 3.0
         |ORDER BY event_id""".stripMargin)),
-    QueryDef("privacy_dp_counts", Analytics5.privacyDpCounts(_, _), Some(
+    QueryDef("privacy_dp_counts", Privacy.privacyDpCounts(_, _), Some(
       """WITH c AS (
         |  SELECT c_nationkey, CAST(count(*) AS BIGINT) AS exact_count
         |  FROM customer GROUP BY c_nationkey
@@ -929,7 +928,7 @@ object StatsDefs {
         |  CAST(exact_count + (-sign(p) * ln(1.0 - abs(p) * 2.0)) AS REAL)
         |    AS noisy_count
         |FROM n ORDER BY c_nationkey""".stripMargin)),
-    QueryDef("privacy_t_closeness_tv", Analytics5.privacyTClosenessTv _, Some(
+    QueryDef("privacy_t_closeness_tv", Privacy.privacyTClosenessTv _, Some(
       """WITH c AS (
         |  SELECT c_nationkey AS nk, c_mktsegment AS seg FROM customer
         |), cs AS (SELECT nk, seg, count(*) AS ns FROM c GROUP BY 1, 2),
@@ -946,7 +945,7 @@ object StatsDefs {
         |SELECT nk AS c_nationkey, CAST(min(nc) AS BIGINT) AS class_size,
         |  CAST(sum(term) / 2.0 AS REAL) AS tv_distance
         |FROM f GROUP BY nk ORDER BY c_nationkey""".stripMargin)),
-    QueryDef("dq_volume_anomaly", Analytics5.dqVolumeAnomaly _, Some(
+    QueryDef("dq_volume_anomaly", Quality.dqVolumeAnomaly _, Some(
       """WITH d AS (
         |  SELECT epoch_us(ts) // 86400000000 AS day_index,
         |    CAST(count(*) AS BIGINT) AS n_events
@@ -968,7 +967,7 @@ object StatsDefs {
         |   OR CAST(n_events * trail_days AS DOUBLE)
         |    / CAST(trail_sum AS DOUBLE) <= 0.5) AS flagged
         |FROM t WHERE trail_days >= 3 ORDER BY day_index""".stripMargin)),
-    QueryDef("ts_stl_decompose", Analytics5.tsStlDecompose _, Some(
+    QueryDef("ts_stl_decompose", TimeSeries.tsStlDecompose _, Some(
       """WITH hourly AS (
         |  SELECT epoch_us(ts) // 3600000000 AS h,
         |    CAST(sum(CAST(round(value * 1000000.0) AS BIGINT)) AS BIGINT)
@@ -1008,10 +1007,10 @@ object StatsDefs {
     // the greedy debounce recurrence replayed as a recursive CTE: row n
     // joins row n−1's anchor — the sequential dependency made explicit;
     // shared with the streaming twin (drain == batch contract)
-    QueryDef("anomaly_alert_debounce", Analytics5.anomalyAlertDebounce(_, _),
+    QueryDef("anomaly_alert_debounce", Anomaly.anomalyAlertDebounce(_, _),
       Some(debounceRecurrenceSql)),
     // spectral power at candidate periods over the hourly rollup
-    QueryDef("ts_periodogram", Analytics5.tsPeriodogram(_, _), Some(
+    QueryDef("ts_periodogram", TimeSeries.tsPeriodogram(_, _), Some(
       """WITH hourly AS (
         |  SELECT epoch_us(ts) // 3600000000 AS h,
         |    CAST(sum(CAST(round(value * 1000000.0) AS BIGINT)) AS BIGINT)
@@ -1036,7 +1035,7 @@ object StatsDefs {
     // Warner randomized response (local DP) with debiased estimate
     // randomized response: flip iff hash60(id:rr) % 4 = 3; debias by
     // (p_obs - 0.25) / 0.5 — truth ships beside for auditability
-    QueryDef("privacy_rand_response", Analytics5.privacyRandResponse _, Some(
+    QueryDef("privacy_rand_response", Privacy.privacyRandResponse _, Some(
       """WITH b AS (
         |  SELECT event_type,
         |    event_id % 2 = 1 AS t,
@@ -1059,7 +1058,7 @@ object StatsDefs {
         |    / 0.5 AS REAL) AS pi_hat
         |FROM g ORDER BY event_type""".stripMargin)),
     // PK half of the constraint audit (FK half: dq_constraint_report)
-    QueryDef("dq_pk_uniqueness", Warehouse2.dqPkUniqueness _, Some(
+    QueryDef("dq_pk_uniqueness", Quality.dqPkUniqueness _, Some(
       """SELECT * FROM (
         |  SELECT 'lineitem(l_orderkey,l_linenumber)' AS table_key,
         |    CAST(count(*) AS BIGINT) AS n_rows,
@@ -1093,7 +1092,7 @@ object StatsDefs {
     // white-noise portmanteau terms per (user, lag)
     // the ts_autocorr_lag1 Pearson-over-pairs form at lags 1..5, plus
     // the Ljung-Box Q term n(n+2)·ρ²/(n−k) per row
-    QueryDef("ts_ljung_box_terms", Analytics4.tsLjungBoxTerms(_, _), Some(
+    QueryDef("ts_ljung_box_terms", TimeSeries.tsLjungBoxTerms(_, _), Some(
       """WITH l AS (
         |  SELECT user_id, value AS y,
         |    lag(value, 1) OVER w AS x1, lag(value, 2) OVER w AS x2,
@@ -1133,10 +1132,10 @@ object StatsDefs {
     // hourly OHLC candles via keyed min_by/max_by (no window)
     // open/close by fixed-width (micros, event_id) lexicographic argmin;
     // the streaming candle drain equals the batch table, sharing the text
-    QueryDef("ts_ohlc_hourly", Analytics4.tsOhlcHourly(_, _), Some(ohlcHourlySql)),
+    QueryDef("ts_ohlc_hourly", TimeSeries.tsOhlcHourly(_, _), Some(ohlcHourlySql)),
     // Laplace-mechanism DP counts with a replayable PRF noise draw
     // inverse-CDF Laplace draw from the 60-bit hash of the category
-    QueryDef("dq_dp_laplace_counts", Warehouse2.dqDpLaplaceCounts(_, _), Some(
+    QueryDef("dq_dp_laplace_counts", Quality.dqDpLaplaceCounts(_, _), Some(
       """WITH g AS (
         |  SELECT event_type, CAST(count(*) AS BIGINT) AS n_exact
         |  FROM events GROUP BY 1
@@ -1158,7 +1157,7 @@ object StatsDefs {
     // Neyman-optimal stratified allocation, largest-remainder exact
     // sd = √(N·Σv²−(Σv)²)/N/10³ on exact BIGINT moments; tmass folds in
     // sorted stratum order; largest-remainder rounding is integer-exact
-    QueryDef("sample_neyman_allocation", Relational3.sampleNeymanAllocation(_, _), Some(
+    QueryDef("sample_neyman_allocation", Sampling.sampleNeymanAllocation(_, _), Some(
       """WITH ev AS (
         |  SELECT event_type, CAST(round(value * 1000.0) AS BIGINT) AS v3
         |  FROM events
@@ -1197,7 +1196,7 @@ object StatsDefs {
     // DoReMi-style uniform-target domain mixture plan (rates/epochs/deficit)
     // all allocation quantities BIGINT (floor div), rate/epochs are one
     // IEEE division each — the only doubles in the plan
-    QueryDef("sample_domain_mixture", Curation2.sampleDomainMixture(_, _), Some(
+    QueryDef("sample_domain_mixture", Sampling.sampleDomainMixture(_, _), Some(
       """WITH supply AS (
         |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
         |    CAST(sum(CAST(n_chars AS BIGINT)) AS BIGINT) AS supply_chars
@@ -1222,11 +1221,11 @@ object StatsDefs {
     // the filter recurrence replayed as a recursive CTE — identical
     // parenthesization and (ts, event_id) order ⇒ bit-identical doubles;
     // the STREAMING twin drains to the same rows, so it shares the text
-    QueryDef("ts_kalman_1d", Analytics4.tsKalman1d(_, _), Some(kalmanRecurrenceSql)),
+    QueryDef("ts_kalman_1d", TimeSeries.tsKalman1d(_, _), Some(kalmanRecurrenceSql)),
     // PACF via unrolled Durbin–Levinson layers over the shared lag-ρ
     // the ljung-box ρ front end, pivoted, then the Durbin–Levinson
     // layers with the SAME parenthesization as the Column expressions
-    QueryDef("ts_pacf_durbin_levinson", Analytics4.tsPacfDurbinLevinson(_, _), Some(
+    QueryDef("ts_pacf_durbin_levinson", TimeSeries.tsPacfDurbinLevinson(_, _), Some(
       """WITH l AS (
         |  SELECT user_id, value AS y,
         |    lag(value, 1) OVER w AS x1, lag(value, 2) OVER w AS x2,
@@ -1291,7 +1290,7 @@ object StatsDefs {
     // systematic PPS sampling: integer anchor+step on cumulative cents
     // systematic PPS: points a + k*W in x20-scaled cumulative space;
     // multiplicity = ceil-count difference, all BIGINT floor division
-    QueryDef("sample_pps_systematic", Analytics5.samplePpsSystematic(_, _), Some(
+    QueryDef("sample_pps_systematic", Sampling.samplePpsSystematic(_, _), Some(
       """WITH o AS (
         |  SELECT o_orderkey,
         |    CAST(round(o_totalprice * 100.0) AS BIGINT) AS w
@@ -1320,7 +1319,7 @@ object StatsDefs {
         |  CAST(multiplicity AS BIGINT) AS multiplicity
         |FROM m WHERE multiplicity >= 1 ORDER BY o_orderkey""".stripMargin)),
     // round 15: robust trend slope (median of pairwise hourly slopes)
-    QueryDef("ts_theil_sen", Analytics5.tsTheilSen(_, _), Some(
+    QueryDef("ts_theil_sen", TimeSeries.tsTheilSen(_, _), Some(
       """WITH hourly AS (
         |  SELECT epoch_us(ts) // 3600000000 AS h,
         |    CAST(sum(CAST(round(value * 1000000.0) AS BIGINT)) AS BIGINT)
@@ -1344,10 +1343,10 @@ object StatsDefs {
     // round 15: Benford first-digit audit over exact cents
     // MCC: exact BIGINT cells; denominator in double (Long margins
     // product would overflow at corpus scale); degenerate margins NULL
-    QueryDef("dq_benford_law", Analytics5.dqBenfordLaw _, Some(benfordOracleSql)),
+    QueryDef("dq_benford_law", Quality.dqBenfordLaw _, Some(benfordOracleSql)),
     // exponential-mechanism (Gumbel-max) DP top-k selection
     // Gumbel-max = exponential mechanism; u from the md5 60-bit draw
-    QueryDef("privacy_dp_topk", Analytics5.privacyDpTopk(_, _), Some(
+    QueryDef("privacy_dp_topk", Privacy.privacyDpTopk(_, _), Some(
       """WITH c AS (
         |  SELECT event_type, CAST(count(*) AS BIGINT) AS exact_count
         |  FROM events GROUP BY event_type
@@ -1367,14 +1366,14 @@ object StatsDefs {
         |  CAST(noised_utility AS REAL) AS noised_utility, exact_count
         |FROM r WHERE rank <= 3 ORDER BY rank""".stripMargin)),
     // round 16: Page's one-sided CUSUM vs a fixed target (live detector)
-    QueryDef("ts_cusum_target", Analytics6.tsCusumTarget(_, _), Some(cusumTargetRecurrenceSql)),
+    QueryDef("ts_cusum_target", TimeSeries.tsCusumTarget(_, _), Some(cusumTargetRecurrenceSql)),
     // round 16: intermittent-demand smoother (demand and gap separately)
     // Croston recurrence replayed per purchase in (ts, event_id) order
-    QueryDef("ts_croston", Analytics6.tsCroston(_, _), Some(crostonRecurrenceSql)),
+    QueryDef("ts_croston", TimeSeries.tsCroston(_, _), Some(crostonRecurrenceSql)),
     // round 16: exponential-mechanism DP median over a candidate grid
     // step-width bucket histogram → exact strictly-below rank per
     // candidate; Gumbel-max with the hash60 uniforms
-    QueryDef("privacy_dp_quantile", Analytics6.privacyDpQuantile(_, _), Some(
+    QueryDef("privacy_dp_quantile", Privacy.privacyDpQuantile(_, _), Some(
       """WITH hist AS (
         |  SELECT CAST(floor(value / 5.0) AS BIGINT) AS b,
         |    CAST(count(*) AS BIGINT) AS cnt
@@ -1406,7 +1405,7 @@ object StatsDefs {
         |FROM ranked WHERE rank <= 3 ORDER BY rank""".stripMargin)),
     // round 16: R/S long-memory diagnostic on the hourly series
     // ordered full-frame folds block-by-block, then the 4-point fit
-    QueryDef("ts_hurst_exponent", Analytics6.tsHurstExponent(_, _), Some(
+    QueryDef("ts_hurst_exponent", TimeSeries.tsHurstExponent(_, _), Some(
       """WITH hourly AS (
         |  SELECT CAST(sum(CAST(round(value * 1000000.0) AS BIGINT))
         |      AS DOUBLE) / 1000000.0 AS v,
@@ -1475,7 +1474,7 @@ object StatsDefs {
         |FROM fit""".stripMargin)),
     // round 16: SAX symbol strings (z-norm → PAA → quartile alphabet)
     // z-norm → PAA → quartile alphabet, every fold ordered
-    QueryDef("ts_sax_symbolic", Analytics6.tsSaxSymbolic(_, _), Some(
+    QueryDef("ts_sax_symbolic", TimeSeries.tsSaxSymbolic(_, _), Some(
       """WITH e AS (
         |  SELECT user_id, ts, event_id, value FROM events
         |  WHERE user_id < 50
@@ -1524,7 +1523,7 @@ object StatsDefs {
     // round 16: lead-lag cross-correlation on the hourly grid
     // exact HUGEINT moments per lag (Spark side holds DECIMAL(38,0) —
     // both are exact integers, so the double epilogues agree bitwise)
-    QueryDef("ts_ccf_lags", Analytics6.tsCcfLags(_, _), Some(
+    QueryDef("ts_ccf_lags", TimeSeries.tsCcfLags(_, _), Some(
       """WITH hourly AS (
         |  SELECT epoch_us(ts) // 3600000000 AS h,
         |    CAST(sum(CASE WHEN event_type = 'click'
@@ -1562,7 +1561,7 @@ object StatsDefs {
     // round 17: DP clipped-sum mean (the Laplace release for means)
     // round 17: clipped-sum DP mean — exact scaled-BIGINT clip, the
     // dqDpLaplaceCounts REAL-cast-first noise contract at b=C/ε and 1/ε
-    QueryDef("privacy_dp_clipped_mean", Analytics7.privacyDpClippedMean(_, _), Some(
+    QueryDef("privacy_dp_clipped_mean", Privacy.privacyDpClippedMean(_, _), Some(
       """WITH g AS (
         |  SELECT event_type, CAST(count(*) AS BIGINT) AS n_exact,
         |    CAST(coalesce(sum(least(greatest(
@@ -1598,7 +1597,7 @@ object StatsDefs {
         |FROM rel ORDER BY event_type""".stripMargin)),
     // round 18: ε-ledger with basic + advanced composition bounds over
     // the standing release inventory (exact µε grid)
-    QueryDef("privacy_budget_ledger", Analytics7.privacyBudgetLedger(_, _),
+    QueryDef("privacy_budget_ledger", Privacy.privacyBudgetLedger(_, _),
       Some(privacyLedgerOracleSql)),
   )
 }

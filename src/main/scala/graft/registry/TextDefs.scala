@@ -1,7 +1,6 @@
 package graft.registry
 
-import graft.query.{Analytics4, Analytics5, Curation, Curation2, Pipeline,
-  Relational3, TextAnalysis}
+import graft.query.TextAnalysis
 
 /** The text family, 63 queries: text analysis and corpus curation,
   * `text_`, `chunk_`, `context_`, `cooccur_`, `corpus_`, `curriculum_`,
@@ -277,7 +276,7 @@ object TextDefs {
         |GROUP BY tb.doc_id, tb.lang ORDER BY doc_id""".stripMargin)),
     // the FFD recurrence replayed with the bin-load list as recursive
     // CTE state; all arithmetic integer, so placement is exact
-    QueryDef("pack_bin_ffd", Pipeline.packBinFfd(_, _), Some(
+    QueryDef("pack_bin_ffd", TextAnalysis.packBinFfd(_, _), Some(
       """WITH RECURSIVE toks AS (
         |  SELECT doc_id, source, CAST(len(string_split(
         |    lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' '))
@@ -404,7 +403,7 @@ object TextDefs {
         |FROM grams g JOIN bg b ON b.w1 = g.w1 AND b.w2 = g.w2
         |JOIN ug u ON u.w1 = g.w1 CROSS JOIN vocab
         |GROUP BY g.doc_id ORDER BY g.doc_id""".stripMargin)),
-    QueryDef("text_feature_hashing", Relational3.textFeatureHashing(_, _), Some(
+    QueryDef("text_feature_hashing", TextAnalysis.textFeatureHashing(_, _), Some(
       """SELECT doc_id,
         |  CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT) % 256
         |    AS feature_idx,
@@ -414,7 +413,7 @@ object TextDefs {
         |  FROM documents WHERE doc_id < 100)
         |GROUP BY 1, 2 ORDER BY doc_id, feature_idx""".stripMargin)),
     // round 4: training-data pipeline operators
-    QueryDef("decontaminate_ngram", Pipeline.decontaminate(_, _), Some(
+    QueryDef("decontaminate_ngram", TextAnalysis.decontaminate(_, _), Some(
       """WITH toks AS (
         |  SELECT doc_id, string_split(
         |    lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS t
@@ -444,7 +443,7 @@ object TextDefs {
         |FROM ov JOIN evn ON evn.doc_id = ov.eval_doc
         |WHERE ov.n_shared >= 2
         |ORDER BY train_doc, eval_doc""".stripMargin)),
-    QueryDef("pack_sequences", Pipeline.packSequences(_, _), Some(
+    QueryDef("pack_sequences", TextAnalysis.packSequences(_, _), Some(
       """WITH d AS (
         |  SELECT doc_id, CAST(len(string_split(
         |    lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' '))
@@ -461,7 +460,7 @@ object TextDefs {
         |  CAST(sum(tok) AS BIGINT) AS bin_tokens,
         |  min(doc_id) AS first_doc, max(doc_id) AS last_doc
         |FROM c GROUP BY 1 ORDER BY bin_id""".stripMargin)),
-    QueryDef("text_repetition", Pipeline.textRepetition _, Some(
+    QueryDef("text_repetition", TextAnalysis.textRepetition _, Some(
       """WITH toks AS (
         |  SELECT doc_id, string_split(
         |    lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS t
@@ -501,7 +500,7 @@ object TextDefs {
         |  CAST(cnt AS DOUBLE) / n_bigrams AS top_frac,
         |  CAST(cnt AS DOUBLE) * len(g) / n_chars AS char_cov
         |FROM ranked WHERE rk = 1 ORDER BY doc_id""".stripMargin)),
-    QueryDef("quality_topk_per_lang", Pipeline.qualityTopkPerLang(_, _), Some(
+    QueryDef("quality_topk_per_lang", TextAnalysis.qualityTopkPerLang(_, _), Some(
       """WITH q AS (
         |  SELECT doc_id, lang,
         |    least(CAST(length(text) AS DOUBLE) / 500.0, 1.0) * 0.5
@@ -521,7 +520,7 @@ object TextDefs {
         |)
         |SELECT lang, rnk, doc_id, score FROM ranked
         |WHERE rnk <= 10 ORDER BY lang, rnk""".stripMargin)),
-    QueryDef("corpus_mix_budget", Pipeline.corpusMixBudget(_, _), Some(
+    QueryDef("corpus_mix_budget", TextAnalysis.corpusMixBudget(_, _), Some(
       """WITH q AS (
         |  SELECT doc_id, source,
         |    CAST(len(string_split(
@@ -616,7 +615,7 @@ object TextDefs {
         |FROM top JOIN uni ua ON ua.tok = top.a
         |JOIN uni ub ON ub.tok = top.b, tu, tb
         |ORDER BY n_ab DESC, a, b""".stripMargin)),
-    QueryDef("text_ngram_novelty", Curation.textNgramNovelty _, Some(
+    QueryDef("text_ngram_novelty", TextAnalysis.textNgramNovelty _, Some(
       """WITH toks AS (
         |  SELECT doc_id, string_split(
         |    lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS t
@@ -639,7 +638,7 @@ object TextDefs {
         |      AS DOUBLE) / count(*) AS REAL) AS novelty
         |FROM grams JOIN fs USING (gh)
         |GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
-    QueryDef("corpus_quality_gate", Curation.corpusQualityGate _, Some(
+    QueryDef("corpus_quality_gate", TextAnalysis.corpusQualityGate _, Some(
       """WITH d AS (
         |  SELECT doc_id, lang,
         |    md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS fp,
@@ -670,7 +669,7 @@ object TextDefs {
         |FROM documents GROUP BY 1 ORDER BY shard""".stripMargin)),
     // round-6 corpus-shaping operators
     // round-6 corpus-shaping operators
-    QueryDef("chunk_sliding", Curation2.chunkSliding(_, _), Some(
+    QueryDef("chunk_sliding", TextAnalysis.chunkSliding(_, _), Some(
       """WITH t AS (
         |  SELECT doc_id, string_split(lower(trim(
         |    regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
@@ -685,7 +684,7 @@ object TextDefs {
         |  md5(array_to_string(list_slice(toks, st, st + 31), ' '))
         |    AS chunk_hash
         |FROM s ORDER BY doc_id, chunk_idx""".stripMargin)),
-    QueryDef("curriculum_phases", Curation2.curriculumPhases(_, _), Some(
+    QueryDef("curriculum_phases", TextAnalysis.curriculumPhases(_, _), Some(
       """WITH d AS (
         |  SELECT doc_id, CAST(len(string_split(lower(trim(
         |    regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS BIGINT)
@@ -706,7 +705,7 @@ object TextDefs {
         |  min(n_tok) AS min_tok, max(n_tok) AS max_tok
         |FROM p GROUP BY phase ORDER BY phase""".stripMargin)),
     // α=0.5 temperature rebalancing across skewed language groups
-    QueryDef("corpus_temperature_mix", Curation2.corpusTemperatureMix(_, _), Some(
+    QueryDef("corpus_temperature_mix", TextAnalysis.corpusTemperatureMix(_, _), Some(
       """WITH n AS (
         |  SELECT lang, count(*) AS n_docs FROM documents GROUP BY lang
         |), m AS (SELECT min(n_docs) AS n_min FROM n)
@@ -722,7 +721,7 @@ object TextDefs {
     // epoch-repetition materialization: small sources upsampled ⌊f⌋/⌈f⌉
     // epoch repetition: f = min(sqrt(n_max/n_src), 4); floor copies +
     // one more iff hash60 clears floor(frac(f)*2^60) — integer compare
-    QueryDef("corpus_epoch_repeat", Curation2.corpusEpochRepeat(_, _), Some(
+    QueryDef("corpus_epoch_repeat", TextAnalysis.corpusEpochRepeat(_, _), Some(
       """WITH n AS (
         |  SELECT source, CAST(count(*) AS BIGINT) AS n_src
         |  FROM documents GROUP BY source
@@ -907,7 +906,7 @@ object TextDefs {
         |  CAST(sum(CASE WHEN rank <= 10 THEN freq ELSE 0 END) AS DOUBLE)
         |    / CAST(sum(freq) AS DOUBLE) AS top10_mass
         |FROM r""".stripMargin)),
-    QueryDef("text_js_divergence", Analytics4.textJsDivergence _, Some(
+    QueryDef("text_js_divergence", TextAnalysis.textJsDivergence _, Some(
       """WITH toks AS (
         |  SELECT source, unnest(string_split(lower(trim(
         |    regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS tok
@@ -939,7 +938,7 @@ object TextDefs {
         |  CAST(pterm + qterm + 0.5 * (1.0 - qcov) * ln(2.0) AS REAL)
         |    AS js_divergence
         |FROM s ORDER BY source""".stripMargin)),
-    QueryDef("corpus_sample_stratified", Analytics5.corpusSampleStratified _, Some(
+    QueryDef("corpus_sample_stratified", TextAnalysis.corpusSampleStratified _, Some(
       """WITH d AS (
         |  SELECT doc_id, lang,
         |    CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)
@@ -955,7 +954,7 @@ object TextDefs {
         |SELECT r.doc_id, r.lang FROM r JOIN s USING (lang)
         |WHERE rn <= target ORDER BY doc_id""".stripMargin)),
     // the langid oracle wrapped in the confusion rollup — same scoring
-    QueryDef("quality_lang_confusion", Analytics5.qualityLangConfusion _, Some(
+    QueryDef("quality_lang_confusion", TextAnalysis.qualityLangConfusion _, Some(
       """WITH u AS (SELECT doc_id, lang,
         |    list_distinct(string_split(
         |      lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS t
@@ -980,7 +979,7 @@ object TextDefs {
         |  CAST(count(*) AS BIGINT) AS n_docs
         |FROM det GROUP BY 1, 2
         |ORDER BY lang_labeled, lang_detected""".stripMargin)),
-    QueryDef("corpus_mix_weights", Analytics5.corpusMixWeights _, Some(
+    QueryDef("corpus_mix_weights", TextAnalysis.corpusMixWeights _, Some(
       """WITH p AS (
         |  SELECT lang, CAST(count(*) AS BIGINT) AS n_docs
         |  FROM documents GROUP BY lang
@@ -1075,7 +1074,7 @@ object TextDefs {
     // CCNet head/middle/tail fluency terciles per language
     // CCNet terciles: familiarity = sum tf*cnt / n_tokens (ONE exact
     // double divide), ntile(3) per lang on (familiarity DESC, doc_id)
-    QueryDef("corpus_ccnet_buckets", Curation2.corpusCcnetBuckets(_, _), Some(
+    QueryDef("corpus_ccnet_buckets", TextAnalysis.corpusCcnetBuckets(_, _), Some(
       """WITH tf AS (
         |  SELECT doc_id, tok, count(*) AS tf FROM (
         |    SELECT doc_id, unnest(string_split(
@@ -1226,7 +1225,7 @@ object TextDefs {
     // DSIR hashed-unigram importance weights vs the lang='en' target slice
     // hashed-unigram add-1 log-likelihood ratio, float epilogue (the
     // text_bigram_logprob exactness precedent)
-    QueryDef("text_dsir_importance", Curation2.textDsirImportance(_, _), Some(
+    QueryDef("text_dsir_importance", TextAnalysis.textDsirImportance(_, _), Some(
       """WITH toks AS (
         |  SELECT doc_id, lang,
         |    CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT) % 4096 AS bucket
@@ -1291,7 +1290,7 @@ object TextDefs {
         |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
     // pairwise source-vocabulary Jaccard via one bitmask aggregate
     // one (token)-grain bit_or; pair stats off the mask histogram
-    QueryDef("corpus_source_overlap", Curation2.corpusSourceOverlap(_, _), Some(
+    QueryDef("corpus_source_overlap", TextAnalysis.corpusSourceOverlap(_, _), Some(
       """WITH si AS (
         |  SELECT * FROM (
         |    SELECT source,
@@ -1432,7 +1431,7 @@ object TextDefs {
         |FROM c CROSS JOIN u""".stripMargin)),
     // per-lang source-mix entropy and the effective source count
     // mix entropy: -sum p ln p per lang; effective sources = exp(H)
-    QueryDef("corpus_mix_entropy", Curation2.corpusMixEntropy _, Some(
+    QueryDef("corpus_mix_entropy", TextAnalysis.corpusMixEntropy _, Some(
       """WITH c AS (
         |  SELECT lang, source, CAST(count(*) AS BIGINT) AS n
         |  FROM documents GROUP BY 1, 2
@@ -1453,7 +1452,7 @@ object TextDefs {
         |FROM h ORDER BY lang""".stripMargin)),
     // exact per-lang token-length percentiles (context budgeting)
     // percentile_disc picks at rank ceil(q*n/100), integer end to end
-    QueryDef("corpus_length_percentiles", Curation2.corpusLengthPercentiles _, Some(
+    QueryDef("corpus_length_percentiles", TextAnalysis.corpusLengthPercentiles _, Some(
       """WITH d AS (
         |  SELECT lang, CAST(len(string_split(lower(trim(
         |    regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS BIGINT)

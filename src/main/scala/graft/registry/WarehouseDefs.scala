@@ -1,7 +1,6 @@
 package graft.registry
 
-import graft.query.{Analytics2, Analytics4, Analytics5, Relational,
-  Relational2, Relational3, Warehouse, Warehouse2}
+import graft.query.Warehouse
 import graft.ingest.Formats
 
 /** The warehouse family, 51 queries: `sql_`, `scd2_`, `snapshot_`,
@@ -9,7 +8,7 @@ import graft.ingest.Formats
   * `source_`, `cohort_`, `attribution_`. */
 object WarehouseDefs {
 
-  /** [[graft.query.Analytics2.zorderCluster]]: the 16+16-bit Morton
+  /** [[graft.query.Warehouse.zorderCluster]]: the 16+16-bit Morton
     * interleave as one generated bitwise expression — the SAME static
     * shift/mask chain the Spark side builds, so the bucket assignment is
     * exact integer math on both engines. */
@@ -33,7 +32,7 @@ object WarehouseDefs {
   }
 
   val defs: Seq[QueryDef] = Seq(
-    QueryDef("sql_revenue_by_nation", Relational.sqlRevenueByNation _, Some(
+    QueryDef("sql_revenue_by_nation", Warehouse.sqlRevenueByNation _, Some(
       """SELECT n_name,
         |  CAST(sum(l_extendedprice * (1.0 - l_discount)) AS REAL) AS revenue,
         |  count(*) AS n_items
@@ -47,7 +46,7 @@ object WarehouseDefs {
         |  AND o_orderdate < TIMESTAMP '1998-01-01'
         |GROUP BY n_name
         |ORDER BY revenue DESC, n_name""".stripMargin)),
-    QueryDef("sql_cte_ranking", Relational2.sqlCteRanking _, Some(
+    QueryDef("sql_cte_ranking", Warehouse.sqlCteRanking _, Some(
       """WITH per_cust AS (
         |  SELECT o_custkey, count(*) AS n_orders,
         |    CAST(sum(o_totalprice) AS REAL) AS total
@@ -57,12 +56,12 @@ object WarehouseDefs {
         |  CAST(dense_rank() OVER (ORDER BY n_orders DESC, o_custkey) AS INT)
         |    AS rnk
         |FROM per_cust ORDER BY o_custkey""".stripMargin)),
-    QueryDef("part_pruning", Relational2.partPruning _, Some(
+    QueryDef("part_pruning", Warehouse.partPruning _, Some(
       """SELECT user_id, count(*) AS n_clicks,
         |  CAST(sum(value) AS REAL) AS sum_value
         |FROM events WHERE event_type = 'click'
         |GROUP BY user_id ORDER BY user_id""".stripMargin)),
-    QueryDef("snapshot_diff", Warehouse2.snapshotDiff _, Some(
+    QueryDef("snapshot_diff", Warehouse.snapshotDiff _, Some(
       """WITH snap_a AS (
         |  SELECT o_orderkey AS k, o_totalprice AS pa FROM orders
         |  WHERE o_orderkey % 7 <> 0
@@ -82,7 +81,7 @@ object WarehouseDefs {
         |FROM d GROUP BY status ORDER BY status""".stripMargin)),
     // (cum_bytes - 1) // target is next-fit packing quantized to the
     // capacity grid — deterministic on both engines (integer arithmetic)
-    QueryDef("layout_compaction_plan", Warehouse2.layoutCompactionPlan(_, _), Some(
+    QueryDef("layout_compaction_plan", Warehouse.layoutCompactionPlan(_, _), Some(
       """WITH files AS (
         |  SELECT CAST(date_trunc('month', o_orderdate) AS DATE)
         |      AS part_month,
@@ -102,7 +101,7 @@ object WarehouseDefs {
         |ORDER BY part_month, target_file""".stripMargin)),
     // oracle recomputes the monthly rollup DIRECTLY from base — equality
     // proves the engine's daily-partial merge path
-    QueryDef("mv_incremental_merge", Warehouse2.mvIncrementalMerge _, Some(
+    QueryDef("mv_incremental_merge", Warehouse.mvIncrementalMerge _, Some(
       """SELECT CAST(date_trunc('month', l_shipdate) AS DATE) AS month,
         |  l_returnflag AS returnflag, sum(l_quantity) AS qty,
         |  count(*) AS n_rows
@@ -110,7 +109,7 @@ object WarehouseDefs {
     // Δ-join view maintenance: (V ⊲ Δkeys) ∪ (Δ ⋈ dim) == full recompute
     // full recompute over the EFFECTIVE post-change table — the hash
     // match proves the Spark side's Δ-join maintenance algebra
-    QueryDef("mv_join_delta", Warehouse2.mvJoinDelta _, Some(
+    QueryDef("mv_join_delta", Warehouse.mvJoinDelta _, Some(
       """WITH eff AS (
         |  SELECT o_orderkey, o_custkey,
         |    CASE WHEN o_orderkey % 20 = 5
@@ -122,7 +121,7 @@ object WarehouseDefs {
         |SELECT e.o_orderkey, e.o_custkey, e.price_cents, c.c_nationkey
         |FROM eff e JOIN customer c ON e.o_custkey = c.c_custkey
         |ORDER BY e.o_orderkey""".stripMargin)),
-    QueryDef("sql_product_type_profit", Warehouse2.sqlProductTypeProfit _, Some(
+    QueryDef("sql_product_type_profit", Warehouse.sqlProductTypeProfit _, Some(
       """SELECT n.n_name AS nation,
         |  CAST(EXTRACT(year FROM o.o_orderdate) AS INT) AS o_year,
         |  CAST(sum(l.l_extendedprice * (1 - l.l_discount)) AS REAL) AS profit
@@ -135,7 +134,7 @@ object WarehouseDefs {
         |GROUP BY 1, 2 ORDER BY nation, o_year DESC""".stripMargin)),
     // growth arithmetic in DOUBLE over float32 yearly totals (exactly
     // representable) so both engines emit identical rates
-    QueryDef("sql_yearly_growth", Warehouse2.sqlYearlyGrowth _, Some(
+    QueryDef("sql_yearly_growth", Warehouse.sqlYearlyGrowth _, Some(
       """WITH y AS (
         |  SELECT CAST(EXTRACT(year FROM o_orderdate) AS INT) AS yr,
         |    CAST(sum(o_totalprice) AS REAL) AS revenue,
@@ -150,7 +149,7 @@ object WarehouseDefs {
         |      / CAST(lag(revenue) OVER (ORDER BY yr) AS DOUBLE) END AS REAL)
         |    AS yoy_growth
         |FROM y ORDER BY yr""".stripMargin)),
-    QueryDef("sql_basket_affinity", Warehouse2.sqlBasketAffinity(_, _), Some(
+    QueryDef("sql_basket_affinity", Warehouse.sqlBasketAffinity(_, _), Some(
       """WITH ob AS (
         |  SELECT DISTINCT l.l_orderkey AS ok, p.p_brand AS b
         |  FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
@@ -175,7 +174,7 @@ object WarehouseDefs {
         |CROSS JOIN n
         |WHERE n_both >= 20
         |ORDER BY lift DESC, brand_a, brand_b LIMIT 30""".stripMargin)),
-    QueryDef("sql_supplier_cnt_by_parttype", Warehouse2.sqlSupplierCntByParttype _, Some(
+    QueryDef("sql_supplier_cnt_by_parttype", Warehouse.sqlSupplierCntByParttype _, Some(
       """SELECT p.p_brand, p.p_type, p.p_size,
         |  count(DISTINCT l.l_suppkey) AS supplier_cnt
         |FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
@@ -183,7 +182,7 @@ object WarehouseDefs {
         |  AND p.p_size IN (1, 4, 9, 16, 25, 36, 49)
         |GROUP BY 1, 2, 3
         |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin)),
-    QueryDef("sql_min_cost_supplier", Warehouse2.sqlMinCostSupplier _, Some(
+    QueryDef("sql_min_cost_supplier", Warehouse.sqlMinCostSupplier _, Some(
       """WITH cost AS (
         |  SELECT l_partkey AS pk, l_suppkey AS sk,
         |    min(l_extendedprice / l_quantity) AS unit_cost
@@ -202,7 +201,7 @@ object WarehouseDefs {
         |JOIN region r ON r.r_regionkey = n.n_regionkey
         |WHERE r.r_name = 'EUROPE' AND p.p_size <= 10
         |ORDER BY p.p_partkey""".stripMargin)),
-    QueryDef("merge_upsert", Relational3.mergeUpsert _, Some(
+    QueryDef("merge_upsert", Warehouse.mergeUpsert _, Some(
       """WITH target AS (
         |  SELECT o_orderkey AS t_key, o_totalprice AS t_price,
         |    o_orderstatus AS t_status
@@ -223,7 +222,7 @@ object WarehouseDefs {
         |FROM target FULL OUTER JOIN source ON t_key = s_key
         |ORDER BY o_orderkey""".stripMargin)),
     // round 4: temporal dimension ops
-    QueryDef("scd2_versions", Relational3.scd2Versions(_, _), Some(
+    QueryDef("scd2_versions", Warehouse.scd2Versions(_, _), Some(
       """WITH ev AS (
         |  SELECT event_id, user_id, event_type, ts FROM events
         |  WHERE user_id < 20
@@ -244,7 +243,7 @@ object WarehouseDefs {
         |SELECT user_id, version_n, attr, valid_from, valid_to,
         |  (valid_to IS NULL) AS is_current
         |FROM versioned ORDER BY user_id, version_n""".stripMargin)),
-    QueryDef("scd2_asof_lookup", Relational3.scd2AsofLookup(_, _), Some(
+    QueryDef("scd2_asof_lookup", Warehouse.scd2AsofLookup(_, _), Some(
       """WITH ev AS (
         |  SELECT event_id, user_id, event_type, ts FROM events
         |  WHERE user_id < 20
@@ -267,7 +266,7 @@ object WarehouseDefs {
         |  ON v.user_id = e.user_id AND v.valid_from <= e.ts
         |  AND (v.valid_to IS NULL OR e.ts < v.valid_to)
         |ORDER BY e.event_id""".stripMargin)),
-    QueryDef("cohort_retention", Analytics2.cohortRetention _, Some(
+    QueryDef("cohort_retention", Warehouse.cohortRetention _, Some(
       """WITH ev AS (
         |  SELECT user_id, epoch_us(ts) // 604800000000 AS week FROM events
         |), coh AS (
@@ -277,7 +276,7 @@ object WarehouseDefs {
         |  count(DISTINCT user_id) AS n_users
         |FROM act JOIN coh USING (user_id)
         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
-    QueryDef("sql_shipping_priority", Analytics2.sqlShippingPriority(_, _), Some(
+    QueryDef("sql_shipping_priority", Warehouse.sqlShippingPriority(_, _), Some(
       """SELECT l_orderkey, o_orderdate,
         |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
         |    * (100 - CAST(round(l_discount * 100) AS BIGINT)))
@@ -290,7 +289,7 @@ object WarehouseDefs {
         |  AND l_shipdate > TIMESTAMP '1998-07-01'
         |GROUP BY 1, 2
         |ORDER BY revenue_s4 DESC, l_orderkey LIMIT 10""".stripMargin)),
-    QueryDef("zorder_cluster", Analytics2.zorderCluster _, Some(zorderOracleSql)),
+    QueryDef("zorder_cluster", Warehouse.zorderCluster _, Some(zorderOracleSql)),
     // round-6 warehouse suite (TPC-H-derived decision-support shapes)
     // round-6 warehouse suite
     QueryDef("sql_order_priority", Warehouse.sqlOrderPriority _, Some(
@@ -544,7 +543,7 @@ object WarehouseDefs {
         |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
         |    AS value_c
         |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin)),
-    QueryDef("attribution_last_touch", Analytics4.attributionLastTouch _, Some(
+    QueryDef("attribution_last_touch", Warehouse.attributionLastTouch _, Some(
       """WITH t AS (
         |  SELECT event_type, value,
         |    last_value(CASE WHEN event_type <> 'purchase'
@@ -558,7 +557,7 @@ object WarehouseDefs {
         |  CAST(sum(value) AS REAL) AS attributed_value
         |FROM t WHERE event_type = 'purchase'
         |GROUP BY 1 ORDER BY touch_type""".stripMargin)),
-    QueryDef("stats_zone_map", Warehouse2.statsZoneMap _, Some(
+    QueryDef("stats_zone_map", Warehouse.statsZoneMap _, Some(
       """WITH z1 AS (
         |  SELECT l_orderkey % 16 AS zone_id, count(*) AS n_rows,
         |    min(l_shipdate) AS zmin, max(l_shipdate) AS zmax
@@ -597,7 +596,7 @@ object WarehouseDefs {
         |  CAST(rows_scanned AS DOUBLE) / CAST(rows_total AS DOUBLE)
         |    AS scan_frac
         |FROM u ORDER BY layout""".stripMargin)),
-    QueryDef("attribution_linear", Analytics5.attributionLinear(_, _), Some(
+    QueryDef("attribution_linear", Warehouse.attributionLinear(_, _), Some(
       """WITH e AS (
         |  SELECT event_id, user_id, event_type, epoch_us(ts) AS tus, value
         |  FROM events
@@ -622,7 +621,7 @@ object WarehouseDefs {
         |  CAST(sum(CASE WHEN t_tus IS NULL THEN p_value
         |    ELSE p_value / n_touch END) AS REAL) AS credited_value
         |FROM n GROUP BY 1 ORDER BY 1""".stripMargin)),
-    QueryDef("sql_inactive_customers", Analytics5.sqlInactiveCustomers _, Some(
+    QueryDef("sql_inactive_customers", Warehouse.sqlInactiveCustomers _, Some(
       """WITH balavg AS (
         |  SELECT avg(c_acctbal) AS bal_avg FROM customer
         |  WHERE c_acctbal > 0.0
@@ -638,13 +637,13 @@ object WarehouseDefs {
         |WHERE c_acctbal > bal_avg
         |  AND c_custkey NOT IN (SELECT o_custkey FROM big)
         |GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin)),
-    QueryDef("sql_priority_returns", Analytics5.sqlPriorityReturns _, Some(
+    QueryDef("sql_priority_returns", Warehouse.sqlPriorityReturns _, Some(
       """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
         |FROM orders
         |WHERE EXISTS (SELECT 1 FROM lineitem
         |  WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)),
-    QueryDef("sql_monthly_cum_revenue", Analytics5.sqlMonthlyCumRevenue _, Some(
+    QueryDef("sql_monthly_cum_revenue", Warehouse.sqlMonthlyCumRevenue _, Some(
       """WITH m AS (
         |  SELECT CAST(EXTRACT(year FROM o_orderdate) * 100
         |      + EXTRACT(month FROM o_orderdate) AS INT) AS ym,
@@ -662,7 +661,7 @@ object WarehouseDefs {
         |    / CAST(total_cents AS DOUBLE) AS cum_share
         |FROM m, t ORDER BY ym""".stripMargin)),
     // RFM quintile segmentation (the CRM derived-feature table)
-    QueryDef("sql_customer_rfm", Warehouse2.sqlCustomerRfm _, Some(
+    QueryDef("sql_customer_rfm", Warehouse.sqlCustomerRfm _, Some(
       """WITH ref AS (SELECT max(o_orderdate) AS ref FROM orders),
         |base AS (
         |  SELECT o_custkey AS c_custkey,
@@ -687,7 +686,7 @@ object WarehouseDefs {
         |    AS INT) AS rfm_cell
         |FROM base ORDER BY c_custkey""".stripMargin)),
     // TPC-H Q20 shape: suppliers with excess stock of a named part family
-    QueryDef("sql_excess_stock", Warehouse2.sqlExcessStock _, Some(
+    QueryDef("sql_excess_stock", Warehouse.sqlExcessStock _, Some(
       """WITH survivors AS (
         |  SELECT l_suppkey
         |  FROM lineitem
@@ -705,7 +704,7 @@ object WarehouseDefs {
         |WHERE s_suppkey IN (SELECT l_suppkey FROM survivors)
         |ORDER BY s_suppkey""".stripMargin)),
     // the third standard attribution model (exponential time decay)
-    QueryDef("attribution_time_decay", Analytics5.attributionTimeDecay(_, _), Some(
+    QueryDef("attribution_time_decay", Warehouse.attributionTimeDecay(_, _), Some(
       """WITH e AS (
         |  SELECT event_id, user_id, event_type, epoch_us(ts) AS tus, value
         |  FROM events
@@ -735,7 +734,7 @@ object WarehouseDefs {
         |    ELSE p_value * w / w_sum END) AS REAL) AS credited_value
         |FROM n GROUP BY 1 ORDER BY 1""".stripMargin)),
     // monetary cohort analysis (exact integer cumulative LTV curve)
-    QueryDef("cohort_ltv", Analytics2.cohortLtv _, Some(
+    QueryDef("cohort_ltv", Warehouse.cohortLtv _, Some(
       """WITH ev AS (
         |  SELECT user_id, event_type, value,
         |    epoch_us(ts) // 604800000000 AS week
@@ -757,7 +756,7 @@ object WarehouseDefs {
         |    AS cum_revenue_micros
         |FROM rev ORDER BY cohort_week, week_offset""".stripMargin)),
     // Pareto stock-control classes over exact-cents revenue
-    QueryDef("sql_abc_analysis", Warehouse2.sqlAbcAnalysis _, Some(
+    QueryDef("sql_abc_analysis", Warehouse.sqlAbcAnalysis _, Some(
       """WITH rev AS (
         |  SELECT l_partkey AS part_id,
         |    CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
@@ -781,7 +780,7 @@ object WarehouseDefs {
         |       ELSE 'C' END AS abc_class
         |FROM ranked CROSS JOIN tot ORDER BY rank""".stripMargin)),
     // fulfillment SLA panel (exact integer-day percentiles)
-    QueryDef("sql_lead_time_percentiles", Warehouse2.sqlLeadTimePercentiles _, Some(
+    QueryDef("sql_lead_time_percentiles", Warehouse.sqlLeadTimePercentiles _, Some(
       """WITH fs AS (
         |  SELECT l_orderkey, min(l_shipdate) AS first_ship
         |  FROM lineitem GROUP BY l_orderkey
@@ -801,7 +800,7 @@ object WarehouseDefs {
     // li MATERIALIZED: DuckDB inlines plain CTEs per reference, so the
     // DISTINCT projection re-ran inside both self-join sides and the
     // degree scan — >1800 s at x10; materialized it replays in 9 s
-    QueryDef("sql_basket_rules", Analytics5.sqlBasketRules(_, _), Some(
+    QueryDef("sql_basket_rules", Warehouse.sqlBasketRules(_, _), Some(
       """WITH li AS MATERIALIZED (
         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
         |), w AS MATERIALIZED (
@@ -825,7 +824,7 @@ object WarehouseDefs {
     // 252-bit zone Bloom signatures as four 63-bit BIGINT words (every
     // shift positive on both engines), md5-derived double hashing,
     // bit_or aggregation — all-integer, bit-identical cross-engine
-    QueryDef("layout_bloom_prune", Warehouse2.layoutBloomPrune(_, _), Some(
+    QueryDef("layout_bloom_prune", Warehouse.layoutBloomPrune(_, _), Some(
       """WITH pairs AS MATERIALIZED (
         |  SELECT l_orderkey // 4096 AS zone_id, l_suppkey AS key
         |  FROM lineitem
@@ -898,7 +897,7 @@ object WarehouseDefs {
         |GROUP BY s.pk ORDER BY probe_key""".stripMargin)),
     // bounded-state MV: top-k maintained from state + insert tranche
     // FULL recompute: the engine's state+delta maintenance must equal it
-    QueryDef("mv_topk_delta", Warehouse2.mvTopkDelta(_, _), Some(
+    QueryDef("mv_topk_delta", Warehouse.mvTopkDelta(_, _), Some(
       """WITH e AS (
         |  SELECT event_id, event_type,
         |    CAST(round(value * 1000.0) AS BIGINT) AS v3

@@ -142,7 +142,9 @@ object StreamQueries {
   }
 
   /** Drain `streamed` to completion (AvailableNow into a memory sink)
-    * and return the final result as a batch DataFrame.
+    * and return the final result as a batch DataFrame: a local relation
+    * of the sink's rows, so the sink's temp view is dropped before
+    * returning and a long-lived session keeps no view per drain.
     *
     * No caller picks the state settings: [[run]] derives them from the
     * plan — the RocksDB store with 4 state partitions when it holds a
@@ -164,8 +166,13 @@ object StreamQueries {
     val name = "stream_" + UUID.randomUUID().toString.replace("-", "")
     run(spark, streamed, mode, name, eagerOutput)(
       _.format("memory").queryName(name))
-    spark.table(name)
+    try localCopy(spark, spark.table(name))
+    finally spark.catalog.dropTempView(name)
   }
+
+  /** `df`'s rows as a local relation that no longer reads its source. */
+  private def localCopy(spark: SparkSession, df: DataFrame): DataFrame =
+    spark.createDataFrame(df.collectAsList(), df.schema)
 
   /** The runner every drain and the resumable run go through (the
     * upsert, which must keep the session's shuffle partitions, starts
@@ -302,7 +309,7 @@ object StreamQueries {
   }
 
   /** Streaming hourly OHLC candles — the live twin of
-    * [[graft.query.Analytics4]] `ts_ohlc_hourly`: open/close are
+    * [[graft.query.stats.TimeSeries.tsOhlcHourly]]: open/close are
     * min_by/max_by on the same fixed-width (epoch-micros, event_id)
     * lexicographic key, so the ordered first/last per window stays a
     * plain incremental aggregate the state store can merge (no sorted
@@ -333,7 +340,7 @@ object StreamQueries {
 
   /** Streaming HOPPING-window aggregation: overlapping 6-hour windows
     * sliding every 3 hours — the stateful streaming twin of the batch
-    * [[graft.query.Relational2]] hopping window. Each event updates
+    * [[graft.query.Relational]] hopping window. Each event updates
     * exactly size/slide = 2 window states (Spark expands the window
     * spec per row before the shuffle — state is per (window, type),
     * NOT per event), and the watermark bounds total live state to the
@@ -428,7 +435,7 @@ object StreamQueries {
 
   /** Streaming SCD2 point-in-time enrichment: each live event joined to
     * the slowly-changing-dimension version effective AT ITS EVENT TIME —
-    * the streaming twin of [[graft.query.Relational3.scd2AsofLookup]],
+    * the streaming twin of [[graft.query.Warehouse.scd2AsofLookup]],
     * and the shape every online feature pipeline needs (a scoring
     * request must see the dimension as of the event, never the current
     * row, or training/serving skew follows). The dim is batch-built and
@@ -444,7 +451,7 @@ object StreamQueries {
     * key exactly like the batch form. */
   def streamScd2Enrich(spark: SparkSession, dir: String,
       maxUser: Long = 20L): DataFrame = {
-    val dim = graft.query.Relational3.scd2Versions(spark, dir, maxUser)
+    val dim = graft.query.Warehouse.scd2Versions(spark, dir, maxUser)
       .select(col("user_id").as("v_user"), col("version_n"), col("attr"),
         col("valid_from"), col("valid_to"))
     val enriched = streamEvents(spark, dir)
@@ -750,9 +757,14 @@ object StreamQueries {
       // spark.sql.shuffle.partitions — run would hold the session at its
       // state-partition count (8) for the whole drain, and the stream's
       // session, which the first merge plans on, is cloned at start.
-      startAndAwait(spark, w, "foreachbatch_upsert", checkpoint = None)
-      spark.read.parquet(latest.getOrElse(
-        sys.error("upsert drain produced no batches")))
+      // the final version is read back as a local relation, so the
+      // versioned store can be deleted before returning
+      val store = try {
+        startAndAwait(spark, w, "foreachbatch_upsert", checkpoint = None)
+        localCopy(spark, spark.read.parquet(latest.getOrElse(
+          sys.error("upsert drain produced no batches"))))
+      } finally Storage.delete(base)
+      store
         .select(col("user_id"), unix_micros(col("ts")).as("last_ts_us"),
           col("event_id").as("last_event_id"),
           col("value").as("last_value"))
@@ -1109,7 +1121,7 @@ object StreamQueries {
       jaccardThreshold: Double = 0.5,
       filesPerTrigger: Option[Int] = None): DataFrame = {
     import spark.implicits._
-    import graft.query.Dedup
+    import graft.query.{Dedup, TokenHash}
     val raw = streamTable(spark, s"$dir/documents.parquet",
       StructType.fromDDL("doc_id LONG, text STRING, lang STRING, " +
         "source STRING, n_chars LONG"), filesPerTrigger)
@@ -1119,7 +1131,7 @@ object StreamQueries {
         concat(lit("planted near duplicate copy "), col("text")))
     val deltaDocs = raw.unionByName(planted)
       .filter(col("doc_id") % 5 === 0)
-      .select(col("doc_id"), Dedup.tokens(col("text")).as("toks"))
+      .select(col("doc_id"), TokenHash.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= shingleSize)
     val deltaBanded = Dedup.bandedSignatures(
       Dedup.minhashSignatures(deltaDocs, "toks", "doc_id",
@@ -1426,7 +1438,7 @@ object StreamQueries {
   /** Streaming per-user rate limiting (token bucket: burst `capacity`,
     * one token per `periodUs`): each event is admitted or rejected at
     * arrival — the online admission-control twin of the batch
-    * [[graft.query.Analytics5.anomalyAlertDebounce]] recurrence, kept
+    * [[graft.query.stats.Anomaly.anomalyAlertDebounce]] recurrence, kept
     * as transformWithState state so a long-running stream carries the
     * bucket across triggers. Integer-exact; the oracle replays the
     * bucket as a recursive CTE.
@@ -1483,8 +1495,9 @@ object StreamQueries {
 
   /** Streaming per-user 1-D Kalman filter: the ValueState carries
     * (rn, x, P) and every arriving observation advances the SAME
-    * local-level recurrence as the batch [[graft.query.Analytics4]]
-    * `ts_kalman_1d` (identical parenthesization, identical
+    * local-level recurrence as the batch `ts_kalman_1d`
+    * ([[graft.query.stats.TimeSeries.tsKalman1d]]; identical
+    * parenthesization, identical
     * (ts, event_id) in-batch order), so a full drain equals the batch
     * filter BIT for bit — the batch-equivalence contract that lets one
     * codebase serve both the backfill and the live path. State is 3
@@ -1546,7 +1559,7 @@ object StreamQueries {
   /** Streaming per-user alert debouncer: the ValueState carries the
     * last FIRED anchor (microseconds) and every arriving error event
     * advances the SAME greedy recurrence as the batch
-    * [[graft.query.Analytics5]] `anomaly_alert_debounce` (fire iff
+    * [[graft.query.stats.Anomaly.anomalyAlertDebounce]] (fire iff
     * ≥ `gapUs` since the last fired alert; identical (ts, event_id)
     * in-batch order), so a full drain equals the batch query row for
     * row — the batch-equivalence contract of the Kalman twin, on
@@ -1607,7 +1620,7 @@ object StreamQueries {
   /** Streaming per-user Page's CUSUM against a fixed target: the
     * ValueState carries (rn, S⁺) and every arriving observation
     * advances the SAME clamped recurrence as the batch
-    * [[graft.query.Analytics6]] `ts_cusum_target` (identical
+    * [[graft.query.stats.TimeSeries.tsCusumTarget]] (identical
     * parenthesization, identical (ts, event_id) in-batch order), so a
     * full drain equals the batch scan bit for bit — the Kalman/debounce
     * batch-equivalence contract on the detector that EXISTS for the
@@ -1668,8 +1681,9 @@ object StreamQueries {
 
   /** Streaming twin of `ts_croston`: the ValueState carries
     * (rn, ẑ, q̂, prev_us) and every arriving purchase advances the SAME
-    * two-EWMA recurrence as the batch [[graft.query.Analytics6]]
-    * `ts_croston` (identical parenthesization, identical
+    * two-EWMA recurrence as the batch `ts_croston`
+    * ([[graft.query.stats.TimeSeries.tsCroston]]; identical
+    * parenthesization, identical
     * (ts, event_id) in-batch order) — drain == batch row for row,
     * shared recursive-CTE oracle. Intermittent demand is where the
     * live path matters most: the forecast is consulted BETWEEN
@@ -1773,7 +1787,7 @@ object StreamQueries {
   /** Streaming twin of `eval_ece`: the embeddings stream folds into
     * per-bin (n, Σscore, n_pos) ValueState, the drain's final panel
     * feeds the SAME ≤10-row ECE epilogue as the batch query
-    * ([[graft.query.Analytics3.eceFromBins]]) — the reliability monitor
+    * ([[graft.query.ml.Calibration.eceFromBins]]) — the reliability monitor
     * a serving deployment keeps warm instead of rescanning its eval
     * split. Drain == batch bit-identically (exact sums, shared
     * epilogue, shared oracle). */
@@ -1803,7 +1817,7 @@ object StreamQueries {
       .select(col("bin"), col("n"),
         (col("su").cast("double") / lit(1e6)).as("sum_score"),
         col("n_pos"))
-    graft.query.Analytics3.eceFromBins(panel)
+    graft.query.ml.Calibration.eceFromBins(panel)
   }
 
   case class DigitIn(digit: Int, one: Long)
@@ -1857,7 +1871,7 @@ object StreamQueries {
     val panel = drain(spark, out.toDF(), OutputMode.Update())
       .groupBy(col("digit"))
       .agg(max(col("n_orders")).as("n_orders"))
-    graft.query.Analytics5.benfordFromPanel(panel)
+    graft.query.stats.Quality.benfordFromPanel(panel)
   }
 
   case class PsiIn(bin: Long, a: Long, b: Long)
@@ -1889,7 +1903,7 @@ object StreamQueries {
   /** Streaming twin of `drift_psi_value`: events fold into per-bin
     * (ca, cb) ValueState and the drained panel feeds the SAME PSI-term
     * epilogue as the batch query
-    * ([[graft.query.Analytics.psiTermsFromPanel]]), with the cohort
+    * ([[graft.query.stats.Drift.psiTermsFromPanel]]), with the cohort
     * totals recovered from the panel itself (Σca, Σcb — equal to the
     * batch head's na/nb by construction). Bin edges are the monitor's
     * configured baseline (batch-derived min/max, the production
@@ -1898,40 +1912,28 @@ object StreamQueries {
   def streamDriftPsi(spark: SparkSession, dir: String,
       bins: Int = 10): DataFrame = {
     import spark.implicits._
-    val sides = graft.schema.Schemas.events(spark, dir)
-      .select(col("value"), (col("event_id") % 2 === 0).as("is_a"))
-    val head = sides.agg(
-      min(col("value")).as("vmin"), max(col("value")).as("vmax"),
-      sum(when(col("is_a"), 1L).otherwise(0L)).as("na"),
-      sum(when(col("is_a"), 0L).otherwise(1L)).as("nb")).head()
-    if (head.isNullAt(0) || head.getLong(2) == 0L || head.getLong(3) == 0L)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType.fromDDL("bin LONG, ca LONG, cb LONG, psi_term FLOAT"))
-    val (vmin, vmax) = (head.getDouble(0), head.getDouble(1))
-    val w = (vmax - vmin) / bins
-    val bin =
-      if (w > 0)
-        least(floor((col("value") - lit(vmin)) / lit(w)),
-          lit(bins - 1L)).cast("long")
-      else lit(0L)
-    val ds = streamEvents(spark, dir)
-      .select(bin.as("bin"),
-        when(col("event_id") % 2 === 0, 1L).otherwise(0L).as("a"),
-        when(col("event_id") % 2 === 0, 0L).otherwise(1L).as("b"))
-      .as[PsiIn]
-    val out = ds.groupByKey(_.bin)
-      .transformWithState(new PsiBinsProcessor(),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update())
-    val panel = drain(spark, out.toDF(), OutputMode.Update())
-      .groupBy(col("bin"))
-      .agg(max(col("ca")).as("ca"), max(col("cb")).as("cb"))
-    val tot = panel.agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"))
-    graft.query.Analytics.psiTermsFromPanel(
-      panel.crossJoin(broadcast(tot)),
-      col("na").cast("double"), col("nb").cast("double"))
+    import graft.query.stats.Drift
+    Drift.overCohorts(spark, dir,
+        "bin LONG, ca LONG, cb LONG, psi_term FLOAT") { c =>
+      val ds = streamEvents(spark, dir)
+        .select(c.bin(bins).as("bin"),
+          when(col("event_id") % 2 === 0, 1L).otherwise(0L).as("a"),
+          when(col("event_id") % 2 === 0, 0L).otherwise(1L).as("b"))
+        .as[PsiIn]
+      val out = ds.groupByKey(_.bin)
+        .transformWithState(new PsiBinsProcessor(),
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          OutputMode.Update())
+      val panel = drain(spark, out.toDF(), OutputMode.Update())
+        .groupBy(col("bin"))
+        .agg(max(col("ca")).as("ca"), max(col("cb")).as("cb"))
+      val tot = panel.agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"))
+      Drift.psiTermsFromPanel(
+        panel.crossJoin(broadcast(tot)),
+        col("na").cast("double"), col("nb").cast("double"))
+    }
   }
+
 
   /** [[streamTransformWithState]] over an arbitrary parquet stream dir —
     * the [[streamForeachbatchUpsertFrom]] convention: `rawEvents = true`

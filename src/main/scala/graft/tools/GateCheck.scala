@@ -50,27 +50,27 @@ object GateCheck {
       graft.query.Dedup.dedupGroups(spark.newSession(), dir,
         driverUnionFindMax = 0L))
     check("graph_connected_components")(
-      graft.query.Analytics3.graphConnectedComponents(spark, dir,
+      graft.query.Graph.graphConnectedComponents(spark, dir,
         driverUnionFindMax = Long.MaxValue),
-      graft.query.Analytics3.graphConnectedComponents(spark, dir,
+      graft.query.Graph.graphConnectedComponents(spark, dir,
         driverUnionFindMax = 0L))
     check("graph_cc_incremental")(
-      graft.query.Analytics3.graphCcIncremental(spark, dir,
+      graft.query.Graph.graphCcIncremental(spark, dir,
         driverUnionFindMax = Long.MaxValue),
-      graft.query.Analytics3.graphCcIncremental(spark, dir,
+      graft.query.Graph.graphCcIncremental(spark, dir,
         driverUnionFindMax = 0L))
     check("emb_hubness_stats")(
-      graft.query.Analytics4.embHubnessStats(spark, dir,
+      graft.query.Similarity.embHubnessStats(spark, dir,
         matrixGateBytes = Long.MaxValue),
-      graft.query.Analytics4.embHubnessStats(spark.newSession(), dir,
+      graft.query.Similarity.embHubnessStats(spark.newSession(), dir,
         matrixGateBytes = 0L))
     check("graph_ego_betweenness")(
-      graft.query.Analytics6.graphEgoBetweenness(spark, dir,
+      graft.query.Graph.graphEgoBetweenness(spark, dir,
         broadcastMaxEdges = Long.MaxValue),
-      graft.query.Analytics6.graphEgoBetweenness(spark, dir,
+      graft.query.Graph.graphEgoBetweenness(spark, dir,
         broadcastMaxEdges = 0L))
     println(s"[gate] symmetric edge index at this sf: " +
-      s"${graft.query.Analytics.symEdgeCount(spark, dir)} rows " +
+      s"${graft.query.GraphIndex.symEdgeCount(spark, dir)} rows " +
       "(ego broadcast gate default broadcastMaxEdges = 8000000)")
 
     // which side does THIS corpus land on at the production defaults?

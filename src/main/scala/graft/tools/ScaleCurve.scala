@@ -108,15 +108,15 @@ object ScaleCurve {
     // reasons, not scale ones)
     val scaleVariants: Map[String, (SparkSession, String) => DataFrame] = Map(
     "ts_kalman_1d_all" -> ((s, d) =>
-      graft.query.Analytics4.tsKalman1d(s, d, maxUser = Long.MaxValue)),
+      graft.query.stats.TimeSeries.tsKalman1d(s, d, maxUser = Long.MaxValue)),
     "window_bollinger_bands_all" -> ((s, d) =>
-      graft.query.Analytics4.windowBollingerBands(s, d,
+      graft.query.Relational.windowBollingerBands(s, d,
         maxUser = Long.MaxValue)),
     "window_hampel_filter_all" -> ((s, d) =>
-      graft.query.Analytics4.windowHampelFilter(s, d,
+      graft.query.Relational.windowHampelFilter(s, d,
         maxUser = Long.MaxValue)),
     "ts_pacf_durbin_levinson_all" -> ((s, d) =>
-      graft.query.Analytics4.tsPacfDurbinLevinson(s, d,
+      graft.query.stats.TimeSeries.tsPacfDurbinLevinson(s, d,
         maxUser = Long.MaxValue)))
 
     def queryFn(name: String): (SparkSession, String) => DataFrame =

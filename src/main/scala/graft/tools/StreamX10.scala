@@ -78,16 +78,16 @@ object StreamX10 {
     import graft.streaming.StreamQueries
     check("stream_croston")(
       StreamQueries.streamCroston(spark, dir))(
-      graft.query.Analytics6.tsCroston(spark, dir))
+      graft.query.stats.TimeSeries.tsCroston(spark, dir))
     check("stream_cusum_target")(
       StreamQueries.streamCusumTarget(spark, dir))(
-      graft.query.Analytics6.tsCusumTarget(spark, dir))
+      graft.query.stats.TimeSeries.tsCusumTarget(spark, dir))
     check("stream_kalman_filter")(
       StreamQueries.streamKalmanFilter(spark, dir))(
-      graft.query.Analytics4.tsKalman1d(spark, dir))
+      graft.query.stats.TimeSeries.tsKalman1d(spark, dir))
     check("stream_alert_debounce")(
       StreamQueries.streamAlertDebounce(spark, dir))(
-      graft.query.Analytics5.anomalyAlertDebounce(spark, dir))
+      graft.query.stats.Anomaly.anomalyAlertDebounce(spark, dir))
     check("stream_dedup_incremental")(
       StreamQueries.streamDedupIncremental(spark, dir))(
       graft.query.Dedup.dedupIncrementalMinhash(spark, dir))

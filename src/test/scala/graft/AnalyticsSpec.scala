@@ -1,13 +1,14 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.query.{Analytics, Similarity, TextAnalysis}
+import graft.query.{Graph, Relational, Similarity, TextAnalysis}
+import graft.query.stats.{Anomaly, Sampling, TimeSeries}
 
 class AnalyticsSpec extends SparkSpec {
   import spark.implicits._
 
   test("graph_triangles: degree-ordered count equals the brute-force 3-way join") {
-    val row = Analytics.graphTriangles(spark, sf).collect()(0)
+    val row = Graph.graphTriangles(spark, sf).collect()(0)
     val nTri = row.getAs[Long]("n_triangles")
     // brute force: unoriented distinct edges, u<v<w closure
     val li = graft.schema.Schemas.table(spark, sf, "lineitem")
@@ -29,7 +30,7 @@ class AnalyticsSpec extends SparkSpec {
   }
 
   test("graph_pagerank: probability mass conserved (sums to 1), all ranks positive") {
-    val pr = Analytics.graphPagerank(spark, sf, maxVertex = Long.MaxValue)
+    val pr = Graph.graphPagerank(spark, sf, maxVertex = Long.MaxValue)
       .cache()
     assert(pr.filter($"pagerank" <= 0f).count() == 0)
     val mass = pr.agg(sum($"pagerank".cast("double"))).as[Double].collect()(0)
@@ -39,7 +40,7 @@ class AnalyticsSpec extends SparkSpec {
   }
 
   test("agg_mode_per_key: struct-argmax mode equals the window-rank mode") {
-    val out = Analytics.aggModePerKey(spark, sf)
+    val out = Relational.aggModePerKey(spark, sf)
       .select($"user_id", $"mode_type", $"mode_n")
       .as[(Long, String, Long)].collect().toSet
     val w = org.apache.spark.sql.expressions.Window
@@ -56,7 +57,7 @@ class AnalyticsSpec extends SparkSpec {
 
   test("ts_resample_interp: grid-aligned timestamps, values inside the bracketing interval") {
     val step = 3600000000L
-    val out = Analytics.tsResampleInterp(spark, sf).cache()
+    val out = TimeSeries.tsResampleInterp(spark, sf).cache()
     assert(out.filter($"grid_us" % step =!= 0).count() == 0)
     // interpolation is convex: every value within the user's global range
     val bounds = graft.schema.Schemas.events(spark, sf)
@@ -96,7 +97,7 @@ class AnalyticsSpec extends SparkSpec {
   }
 
   test("anomaly_zscore: every row beyond threshold; count matches recomputed stats") {
-    val out = Analytics.anomalyZscore(spark, sf).cache()
+    val out = Anomaly.anomalyZscore(spark, sf).cache()
     assert(out.filter(abs($"z") <= 3.0).count() == 0)
     val ev = graft.schema.Schemas.events(spark, sf)
     val stats = ev.groupBy($"event_type")
@@ -108,8 +109,8 @@ class AnalyticsSpec extends SparkSpec {
   }
 
   test("sample_weighted: deterministic, and acceptance rate tracks mean(value)/max(value)") {
-    val a = Analytics.sampleWeighted(spark, sf).collect().toSeq
-    val b = Analytics.sampleWeighted(spark, sf).collect().toSeq
+    val a = Sampling.samplePropValue(spark, sf).collect().toSeq
+    val b = Sampling.samplePropValue(spark, sf).collect().toSeq
     assert(a == b) // hash-derived, not rand(): identical across runs
     val ev = graft.schema.Schemas.events(spark, sf)
     val n = ev.count().toDouble
@@ -127,7 +128,7 @@ class AnalyticsSpec extends SparkSpec {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"user_id").orderBy($"ts", $"event_id")
       .rowsBetween(-6, 0)
-    val checked = Analytics.rollingMedian(spark, sf)
+    val checked = Relational.rollingMedian(spark, sf)
       .join(ev.select($"event_id", min($"value").over(w).as("lo"),
         max($"value").over(w).as("hi"),
         count(lit(1)).over(w).as("nf")), Seq("event_id"))
@@ -143,7 +144,7 @@ class AnalyticsSpec extends SparkSpec {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"user_id").orderBy($"ts", $"event_id")
       .rowsBetween(-7, 0)
-    val checked = Analytics.windowEwma(spark, sf)
+    val checked = Relational.windowEwma(spark, sf)
       .join(ev.select($"event_id", min($"value").over(w).as("lo"),
         max($"value").over(w).as("hi"),
         count(lit(1)).over(w).as("nf")), Seq("event_id"))
@@ -155,7 +156,7 @@ class AnalyticsSpec extends SparkSpec {
   }
 
   test("agg_sketch_merge: merged HLL estimate lands within the 5% bound everywhere") {
-    val out = Analytics.aggSketchMerge(spark, sf).cache()
+    val out = Relational.aggSketchMerge(spark, sf).cache()
     assert(out.count() == 5)
     assert(out.filter(!$"est_within_8pct").count() == 0)
   }
@@ -205,7 +206,7 @@ class AnalyticsSpec extends SparkSpec {
     // every token prob < 1 under a vocab with ≥ 2 distinct tokens
     assert(out.filter($"avg_logprob" >= 0.0).count() == 0)
     val totalToks = graft.schema.Schemas.table(spark, sf, "documents")
-      .select(size(graft.query.Dedup.tokens($"text")).cast("long").as("n"))
+      .select(size(graft.query.TokenHash.tokens($"text")).cast("long").as("n"))
       .agg(sum($"n")).as[Long].collect()(0)
     assert(out.agg(sum($"n_tokens")).as[Long].collect()(0) == totalToks)
   }
@@ -218,7 +219,7 @@ class AnalyticsSpec extends SparkSpec {
     // spot-check one unigram count against a direct count
     val r0 = rows(0)
     val direct = graft.schema.Schemas.table(spark, sf, "documents")
-      .select(explode(graft.query.Dedup.tokens($"text")).as("tok"))
+      .select(explode(graft.query.TokenHash.tokens($"text")).as("tok"))
       .filter($"tok" === r0.getAs[String]("a")).count()
     assert(r0.getAs[Long]("n_a") == direct)
   }

@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.query.Analytics5
+import graft.query.{Dedup, Warehouse}
+import graft.query.stats.{Anomaly, Drift, TimeSeries}
 import graft.schema.Schemas
 
 /** Batch-side immunity to events.ts physical-type drift — the failure
@@ -41,15 +42,15 @@ class BatchTsTypeSpec extends SparkSpec {
 
   private val probes: Seq[(String, String => Seq[String])] = Seq(
     "ts_interval_union" ->
-      (d => Analytics5.tsIntervalUnion(spark, d).collect().map(_.toString).toSeq),
+      (d => TimeSeries.tsIntervalUnion(spark, d).collect().map(_.toString).toSeq),
     "dedup_time_window" ->
-      (d => Analytics5.dedupTimeWindow(spark, d).collect().map(_.toString).toSeq),
+      (d => Dedup.dedupTimeWindow(spark, d).collect().map(_.toString).toSeq),
     "attribution_linear" ->
-      (d => Analytics5.attributionLinear(spark, d).collect().map(_.toString).toSeq),
+      (d => Warehouse.attributionLinear(spark, d).collect().map(_.toString).toSeq),
     "anomaly_rolling_z" ->
-      (d => Analytics5.anomalyRollingZ(spark, d).collect().map(_.toString).toSeq),
+      (d => Anomaly.anomalyRollingZ(spark, d).collect().map(_.toString).toSeq),
     "drift_psi" ->
-      (d => Analytics5.driftPsi(spark, d).collect().map(_.toString).toSeq),
+      (d => Drift.driftPsi(spark, d).collect().map(_.toString).toSeq),
     "normalized events scan" ->
       (d => Schemas.events(spark, d)
         .select(col("event_id"), col("ts"), col("value"))

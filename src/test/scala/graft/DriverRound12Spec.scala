@@ -1,8 +1,10 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.query.{Analytics, Analytics4, Analytics5, Dedup, Pipeline,
-  Similarity, TextAnalysis, Warehouse2}
+import graft.query.{Dedup, Graph, Similarity, TextAnalysis, TokenHash,
+  Warehouse}
+import graft.query.ml.Features
+import graft.query.stats.{Quality, Sampling, TimeSeries}
 
 /** Driver-round-12 operator pins: MMR diversified retrieval, hard-
   * negative mining, Δ-join view maintenance, and leave-one-out target
@@ -77,7 +79,7 @@ class DriverRound12Spec extends SparkSpec {
       .select(col("o_orderkey"), col("o_custkey"), col("price_cents"),
         col("c_nationkey"))
       .orderBy(col("o_orderkey")).collect()
-    val delta = Warehouse2.mvJoinDelta(spark, sf).collect()
+    val delta = Warehouse.mvJoinDelta(spark, sf).collect()
     assert(delta.length == full.length && delta.nonEmpty)
     delta.zip(full).foreach { case (a, b) => assert(a == b) }
   }
@@ -140,10 +142,10 @@ class DriverRound12Spec extends SparkSpec {
 
   test("retrieval_prf_expansion: expansion terms are disjoint from the " +
       "query doc's vocabulary and doc-frequency-bounded by the feedback set") {
-    val qToks = TextAnalysis.tokenTf(spark, sf)
+    val qToks = TokenHash.tokenTf(spark, sf)
       .filter(col("doc_id") === 0).select(col("tok")).collect()
       .map(_.getString(0)).toSet
-    val rows = TextAnalysis.retrievalPrfExpansion(spark, sf).collect()
+    val rows = Similarity.retrievalPrfExpansion(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(!qToks.contains(r.getString(0)), s"query term ${r.getString(0)}")
@@ -157,7 +159,7 @@ class DriverRound12Spec extends SparkSpec {
     val rows = TextAnalysis.corpusDsirWeights(spark, sf).collect()
     val nDocs = graft.schema.Schemas.table(spark, sf, "documents").count()
     assert(rows.length == nDocs)
-    val dl = TextAnalysis.tokenTf(spark, sf).groupBy(col("doc_id"))
+    val dl = TokenHash.tokenTf(spark, sf).groupBy(col("doc_id"))
       .agg(sum(col("tf")).as("dl")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     rows.foreach(r => assert(r.getLong(2) == dl(r.getLong(0))))
@@ -170,7 +172,7 @@ class DriverRound12Spec extends SparkSpec {
 
   test("feature_woe_iv: counts reconcile, IV terms are non-negative, and " +
       "WOE sign tracks the category's good-rate vs the global rate") {
-    val rows = Pipeline.featureWoeIv(spark, sf).collect()
+    val rows = Features.featureWoeIv(spark, sf).collect()
     assert(rows.nonEmpty)
     val gt = rows.map(_.getLong(2)).sum.toDouble
     val bt = rows.map(_.getLong(3)).sum.toDouble
@@ -186,7 +188,7 @@ class DriverRound12Spec extends SparkSpec {
 
   test("graph_node2vec_transitions: weights are exactly {0.5, 1, 2} by " +
       "case, and per-(prev,cur) probabilities sum to exactly 1.0") {
-    val rows = Analytics5.graphNode2vecTransitions(spark, sf).collect()
+    val rows = Graph.graphNode2vecTransitions(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val w = r.getDouble(3)
@@ -255,7 +257,7 @@ class DriverRound12Spec extends SparkSpec {
   test("pack_bin_ffd: bin assignment equals a driver-side first-fit-" +
       "decreasing replay and respects capacity except oversize singletons") {
     val cap = 256L
-    val rows = Pipeline.packBinFfd(spark, sf).collect()
+    val rows = TextAnalysis.packBinFfd(spark, sf).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
     assert(rows.nonEmpty)
     rows.groupBy(_._2).foreach { case (src, rs) =>
@@ -280,7 +282,7 @@ class DriverRound12Spec extends SparkSpec {
 
   test("graph_closeness_sampled: hop counts and harmonic score equal a " +
       "driver-side multi-source BFS replay") {
-    val rows = Analytics.graphClosenessSampled(spark, sf).collect()
+    val rows = Graph.graphClosenessSampled(spark, sf).collect()
     assert(rows.nonEmpty)
     // replay: exact BFS over the collected symmetric edge list
     val li = graft.schema.Schemas.table(spark, sf, "lineitem")
@@ -324,7 +326,7 @@ class DriverRound12Spec extends SparkSpec {
       .select(col("user_id"), unix_micros(col("ts")),
         col("event_id"), round(col("value") * lit(1e6)).cast("long"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    val got = Analytics4.tsMannKendall(spark, sf).collect()
+    val got = TimeSeries.tsMannKendall(spark, sf).collect()
     assert(got.nonEmpty)
     val byUser = ev.groupBy(_._1)
     got.foreach { r =>
@@ -388,13 +390,13 @@ class DriverRound12Spec extends SparkSpec {
 
   test("graph_effective_diameter: reconciles with the closeness index " +
       "(same BFS), d90 is the first 90% quantile hop, mean inside [1, 4]") {
-    val d = Analytics.graphEffectiveDiameter(spark, sf).collect()
+    val d = Graph.graphEffectiveDiameter(spark, sf).collect()
     assert(d.length == 1)
     val r = d.head
     val n = (1 to 4).map(h => r.getLong(h))
     assert(r.getLong(0) == n.sum)
     // same totals as the closeness rollup of the shared index
-    val c = Analytics.graphClosenessSampled(spark, sf).collect()
+    val c = Graph.graphClosenessSampled(spark, sf).collect()
     (1 to 4).foreach { h =>
       assert(c.map(_.getLong(h)).sum == n(h - 1), s"hop $h")
     }
@@ -407,7 +409,7 @@ class DriverRound12Spec extends SparkSpec {
 
   test("dq_benford_test: digits partition the table, probabilities sum " +
       "to ~1, chi-square terms are non-negative") {
-    val rows = Warehouse2.dqBenfordTest(spark, sf).collect()
+    val rows = Quality.dqBenfordTest(spark, sf).collect()
     assert(rows.map(_.getInt(0)).toSeq.sorted ==
       rows.map(_.getInt(0)).toSeq.sorted.distinct)
     val nOrders = graft.schema.Schemas.table(spark, sf, "orders").count()
@@ -503,7 +505,7 @@ class DriverRound12Spec extends SparkSpec {
       chosen :+= id
       want :+= ((id, step, md2))
     }
-    val got = Similarity.sampleKcenterCoreset(spark, sf).collect()
+    val got = Sampling.sampleKcenterCoreset(spark, sf).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
     assert(got.toSeq == want)
     got.sliding(2).foreach { case Array(a, b) =>
@@ -520,7 +522,7 @@ class DriverRound12Spec extends SparkSpec {
       .map { case (t, rs) => t -> (rs.map(_.getLong(2)).sum, rs.length.toLong) }
     val s = ev.map(_.getLong(2)).sum
     val n = ev.length.toLong
-    val got = Pipeline.featureTargetEncode(spark, sf).collect()
+    val got = Features.featureTargetEncode(spark, sf).collect()
       .map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(got.nonEmpty)
     ev.filter(_.getLong(0) < 2000L).foreach { r =>

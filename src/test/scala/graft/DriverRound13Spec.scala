@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
-import graft.query.{Analytics4, Pipeline, Similarity, TextAnalysis}
+import graft.query.{Graph, Relational, Similarity, TextAnalysis}
+import graft.query.ml.{Features, Ranking}
+import graft.query.stats.{Sampling, TimeSeries}
 
 /** Round-13 guards: the r12 bench defect was an ITERATIVE operator whose
   * rounds re-executed each other through unmaterialized lineage
@@ -36,9 +38,9 @@ class DriverRound13Spec extends SparkSpec {
   test("sample_kcenter_coreset: per-round work is constant — jobs and " +
       "stages grow linearly in k, never multiplicatively") {
     // warm the norm index + JIT outside the measured window
-    Similarity.sampleKcenterCoreset(spark, sf, k = 2).collect()
-    val (j4, s4) = countWork(Similarity.sampleKcenterCoreset(spark, sf, k = 4).collect())
-    val (j8, s8) = countWork(Similarity.sampleKcenterCoreset(spark, sf, k = 8).collect())
+    Sampling.sampleKcenterCoreset(spark, sf, k = 2).collect()
+    val (j4, s4) = countWork(Sampling.sampleKcenterCoreset(spark, sf, k = 4).collect())
+    val (j8, s8) = countWork(Sampling.sampleKcenterCoreset(spark, sf, k = 8).collect())
     // doubling k adds exactly the extra rounds' jobs: the lazy-lineage
     // recursion this pins against multiplied stages ~3^k (r12: 179 s)
     assert(j8 - j4 <= 8, s"jobs grew super-linearly: k=4→$j4, k=8→$j8")
@@ -57,11 +59,11 @@ class DriverRound13Spec extends SparkSpec {
 
   test("graph_reachability / graph_pagerank_deep: per-round materialization " +
       "holds — stage count stays linear in rounds") {
-    graft.query.Analytics.graphReachability(spark, sf).collect()
-    val (_, s1) = countWork(graft.query.Analytics.graphReachability(spark, sf).collect())
+    graft.query.Graph.graphReachability(spark, sf).collect()
+    val (_, s1) = countWork(graft.query.Graph.graphReachability(spark, sf).collect())
     // re-run is identical work (the BSP loop localCheckpoints per hop,
     // so the plan cannot compound across calls either)
-    val (_, s2) = countWork(graft.query.Analytics.graphReachability(spark, sf).collect())
+    val (_, s2) = countWork(graft.query.Graph.graphReachability(spark, sf).collect())
     assert(s2 <= s1 + 4, s"repeat run grew: $s1 → $s2 stages")
   }
 
@@ -83,7 +85,7 @@ class DriverRound13Spec extends SparkSpec {
         lit("{}").as("props"))
       .coalesce(1).write.parquet(s"$dir/events.parquet")
     val t0 = System.nanoTime()
-    val rows = Analytics4.tsMannKendall(spark, dir).collect()
+    val rows = TimeSeries.tsMannKendall(spark, dir).collect()
     val sec = (System.nanoTime() - t0) / 1e9
     assert(sec < 60.0, s"hot key took $sec s — O(k²) regression?")
     assert(rows.length == 1)
@@ -110,8 +112,8 @@ class DriverRound13Spec extends SparkSpec {
         (col("id").cast("double") / lit(1e6)).as("value"),
         lit("{}").as("props"))
       .coalesce(1).write.parquet(s"$dir/events.parquet")
-    val exact = Analytics4.tsMannKendall(spark, dir).collect().head
-    val sampled = Analytics4.tsMannKendall(spark, dir, exactSenMax = 8)
+    val exact = TimeSeries.tsMannKendall(spark, dir).collect().head
+    val sampled = TimeSeries.tsMannKendall(spark, dir, exactSenMax = 8)
       .collect().head
     assert(exact.getLong(2) == sampled.getLong(2), "S is regime-independent")
     assert(exact.getDouble(5) == sampled.getDouble(5),
@@ -185,7 +187,7 @@ class DriverRound13Spec extends SparkSpec {
     val toks = graft.schema.Schemas.table(spark, sf, "documents")
       .filter(col("doc_id") === 0L || col("doc_id").isin(
         pool.keys.toSeq.map(Long.box): _*))
-      .select(col("doc_id"), graft.query.Dedup.tokens(col("text")))
+      .select(col("doc_id"), graft.query.TokenHash.tokens(col("text")))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     val q = toks(0L); val qset = q.toSet
     val want = pool.toSeq.map { case (id, cos) =>
@@ -212,7 +214,7 @@ class DriverRound13Spec extends SparkSpec {
 
   test("ann_ivf_pq_topk: every hit sits in a probed cell; adc distances " +
       "equal a driver-side replay of int8-quantize → codes → query LUT") {
-    val got = graft.query.Curation.annIvfPqTopk(spark, sf).collect()
+    val got = graft.query.Similarity.annIvfPqTopk(spark, sf).collect()
     assert(got.nonEmpty && got.length <= 10)
     // probed cells must equal the det-IVF probe set the composite claims
     val probes = graft.query.Similarity
@@ -261,7 +263,7 @@ class DriverRound13Spec extends SparkSpec {
     assert(got.nonEmpty)
     val docs = graft.schema.Schemas.table(spark, sf, "documents")
       .filter(col("doc_id") < 50)
-      .select(col("doc_id"), graft.query.Dedup.tokens(col("text")))
+      .select(col("doc_id"), graft.query.TokenHash.tokens(col("text")))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     val byId = got.map(r => r.getLong(0) -> r).toMap
     docs.filter(_._2.length >= 2).foreach { case (id, t) =>
@@ -282,7 +284,7 @@ class DriverRound13Spec extends SparkSpec {
 
   test("eval_pass_at_k: estimator replays per problem; boundary cases " +
       "(n < k → NULL, failures < k → exactly 1.0) hold") {
-    val got = Analytics4.evalPassAtK(spark, sf).collect()
+    val got = Ranking.evalPassAtK(spark, sf).collect()
     assert(got.nonEmpty)
     val ev = graft.schema.Schemas.events(spark, sf)
       .select(col("user_id"), col("value")).collect()
@@ -310,7 +312,7 @@ class DriverRound13Spec extends SparkSpec {
 
   test("emb_covariance_int: every upper-triangle entry equals a " +
       "driver-side exact-integer replay; diagonal is non-negative") {
-    val got = Analytics4.embCovarianceInt(spark, sf).collect()
+    val got = Similarity.embCovarianceInt(spark, sf).collect()
     assert(got.length == 36) // 8·9/2
     val q6 = graft.schema.Schemas.table(spark, sf, "embeddings")
       .select(col("embedding")).collect()
@@ -332,9 +334,9 @@ class DriverRound13Spec extends SparkSpec {
 
   test("ts_ljung_box_terms: lag-1 rows reproduce ts_autocorr_lag1; " +
       "q_term replays n(n+2)·rho²/(n−k) from the emitted columns") {
-    val got = Analytics4.tsLjungBoxTerms(spark, sf).collect()
+    val got = TimeSeries.tsLjungBoxTerms(spark, sf).collect()
     assert(got.nonEmpty)
-    val lag1 = Analytics4.tsAutocorrLag1(spark, sf).collect()
+    val lag1 = TimeSeries.tsAutocorrLag1(spark, sf).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getFloat(2))).toMap
     got.filter(_.getInt(1) == 1).foreach { r =>
       val (n1, rho1) = lag1(r.getLong(0))
@@ -358,7 +360,7 @@ class DriverRound13Spec extends SparkSpec {
 
   test("agg_ams_f2: counters replay the ±1 hash signs; the 16-counter " +
       "mean estimates F2 within the AMS variance envelope") {
-    val got = Analytics4.aggAmsF2(spark, sf).collect()
+    val got = Relational.aggAmsF2(spark, sf).collect()
     assert(got.length == 16)
     val fs = graft.schema.Schemas.events(spark, sf)
       .groupBy(col("user_id")).agg(count(lit(1)).as("f")).collect()
@@ -380,7 +382,7 @@ class DriverRound13Spec extends SparkSpec {
 
   test("ts_ohlc_hourly: open/close equal the time-ordered first/last " +
       "event values; high/low bound them; buckets partition the stream") {
-    val got = Analytics4.tsOhlcHourly(spark, sf).collect()
+    val got = TimeSeries.tsOhlcHourly(spark, sf).collect()
     assert(got.nonEmpty)
     val ev = graft.schema.Schemas.events(spark, sf)
       .select(date_trunc("hour", col("ts")).as("h"), col("value"),
@@ -422,7 +424,7 @@ class DriverRound13Spec extends SparkSpec {
     // boundary rule replay on a sample doc
     val docs = graft.schema.Schemas.table(spark, sf, "documents")
       .filter(col("doc_id") < 10)
-      .select(col("doc_id"), graft.query.Dedup.tokens(col("text")))
+      .select(col("doc_id"), graft.query.TokenHash.tokens(col("text")))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     docs.foreach { case (id, t) =>
       val ends = (1 to t.length).filter(i => i == t.length ||
@@ -451,7 +453,7 @@ class DriverRound13Spec extends SparkSpec {
 
   test("feature_mutual_info_terms: counts and terms replay exactly; the " +
       "summed MI is non-negative") {
-    val got = Pipeline.featureMutualInfoTerms(spark, sf).collect()
+    val got = Features.featureMutualInfoTerms(spark, sf).collect()
     assert(got.nonEmpty)
     val ev = graft.schema.Schemas.events(spark, sf)
       .select(col("event_type"), floor(col("value") / lit(25.0)).cast("int"))
@@ -476,7 +478,7 @@ class DriverRound13Spec extends SparkSpec {
 
   test("dq_dp_laplace_counts: the noise replays the inverse-CDF Laplace " +
       "draw from the category hash; noisy counts are exact + noise") {
-    val got = graft.query.Warehouse2.dqDpLaplaceCounts(spark, sf).collect()
+    val got = graft.query.stats.Quality.dqDpLaplaceCounts(spark, sf).collect()
     assert(got.nonEmpty)
     val counts = graft.schema.Schemas.events(spark, sf)
       .groupBy(col("event_type")).agg(count(lit(1))).collect()
@@ -500,7 +502,7 @@ class DriverRound13Spec extends SparkSpec {
 
   test("sample_neyman_allocation: allocations sum to the budget exactly, " +
       "replay N_h·sigma_h shares with largest-remainder rounding") {
-    val got = graft.query.Relational3.sampleNeymanAllocation(spark, sf)
+    val got = graft.query.stats.Sampling.sampleNeymanAllocation(spark, sf)
       .collect()
     assert(got.nonEmpty)
     assert(got.map(_.getLong(4)).sum == 1000L, "allocations must sum to budget")
@@ -533,8 +535,8 @@ class DriverRound13Spec extends SparkSpec {
 
   test("graph_adamic_adar: pairs and counts agree with " +
       "graph_common_neighbors; scores replay sum(1/ln(deg(center)))") {
-    val aa = Analytics4.graphAdamicAdar(spark, sf).collect()
-    val cnRows = Analytics4.graphCommonNeighbors(spark, sf).collect()
+    val aa = Graph.graphAdamicAdar(spark, sf).collect()
+    val cnRows = Graph.graphCommonNeighbors(spark, sf).collect()
     assert(aa.nonEmpty)
     // same ranking contract (cn desc, u, v) over the same wedge cohort
     // ⇒ identical pair lists
@@ -566,7 +568,7 @@ class DriverRound13Spec extends SparkSpec {
 
   test("ml_isotonic_calibration: fitted values are the isotonic minimax, " +
       "monotone non-decreasing, and match a driver-side PAV run") {
-    val got = graft.query.Analytics3.mlIsotonicCalibration(spark, sf)
+    val got = graft.query.ml.Calibration.mlIsotonicCalibration(spark, sf)
       .collect().sortBy(_.getInt(0))
     assert(got.nonEmpty)
     got.sliding(2).foreach {
@@ -607,7 +609,7 @@ class DriverRound13Spec extends SparkSpec {
   test("ts_kalman_1d: every filtered value replays the recurrence " +
       "bit-exactly; the gain converges to the Riccati fixed point; " +
       "estimates stay inside the running observation envelope") {
-    val got = Analytics4.tsKalman1d(spark, sf).collect()
+    val got = TimeSeries.tsKalman1d(spark, sf).collect()
     assert(got.nonEmpty)
     val ev = graft.schema.Schemas.events(spark, sf)
       .filter(col("user_id") < 50)
@@ -649,7 +651,7 @@ class DriverRound13Spec extends SparkSpec {
 
   test("stream_kalman_filter: the streaming drain equals the batch " +
       "filter bit for bit, and a re-run is deterministic") {
-    val batch = Analytics4.tsKalman1d(spark, sf).collect()
+    val batch = TimeSeries.tsKalman1d(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3),
         r.getDouble(4), r.getDouble(5)))
     val stream = graft.streaming.StreamQueries.streamKalmanFilter(spark, sf)
@@ -668,7 +670,7 @@ class DriverRound13Spec extends SparkSpec {
 
   test("stream_ohlc_candles: the streaming drain equals the batch candle " +
       "table row for row") {
-    val batch = Analytics4.tsOhlcHourly(spark, sf).collect()
+    val batch = TimeSeries.tsOhlcHourly(spark, sf).collect()
       .map(r => (r.getTimestamp(0), r.getLong(1), r.getDouble(2),
         r.getDouble(3), r.getDouble(4), r.getDouble(5), r.getFloat(6)))
     val stream = graft.streaming.StreamQueries.streamOhlcCandles(spark, sf)
@@ -680,7 +682,7 @@ class DriverRound13Spec extends SparkSpec {
 
   test("window_bollinger_bands: flags replay the exact-integer band test " +
       "and agree with the double-arithmetic band; false until fill") {
-    val got = Analytics4.windowBollingerBands(spark, sf).collect()
+    val got = Relational.windowBollingerBands(spark, sf).collect()
     assert(got.nonEmpty)
     val ev = graft.schema.Schemas.events(spark, sf)
       .filter(col("user_id") < 50)
@@ -724,7 +726,7 @@ class DriverRound13Spec extends SparkSpec {
 
   test("window_hampel_filter: median/MAD replay the sorted-window picks; " +
       "outliers replaced by the median, inliers pass through untouched") {
-    val got = Analytics4.windowHampelFilter(spark, sf).collect()
+    val got = Relational.windowHampelFilter(spark, sf).collect()
     assert(got.nonEmpty)
     val ev = graft.schema.Schemas.events(spark, sf)
       .filter(col("user_id") < 50)
@@ -760,9 +762,9 @@ class DriverRound13Spec extends SparkSpec {
   test("ts_pacf_durbin_levinson: lag-1 PACF equals the lag-1 ACF and " +
       "every level replays the Durbin-Levinson recursion from the rho " +
       "values the ljung-box panel emits") {
-    val got = Analytics4.tsPacfDurbinLevinson(spark, sf).collect()
+    val got = TimeSeries.tsPacfDurbinLevinson(spark, sf).collect()
     assert(got.nonEmpty)
-    val rho = Analytics4.tsLjungBoxTerms(spark, sf).collect()
+    val rho = TimeSeries.tsLjungBoxTerms(spark, sf).collect()
       .map(r => (r.getLong(0), r.getInt(1)) -> r.getFloat(3).toDouble)
       .toMap
     got.groupBy(_.getLong(0)).foreach { case (u, rows) =>
@@ -790,7 +792,7 @@ class DriverRound13Spec extends SparkSpec {
 
   test("agg_median_of_means: bucket means and the median replay; the " +
       "estimator sits near the plain mean on this benign corpus") {
-    val got = Analytics4.aggMedianOfMeans(spark, sf).collect()
+    val got = Relational.aggMedianOfMeans(spark, sf).collect()
     assert(got.length == 1)
     val r = got.head
     val ev = graft.schema.Schemas.events(spark, sf)
@@ -836,9 +838,9 @@ class DriverRound13Spec extends SparkSpec {
 
   test("plan: emb_covariance_int combines map-side into 36 groups; " +
       "ann_ivf_pq_topk ends in TakeOrdered with broadcast LUT/probes") {
-    val pc = plan(Analytics4.embCovarianceInt(spark, sf))
+    val pc = plan(Similarity.embCovarianceInt(spark, sf))
     assert(pc.contains("partial_sum"), pc)
-    val pq = plan(graft.query.Curation.annIvfPqTopk(spark, sf))
+    val pq = plan(graft.query.Similarity.annIvfPqTopk(spark, sf))
     assert(pq.contains("TakeOrderedAndProject"), pq)
     assert(pq.contains("BroadcastHashJoin") ||
       pq.contains("BroadcastExchange"), pq)
@@ -860,7 +862,7 @@ class DriverRound13Spec extends SparkSpec {
         lit(10L).as("n_chars"))
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
     val t0 = System.nanoTime()
-    val out = Pipeline.packBinFfd(spark, dir, capacity = 64L).collect()
+    val out = TextAnalysis.packBinFfd(spark, dir, capacity = 64L).collect()
     val sec = (System.nanoTime() - t0) / 1e9
     assert(sec < 60.0, s"skewed pack took $sec s")
     assert(out.length == n)

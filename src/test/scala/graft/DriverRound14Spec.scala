@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.query.{Analytics4, Similarity}
+import graft.query.{Relational, Similarity}
+import graft.query.stats.Sampling
 
 /** Round-14 guards for the r13-advice defects: ANSI-mode element_at
   * crashes on short/partially-empty panels (Hampel short frames,
@@ -32,7 +33,7 @@ class DriverRound14Spec extends SparkSpec {
 
   test("window_hampel_filter: a user with < 4 events yields NULL " +
       "median/mad and unflagged rows — not an ANSI element_at crash") {
-    val out = Analytics4.windowHampelFilter(spark, shortSeriesDir)
+    val out = Relational.windowHampelFilter(spark, shortSeriesDir)
       .collect()
     val short = out.filter(_.getLong(0) == 2L)
     assert(short.length == 2, s"expected 2 rows for the 2-event user, got ${short.length}")
@@ -62,7 +63,7 @@ class DriverRound14Spec extends SparkSpec {
         lit(1L).as("user_id"), lit("click").as("event_type"),
         col("value"), lit("{}").as("props"))
       .coalesce(1).write.parquet(s"$dir/events.parquet")
-    val r = Analytics4.aggMedianOfMeans(spark, dir).collect()
+    val r = Relational.aggMedianOfMeans(spark, dir).collect()
     assert(r.length == 1)
     val nBuckets = r.head.getLong(1)
     assert(nBuckets <= 3, s"3 events cannot occupy $nBuckets buckets")
@@ -72,14 +73,14 @@ class DriverRound14Spec extends SparkSpec {
     assert(mom >= 10.0 && mom <= 90.0, s"median_of_means $mom outside the data range")
     // and with all 16 buckets occupied (sf corpus) the pick is unchanged
     // from the hardcoded-8/9 form: n_buckets == 16 → same two middles
-    val fullR = Analytics4.aggMedianOfMeans(spark, sf).collect().head
+    val fullR = Relational.aggMedianOfMeans(spark, sf).collect().head
     assert(fullR.getLong(1) == 16L, "sf corpus should fill all 16 buckets")
   }
 
   test("sample_kcenter_coreset: a missing seed id fails with a clear " +
       "message, not NoSuchElementException") {
     val e = intercept[IllegalArgumentException] {
-      Similarity.sampleKcenterCoreset(spark, sf, k = 2, seedId = -999L)
+      Sampling.sampleKcenterCoreset(spark, sf, k = 2, seedId = -999L)
     }
     assert(e.getMessage.contains("seed vector -999 not found"),
       s"unexpected message: ${e.getMessage}")
@@ -92,7 +93,7 @@ class DriverRound14Spec extends SparkSpec {
     graft.schema.Schemas.table(spark, sf, "embeddings")
       .orderBy(col("vec_id")).limit(3)
       .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
-    val out = Similarity.sampleKcenterCoreset(spark, dir, k = 8).collect()
+    val out = Sampling.sampleKcenterCoreset(spark, dir, k = 8).collect()
     assert(out.length == 3, s"3-vector corpus must yield 3 centers, got ${out.length}")
     assert(out.map(_.getInt(1)).toSeq == Seq(1, 2, 3), "pick_order must stay dense")
   }
@@ -125,6 +126,7 @@ class DriverRound14Spec extends SparkSpec {
       "selects a pair CONTAINING round 1's merged unit (the recount), " +
       "and the loop stops early when pairs run dry") {
     import graft.query.TextAnalysis
+    import graft.query.ml.TextMetrics
     // vocab: abab×3, abc×2, cc×1
     // r1: (a,b) 3·2+2 = 8  → abab→[ab ab], abc→[ab c]
     // r2: (ab,ab) 3        → abab→[abab]        (needs the recount!)
@@ -147,6 +149,7 @@ class DriverRound14Spec extends SparkSpec {
   test("text_bpe_train: a same-symbol run merges every-other position " +
       "(greedy left-to-right), never the overlapping under-merge") {
     import graft.query.TextAnalysis
+    import graft.query.ml.TextMetrics
     // aaaa×5: r1 (a,a)=15 → aaaa→[aa aa] (NOT [aa a a]); r2 must then
     // see (aa,aa)=5 — the single-space representation's shared-boundary
     // overlap would leave [aa a a] and pick (aa,a)/(a,a) here instead
@@ -162,6 +165,7 @@ class DriverRound14Spec extends SparkSpec {
   test("text_bpe_train: per-round work is constant — jobs grow " +
       "linearly in rounds, never multiplicatively") {
     import graft.query.TextAnalysis
+    import graft.query.ml.TextMetrics
     TextAnalysis.textBpeTrain(spark, sf, rounds = 2).collect() // warm
     val j4 = countJobs(TextAnalysis.textBpeTrain(spark, sf, rounds = 4).collect())
     val j8 = countJobs(TextAnalysis.textBpeTrain(spark, sf, rounds = 8).collect())
@@ -174,6 +178,7 @@ class DriverRound14Spec extends SparkSpec {
   test("ann_ivf_topk (Lloyd): probing every cell degenerates to exact " +
       "brute-force top-k — the training loop cannot lose vectors") {
     import graft.query.Similarity
+    import graft.query.stats.Sampling
     val brute = Similarity.bruteForceTopK(spark, sf, 0L, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val full = Similarity.ivfLloydTopK(spark, sf, 0L, 10,
@@ -186,6 +191,7 @@ class DriverRound14Spec extends SparkSpec {
   test("ann_ivf_topk (Lloyd): jobs grow linearly in iterations — the " +
       "per-iteration panel is constant-size") {
     import graft.query.Similarity
+    import graft.query.stats.Sampling
     Similarity.ivfLloydTopK(spark, sf, iters = 1).collect() // warm
     val j1 = countJobs(Similarity.ivfLloydTopK(spark, sf, iters = 1).collect())
     val j3 = countJobs(Similarity.ivfLloydTopK(spark, sf, iters = 3).collect())
@@ -288,6 +294,7 @@ class DriverRound14Spec extends SparkSpec {
   test("text_bpe_vocab: hand-folded unit census — fully merged words " +
       "survive as single merged units with occurrence-weighted counts") {
     import graft.query.TextAnalysis
+    import graft.query.ml.TextMetrics
     // same corpus as the train hand-fold: after its 4 merges the final
     // states are abab→[abab]×3, abc→[abc]×2, cc→[cc]×1
     val dir = docsDir(Seq("abab abc", "abab abc cc", "abab"))
@@ -450,6 +457,7 @@ class DriverRound14Spec extends SparkSpec {
       "and zero-gram degradation match the hand fold") {
     import spark.implicits._
     import graft.query.TextAnalysis
+    import graft.query.ml.TextMetrics
     val dir = java.nio.file.Files.createTempDirectory("r14-bleu").toString
     Seq(
       (0L, "the cat sat on the mat"), // pair 0: classic near-match
@@ -461,7 +469,7 @@ class DriverRound14Spec extends SparkSpec {
       .toDF("doc_id", "text")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
 
-    val rouge = TextAnalysis.evalRougeN(spark, dir).collect()
+    val rouge = TextMetrics.evalRougeN(spark, dir).collect()
       .map(r => ((r.getLong(0), r.getInt(1)),
         (r.getLong(2), r.getLong(3), r.getLong(4),
           r.getFloat(5), r.getFloat(6), r.getFloat(7)))).toMap
@@ -482,7 +490,7 @@ class DriverRound14Spec extends SparkSpec {
     assert(pp2 == 0.25f && rr2 == 0.5f &&
       f2 == (2.0 * 0.25 * 0.5 / 0.75).toFloat)
 
-    val bleu = TextAnalysis.evalBleu(spark, dir).collect()
+    val bleu = TextMetrics.evalBleu(spark, dir).collect()
       .map(r => (r.getLong(0),
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
           r.getLong(5), r.getFloat(6), r.getFloat(7)))).toMap
@@ -503,7 +511,9 @@ class DriverRound14Spec extends SparkSpec {
   test("eval_mcnemar: a single event type makes the two classifiers " +
       "identical — zero discordance, chi2 exactly 0; cells partition n") {
     import spark.implicits._
-    import graft.query.Analytics5
+    import graft.query.ml.{Agreement, Preference, Ranking, Scoring,
+      Significance}
+    import graft.query.stats.{Privacy, Sampling}
     val dir = java.nio.file.Files.createTempDirectory("r14-mcnemar").toString
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
     (0 until 20).map(i => (i.toLong, i))
@@ -513,7 +523,7 @@ class DriverRound14Spec extends SparkSpec {
         lit(1L).as("user_id"), lit("click").as("event_type"),
         (col("i") * 7.0 + 1.25).as("value"), lit("{}").as("props"))
       .coalesce(1).write.parquet(s"$dir/events.parquet")
-    val r = Analytics5.evalMcnemar(spark, dir).collect().head
+    val r = Significance.evalMcnemar(spark, dir).collect().head
     val (n, both, aOnly, bOnly, neither) =
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
     assert(n == 20L)
@@ -523,7 +533,7 @@ class DriverRound14Spec extends SparkSpec {
     assert(r.getFloat(5) == 0.0f, s"no discordance ⇒ chi2 = 0: $r")
     // against the real corpus: cells partition n and chi2 replays from
     // the emitted integer cells
-    val s = Analytics5.evalMcnemar(spark, sf).collect().head
+    val s = Significance.evalMcnemar(spark, sf).collect().head
     assert(s.getLong(1) + s.getLong(2) + s.getLong(3) + s.getLong(4)
       == s.getLong(0))
     val (b, c) = (s.getLong(2).toDouble, s.getLong(3).toDouble)
@@ -537,6 +547,7 @@ class DriverRound14Spec extends SparkSpec {
       "match the hand fold; an order with no candidate grams scores 0") {
     import spark.implicits._
     import graft.query.TextAnalysis
+    import graft.query.ml.TextMetrics
     val dir = java.nio.file.Files.createTempDirectory("r14-chrf").toString
     Seq(
       (0L, "ab cd"), // pair 0: s = "abcd" vs "abce"
@@ -545,7 +556,7 @@ class DriverRound14Spec extends SparkSpec {
       (3L, "xy"))
       .toDF("doc_id", "text")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
-    val out = TextAnalysis.evalChrf(spark, dir).collect()
+    val out = TextMetrics.evalChrf(spark, dir).collect()
       .map(r => (r.getLong(0), r)).toMap
     // pair 0: clips 3/2/1 of cand 4/3/2 and ref 4/3/2 (symmetric)
     val r0 = out(0L)
@@ -568,7 +579,8 @@ class DriverRound14Spec extends SparkSpec {
   test("corpus_epoch_repeat: integer factors are exact copy counts; " +
       "fractional factors add the extra copy by the doc's own PRF") {
     import spark.implicits._
-    import graft.query.Curation2
+    import graft.query.TextAnalysis
+    import graft.query.ml.Preference
     // 8 docs of source big, 2 of source small → f = 1 and exactly 2
     val dir = java.nio.file.Files.createTempDirectory("r14-epoch").toString
     ((0 until 8).map(i => (i.toLong, "big")) ++
@@ -576,7 +588,7 @@ class DriverRound14Spec extends SparkSpec {
       .toDF("doc_id", "source")
       .withColumn("text", lit("t")).withColumn("lang", lit("en"))
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
-    val copies = Curation2.corpusEpochRepeat(spark, dir).collect()
+    val copies = TextAnalysis.corpusEpochRepeat(spark, dir).collect()
       .groupBy(_.getLong(0)).view.mapValues(_.length).toMap
     (0 until 8).foreach(i => assert(copies(i.toLong) == 1,
       s"f=1 source must emit exactly one copy of doc $i"))
@@ -590,7 +602,7 @@ class DriverRound14Spec extends SparkSpec {
       .toDF("doc_id", "source")
       .withColumn("text", lit("t")).withColumn("lang", lit("en"))
       .coalesce(1).write.parquet(s"$dir2/documents.parquet")
-    val c2 = Curation2.corpusEpochRepeat(spark, dir2).collect()
+    val c2 = TextAnalysis.corpusEpochRepeat(spark, dir2).collect()
       .groupBy(_.getLong(0)).view.mapValues(_.length).toMap
     val f = math.min(math.sqrt(8.0 / 3.0), 4.0)
     val thresh = math.floor((f - math.floor(f)) *
@@ -610,8 +622,10 @@ class DriverRound14Spec extends SparkSpec {
 
   test("eval_fleiss_kappa: integer evidence is internally consistent " +
       "and kappa replays from the sums with the fixed parenthesization") {
-    import graft.query.Analytics5
-    val r = Analytics5.evalFleissKappa(spark, "/root/testdata/sf0.001")
+    import graft.query.ml.{Agreement, Preference, Ranking, Scoring,
+      Significance}
+    import graft.query.stats.{Privacy, Sampling}
+    val r = Agreement.evalFleissKappa(spark, "/root/testdata/sf0.001")
       .collect().head
     val n = r.getLong(0)
     val (s0, s1, s2, ss) =
@@ -633,7 +647,8 @@ class DriverRound14Spec extends SparkSpec {
   test("corpus_ccnet_buckets: per-lang terciles follow the exact " +
       "familiarity rank; common-token docs land in the head") {
     import spark.implicits._
-    import graft.query.Curation2
+    import graft.query.TextAnalysis
+    import graft.query.ml.Preference
     val dir = java.nio.file.Files.createTempDirectory("r14-ccnet").toString
     // 6 en docs: three all-common ("a a a"), three with rare tokens
     val docs = Seq(
@@ -642,7 +657,7 @@ class DriverRound14Spec extends SparkSpec {
       (5L, "rare6 rare7 rare8", "en"))
     docs.toDF("doc_id", "text", "lang").withColumn("source", lit("s"))
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
-    val out = Curation2.corpusCcnetBuckets(spark, dir).collect()
+    val out = TextAnalysis.corpusCcnetBuckets(spark, dir).collect()
       .map(r => r.getLong(0) -> r).toMap
     // corpus counts: a=7, b=2, c=1, rare*=1 → familiarity per doc:
     // doc0 21/3=7, doc1 16/3, doc2 10/3, doc3 9/3=3, doc4/5 1.0
@@ -658,6 +673,7 @@ class DriverRound14Spec extends SparkSpec {
       "starts replay from the per-(doc,span) PRF, short docs emit nothing") {
     import spark.implicits._
     import graft.query.TextAnalysis
+    import graft.query.ml.TextMetrics
     val dir = java.nio.file.Files.createTempDirectory("r14-mask").toString
     Seq(
       (0L, (1 to 40).map(i => s"w$i").mkString(" ")), // t=40 → 2 spans
@@ -689,14 +705,16 @@ class DriverRound14Spec extends SparkSpec {
       "Kendall P/Q match the hand fold on a corpus with x, y and " +
       "joint ties") {
     import spark.implicits._
-    import graft.query.Analytics5
+    import graft.query.ml.{Agreement, Preference, Ranking, Scoring,
+      Significance}
+    import graft.query.stats.{Privacy, Sampling}
     val dir = java.nio.file.Files.createTempDirectory("r14-rank").toString
     // (x = tokens, y = distinct): (2,1) (2,2) (3,3) (4,2) (5,5)
     Seq((0L, "a a"), (1L, "a b"), (2L, "a b c"), (3L, "a a b b"),
       (4L, "a b c d e"))
       .toDF("doc_id", "text").withColumn("lang", lit("en"))
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
-    val r = Analytics5.evalRankCorr(spark, dir).collect().head
+    val r = Ranking.evalRankCorr(spark, dir).collect().head
     assert(r.getString(0) == "en" && r.getLong(1) == 5L)
     // doubled ranks: r2x = [3,3,6,8,10], r2y = [2,5,8,5,10]
     // num = 5*209 - 30*30 = 145; d1 = d2 = 5*218 - 900 = 190
@@ -714,7 +732,9 @@ class DriverRound14Spec extends SparkSpec {
       "even event; same-type and unpaired matches skipped) and the " +
       "8-round MM ratings replay in plain doubles") {
     import spark.implicits._
-    import graft.query.Analytics5
+    import graft.query.ml.{Agreement, Preference, Ranking, Scoring,
+      Significance}
+    import graft.query.stats.{Privacy, Sampling}
     val dir = java.nio.file.Files.createTempDirectory("r14-bt").toString
     // matches: a>b, a>b, a>c, b>c, c>a, (a vs a: skipped),
     // (unpaired event 12: skipped), b=c tie -> b (even side) wins
@@ -733,7 +753,7 @@ class DriverRound14Spec extends SparkSpec {
         lit(1L).as("user_id"), col("event_type"), col("value"),
         lit("{}").as("props"))
       .coalesce(1).write.parquet(s"$dir/events.parquet")
-    val out = Analytics5.evalBradleyTerry(spark, dir).collect()
+    val out = Preference.evalBradleyTerry(spark, dir).collect()
     assert(out.length == 3, "only the 3 present models may emit rows")
     val m = out.map(r => r.getString(0) -> r).toMap
     assert((m("a").getLong(2), m("a").getLong(3)) == ((3L, 1L)))
@@ -770,8 +790,10 @@ class DriverRound14Spec extends SparkSpec {
 
   test("eval_krippendorff_alpha: missingness drops unpairable items, " +
       "evidence is consistent, alpha replays from the integer sums") {
-    import graft.query.Analytics5
-    val r = Analytics5.evalKrippendorffAlpha(spark, "/root/testdata/sf0.001")
+    import graft.query.ml.{Agreement, Preference, Ranking, Scoring,
+      Significance}
+    import graft.query.stats.{Privacy, Sampling}
+    val r = Agreement.evalKrippendorffAlpha(spark, "/root/testdata/sf0.001")
       .collect().head
     val (nItems, n) = (r.getLong(0), r.getLong(1))
     val (c0, c1, c2, do2, de) = (r.getLong(2), r.getLong(3), r.getLong(4),
@@ -791,7 +813,8 @@ class DriverRound14Spec extends SparkSpec {
   test("pref_pair_margin: chosen/rejected picks and tiebreaks are " +
       "deterministic; ties yield distinct docs; singletons drop") {
     import spark.implicits._
-    import graft.query.Curation2
+    import graft.query.TextAnalysis
+    import graft.query.ml.Preference
     val dir = java.nio.file.Files.createTempDirectory("r14-pref").toString
     Seq((0L, 5L), (1L, 9L), (2L, 9L), (3L, 1L), // group 0
       (4L, 7L), (5L, 7L),                       // group 1: all tied
@@ -799,7 +822,7 @@ class DriverRound14Spec extends SparkSpec {
       .toDF("doc_id", "n_chars")
       .withColumn("text", lit("t")).withColumn("lang", lit("en"))
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
-    val out = Curation2.prefPairMargin(spark, dir).collect()
+    val out = Preference.prefPairMargin(spark, dir).collect()
     assert(out.length == 2, "the singleton group must drop")
     val g0 = out.find(_.getLong(0) == 0L).get
     // chosen: score 9 tie -> smaller doc_id 1; rejected: score 1 -> doc 3
@@ -814,14 +837,15 @@ class DriverRound14Spec extends SparkSpec {
   test("eval_auc_delong: tie-aware doubled placements, U2 symmetry, " +
       "and the DeLong variance replay on a hand-computed fixture") {
     import spark.implicits._
-    import graft.query.Analytics3
+    import graft.query.Graph
+    import graft.query.ml.{Calibration, Scoring}
     val dir = java.nio.file.Files.createTempDirectory("r14-delong").toString
     // scores: pos {0.6, 0.8}, neg {0.4, 0.6} — one pos/neg tie at 0.6
     Seq((0L, Array(0.05f, 0f), 1), (1L, Array(0.15f, 0f), 1),
       (2L, Array(-0.05f, 0f), 0), (3L, Array(0.05f, 0f), 2))
       .toDF("vec_id", "embedding", "label")
       .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
-    val r = Analytics3.evalAucDelong(spark, dir).collect().head
+    val r = Scoring.evalAucDelong(spark, dir).collect().head
     assert((r.getLong(0), r.getLong(1)) == ((2L, 2L)))
     // d = {3, 4} (tie counts once), e = {4, 3}; U2 = 7 both ways
     assert(r.getLong(2) == 7L)
@@ -837,8 +861,10 @@ class DriverRound14Spec extends SparkSpec {
 
   test("eval_paired_bootstrap: 50 replicas, Poisson(1) weights replay " +
       "from the shared thresholds, accuracies replay from the sums") {
-    import graft.query.Analytics5
-    val out = Analytics5.evalPairedBootstrap(spark, "/root/testdata/sf0.001")
+    import graft.query.ml.{Agreement, Preference, Ranking, Scoring,
+      Significance}
+    import graft.query.stats.{Privacy, Sampling}
+    val out = Significance.evalPairedBootstrap(spark, "/root/testdata/sf0.001")
       .collect()
     assert(out.length == 50)
     out.foreach { r =>
@@ -853,7 +879,7 @@ class DriverRound14Spec extends SparkSpec {
     // deltas must actually vary across replicas (resampling is real)
     assert(out.map(_.getFloat(6)).distinct.length > 10)
     // the thresholds are the Poisson(1) CDF: F(0) ~ e^-1
-    assert(Analytics5.poissonThresh60(0) ==
+    assert(Significance.poissonThresh60(0) ==
       math.floor(math.exp(-1.0) * 1152921504606846976.0).toLong)
   }
 
@@ -890,7 +916,8 @@ class DriverRound14Spec extends SparkSpec {
       "under the min-id label; new nodes form components; untouched " +
       "components are NOT emitted") {
     import spark.implicits._
-    import graft.query.Analytics3
+    import graft.query.Graph
+    import graft.query.ml.{Calibration, Scoring}
     val dir = java.nio.file.Files.createTempDirectory("r14-ccinc").toString
     // base: {1,2} (ok 1), {3,4} (ok 2), {5,6} (ok 11);
     // delta: ok 10 bridges 2-3; ok 20 introduces new nodes {7,8}
@@ -898,7 +925,7 @@ class DriverRound14Spec extends SparkSpec {
       (10L, 2L), (10L, 3L), (20L, 7L), (20L, 8L))
       .toDF("l_orderkey", "l_partkey")
       .coalesce(1).write.parquet(s"$dir/lineitem.parquet")
-    val out = Analytics3.graphCcIncremental(spark, dir).collect()
+    val out = Graph.graphCcIncremental(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(out.toSet == Set((1L, 4L, 4L), (7L, 2L, 8L)),
       s"got ${out.mkString(",")}")
@@ -907,7 +934,9 @@ class DriverRound14Spec extends SparkSpec {
   test("eval_win_rate_matrix: per-pair wins at the crafted outcomes and " +
       "Wilson bounds replay with the fixed parenthesization") {
     import spark.implicits._
-    import graft.query.Analytics5
+    import graft.query.ml.{Agreement, Preference, Ranking, Scoring,
+      Significance}
+    import graft.query.stats.{Privacy, Sampling}
     val dir = java.nio.file.Files.createTempDirectory("r14-wrm").toString
     val rows = Seq(
       (0L, "a", 2.0), (1L, "b", 1.0),   // a > b
@@ -922,7 +951,7 @@ class DriverRound14Spec extends SparkSpec {
         lit(1L).as("user_id"), col("event_type"), col("value"),
         lit("{}").as("props"))
       .coalesce(1).write.parquet(s"$dir/events.parquet")
-    val out = Analytics5.evalWinRateMatrix(spark, dir).collect()
+    val out = Preference.evalWinRateMatrix(spark, dir).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r).toMap
     assert(out.size == 3)
     assert((out(("a", "b")).getLong(2), out(("a", "b")).getLong(3)) ==
@@ -947,8 +976,10 @@ class DriverRound14Spec extends SparkSpec {
 
   test("privacy_rand_response: the debiased estimate replays from the " +
       "integer cells and tracks the hidden true rate") {
-    import graft.query.Analytics5
-    val out = Analytics5.privacyRandResponse(spark, "/root/testdata/sf0.001")
+    import graft.query.ml.{Agreement, Preference, Ranking, Scoring,
+      Significance}
+    import graft.query.stats.{Privacy, Sampling}
+    val out = Privacy.privacyRandResponse(spark, "/root/testdata/sf0.001")
       .collect()
     assert(out.nonEmpty)
     out.foreach { r =>
@@ -968,6 +999,7 @@ class DriverRound14Spec extends SparkSpec {
       "crafted vectors; identical vector is rank 1 at distance 0") {
     import spark.implicits._
     import graft.query.Similarity
+    import graft.query.stats.Sampling
     val dir = java.nio.file.Files.createTempDirectory("r14-hamm").toString
     // 64-dim vectors; only the first 60 dims matter for the code
     def vec(bits: Set[Int]): Array[Float] =
@@ -1000,6 +1032,7 @@ class DriverRound14Spec extends SparkSpec {
       "(1 merge round) and short words count as single units") {
     import spark.implicits._
     import graft.query.TextAnalysis
+    import graft.query.ml.TextMetrics
     val dir = java.nio.file.Files.createTempDirectory("r14-fert").toString
     // vocab: aaab (pairs aa x2, ab x1), ab (ab x1) -> tie (a,a)=(a,b)=2,
     // tiebreak picks (a,a); after 1 merge: aaab->3 units, ab->2, x->1
@@ -1050,6 +1083,7 @@ class DriverRound14Spec extends SparkSpec {
       "are counted not hidden, and the smoothed NLL replays by hand") {
     import spark.implicits._
     import graft.query.TextAnalysis
+    import graft.query.ml.TextMetrics
     val dir = java.nio.file.Files.createTempDirectory("r14-ppl").toString
     // train (even): "a a b" -> vocab {a: 2, b: 1}, total 3, V 2
     // test (odd): "a z" -> a: ln(3/5), z (OOV): ln(1/5)
@@ -1069,7 +1103,7 @@ class DriverRound14Spec extends SparkSpec {
   test("mv_topk_delta: the pruned state+delta refresh equals the full " +
       "recompute, including a delta row displacing a base-view row") {
     import spark.implicits._
-    import graft.query.Warehouse2
+    import graft.query.Warehouse
     val dir = java.nio.file.Files.createTempDirectory("r14-mvtopk").toString
     // base (id % 10 != 0): values 5, 4, 3, 2; delta id 10 value 4.5
     // -> true top-3 is 5, 4.5(delta), 4: the delta DISPLACES value-3
@@ -1081,7 +1115,7 @@ class DriverRound14Spec extends SparkSpec {
         lit(1L).as("user_id"), lit("click").as("event_type"),
         col("value"), lit("{}").as("props"))
       .coalesce(1).write.parquet(s"$dir/events.parquet")
-    val out = Warehouse2.mvTopkDelta(spark, dir).collect()
+    val out = Warehouse.mvTopkDelta(spark, dir).collect()
       .map(r => (r.getInt(1), r.getLong(2), r.getLong(3), r.getBoolean(4)))
     assert(out.toSeq == Seq((1, 1L, 5000L, false),
       (2, 10L, 4500L, true), (3, 2L, 4000L, false)),
@@ -1091,13 +1125,14 @@ class DriverRound14Spec extends SparkSpec {
   test("corpus_source_overlap: pairwise vocab Jaccard from the bitmask " +
       "histogram matches the hand-counted sets") {
     import spark.implicits._
-    import graft.query.Curation2
+    import graft.query.TextAnalysis
+    import graft.query.ml.Preference
     val dir = java.nio.file.Files.createTempDirectory("r14-ovl").toString
     // vocabs: s1 {a,b,c}, s2 {b,c,d}, s3 {x}
     Seq((0L, "a b c", "s1"), (1L, "b c d", "s2"), (2L, "x x", "s3"))
       .toDF("doc_id", "text", "source").withColumn("lang", lit("en"))
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
-    val out = Curation2.corpusSourceOverlap(spark, dir).collect()
+    val out = TextAnalysis.corpusSourceOverlap(spark, dir).collect()
       .map(r => (r.getString(0), r.getString(1)) ->
         (r.getLong(2), r.getLong(3), r.getLong(4), r.getFloat(5))).toMap
     assert(out.size == 3)
@@ -1109,7 +1144,7 @@ class DriverRound14Spec extends SparkSpec {
   test("emb_label_cohesion: the sum-vector identity reproduces the " +
       "hand-computed mean pairwise dot; singleton labels drop") {
     import spark.implicits._
-    import graft.query.Analytics4
+    import graft.query.{Relational, Similarity}
     val dir = java.nio.file.Files.createTempDirectory("r14-coh").toString
     def unit(d: Int): Array[Float] =
       Array.tabulate(64)(i => if (i == d) 1.0f else 0.0f)
@@ -1117,7 +1152,7 @@ class DriverRound14Spec extends SparkSpec {
       (3L, unit(5), 2)) // label 2 is a singleton -> dropped
       .toDF("vec_id", "embedding", "label")
       .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
-    val out = Analytics4.embLabelCohesion(spark, dir).collect()
+    val out = Similarity.embLabelCohesion(spark, dir).collect()
     assert(out.length == 1 && out.head.getInt(0) == 1)
     val r = out.head
     // S = [2000, 1000, 0...]: outer 5e6, sum_sq 3e6, pairs 6 -> 1/3
@@ -1126,7 +1161,7 @@ class DriverRound14Spec extends SparkSpec {
     assert(r.getFloat(4) == (2000000.0 / 6.0 / 1000000.0).toFloat)
     // separation on the same fixture: S1 = [2000,1000,0...],
     // S2 = e5*1000 -> cross_dot 0; mean cross dot 0
-    val sep = Analytics4.embLabelSeparation(spark, dir).collect()
+    val sep = Similarity.embLabelSeparation(spark, dir).collect()
     assert(sep.length == 1)
     val s = sep.head
     assert((s.getInt(0), s.getInt(1), s.getLong(2), s.getLong(3),
@@ -1136,8 +1171,10 @@ class DriverRound14Spec extends SparkSpec {
 
   test("sample_pps_systematic: multiplicities sum to n, track weight, " +
       "and replay from the integer anchor arithmetic") {
-    import graft.query.Analytics5
-    val out = Analytics5.samplePpsSystematic(spark, "/root/testdata/sf0.001")
+    import graft.query.ml.{Agreement, Preference, Ranking, Scoring,
+      Significance}
+    import graft.query.stats.{Privacy, Sampling}
+    val out = Sampling.samplePpsSystematic(spark, "/root/testdata/sf0.001")
       .collect()
     assert(out.nonEmpty)
     assert(out.map(_.getLong(4)).sum == 20L,
@@ -1169,9 +1206,10 @@ class DriverRound14Spec extends SparkSpec {
 
   test("eval_ece: the pivoted left-assoc rollup replays from the bins " +
       "and max_gap dominates every per-bin term's gap") {
-    import graft.query.Analytics3
+    import graft.query.Graph
+    import graft.query.ml.{Calibration, Scoring}
     val dir = "/root/testdata/sf0.001"
-    val bins = Analytics3.evalCalibrationBins(spark, dir).collect()
+    val bins = Calibration.evalCalibrationBins(spark, dir).collect()
     val nTot = bins.map(_.getLong(1)).sum
     val terms = (0 to 9).map { i =>
       bins.find(_.getInt(0) == i).map { b =>
@@ -1184,7 +1222,7 @@ class DriverRound14Spec extends SparkSpec {
       val n = b.getLong(1).toDouble
       math.abs(b.getLong(3).toDouble / n - b.getDouble(2) / n)
     }
-    val r = Analytics3.evalEce(spark, dir).collect().head
+    val r = Calibration.evalEce(spark, dir).collect().head
     assert(r.getLong(0) == nTot && r.getLong(1) == bins.length)
     assert(r.getFloat(2) == terms.reduce(_ + _).toFloat,
       s"ece ${r.getFloat(2)} != replayed ${terms.reduce(_ + _)}")
@@ -1193,8 +1231,10 @@ class DriverRound14Spec extends SparkSpec {
 
   test("eval_mcc: cells conserve n and mcc/balanced-acc/J replay from " +
       "the integer cells with the fixed parenthesization") {
-    import graft.query.Analytics5
-    val r = Analytics5.evalMcc(spark, "/root/testdata/sf0.001")
+    import graft.query.ml.{Agreement, Preference, Ranking, Scoring,
+      Significance}
+    import graft.query.stats.{Privacy, Sampling}
+    val r = Scoring.evalMcc(spark, "/root/testdata/sf0.001")
       .collect().head
     val (tp, fp, fn, tn) = (r.getLong(0), r.getLong(1), r.getLong(2),
       r.getLong(3))
@@ -1214,6 +1254,7 @@ class DriverRound14Spec extends SparkSpec {
       "by its training language; too-short docs predict 'und'") {
     import spark.implicits._
     import graft.query.TextAnalysis
+    import graft.query.ml.TextMetrics
     val dir = java.nio.file.Files.createTempDirectory("r14-lid").toString
     // even docs train: lang A is all-'abc' trigrams, lang B all-'xyz';
     // odd docs are held out and must classify by their trigrams
@@ -1236,8 +1277,10 @@ class DriverRound14Spec extends SparkSpec {
 
   test("privacy_dp_topk: Gumbel-perturbed utilities replay from the md5 " +
       "draw and the released ranking is their exact descending order") {
-    import graft.query.Analytics5
-    val out = Analytics5.privacyDpTopk(spark, "/root/testdata/sf0.001")
+    import graft.query.ml.{Agreement, Preference, Ranking, Scoring,
+      Significance}
+    import graft.query.stats.{Privacy, Sampling}
+    val out = Privacy.privacyDpTopk(spark, "/root/testdata/sf0.001")
       .collect()
     assert(out.length == 3)
     def h60(s: String): Long = {
@@ -1262,6 +1305,7 @@ class DriverRound14Spec extends SparkSpec {
       "replay from hand-counted grams; deterministic text scores 0") {
     import spark.implicits._
     import graft.query.TextAnalysis
+    import graft.query.ml.TextMetrics
     val dir = java.nio.file.Files.createTempDirectory("r14-ent").toString
     Seq((0L, "a b a b"), (1L, "a a")).toDF("doc_id", "text")
       .withColumn("lang", lit("en"))
@@ -1291,8 +1335,10 @@ class DriverRound14Spec extends SparkSpec {
 
   test("eval_krippendorff_ordinal: the squared-distance alpha replays " +
       "from the integer sums and beats nominal on near-miss data") {
-    import graft.query.Analytics5
-    val r = Analytics5.evalKrippendorffOrdinal(spark, "/root/testdata/sf0.001")
+    import graft.query.ml.{Agreement, Preference, Ranking, Scoring,
+      Significance}
+    import graft.query.stats.{Privacy, Sampling}
+    val r = Agreement.evalKrippendorffOrdinal(spark, "/root/testdata/sf0.001")
       .collect().head
     val (n, c0, c1, c2, do2, de) = (r.getLong(1), r.getLong(2),
       r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6))
@@ -1306,13 +1352,14 @@ class DriverRound14Spec extends SparkSpec {
   test("corpus_mix_entropy: balanced sources give effective count = " +
       "source count; a single source gives exactly 1") {
     import spark.implicits._
-    import graft.query.Curation2
+    import graft.query.TextAnalysis
+    import graft.query.ml.Preference
     val dir = java.nio.file.Files.createTempDirectory("r14-mixent").toString
     Seq((0L, "en", "a"), (1L, "en", "a"), (2L, "en", "b"),
       (3L, "en", "b"), (4L, "fr", "c"))
       .toDF("doc_id", "lang", "source").withColumn("text", lit("t"))
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
-    val out = Curation2.corpusMixEntropy(spark, dir).collect()
+    val out = TextAnalysis.corpusMixEntropy(spark, dir).collect()
       .map(r => r.getString(0) -> r).toMap
     val en = out("en")
     assert((en.getLong(1), en.getLong(2)) == ((4L, 2L)))
@@ -1325,7 +1372,9 @@ class DriverRound14Spec extends SparkSpec {
   test("eval_topk_agreement: prefix overlaps replay from hand-built " +
       "rankings; identical rankers agree 1.0 at every depth") {
     import spark.implicits._
-    import graft.query.Analytics5
+    import graft.query.ml.{Agreement, Preference, Ranking, Scoring,
+      Significance}
+    import graft.query.stats.{Privacy, Sampling}
     val dir = java.nio.file.Files.createTempDirectory("r14-rbo").toString
     // ranker A by n_chars, B by distinct tokens: doc0 tops A but is
     // LAST under B; docs 1..10 identical order under both
@@ -1335,7 +1384,7 @@ class DriverRound14Spec extends SparkSpec {
     } :+ ((0L, "x x x x", 5000)) // huge chars, 1 distinct token
     rows.toDF("doc_id", "text", "n_chars").withColumn("lang", lit("en"))
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
-    val out = Analytics5.evalTopkAgreement(spark, dir).collect()
+    val out = Ranking.evalTopkAgreement(spark, dir).collect()
     assert(out.length == 10)
     // ranks: A = doc0, 1, 2, ..; B = 1, 2, .., doc0 last
     // m(doc0) = 11 > 10; m(doc i) = i + 1 (A rank shifted by doc0)
@@ -1344,18 +1393,19 @@ class DriverRound14Spec extends SparkSpec {
       val d = r.getInt(0)
       assert(r.getLong(1) == d - 1, s"depth $d: ${r.getLong(1)}")
       assert(r.getFloat(2) == ((d - 1).toDouble / d).toFloat)
-      assert(r.getFloat(3) == Analytics5.rboWeights(d - 1).toFloat)
-      assert(r.getFloat(4) == (Analytics5.rboWeights(d - 1)
+      assert(r.getFloat(3) == Ranking.rboWeights(d - 1).toFloat)
+      assert(r.getFloat(4) == (Ranking.rboWeights(d - 1)
         * ((d - 1).toDouble / d)).toFloat)
     }
     // weights are a normalized distribution over the k depths
-    assert(math.abs(Analytics5.rboWeights.sum - 1.0) < 1e-12)
+    assert(math.abs(Ranking.rboWeights.sum - 1.0) < 1e-12)
   }
 
   test("corpus_length_percentiles: percentile_disc picks land on the " +
       "hand-ranked values, including the n=1 edge") {
     import spark.implicits._
-    import graft.query.Curation2
+    import graft.query.TextAnalysis
+    import graft.query.ml.Preference
     val dir = java.nio.file.Files.createTempDirectory("r14-pct").toString
     // en lengths 1..10 -> p50 = value at rank 5, p90 at 9, p99 at 10
     val rows = (1 to 10).map(i =>
@@ -1363,7 +1413,7 @@ class DriverRound14Spec extends SparkSpec {
       ((100L, "only doc", "fr"))
     rows.toDF("doc_id", "text", "lang")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
-    val out = Curation2.corpusLengthPercentiles(spark, dir).collect()
+    val out = TextAnalysis.corpusLengthPercentiles(spark, dir).collect()
       .map(r => r.getString(0) -> r).toMap
     val en = out("en")
     assert((en.getLong(1), en.getLong(2), en.getLong(3), en.getLong(4),

@@ -99,7 +99,7 @@ class DriverRound15Spec extends SparkSpec {
       "exact per-bin sums)") {
     val s = graft.streaming.StreamQueries.streamEvalEce(spark, sf)
       .collect().map(_.toSeq).toSeq
-    val b = graft.query.Analytics3.evalEce(spark, sf)
+    val b = graft.query.ml.Calibration.evalEce(spark, sf)
       .collect().map(_.toSeq).toSeq
     assert(s.nonEmpty && s == b, s"stream $s vs batch $b")
   }
@@ -108,14 +108,14 @@ class DriverRound15Spec extends SparkSpec {
       "for row (panel-derived totals equal the batch head's)") {
     val s = graft.streaming.StreamQueries.streamDriftPsi(spark, sf)
       .collect().map(_.toSeq).toSeq
-    val b = graft.query.Analytics.driftPsiValue(spark, sf)
+    val b = graft.query.stats.Drift.driftPsiValue(spark, sf)
       .collect().map(_.toSeq).toSeq
     assert(s.nonEmpty && s == b, s"stream $s vs batch $b")
   }
 
   test("eval_icc: real item structure detected (msr > mse), rater bias " +
       "detected (msc > mse), and ICC(2,1) < ICC(2,k) both in (0,1)") {
-    val r = graft.query.Analytics5.evalIcc(spark, sf).head()
+    val r = graft.query.ml.Agreement.evalIcc(spark, sf).head()
     val (msr, msc, mse) = (r.getFloat(2), r.getFloat(3), r.getFloat(4))
     val (icc1, icck) = (r.getFloat(5), r.getFloat(6))
     assert(msr > mse, s"msr $msr must exceed mse $mse (latent item effect)")
@@ -127,7 +127,7 @@ class DriverRound15Spec extends SparkSpec {
 
   test("ts_theil_sen equals an independently re-derived median of all " +
       "pairwise hourly slopes") {
-    val got = graft.query.Analytics5.tsTheilSen(spark, sf).head()
+    val got = graft.query.stats.TimeSeries.tsTheilSen(spark, sf).head()
     val hourly = graft.schema.Schemas.events(spark, sf)
       .groupBy(expr("unix_micros(ts) DIV 3600000000").as("h"))
       .agg(sum(round(col("value") * lit(1e6)).cast("long")).as("v6"))
@@ -171,7 +171,7 @@ class DriverRound15Spec extends SparkSpec {
       "for row (shared chi-square epilogue)") {
     val s = graft.streaming.StreamQueries.streamDqBenford(spark, sf)
       .collect().map(_.toSeq).toSeq
-    val b = graft.query.Analytics5.dqBenfordLaw(spark, sf)
+    val b = graft.query.stats.Quality.dqBenfordLaw(spark, sf)
       .collect().map(_.toSeq).toSeq
     assert(s.nonEmpty && s == b, s"stream $s vs batch $b")
   }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.query.Dedup
+import graft.query.{Dedup, TokenHash}
 import graft.schema.Schemas.table
 
 /** Driver-round-16 pins: the shared substring-window census (r15
@@ -29,13 +29,13 @@ class DriverRound16Spec extends SparkSpec {
   test("dedup_exact_substring from the shared census is row-identical " +
       "to the direct one-pass formula (the r15 shape)") {
     val direct = {
-      val docs = Dedup.withPlantedNearDups(table(spark, sf, "documents"))
-        .select(col("doc_id"), Dedup.tokens(col("text")).as("toks"))
+      val docs = TokenHash.withPlantedNearDups(table(spark, sf, "documents"))
+        .select(col("doc_id"), TokenHash.tokens(col("text")).as("toks"))
         .filter(size(col("toks")) >= 8)
       docs
         .select(col("doc_id"),
-          explode(Dedup.shinglesFromTokens(col("toks"), 8)).as("win"))
-        .select(col("doc_id"), Dedup.hash60(col("win")).as("h"))
+          explode(TokenHash.shinglesFromTokens(col("toks"), 8)).as("win"))
+        .select(col("doc_id"), TokenHash.hash60(col("win")).as("h"))
         .groupBy(col("h"))
         .agg(countDistinct(col("doc_id")).as("n_docs"),
           count(lit(1)).as("n_occ"),
@@ -54,15 +54,15 @@ class DriverRound16Spec extends SparkSpec {
       "to the direct posexplode formula (the r15 shape)") {
     import org.apache.spark.sql.expressions.Window
     val direct = {
-      val docs = Dedup.withPlantedNearDups(table(spark, sf, "documents"))
-        .select(col("doc_id"), Dedup.tokens(col("text")).as("toks"))
+      val docs = TokenHash.withPlantedNearDups(table(spark, sf, "documents"))
+        .select(col("doc_id"), TokenHash.tokens(col("text")).as("toks"))
         .filter(size(col("toks")) >= 8)
       val wins = docs
         .select(col("doc_id"),
-          posexplode(Dedup.shinglesFromTokens(col("toks"), 8))
+          posexplode(TokenHash.shinglesFromTokens(col("toks"), 8))
             .as(Seq("p", "win")))
         .select(col("doc_id"), (col("p") + 1).cast("long").as("i"),
-          Dedup.hash60(col("win")).as("h"))
+          TokenHash.hash60(col("win")).as("h"))
       val repeated = wins.groupBy(col("h"))
         .agg(countDistinct(col("doc_id")).as("n_docs"))
         .filter(col("n_docs") >= 2)
@@ -104,7 +104,7 @@ class DriverRound16Spec extends SparkSpec {
       .select(col("n_points"), col("n_pairs"),
         col("slope").cast("float").as("theil_sen_slope"))
       .collect()
-    val got = graft.query.Analytics5.tsTheilSen(spark, sf).collect()
+    val got = graft.query.stats.TimeSeries.tsTheilSen(spark, sf).collect()
     assert(got.toSeq == direct.toSeq)
   }
 
@@ -124,7 +124,7 @@ class DriverRound16Spec extends SparkSpec {
       .coalesce(4).write.mode("overwrite")
       .parquet(s"$tmp/events.parquet")
     val t0 = System.nanoTime()
-    val r1 = graft.query.Analytics5.tsTheilSen(spark, tmp).collect()
+    val r1 = graft.query.stats.TimeSeries.tsTheilSen(spark, tmp).collect()
     val secs = (System.nanoTime() - t0) / 1e9
     assert(r1.length == 1)
     assert(r1(0).getLong(0) == k.toLong, s"n_points ${r1(0).getLong(0)}")
@@ -134,13 +134,13 @@ class DriverRound16Spec extends SparkSpec {
     assert(math.abs(r1(0).getFloat(2) - 0.5f) < 1e-6f)
     assert(secs < 120.0, s"sampled path took $secs s")
     // deterministic: same corpus, same sample, same bits
-    val r2 = graft.query.Analytics5.tsTheilSen(spark, tmp).collect()
+    val r2 = graft.query.stats.TimeSeries.tsTheilSen(spark, tmp).collect()
     assert(r1.toSeq == r2.toSeq)
   }
 
   test("stream_alert_debounce drain equals the batch debounce row for " +
       "row (the Kalman batch-equivalence contract on alerting)") {
-    val batch = graft.query.Analytics5.anomalyAlertDebounce(spark, sf)
+    val batch = graft.query.stats.Anomaly.anomalyAlertDebounce(spark, sf)
       .collect()
     val stream = graft.streaming.StreamQueries
       .streamAlertDebounce(spark, sf).collect()

@@ -51,7 +51,7 @@ class EdgeCaseSpec extends org.scalatest.funsuite.AnyFunSuite {
     "text_quality" -> ((s, d) => graft.query.TextAnalysis.textQuality(s, d)),
     "text_tfidf" -> ((s, d) => graft.query.TextAnalysis.textTfidf(s, d)),
     "corpus_temperature_mix" ->
-      ((s, d) => graft.query.Curation2.corpusTemperatureMix(s, d)))
+      ((s, d) => graft.query.TextAnalysis.corpusTemperatureMix(s, d)))
 
   test("empty corpus: every corpus-level operator returns a well-formed empty result") {
     graft.schema.IndexCache.clear()
@@ -73,15 +73,15 @@ class EdgeCaseSpec extends org.scalatest.funsuite.AnyFunSuite {
     // events-backed: empty-keyed aggregates give zero rows
     Seq[(String, DataFrame)](
       "eval_paired_bootstrap" ->
-        graft.query.Analytics5.evalPairedBootstrap(spark, evDir),
+        graft.query.ml.Significance.evalPairedBootstrap(spark, evDir),
       "eval_bradley_terry" ->
-        graft.query.Analytics5.evalBradleyTerry(spark, evDir),
+        graft.query.ml.Preference.evalBradleyTerry(spark, evDir),
       "eval_win_rate_matrix" ->
-        graft.query.Analytics5.evalWinRateMatrix(spark, evDir),
+        graft.query.ml.Preference.evalWinRateMatrix(spark, evDir),
       "privacy_rand_response" ->
-        graft.query.Analytics5.privacyRandResponse(spark, evDir),
+        graft.query.stats.Privacy.privacyRandResponse(spark, evDir),
       "mv_topk_delta" ->
-        graft.query.Warehouse2.mvTopkDelta(spark, evDir))
+        graft.query.Warehouse.mvTopkDelta(spark, evDir))
       .foreach { case (name, df) =>
         val out = try df.collect()
           catch { case e: Throwable =>
@@ -92,9 +92,9 @@ class EdgeCaseSpec extends org.scalatest.funsuite.AnyFunSuite {
     // statistics (the oracle-consistent shape), never 0/0
     Seq[(String, DataFrame)](
       "eval_fleiss_kappa" ->
-        graft.query.Analytics5.evalFleissKappa(spark, evDir),
+        graft.query.ml.Agreement.evalFleissKappa(spark, evDir),
       "eval_krippendorff_alpha" ->
-        graft.query.Analytics5.evalKrippendorffAlpha(spark, evDir))
+        graft.query.ml.Agreement.evalKrippendorffAlpha(spark, evDir))
       .foreach { case (name, df) =>
         val out = try df.collect()
           catch { case e: Throwable =>
@@ -105,28 +105,28 @@ class EdgeCaseSpec extends org.scalatest.funsuite.AnyFunSuite {
     // documents/embeddings-backed: all empty
     Seq[(String, DataFrame)](
       "corpus_ccnet_buckets" ->
-        graft.query.Curation2.corpusCcnetBuckets(spark, emptyDir),
+        graft.query.TextAnalysis.corpusCcnetBuckets(spark, emptyDir),
       "corpus_epoch_repeat" ->
-        graft.query.Curation2.corpusEpochRepeat(spark, emptyDir),
+        graft.query.TextAnalysis.corpusEpochRepeat(spark, emptyDir),
       "corpus_source_overlap" ->
-        graft.query.Curation2.corpusSourceOverlap(spark, emptyDir),
+        graft.query.TextAnalysis.corpusSourceOverlap(spark, emptyDir),
       "pref_pair_margin" ->
-        graft.query.Curation2.prefPairMargin(spark, emptyDir),
+        graft.query.ml.Preference.prefPairMargin(spark, emptyDir),
       "text_span_mask_plan" ->
         graft.query.TextAnalysis.textSpanMaskPlan(spark, emptyDir),
-      "eval_chrf" -> graft.query.TextAnalysis.evalChrf(spark, emptyDir),
+      "eval_chrf" -> graft.query.ml.TextMetrics.evalChrf(spark, emptyDir),
       "text_heldout_perplexity" ->
         graft.query.TextAnalysis.textHeldoutPerplexity(spark, emptyDir),
       "eval_rank_corr" ->
-        graft.query.Analytics5.evalRankCorr(spark, emptyDir),
+        graft.query.ml.Ranking.evalRankCorr(spark, emptyDir),
       "ann_hamming_topk" ->
         graft.query.Similarity.annHammingTopK(spark, emptyDir),
       "ann_hamming_mih" ->
         graft.query.Similarity.annHammingMih(spark, emptyDir),
       "emb_label_cohesion" ->
-        graft.query.Analytics4.embLabelCohesion(spark, emptyDir),
+        graft.query.Similarity.embLabelCohesion(spark, emptyDir),
       "emb_label_separation" ->
-        graft.query.Analytics4.embLabelSeparation(spark, emptyDir),
+        graft.query.Similarity.embLabelSeparation(spark, emptyDir),
       "dedup_cascade_report" ->
         graft.query.Dedup.dedupCascadeReport(spark, emptyDir))
       .foreach { case (name, df) =>
@@ -144,7 +144,7 @@ class EdgeCaseSpec extends org.scalatest.funsuite.AnyFunSuite {
     Seq((0L, "w w"), (1L, "w w"), (2L, "w w"))
       .toDF("doc_id", "text").withColumn("lang", lit("en"))
       .coalesce(1).write.parquet(s"$constDir/documents.parquet")
-    val rc = graft.query.Analytics5.evalRankCorr(spark, constDir).collect()
+    val rc = graft.query.ml.Ranking.evalRankCorr(spark, constDir).collect()
     assert(rc.length == 1 && rc.head.isNullAt(5) && rc.head.isNullAt(12),
       "constant signals must yield NULL correlations")
   }
@@ -186,7 +186,7 @@ class EdgeCaseSpec extends org.scalatest.funsuite.AnyFunSuite {
     val sem = graft.query.Dedup.dedupSemantic(spark, oneDir).collect()
     assert(sem.length == 1 && sem.head.getBoolean(2),
       "dedup_semantic must keep the only vector")
-    val mix = graft.query.Curation2.corpusTemperatureMix(spark, oneDir)
+    val mix = graft.query.TextAnalysis.corpusTemperatureMix(spark, oneDir)
       .collect()
     assert(mix.length == 1 && mix.head.getLong(1) == 1L
       && mix.head.getLong(2) == 1L,
@@ -206,44 +206,48 @@ class EdgeCaseSpec extends org.scalatest.funsuite.AnyFunSuite {
   }
 
   test("round-12 family: empty star schema degrades to well-formed results") {
-    import graft.query.{Analytics3, Warehouse2}
+    import graft.query.{Graph, Similarity, Warehouse}
+    import graft.query.ml.{Calibration, Preference, Scoring}
+    import graft.query.stats.{Anomaly, Drift, Privacy, Quality, TimeSeries}
     // empty edge list → zero components via the union-find path
-    assert(Analytics3.graphConnectedComponents(spark, emptyStarDir)
+    assert(Graph.graphConnectedComponents(spark, emptyStarDir)
       .collect().isEmpty)
     // and via the forced distributed path
-    assert(Analytics3.graphConnectedComponents(spark, emptyStarDir,
+    assert(Graph.graphConnectedComponents(spark, emptyStarDir,
       driverUnionFindMax = 0L).collect().isEmpty)
-    assert(Analytics3.paretoFrontier(spark, emptyStarDir).collect().isEmpty)
+    assert(Preference.paretoFrontier(spark, emptyStarDir).collect().isEmpty)
     // profile keeps its 4 rows with n_rows=0 and null extrema — the
     // ANALYZE contract for an empty table, not a crash
-    val prof = Analytics3.profileTableStats(spark, emptyStarDir).collect()
+    val prof = Quality.profileTableStats(spark, emptyStarDir).collect()
     assert(prof.length == 4 && prof.forall(r =>
       r.getLong(1) == 0L && r.isNullAt(4) && r.isNullAt(5)))
-    assert(Analytics3.evalCalibrationBins(spark, emptyStarDir)
+    assert(Calibration.evalCalibrationBins(spark, emptyStarDir)
       .collect().isEmpty)
     // missing query vector → empty top-k, not head() on nothing
-    assert(Analytics3.annL2TopK(spark, emptyStarDir).collect().isEmpty)
-    assert(Warehouse2.snapshotDiff(spark, emptyStarDir).collect().isEmpty)
-    assert(Warehouse2.layoutCompactionPlan(spark, emptyStarDir)
+    assert(Similarity.annL2TopK(spark, emptyStarDir).collect().isEmpty)
+    assert(Warehouse.snapshotDiff(spark, emptyStarDir).collect().isEmpty)
+    assert(Warehouse.layoutCompactionPlan(spark, emptyStarDir)
       .collect().isEmpty)
-    assert(Warehouse2.mvIncrementalMerge(spark, emptyStarDir)
+    assert(Warehouse.mvIncrementalMerge(spark, emptyStarDir)
       .collect().isEmpty)
-    assert(Warehouse2.sqlProductTypeProfit(spark, emptyStarDir)
+    assert(Warehouse.sqlProductTypeProfit(spark, emptyStarDir)
       .collect().isEmpty)
-    assert(Warehouse2.sqlSupplierCntByParttype(spark, emptyStarDir)
+    assert(Warehouse.sqlSupplierCntByParttype(spark, emptyStarDir)
       .collect().isEmpty)
-    assert(Warehouse2.sqlMinCostSupplier(spark, emptyStarDir)
+    assert(Warehouse.sqlMinCostSupplier(spark, emptyStarDir)
       .collect().isEmpty)
   }
 
   test("round-12 late batches: empty tables degrade to well-formed results") {
-    import graft.query.{Analytics3, TextAnalysis, Warehouse2}
-    assert(Analytics3.driftChi2Terms(spark, emptyStarDir).collect().isEmpty)
-    assert(Analytics3.tsCusumChangepoint(spark, emptyStarDir)
+    import graft.query.{Graph, Similarity, TextAnalysis, Warehouse}
+    import graft.query.ml.{Calibration, Preference, Scoring, TextMetrics}
+    import graft.query.stats.{Anomaly, Drift, Privacy, Quality, TimeSeries}
+    assert(Drift.driftChi2Terms(spark, emptyStarDir).collect().isEmpty)
+    assert(TimeSeries.tsCusumChangepoint(spark, emptyStarDir)
       .collect().isEmpty)
-    assert(Analytics3.anomalySpcRuns(spark, emptyStarDir).collect().isEmpty)
+    assert(Anomaly.anomalySpcRuns(spark, emptyStarDir).collect().isEmpty)
     // AUC over nothing: one row, zero counts, null rate — not a crash
-    val auc = Analytics3.evalAucRoc(spark, emptyStarDir).collect()
+    val auc = Scoring.evalAucRoc(spark, emptyStarDir).collect()
     assert(auc.length == 1 && auc.head.getLong(0) == 0L
       && auc.head.isNullAt(2))
     assert(TextAnalysis.corpusDiversityStats(spark, emptyStarDir)
@@ -255,12 +259,12 @@ class EdgeCaseSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(TextAnalysis.contextLengthBands(spark, emptyStarDir)
       .collect().isEmpty)
     // the DQ gate still reports every constraint, all zero-checked
-    val dq = Warehouse2.dqConstraintReport(spark, emptyStarDir).collect()
+    val dq = Quality.dqConstraintReport(spark, emptyStarDir).collect()
     assert(dq.length == 5 && dq.forall(r =>
       r.getLong(1) == 0L && r.getLong(2) == 0L))
-    assert(Warehouse2.sqlYearlyGrowth(spark, emptyStarDir)
+    assert(Warehouse.sqlYearlyGrowth(spark, emptyStarDir)
       .collect().isEmpty)
-    assert(Warehouse2.sqlBasketAffinity(spark, emptyStarDir)
+    assert(Warehouse.sqlBasketAffinity(spark, emptyStarDir)
       .collect().isEmpty)
     assert(graft.query.Multimodal.multimodalResizePlan(spark, emptyStarDir)
       .collect().isEmpty)
@@ -269,131 +273,139 @@ class EdgeCaseSpec extends org.scalatest.funsuite.AnyFunSuite {
   }
 
   test("round-13 family: empty tables degrade to well-formed results") {
-    import graft.query.{Analytics4, TextAnalysis, Warehouse2}
+    import graft.query.{Dedup, Graph, Relational, Similarity, TextAnalysis,
+      Warehouse}
+    import graft.query.ml.{Calibration, Scoring, TextMetrics}
+    import graft.query.stats.{Privacy, Quality, TimeSeries}
     // scalar evaluations keep their report row with zero counts/null stats
-    val ap = Analytics4.evalPrAuc(spark, emptyStarDir).collect()
+    val ap = Scoring.evalPrAuc(spark, emptyStarDir).collect()
     assert(ap.length == 1 && ap.head.getLong(0) == 0L && ap.head.isNullAt(1))
-    val as = Analytics4.graphAssortativity(spark, emptyStarDir).collect()
+    val as = Graph.graphAssortativity(spark, emptyStarDir).collect()
     assert(as.length == 1 && as.head.getLong(0) == 0L && as.head.isNullAt(1))
     val zs = TextAnalysis.textZipfSlope(spark, emptyStarDir).collect()
     assert(zs.length == 1 && zs.head.getLong(0) == 0L && zs.head.isNullAt(1))
     // per-dim recall keeps its dim rows with null recall (no neighbors)
-    val mr = Analytics4.embMatryoshkaRecall(spark, emptyStarDir).collect()
+    val mr = Similarity.embMatryoshkaRecall(spark, emptyStarDir).collect()
     assert(mr.length == 3 && mr.forall(_.isNullAt(1)))
     // row-emitting operators produce zero rows, not a crash
-    assert(Analytics4.graphCommonNeighbors(spark, emptyStarDir)
+    assert(Graph.graphCommonNeighbors(spark, emptyStarDir)
       .collect().isEmpty)
-    assert(Analytics4.attributionLastTouch(spark, emptyStarDir)
+    assert(Warehouse.attributionLastTouch(spark, emptyStarDir)
       .collect().isEmpty)
-    assert(Analytics4.aggLinregByGroup(spark, emptyStarDir)
+    assert(Relational.aggLinregByGroup(spark, emptyStarDir)
       .collect().isEmpty)
-    assert(Analytics4.joinAsofNearest(spark, emptyStarDir)
+    assert(Relational.joinAsofNearest(spark, emptyStarDir)
       .collect().isEmpty)
     assert(TextAnalysis.textGopherRules(spark, emptyStarDir)
       .collect().isEmpty)
     assert(TextAnalysis.textLlrCollocations(spark, emptyStarDir)
       .collect().isEmpty)
     // zone-map report keeps both layout rows with zero zones
-    val zm = Warehouse2.statsZoneMap(spark, emptyStarDir).collect()
+    val zm = Warehouse.statsZoneMap(spark, emptyStarDir).collect()
     assert(zm.length == 2 && zm.forall(_.getLong(1) == 0L))
     // batch 2: fold/rank operators emit zero rows on empty input
-    assert(Analytics4.tsHoltForecast(spark, emptyStarDir).collect().isEmpty)
-    assert(Analytics4.retrievalNdcg(spark, emptyStarDir).collect().isEmpty)
-    assert(Analytics4.embPowerIteration(spark, emptyStarDir)
+    assert(TimeSeries.tsHoltForecast(spark, emptyStarDir).collect().isEmpty)
+    assert(Similarity.retrievalNdcg(spark, emptyStarDir).collect().isEmpty)
+    assert(Similarity.embPowerIteration(spark, emptyStarDir)
       .collect().isEmpty)
     // the ablation CUBE keeps at most its grand-total row, zero-counted
     val abl = TextAnalysis.qualityAblationReport(spark, emptyStarDir)
       .collect()
     assert(abl.forall(_.getLong(4) == 0L))
     // batch 3
-    assert(Analytics4.windowRollingSlope(spark, emptyStarDir)
+    assert(Relational.windowRollingSlope(spark, emptyStarDir)
       .collect().isEmpty)
-    assert(Analytics4.evalBrierDecomp(spark, emptyStarDir)
+    assert(Calibration.evalBrierDecomp(spark, emptyStarDir)
       .collect().isEmpty)
     assert(TextAnalysis.textOovRate(spark, emptyStarDir).collect().isEmpty)
-    assert(Warehouse2.privacyKAnonymity(spark, emptyStarDir)
+    assert(Privacy.privacyKAnonymity(spark, emptyStarDir)
       .collect().isEmpty)
     // batch 4
-    assert(Analytics4.windowDrawdown(spark, emptyStarDir).collect().isEmpty)
-    assert(Analytics4.joinAsofTolerance(spark, emptyStarDir)
+    assert(Relational.windowDrawdown(spark, emptyStarDir).collect().isEmpty)
+    assert(Relational.joinAsofTolerance(spark, emptyStarDir)
       .collect().isEmpty)
-    assert(Analytics4.graphLocalClustering(spark, emptyStarDir)
+    assert(Graph.graphLocalClustering(spark, emptyStarDir)
       .collect().isEmpty)
-    val pc = Analytics4.aggParetoConcentration(spark, emptyStarDir)
+    val pc = Relational.aggParetoConcentration(spark, emptyStarDir)
       .collect()
     assert(pc.length <= 1 && pc.forall(r => r.isNullAt(0) || r.getLong(0) == 0L))
     // batch 5
-    assert(Analytics4.tsAutocorrLag1(spark, emptyStarDir).collect().isEmpty)
-    assert(Analytics4.graphCopurchaseWeights(spark, emptyStarDir)
+    assert(TimeSeries.tsAutocorrLag1(spark, emptyStarDir).collect().isEmpty)
+    assert(Graph.graphCopurchaseWeights(spark, emptyStarDir)
       .collect().isEmpty)
     val hx = TextAnalysis.textHapaxStats(spark, emptyStarDir).collect()
     assert(hx.length == 1 && hx.head.getLong(0) == 0L)
     // batch 6
-    val gn = Analytics4.aggGiniCents(spark, emptyStarDir).collect()
+    val gn = Relational.aggGiniCents(spark, emptyStarDir).collect()
     assert(gn.length == 1 && gn.head.getLong(0) == 0L)
-    assert(Analytics4.dedupPrefixGroups(spark, emptyStarDir)
+    assert(Dedup.dedupPrefixGroups(spark, emptyStarDir)
       .collect().isEmpty)
     // batch 7
-    assert(Analytics4.evalSilhouetteCentroid(spark, emptyStarDir)
+    assert(Scoring.evalSilhouetteCentroid(spark, emptyStarDir)
       .collect().isEmpty)
-    assert(Analytics4.embDimStats(spark, emptyStarDir).collect().isEmpty)
+    assert(Similarity.embDimStats(spark, emptyStarDir).collect().isEmpty)
     // batch 8
-    assert(Analytics4.tsHoltBacktest(spark, emptyStarDir).collect().isEmpty)
-    assert(Warehouse2.privacyLDiversity(spark, emptyStarDir)
+    assert(TimeSeries.tsHoltBacktest(spark, emptyStarDir).collect().isEmpty)
+    assert(Privacy.privacyLDiversity(spark, emptyStarDir)
       .collect().isEmpty)
-    assert(Warehouse2.dqFreshnessLag(spark, emptyStarDir)
+    assert(Quality.dqFreshnessLag(spark, emptyStarDir)
       .collect().isEmpty)
     // batch 9
-    assert(Analytics4.aggEntropyByKey(spark, emptyStarDir)
+    assert(Relational.aggEntropyByKey(spark, emptyStarDir)
       .collect().isEmpty)
-    assert(Analytics4.textJsDivergence(spark, emptyStarDir)
+    assert(TextAnalysis.textJsDivergence(spark, emptyStarDir)
       .collect().isEmpty)
   }
 
   test("round-14 family: empty star schema degrades to well-formed results") {
-    import graft.query.{Analytics, Analytics4, Analytics5}
+    import graft.query.{Dedup, Graph, Relational, Similarity, TextAnalysis,
+      Warehouse}
+    import graft.query.ml.{Agreement, Calibration, Preference, Ranking,
+      Scoring, Significance}
+    import graft.query.stats.{Anomaly, Drift, Privacy, Quality, Sampling,
+      TimeSeries}
     graft.schema.IndexCache.clear()
-    assert(Analytics5.sampleWeighted(spark, emptyStarDir).collect().isEmpty)
-    assert(Analytics5.aggWeightedMedian(spark, emptyStarDir)
+    assert(Sampling.sampleWeighted(spark, emptyStarDir).collect().isEmpty)
+    assert(Relational.aggWeightedMedian(spark, emptyStarDir)
       .collect().isEmpty)
-    assert(Analytics5.tsIntervalUnion(spark, emptyStarDir).collect().isEmpty)
-    assert(Analytics5.driftPsi(spark, emptyStarDir).collect().isEmpty)
+    assert(TimeSeries.tsIntervalUnion(spark, emptyStarDir).collect().isEmpty)
+    assert(Drift.driftPsi(spark, emptyStarDir).collect().isEmpty)
     // FK profile keeps its 2 relationship rows with zero counts
-    val dq = Analytics5.dqJoinProfile(spark, emptyStarDir).collect()
+    val dq = Quality.dqJoinProfile(spark, emptyStarDir).collect()
     assert(dq.length == 2 && dq.forall(_.getLong(1) == 0L))
-    assert(Analytics5.attributionLinear(spark, emptyStarDir)
+    assert(Warehouse.attributionLinear(spark, emptyStarDir)
       .collect().isEmpty)
     // empty graph: percentile threshold is null — empty core, no unbox
-    assert(Analytics5.graphKcore(spark, emptyStarDir).collect().isEmpty)
-    assert(Analytics5.graphTwoHopReach(spark, emptyStarDir)
+    assert(Graph.graphKcore(spark, emptyStarDir).collect().isEmpty)
+    assert(Graph.graphTwoHopReach(spark, emptyStarDir)
       .collect().isEmpty)
-    assert(Analytics5.joinEditDistance(spark, emptyStarDir)
+    assert(Relational.joinEditDistance(spark, emptyStarDir)
       .collect().isEmpty)
-    assert(Analytics5.fVariantJson(spark, emptyStarDir).collect().isEmpty)
-    assert(Analytics5.dedupTimeWindow(spark, emptyStarDir)
+    assert(Relational.fVariantJson(spark, emptyStarDir).collect().isEmpty)
+    assert(Dedup.dedupTimeWindow(spark, emptyStarDir)
       .collect().isEmpty)
-    assert(Analytics5.corpusSampleStratified(spark, emptyStarDir)
+    assert(TextAnalysis.corpusSampleStratified(spark, emptyStarDir)
       .collect().isEmpty)
-    assert(Analytics5.anomalyRollingZ(spark, emptyStarDir)
+    assert(Anomaly.anomalyRollingZ(spark, emptyStarDir)
       .collect().isEmpty)
-    assert(Analytics5.aggHistogramQuantiles(spark, emptyStarDir)
+    assert(Relational.aggHistogramQuantiles(spark, emptyStarDir)
       .collect().isEmpty)
-    assert(Analytics5.sqlInactiveCustomers(spark, emptyStarDir)
+    assert(Warehouse.sqlInactiveCustomers(spark, emptyStarDir)
       .collect().isEmpty)
-    assert(Analytics5.sqlPriorityReturns(spark, emptyStarDir)
+    assert(Warehouse.sqlPriorityReturns(spark, emptyStarDir)
       .collect().isEmpty)
-    assert(Analytics5.qualityLangConfusion(spark, emptyStarDir)
+    assert(TextAnalysis.qualityLangConfusion(spark, emptyStarDir)
       .collect().isEmpty)
-    assert(Analytics5.aggDowHourGrid(spark, emptyStarDir).collect().isEmpty)
-    assert(Analytics5.privacyDpCounts(spark, emptyStarDir)
+    assert(Relational.aggDowHourGrid(spark, emptyStarDir).collect().isEmpty)
+    assert(Privacy.privacyDpCounts(spark, emptyStarDir)
       .collect().isEmpty)
-    assert(Analytics5.corpusMixWeights(spark, emptyStarDir)
+    assert(TextAnalysis.corpusMixWeights(spark, emptyStarDir)
       .collect().isEmpty)
-    assert(Analytics5.evalKsTest(spark, emptyStarDir).collect().isEmpty)
-    assert(Analytics5.sqlMonthlyCumRevenue(spark, emptyStarDir)
+    assert(Significance.evalKsTest(spark, emptyStarDir).collect().isEmpty)
+    assert(Warehouse.sqlMonthlyCumRevenue(spark, emptyStarDir)
       .collect().isEmpty)
     // empty corpus histogram: no dim to probe, no rows
-    assert(Analytics4.embHubnessStats(spark, emptyStarDir)
+    assert(Similarity.embHubnessStats(spark, emptyStarDir)
       .collect().isEmpty)
     // stateful streaming round-14: zero rows, not a crash
     assert(graft.streaming.StreamQueries
@@ -424,73 +436,82 @@ class EdgeCaseSpec extends org.scalatest.funsuite.AnyFunSuite {
   }
 
   test("round-14 family: single-row star degrades to well-formed results") {
-    import graft.query.{Analytics, Analytics5}
+    import graft.query.{Dedup, Graph, Relational, TextAnalysis, Warehouse}
+    import graft.query.ml.{Agreement, Preference, Ranking, Scoring,
+      Significance}
+    import graft.query.stats.{Anomaly, Drift, Privacy, Quality, Sampling,
+      TimeSeries}
     import org.apache.spark.sql.functions._
     graft.schema.IndexCache.clear()
     // one order, one customer: weighted sample of size 1, exact key
-    val sw = Analytics5.sampleWeighted(spark, oneStarDir).collect()
+    val sw = Sampling.sampleWeighted(spark, oneStarDir).collect()
     assert(sw.length == 1)
-    val wm = Analytics5.aggWeightedMedian(spark, oneStarDir).collect()
+    val wm = Relational.aggWeightedMedian(spark, oneStarDir).collect()
     assert(wm.length == 1)
     // one event: one island covering exactly the hold window
-    val iu = Analytics5.tsIntervalUnion(spark, oneStarDir).collect()
+    val iu = TimeSeries.tsIntervalUnion(spark, oneStarDir).collect()
     assert(iu.length == 1 && iu.head.getLong(1) == 1L
       && iu.head.getLong(2) == 300000000L)
     // single timestamp: the one event is 'late' by the midpoint rule
-    val psi = Analytics5.driftPsi(spark, oneStarDir).collect()
+    val psi = Drift.driftPsi(spark, oneStarDir).collect()
     assert(psi.length == 1 && psi.head.getLong(1) == 0L
       && psi.head.getLong(2) == 1L)
     // one-sided KS (only one event type present) is undefined — empty
-    assert(Analytics5.evalKsTest(spark, oneStarDir).collect().isEmpty)
+    assert(Significance.evalKsTest(spark, oneStarDir).collect().isEmpty)
     // one vector: a single decile row; lift defined iff label is odd
-    val dl = Analytics5.evalDecileLift(spark, oneStarDir).collect()
+    val dl = Scoring.evalDecileLift(spark, oneStarDir).collect()
     assert(dl.length == 1 && dl.head.getLong(1) == 1L)
     // constant-value histogram: all three quantiles land in bin 0 at lo
-    val hq = Analytics5.aggHistogramQuantiles(spark, oneStarDir).collect()
+    val hq = Relational.aggHistogramQuantiles(spark, oneStarDir).collect()
     assert(hq.length == 3)
     // single lineitem row: no co-purchase pairs — graph ops are empty
-    assert(Analytics5.graphKcore(spark, oneStarDir).collect().isEmpty)
-    assert(Analytics5.graphTwoHopReach(spark, oneStarDir)
+    assert(Graph.graphKcore(spark, oneStarDir).collect().isEmpty)
+    assert(Graph.graphTwoHopReach(spark, oneStarDir)
       .collect().isEmpty)
     // singleton vocabulary: no pairs
-    assert(Analytics5.joinEditDistance(spark, oneStarDir)
+    assert(Relational.joinEditDistance(spark, oneStarDir)
       .collect().isEmpty)
     // one user, one event: kept verbatim; no anomaly baseline yet
-    assert(Analytics5.dedupTimeWindow(spark, oneStarDir)
+    assert(Dedup.dedupTimeWindow(spark, oneStarDir)
       .collect().length == 1)
-    assert(Analytics5.anomalyRollingZ(spark, oneStarDir)
+    assert(Anomaly.anomalyRollingZ(spark, oneStarDir)
       .collect().isEmpty)
-    assert(Analytics5.dqVolumeAnomaly(spark, oneStarDir)
+    assert(Quality.dqVolumeAnomaly(spark, oneStarDir)
       .collect().isEmpty)
     // one doc: ceil(10%) of a 1-doc stratum keeps it
-    assert(Analytics5.corpusSampleStratified(spark, oneStarDir)
+    assert(TextAnalysis.corpusSampleStratified(spark, oneStarDir)
       .collect().length == 1)
-    val mw = Analytics5.corpusMixWeights(spark, oneStarDir).collect()
+    val mw = TextAnalysis.corpusMixWeights(spark, oneStarDir).collect()
     assert(mw.length == 1 && mw.head.getDouble(2) == 1.0
       && mw.head.getDouble(3) == 1.0)
-    val dp = Analytics5.privacyDpCounts(spark, oneStarDir).collect()
+    val dp = Privacy.privacyDpCounts(spark, oneStarDir).collect()
     assert(dp.length == 1 && dp.head.getLong(1) == 1L)
-    val tv = Analytics5.privacyTClosenessTv(spark, oneStarDir).collect()
+    val tv = Privacy.privacyTClosenessTv(spark, oneStarDir).collect()
     assert(tv.length == 1 && tv.head.getFloat(2) == 0.0f,
       "a lone class IS the corpus distribution — TV must be 0")
-    val fk = Analytics5.dqJoinProfile(spark, oneStarDir).collect()
+    val fk = Quality.dqJoinProfile(spark, oneStarDir).collect()
     assert(fk.length == 2)
     graft.schema.IndexCache.clear()
   }
 
   test("round-15 family: empty and single-row corpora degrade to " +
       "well-formed results") {
-    import graft.query.{Analytics5, Multimodal, TextAnalysis, Analytics}
+    import graft.query.{Dedup, Graph, Multimodal, Relational, TextAnalysis,
+      Warehouse}
+    import graft.query.ml.{Agreement, Preference, Ranking, Scoring,
+      Significance, TextMetrics}
+    import graft.query.stats.{Anomaly, Drift, Privacy, Quality, Sampling,
+      TimeSeries}
     import graft.streaming.StreamQueries
     graft.schema.IndexCache.clear()
     // EMPTY corpus: recurrences, decompositions, spectra, moments, and
     // the graph/text/multimodal round-15 ops all return zero rows
-    assert(Analytics5.anomalyAlertDebounce(spark, emptyStarDir)
+    assert(Anomaly.anomalyAlertDebounce(spark, emptyStarDir)
       .collect().isEmpty)
-    assert(Analytics5.tsStlDecompose(spark, emptyStarDir).collect().isEmpty)
-    assert(Analytics5.tsPeriodogram(spark, emptyStarDir).collect().isEmpty)
-    assert(Analytics5.aggSkewKurtosis(spark, emptyStarDir).collect().isEmpty)
-    assert(Analytics5.graphHits(spark, emptyStarDir).collect().isEmpty)
+    assert(TimeSeries.tsStlDecompose(spark, emptyStarDir).collect().isEmpty)
+    assert(TimeSeries.tsPeriodogram(spark, emptyStarDir).collect().isEmpty)
+    assert(Relational.aggSkewKurtosis(spark, emptyStarDir).collect().isEmpty)
+    assert(Graph.graphHits(spark, emptyStarDir).collect().isEmpty)
     assert(TextAnalysis.textKeywordsTopk(spark, emptyStarDir)
       .collect().isEmpty)
     assert(Multimodal.multimodalSceneCuts(spark, emptyStarDir)
@@ -501,7 +522,7 @@ class EdgeCaseSpec extends org.scalatest.funsuite.AnyFunSuite {
       .collect().isEmpty)
     // the global t-test aggregate emits its one summary row; with zero
     // population the moments are undefined — null/NaN, never a throw
-    val tt = Analytics5.aggTtestWelch(spark, emptyStarDir).collect()
+    val tt = Relational.aggTtestWelch(spark, emptyStarDir).collect()
     assert(tt.length <= 1)
     tt.foreach { r => assert(r.getLong(0) == 0L && r.getLong(1) == 0L) }
     graft.schema.IndexCache.clear()
@@ -509,7 +530,7 @@ class EdgeCaseSpec extends org.scalatest.funsuite.AnyFunSuite {
     // one-hour series cannot fill a 25-row trend frame (null trend); a
     // single doc yields ≤3 keywords ranked from 1; a single part is its
     // own authority=degree=1 with score 1
-    val deb = Analytics5.anomalyAlertDebounce(spark, oneStarDir).collect()
+    val deb = Anomaly.anomalyAlertDebounce(spark, oneStarDir).collect()
     assert(deb.length <= 1) // the one event alerts iff it is an error
     // BOTH stored layouts stream: events.parquet as a DIRECTORY of part
     // files (what oneStarDir's Spark write produced — the layout the
@@ -532,11 +553,11 @@ class EdgeCaseSpec extends org.scalatest.funsuite.AnyFunSuite {
     val rl = StreamQueries.streamRateLimit(spark, oneEvFileDir).collect()
     assert(rl.length == 1 && rl.head.getBoolean(2),
       "the first event must always be admitted")
-    val stl = Analytics5.tsStlDecompose(spark, oneStarDir).collect()
+    val stl = TimeSeries.tsStlDecompose(spark, oneStarDir).collect()
     assert(stl.length == 1 && stl.head.isNullAt(2))
     val kw = TextAnalysis.textKeywordsTopk(spark, oneStarDir).collect()
     assert(kw.nonEmpty && kw.length <= 3 && kw.head.getInt(1) == 1)
-    val hits = Analytics5.graphHits(spark, oneStarDir).collect()
+    val hits = Graph.graphHits(spark, oneStarDir).collect()
     assert(hits.length == 1 && hits.head.getLong(1) == 1L
       && hits.head.getFloat(2) == 1.0f)
     val sc = Multimodal.multimodalSceneCuts(spark, oneStarDir).collect()
@@ -545,21 +566,25 @@ class EdgeCaseSpec extends org.scalatest.funsuite.AnyFunSuite {
   }
 
   test("round-15 second wave: empty corpus degrades to well-formed results") {
-    import graft.query.{Analytics2, Analytics5, TextAnalysis, Warehouse2}
+    import graft.query.{Dedup, Graph, Relational, TextAnalysis, Warehouse}
+    import graft.query.ml.{Agreement, Preference, Ranking, Scoring,
+      Significance, TextMetrics}
+    import graft.query.stats.{Anomaly, Drift, Privacy, Quality, Sampling,
+      TimeSeries}
     import graft.streaming.StreamQueries
     graft.schema.IndexCache.clear()
     // empty-result family: no input rows → no output rows, never a crash
-    assert(Warehouse2.sqlCustomerRfm(spark, emptyStarDir).collect().isEmpty)
-    assert(Warehouse2.sqlAbcAnalysis(spark, emptyStarDir).collect().isEmpty)
-    assert(Warehouse2.sqlLeadTimePercentiles(spark, emptyStarDir)
+    assert(Warehouse.sqlCustomerRfm(spark, emptyStarDir).collect().isEmpty)
+    assert(Warehouse.sqlAbcAnalysis(spark, emptyStarDir).collect().isEmpty)
+    assert(Warehouse.sqlLeadTimePercentiles(spark, emptyStarDir)
       .collect().isEmpty)
-    assert(Analytics2.cohortLtv(spark, emptyStarDir).collect().isEmpty)
-    assert(Analytics5.graphModularity(spark, emptyStarDir).collect().isEmpty)
-    assert(Analytics5.graphRandomWalks(spark, emptyStarDir).collect().isEmpty)
-    assert(Analytics5.graphWalkCooccurrence(spark, emptyStarDir)
+    assert(Warehouse.cohortLtv(spark, emptyStarDir).collect().isEmpty)
+    assert(Graph.graphModularity(spark, emptyStarDir).collect().isEmpty)
+    assert(Graph.graphRandomWalks(spark, emptyStarDir).collect().isEmpty)
+    assert(Graph.graphWalkCooccurrence(spark, emptyStarDir)
       .collect().isEmpty)
-    assert(Analytics5.windowMaxSubarray(spark, emptyStarDir).collect().isEmpty)
-    assert(Analytics5.attributionTimeDecay(spark, emptyStarDir)
+    assert(Relational.windowMaxSubarray(spark, emptyStarDir).collect().isEmpty)
+    assert(Warehouse.attributionTimeDecay(spark, emptyStarDir)
       .collect().isEmpty)
     assert(TextAnalysis.textBoilerplateFrac(spark, emptyStarDir)
       .collect().isEmpty)
@@ -568,12 +593,12 @@ class EdgeCaseSpec extends org.scalatest.funsuite.AnyFunSuite {
       .collect().isEmpty)
     // summary-row family: the report emits its fixed panel with zero
     // counts (an empty corpus is a finding, not an error)
-    val pk = Warehouse2.dqPkUniqueness(spark, emptyStarDir).collect()
+    val pk = Quality.dqPkUniqueness(spark, emptyStarDir).collect()
     assert(pk.length == 5 && pk.forall(r =>
       r.getLong(1) == 0L && r.getLong(3) == 0L))
-    val tt = Analytics5.aggTtestWelch(spark, emptyStarDir).collect()
+    val tt = Relational.aggTtestWelch(spark, emptyStarDir).collect()
     assert(tt.length <= 1)
-    val kap = Analytics5.evalCohensKappa(spark, emptyStarDir).collect()
+    val kap = Agreement.evalCohensKappa(spark, emptyStarDir).collect()
     assert(kap.length <= 1)
     kap.foreach(r => assert(r.getLong(0) == 0L))
     graft.schema.IndexCache.clear()
@@ -581,17 +606,22 @@ class EdgeCaseSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   test("round-15 third wave (driver round): empty corpus degrades to " +
       "well-formed results") {
-    import graft.query.{Analytics5, Dedup, Multimodal, TextAnalysis}
+    import graft.query.{Dedup, Graph, Multimodal, Relational, TextAnalysis,
+      Warehouse}
+    import graft.query.ml.{Agreement, Preference, Ranking, Scoring,
+      Significance, TextMetrics}
+    import graft.query.stats.{Anomaly, Drift, Privacy, Quality, Sampling,
+      TimeSeries}
     assert(Dedup.dedupSubstringMaximal(spark, emptyStarDir)
       .collect().isEmpty)
-    assert(Analytics5.tsTheilSen(spark, emptyStarDir).collect().isEmpty)
-    assert(Analytics5.dqBenfordLaw(spark, emptyStarDir).collect().isEmpty)
+    assert(TimeSeries.tsTheilSen(spark, emptyStarDir).collect().isEmpty)
+    assert(Quality.dqBenfordLaw(spark, emptyStarDir).collect().isEmpty)
     assert(TextAnalysis.textReadability(spark, emptyStarDir)
       .collect().isEmpty)
     assert(Multimodal.multimodalImageResize(spark, emptyStarDir)
       .collect().isEmpty)
     // ICC over nothing: one row, zero items, null mean squares / ICCs
-    val icc = Analytics5.evalIcc(spark, emptyStarDir).collect()
+    val icc = Agreement.evalIcc(spark, emptyStarDir).collect()
     assert(icc.length == 1 && icc.head.getLong(0) == 0L
       && icc.head.isNullAt(5) && icc.head.isNullAt(6))
     // the streaming monitor twins share the batch degrade contracts:
@@ -606,25 +636,27 @@ class EdgeCaseSpec extends org.scalatest.funsuite.AnyFunSuite {
   }
 
   test("round-16 family: empty corpus degrades to well-formed results") {
-    import graft.query.Analytics6
+    import graft.query.{Dedup, Graph, Relational}
+    import graft.query.ml.{Agreement, Significance}
+    import graft.query.stats.{Privacy, TimeSeries}
     import graft.streaming.StreamQueries
     graft.schema.IndexCache.clear()
     // empty-result family: no rows in → no rows out, never a throw
-    assert(Analytics6.evalCliffsDelta(spark, emptyStarDir)
+    assert(Significance.evalCliffsDelta(spark, emptyStarDir)
       .collect().isEmpty)
-    assert(Analytics6.tsCusumTarget(spark, emptyStarDir).collect().isEmpty)
-    assert(Analytics6.tsCroston(spark, emptyStarDir).collect().isEmpty)
-    assert(Analytics6.tsSaxSymbolic(spark, emptyStarDir).collect().isEmpty)
-    assert(Analytics6.tsCcfLags(spark, emptyStarDir).collect().isEmpty)
-    assert(Analytics6.aggTheilIndex(spark, emptyStarDir).collect().isEmpty)
-    assert(Analytics6.graphKatzCentrality(spark, emptyStarDir)
+    assert(TimeSeries.tsCusumTarget(spark, emptyStarDir).collect().isEmpty)
+    assert(TimeSeries.tsCroston(spark, emptyStarDir).collect().isEmpty)
+    assert(TimeSeries.tsSaxSymbolic(spark, emptyStarDir).collect().isEmpty)
+    assert(TimeSeries.tsCcfLags(spark, emptyStarDir).collect().isEmpty)
+    assert(Relational.aggTheilIndex(spark, emptyStarDir).collect().isEmpty)
+    assert(Graph.graphKatzCentrality(spark, emptyStarDir)
       .collect().isEmpty)
-    assert(Analytics6.graphEgoBetweenness(spark, emptyStarDir)
+    assert(Graph.graphEgoBetweenness(spark, emptyStarDir)
       .collect().isEmpty)
-    assert(Analytics6.graphRichClub(spark, emptyStarDir).collect().isEmpty)
-    assert(Analytics6.dedupThresholdCurve(spark, emptyStarDir)
+    assert(Graph.graphRichClub(spark, emptyStarDir).collect().isEmpty)
+    assert(Dedup.dedupThresholdCurve(spark, emptyStarDir)
       .collect().isEmpty)
-    assert(Analytics6.windowRollingCorr(spark, emptyStarDir)
+    assert(Relational.windowRollingCorr(spark, emptyStarDir)
       .collect().isEmpty)
     assert(StreamQueries.streamCusumTarget(spark, emptyStarDir)
       .collect().isEmpty)
@@ -632,36 +664,38 @@ class EdgeCaseSpec extends org.scalatest.funsuite.AnyFunSuite {
       .collect().isEmpty)
     // summary-row family: one global-aggregate row of zero counts and
     // null/NaN statistics — an empty corpus is a finding, not an error
-    Seq(Analytics6.evalMannWhitneyU(spark, emptyStarDir),
-        Analytics6.evalWilcoxonSignedRank(spark, emptyStarDir),
-        Analytics6.evalTostEquivalence(spark, emptyStarDir),
-        Analytics6.evalGwetAc1(spark, emptyStarDir),
-        Analytics6.evalCohensD(spark, emptyStarDir),
-        Analytics6.evalMdePower(spark, emptyStarDir),
-        Analytics6.tsHurstExponent(spark, emptyStarDir)).foreach { df =>
+    Seq(Significance.evalMannWhitneyU(spark, emptyStarDir),
+        Significance.evalWilcoxonSignedRank(spark, emptyStarDir),
+        Significance.evalTostEquivalence(spark, emptyStarDir),
+        Agreement.evalGwetAc1(spark, emptyStarDir),
+        Significance.evalCohensD(spark, emptyStarDir),
+        Significance.evalMdePower(spark, emptyStarDir),
+        TimeSeries.tsHurstExponent(spark, emptyStarDir)).foreach { df =>
       assert(df.collect().length <= 1)
     }
     // the DP median still releases its 3-candidate panel (rank utility
     // null over an empty histogram — auditable, not a crash)
-    assert(Analytics6.privacyDpQuantile(spark, emptyStarDir)
+    assert(Privacy.privacyDpQuantile(spark, emptyStarDir)
       .collect().length == 3)
     graft.schema.IndexCache.clear()
   }
 
   test("round-17 family: empty and single-row corpora degrade to " +
       "well-formed results") {
-    import graft.query.{Analytics7, Similarity}
+    import graft.query.{Graph, Similarity}
+    import graft.query.ml.Significance
+    import graft.query.stats.Privacy
     graft.schema.IndexCache.clear()
     // empty: no events → no DP releases / no BCa row (n_items > 0
     // gate); no embeddings → no quantizer, no cells; no lineitem → no
     // edges, no sources
-    assert(Analytics7.privacyDpClippedMean(spark, emptyStarDir)
+    assert(Privacy.privacyDpClippedMean(spark, emptyStarDir)
       .collect().isEmpty)
-    assert(Analytics7.evalBootstrapBca(spark, emptyStarDir)
+    assert(Significance.evalBootstrapBca(spark, emptyStarDir)
       .collect().isEmpty)
     assert(Similarity.annIvfDeltaAssign(spark, emptyStarDir)
       .collect().isEmpty)
-    assert(Analytics7.graphSsspWeighted(spark, emptyStarDir)
+    assert(Graph.graphSsspWeighted(spark, emptyStarDir)
       .collect().isEmpty)
     graft.schema.IndexCache.clear()
     // singleton: one event releases one noisy row; the BCa epilogue
@@ -670,14 +704,14 @@ class EdgeCaseSpec extends org.scalatest.funsuite.AnyFunSuite {
     // single embedding has vec_id 0 ⇒ delta-only, so the corpus-trained
     // quantizer is empty and the release is the honest zero-cell one;
     // one lineitem row has no co-purchase pair ⇒ no graph
-    val dp1 = Analytics7.privacyDpClippedMean(spark, oneStarDir).collect()
+    val dp1 = Privacy.privacyDpClippedMean(spark, oneStarDir).collect()
     assert(dp1.length == 1 && dp1.head.getAs[Long]("n_exact") == 1L
       && dp1.head.getAs[Float]("dp_count") >= 1.0f)
-    assert(Analytics7.evalBootstrapBca(spark, oneStarDir)
+    assert(Significance.evalBootstrapBca(spark, oneStarDir)
       .collect().length <= 1)
     assert(Similarity.annIvfDeltaAssign(spark, oneStarDir)
       .collect().isEmpty)
-    assert(Analytics7.graphSsspWeighted(spark, oneStarDir)
+    assert(Graph.graphSsspWeighted(spark, oneStarDir)
       .collect().isEmpty)
     graft.schema.IndexCache.clear()
   }

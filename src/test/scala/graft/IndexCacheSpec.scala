@@ -166,7 +166,7 @@ class IndexCacheSpec extends SparkSpec {
           n.startsWith("event_type_dim")).toSet
     IndexCache.clear()
     val before = layoutDirs()
-    graft.query.Relational2.joinDppPruned(spark, sf).collect()
+    graft.query.Relational.joinDppPruned(spark, sf).collect()
     val made = layoutDirs() -- before
     assert(made.exists(_.startsWith("events_by_type")) &&
       made.exists(_.startsWith("event_type_dim")),

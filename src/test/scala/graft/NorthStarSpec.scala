@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.query.{Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.query.{Dedup, Multimodal, Similarity, TextAnalysis, TokenHash}
 
 class NorthStarSpec extends SparkSpec {
   import spark.implicits._
@@ -13,7 +13,7 @@ class NorthStarSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val w = org.apache.spark.sql.expressions.Window.partitionBy($"fp")
     val out = docs
-      .withColumn("fp", md5(Dedup.normText($"text")))
+      .withColumn("fp", md5(TokenHash.normText($"text")))
       .withColumn("keep", $"doc_id" === min($"doc_id").over(w))
       .orderBy("doc_id").collect()
     assert(out.map(_.getBoolean(3)).toSeq == Seq(true, false, true, false))
@@ -58,9 +58,9 @@ class NorthStarSpec extends SparkSpec {
 
   test("simhash: chunk-bucket candidate generation is lossless for hamming<=3") {
     GraftExtensions.register(spark)
-    val docs = Dedup.withPlantedNearDups(
+    val docs = TokenHash.withPlantedNearDups(
       graft.schema.Schemas.table(spark, sf, "documents"))
-      .select($"doc_id", Dedup.tokens($"text").as("toks"))
+      .select($"doc_id", TokenHash.tokens($"text").as("toks"))
       .withColumn("h", expr("simhash60(toks)"))
       .select("doc_id", "h").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
@@ -92,9 +92,9 @@ class NorthStarSpec extends SparkSpec {
 
   test("Spark-ML MinHashLSH cross-validates the custom LSH on planted pairs") {
     import org.apache.spark.ml.feature.{HashingTF, MinHashLSH}
-    val docs = Dedup.withPlantedNearDups(
+    val docs = TokenHash.withPlantedNearDups(
       graft.schema.Schemas.table(spark, sf, "documents"))
-      .select($"doc_id", Dedup.shingles($"text", 3).as("sh"))
+      .select($"doc_id", TokenHash.shingles($"text", 3).as("sh"))
       .filter(size($"sh") > 0)
     val tf = new HashingTF().setInputCol("sh").setOutputCol("features")
       .setNumFeatures(1 << 18).setBinary(true)

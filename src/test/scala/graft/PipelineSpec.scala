@@ -1,14 +1,16 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.query.Pipeline
+import graft.query.{Relational, TextAnalysis}
+import graft.query.ml.{Features, Scoring}
+import graft.query.stats.{Quality, Sampling}
 
 /** Property specs for the training-data pipeline operators (round 4). */
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
 
   test("decontaminate: overlaps meet the floor, splits are disjoint, fractions valid") {
-    val rows = Pipeline.decontaminate(spark, sf).collect()
+    val rows = TextAnalysis.decontaminate(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (tr, ev, shared, frac) =
@@ -26,8 +28,8 @@ class PipelineSpec extends SparkSpec {
     val docs = graft.schema.Schemas.table(spark, sf, "documents")
     val nDocs = docs.count()
     val totTok = docs.select(
-      sum(size(graft.query.Dedup.tokens($"text")).cast("long"))).head().getLong(0)
-    val bins = Pipeline.packSequences(spark, sf).collect()
+      sum(size(graft.query.TokenHash.tokens($"text")).cast("long"))).head().getLong(0)
+    val bins = TextAnalysis.packSequences(spark, sf).collect()
     assert(bins.map(_.getLong(1)).sum == nDocs)
     assert(bins.map(_.getLong(2)).sum == totTok)
     // bin ids ascending; doc ranges non-overlapping and ordered
@@ -41,14 +43,14 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("train_test_split: 3 deterministic splits conserving docs, train largest") {
-    val out = Pipeline.trainTestSplit(spark, sf).collect()
+    val out = Features.trainTestSplit(spark, sf).collect()
     assert(out.map(_.getString(0)).toSet == Set("train", "val", "test"))
     val total = graft.schema.Schemas.table(spark, sf, "documents").count()
     assert(out.map(_.getLong(1)).sum == total)
     val byName = out.map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(byName("train") > byName("val") + byName("test"))
     // deterministic: a second run returns identical rows
-    assert(Pipeline.trainTestSplit(spark, sf).collect().toSeq == out.toSeq)
+    assert(Features.trainTestSplit(spark, sf).collect().toSeq == out.toSeq)
   }
 
   test("class_weights: inverse-frequency invariant holds per class") {
@@ -57,7 +59,7 @@ class PipelineSpec extends SparkSpec {
     val counts = ev.groupBy($"event_type").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val k = counts.size
-    Pipeline.classWeights(spark, sf).collect().foreach { r =>
+    Features.classWeights(spark, sf).collect().foreach { r =>
       val (et, w) = (r.getString(1), r.getDouble(2))
       val expected = nTotal.toDouble / (k * counts(et))
       assert(math.abs(w - expected) < 1e-12, s"$et: $w vs $expected")
@@ -68,7 +70,7 @@ class PipelineSpec extends SparkSpec {
     val ev = graft.schema.Schemas.events(spark, sf)
     val totalRows = ev.count()
     val totalKeys = ev.select($"user_id").distinct().count()
-    val bands = Pipeline.skewProfile(spark, sf).collect()
+    val bands = Quality.skewProfile(spark, sf).collect()
     assert(bands.map(_.getLong(1)).sum == totalKeys)
     assert(bands.map(_.getLong(4)).sum == totalRows)
     bands.foreach { r =>
@@ -79,7 +81,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("quality_topk_per_lang: k per language, descending score, ties by doc_id") {
-    val out = Pipeline.qualityTopkPerLang(spark, sf, k = 5).collect()
+    val out = TextAnalysis.qualityTopkPerLang(spark, sf, k = 5).collect()
     out.groupBy(_.getString(0)).foreach { case (lang, rows) =>
       val sorted = rows.sortBy(_.getInt(1))
       assert(sorted.map(_.getInt(1)).toSeq == (1 to rows.length), lang)
@@ -94,7 +96,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("corpus_mix_budget: per-source cumulative tokens within budget, prefix-closed") {
-    val out = Pipeline.corpusMixBudget(spark, sf, budget = 500L).collect()
+    val out = TextAnalysis.corpusMixBudget(spark, sf, budget = 500L).collect()
     assert(out.nonEmpty)
     out.groupBy(_.getString(0)).foreach { case (src, rows) =>
       val sorted = rows.sortBy(_.getInt(2))
@@ -108,7 +110,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("feature_binning: 10 near-equal bins, monotone in value, broadcast plan") {
-    val df = Pipeline.featureBinning(spark, sf, maxId = Long.MaxValue)
+    val df = Features.featureBinning(spark, sf, maxId = Long.MaxValue)
     // boundaries broadcast; no single-partition window anywhere
     val p = df.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
@@ -145,7 +147,7 @@ class PipelineSpec extends SparkSpec {
   test("eval_confusion: counts conserve rows, fractions sum to 1, diagonal ~0.75") {
     val ev = graft.schema.Schemas.events(spark, sf)
     val total = ev.count()
-    val cells = Pipeline.evalConfusion(spark, sf).collect()
+    val cells = Scoring.evalConfusion(spark, sf).collect()
     assert(cells.map(_.getLong(2)).sum == total)
     cells.groupBy(_.getString(0)).foreach { case (label, rows) =>
       val fracSum = rows.map(_.getDouble(3)).sum
@@ -158,10 +160,10 @@ class PipelineSpec extends SparkSpec {
 
   test("sample_topk_per_group: salted two-phase == single global window per group") {
     import org.apache.spark.sql.expressions.Window
-    val got = Pipeline.sampleTopkPerGroup(spark, sf, k = 15, salts = 8)
+    val got = Sampling.sampleTopkPerGroup(spark, sf, k = 15, salts = 8)
       .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSeq
     // independent single-window reference
-    val h = graft.query.Dedup.hash60(
+    val h = graft.query.TokenHash.hash60(
       concat($"event_id".cast("string"), lit(":smp")))
     val w = Window.partitionBy($"event_type").orderBy($"h", $"event_id")
     val ref = graft.schema.Schemas.events(spark, sf)
@@ -175,7 +177,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("window_cumulative_distinct: monotone unit steps per type, no single-partition exchange") {
-    val df = Pipeline.windowCumulativeDistinct(spark, sf)
+    val df = Relational.windowCumulativeDistinct(spark, sf)
     val p = df.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     // even the histogram prefix-sum partitions by event_type — nothing in
@@ -196,7 +198,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("text_repetition: score in [0,1), zero iff all bigrams distinct") {
-    val rows = Pipeline.textRepetition(spark, sf).collect()
+    val rows = TextAnalysis.textRepetition(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (n, d, rep) = (r.getLong(1), r.getLong(2), r.getDouble(3))

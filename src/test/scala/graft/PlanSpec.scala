@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
 import graft.query.{Relational, Similarity}
+import graft.query.ml.Significance
 
 /** Physical-plan audits — the 100 TB design rules as assertions, so a
   * regression that un-pushes a filter, drops a broadcast, or de-codegens a
@@ -95,7 +96,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("pack_sequences: no single-partition exchange over the data (only the histogram)") {
-    val p = plan(graft.query.Pipeline.packSequences(spark, sf))
+    val p = plan(graft.query.TextAnalysis.packSequences(spark, sf))
     val single = "SinglePartition".r.findAllIn(p).size
     assert(single == 1, s"expected 1 SinglePartition exchange, got $single")
     assert(p.contains("BroadcastExchange"), p)
@@ -111,7 +112,7 @@ class PlanSpec extends SparkSpec {
     // spark.sql.shuffle.partitions mid-flight).
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.adaptive.enabled", "false")
-    val executed = graft.query.Relational3.windowFunnel(s2, sf)
+    val executed = graft.query.Relational.windowFunnel(s2, sf)
       .queryExecution.executedPlan.toString
     // the same stage sub-pipelines feed both the next stage and the final
     // left joins — the up-front repartition makes those subtrees identical
@@ -125,7 +126,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("sql_shipping_priority: date filters pushed to all scans, customer broadcast, top-10 TakeOrdered") {
-    val p = plan(graft.query.Analytics2.sqlShippingPriority(spark, sf))
+    val p = plan(graft.query.Warehouse.sqlShippingPriority(spark, sf))
     assert(p.contains("GreaterThan(l_shipdate"), p)
     assert(p.contains("LessThan(o_orderdate"), p)
     assert(p.contains("LessThan(c_nationkey,5)"), p)
@@ -137,7 +138,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("zorder_cluster: interleave is a static expression inside codegen; read pruned to 2 cols") {
-    val df = graft.query.Analytics2.zorderCluster(spark, sf)
+    val df = graft.query.Warehouse.zorderCluster(spark, sf)
     val p = plan(df)
     val readSchema = p.linesIterator.find(_.trim.startsWith("ReadSchema")).get
     assert(readSchema.contains("user_id") && readSchema.contains("value"), readSchema)
@@ -151,7 +152,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("anomaly_mad: per-type stats broadcast back — the fact scan never shuffles") {
-    val p = plan(graft.query.Analytics2.anomalyMad(spark, sf))
+    val p = plan(graft.query.stats.Anomaly.anomalyMad(spark, sf))
     assert(p.contains("BroadcastHashJoin"), p)
     // no Exchange hashpartitioning over event_id/the raw events side for
     // the JOIN (the only exchanges feed the 5-row aggregates + dump sort)
@@ -159,7 +160,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("graph_triangles: closure is broadcast adjacency intersection — no wedge-stream shuffle") {
-    val df = graft.query.Analytics.graphTriangles(spark, sf)
+    val df = graft.query.Graph.graphTriangles(spark, sf)
     df.collect()
     val executed = df.queryExecution.executedPlan.toString
     assert(executed.contains("intersect_count_sorted"), executed.take(3000))
@@ -167,13 +168,13 @@ class PlanSpec extends SparkSpec {
   }
 
   test("heavy_hitters: single aggregation over the scan + 1-row total broadcast") {
-    val p = plan(graft.query.Curation.heavyHitters(spark, sf))
+    val p = plan(graft.query.stats.Quality.heavyHitters(spark, sf))
     assert(p.contains("partial_count"), p)
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"), p)
   }
 
   test("ts_interval_overlap: bucketed equi-join, never a nested-loop theta join") {
-    val p = plan(graft.query.Analytics2.tsIntervalOverlap(spark, sf))
+    val p = plan(graft.query.stats.TimeSeries.tsIntervalOverlap(spark, sf))
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
     assert(!p.contains("CartesianProduct"), p)
   }
@@ -288,14 +289,14 @@ class PlanSpec extends SparkSpec {
     }
     // build-once: a second resolution is the SAME cached DataFrame, not
     // a rebuilt one (fingerprint-keyed computeIfAbsent)
-    val a = graft.query.TextAnalysis.tokenTf(spark, sf)
-    val b = graft.query.TextAnalysis.tokenTf(spark, sf)
+    val a = graft.query.TokenHash.tokenTf(spark, sf)
+    val b = graft.query.TokenHash.tokenTf(spark, sf)
     assert(a eq b, "tokenTf rebuilt the index for an unchanged corpus")
   }
 
   test("pareto_frontier: only broadcast joins — the exact pass never " +
     "shuffles or nested-loops the full metric table") {
-    val p = graft.query.Analytics3.paretoFrontier(spark, sf)
+    val p = graft.query.ml.Preference.paretoFrontier(spark, sf)
       .queryExecution.sparkPlan.toString
     // the one tolerated nested loop is the survivor×survivor dominance
     // check (both sides are the provably-small candidate set); the
@@ -308,7 +309,7 @@ class PlanSpec extends SparkSpec {
 
   test("profile_table_stats: ONE scan of lineitem (multi-distinct expand, " +
     "not a per-column rescan)") {
-    val p = graft.query.Analytics3.profileTableStats(spark, sf)
+    val p = graft.query.stats.Quality.profileTableStats(spark, sf)
       .queryExecution.sparkPlan.toString
     val nScans = p.linesIterator.count(l =>
       l.contains("FileScan parquet") && l.contains("lineitem"))
@@ -317,7 +318,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("ann_l2_topk: TakeOrdered top-k; float_dot inside codegen") {
-    val df = graft.query.Analytics3.annL2TopK(spark, sf)
+    val df = graft.query.Similarity.annL2TopK(spark, sf)
     val executed = df.queryExecution.executedPlan.toString
     assert(executed.contains("TakeOrderedAndProject"), executed)
     // `*(1) Project [... float_dot(...)]`: the three dot products sit
@@ -328,11 +329,11 @@ class PlanSpec extends SparkSpec {
 
   test("sql queries (round 12): dims broadcast, part filter pushed below " +
     "the cost aggregation") {
-    val profit = graft.query.Warehouse2.sqlProductTypeProfit(spark, sf)
+    val profit = graft.query.Warehouse.sqlProductTypeProfit(spark, sf)
       .queryExecution.sparkPlan.toString
     assert(profit.contains("BroadcastHashJoin"), profit)
     assert(!profit.contains("CartesianProduct"), profit)
-    val mincost = graft.query.Warehouse2.sqlMinCostSupplier(spark, sf)
+    val mincost = graft.query.Warehouse.sqlMinCostSupplier(spark, sf)
       .queryExecution.sparkPlan.toString
     // the semi-join prune must sit BELOW the (pk, sk) aggregate: the
     // aggregate's child subtree contains the broadcast semi join
@@ -351,7 +352,7 @@ class PlanSpec extends SparkSpec {
     // every round's groupBy(v) must consume that layout directly — a
     // per-round ENSURE_REQUIREMENTS exchange on v is the regression this
     // pins out (it re-shuffles |E| contribution rows × iters)
-    val p = graft.query.Analytics.graphPagerank(spark, sf)
+    val p = graft.query.Graph.graphPagerank(spark, sf)
       .queryExecution.sparkPlan.toString
     val badExchange = p.linesIterator.exists(l =>
       l.contains("Exchange hashpartitioning(v#") &&
@@ -362,7 +363,7 @@ class PlanSpec extends SparkSpec {
   test("sql_basket_affinity: pair generation is an in-row combination " +
     "explode of the basket arrays — no self-join, no cartesian, " +
     "margins broadcast") {
-    val p = graft.query.Warehouse2.sqlBasketAffinity(spark, sf)
+    val p = graft.query.Warehouse.sqlBasketAffinity(spark, sf)
       .queryExecution.sparkPlan.toString
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("SortMergeJoin"), p)
@@ -393,14 +394,14 @@ class PlanSpec extends SparkSpec {
     // below the union-find gate the returned frame aggregates a local
     // relation; the edge build ran once inside the operator (one
     // aggregation, localCheckpoint'ed) and must not re-enter the plan
-    val p = graft.query.Analytics3.graphConnectedComponents(spark, sf)
+    val p = graft.query.Graph.graphConnectedComponents(spark, sf)
       .queryExecution.sparkPlan.toString
     assert(!p.contains("FileScan parquet"), p)
     assert(!p.contains("SortMergeJoin"), p)
   }
 
   test("graph_common_neighbors: equi-joins only, TakeOrdered top-k") {
-    val p = graft.query.Analytics4.graphCommonNeighbors(spark, sf)
+    val p = graft.query.Graph.graphCommonNeighbors(spark, sf)
       .queryExecution.sparkPlan.toString
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"), p)
@@ -408,13 +409,13 @@ class PlanSpec extends SparkSpec {
   }
 
   test("agg_linreg_by_group: all five moments combine map-side") {
-    val p = plan(graft.query.Analytics4.aggLinregByGroup(spark, sf))
+    val p = plan(graft.query.Relational.aggLinregByGroup(spark, sf))
     assert(p.contains("partial_sum"), p)
     assert(p.contains("partial_count"), p)
   }
 
   test("emb_matryoshka_recall: query cohort broadcasts; dots codegen'd") {
-    val df = graft.query.Analytics4.embMatryoshkaRecall(spark, sf)
+    val df = graft.query.Similarity.embMatryoshkaRecall(spark, sf)
     val p = plan(df)
     // the bounded query side rides a broadcast against one corpus scan
     assert(p.contains("BroadcastNestedLoopJoin"), p)
@@ -424,7 +425,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("ts_holt_forecast: in-row fold — no window operator, one shuffle") {
-    val p = graft.query.Analytics4.tsHoltForecast(spark, sf)
+    val p = graft.query.stats.TimeSeries.tsHoltForecast(spark, sf)
       .queryExecution.sparkPlan.toString
     assert(!p.contains("Window"), p)
     assert(!p.contains("CartesianProduct"), p)
@@ -435,7 +436,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("stats_zone_map: zone stats are partial min/max aggregates") {
-    val p = plan(graft.query.Warehouse2.statsZoneMap(spark, sf))
+    val p = plan(graft.query.Warehouse.statsZoneMap(spark, sf))
     assert(p.contains("partial_min") || p.contains("partial_max"), p)
     assert(!p.contains("CartesianProduct"), p)
   }
@@ -447,7 +448,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("join_dpp_pruned: dynamic pruning probe reaches the partitioned scan") {
-    val df = graft.query.Relational2.joinDppPruned(spark, sf)
+    val df = graft.query.Relational.joinDppPruned(spark, sf)
     val p = plan(df)
     assert(p.toLowerCase.contains("dynamicpruning"),
       s"no DynamicPruningExpression in the fact scan:\n$p")
@@ -495,31 +496,31 @@ class PlanSpec extends SparkSpec {
   // ---- round-14 shapes ----------------------------------------------------
 
   test("sample_weighted: TakeOrdered top-k, no global sort") {
-    val p = plan(graft.query.Analytics5.sampleWeighted(spark, sf))
+    val p = plan(graft.query.stats.Sampling.sampleWeighted(spark, sf))
     assert(p.contains("TakeOrderedAndProject"), p)
   }
 
   test("dq_join_profile: both dim key sets broadcast — no fact shuffle") {
-    val p = plan(graft.query.Analytics5.dqJoinProfile(spark, sf))
+    val p = plan(graft.query.stats.Quality.dqJoinProfile(spark, sf))
     assert(p.contains("BroadcastHashJoin"), p)
     assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"), p)
   }
 
   test("attribution_linear: banded user-key equi-join, never a cartesian") {
-    val p = graft.query.Analytics5.attributionLinear(spark, sf)
+    val p = graft.query.Warehouse.attributionLinear(spark, sf)
       .queryExecution.sparkPlan.toString
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"), p)
   }
 
   test("sql_inactive_customers: broadcast anti-join on the pre-deduped key set") {
-    val p = plan(graft.query.Analytics5.sqlInactiveCustomers(spark, sf))
+    val p = plan(graft.query.Warehouse.sqlInactiveCustomers(spark, sf))
     assert(p.linesIterator.exists(l =>
       l.contains("BroadcastHashJoin") && l.contains("LeftAnti")), p)
   }
 
   test("sql_priority_returns: left-semi join with the fact filtered beneath it") {
-    val df = graft.query.Analytics5.sqlPriorityReturns(spark, sf)
+    val df = graft.query.Warehouse.sqlPriorityReturns(spark, sf)
     val p = plan(df)
     assert(p.contains("LeftSemi"), p)
     // the returnflag filter reaches the lineitem scan
@@ -528,15 +529,15 @@ class PlanSpec extends SparkSpec {
 
   test("graph_kcore: survivor-set semi-joins broadcast; edge list never re-shuffles") {
     graft.schema.IndexCache.clear()
-    val p = graft.query.Analytics5.graphKcore(spark, sf)
+    val p = graft.query.Graph.graphKcore(spark, sf)
       .queryExecution.executedPlan.toString
     assert(!p.contains("SortMergeJoin"), p)
     graft.schema.IndexCache.clear()
   }
 
   test("dedup_time_window + anomaly_rolling_z: ONE exchange each (the window shuffle)") {
-    for (df <- Seq(graft.query.Analytics5.dedupTimeWindow(spark, sf),
-        graft.query.Analytics5.anomalyRollingZ(spark, sf))) {
+    for (df <- Seq(graft.query.Dedup.dedupTimeWindow(spark, sf),
+        graft.query.stats.Anomaly.anomalyRollingZ(spark, sf))) {
       val p = df.queryExecution.sparkPlan.toString
       // the user-key window partitioning plus the final presentation
       // sort are the only exchanges; no join, no extra aggregation pass
@@ -555,7 +556,7 @@ class PlanSpec extends SparkSpec {
     // shape is proven by the alternation-equivalence spec + the round
     // cost measured in round 15's HITS profile; here we pin what the
     // final plan may NOT contain.
-    val p = plan(graft.query.Analytics5.graphHits(spark, sf))
+    val p = plan(graft.query.Graph.graphHits(spark, sf))
     assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"), p)
     assert(p.contains("TakeOrderedAndProject"), p)
     assert(p.contains("BroadcastExchange"), p)
@@ -564,8 +565,8 @@ class PlanSpec extends SparkSpec {
 
   test("agg_ttest_welch + agg_skew_kurtosis: single partial-aggregate pass, " +
       "no joins, no windows") {
-    for (df <- Seq(graft.query.Analytics5.aggTtestWelch(spark, sf),
-        graft.query.Analytics5.aggSkewKurtosis(spark, sf))) {
+    for (df <- Seq(graft.query.Relational.aggTtestWelch(spark, sf),
+        graft.query.Relational.aggSkewKurtosis(spark, sf))) {
       val p = df.queryExecution.sparkPlan.toString
       assert(!p.contains("Join"), p)
       assert(!p.contains("Window"), p)
@@ -580,7 +581,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("anomaly_alert_debounce: one user-key exchange feeds the sorted groups") {
-    val p = graft.query.Analytics5.anomalyAlertDebounce(spark, sf)
+    val p = graft.query.stats.Anomaly.anomalyAlertDebounce(spark, sf)
       .queryExecution.sparkPlan.toString
     assert(!p.contains("Join"), p)
     // flatMapSortedGroups = exchange on the group key + in-partition sort
@@ -589,16 +590,16 @@ class PlanSpec extends SparkSpec {
 
   test("ts_stl_decompose + ts_periodogram: the only data-sized work is the " +
       "hourly rollup; seasonal/period joins broadcast") {
-    val pStl = plan(graft.query.Analytics5.tsStlDecompose(spark, sf))
+    val pStl = plan(graft.query.stats.TimeSeries.tsStlDecompose(spark, sf))
     assert(!pStl.contains("SortMergeJoin") && !pStl.contains("CartesianProduct"), pStl)
-    val pPg = graft.query.Analytics5.tsPeriodogram(spark, sf)
+    val pPg = graft.query.stats.TimeSeries.tsPeriodogram(spark, sf)
       .queryExecution.sparkPlan.toString
     assert(!pPg.contains("Join"), pPg)
   }
 
   test("sql_excess_stock: part prune is a broadcast semi-join BELOW the " +
       "aggregate; suppliers filtered by semi-join (survivors only, no fanout)") {
-    val p = graft.query.Warehouse2.sqlExcessStock(spark, sf)
+    val p = graft.query.Warehouse.sqlExcessStock(spark, sf)
       .queryExecution.sparkPlan.toString
     val lines = p.linesIterator.toVector
     // (1) lineitem pruned by bolt part keys BEFORE the (supp, part) agg
@@ -613,5 +614,19 @@ class PlanSpec extends SparkSpec {
       l.contains("LeftSemi") && l.contains("s_suppkey"))
     assert(supSemi, s"supplier semi-join missing\n$p")
     assert(!p.contains("CartesianProduct"), p)
+  }
+
+  test("eval_cliffs_delta: one aggregate over the pooled CDF — the same " +
+      "exchanges as eval_mann_whitney_u, no second totals branch") {
+    def exchanges(df: DataFrame): (Int, Int) = {
+      df.collect()
+      val p = df.queryExecution.executedPlan.toString
+      ("""\bExchange\b""".r.findAllIn(p).size,
+        "BroadcastExchange".r.findAllIn(p).size)
+    }
+    val mw = exchanges(Significance.evalMannWhitneyU(spark, sf))
+    val cd = exchanges(Significance.evalCliffsDelta(spark, sf))
+    assert(cd == mw, s"(shuffle, broadcast) exchanges: cliffs $cd, " +
+      s"mann-whitney $mw")
   }
 }

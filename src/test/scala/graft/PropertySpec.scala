@@ -33,10 +33,10 @@ class PropertySpec extends SparkSpec {
       .as[(Long, Seq[Long])].collect().toMap
     // independent path: shingle strings via HOF, salted-free double hash
     val gramDf = df.select($"doc_id",
-      explode(graft.query.Dedup.shinglesFromTokens($"toks", 3)).as("g"))
+      explode(graft.query.TokenHash.shinglesFromTokens($"toks", 3)).as("g"))
       .select($"doc_id",
-        graft.query.Dedup.hash60($"g").as("h1"),
-        graft.query.Dedup.hash60lo($"g").as("h2"))
+        graft.query.TokenHash.hash60($"g").as("h1"),
+        graft.query.TokenHash.hash60lo($"g").as("h2"))
     val mask = (1L << 60) - 1
     val viaBuiltins = gramDf.groupBy($"doc_id")
       .agg(array((0 until 8).map(i =>

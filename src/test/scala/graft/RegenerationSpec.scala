@@ -46,12 +46,12 @@ class RegenerationSpec extends SparkSpec {
     val dir = tmp("regen-docs")
     val uri = s"file:$dir"
     writeDocs(dir, 40, "first")
-    val before = rows(graft.query.TextAnalysis.tokenTf(spark, uri))
+    val before = rows(graft.query.TokenHash.tokenTf(spark, uri))
     writeDocs(dir, 55, "second generation")
-    val after = rows(graft.query.TextAnalysis.tokenTf(spark, uri))
+    val after = rows(graft.query.TokenHash.tokenTf(spark, uri))
     val cold = tmp("regen-docs-cold")
     writeDocs(cold, 55, "second generation")
-    val expected = rows(graft.query.TextAnalysis.tokenTf(spark, cold))
+    val expected = rows(graft.query.TokenHash.tokenTf(spark, cold))
     assert(before != expected, "the two generations must differ")
     assert(after == expected,
       "stale token index served after regeneration under a file: path")
@@ -85,12 +85,12 @@ class RegenerationSpec extends SparkSpec {
       "part_pruning equals a cold run over the new events") {
     val dir = tmp("regen-part")
     writeEvents(dir, 120, 1)
-    val before = rows(graft.query.Relational2.partPruning(spark, dir))
+    val before = rows(graft.query.Warehouse.partPruning(spark, dir))
     writeEvents(dir, 175, 2)
-    val after = rows(graft.query.Relational2.partPruning(spark, dir))
+    val after = rows(graft.query.Warehouse.partPruning(spark, dir))
     val cold = tmp("regen-part-cold")
     writeEvents(cold, 175, 2)
-    val expected = rows(graft.query.Relational2.partPruning(spark, cold))
+    val expected = rows(graft.query.Warehouse.partPruning(spark, cold))
     assert(before != expected, "the two generations must differ")
     assert(after == expected, "stale partitioned layout served")
   }

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
-import graft.query.Analytics5
+import graft.query.Graph
 
 /** Registry-integrity pins (driver round 12): the `sample_weighted`
   * shadowing incident — a duplicate map key silently replacing a whole
@@ -72,6 +72,55 @@ class RegistrySpec extends SparkSpec {
       s"$sites QueryDef sites for ${SparkEntry.queries.size} queries")
   }
 
+  test("one module per query family: no src/main file is named after a " +
+      "round, and each *Defs file calls only its family's query module, " +
+      "the shared kernels and its listed extras") {
+    val root = Paths.get("src/main/scala/graft")
+    assert(Files.isDirectory(root), s"run from the repo root: $root missing")
+    val sources = Files.walk(root).iterator().asScala.toSeq
+      .filter(_.toString.endsWith(".scala"))
+    val rel = (p: java.nio.file.Path) =>
+      root.relativize(p).toString.replace('\\', '/')
+    // a trailing number names a round; a scale suffix (StreamX10) does not
+    val rounded = sources.map(rel)
+      .filter(f => """.*[^X\d]\d+\.scala""".r.matches(f))
+    assert(rounded.isEmpty, s"round-numbered sources: ${rounded.sorted}")
+    def objectsIn(dir: String): Set[String] = sources.map(rel)
+      .filter(_.startsWith(dir))
+      .map(_.split('/').last.stripSuffix(".scala")).toSet
+    val queryObjects = objectsIn("query/") ++
+      Set("StreamQueries", "Trainer", "ModelStore")
+    val kernels = Set("TwoLevel", "TokenHash", "GraphIndex", "RankMoments",
+      "Layouts")
+    val family: Map[String, Set[String]] = Map(
+      "RelationalDefs" -> Set("Relational"),
+      "WarehouseDefs" -> Set("Warehouse"),
+      "StatsDefs" -> objectsIn("query/stats/"),
+      "MlDefs" -> (objectsIn("query/ml/") ++
+        Set("Endpoints", "Trainer", "ModelStore")),
+      "GraphDefs" -> Set("Graph"),
+      "TextDefs" -> Set("TextAnalysis"),
+      "AnnDefs" -> Set("Similarity"),
+      "DedupDefs" -> Set("Dedup"),
+      "MultimodalDefs" -> Set("Multimodal"),
+      "StreamDefs" -> Set("StreamQueries"))
+    val defsFiles = sources.filter(p => rel(p).startsWith("registry/") &&
+      rel(p).endsWith("Defs.scala"))
+    assert(defsFiles.map(_.getFileName.toString.stripSuffix(".scala"))
+      .toSet == family.keySet)
+    val ident = """\b([A-Z]\w*)\b""".r
+    val bad = for {
+      p <- defsFiles
+      defs = p.getFileName.toString.stripSuffix(".scala")
+      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
+      t = line.trim
+      if !(t.startsWith("//") || t.startsWith("*") || t.startsWith("/*"))
+      o <- ident.findAllMatchIn(line).map(_.group(1)).toSeq.distinct
+      if queryObjects(o) && !family(defs)(o) && !kernels(o)
+    } yield s"registry/$defs.scala:${i + 1}: $o is outside the family: $t"
+    assert(bad.isEmpty, bad.mkString("\n", "\n", ""))
+  }
+
   test("every oracle is non-empty SQL and every query key is non-empty") {
     SparkEntry.oracleSql.foreach { case (k, sql) =>
       assert(k.nonEmpty && sql.trim.nonEmpty, s"empty oracle for $k")
@@ -86,23 +135,23 @@ class RegistrySpec extends SparkSpec {
     val small = Seq((1L, 5L), (1L, 9L), (1L, 2L))      // degree-3 vertex 1
     val edges = (hub ++ small).toDF("u", "v")
     val d = 64
-    val adj = Analytics5.cappedAdjacency(edges, d).collect()
+    val adj = Graph.cappedAdjacency(edges, d).collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(adj(0L).length == d, s"hub kept ${adj(0L).length}, want $d")
     assert(adj(1L) == Seq(2L, 5L, 9L), "small vertex must keep all, sorted")
     assert(adj(0L) == adj(0L).sorted, "hub list must be sorted")
     // deterministic under a different physical layout
-    val adj2 = Analytics5.cappedAdjacency(edges.repartition(7, col("v")), d)
+    val adj2 = Graph.cappedAdjacency(edges.repartition(7, col("v")), d)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(adj2 == adj, "capped adjacency must not depend on partitioning")
   }
 
   test("graph_random_walks rides the capped index: every hop lands on a " +
       "kept neighbor, paths have steps+1 vertices") {
-    val adj = Analytics5.cappedAdjacency(
-      graft.query.Analytics.copurchaseEdgesSym(spark, sf), 64)
+    val adj = Graph.cappedAdjacency(
+      graft.query.GraphIndex.copurchaseEdgesSym(spark, sf), 64)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
-    val rows = Analytics5.graphRandomWalks(spark, sf).collect()
+    val rows = Graph.graphRandomWalks(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val path = r.getString(1).split("->").map(_.toLong)

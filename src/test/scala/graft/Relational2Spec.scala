@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
-import graft.query.Relational2
+import graft.query.{Relational, Warehouse}
+import graft.query.stats.{Sampling, TimeSeries}
 
 /** Second-wave relational operators: semantic invariants plus the
   * plan-shape rules that matter at 100 TB (broadcasts, TakeOrdered
@@ -15,7 +16,7 @@ class Relational2Spec extends SparkSpec {
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
 
   test("agg_cube: 4 grouping sets; gid partitions row groups consistently") {
-    val rows = Relational2.aggCube(spark, sf).collect()
+    val rows = Relational.aggCube(spark, sf).collect()
     val byGid = rows.groupBy(_.getInt(2))
     assert(byGid.keySet == Set(0, 1, 2, 3))
     // grand total appears exactly once, with both keys null
@@ -29,7 +30,7 @@ class Relational2Spec extends SparkSpec {
   }
 
   test("agg_min_max_by: argmax keyed by unique event_id matches window argmax") {
-    val got = Relational2.aggMinMaxBy(spark, sf)
+    val got = Relational.aggMinMaxBy(spark, sf)
       .select("event_type", "latest_user").as[(String, Long)].collect().toMap
     val expect = graft.schema.Schemas.events(spark, sf)
       .orderBy($"event_id".desc).select("event_type", "user_id")
@@ -39,7 +40,7 @@ class Relational2Spec extends SparkSpec {
   }
 
   test("window_ranking: rank/ntile invariants per partition") {
-    val rows = Relational2.windowRanking(spark, sf).collect()
+    val rows = Relational.windowRanking(spark, sf).collect()
     val byPrio = rows.groupBy(_.getString(1))
     byPrio.foreach { case (_, part) =>
       val rnks = part.map(_.getInt(2)).sorted
@@ -50,7 +51,7 @@ class Relational2Spec extends SparkSpec {
   }
 
   test("join_null_safe: NULL <=> NULL matches (the nulled-out region joins)") {
-    val rows = Relational2.joinNullSafe(spark, sf).collect()
+    val rows = Relational.joinNullSafe(spark, sf).collect()
     val nullRow = rows.filter(_.isNullAt(0))
     assert(nullRow.length == 1 && !nullRow.head.isNullAt(1),
       "null key must match the null-keyed region row, not drop")
@@ -58,18 +59,18 @@ class Relational2Spec extends SparkSpec {
   }
 
   test("join_null_safe plan: bounded region side broadcasts") {
-    assert(plan(Relational2.joinNullSafe(spark, sf)).contains("BroadcastHashJoin"))
+    assert(plan(Relational.joinNullSafe(spark, sf)).contains("BroadcastHashJoin"))
   }
 
   test("o3_limit_offset plan: TakeOrdered pagination, not a global sort") {
-    val p = plan(Relational2.o3LimitOffset(spark, sf))
+    val p = plan(Relational.o3LimitOffset(spark, sf))
     assert(p.contains("TakeOrderedAndProject"), p)
   }
 
   test("sample_hash_det: deterministic, ~10%, and consistent across reruns") {
-    val a = Relational2.sampleHashDet(spark, sf).select("o_orderkey")
+    val a = Sampling.sampleHashDet(spark, sf).select("o_orderkey")
       .as[Long].collect().toSeq
-    val b = Relational2.sampleHashDet(spark, sf).select("o_orderkey")
+    val b = Sampling.sampleHashDet(spark, sf).select("o_orderkey")
       .as[Long].collect().toSeq
     assert(a == b)
     val total = graft.schema.Schemas.table(spark, sf, "orders").count()
@@ -77,7 +78,7 @@ class Relational2Spec extends SparkSpec {
   }
 
   test("unpivot: one (metric,value) row per aggregate column per group") {
-    val rows = Relational2.unpivotMetrics(spark, sf).collect()
+    val rows = Relational.unpivotMetrics(spark, sf).collect()
     val metrics = rows.map(_.getString(1)).distinct.sorted
     assert(metrics.toSeq == Seq("n_rows", "sum_disc", "sum_qty"))
     val groups = rows.map(_.getString(0)).distinct
@@ -85,13 +86,13 @@ class Relational2Spec extends SparkSpec {
   }
 
   test("agg_cube plan: one Expand + partial aggregation before the exchange") {
-    val p = plan(Relational2.aggCube(spark, sf))
+    val p = plan(Relational.aggCube(spark, sf))
     assert(p.contains("Expand"), p)
     assert(p.contains("partial_"), p) // map-side combine across grouping sets
   }
 
   test("ts_gapfill plan: grid side broadcasts; fact side aggregates pre-join") {
-    val df = Relational2.tsGapfill(spark, sf)
+    val df = TimeSeries.tsGapfill(spark, sf)
     df.collect() // let AQE finalize
     val executed = df.queryExecution.executedPlan.toString
     assert(executed.contains("BroadcastHashJoin") ||
@@ -99,7 +100,7 @@ class Relational2Spec extends SparkSpec {
   }
 
   test("part_pruning plan: partition predicate prunes to one directory") {
-    val df = Relational2.partPruning(spark, sf)
+    val df = Warehouse.partPruning(spark, sf)
     val p = plan(df)
     assert(p.contains("PartitionFilters") &&
       p.contains("event_type"), p.linesIterator.filter(_.contains("Partition"))
@@ -110,7 +111,7 @@ class Relational2Spec extends SparkSpec {
   }
 
   test("ts_gapfill: dense grid — every (hour, type) cell present, gaps zero-filled") {
-    val rows = Relational2.tsGapfill(spark, sf).collect()
+    val rows = TimeSeries.tsGapfill(spark, sf).collect()
     val hours = rows.map(_.getTimestamp(0)).distinct
     val types = rows.map(_.getString(1)).distinct
     assert(rows.length == hours.length * types.length)
@@ -120,7 +121,7 @@ class Relational2Spec extends SparkSpec {
   }
 
   test("agg_approx_sketch: sketches land within tolerance of exact answers") {
-    val rows = Relational2.aggApproxSketch(spark, sf).collect()
+    val rows = Relational.aggApproxSketch(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       // within-bound booleans (the oracle compares these against TRUE)
@@ -131,7 +132,7 @@ class Relational2Spec extends SparkSpec {
   }
 
   test("subq_correlated: scalar subquery equals groupBy-max; EXISTS equals semi-join") {
-    val got = Relational2.subqCorrelated(spark, sf)
+    val got = Relational.subqCorrelated(spark, sf)
     // Catalyst must rewrite to joins — no per-row execution operators
     val p = plan(got)
     assert(!p.toLowerCase.contains("subqueryexec") && !p.contains("ScalarSubquery"),

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
-import graft.query.{Dedup, Multimodal, Relational3, Similarity}
+import graft.query.{Dedup, Multimodal, Relational, Similarity, Warehouse}
+import graft.query.stats.Sampling
 
 class Relational3Spec extends SparkSpec {
   import spark.implicits._
@@ -12,7 +13,7 @@ class Relational3Spec extends SparkSpec {
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
 
   test("join_bucketed: co-located SMJ — no exchange and no sort on either join input") {
-    val df = Relational3.joinBucketed(spark, sf)
+    val df = Relational.joinBucketed(spark, sf)
     val p = plan(df)
     assert(p.contains("SortMergeJoin"), p)
     // exchanges ABOVE the join (groupBy, final sort) are expected; the
@@ -37,7 +38,7 @@ class Relational3Spec extends SparkSpec {
   }
 
   test("merge_upsert: action counts match key arithmetic; source wins on update") {
-    val out = Relational3.mergeUpsert(spark, sf)
+    val out = Warehouse.mergeUpsert(spark, sf)
       .groupBy("merge_action").count().as[(String, Long)].collect().toMap
     val keys = graft.schema.Schemas.table(spark, sf, "orders")
       .select($"o_orderkey").as[Long].collect()
@@ -48,14 +49,14 @@ class Relational3Spec extends SparkSpec {
     assert(out.getOrElse("updated", 0L) == updated)
     assert(out.getOrElse("kept", 0L) == kept)
     // every updated/inserted row carries the source status
-    val statuses = Relational3.mergeUpsert(spark, sf)
+    val statuses = Warehouse.mergeUpsert(spark, sf)
       .filter($"merge_action" =!= "kept")
       .select($"o_orderstatus").distinct().as[String].collect().toSeq
     assert(statuses == Seq("U"))
   }
 
   test("window_distribution: pr/cd bounded, tile in 1..3, full-frame values constant per partition") {
-    val rows = Relational3.windowDistribution(spark, sf)
+    val rows = Relational.windowDistribution(spark, sf)
     val bad = rows.filter(
       $"pr" < 0 || $"pr" > 1 || $"cd" <= 0 || $"cd" > 1 ||
         $"tile" < 1 || $"tile" > 3).count()
@@ -70,7 +71,7 @@ class Relational3Spec extends SparkSpec {
     val events = graft.schema.Schemas.events(spark, sf)
     val base = events.groupBy("event_type").count()
       .as[(String, Long)].collect().toMap
-    val got = Relational3.sampleStratified(spark, sf)
+    val got = Sampling.sampleStratified(spark, sf)
       .groupBy("event_type").count().as[(String, Long)].collect().toMap
     assert(got("purchase") == base("purchase")) // rate 1
     assert(got("click") < got.getOrElse("view", Long.MaxValue))
@@ -79,7 +80,7 @@ class Relational3Spec extends SparkSpec {
   }
 
   test("dedup_cluster_stats: histogram mass equals labeled doc count") {
-    val stats = Relational3.dedupClusterStats(spark, sf)
+    val stats = Dedup.dedupClusterStats(spark, sf)
       .as[(Long, Long)].collect()
     val labeled = Dedup.dedupGroups(spark, sf).count()
     assert(stats.map { case (sz, n) => sz * n }.sum == labeled)
@@ -90,7 +91,7 @@ class Relational3Spec extends SparkSpec {
     val p = graft.schema.Schemas.table(spark, sf, "part")
       .select($"p_partkey", $"p_brand", $"p_size").collect()
       .map(r => r.getLong(0) -> ((r.getString(1), r.getInt(2)))).toMap
-    val out = Relational3.fuzzyNameMatch(spark, sf).collect()
+    val out = Relational.fuzzyNameMatch(spark, sf).collect()
     assert(out.nonEmpty)
     out.foreach { r =>
       val (a, b, d) = (r.getLong(0), r.getLong(1), r.getInt(2))
@@ -100,7 +101,7 @@ class Relational3Spec extends SparkSpec {
   }
 
   test("scd2_versions: contiguous versions, chaining effectivity, one current per user") {
-    val rows = Relational3.scd2Versions(spark, sf).collect()
+    val rows = Warehouse.scd2Versions(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.groupBy(_.getLong(0)).foreach { case (uid, vs) =>
       val sorted = vs.sortBy(_.getInt(1))
@@ -123,7 +124,7 @@ class Relational3Spec extends SparkSpec {
       .filter($"user_id" < 20)
       .select($"event_id", $"event_type").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
-    val looked = Relational3.scd2AsofLookup(spark, sf).collect()
+    val looked = Warehouse.scd2AsofLookup(spark, sf).collect()
     assert(looked.length == ev.size, "an event missed or matched >1 version")
     looked.foreach { r =>
       // the version effective at an event's timestamp carries the event's

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.query.{Dedup, Similarity, TextAnalysis}
+import graft.query.{Similarity, TextAnalysis, TokenHash}
 import graft.schema.Schemas
 
 /** Round-11 operators: BPE pair induction and RRF hybrid retrieval. */
@@ -11,7 +11,7 @@ class Round11Spec extends SparkSpec {
     val out = TextAnalysis.textBpePairs(spark, sf, k = 100000).collect()
     // hand fold over the same tokenization
     val toks = Schemas.table(spark, sf, "documents")
-      .select(explode(Dedup.tokens(col("text"))).as("tok"))
+      .select(explode(TokenHash.tokens(col("text"))).as("tok"))
       .collect().map(_.getString(0))
     val expected = toks.filter(_.length >= 2)
       .flatMap(t => t.sliding(2))
@@ -36,7 +36,7 @@ class Round11Spec extends SparkSpec {
   }
 
   test("drift_ks_value: exact integer KS equals a hand fold; bounds hold") {
-    val r = graft.query.Analytics.driftKsValue(spark, sf).head()
+    val r = graft.query.stats.Drift.driftKsValue(spark, sf).head()
     val (na, nb, ksNum, ksD) =
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))
     // hand fold: global sort of (value, cohort) pairs
@@ -59,7 +59,7 @@ class Round11Spec extends SparkSpec {
     assert(ksNum > 0L)
     // the bucketed execution equals the definition at a degenerate
     // bucket count too (every value in one bucket)
-    val one = graft.query.Analytics.driftKsValue(spark, sf, buckets = 1).head()
+    val one = graft.query.stats.Drift.driftKsValue(spark, sf, buckets = 1).head()
     assert(one.getLong(2) == best && one.getLong(0) == na)
   }
 
@@ -71,14 +71,14 @@ class Round11Spec extends SparkSpec {
     Schemas.events(spark, sf).filter(col("event_id") % 2 === 0)
       .coalesce(1).write.mode("overwrite")
       .parquet(dir.resolve("events.parquet").toString)
-    assert(graft.query.Analytics.driftKsValue(spark, dir.toString)
+    assert(graft.query.stats.Drift.driftKsValue(spark, dir.toString)
       .collect().isEmpty)
-    assert(graft.query.Analytics.driftPsiValue(spark, dir.toString)
+    assert(graft.query.stats.Drift.driftPsiValue(spark, dir.toString)
       .collect().isEmpty)
   }
 
   test("drift_psi_value: per-bin terms match a hand fold; counts conserve") {
-    val out = graft.query.Analytics.driftPsiValue(spark, sf).collect()
+    val out = graft.query.stats.Drift.driftPsiValue(spark, sf).collect()
     val rows = Schemas.events(spark, sf)
       .select(col("value"), (col("event_id") % 2 === 0).as("isA"))
       .collect().map(x => (x.getDouble(0), x.getBoolean(1)))

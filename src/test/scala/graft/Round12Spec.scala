@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.query.{Analytics3, TextAnalysis, Warehouse2}
+import graft.query.{Graph, Similarity, TextAnalysis, Warehouse}
+import graft.query.ml.{Calibration, Preference, Scoring}
+import graft.query.stats.{Anomaly, Drift, Quality, TimeSeries}
 import graft.schema.Schemas
 
 /** Round-12 operators: connected components (two paths), skyline,
@@ -10,8 +12,8 @@ import graft.schema.Schemas
 class Round12Spec extends SparkSpec {
 
   test("graph_connected_components: union-find and distributed paths agree") {
-    val uf = Analytics3.graphConnectedComponents(spark, sf).collect()
-    val dist = Analytics3
+    val uf = Graph.graphConnectedComponents(spark, sf).collect()
+    val dist = Graph
       .graphConnectedComponents(spark, sf, driverUnionFindMax = 0L)
       .collect()
     assert(uf.length == dist.length, s"${uf.length} vs ${dist.length}")
@@ -34,7 +36,7 @@ class Round12Spec extends SparkSpec {
       .distinct()
     val nV = li.select(col("u")).unionAll(li.select(col("v")))
       .distinct().count()
-    val out = Analytics3.graphConnectedComponents(spark, sf).collect()
+    val out = Graph.graphConnectedComponents(spark, sf).collect()
     assert(out.map(_.getLong(1)).sum == nV)
   }
 
@@ -49,7 +51,7 @@ class Round12Spec extends SparkSpec {
         q2 >= q && p2 <= p && (q2 > q || p2 < p)
       }
     }.map(_._1).sorted
-    val got = Analytics3.paretoFrontier(spark, sf).collect()
+    val got = Preference.paretoFrontier(spark, sf).collect()
       .map(_.getLong(0)).sorted
     assert(got.toSeq == brute.toSeq)
     // skyline is an antichain: no member dominates another (implied by
@@ -63,15 +65,15 @@ class Round12Spec extends SparkSpec {
   }
 
   test("pareto_frontier: prefilter is bucket-count invariant") {
-    val a = Analytics3.paretoFrontier(spark, sf, nBuckets = 2)
+    val a = Preference.paretoFrontier(spark, sf, nBuckets = 2)
       .collect().map(_.getLong(0)).sorted.toSeq
-    val b = Analytics3.paretoFrontier(spark, sf, nBuckets = 512)
+    val b = Preference.paretoFrontier(spark, sf, nBuckets = 512)
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(a == b)
   }
 
   test("profile_table_stats: matches per-column recompute") {
-    val out = Analytics3.profileTableStats(spark, sf).collect()
+    val out = Quality.profileTableStats(spark, sf).collect()
       .map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4),
           r.getDouble(5))).toMap
@@ -86,7 +88,7 @@ class Round12Spec extends SparkSpec {
   }
 
   test("eval_calibration_bins: bins partition the corpus; scores in range") {
-    val out = Analytics3.evalCalibrationBins(spark, sf).collect()
+    val out = Calibration.evalCalibrationBins(spark, sf).collect()
     val total = Schemas.table(spark, sf, "embeddings").count()
     assert(out.map(_.getLong(1)).sum == total)
     out.foreach { r =>
@@ -118,12 +120,12 @@ class Round12Spec extends SparkSpec {
     }
     val expect = emb.toSeq.filter(_._1 != 0L)
       .map { case (id, v) => (d2(v), id) }.sorted.take(10).map(_._2)
-    val got = Analytics3.annL2TopK(spark, sf).collect().map(_.getLong(0))
+    val got = Similarity.annL2TopK(spark, sf).collect().map(_.getLong(0))
     assert(got.toSeq == expect)
   }
 
   test("snapshot_diff: statuses partition the union of snapshot keys") {
-    val out = Warehouse2.snapshotDiff(spark, sf).collect()
+    val out = Warehouse.snapshotDiff(spark, sf).collect()
     val byStatus = out.map(r => r.getString(0) -> r.getLong(1)).toMap
     val o = Schemas.table(spark, sf, "orders")
     val nA = o.filter(col("o_orderkey") % 7 =!= 0).count()
@@ -142,7 +144,7 @@ class Round12Spec extends SparkSpec {
   }
 
   test("layout_compaction_plan: bins are contiguous and capacity-quantized") {
-    val rows = Warehouse2.layoutCompactionPlan(spark, sf).collect()
+    val rows = Warehouse.layoutCompactionPlan(spark, sf).collect()
     // per month: target_file ids start at 0 and are contiguous
     rows.groupBy(_.getDate(0)).foreach { case (_, g) =>
       val ids = g.map(_.getInt(1)).sorted
@@ -157,7 +159,7 @@ class Round12Spec extends SparkSpec {
   }
 
   test("mv_incremental_merge: partial-merge equals direct rollup") {
-    val got = Warehouse2.mvIncrementalMerge(spark, sf).collect()
+    val got = Warehouse.mvIncrementalMerge(spark, sf).collect()
     val direct = Schemas.table(spark, sf, "lineitem")
       .groupBy(date_trunc("month", col("l_shipdate")).cast("date")
         .as("month"), col("l_returnflag").as("returnflag"))
@@ -168,7 +170,7 @@ class Round12Spec extends SparkSpec {
   }
 
   test("sql_min_cost_supplier: winner really is the per-part minimum") {
-    val out = Warehouse2.sqlMinCostSupplier(spark, sf).collect()
+    val out = Warehouse.sqlMinCostSupplier(spark, sf).collect()
     val cost = Schemas.table(spark, sf, "lineitem")
       .groupBy(col("l_partkey"), col("l_suppkey"))
       .agg(min(col("l_extendedprice") / col("l_quantity")).as("c"))
@@ -187,7 +189,7 @@ class Round12Spec extends SparkSpec {
   }
 
   test("sql_yearly_growth: rates recompute from the reported totals") {
-    val out = Warehouse2.sqlYearlyGrowth(spark, sf).collect()
+    val out = Warehouse.sqlYearlyGrowth(spark, sf).collect()
     assert(out.head.isNullAt(3) && out.head.isNullAt(4))
     out.sliding(2).foreach {
       case Array(prev, cur) =>
@@ -201,7 +203,7 @@ class Round12Spec extends SparkSpec {
 
   test("sql_basket_affinity: support/lift identities and antimonotonicity") {
     import org.apache.spark.sql.functions.{broadcast => _, _}
-    val out = Warehouse2.sqlBasketAffinity(spark, sf).collect()
+    val out = Warehouse.sqlBasketAffinity(spark, sf).collect()
     val ob = Schemas.table(spark, sf, "lineitem")
       .join(Schemas.table(spark, sf, "part"),
         col("p_partkey") === col("l_partkey"))
@@ -251,7 +253,7 @@ class Round12Spec extends SparkSpec {
   }
 
   test("eval_auc_roc: rank-sum equals a driver fold; separable set gives 1") {
-    val row = Analytics3.evalAucRoc(spark, sf).head()
+    val row = Scoring.evalAucRoc(spark, sf).head()
     val pairs = Schemas.table(spark, sf, "embeddings")
       .select(org.apache.spark.sql.functions.element_at(
         org.apache.spark.sql.functions.col("embedding"), 1).cast("double"),
@@ -305,7 +307,7 @@ class Round12Spec extends SparkSpec {
   }
 
   test("ts_cusum_changepoint: hand fold of one user's CUSUM") {
-    val out = Analytics3.tsCusumChangepoint(spark, sf).collect()
+    val out = TimeSeries.tsCusumChangepoint(spark, sf).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getFloat(2), r.getLong(3)))
       .toMap
     val rows = Schemas.events(spark, sf)
@@ -333,7 +335,7 @@ class Round12Spec extends SparkSpec {
   }
 
   test("anomaly_spc_runs: run lengths partition each user's series") {
-    val out = Analytics3.anomalySpcRuns(spark, sf).collect()
+    val out = Anomaly.anomalySpcRuns(spark, sf).collect()
     val counts = Schemas.events(spark, sf)
       .filter(org.apache.spark.sql.functions.col("user_id") < 50)
       .groupBy("user_id").count().collect()
@@ -349,7 +351,7 @@ class Round12Spec extends SparkSpec {
 
   test("drift_chi2_terms: nonnegative terms; margins conserve; identical " +
     "cohorts give ~zero statistic") {
-    val out = Analytics3.driftChi2Terms(spark, sf).collect()
+    val out = Drift.driftChi2Terms(spark, sf).collect()
     val total = Schemas.events(spark, sf).count()
     assert(out.map(r => r.getLong(1) + r.getLong(2)).sum == total)
     out.foreach(r => assert(r.getFloat(3) >= 0.0f))
@@ -381,7 +383,7 @@ class Round12Spec extends SparkSpec {
       .write.parquet(s"$dir/lineitem.parquet")
     Seq(100L, 100L, 101L).toDF("p_partkey")
       .write.parquet(s"$dir/part.parquet")
-    val rep = Warehouse2.dqConstraintReport(spark, dir).collect()
+    val rep = Quality.dqConstraintReport(spark, dir).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(rep("lineitem_orderkey_fk") == ((4L, 1L)))
     assert(rep("lineitem_qty_positive") == ((4L, 2L)))
@@ -407,7 +409,7 @@ class Round12Spec extends SparkSpec {
     // rebuild the model driver-side from the same tokenization
     val docs = Schemas.table(spark, sf, "documents")
       .select(org.apache.spark.sql.functions.col("doc_id"),
-        graft.query.Dedup.tokens(org.apache.spark.sql.functions.col("text"))
+        graft.query.TokenHash.tokens(org.apache.spark.sql.functions.col("text"))
           .as("t"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1).toArray)
     val grams = docs.flatMap { case (id, t) =>

@@ -1,7 +1,10 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.query.{Analytics4, TextAnalysis, Warehouse2}
+import graft.query.{Dedup, Graph, Relational, Similarity, TextAnalysis,
+  Warehouse}
+import graft.query.ml.{Calibration, Scoring}
+import graft.query.stats.{Privacy, Quality, TimeSeries}
 import graft.schema.Schemas
 
 /** Round-13 operators: PR-AUC, link prediction, assortativity, last-touch
@@ -24,7 +27,7 @@ class Round13Spec extends SparkSpec {
     ranked.zipWithIndex.foreach { case ((_, _, y), i) =>
       if (y == 1) { tp += 1; npos += 1; sum += tp.toDouble / (i + 1) }
     }
-    val got = Analytics4.evalPrAuc(spark, sf).collect()(0)
+    val got = Scoring.evalPrAuc(spark, sf).collect()(0)
     assert(got.getLong(0) == npos)
     assert(math.abs(got.getFloat(1) - (sum / npos)) < 1e-5,
       s"${got.getFloat(1)} vs ${sum / npos}")
@@ -46,7 +49,7 @@ class Round13Spec extends SparkSpec {
 
   test("graph_common_neighbors: counts match brute force; pairs non-adjacent") {
     val adj = bruteAdjacency()
-    val got = Analytics4.graphCommonNeighbors(spark, sf).collect()
+    val got = Graph.graphCommonNeighbors(spark, sf).collect()
     assert(got.nonEmpty)
     got.foreach { r =>
       val (u, v, cn) = (r.getLong(0), r.getLong(1), r.getLong(2))
@@ -74,7 +77,7 @@ class Round13Spec extends SparkSpec {
     val syy = xy.map(p => p._2 * p._2).sum
     val r = (n * sxy - sx * sy) /
       (math.sqrt(n * sxx - sx * sx) * math.sqrt(n * syy - sy * sy))
-    val got = Analytics4.graphAssortativity(spark, sf).collect()(0)
+    val got = Graph.graphAssortativity(spark, sf).collect()(0)
     assert(got.getLong(0) == xy.size)
     assert(math.abs(got.getFloat(1) - r) < 1e-5, s"${got.getFloat(1)} vs $r")
     assert(got.getFloat(1) >= -1.0f && got.getFloat(1) <= 1.0f)
@@ -85,7 +88,7 @@ class Round13Spec extends SparkSpec {
       .filter(col("event_type") === "purchase")
     val nConv = purchases.count()
     val totVal = purchases.agg(sum(col("value"))).collect()(0).getDouble(0)
-    val got = Analytics4.attributionLastTouch(spark, sf).collect()
+    val got = Warehouse.attributionLastTouch(spark, sf).collect()
     assert(got.map(_.getLong(1)).sum == nConv)
     assert(math.abs(got.map(_.getFloat(2).toDouble).sum - totVal)
       < 1e-3 * math.abs(totVal))
@@ -99,7 +102,7 @@ class Round13Spec extends SparkSpec {
       .select(col("l_returnflag"), col("l_quantity").cast("double"),
         col("l_extendedprice").cast("double"))
       .collect().map(r => (r.getString(0), r.getDouble(1), r.getDouble(2)))
-    val got = Analytics4.aggLinregByGroup(spark, sf).collect()
+    val got = Relational.aggLinregByGroup(spark, sf).collect()
     assert(got.length == data.map(_._1).distinct.length)
     got.foreach { r =>
       val g = data.filter(_._1 == r.getString(0))
@@ -135,7 +138,7 @@ class Round13Spec extends SparkSpec {
       truth += full.size
       hits += (full intersect topk(qid, qv, 8)).size
     }
-    val got = Analytics4.embMatryoshkaRecall(spark, sf).collect()
+    val got = Similarity.embMatryoshkaRecall(spark, sf).collect()
     assert(got.map(_.getInt(0)).toSeq == Seq(8, 16, 32))
     got.foreach(r =>
       assert(r.getDouble(1) >= 0.0 && r.getDouble(1) <= 1.0))
@@ -151,7 +154,7 @@ class Round13Spec extends SparkSpec {
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
     val errsByUser = evs.filter(_._4 == "error").groupBy(_._1)
-    val got = Analytics4.joinAsofNearest(spark, sf).collect()
+    val got = Relational.joinAsofNearest(spark, sf).collect()
     val purchases = evs.filter(_._4 == "purchase")
     assert(got.length == purchases.length)
     got.foreach { r =>
@@ -169,7 +172,7 @@ class Round13Spec extends SparkSpec {
   }
 
   test("stats_zone_map: date clustering prunes, hash layout cannot") {
-    val got = Warehouse2.statsZoneMap(spark, sf).collect()
+    val got = Warehouse.statsZoneMap(spark, sf).collect()
     assert(got.length == 2)
     val byName = got.map(r => r.getString(0) -> r).toMap
     val hash = byName("by_orderkey_hash"); val date = byName("by_shipdate_month")
@@ -200,7 +203,7 @@ class Round13Spec extends SparkSpec {
 
   test("text_zipf_slope: negative slope, brute-force agreement") {
     val toks = Schemas.table(spark, sf, "documents")
-      .select(explode(graft.query.Dedup.tokens(col("text"))).as("t"))
+      .select(explode(graft.query.TokenHash.tokens(col("text"))).as("t"))
       .groupBy(col("t")).agg(count(lit(1)).as("c"))
       .collect().map(r => (r.getString(0), r.getLong(1)))
     val top = toks.sortBy { case (t, c) => (-c, t) }.take(100)
@@ -219,7 +222,7 @@ class Round13Spec extends SparkSpec {
 
   test("text_llr_collocations: top pair matches brute force; llr nonneg") {
     val grams = Schemas.table(spark, sf, "documents")
-      .select(graft.query.Dedup.tokens(col("text")).as("t"))
+      .select(graft.query.TokenHash.tokens(col("text")).as("t"))
       .collect().flatMap(_.getSeq[String](0).sliding(2).filter(_.length == 2)
         .map(p => (p(0), p(1))))
     val nTot = grams.length.toDouble
@@ -249,7 +252,7 @@ class Round13Spec extends SparkSpec {
         col("event_id"), col("value"))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-    val got = Analytics4.tsHoltForecast(spark, sf).collect()
+    val got = TimeSeries.tsHoltForecast(spark, sf).collect()
     val byUser = evs.groupBy(_._1)
     assert(got.length == byUser.size)
     got.foreach { r =>
@@ -268,7 +271,7 @@ class Round13Spec extends SparkSpec {
   }
 
   test("retrieval_ndcg: dcg bounded by idcg, ndcg in [0,1], ranks real") {
-    val got = Analytics4.retrievalNdcg(spark, sf).collect()
+    val got = Similarity.retrievalNdcg(spark, sf).collect()
     assert(got.length == 20)
     got.foreach { r =>
       assert(r.getFloat(2) <= r.getFloat(3) + 1e-6,
@@ -301,7 +304,7 @@ class Round13Spec extends SparkSpec {
     val lam = vecs.map { x =>
       val s = x.zip(v).map { case (a, b) => a * b }.sum; s * s
     }.sum
-    val got = Analytics4.embPowerIteration(spark, sf).collect()
+    val got = Similarity.embPowerIteration(spark, sf).collect()
     assert(got.length == dim)
     // unit-norm loadings in dim order
     val loadings = got.map(_.getFloat(1).toDouble)
@@ -323,7 +326,7 @@ class Round13Spec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     val byUser = evs.groupBy(_._1).view
       .mapValues(_.sortBy(e => (e._2, e._3))).toMap
-    val got = Analytics4.windowRollingSlope(spark, sf).collect()
+    val got = Relational.windowRollingSlope(spark, sf).collect()
     assert(got.length == evs.length)
     val gotByEvent = got.map(r => r.getLong(0) -> r).toMap
     byUser.foreach { case (_, seq) =>
@@ -353,7 +356,7 @@ class Round13Spec extends SparkSpec {
         when(col("label") % 2 === 1, 1.0).otherwise(0.0).as("y"))
       .collect().map(r => (r.getDouble(0), r.getDouble(1)))
     val brier = rows.map { case (p, y) => (p - y) * (p - y) }.sum / rows.length
-    val r = Analytics4.evalBrierDecomp(spark, sf).collect()(0)
+    val r = Calibration.evalBrierDecomp(spark, sf).collect()(0)
     assert(r.getLong(0) == rows.length)
     assert(math.abs(r.getFloat(1) - brier) < 1e-5)
     // recompute each decomposition term brute-force with the same bins
@@ -391,7 +394,7 @@ class Round13Spec extends SparkSpec {
     // a corpus with a longer tail would show nonzero rates
     val totalOov = got.map(_.getLong(2)).sum
     val vocabSize = Schemas.table(spark, sf, "documents")
-      .select(explode(graft.query.Dedup.tokens(col("text"))).as("t"))
+      .select(explode(graft.query.TokenHash.tokens(col("text"))).as("t"))
       .distinct().count()
     if (vocabSize <= 256) assert(totalOov == 0L)
     else assert(totalOov > 0L)
@@ -399,7 +402,7 @@ class Round13Spec extends SparkSpec {
 
   test("privacy_k_anonymity: classes partition the joined rows") {
     val orders = Schemas.table(spark, sf, "orders").count()
-    val got = Warehouse2.privacyKAnonymity(spark, sf).collect()
+    val got = Privacy.privacyKAnonymity(spark, sf).collect()
     assert(got.map(_.getLong(2)).sum == orders)
     got.foreach(r => assert(r.getBoolean(3) == (r.getLong(2) < 10)))
     // QI keys are unique rows (nation's physical type varies by
@@ -409,7 +412,7 @@ class Round13Spec extends SparkSpec {
   }
 
   test("window_drawdown: peak is the running max, drawdown nonnegative") {
-    val got = Analytics4.windowDrawdown(spark, sf).collect()
+    val got = Relational.windowDrawdown(spark, sf).collect()
     assert(got.nonEmpty)
     got.foreach { r =>
       assert(r.getFloat(3) >= r.getFloat(2) - 1e-6f)
@@ -432,7 +435,7 @@ class Round13Spec extends SparkSpec {
     }
     val topDecile = sorted.take(math.ceil(sorted.length / 10.0).toInt)
       .map(_._2).sum
-    val r = Analytics4.aggParetoConcentration(spark, sf).collect()(0)
+    val r = Relational.aggParetoConcentration(spark, sf).collect()(0)
     assert(r.getLong(0) == sorted.length)
     assert(r.getLong(1) == n80, s"got ${r.getLong(1)} want $n80")
     assert(math.abs(r.getDouble(2) - topDecile.toDouble / total) < 1e-12)
@@ -447,7 +450,7 @@ class Round13Spec extends SparkSpec {
         col("event_id"), col("event_type"))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
-    val got = Analytics4.joinAsofTolerance(spark, sf).collect()
+    val got = Relational.joinAsofTolerance(spark, sf).collect()
     val byUser = evs.groupBy(_._1).view
       .mapValues(_.sortBy(e => (e._2, e._3))).toMap
     got.foreach { r =>
@@ -467,7 +470,7 @@ class Round13Spec extends SparkSpec {
 
   test("graph_local_clustering matches brute-force per-center closure") {
     val adj = bruteAdjacency()
-    val got = Analytics4.graphLocalClustering(spark, sf).collect()
+    val got = Graph.graphLocalClustering(spark, sf).collect()
     assert(got.nonEmpty)
     got.foreach { r =>
       val x = r.getLong(0)
@@ -490,7 +493,7 @@ class Round13Spec extends SparkSpec {
         col("event_id"), col("value"))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-    val got = Analytics4.tsAutocorrLag1(spark, sf).collect()
+    val got = TimeSeries.tsAutocorrLag1(spark, sf).collect()
     val byUser = evs.groupBy(_._1)
     got.foreach { r =>
       val vals = byUser(r.getLong(0)).sortBy(e => (e._2, e._3)).map(_._4)
@@ -522,7 +525,7 @@ class Round13Spec extends SparkSpec {
     }.groupBy(identity).view.mapValues(_.size.toLong)
     val brute = counts.toSeq
       .sortBy { case ((u, v), w) => (-w, u, v) }.take(25)
-    val got = Analytics4.graphCopurchaseWeights(spark, sf).collect()
+    val got = Graph.graphCopurchaseWeights(spark, sf).collect()
     assert(got.length == brute.length)
     got.zip(brute).foreach { case (r, ((u, v), w)) =>
       assert((r.getLong(0), r.getLong(1), r.getLong(2)) == (u, v, w))
@@ -531,7 +534,7 @@ class Round13Spec extends SparkSpec {
 
   test("text_hapax_stats re-derives from the token totals") {
     val totals = Schemas.table(spark, sf, "documents")
-      .select(explode(graft.query.Dedup.tokens(col("text"))).as("t"))
+      .select(explode(graft.query.TokenHash.tokens(col("text"))).as("t"))
       .groupBy(col("t")).agg(count(lit(1)).as("c"))
       .collect().map(r => (r.getString(0), r.getLong(1)))
     val r = TextAnalysis.textHapaxStats(spark, sf).collect()(0)
@@ -554,7 +557,7 @@ class Round13Spec extends SparkSpec {
     val sx = sorted.sum.toDouble
     val six = sorted.zipWithIndex.map { case (x, i) => (i + 1L) * x }.sum
     val gini = 2.0 * six / (n * sx) - (n + 1.0) / n
-    val r = Analytics4.aggGiniCents(spark, sf).collect()(0)
+    val r = Relational.aggGiniCents(spark, sf).collect()(0)
     assert(r.getLong(0) == sorted.length)
     assert(math.abs(r.getDouble(1) - gini) < 1e-12)
     assert(r.getDouble(1) >= 0.0 && r.getDouble(1) <= 1.0)
@@ -562,12 +565,12 @@ class Round13Spec extends SparkSpec {
 
   test("dedup_prefix_groups: groups re-derive from raw prefixes") {
     val docs = Schemas.table(spark, sf, "documents")
-      .select(col("doc_id"), graft.query.Dedup.tokens(col("text")).as("t"))
+      .select(col("doc_id"), graft.query.TokenHash.tokens(col("text")).as("t"))
       .collect().map(r => (r.getLong(0), r.getSeq[String](1)))
     val groups = docs.filter(_._2.length >= 5)
       .groupBy(_._2.take(5).mkString(" "))
       .filter(_._2.length > 1)
-    val got = Analytics4.dedupPrefixGroups(spark, sf).collect()
+    val got = Dedup.dedupPrefixGroups(spark, sf).collect()
     assert(got.length == groups.size)
     val wantSizes = groups.values.map(g =>
       (g.map(_._1).min, g.map(_._1).max, g.length.toLong)).toSet
@@ -598,7 +601,7 @@ class Round13Spec extends SparkSpec {
       }
       (g.length.toLong, ss.sum / ss.length)
     }.toMap
-    val got = Analytics4.evalSilhouetteCentroid(spark, sf).collect()
+    val got = Scoring.evalSilhouetteCentroid(spark, sf).collect()
     assert(got.length == byLabel.size)
     got.foreach { r =>
       val (n, s) = perLabel(r.getInt(0))
@@ -612,7 +615,7 @@ class Round13Spec extends SparkSpec {
     val vecs = Schemas.table(spark, sf, "embeddings")
       .select(col("embedding")).collect()
       .map(_.getSeq[Float](0).map(_.toDouble).toArray)
-    val got = Analytics4.embDimStats(spark, sf).collect()
+    val got = Similarity.embDimStats(spark, sf).collect()
     assert(got.length == 64)
     got.zipWithIndex.foreach { case (r, i) =>
       assert(r.getInt(0) == i + 1)
@@ -631,7 +634,7 @@ class Round13Spec extends SparkSpec {
         col("event_id"), col("value"))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-    val got = Analytics4.tsHoltBacktest(spark, sf).collect()
+    val got = TimeSeries.tsHoltBacktest(spark, sf).collect()
     val byUser = evs.groupBy(_._1)
     got.foreach { r =>
       val vals = byUser(r.getLong(0)).sortBy(e => (e._2, e._3)).map(_._4)
@@ -651,7 +654,7 @@ class Round13Spec extends SparkSpec {
   }
 
   test("privacy_l_diversity: sensitive diversity bounded by class size") {
-    val got = Warehouse2.privacyLDiversity(spark, sf).collect()
+    val got = Privacy.privacyLDiversity(spark, sf).collect()
     assert(got.nonEmpty)
     got.foreach { r =>
       assert(r.getLong(3) >= 1 && r.getLong(3) <= r.getLong(2))
@@ -662,7 +665,7 @@ class Round13Spec extends SparkSpec {
   }
 
   test("dq_freshness_lag: one type has zero lag, all lags nonnegative") {
-    val got = Warehouse2.dqFreshnessLag(spark, sf).collect()
+    val got = Quality.dqFreshnessLag(spark, sf).collect()
     assert(got.nonEmpty)
     assert(got.exists(_.getLong(3) == 0L),
       "the globally newest type must show zero lag")
@@ -675,7 +678,7 @@ class Round13Spec extends SparkSpec {
     val evs = Schemas.events(spark, sf)
       .select(col("user_id"), col("event_type")).collect()
       .map(r => (r.getLong(0), r.getString(1)))
-    val got = Analytics4.aggEntropyByKey(spark, sf).collect()
+    val got = Relational.aggEntropyByKey(spark, sf).collect()
     val byUser = evs.groupBy(_._1)
     assert(got.length == byUser.size)
     got.foreach { r =>
@@ -693,14 +696,14 @@ class Round13Spec extends SparkSpec {
   test("text_js_divergence: bounded by ln 2, brute-force agreement") {
     val rows = Schemas.table(spark, sf, "documents")
       .select(col("source"),
-        explode(graft.query.Dedup.tokens(col("text"))).as("t"))
+        explode(graft.query.TokenHash.tokens(col("text"))).as("t"))
       .collect().map(r => (r.getString(0), r.getString(1)))
     val bySrc = rows.groupBy(_._1).view
       .mapValues(_.groupBy(_._2).view.mapValues(_.size.toDouble).toMap)
       .toMap
     val corpus = rows.groupBy(_._2).view.mapValues(_.size.toDouble).toMap
     val gTot = rows.length.toDouble
-    val got = Analytics4.textJsDivergence(spark, sf).collect()
+    val got = TextAnalysis.textJsDivergence(spark, sf).collect()
     assert(got.length == bySrc.size)
     got.foreach { r =>
       val src = r.getString(0)
@@ -780,7 +783,7 @@ class Round13Spec extends SparkSpec {
   }
 
   test("agg_bitmap_distinct: exact on the corpus AND on overlapping keys") {
-    val got = Analytics4.aggBitmapDistinct(spark, sf).collect()
+    val got = Relational.aggBitmapDistinct(spark, sf).collect()
     assert(got.nonEmpty)
     got.foreach(r => assert(r.getBoolean(3),
       s"region ${r.getAs[Number](0)}: bitmap ${r.getAs[Number](2)}" +
@@ -802,7 +805,7 @@ class Round13Spec extends SparkSpec {
 
   test("emb_hubness_stats: histogram mass and edge count conserve") {
     val nVec = Schemas.table(spark, sf, "embeddings").count()
-    val got = Analytics4.embHubnessStats(spark, sf).collect()
+    val got = Similarity.embHubnessStats(spark, sf).collect()
     // every vector lands in exactly one in-degree band
     assert(got.map(_.getLong(1)).sum == nVec)
     // total reverse-kNN edges = k per query vector

@@ -1,7 +1,10 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.query.Analytics5
+import graft.query.{Dedup, Graph, Relational, TextAnalysis, Warehouse}
+import graft.query.ml.{Scoring, Significance}
+import graft.query.stats.{Anomaly, Drift, Privacy, Quality, Sampling,
+  TimeSeries}
 import graft.schema.Schemas
 
 /** Round-14 operators: weighted sampling, weighted median, interval
@@ -14,8 +17,8 @@ import graft.schema.Schemas
 class Round14Spec extends SparkSpec {
 
   test("sample_weighted: deterministic, size-k, keys ascending") {
-    val a = Analytics5.sampleWeighted(spark, sf, k = 50).collect()
-    val b = Analytics5.sampleWeighted(spark, sf, k = 50).collect()
+    val a = Sampling.sampleWeighted(spark, sf, k = 50).collect()
+    val b = Sampling.sampleWeighted(spark, sf, k = 50).collect()
     assert(a.toSeq == b.toSeq, "re-run must be bit-identical")
     assert(a.length == 50)
     val keys = a.map(_.getFloat(2))
@@ -28,7 +31,7 @@ class Round14Spec extends SparkSpec {
     // population mean — the whole point of importance weighting
     val popMean = Schemas.table(spark, sf, "orders")
       .agg(avg(col("o_totalprice"))).collect()(0).getDouble(0)
-    val sampMean = Analytics5.sampleWeighted(spark, sf, k = 100)
+    val sampMean = Sampling.sampleWeighted(spark, sf, k = 100)
       .agg(avg(col("o_totalprice"))).collect()(0).getDouble(0)
     assert(sampMean > popMean,
       s"weighted sample mean $sampMean should exceed population $popMean")
@@ -49,14 +52,14 @@ class Round14Spec extends SparkSpec {
       val med = sorted.find { t => cum += t._3; cum * 2 >= tot }.get._2
       rf -> (med, tot)
     }
-    val got = Analytics5.aggWeightedMedian(spark, sf).collect()
+    val got = Relational.aggWeightedMedian(spark, sf).collect()
       .map(r => r.getString(0) -> (r.getDouble(1), r.getLong(2))).toMap
     assert(got == expect)
   }
 
   test("ts_interval_union: bounds and a hand-built overlap fixture") {
     val hold = 300L * 1000000L
-    val got = Analytics5.tsIntervalUnion(spark, sf).collect()
+    val got = TimeSeries.tsIntervalUnion(spark, sf).collect()
     val perUser = Schemas.events(spark, sf).groupBy(col("user_id"))
       .agg(count(lit(1)).as("n")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -81,14 +84,14 @@ class Round14Spec extends SparkSpec {
   }
 
   test("drift_psi: every term is non-negative (Gibbs)") {
-    val terms = Analytics5.driftPsi(spark, sf).collect()
+    val terms = Drift.driftPsi(spark, sf).collect()
       .map(_.getFloat(3))
     assert(terms.forall(_ >= -1e-7f),
       s"(p-q)ln(p/q) >= 0 termwise; got ${terms.mkString(",")}")
   }
 
   test("dq_join_profile: conservation and clean-FK witness") {
-    val rows = Analytics5.dqJoinProfile(spark, sf).collect()
+    val rows = Quality.dqJoinProfile(spark, sf).collect()
     assert(rows.length == 2)
     rows.foreach { r =>
       assert(r.getLong(1) == r.getLong(2) + r.getLong(3),
@@ -104,7 +107,7 @@ class Round14Spec extends SparkSpec {
     val total = Schemas.events(spark, sf)
       .filter(col("event_type") === "purchase")
       .agg(sum(col("value"))).collect()(0).getDouble(0)
-    val credited = Analytics5.attributionLinear(spark, sf).collect()
+    val credited = Warehouse.attributionLinear(spark, sf).collect()
       .map(_.getFloat(2).toDouble).sum
     assert(math.abs(credited - total) < 1e-3 * math.abs(total),
       s"sum of credit $credited must equal purchase value $total")
@@ -123,7 +126,7 @@ class Round14Spec extends SparkSpec {
       .unionAll(edges.select(col("v")))
       .groupBy(col("u")).agg(count(lit(1)).as("deg")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val core = Analytics5.graphKcore(spark, sf).collect()
+    val core = Graph.graphKcore(spark, sf).collect()
       .map(r => r.getLong(0) -> r.getLong(1))
     assert(core.nonEmpty, "p10 threshold must keep a core")
     assert(core.length < init.size, "p10 threshold must peel something")
@@ -149,21 +152,21 @@ class Round14Spec extends SparkSpec {
       a <- names; b <- names if a < b
       dist = lev(a, b) if dist <= 2
     } yield (a, b, dist)).toSet
-    val got = Analytics5.joinEditDistance(spark, sf).collect()
+    val got = Relational.joinEditDistance(spark, sf).collect()
       .map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSet
     assert(got == expect,
       s"missing=${(expect -- got).take(3)} extra=${(got -- expect).take(3)}")
   }
 
   test("join_edit_distance: plan has no cartesian / nested-loop join") {
-    val plan = Analytics5.joinEditDistance(spark, sf)
+    val plan = Relational.joinEditDistance(spark, sf)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"), plan.take(400))
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(400))
   }
 
   test("f_variant_json: every event carries k; avg within [min,max]") {
-    val rows = Analytics5.fVariantJson(spark, sf).collect()
+    val rows = Relational.fVariantJson(spark, sf).collect()
     val perType = Schemas.table(spark, sf, "events")
       .groupBy(col("event_type")).agg(count(lit(1)).as("n")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -176,7 +179,7 @@ class Round14Spec extends SparkSpec {
   }
 
   test("dedup_time_window: one survivor per bucket, idempotent") {
-    val kept = Analytics5.dedupTimeWindow(spark, sf)
+    val kept = Dedup.dedupTimeWindow(spark, sf)
     val dup = kept.groupBy(col("user_id"), col("event_type"),
         col("win_start")).agg(count(lit(1)).as("n"))
       .filter(col("n") > 1).count()
@@ -201,7 +204,7 @@ class Round14Spec extends SparkSpec {
     val sizes = Schemas.table(spark, sf, "documents")
       .groupBy(col("lang")).agg(count(lit(1)).as("n")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val kept = Analytics5.corpusSampleStratified(spark, sf).collect()
+    val kept = TextAnalysis.corpusSampleStratified(spark, sf).collect()
       .map(r => (r.getLong(0), r.getString(1)))
     val byLang = kept.groupBy(_._2).view.mapValues(_.length.toLong).toMap
     sizes.foreach { case (lang, n) =>
@@ -214,7 +217,7 @@ class Round14Spec extends SparkSpec {
   }
 
   test("anomaly_rolling_z: driver replay on the flagged rows") {
-    val got = Analytics5.anomalyRollingZ(spark, sf).collect()
+    val got = Anomaly.anomalyRollingZ(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getFloat(3)))
     assert(got.forall { case (_, _, _, z) => math.abs(z) > 3.0f - 1e-4f })
     // recompute z for every flagged event from that user's raw series
@@ -242,7 +245,7 @@ class Round14Spec extends SparkSpec {
   }
 
   test("agg_histogram_quantiles: ordered, in-range, within a bin width") {
-    val est = Analytics5.aggHistogramQuantiles(spark, sf).collect()
+    val est = Relational.aggHistogramQuantiles(spark, sf).collect()
       .map(r => r.getString(0) -> r.getFloat(2)).toMap
     assert(est("p50") <= est("p90") && est("p90") <= est("p99"))
     val xs = Schemas.table(spark, sf, "lineitem")
@@ -274,7 +277,7 @@ class Round14Spec extends SparkSpec {
     val expect = custs
       .filter(c => c._3 > balAvg && !big.contains(c._1))
       .groupBy(_._2).view.mapValues(_.length.toLong).toMap
-    val got = Analytics5.sqlInactiveCustomers(spark, sf).collect()
+    val got = Warehouse.sqlInactiveCustomers(spark, sf).collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
     assert(got == expect, s"got $got vs $expect")
   }
@@ -308,7 +311,7 @@ class Round14Spec extends SparkSpec {
   }
 
   test("quality_lang_confusion: mass equals the corpus") {
-    val rows = Analytics5.qualityLangConfusion(spark, sf).collect()
+    val rows = TextAnalysis.qualityLangConfusion(spark, sf).collect()
     val total = Schemas.table(spark, sf, "documents").count()
     assert(rows.map(_.getLong(2)).sum == total)
     val langs = Schemas.table(spark, sf, "documents")
@@ -317,7 +320,7 @@ class Round14Spec extends SparkSpec {
   }
 
   test("agg_dow_hour_grid: bounded axes, mass equals events") {
-    val rows = Analytics5.aggDowHourGrid(spark, sf).collect()
+    val rows = Relational.aggDowHourGrid(spark, sf).collect()
     assert(rows.length <= 168)
     rows.foreach { r =>
       assert(r.getInt(0) >= 0 && r.getInt(0) <= 6)
@@ -338,7 +341,7 @@ class Round14Spec extends SparkSpec {
       .filter(col("u") % 16 === 0)
       .groupBy(col("u")).agg(count(lit(1)).as("deg")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val reach = Analytics5.graphTwoHopReach(spark, sf).collect()
+    val reach = Graph.graphTwoHopReach(spark, sf).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(reach.keySet == deg.keySet)
     reach.foreach { case (v, r) =>
@@ -347,7 +350,7 @@ class Round14Spec extends SparkSpec {
   }
 
   test("privacy_dp_counts: noise reconciles, exact counts exact") {
-    val rows = Analytics5.privacyDpCounts(spark, sf).collect()
+    val rows = Privacy.privacyDpCounts(spark, sf).collect()
     val exact = Schemas.table(spark, sf, "customer")
       .groupBy(col("c_nationkey")).agg(count(lit(1))).collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -358,7 +361,7 @@ class Round14Spec extends SparkSpec {
   }
 
   test("corpus_mix_weights: shares sum to 1, weight inverts the share") {
-    val rows = Analytics5.corpusMixWeights(spark, sf).collect()
+    val rows = TextAnalysis.corpusMixWeights(spark, sf).collect()
     val l = rows.length
     assert(math.abs(rows.map(_.getDouble(2)).sum - 1.0) < 1e-12)
     rows.foreach { r =>
@@ -367,7 +370,7 @@ class Round14Spec extends SparkSpec {
   }
 
   test("sql_priority_returns: total equals distinct returned orders") {
-    val total = Analytics5.sqlPriorityReturns(spark, sf).collect()
+    val total = Warehouse.sqlPriorityReturns(spark, sf).collect()
       .map(_.getLong(1)).sum
     val expect = Schemas.table(spark, sf, "lineitem")
       .filter(col("l_returnflag") === "R")
@@ -397,7 +400,7 @@ class Round14Spec extends SparkSpec {
   }
 
   test("eval_ks_test: driver brute-force replay, D in [0,1]") {
-    val r = Analytics5.evalKsTest(spark, sf).collect()(0)
+    val r = Significance.evalKsTest(spark, sf).collect()(0)
     val (na, nb, d) = (r.getLong(0), r.getLong(1), r.getDouble(2))
     assert(d >= 0.0 && d <= 1.0)
     val rows = Schemas.events(spark, sf)
@@ -416,7 +419,7 @@ class Round14Spec extends SparkSpec {
   }
 
   test("sql_monthly_cum_revenue: monotone cumulative closing at share 1") {
-    val rows = Analytics5.sqlMonthlyCumRevenue(spark, sf).collect()
+    val rows = Warehouse.sqlMonthlyCumRevenue(spark, sf).collect()
     val cums = rows.map(_.getLong(2))
     assert(cums.zip(cums.tail).forall { case (x, y) => x < y })
     assert(rows.last.getDouble(3) == 1.0)
@@ -424,7 +427,7 @@ class Round14Spec extends SparkSpec {
   }
 
   test("eval_decile_lift: mass conserved, lift averages to 1") {
-    val rows = Analytics5.evalDecileLift(spark, sf).collect()
+    val rows = Scoring.evalDecileLift(spark, sf).collect()
     assert(rows.length == 10)
     val nTotal = Schemas.table(spark, sf, "embeddings").count()
     assert(rows.map(_.getLong(1)).sum == nTotal)
@@ -435,7 +438,7 @@ class Round14Spec extends SparkSpec {
   }
 
   test("privacy_t_closeness_tv: TV in [0,1], zero only for exact match") {
-    val rows = Analytics5.privacyTClosenessTv(spark, sf).collect()
+    val rows = Privacy.privacyTClosenessTv(spark, sf).collect()
     val classes = Schemas.table(spark, sf, "customer")
       .select(col("c_nationkey")).distinct().count()
     assert(rows.length == classes)
@@ -458,7 +461,7 @@ class Round14Spec extends SparkSpec {
   }
 
   test("dq_volume_anomaly: warm-up excluded, ratio re-derived per day") {
-    val rows = Analytics5.dqVolumeAnomaly(spark, sf).collect()
+    val rows = Quality.dqVolumeAnomaly(spark, sf).collect()
     val daily = Schemas.events(spark, sf)
       .select((unix_micros(col("ts")) / lit(86400000000L)).cast("long"))
       .collect().map(_.getLong(0))
@@ -615,7 +618,7 @@ class Round14Spec extends SparkSpec {
   }
 
   test("join_asof_forward: per-row next-purchase proof") {
-    val got = Analytics5.joinAsofForward(spark, sf).collect()
+    val got = Relational.joinAsofForward(spark, sf).collect()
     val events = Schemas.events(spark, sf)
       .filter(col("event_type").isin("purchase", "error"))
       .select(col("user_id"), unix_micros(col("ts")), col("event_id"),
@@ -639,7 +642,7 @@ class Round14Spec extends SparkSpec {
   }
 
   test("graph_degree_bands: mass conserved, bands are true log2 bins") {
-    val rows = Analytics5.graphDegreeBands(spark, sf).collect()
+    val rows = Graph.graphDegreeBands(spark, sf).collect()
     val li = Schemas.table(spark, sf, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       .distinct()
@@ -661,9 +664,9 @@ class Round14Spec extends SparkSpec {
   }
 
   test("emb_hubness_stats: matrix path and top-k-aggregate fallback agree") {
-    import graft.query.Analytics4
-    val matrix = Analytics4.embHubnessStats(spark, sf).collect().toSeq
-    val fallback = Analytics4
+    import graft.query.Similarity
+    val matrix = Similarity.embHubnessStats(spark, sf).collect().toSeq
+    val fallback = Similarity
       .embHubnessStats(spark, sf, matrixGateBytes = 0L).collect().toSeq
     assert(matrix == fallback,
       s"matrix ${matrix.take(3)} vs aggregate ${fallback.take(3)}")

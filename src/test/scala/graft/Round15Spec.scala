@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.query.{Analytics5, Relational3, TextAnalysis}
+import graft.query.{Graph, Relational, TextAnalysis, Warehouse}
+import graft.query.ml.Agreement
+import graft.query.stats.{Anomaly, TimeSeries}
 import graft.streaming.StreamQueries
 
 /** Round-15 operator pins: keyword extraction, streaming SCD2
@@ -35,7 +37,7 @@ class Round15Spec extends SparkSpec {
 
   test("stream_scd2_enrich equals the batch as-of lookup row for row") {
     val streamed = StreamQueries.streamScd2Enrich(spark, sf).collect()
-    val batch = Relational3.scd2AsofLookup(spark, sf).collect()
+    val batch = Warehouse.scd2AsofLookup(spark, sf).collect()
     assert(streamed.length == batch.length && streamed.nonEmpty)
     streamed.zip(batch).foreach { case (s, b) =>
       assert(s.getLong(0) == b.getLong(0))
@@ -47,7 +49,7 @@ class Round15Spec extends SparkSpec {
 
   test("ts_stl_decompose: additive identity holds, edges null, seasonal " +
       "is a pure function of hour-of-day") {
-    val rows = Analytics5.tsStlDecompose(spark, sf).collect()
+    val rows = TimeSeries.tsStlDecompose(spark, sf).collect()
     assert(rows.length > 30)
     // first and last 12 hours cannot fill the centered 25-row frame
     (rows.take(12) ++ rows.takeRight(12)).foreach { r =>
@@ -68,7 +70,7 @@ class Round15Spec extends SparkSpec {
   }
 
   test("anomaly_alert_debounce matches a driver-side replay of the recurrence") {
-    val got = Analytics5.anomalyAlertDebounce(spark, sf).collect()
+    val got = Anomaly.anomalyAlertDebounce(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     val errs = graft.schema.Schemas.events(spark, sf)
       .filter(col("event_type") === "error")
@@ -88,21 +90,21 @@ class Round15Spec extends SparkSpec {
     // gaps (at sf0.001 no user errors twice inside 30 min, so the
     // default gap suppresses nothing — which the exact compare above
     // already pins); a 1-week cooldown must drop alerts
-    val weekly = Analytics5.anomalyAlertDebounce(spark, sf,
+    val weekly = Anomaly.anomalyAlertDebounce(spark, sf,
       gapUs = 7L * 86400000000L).collect()
     assert(weekly.length < errs.length)
   }
 
   test("graph_hits: top-50 by authority, scores normalized to max=1, " +
       "round-1 authority equals part degree") {
-    val rows = Analytics5.graphHits(spark, sf).collect()
+    val rows = Graph.graphHits(spark, sf).collect()
     assert(rows.length <= 50 && rows.nonEmpty)
     val auths = rows.map(_.getLong(1))
     assert(auths.zip(auths.tail).forall { case (a, b) => a >= b })
     assert(rows.head.getFloat(2) == 1.0f)
     assert(rows.forall(r => r.getFloat(2) > 0f && r.getFloat(2) <= 1.0f))
     // one-round HITS from hub=1 is exactly the part's order-degree
-    val r1 = Analytics5.graphHits(spark, sf, iters = 1).collect()
+    val r1 = Graph.graphHits(spark, sf, iters = 1).collect()
     val deg = graft.schema.Schemas.table(spark, sf, "lineitem")
       .select(col("l_orderkey"), col("l_partkey")).distinct()
       .groupBy(col("l_partkey")).agg(countDistinct(col("l_orderkey")).as("d"))
@@ -111,7 +113,7 @@ class Round15Spec extends SparkSpec {
   }
 
   test("graph_hits projection form equals the bipartite alternation (iters=3)") {
-    val got = Analytics5.graphHits(spark, sf, iters = 3, k = 1000).collect()
+    val got = Graph.graphHits(spark, sf, iters = 3, k = 1000).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     // driver-side replay of the textbook alternation on the tiny fixture
     val edges = graft.schema.Schemas.table(spark, sf, "lineitem")
@@ -130,7 +132,7 @@ class Round15Spec extends SparkSpec {
 
   test("agg_ttest_welch: Welch df within its theoretical bounds, " +
       "means inside the populations' ranges") {
-    val r = Analytics5.aggTtestWelch(spark, sf).head()
+    val r = Relational.aggTtestWelch(spark, sf).head()
     val n1 = r.getLong(0); val n2 = r.getLong(1)
     assert(n1 > 1 && n2 > 1)
     val df = r.getFloat(5)
@@ -193,7 +195,7 @@ class Round15Spec extends SparkSpec {
 
   test("ts_periodogram: one row per candidate period, power non-negative, " +
       "constant series concentrates at DC") {
-    val rows = Analytics5.tsPeriodogram(spark, sf).collect()
+    val rows = TimeSeries.tsPeriodogram(spark, sf).collect()
     assert(rows.map(_.getInt(0)).toSeq == Seq(6, 12, 24, 168))
     val nH = rows.map(_.getLong(1)).distinct
     assert(nH.length == 1 && nH.head > 24)
@@ -201,7 +203,7 @@ class Round15Spec extends SparkSpec {
   }
 
   test("agg_skew_kurtosis matches direct central-moment computation") {
-    val rows = Analytics5.aggSkewKurtosis(spark, sf).collect()
+    val rows = Relational.aggSkewKurtosis(spark, sf).collect()
     assert(rows.nonEmpty)
     val vals = graft.schema.Schemas.events(spark, sf)
       .select(col("event_type"), col("value")).collect()
@@ -225,7 +227,7 @@ class Round15Spec extends SparkSpec {
 
   test("sql_customer_rfm: quintiles balanced within ntile's fill rule, " +
       "cells composed from scores") {
-    val rows = graft.query.Warehouse2.sqlCustomerRfm(spark, sf).collect()
+    val rows = graft.query.Warehouse.sqlCustomerRfm(spark, sf).collect()
     assert(rows.nonEmpty)
     val n = rows.length
     for (idx <- Seq(4, 5, 6)) {
@@ -245,8 +247,8 @@ class Round15Spec extends SparkSpec {
 
   test("attribution_time_decay: total credit equals total purchase value; " +
       "decay shifts credit vs the linear split") {
-    val decayed = Analytics5.attributionTimeDecay(spark, sf).collect()
-    val linear = Analytics5.attributionLinear(spark, sf).collect()
+    val decayed = Warehouse.attributionTimeDecay(spark, sf).collect()
+    val linear = Warehouse.attributionLinear(spark, sf).collect()
     def total(rs: Array[org.apache.spark.sql.Row]) =
       rs.map(_.getFloat(2).toDouble).sum
     val purchases = graft.schema.Schemas.events(spark, sf)
@@ -261,7 +263,7 @@ class Round15Spec extends SparkSpec {
 
   test("cohort_ltv: cumulative curve is monotone and closes on total " +
       "purchase revenue") {
-    val rows = graft.query.Analytics2.cohortLtv(spark, sf).collect()
+    val rows = graft.query.Warehouse.cohortLtv(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.groupBy(_.getLong(0)).foreach { case (cw, rs) =>
       val sorted = rs.sortBy(_.getLong(1))
@@ -277,7 +279,7 @@ class Round15Spec extends SparkSpec {
 
   test("graph_modularity: Q_c bounds hold and masses reconcile with 2m") {
     graft.schema.IndexCache.clear()
-    val rows = Analytics5.graphModularity(spark, sf).collect()
+    val rows = Graph.graphModularity(spark, sf).collect()
     assert(rows.nonEmpty)
     val twoM = rows.head.getLong(3)
     assert(rows.forall(_.getLong(3) == twoM))
@@ -303,7 +305,7 @@ class Round15Spec extends SparkSpec {
     }
     // chunk count = floor(tokens/8) per kept doc
     val toks = graft.schema.Schemas.table(spark, sf, "documents")
-      .select(col("doc_id"), size(graft.query.Dedup.tokens(col("text"))).as("n"))
+      .select(col("doc_id"), size(graft.query.TokenHash.tokens(col("text"))).as("n"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     rows.foreach { r =>
       assert(r.getLong(1) == toks(r.getLong(0)) / 8, s"doc ${r.getLong(0)}") }
@@ -312,7 +314,7 @@ class Round15Spec extends SparkSpec {
 
   test("sql_abc_analysis: classes partition by cumulative share and are " +
       "monotone along the rank") {
-    val rows = graft.query.Warehouse2.sqlAbcAnalysis(spark, sf).collect()
+    val rows = graft.query.Warehouse.sqlAbcAnalysis(spark, sf).collect()
     assert(rows.nonEmpty)
     val total = rows.map(_.getLong(2)).sum
     assert(rows.last.getLong(3) == total, "cumulative must close on the total")
@@ -332,7 +334,7 @@ class Round15Spec extends SparkSpec {
 
   test("eval_cohens_kappa: hash-random rater pins kappa near zero while " +
       "raw agreement stays near half") {
-    val r = Analytics5.evalCohensKappa(spark, sf).head()
+    val r = Agreement.evalCohensKappa(spark, sf).head()
     val n = r.getLong(0)
     assert(n > 0 && r.getLong(1) <= n)
     // rater B is hash-uniform: expected agreement ~0.5, kappa ~0 — wide
@@ -361,7 +363,7 @@ class Round15Spec extends SparkSpec {
   test("graph_random_walks: every consecutive path pair is a real edge, " +
       "paths have steps+1 vertices, and walks are reproducible") {
     graft.schema.IndexCache.clear()
-    val rows = Analytics5.graphRandomWalks(spark, sf).collect()
+    val rows = Graph.graphRandomWalks(spark, sf).collect()
     assert(rows.nonEmpty)
     val edges = graft.schema.Schemas.table(spark, sf, "lineitem")
       .select(col("l_orderkey"), col("l_partkey")).distinct()
@@ -380,7 +382,7 @@ class Round15Spec extends SparkSpec {
       }
     }
     // reproducible: a second run yields the identical walk set
-    val again = Analytics5.graphRandomWalks(spark, sf).collect()
+    val again = Graph.graphRandomWalks(spark, sf).collect()
       .map(r => (r.getLong(0), r.getString(1)))
     assert(again.toSeq == rows.map(r => (r.getLong(0), r.getString(1))).toSeq)
     graft.schema.IndexCache.clear()
@@ -403,8 +405,8 @@ class Round15Spec extends SparkSpec {
   test("graph_walk_cooccurrence: pair mass equals walks × window fanout, " +
       "and every pair is symmetric-present as (context, center)") {
     graft.schema.IndexCache.clear()
-    val pairs = Analytics5.graphWalkCooccurrence(spark, sf).collect()
-    val nWalks = Analytics5.graphRandomWalks(spark, sf).count()
+    val pairs = Graph.graphWalkCooccurrence(spark, sf).collect()
+    val nWalks = Graph.graphRandomWalks(spark, sf).count()
     // per 4-vertex path with window ±2: positions contribute 2+3+3+2 pairs
     assert(pairs.map(_.getLong(2)).sum == nWalks * 10)
     // the window predicate |i−j|≤2 is symmetric, so every walk emits
@@ -418,7 +420,7 @@ class Round15Spec extends SparkSpec {
 
   test("dq_pk_uniqueness: dimension keys are clean; the audit SURFACES " +
       "the generator's non-unique lineitem line numbers") {
-    val rows = graft.query.Warehouse2.dqPkUniqueness(spark, sf).collect()
+    val rows = graft.query.stats.Quality.dqPkUniqueness(spark, sf).collect()
     assert(rows.length == 5)
     val byTable = rows.map(r => r.getString(0) -> r).toMap
     Seq("orders(o_orderkey)", "customer(c_custkey)", "part(p_partkey)",
@@ -438,7 +440,7 @@ class Round15Spec extends SparkSpec {
 
   test("window_max_subarray matches a driver-side Kadane replay and " +
       "dominates every single element") {
-    val got = Analytics5.windowMaxSubarray(spark, sf).collect()
+    val got = Relational.windowMaxSubarray(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toMap
     val evs = graft.schema.Schemas.events(spark, sf)
       .select(col("user_id"), col("event_id"), expr("unix_micros(ts)"),
@@ -461,7 +463,7 @@ class Round15Spec extends SparkSpec {
   test("sql_basket_rules: confidences bounded by 1, lift consistent with " +
       "its factors, support descending") {
     graft.schema.IndexCache.clear()
-    val rows = Analytics5.sqlBasketRules(spark, sf).collect()
+    val rows = Warehouse.sqlBasketRules(spark, sf).collect()
     assert(rows.nonEmpty)
     val supports = rows.map(_.getLong(2))
     assert(supports.zip(supports.tail).forall { case (a, b) => a >= b })

@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.query.{Analytics6, Analytics3}
+import graft.query.{Dedup, Graph, Relational}
+import graft.query.ml.{Agreement, Significance}
+import graft.query.stats.{Privacy, TimeSeries}
 import graft.streaming.StreamQueries
 
 /** Round-16 operator pins: the nonparametric two-sample family
@@ -11,7 +13,7 @@ class Round16Spec extends SparkSpec {
 
   test("eval_mann_whitney_u: U/(na·nb) = AUC identity, U bounded, " +
       "z finite") {
-    val r = Analytics6.evalMannWhitneyU(spark, sf).collect()
+    val r = Significance.evalMannWhitneyU(spark, sf).collect()
     assert(r.length == 1)
     val row = r.head
     val na = row.getLong(0); val nb = row.getLong(1)
@@ -37,7 +39,7 @@ class Round16Spec extends SparkSpec {
 
   test("eval_cliffs_delta: brute-force dominance parity and band " +
       "consistency") {
-    val r = Analytics6.evalCliffsDelta(spark, sf).collect()
+    val r = Significance.evalCliffsDelta(spark, sf).collect()
     assert(r.length == 1)
     val row = r.head
     val delta = row.getDouble(2); val band = row.getString(3)
@@ -60,7 +62,7 @@ class Round16Spec extends SparkSpec {
 
   test("eval_wilcoxon_signed_rank: brute-force mid-rank parity on the " +
       "per-user count deltas") {
-    val r = Analytics6.evalWilcoxonSignedRank(spark, sf).collect()
+    val r = Significance.evalWilcoxonSignedRank(spark, sf).collect()
     assert(r.length == 1)
     val n = r.head.getLong(0); val wPlus = r.head.getDouble(1)
     val z = r.head.getDouble(2)
@@ -87,14 +89,14 @@ class Round16Spec extends SparkSpec {
 
   test("graph_katz_centrality: every score > 1, and hub ordering " +
       "follows 1-step degree at alpha → attenuated-walk dominance") {
-    val rows = Analytics6.graphKatzCentrality(spark, sf).collect()
+    val rows = Graph.graphKatzCentrality(spark, sf).collect()
     assert(rows.nonEmpty)
     // β = 1 base plus a positive attenuated in-walk sum: x > 1 always
     rows.foreach(r => assert(r.getFloat(1) > 1.0f,
       s"part ${r.getLong(0)} katz ${r.getFloat(1)}"))
     // monotone sanity vs the 1-iteration truncation: a vertex whose
     // 1-hop degree is max must not rank below one with minimal degree
-    val deg = graft.query.Analytics
+    val deg = graft.query.GraphIndex
       .copurchaseEdgesSym(spark, sf)
       .groupBy(col("u")).agg(count(lit(1)).as("deg"))
       .filter(col("u") <= 100L)
@@ -108,7 +110,7 @@ class Round16Spec extends SparkSpec {
 
   test("ts_cusum_target: recurrence replay, clamp floor, alarm " +
       "threshold consistency") {
-    val rows = Analytics6.tsCusumTarget(spark, sf).collect()
+    val rows = TimeSeries.tsCusumTarget(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.groupBy(_.getLong(0)).foreach { case (_, rs) =>
       val ordered = rs.sortBy(_.getLong(2))
@@ -124,7 +126,7 @@ class Round16Spec extends SparkSpec {
 
   test("eval_tost_equivalence: one-sided pair brackets the Welch t, " +
       "verdict consistent with the statistics") {
-    val r = Analytics6.evalTostEquivalence(spark, sf).collect()
+    val r = Significance.evalTostEquivalence(spark, sf).collect()
     assert(r.length == 1)
     val row = r.head
     val tLo = row.getFloat(4); val tHi = row.getFloat(5)
@@ -139,8 +141,8 @@ class Round16Spec extends SparkSpec {
 
   test("eval_gwet_ac1: chance term is prevalence-shaped (≤ 0.5), AC1 " +
       "and kappa share observed agreement") {
-    val ac1 = Analytics6.evalGwetAc1(spark, sf).collect().head
-    val kap = graft.query.Analytics5.evalCohensKappa(spark, sf)
+    val ac1 = Agreement.evalGwetAc1(spark, sf).collect().head
+    val kap = graft.query.ml.Agreement.evalCohensKappa(spark, sf)
       .collect().head
     assert(ac1.getLong(0) == kap.getLong(0))
     assert(ac1.getLong(1) == kap.getLong(1))
@@ -153,7 +155,7 @@ class Round16Spec extends SparkSpec {
 
   test("ts_croston: recurrence replay, gaps positive, forecast = " +
       "z_hat/q_hat") {
-    val rows = Analytics6.tsCroston(spark, sf).collect()
+    val rows = TimeSeries.tsCroston(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.groupBy(_.getLong(0)).foreach { case (_, rs) =>
       val ordered = rs.sortBy(_.getLong(2))
@@ -172,7 +174,7 @@ class Round16Spec extends SparkSpec {
   test("privacy_dp_quantile: release is 3 ranked grid candidates; " +
       "utilities are exact rank distances; the argmax respects the " +
       "replayable Gumbel keys") {
-    val rows = graft.query.Analytics6.privacyDpQuantile(spark, sf)
+    val rows = graft.query.stats.Privacy.privacyDpQuantile(spark, sf)
       .collect()
     assert(rows.length == 3)
     assert(rows.map(_.getInt(0)).toSeq == Seq(1, 2, 3))
@@ -191,7 +193,7 @@ class Round16Spec extends SparkSpec {
 
   test("eval_cohens_d: pooled-SD identity against the Welch moments, " +
       "J-correction shrinks toward zero") {
-    val r = Analytics6.evalCohensD(spark, sf).collect().head
+    val r = Significance.evalCohensD(spark, sf).collect().head
     val d = r.getFloat(2); val g = r.getFloat(3)
     assert(!d.isNaN && !g.isNaN)
     // Hedges' g is a strict shrinkage of d (J < 1), same sign
@@ -205,7 +207,7 @@ class Round16Spec extends SparkSpec {
 
   test("window_rolling_autocorr: null until 20 pairs, value in [-1, 1], " +
       "brute-force parity on a full window") {
-    val rows = Analytics6.windowRollingCorr(spark, sf).collect()
+    val rows = Relational.windowRollingCorr(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val np = r.getLong(2)
@@ -238,7 +240,7 @@ class Round16Spec extends SparkSpec {
 
   test("ts_hurst_exponent: panel populated, R/S grows with block size, " +
       "hurst in the diffusive band") {
-    val r = Analytics6.tsHurstExponent(spark, sf).collect().head
+    val r = TimeSeries.tsHurstExponent(spark, sf).collect().head
     val rs = Seq(r.getFloat(1), r.getFloat(2), r.getFloat(3), r.getFloat(4))
     assert(rs.forall(v => !v.isNaN && v > 0.0f))
     // R/S is monotone-increasing in w for any non-degenerate series
@@ -248,7 +250,7 @@ class Round16Spec extends SparkSpec {
   }
 
   test("graph_ego_betweenness: brute-force parity on one cohort center") {
-    val rows = Analytics6.graphEgoBetweenness(spark, sf).collect()
+    val rows = Graph.graphEgoBetweenness(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getLong(0) % 64 == 0)
@@ -257,7 +259,7 @@ class Round16Spec extends SparkSpec {
       assert(r.getFloat(2) <= r.getLong(1).toFloat + 1e-3f)
     }
     // brute-force the center with the most broker pairs
-    val edges = graft.query.Analytics.copurchaseEdgesSym(spark, sf)
+    val edges = graft.query.GraphIndex.copurchaseEdgesSym(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val adj = edges.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSet }
     val z = rows.maxBy(_.getLong(1)).getLong(0)
@@ -278,7 +280,7 @@ class Round16Spec extends SparkSpec {
 
   test("eval_mde_power: positive, and the standardized MDE is the raw " +
       "MDE over the pooled SD") {
-    val r = Analytics6.evalMdePower(spark, sf).collect().head
+    val r = Significance.evalMdePower(spark, sf).collect().head
     val se = r.getFloat(2); val mdeAbs = r.getFloat(3)
     val mdeD = r.getFloat(4)
     assert(se > 0.0f && mdeAbs > 0.0f && mdeD > 0.0f)
@@ -288,7 +290,7 @@ class Round16Spec extends SparkSpec {
 
   test("dedup_threshold_curve: monotone non-increasing, and the 0.5 cut " +
       "equals the minhash pair table") {
-    val rows = Analytics6.dedupThresholdCurve(spark, sf).collect()
+    val rows = Dedup.dedupThresholdCurve(spark, sf).collect()
       .sortBy(_.getDouble(0))
     assert(rows.map(_.getDouble(0)).toSeq ==
       Seq(0.5, 0.6, 0.7, 0.8, 0.9))
@@ -301,7 +303,7 @@ class Round16Spec extends SparkSpec {
 
   test("ts_sax_symbolic: string length equals block count, alphabet is " +
       "{a,b,c,d}, and per-user blocks match ⌊n/8⌋") {
-    val rows = Analytics6.tsSaxSymbolic(spark, sf).collect()
+    val rows = TimeSeries.tsSaxSymbolic(spark, sf).collect()
     assert(rows.nonEmpty)
     val counts = graft.schema.Schemas.events(spark, sf)
       .filter(col("user_id") < 50L)
@@ -319,7 +321,7 @@ class Round16Spec extends SparkSpec {
 
   test("stream_croston drain equals the batch recurrence row for row") {
     val streamed = StreamQueries.streamCroston(spark, sf).collect()
-    val batch = Analytics6.tsCroston(spark, sf).collect()
+    val batch = TimeSeries.tsCroston(spark, sf).collect()
     assert(streamed.length == batch.length && streamed.nonEmpty)
     streamed.zip(batch).foreach { case (s, b) =>
       assert(s.getLong(0) == b.getLong(0) && s.getLong(1) == b.getLong(1))
@@ -331,7 +333,7 @@ class Round16Spec extends SparkSpec {
 
   test("agg_theil_index: non-negative, zero on a constant distribution, " +
       "matches a brute-force fold") {
-    val rows = Analytics6.aggTheilIndex(spark, sf).collect()
+    val rows = Relational.aggTheilIndex(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach(r => assert(r.getFloat(2) >= 0.0f, r.toString))
     // brute-force one priority class
@@ -349,7 +351,7 @@ class Round16Spec extends SparkSpec {
 
   test("graph_rich_club: phi within [0,1], club shrinks and densifies " +
       "as the cut rises") {
-    val rows = Analytics6.graphRichClub(spark, sf).collect()
+    val rows = Graph.graphRichClub(spark, sf).collect()
     assert(rows.length == 4)
     val nk = rows.map(_.getLong(1))
     assert(nk.zip(nk.tail).forall { case (a, b) => a >= b })
@@ -363,7 +365,7 @@ class Round16Spec extends SparkSpec {
 
   test("ts_ccf_lags: lag panel complete, ccf bounded, lag 0 is the " +
       "contemporaneous correlation") {
-    val rows = Analytics6.tsCcfLags(spark, sf).collect()
+    val rows = TimeSeries.tsCcfLags(spark, sf).collect()
     assert(rows.map(_.getInt(0)).toSeq == Seq(0, 1, 2, 4, 8))
     rows.foreach { r =>
       assert(r.getLong(1) > 0)
@@ -377,7 +379,7 @@ class Round16Spec extends SparkSpec {
 
   test("eval_friedman_kendall_w: W in [0,1], chi2 = W·n·(k−1), and the " +
       "brute-force rank sums agree") {
-    val r = Analytics6.evalFriedmanKendallW(spark, sf).collect().head
+    val r = Significance.evalFriedmanKendallW(spark, sf).collect().head
     val n = r.getLong(0); val k = r.getLong(1)
     val chi2 = r.getDouble(2); val w = r.getDouble(3)
     assert(n > 0 && k == 5)
@@ -414,7 +416,7 @@ class Round16Spec extends SparkSpec {
 
   test("stream_cusum_target drain equals the batch scan row for row") {
     val streamed = StreamQueries.streamCusumTarget(spark, sf).collect()
-    val batch = Analytics6.tsCusumTarget(spark, sf).collect()
+    val batch = TimeSeries.tsCusumTarget(spark, sf).collect()
     assert(streamed.length == batch.length && streamed.nonEmpty)
     streamed.zip(batch).foreach { case (s, b) =>
       assert(s.getLong(0) == b.getLong(0) && s.getLong(1) == b.getLong(1))

@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
-import graft.query.{Analytics5, Analytics6, Analytics7, Similarity}
+import graft.query.{Graph, Similarity}
+import graft.query.ml.Significance
+import graft.query.stats.Privacy
 
 /** Round-17 guards: the r16 verdict's remaining `weak` item — ego
   * betweenness's UNCONDITIONAL broadcast hints — becomes the house
@@ -18,7 +20,7 @@ class Round17Spec extends SparkSpec {
 
   test("graph_ego_betweenness: broadcast gate — hinted and gated plans " +
       "return identical rows, and the branches genuinely diverge") {
-    val hinted = Analytics6.graphEgoBetweenness(spark, sf,
+    val hinted = Graph.graphEgoBetweenness(spark, sf,
       broadcastMaxEdges = Long.MaxValue)
     val hintedPlan = hinted.queryExecution.sparkPlan.toString
     assert(hintedPlan.contains("BroadcastHashJoin"),
@@ -32,7 +34,7 @@ class Round17Spec extends SparkSpec {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     val gatedRows = try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val gated = Analytics6.graphEgoBetweenness(spark, sf,
+      val gated = Graph.graphEgoBetweenness(spark, sf,
         broadcastMaxEdges = 0L)
       val gatedPlan = gated.queryExecution.sparkPlan.toString
       assert(gatedPlan.contains("SortMergeJoin"),
@@ -47,7 +49,7 @@ class Round17Spec extends SparkSpec {
 
   test("graph_ego_betweenness: the gate consults the cached edge count " +
       "— a second call plans without a fresh count job") {
-    Analytics6.graphEgoBetweenness(spark, sf).collect()
+    Graph.graphEgoBetweenness(spark, sf).collect()
     var jobs = 0
     val l = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
@@ -57,7 +59,7 @@ class Round17Spec extends SparkSpec {
     try {
       // planning only — no action: the gate decision itself must not
       // launch work once the (dir, fingerprint) count is cached
-      Analytics6.graphEgoBetweenness(spark, sf).queryExecution.sparkPlan
+      Graph.graphEgoBetweenness(spark, sf).queryExecution.sparkPlan
       Thread.sleep(500)
     } finally spark.sparkContext.removeSparkListener(l)
     assert(jobs == 0, s"gate planning launched $jobs jobs on a warm cache")
@@ -69,7 +71,7 @@ class Round17Spec extends SparkSpec {
     // (count-of-empty-group), single-vertex club → NULL phi. Force the
     // single-vertex case synthetically through the public default cuts
     // by checking the invariant on real rows instead: no NaN anywhere.
-    val rows = Analytics6.graphRichClub(spark, sf).collect()
+    val rows = Graph.graphRichClub(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getLong(1) >= 1)
@@ -87,7 +89,7 @@ class Round17Spec extends SparkSpec {
     val prev = spark.conf.get("spark.sql.adaptive.enabled")
     val (jobs, row) = try {
       spark.conf.set("spark.sql.adaptive.enabled", "false")
-      Analytics6.evalFriedmanKendallW(spark, sf).collect() // warm
+      Significance.evalFriedmanKendallW(spark, sf).collect() // warm
       var j = 0
       val l = new SparkListener {
         override def onJobStart(js: SparkListenerJobStart): Unit =
@@ -95,7 +97,7 @@ class Round17Spec extends SparkSpec {
       }
       spark.sparkContext.addSparkListener(l)
       val r = try {
-        val rr = Analytics6.evalFriedmanKendallW(spark, sf).collect()
+        val rr = Significance.evalFriedmanKendallW(spark, sf).collect()
         Thread.sleep(500)
         rr
       } finally spark.sparkContext.removeSparkListener(l)
@@ -111,9 +113,9 @@ class Round17Spec extends SparkSpec {
 
   test("tie-term DECIMAL discipline: Mann–Whitney and Wilcoxon emit " +
       "finite statistics with the DECIMAL(38,0) tie moments") {
-    val mw = Analytics6.evalMannWhitneyU(spark, sf).collect().head
+    val mw = Significance.evalMannWhitneyU(spark, sf).collect().head
     assert(!mw.getDouble(4).isNaN && !mw.getDouble(4).isInfinite)
-    val wx = Analytics6.evalWilcoxonSignedRank(spark, sf).collect().head
+    val wx = Significance.evalWilcoxonSignedRank(spark, sf).collect().head
     assert(!wx.getDouble(2).isNaN && !wx.getDouble(2).isInfinite)
   }
 
@@ -128,11 +130,11 @@ class Round17Spec extends SparkSpec {
 
   test("eval_bootstrap_bca: the full BCa epilogue matches a " +
       "from-scratch reimplementation over the collected replicas") {
-    val mc = Analytics5.evalMcnemar(spark, sf).collect().head
+    val mc = Significance.evalMcnemar(spark, sf).collect().head
     val n = mc.getAs[Long]("n")
     val cp = mc.getAs[Long]("n_a_only"); val cm = mc.getAs[Long]("n_b_only")
     val d = cp - cm
-    val boot = Analytics5.evalPairedBootstrap(spark, sf).collect()
+    val boot = Significance.evalPairedBootstrap(spark, sf).collect()
     assert(boot.length == 50)
     // below-count: the same integer cross-multiplied compare
     val cnt = boot.count(r =>
@@ -147,17 +149,17 @@ class Round17Spec extends SparkSpec {
       BigInt(cp) * sm * sm * sm
     val accel = if (i2 == BigInt(0)) 0.0
       else i3.toDouble / (6.0 * i2.toDouble * math.sqrt(i2.toDouble))
-    val grid = Analytics7.invNormGrid(50)
+    val grid = Significance.invNormGrid(50)
     val z0 = grid((math.min(math.max(cnt, 1L), 49L) - 1).toInt)
     def w(zq: Double): Double =
       z0 + (z0 + zq) / (1.0 - accel * (z0 + zq))
-    val wLo = w(Analytics7.invNormCdf(0.025))
-    val wHi = w(Analytics7.invNormCdf(0.975))
+    val wLo = w(Significance.invNormCdf(0.025))
+    val wHi = w(Significance.invNormCdf(0.975))
     def idx(wv: Double): Int = 1 + grid.count(_ < wv)
     val deltas = boot
       .map(r => (r.getAs[Float]("delta"), r.getAs[Int]("replica")))
       .sortBy(identity)
-    val row = Analytics7.evalBootstrapBca(spark, sf).collect() match {
+    val row = Significance.evalBootstrapBca(spark, sf).collect() match {
       case Array(one) => one
       case other => fail(s"expected 1 row, got ${other.length}")
     }
@@ -206,7 +208,7 @@ class Round17Spec extends SparkSpec {
       }
       cur = next.toMap
     }
-    val got = Analytics7.graphSsspWeighted(spark, sf).collect()
+    val got = Graph.graphSsspWeighted(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(got == cur, s"engine=${got.size} rows, reference=${cur.size}")
     srcs.foreach(s => assert(got((s, s)) == 0L))
@@ -215,7 +217,7 @@ class Round17Spec extends SparkSpec {
   test("graph_sssp_weighted: per-round job cost is bounded — total " +
       "jobs linear in rounds, constant per extra round") {
     def jobsFor(rounds: Int): Int = {
-      Analytics7.graphSsspWeighted(spark, sf, rounds = rounds).collect() // warm
+      Graph.graphSsspWeighted(spark, sf, rounds = rounds).collect() // warm
       var j = 0
       val l = new SparkListener {
         override def onJobStart(js: SparkListenerJobStart): Unit =
@@ -223,7 +225,7 @@ class Round17Spec extends SparkSpec {
       }
       spark.sparkContext.addSparkListener(l)
       try {
-        Analytics7.graphSsspWeighted(spark, sf, rounds = rounds).collect()
+        Graph.graphSsspWeighted(spark, sf, rounds = rounds).collect()
         Thread.sleep(500)
       } finally spark.sparkContext.removeSparkListener(l)
       j
@@ -286,7 +288,7 @@ class Round17Spec extends SparkSpec {
 
   test("privacy_dp_clipped_mean: release columns are finite, the clip " +
       "binds the scaled sum, and the noisy count is floored at 1") {
-    val rows = Analytics7.privacyDpClippedMean(spark, sf).collect()
+    val rows = Privacy.privacyDpClippedMean(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val nEx = r.getAs[Long]("n_exact")

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
-import graft.query.{Analytics3, Analytics7, Similarity}
+import graft.query.{Graph, Similarity}
+import graft.query.stats.Privacy
 import graft.streaming.StreamQueries
 
 /** Round-18 guards: the streaming IVF maintenance twin (drain == batch
@@ -40,11 +41,11 @@ class Round18Spec extends SparkSpec {
 
   test("privacy_budget_ledger: exact µε sums, advanced bound epilogue, " +
       "and per-release rows match the standing inventory") {
-    val rows = Analytics7.privacyBudgetLedger(spark, sf).collect()
-    assert(rows.length == Analytics7.defaultDpReleases.size + 2)
+    val rows = Privacy.privacyBudgetLedger(spark, sf).collect()
+    assert(rows.length == Privacy.defaultDpReleases.size + 2)
     val byName = rows.map(r => r.getString(0) -> r).toMap
     // basic composition: Σεᵢ on the exact µε grid
-    val expectedMicro = Analytics7.defaultDpReleases.map(_.eps_u).sum
+    val expectedMicro = Privacy.defaultDpReleases.map(_.eps_u).sum
     val basic = byName("zz_composition_basic")
     assert(basic.getLong(4) == expectedMicro, s"basic µε ${basic.getLong(4)}")
     assert(basic.getFloat(5) == (expectedMicro.toDouble / 1e6).toFloat)
@@ -62,7 +63,7 @@ class Round18Spec extends SparkSpec {
 
   test("privacy_budget_ledger: empty inventory yields the two zero-ε " +
       "composition rows (EdgeCase contract)") {
-    val rows = Analytics7.privacyBudgetLedger(spark, sf, Seq.empty).collect()
+    val rows = Privacy.privacyBudgetLedger(spark, sf, Seq.empty).collect()
     assert(rows.length == 2)
     rows.foreach { r =>
       assert(r.getLong(3) == 0L, "n_draws must be 0 on an empty inventory")
@@ -83,7 +84,7 @@ class Round18Spec extends SparkSpec {
       }
       spark.sparkContext.addSparkListener(l)
       try {
-        val out = canon(Analytics3.graphCcIncremental(spark, sf,
+        val out = canon(Graph.graphCcIncremental(spark, sf,
           params._1, params._2))
         // listener delivery is async; a fixed settle beats touching the
         // private listenerBus API
@@ -125,8 +126,9 @@ class Round18Spec extends SparkSpec {
 
   test("sample_domain_mixture: integer allocation identities hold per " +
       "source and the plan matches a driver-side recomputation") {
-    import graft.query.Curation2
-    val rows = Curation2.sampleDomainMixture(spark, sf).collect()
+    import graft.query.TextAnalysis
+    import graft.query.stats.Sampling
+    val rows = Sampling.sampleDomainMixture(spark, sf).collect()
     assert(rows.nonEmpty)
     val docs = graft.schema.Schemas.table(spark, sf, "documents")
       .select(col("source"), col("n_chars").cast("long")).collect()
@@ -151,8 +153,8 @@ class Round18Spec extends SparkSpec {
 
   test("layout_bloom_prune: bloom skipping discriminates where min/max " +
       "cannot, never misses a true zone, and absent probes stay near zero") {
-    import graft.query.Warehouse2
-    val rows = Warehouse2.layoutBloomPrune(spark, sf).collect()
+    import graft.query.Warehouse
+    val rows = Warehouse.layoutBloomPrune(spark, sf).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5))).toMap
     assert(rows.size == 6)
@@ -175,13 +177,14 @@ class Round18Spec extends SparkSpec {
 
   test("text_dsir_importance: per-doc feature count equals the token " +
       "count and the target-language slice scores higher on average") {
-    import graft.query.Curation2
-    val w = Curation2.textDsirImportance(spark, sf).collect()
+    import graft.query.TextAnalysis
+    import graft.query.stats.Sampling
+    val w = TextAnalysis.textDsirImportance(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getFloat(2))).toSeq
     val docs = graft.schema.Schemas.table(spark, sf, "documents")
       .select(col("doc_id"),
         org.apache.spark.sql.functions.size(
-          graft.query.Dedup.tokens(col("text"))).cast("long").as("n"),
+          graft.query.TokenHash.tokens(col("text"))).cast("long").as("n"),
         col("lang")).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
     assert(w.size == docs.size, "one weight row per document")

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import graft.query.{Analytics5, Analytics7, Similarity}
+import graft.query.Similarity
+import graft.query.ml.Significance
 import graft.schema.Schemas
 import graft.streaming.StreamQueries
 
@@ -67,7 +68,7 @@ class Round19Spec extends SparkSpec {
         (2L, ts, 2L, "purchase", 0.75, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .coalesce(1).write.mode("overwrite").parquet(s"$d/events.parquet")
-    val boot = Analytics5.evalPairedBootstrap(spark, d, 50).collect()
+    val boot = Significance.evalPairedBootstrap(spark, d, 50).collect()
     assert(boot.length == 50)
     val degenerate = boot.filter(_.isNullAt(6)) // delta
     assert(degenerate.nonEmpty, "fixture must produce n_eff=0 replicas")
@@ -77,7 +78,7 @@ class Round19Spec extends SparkSpec {
     val ranked = boot.sortBy(r =>
       (r.isNullAt(6), if (r.isNullAt(6)) 0f else r.getFloat(6),
         r.getInt(0)))
-    val res = Analytics7.evalBootstrapBca(spark, d, 50).collect()
+    val res = Significance.evalBootstrapBca(spark, d, 50).collect()
     assert(res.length == 1)
     val row = res(0)
     def deltaAt(rk: Int): Option[Float] = {
@@ -96,8 +97,8 @@ class Round19Spec extends SparkSpec {
   test("evalBootstrapBcaSampled: a corpus inside the target (mod = 1) " +
       "reproduces the full interval exactly, with widen = 1 and " +
       "n_full = the events count") {
-    val full = Analytics7.evalBootstrapBca(spark, sf).collect()(0)
-    val samp = Analytics7.evalBootstrapBcaSampled(spark, sf).collect()(0)
+    val full = Significance.evalBootstrapBca(spark, sf).collect()(0)
+    val samp = Significance.evalBootstrapBcaSampled(spark, sf).collect()(0)
     // columns 0..9 are the shared interval surface
     (0 until 10).foreach { i =>
       assert(samp.get(i) == full.get(i),

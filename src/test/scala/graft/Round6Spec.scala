@@ -1,13 +1,16 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.query.{Analytics2, Curation, Dedup, Multimodal, Similarity}
+import graft.query.{Dedup, Multimodal, Relational, Similarity, TextAnalysis,
+  TokenHash, Warehouse}
+import graft.query.ml.Ranking
+import graft.query.stats.{Anomaly, Quality, TimeSeries}
 
 class Round6Spec extends SparkSpec {
   import spark.implicits._
 
   test("dedup_keep_best: kept doc is in its group, maximal by (chars, -id); drops are non-negative") {
-    val out = Curation.dedupKeepBest(spark, sf).cache()
+    val out = Dedup.dedupKeepBest(spark, sf).cache()
     val labels = Dedup.dedupGroups(spark, sf).cache()
     // every group labeled is decided exactly once
     assert(out.select($"group_id").distinct().count() == out.count())
@@ -24,10 +27,10 @@ class Round6Spec extends SparkSpec {
     // normalized chars: the planted copy (prefix-extended text)
     val g0 = out.filter($"group_id" === 0).collect()
     if (g0.nonEmpty) {
-      val chars = Dedup.withPlantedNearDups(
+      val chars = TokenHash.withPlantedNearDups(
           graft.schema.Schemas.table(spark, sf, "documents"))
         .select($"doc_id",
-          length(Dedup.normText($"text")).cast("long").as("chars"))
+          length(TokenHash.normText($"text")).cast("long").as("chars"))
         .filter($"doc_id" === 0 || $"doc_id" === 1000000L)
         .as[(Long, Long)].collect().toMap
       val expectKeep = if (chars(1000000L) > chars(0L)) 1000000L else 0L
@@ -36,7 +39,7 @@ class Round6Spec extends SparkSpec {
   }
 
   test("text_ngram_novelty: fractions in [0,1]; the smallest doc_id with grams is fully novel") {
-    val out = Curation.textNgramNovelty(spark, sf).cache()
+    val out = TextAnalysis.textNgramNovelty(spark, sf).cache()
     assert(out.filter($"novelty" < 0f || $"novelty" > 1f).count() == 0)
     assert(out.filter($"n_novel" > $"n_grams").count() == 0)
     val first = out.orderBy($"doc_id").limit(1).collect()(0)
@@ -49,7 +52,7 @@ class Round6Spec extends SparkSpec {
   }
 
   test("emb_quantize_int8: codes bounded to [-127,127], max |code| = 127 reached, scale positive") {
-    val out = Curation.embQuantizeInt8(spark, sf).cache()
+    val out = Similarity.embQuantizeInt8(spark, sf).cache()
     assert(out.filter($"q_min" < -127 || $"q_max" > 127).count() == 0)
     // the component at amax quantizes to ±127 by construction
     assert(out.filter(greatest(abs($"q_min"), abs($"q_max")) =!= 127)
@@ -65,13 +68,13 @@ class Round6Spec extends SparkSpec {
       .agg(count(lit(1)).as("n"))
       .filter($"n" > total * 0.02)
       .count()
-    val out = Curation.heavyHitters(spark, sf).cache()
+    val out = Quality.heavyHitters(spark, sf).cache()
     assert(out.count() == expect)
     assert(out.filter($"n" <= total * 0.02).count() == 0)
   }
 
   test("cohort_retention: offset-0 row per cohort counts the whole cohort; offsets non-negative") {
-    val out = Analytics2.cohortRetention(spark, sf).cache()
+    val out = Warehouse.cohortRetention(spark, sf).cache()
     assert(out.filter($"week_offset" < 0).count() == 0)
     // at offset 0 every cohort member is active (it's their first week)
     val ev = graft.schema.Schemas.events(spark, sf)
@@ -89,7 +92,7 @@ class Round6Spec extends SparkSpec {
   }
 
   test("anomaly_mad: flagged set equals the brute-force median/MAD filter") {
-    val out = Analytics2.anomalyMad(spark, sf)
+    val out = Anomaly.anomalyMad(spark, sf)
       .select($"event_id").as[Long].collect().toSet
     val ev = graft.schema.Schemas.events(spark, sf)
       .select($"event_id", $"event_type", $"value")
@@ -106,7 +109,7 @@ class Round6Spec extends SparkSpec {
   }
 
   test("agg_decimal_exact: decimal sums are associative — group totals equal the global total") {
-    val out = Analytics2.aggDecimalExact(spark, sf).cache()
+    val out = Relational.aggDecimalExact(spark, sf).cache()
     val groupTotal = out.agg(sum($"sum_net")).collect()(0).getDecimal(0)
     val global = graft.schema.Schemas.table(spark, sf, "lineitem")
       .select(($"l_extendedprice" * (lit(1.0) - $"l_discount"))
@@ -119,7 +122,7 @@ class Round6Spec extends SparkSpec {
   }
 
   test("sql_shipping_priority: top-10 ranks on exact scaled longs, descending, within the filtered set") {
-    val out = Analytics2.sqlShippingPriority(spark, sf).collect()
+    val out = Warehouse.sqlShippingPriority(spark, sf).collect()
     assert(out.length <= 10)
     val revs = out.map(_.getLong(2))
     // non-increasing revenue
@@ -130,7 +133,7 @@ class Round6Spec extends SparkSpec {
   }
 
   test("ts_interval_overlap: window loads bound session counts; sessions respect the gap rule") {
-    val out = Analytics2.tsIntervalOverlap(spark, sf).cache()
+    val out = TimeSeries.tsIntervalOverlap(spark, sf).cache()
     assert(out.filter($"n_users" > $"n_sessions").count() == 0)
     assert(out.filter($"w_start" % 21600000000L =!= 0).count() == 0)
     // total session-window incidences ≥ number of sessions (each session
@@ -142,7 +145,7 @@ class Round6Spec extends SparkSpec {
   }
 
   test("zorder_cluster: bucket extents nest inside the bucket's z-range; counts cover the table") {
-    val out = Analytics2.zorderCluster(spark, sf).cache()
+    val out = Warehouse.zorderCluster(spark, sf).cache()
     val n = graft.schema.Schemas.events(spark, sf).count()
     assert(out.agg(sum($"n")).as[Long].collect()(0) == n)
     // z-order locality: dropping the low 12 interleaved bits fixes all
@@ -169,7 +172,7 @@ class Round6Spec extends SparkSpec {
   }
 
   test("eval_retrieval_metrics: metrics in [0,1], panel complete, self-retrieval excluded") {
-    val row = Similarity.evalRetrievalMetrics(spark, sf).collect()(0)
+    val row = Ranking.evalRetrievalMetrics(spark, sf).collect()(0)
     assert(row.getAs[Long]("n_queries") == 20)
     val p = row.getAs[Float]("precision_at_k")
     val m = row.getAs[Float]("mrr")
@@ -181,7 +184,7 @@ class Round6Spec extends SparkSpec {
   }
 
   test("corpus_quality_gate: reasons partition the corpus; shares sum to 1") {
-    val out = Curation.corpusQualityGate(spark, sf).cache()
+    val out = TextAnalysis.corpusQualityGate(spark, sf).cache()
     val total = graft.schema.Schemas.table(spark, sf, "documents").count()
     assert(out.agg(sum($"n_docs")).as[Long].collect()(0) == total)
     val shareSum = out.agg(sum($"share".cast("double"))).as[Double].collect()(0)
@@ -191,7 +194,7 @@ class Round6Spec extends SparkSpec {
   }
 
   test("emb_pq_codes: codes in [0,16); reconstruction error bounded by the no-compression baseline") {
-    val out = Curation.embPqCodes(spark, sf).cache()
+    val out = Similarity.embPqCodes(spark, sf).cache()
     val codeCols = (0 until 8).map(i => col(s"code_$i"))
     assert(out.filter(codeCols.map(c => c < 0 || c > 15).reduce(_ || _))
       .count() == 0)
@@ -200,7 +203,7 @@ class Round6Spec extends SparkSpec {
     assert(out.filter($"l1_err" > 64L * 255).count() == 0)
     // assignment is argmin: scoring against codeword 0 everywhere can
     // only be worse or equal
-    val cb0 = Curation.embPqCodes(spark, sf)
+    val cb0 = Similarity.embPqCodes(spark, sf)
     assert(cb0.count() == out.count())
   }
 
@@ -228,7 +231,7 @@ class Round6Spec extends SparkSpec {
   }
 
   test("agg_countmin_freq: the CM estimate never under-counts and overestimates are bounded by N") {
-    val out = Analytics2.aggCountminFreq(spark, sf).cache()
+    val out = Relational.aggCountminFreq(spark, sf).cache()
     assert(out.count() == 10)
     assert(out.filter(!$"est_ge_exact").count() == 0)
     assert(out.filter($"cm_est" =!= $"n" + $"overestimate").count() == 0)
@@ -238,9 +241,9 @@ class Round6Spec extends SparkSpec {
   }
 
   test("graph_communities_lpa: labels are vertex ids; deterministic across runs") {
-    val a = graft.query.Analytics.graphCommunitiesLpa(spark, sf)
+    val a = graft.query.Graph.graphCommunitiesLpa(spark, sf)
       .as[(Long, Long)].collect().toSeq
-    val b = graft.query.Analytics.graphCommunitiesLpa(spark, sf)
+    val b = graft.query.Graph.graphCommunitiesLpa(spark, sf)
       .as[(Long, Long)].collect().toSeq
     assert(a == b)
     assert(a.nonEmpty)
@@ -252,7 +255,7 @@ class Round6Spec extends SparkSpec {
   }
 
   test("ts_seasonal_baseline: flagged set equals the brute-force hour-of-week filter") {
-    val out = Analytics2.tsSeasonalBaseline(spark, sf)
+    val out = TimeSeries.tsSeasonalBaseline(spark, sf)
       .select($"event_id").as[Long].collect().toSet
     val ev = graft.schema.Schemas.events(spark, sf)
       .select($"event_id", $"value",

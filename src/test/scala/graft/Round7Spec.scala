@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.query.{Dedup, Warehouse}
+import graft.query.{Dedup, TokenHash, Warehouse}
 import graft.schema.Schemas.table
 
 /** Round-7 additions: delta-vs-corpus near-dup over the shared MinHash
@@ -25,7 +25,7 @@ class Round7Spec extends SparkSpec {
     val out = Dedup.dedupIncrementalMinhash(spark, sf)
       .as[(Long, String, Long, Long)].collect()
     // output covers exactly the delta docs (including planted ids % 5 = 0)
-    val deltaIds = Dedup.withPlantedNearDups(
+    val deltaIds = TokenHash.withPlantedNearDups(
         graft.schema.Schemas.table(spark, sf, "documents"))
       .filter($"doc_id" % 5 === 0).select($"doc_id")
       .as[Long].collect().toSet
@@ -119,7 +119,7 @@ class Round7Spec extends SparkSpec {
   }
 
   test("ann_pq_adc_topk: matches a from-scratch Scala ADC model (codebook, LUT, ranking)") {
-    import graft.query.Curation
+    import graft.query.Similarity
     // independent model: md5-derived codebook, HALF_UP int8 quantization,
     // integer L1 code assignment, LUT-summed asymmetric distances
     def md5hex(s: String): String =
@@ -153,7 +153,7 @@ class Round7Spec extends SparkSpec {
         (id, dist)
       }
     }.sortBy { case (id, d) => (d, id) }.take(10).toSeq
-    val got = Curation.annPqAdcTopk(spark, sf)
+    val got = Similarity.annPqAdcTopk(spark, sf)
       .as[(Long, Long)].collect().toSeq
     assert(got == expected, s"got=$got expected=$expected")
   }

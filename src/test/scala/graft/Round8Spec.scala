@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ingest.Formats
-import graft.query.{Analytics, Curation, Similarity}
+import graft.query.{Graph, Similarity}
 import graft.schema.Schemas
 import graft.streaming.StreamQueries
 
@@ -82,14 +82,14 @@ class Round8Spec extends SparkSpec {
 
   test("pagerank checkpoint cadence: constant per-round plan size, unchanged results") {
     // identical answers with and without lineage truncation
-    val deep = Analytics.graphPagerank(spark, sf, iters = 10, checkpointEvery = 3)
-    val flat = Analytics.graphPagerank(spark, sf, iters = 10)
+    val deep = Graph.graphPagerank(spark, sf, iters = 10, checkpointEvery = 3)
+    val flat = Graph.graphPagerank(spark, sf, iters = 10)
     assert(deep.collect().toSeq == flat.collect().toSeq)
     // the live plan never exceeds one cadence window: 1 round past the
     // last checkpoint leaves the SAME analyzed-plan size whether 1, 2,
     // or 3 checkpoints came before (iters = 4 / 7 / 10, cadence 3)
     def planSize(iters: Int, every: Int): Int =
-      Analytics.graphPagerank(spark, sf, iters = iters, checkpointEvery = every)
+      Graph.graphPagerank(spark, sf, iters = iters, checkpointEvery = every)
         .queryExecution.analyzed.collect { case p => p }.size
     val sizes = Seq(4, 7, 10).map(planSize(_, 3))
     assert(sizes.distinct.size == 1, s"plan grows with depth: $sizes")
@@ -155,9 +155,9 @@ class Round8Spec extends SparkSpec {
 
   test("dedup_minhash_lsh: exact precision, pinned recall vs all-pairs Jaccard truth") {
     GraftExtensions.register(spark)
-    val sh = graft.query.Dedup
+    val sh = graft.query.TokenHash
       .withPlantedNearDups(Schemas.table(spark, sf01, "documents"))
-      .select($"doc_id", graft.query.Dedup.tokens($"text").as("toks"))
+      .select($"doc_id", graft.query.TokenHash.tokens($"text").as("toks"))
       .filter(size($"toks") >= 3)
       .select($"doc_id", expr("shingle_hashes(toks, 3)").as("sh"))
     val truth = sh.as("a").join(sh.as("b"), $"a.doc_id" < $"b.doc_id")
@@ -181,7 +181,7 @@ class Round8Spec extends SparkSpec {
     // loses nothing; output must EQUAL the all-pairs answer, not
     // approximate it
     GraftExtensions.register(spark)
-    val docs = graft.query.Dedup
+    val docs = graft.query.TokenHash
       .withPlantedNearDups(Schemas.table(spark, sf01, "documents"))
       .select($"doc_id", expr("simhash60(" +
         "split(lower(trim(regexp_replace(text, '\\\\s+', ' '))), ' '))").as("h"))
@@ -197,7 +197,7 @@ class Round8Spec extends SparkSpec {
   }
 
   test("ann_pq_adc_topk recall@10 floor") {
-    val r = recallAt10(qid => Curation.annPqAdcTopk(spark, sf01, qid))
+    val r = recallAt10(qid => Similarity.annPqAdcTopk(spark, sf01, qid))
     info(f"pq-adc recall@10 = $r%.3f")
     assert(r >= 0.07, f"pq-adc recall@10 regressed: $r%.3f < 0.07")
   }

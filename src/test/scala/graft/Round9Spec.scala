@@ -369,7 +369,7 @@ class Round9Spec extends SparkSpec {
   }
 
   test("corpus_temperature_mix: smallest group passes whole; larger groups hit sqrt counts") {
-    val rows = graft.query.Curation2.corpusTemperatureMix(spark, sf01)
+    val rows = graft.query.TextAnalysis.corpusTemperatureMix(spark, sf01)
       .as[(String, Long, Long)].collect().toSeq
     assert(rows.map(_._1).toSet == Set("en", "de", "es", "fr", "zh"))
     val nMin = rows.map(_._2).min

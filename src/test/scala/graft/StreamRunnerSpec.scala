@@ -154,4 +154,23 @@ class StreamRunnerSpec extends SparkSpec {
       assert(spark.streams.active.isEmpty)
     } finally spark.conf.set("spark.sql.shuffle.partitions", before)
   }
+
+  test("stream runner: repeated drains leave no temp view and no upsert " +
+      "store behind") {
+    val s = spark.newSession()
+    def views(): Set[String] = s.catalog.listTables().collect()
+      .filter(_.isTemporary).map(_.name).toSet
+    def upsertDirs(): Set[String] =
+      Option(new java.io.File(System.getProperty("java.io.tmpdir")).list())
+        .fold(Set.empty[String])(_.filter(_.startsWith("graft-upsert")).toSet)
+    val (views0, dirs0) = (views(), upsertDirs())
+    val first = (1 to 2).map { _ =>
+      (StreamQueries.streamWindowAgg(s, sf).collect().toSeq,
+        StreamQueries.streamForeachbatchUpsert(s, sf).collect().toSeq)
+    }
+    assert(first.distinct.size == 1, "a repeated drain changed its answer")
+    assert(views() == views0, s"temp views left: ${views() -- views0}")
+    assert((upsertDirs() -- dirs0).isEmpty,
+      s"upsert stores left: ${upsertDirs() -- dirs0}")
+  }
 }

@@ -1,9 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.query.Dedup
+import graft.query.TokenHash
 
-/** Pins [[graft.query.Dedup.tokens]]/[[graft.query.Dedup.normText]] to the
+/** Pins [[graft.query.TokenHash.tokens]]/[[graft.query.TokenHash.normText]] to the
   * oracle side's DuckDB semantics:
   *
   *   string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')
@@ -70,7 +70,7 @@ class TokenizerParitySpec extends SparkSpec {
 
   test("Dedup.tokens matches the independent ASCII-\\s model on adversarial input") {
     val got = adversarial.toDF("text")
-      .select(Dedup.tokens(col("text")).as("toks"))
+      .select(TokenHash.tokens(col("text")).as("toks"))
       .as[Seq[String]].collect().toSeq
     adversarial.zip(got).foreach { case (s, g) =>
       val want = model(s)
@@ -82,7 +82,7 @@ class TokenizerParitySpec extends SparkSpec {
   test("token COUNT parity (the n_tok the curriculum/chunker oracles window over)") {
     val got = adversarial.toDF("text")
       .select(org.apache.spark.sql.functions.size(
-        Dedup.tokens(col("text"))).as("n"))
+        TokenHash.tokens(col("text"))).as("n"))
       .as[Int].collect().toSeq
     assert(got == adversarial.map(model(_).length),
       s"got=$got want=${adversarial.map(model(_).length)}")
@@ -90,11 +90,11 @@ class TokenizerParitySpec extends SparkSpec {
 
   test("normText is idempotent and tokens never contain ASCII whitespace") {
     val df = adversarial.toDF("text")
-    val once = df.select(Dedup.normText(col("text")).as("t"))
-    val twice = once.select(Dedup.normText(col("t")).as("t"))
+    val once = df.select(TokenHash.normText(col("text")).as("t"))
+    val twice = once.select(TokenHash.normText(col("t")).as("t"))
     assert(once.as[String].collect().toSeq ==
       twice.as[String].collect().toSeq)
-    val toks = df.select(explode(Dedup.tokens(col("text"))).as("tok"))
+    val toks = df.select(explode(TokenHash.tokens(col("text"))).as("tok"))
       .as[String].collect()
     assert(toks.forall(t => !t.exists(c => c == ' ' || c == '\t' ||
       c == '\n' || c == '\u000B' || c == '\f' || c == '\r')))

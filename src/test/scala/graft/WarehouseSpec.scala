@@ -4,7 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.query.{Curation2, Warehouse}
+import graft.query.{Dedup, Graph, TextAnalysis, Warehouse}
+import graft.query.stats.Quality
 import graft.schema.Schemas.table
 
 /** Round-6 suites: warehouse (TPC-H-derived) queries cross-checked
@@ -167,9 +168,9 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("chunk_sliding: chunk counts, sizes, and overlap structure are exact") {
-    val out = Curation2.chunkSliding(spark, sf).cache()
+    val out = TextAnalysis.chunkSliding(spark, sf).cache()
     val docs = table(spark, sf, "documents")
-      .select($"doc_id", graft.query.Dedup.tokens($"text").as("toks"))
+      .select($"doc_id", graft.query.TokenHash.tokens($"text").as("toks"))
       .select($"doc_id", size($"toks").as("n"))
       .as[(Long, Int)].collect().toMap
     val perDoc = out.groupBy($"doc_id").count().as[(Long, Long)].collect().toMap
@@ -186,13 +187,13 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("curriculum_phases: two-level schedule equals the single-window schedule") {
-    val got = Curation2.curriculumPhases(spark, sf)
+    val got = TextAnalysis.curriculumPhases(spark, sf)
       .as[(Long, Long, Long, Long, Long)].collect().toSeq
     val w = Window.orderBy($"n_tok".desc, $"doc_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val brute = table(spark, sf, "documents")
       .select($"doc_id",
-        size(graft.query.Dedup.tokens($"text")).cast("long").as("n_tok"))
+        size(graft.query.TokenHash.tokens($"text")).cast("long").as("n_tok"))
       .select($"doc_id", $"n_tok",
         floor((sum($"n_tok").over(w) - $"n_tok") / lit(2000.0)).as("phase"))
       .groupBy($"phase")
@@ -204,9 +205,9 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("dedup_incremental: statuses partition the delta and match set logic") {
-    val out = Curation2.dedupIncremental(spark, sf).cache()
+    val out = Dedup.dedupIncremental(spark, sf).cache()
     val fps = table(spark, sf, "documents")
-      .select($"doc_id", md5(graft.query.Dedup.normText($"text")).as("fp"))
+      .select($"doc_id", md5(graft.query.TokenHash.normText($"text")).as("fp"))
       .as[(Long, String)].collect()
     val corpus = fps.filter(_._1 % 5 != 0).map(_._2).toSet
     val delta = fps.filter(_._1 % 5 == 0).sortBy(_._1)
@@ -225,7 +226,7 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("path_transitions: per-prev probabilities sum to 1; pair mass = events - active users") {
-    val out = Curation2.pathTransitions(spark, sf).cache()
+    val out = Graph.pathTransitions(spark, sf).cache()
     val sums = out.groupBy($"prev_type").agg(sum($"p").as("s"))
       .as[(String, Double)].collect()
     sums.foreach { case (k, s) => assert(math.abs(s - 1.0) < 1e-9, s"$k $s") }
@@ -235,7 +236,7 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("winsorized_stats: thresholds are the exact k-th order statistics") {
-    val got = Curation2.winsorizedStats(spark, sf)
+    val got = Quality.winsorizedStats(spark, sf)
       .as[(String, Long, Long, Long, Long)]
       .collect().map(r => r._1 -> r).toMap
     val byFlag = table(spark, sf, "lineitem")
@@ -258,7 +259,7 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("histogram_equiwidth: bins cover all orders, ids in range, recompute matches") {
-    val out = Curation2.histogramEquiWidth(spark, sf)
+    val out = Quality.histogramEquiWidth(spark, sf)
       .as[(Long, Long, Long)].collect()
     assert(out.map(_._2).sum == table(spark, sf, "orders").count())
     assert(out.forall(r => r._1 >= 0 && r._1 <= 19))
@@ -285,14 +286,14 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("plan: winsorized_stats windows only over candidate buckets, thresholds broadcast") {
-    val p = plan(Curation2.winsorizedStats(spark, sf))
+    val p = plan(Quality.winsorizedStats(spark, sf))
     // the clip join and the candidate join are broadcasts, not shuffles
     assert(p.sliding("BroadcastHashJoin".length).count(
       _ == "BroadcastHashJoin") >= 2, p)
   }
 
   test("graph_reachability: frontier-delta BFS equals the naive min-over-rounds closure") {
-    val got = graft.query.Analytics.graphReachability(spark, sf)
+    val got = graft.query.Graph.graphReachability(spark, sf)
       .as[(Long, Int)].collect().toMap
     // naive reference: iterate FULL relaxation (allow revisits, take min)
     val li = table(spark, sf, "lineitem")
@@ -331,7 +332,7 @@ class WarehouseSpec extends SparkSpec {
 
   test("plan: chunk_sliding is map-only (only the final orderBy exchanges)") {
     // stride 17 ≠ the cached default plan, so the audit sees the raw scan
-    val p = plan(Curation2.chunkSliding(spark, sf, size = 32, stride = 17))
+    val p = plan(TextAnalysis.chunkSliding(spark, sf, size = 32, stride = 17))
     // exactly the one (range) Exchange required by the final global orderBy
     assert("""\(\d+\) Exchange""".r.findAllIn(p).size <= 1, p)
   }
